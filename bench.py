@@ -277,7 +277,7 @@ def build_payload(
 
 
 def bench_names(registry) -> list:
-    """The benched set = every canonical registry entry EXCEPT the
+    """The benched set = every registry entry EXCEPT the
     streaming lane (queries/streamingq.py): those drain bounded streams
     under trigger cadences, so their wall-clock measures trigger
     scheduling, not engine throughput — the streaming latency budget is
@@ -289,11 +289,61 @@ def bench_names(registry) -> list:
     extra = sorted(
         n
         for n, q in registry.items()
-        if n not in set(head)
-        and "rotation-alias" not in q.tags
-        and not q.fn.__module__.endswith("streamingq")
+        if n not in set(head) and not q.fn.__module__.endswith("streamingq")
     )
     return head + extra
+
+
+def run_to_completion(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_queries(
+    registry, sf_dir: str, names: list, *, runs: int, recycle: int, app: str,
+    on_result=lambda name, sec: None,
+) -> tuple[dict[str, float], float]:
+    """Time each query through the noop sink, in order.
+
+    A session starts warm with Q01 (priming codegen/JIT and the parquet
+    footer cache); each query's time is the min of `runs` runs, its
+    cached blocks are cleared afterwards, and the session restarts every
+    `recycle` queries. `on_result(name, sec)` is called as each result
+    lands. Returns ({name: sec}, the first session's cold Q01 seconds).
+
+    min-of-N: JIT/GC noise on a shared box dwarfs plan-level
+    differences; steady-state is what scales. Session recycling: one
+    long-lived JVM accumulates codegen-cache, metaspace and shuffle-dir
+    state across hundreds of distinct plans, and late-positioned queries
+    absorb it (measured r6: q135 timed 7.1 s at position ~130 of 277 vs
+    1.95 s in a fresh session; r10 at sf1: q486 125.7 s in-session vs
+    8.2 s fresh), so a query's number reflects its plan, not its
+    position."""
+
+    def start():
+        spark = get_spark(app)
+        spark.sparkContext.setLogLevel("ERROR")
+        t0 = time.perf_counter()
+        run_to_completion(registry["q01_scan_count"].fn(spark, sf_dir))
+        return spark, round(time.perf_counter() - t0, 3)
+
+    spark, cold_s = start()
+    timings: dict[str, float] = {}
+    for i, name in enumerate(names):
+        if i and i % recycle == 0:
+            spark.stop()
+            spark, _ = start()
+        best = float("inf")
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            run_to_completion(registry[name].fn(spark, sf_dir))
+            best = min(best, time.perf_counter() - t0)
+        timings[name] = round(best, 3)
+        on_result(name, timings[name])
+        # Cached blocks left behind by persist()ing queries would build up
+        # heap pressure and distort later queries' timings — isolate them.
+        spark.catalog.clearCache()
+    spark.stop()
+    return timings, cold_s
 
 
 def main() -> None:
@@ -313,47 +363,12 @@ def main() -> None:
     from mapr_db_cdc_sample_spark.canary import box_canary
 
     canary_start = box_canary()
-
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def run_to_completion(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # Warmup: prime codegen/JIT and the parquet footer cache. Timed and
-    # recorded as a canary field: a cold q01 that runs far above its
-    # steady-state min is the Spark-side face of the same box state.
-    t0 = time.perf_counter()
-    run_to_completion(registry["q01_scan_count"].fn(spark, sf_dir))
-    canary_start["q01_cold_s"] = round(time.perf_counter() - t0, 3)
-
-    # min-of-N per query: JIT/GC noise on a shared box dwarfs plan-level
-    # differences; steady-state is what scales.
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    # Session recycling: one long-lived JVM accumulates codegen-cache,
-    # metaspace and shuffle-dir state across hundreds of distinct plans,
-    # and late-positioned queries absorb it (measured r6: q135 timed
-    # 7.1 s at position ~130 of 277 vs 1.95 s in a fresh session; r5's
-    # 207-query run showed the same drift milder). Restart the session
-    # every RECYCLE queries so a query's number reflects its plan, not
-    # its position; each segment re-warms with Q01 first.
-    recycle = int(os.environ.get("SPARK_GRAFT_BENCH_RECYCLE", "64"))
-    timings: dict[str, float] = {}
-    for i, name in enumerate(names):
-        if i and i % recycle == 0:
-            spark.stop()
-            spark = get_spark("bench")
-            spark.sparkContext.setLogLevel("ERROR")
-            run_to_completion(registry["q01_scan_count"].fn(spark, sf_dir))
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            run_to_completion(registry[name].fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-        # Cached blocks left behind by persist()ing queries would build up
-        # heap pressure and distort later queries' timings — isolate them.
-        spark.catalog.clearCache()
+    timings, cold_s = time_queries(
+        registry, sf_dir, names, runs=2, recycle=64, app="bench"
+    )
+    # A cold Q01 that runs far above its steady-state min is the
+    # Spark-side face of the box state the canary probes.
+    canary_start["q01_cold_s"] = cold_s
 
     total = round(sum(timings.values()), 3)
     canary_end = box_canary()  # warm-process counterpart for contrast
@@ -373,7 +388,6 @@ def main() -> None:
     from mapr_db_cdc_sample_spark.plans.audit import plan_fingerprint
 
     top20 = sorted(timings, key=lambda n: -timings[n])[:20]
-    spark.stop()
     spark = get_spark("bench-planfp")
     spark.sparkContext.setLogLevel("ERROR")
     plan_fp = {n: plan_fingerprint(registry[n].fn(spark, sf_dir)) for n in top20}

@@ -18,9 +18,7 @@ The probe records:
   to 1 thread (session.py), so this is deterministic work.
 
 Interpretation: a query-time shift accompanied by a proportional
-``matmul_s``/``fill_s`` shift is box state, not a plan change;
-tools/variance.py divides per-pass timings by the pass's matmul ratio
-to produce canary-normalized medians.
+``matmul_s``/``fill_s`` shift is box state, not a plan change.
 """
 
 from __future__ import annotations

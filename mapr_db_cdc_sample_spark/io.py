@@ -58,12 +58,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+#: sf_dir each session's temp views point at, keyed by id(spark) like
+#: _CACHE: registering the ten views costs ~100 ms, and only the
+#: spark.sql queries read them.
+_VIEWS: dict[int, str] = {}
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All tables; also registers each as a temp view for spark.sql use."""
+    """All tables; also registers each as a temp view for spark.sql use
+    (again only when the session's views point at another sf_dir)."""
     tune(spark)
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
+    out = {name: table(spark, sf_dir, name) for name in TABLES}
+    if _VIEWS.get(id(spark)) != sf_dir:
+        for name, df in out.items():
+            df.createOrReplaceTempView(name)
+        _VIEWS[id(spark)] = sf_dir
     return out

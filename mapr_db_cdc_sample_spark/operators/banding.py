@@ -36,16 +36,14 @@ window -> filter -> exchange-free aggregation.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
 
 #: Max docs per band bucket before the bucket is dropped from candidate
-#: generation (boilerplate mega-cluster guard). Overridable per-run.
-DEFAULT_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", "500"))
+#: generation (boilerplate mega-cluster guard).
+DEFAULT_BUCKET_CAP = 500
 
 _N_BANDS = 4  # 8 minhashes -> 4 bands x 2 rows/band
 

@@ -21,13 +21,19 @@ rates that is a few percent of the corpus.
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import banding
+
+#: Shuffle width of the iterative label/frontier loops (connected
+#: components here, BFS in queries/analytics2). Their tables hold only
+#: edge endpoints — a few percent of the corpus at real dup rates — so
+#: the global shuffle default is pure scheduler overhead; at 100 TB size
+#: it to ~edge-rows/10M.
+CC_PARTITIONS = "4"
 
 
 def duplicate_edges(
@@ -85,15 +91,10 @@ def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     if the fixpoint isn't reached within max_iters (never silently
     returns split components)."""
     spark = edges.sparkSession
-    # The label table holds only edge-endpoints — a few percent of the
-    # corpus at real dup rates, orders of magnitude smaller than the
-    # input. Size the iteration shuffles to THAT volume, not the global
-    # default (32-partition shuffles of a few thousand labels are pure
-    # scheduler overhead; at 100 TB set SPARK_GRAFT_CC_PARTITIONS to
-    # ~edge-rows/10M).
-    cc_parts = os.environ.get("SPARK_GRAFT_CC_PARTITIONS", "4")
+    # Size the iteration shuffles to the label volume (CC_PARTITIONS),
+    # not the global default.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", cc_parts)
+    spark.conf.set("spark.sql.shuffle.partitions", CC_PARTITIONS)
     try:
         return _cc_loop(edges, max_iters)
     finally:

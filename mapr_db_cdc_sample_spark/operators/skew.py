@@ -29,9 +29,11 @@ AQE_SKEW_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-    # sized so the sf0.001 hot partition (~8k rows of (long, double))
-    # already crosses the floor; splits are bounded by mapper count, so a
-    # small advisory size cannot fragment pathologically
+    # the hot partition holds 80% of events as (long, double) rows: ~8k
+    # rows at sf0.01 cross this floor; ~800 at sf0.001 cross it only when
+    # spread over >=16 mappers (its shuffled bytes grow with the mapper
+    # count). Splits are bounded by mapper count, so a small advisory
+    # size cannot fragment pathologically
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8k",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
     # the post-join aggregation needs the join output repartitioned anyway;

@@ -15,6 +15,23 @@ import duckdb
 
 from .io import TABLES
 
+#: Types both engines materialize identically. FLOAT is included: q34/q71
+#: deliberately emit float32 on BOTH sides (driver-green since round 1).
+#: DuckDB SUM/window-SUM of integers is HUGEINT, which fetchall() hands
+#: back as a plain int — only the relation's declared types can see it.
+PORTABLE = {
+    "BIGINT",
+    "INTEGER",
+    "SMALLINT",
+    "TINYINT",
+    "VARCHAR",
+    "DOUBLE",
+    "FLOAT",
+    "DATE",
+    "BOOLEAN",
+    "TIMESTAMP",
+}
+
 
 def duck_connect(sf_dir: str) -> "duckdb.DuckDBPyConnection":
     con = duckdb.connect()
@@ -22,6 +39,12 @@ def duck_connect(sf_dir: str) -> "duckdb.DuckDBPyConnection":
         path = os.path.join(sf_dir, f"{t}.parquet")
         con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
+
+
+def nonportable_columns(rel) -> list[tuple[str, str]]:
+    """(column, type) of every output column of a DuckDB relation whose
+    type is outside PORTABLE."""
+    return [(c, str(t)) for c, t in zip(rel.columns, rel.types) if str(t) not in PORTABLE]
 
 
 def _norm(v: Any) -> Any:

@@ -145,21 +145,24 @@ def plan_fingerprint(df: DataFrame) -> str:
     return hashlib.md5(normalize_plan(formatted_plan(df)).encode()).hexdigest()[:16]
 
 
+_PARTITIONING = re.compile(r"partitioning\(", re.IGNORECASE)
+
+
 def _strip_partition_counts(s: str) -> str:
-    """Blank the trailing ``, <count>`` of every ``*partitioning(...)``
-    call via a paren-balanced scan (handles any nesting depth; the old
+    """Blank the trailing count of every ``*partitioning(...)`` call
+    (``hashpartitioning(x#, 200)`` and ``RoundRobinPartitioning(4)``
+    alike) via a paren-balanced scan (handles any nesting depth; the old
     regex matched only one level — ADVICE r11). Inner literal args that
     are NOT the trailing count are preserved, so plans differing in an
     expression literal still get distinct fingerprints."""
     out = []
     i = 0
-    needle = "partitioning("
     while True:
-        j = s.find(needle, i)
-        if j < 0:
+        m = _PARTITIONING.search(s, i)
+        if not m:
             out.append(s[i:])
             break
-        start = j + len(needle)
+        start = m.end()
         depth, k = 1, start
         while k < len(s) and depth:
             c = s[k]
@@ -172,7 +175,7 @@ def _strip_partition_counts(s: str) -> str:
             out.append(s[i:])
             break
         inner = _strip_partition_counts(s[start : k - 1])
-        inner = re.sub(r", \d+$", ", ", inner)
+        inner = re.sub(r"(^|, )\d+$", r"\1", inner)
         out.append(s[i:start])
         out.append(inner)
         out.append(")")

@@ -53,10 +53,4 @@ def load_all() -> dict[str, QueryDef]:
     from . import analytics7  # noqa: F401
     from . import analytics8  # noqa: F401
 
-    # must come last: clones the current rotation band's oracled entries
-    # under window-sorted names so the external gate verifies that band
-    # (round 6: q187-q236 — see aliases.py's module docstring for the
-    # rotation history and the q237+ backlog)
-    from . import aliases  # noqa: F401
-
     return REGISTRY

@@ -4,10 +4,6 @@ exact-arith smoothing, mergeable-bitmap distinct counts, deterministic
 sketches (KMV, count-min), exact histogram-ntile consumers, and
 calendar/forensics/merge-audit ops.
 
-Names deliberately sort AFTER q104_corpus_pipeline so they never evict
-entries from the driver's 50-slot CORRECTNESS window (see queries/aliases.py
-for the window mechanics).
-
 Determinism rules follow queries/relational.py's module docstring: exact
 integer/decimal arithmetic wherever sums occur, ROUND(6+) before ranking on
 transcendental outputs, unique ORDER BY tiebreakers under every LIMIT.

@@ -3,9 +3,6 @@ master-data fuzzy matching, training-data chunking, deterministic
 dimensionality reduction, graph BFS, contrastive mining, passage-level
 dedup, distributed CDFs, and mergeable-state statistics.
 
-Names sort AFTER q104_corpus_pipeline so they never evict entries from
-the driver's 50-slot CORRECTNESS window (see queries/aliases.py).
-
 Determinism rules follow queries/relational.py's module docstring: exact
 integer/decimal arithmetic wherever sums occur, ROUND(6) before any
 double leaves the query, unique ORDER BY tiebreakers under every LIMIT,
@@ -22,7 +19,7 @@ from ..functions import text as T
 from ..functions import vectors as V
 from ..io import load_tables
 from ..operators import banding as B
-from ..operators.dedup_pipeline import connected_components
+from ..operators.dedup_pipeline import CC_PARTITIONS, connected_components
 from . import register
 from .analytics import _CC_ORACLE
 from .llm import _BANDS_CTE, _MINHASH_CTE, _minhash_corpus
@@ -387,14 +384,11 @@ def _bfs_hops(edges, max_depth: int = 20):
     """(node, hops) = BFS level from each component's min-label root over
     the undirected edge list. Frontier-sized joins, localCheckpoint per
     level to cut lineage, and iteration shuffles sized to the label
-    volume, not the global default (same discipline — and same env knob
-    — as operators/dedup_pipeline.connected_components)."""
-    import os
-
+    volume, not the global default (same discipline — and same
+    CC_PARTITIONS — as operators/dedup_pipeline.connected_components)."""
     spark = edges.sparkSession
-    parts = os.environ.get("SPARK_GRAFT_CC_PARTITIONS", "4")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    spark.conf.set("spark.sql.shuffle.partitions", CC_PARTITIONS)
     try:
         return _bfs_loop(edges, max_depth)
     finally:

@@ -4,9 +4,6 @@ counts), leakage-safe CV folds, per-group quantile normalization,
 distributed Gram matrix / PCA over the embedding column, sorted-
 neighborhood ER blocking, and the feature-hashing trick.
 
-Names sort AFTER q104_corpus_pipeline so they never evict entries from
-the driver's 50-slot CORRECTNESS window (see queries/aliases.py).
-
 Determinism rules follow queries/relational.py's module docstring; the
 recurring trick here is the POSITIVE-SHIFT integer round-half-up for
 possibly-negative rationals: Spark's DIV truncates toward zero while

@@ -22,8 +22,6 @@ strings compare identically), doubles are rounded, ints are exact.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -694,7 +692,7 @@ def q135(spark, sf_dir):
 #: and at sf0.1 the join blew past 5 minutes. The query is a SURFACE demo
 #: of the ml API (the recall test vs exact q44 runs at test scale); bound
 #: its input like the streaming queries bound theirs, loudly.
-_MAX_ML_LSH_DOCS = int(os.environ.get("SPARK_GRAFT_ML_LSH_DOCS", "5000"))
+_MAX_ML_LSH_DOCS = 5000
 
 
 @register("q53_minhash_lsh_ml", tags=("approx",))

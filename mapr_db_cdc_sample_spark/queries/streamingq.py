@@ -10,7 +10,6 @@ and applyInPandasWithState document materialization.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import functions as F
@@ -40,11 +39,11 @@ def _drain(stream_df, prefix: str, output_mode: str = "append"):
 
 
 #: Rows-only smoke checks exercise semantics, not scale — bound the
-#: streamed slice so each streaming query stays fast at any sf. The cap
-#: is an env knob, and every query below carries its actual streamed row
-#: count as an n_input_rows column so the rows-only correctness check
-#: records the coverage (no silent truncation).
-_MAX_STREAM_EVENTS = int(os.environ.get("SPARK_GRAFT_MAX_STREAM_EVENTS", "4000"))
+#: streamed slice so each streaming query stays fast at any sf. Every
+#: query below carries its actual streamed row count as an n_input_rows
+#: column so the rows-only correctness check records the coverage (no
+#: silent truncation).
+_MAX_STREAM_EVENTS = 4000
 
 
 def _with_input_count(out, n: int):

@@ -6,33 +6,18 @@ from a DuckDB window SUM(BIGINT), which is HUGEINT — numerically equal
 to Spark's bigint (Python int == int, so oracle.compare passes) but a
 different materialized type under the driver's hash. This test runs
 every registered oracle against DuckDB at sf0.001 and asserts no output
-column carries a type outside the engine-portable set, so the class
-cannot reappear.
+column carries a type outside the engine-portable set
+(oracle.PORTABLE), so the class cannot reappear.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from mapr_db_cdc_sample_spark.oracle import duck_connect
+from mapr_db_cdc_sample_spark.oracle import duck_connect, nonportable_columns
 from mapr_db_cdc_sample_spark.queries import load_all
 
 SF_DIR = "/root/testdata/sf0.001"
-
-#: Types both engines materialize identically. FLOAT is included: q34/q71
-#: deliberately emit float32 on BOTH sides (driver-green since round 1).
-PORTABLE = {
-    "BIGINT",
-    "INTEGER",
-    "SMALLINT",
-    "TINYINT",
-    "VARCHAR",
-    "DOUBLE",
-    "FLOAT",
-    "DATE",
-    "BOOLEAN",
-    "TIMESTAMP",
-}
 
 
 def test_no_nonportable_oracle_output_types():
@@ -45,11 +30,7 @@ def test_no_nonportable_oracle_output_types():
             rel = con.sql(q.oracle)
         except Exception as e:  # pragma: no cover - surfaced by oracle tests
             pytest.fail(f"{name}: oracle failed to plan: {e}")
-        odd = [
-            (c, str(t))
-            for c, t in zip(rel.columns, rel.types)
-            if str(t) not in PORTABLE
-        ]
+        odd = nonportable_columns(rel)
         if odd:
             offenders[name] = odd
     assert not offenders, (

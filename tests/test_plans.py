@@ -338,16 +338,26 @@ def test_ivf_partition_prune_reaches_scan(spark, sf_dir):
 def test_aqe_skew_join_splits_hot_partition(spark, sf_dir):
     """q136: with the scoped skew confs, AQE's OptimizeSkewedJoin must
     actually fire on the 80%-hot key (SortMergeJoin(skew=true) in the
-    final adaptive plan) and the result must equal the plain join."""
+    final adaptive plan) and the result must equal the plain join.
+
+    The hot partition is ~800 rows at sf0.001, and its shuffled bytes
+    depend on the mapper count (defaultParallelism): on 4 cores they
+    stay under q136's 8k floor. The test pins a 2k floor so the split
+    happens on any core count."""
     from mapr_db_cdc_sample_spark.io import load_tables
     from mapr_db_cdc_sample_spark.operators import skew
+
+    confs = {
+        **skew.AQE_SKEW_CONFS,
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "2k",
+    }
 
     t = load_tables(spark, sf_dir)
     plain = {
         tuple(r)
         for r in skew.skewed_segment_rollup(t["events"], t["customer"]).collect()
     }
-    with skew.scoped_confs(spark, skew.AQE_SKEW_CONFS):
+    with skew.scoped_confs(spark, confs):
         df = skew.skewed_segment_rollup(t["events"], t["customer"])
         split = {tuple(r) for r in df.collect()}
         executed = df._jdf.queryExecution().executedPlan().toString()
@@ -897,6 +907,11 @@ def test_normalize_plan_partition_count_with_nested_parens():
         "rangepartitioning(knownfloatingpointnormalized("
         "normalizenanandzero(round(x#, 4))) ASC NULLS FIRST, )"
     ), three
+    # a lone count in CamelCase RoundRobinPartitioning(N) (repartition(n))
+    # must be blanked too: the needle is case-insensitive
+    rr4 = normalize_plan("Arguments: RoundRobinPartitioning(4), REPARTITION_BY_NUM")
+    rr32 = normalize_plan("Arguments: RoundRobinPartitioning(32), REPARTITION_BY_NUM")
+    assert rr4 == rr32 == "Arguments: RoundRobinPartitioning(), REPARTITION_BY_NUM", rr4
 
 
 def test_normalize_plan_rdd_callsite_is_runtime_independent():

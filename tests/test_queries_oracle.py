@@ -10,14 +10,7 @@ from mapr_db_cdc_sample_spark.oracle import compare
 from mapr_db_cdc_sample_spark.queries import load_all
 
 REGISTRY = load_all()
-# rotation aliases are the same callable + oracle as their canonical
-# entry (queries/aliases.py) — re-running them here would only double
-# suite time, so the differential test covers canonical names
-ORACLED = [
-    name
-    for name, q in sorted(REGISTRY.items())
-    if q.oracle and "rotation-alias" not in q.tags
-]
+ORACLED = [name for name, q in sorted(REGISTRY.items()) if q.oracle]
 
 
 @pytest.mark.parametrize("name", ORACLED)
@@ -34,22 +27,18 @@ def test_all_queries_return_rows(spark, sf_dir):
         assert df.columns, f"{name}: no columns"
 
 
-def test_rotation_aliases_bound_to_canonical():
-    """Every rotation alias must resolve to the SAME callable and the
-    SAME oracle object as its canonical entry — a rename or re-register
-    that silently decoupled them would make the driver's hash gate
-    verify a stale copy (round-4 verdict, Next round #8)."""
-    aliases = {n: q for n, q in REGISTRY.items() if "rotation-alias" in q.tags}
-    assert aliases, "rotation mechanism is expected to register aliases"
-    import re
 
-    for name, q in aliases.items():
-        assert name.startswith("q0"), name
-        canon = re.sub(r"^q0+", "q", name)
-        assert canon in REGISTRY, f"{name}: canonical {canon} missing"
-        assert q.fn is REGISTRY[canon].fn, f"{name}: fn decoupled from {canon}"
-        assert q.oracle is REGISTRY[canon].oracle, f"{name}: oracle decoupled"
-    # the 50-slot sorted window must be owned entirely by the aliases,
-    # otherwise part of the rotation band escapes external verification
-    window = sorted(REGISTRY)[: len(aliases)]
-    assert window == sorted(aliases)
+def test_load_tables_views_follow_sf_dir(spark):
+    """load_tables registers the temp views only when the session's views
+    point at another sf_dir: switching A -> B -> A in one session must
+    repoint them every time, or the spark.sql queries read stale data."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from mapr_db_cdc_sample_spark.io import load_tables
+
+    for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.001"):
+        load_tables(spark, sf_dir)
+        want = pq.ParquetFile(os.path.join(sf_dir, "orders.parquet")).metadata.num_rows
+        assert spark.sql("SELECT COUNT(*) FROM orders").first()[0] == want, sf_dir

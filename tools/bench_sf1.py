@@ -18,12 +18,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_queries  # noqa: E402
 from mapr_db_cdc_sample_spark.queries import load_all  # noqa: E402
-from mapr_db_cdc_sample_spark.session import get_spark  # noqa: E402
 
 # top-20 of BENCH_FULL_r8 + the iterative/graph family + the kNN kernel
 # (q492/q512) the round-8 verdict flagged, deduped
@@ -86,46 +85,28 @@ def _load_done() -> dict:
 
 
 def run_set(registry, sf_dir: str, names: list[str], tag: str) -> dict[str, float]:
-    """Min-of-RUNS per query; every result appended to LOG immediately so
-    a killed run loses at most the in-flight query (the first sf1 attempt
-    died inside a grep|tail pipe and lost 90 minutes of timings)."""
-    runs = int(os.environ.get("SPARK_GRAFT_SF1_RUNS", "1"))
-    # Session recycling (the bench.py r6 lesson, relearned here in r10:
-    # one long sf1 session accumulated codegen/metaspace/shuffle state
-    # from the 400-900s heavy entries and inflated every later entry —
-    # q486 measured 125.7s in-session vs 8.2s fresh): restart every
-    # RECYCLE queries so a number reflects the plan, not its position.
-    recycle = int(os.environ.get("SPARK_GRAFT_SF1_RECYCLE", "6"))
+    """One run per query (the heavy sf1 entries take 400-900 s each), the
+    session recycled every 6 queries (one long sf1 session inflated later
+    entries: q486 125.7 s in-session vs 8.2 s fresh). Every result is
+    appended to LOG as it lands, and queries already in LOG are skipped,
+    so a killed run loses at most the in-flight query (the first sf1
+    attempt died inside a grep|tail pipe and lost 90 minutes of
+    timings)."""
     done = _load_done()
-    todo = [n for n in names if (tag, n) not in done]
     out = {n: done[(tag, n)] for n in names if (tag, n) in done}
+    todo = [n for n in names if n not in out]
     if not todo:
         return out
-    spark = get_spark("bench-sf1")
-    spark.sparkContext.setLogLevel("ERROR")
 
-    def go(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    go(registry["q01_scan_count"].fn(spark, sf_dir))  # warm
-    for i, name in enumerate(todo):
-        if i and i % recycle == 0:
-            spark.stop()
-            spark = get_spark("bench-sf1")
-            spark.sparkContext.setLogLevel("ERROR")
-            go(registry["q01_scan_count"].fn(spark, sf_dir))
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            go(registry[name].fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 2)
+    def record(name: str, sec: float) -> None:
         with open(LOG, "a") as f:
-            f.write(json.dumps({"sf": tag, "name": name, "sec": out[name]}) + "\n")
-        print(f"  {name}: {out[name]}s", flush=True)
-        spark.catalog.clearCache()
-    spark.stop()
-    return out
+            f.write(json.dumps({"sf": tag, "name": name, "sec": sec}) + "\n")
+        print(f"  {name}: {sec}s", flush=True)
+
+    timings, _ = time_queries(
+        registry, sf_dir, todo, runs=1, recycle=6, app="bench-sf1", on_result=record
+    )
+    return {**out, **timings}
 
 
 def main() -> None:
@@ -152,7 +133,7 @@ def main() -> None:
             "local sf1 slice = tools/make_sf1.py 10x key-strided upsample of "
             "sf0.1 (word-shuffled doc reps, dim-permuted embedding reps so "
             "dedup/ANN candidate volume scales linearly); fixed local[32] "
-            "box, min-of-SPARK_GRAFT_SF1_RUNS (default 1); "
+            "box, one run per query; "
             "ratio ~<=15 at 10x data = scaling linearly. Two caveats "
             "(r11): the EXACT-kNN family (q492/q512/q576/q286) is "
             "declared quadratic — its oracle IS all-pairs, so 10x data "

@@ -5,9 +5,9 @@ oracle.compare() normalizes floats to 9 digits and uses Python equality
 (Decimal(5) == 5), which is looser than a type-sensitive driver hash.
 This tool re-runs the comparison with ZERO tolerance: every cell must
 be the same Python type family AND repr-identical after canonical
-formatting (floats via repr of the double, ints as ints). Any cell that
-would round-trip differently under pandas/arrow materialization
-(Decimal, HUGEINT-derived) is reported.
+formatting (floats via repr of the double, ints as ints). Every oracle
+output column whose declared DuckDB type is outside oracle.PORTABLE
+(DECIMAL, HUGEINT) is reported as well.
 
 Usage: python tools/strict_compare.py <sf_dir> <lo:hi-or-prefix>
 """
@@ -23,10 +23,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as E  # noqa: E402
-from mapr_db_cdc_sample_spark.oracle import duck_connect  # noqa: E402
+from mapr_db_cdc_sample_spark.oracle import duck_connect, nonportable_columns  # noqa: E402
 from mapr_db_cdc_sample_spark.session import get_spark  # noqa: E402
-
-_OK_TYPES = (int, str, float, bool, type(None), datetime.date, datetime.datetime)
 
 
 def _canon(v):
@@ -85,15 +83,13 @@ def main() -> int:
         sc = sorted((tuple(_canon(c) for c in r) for r in s_rows), key=repr)
         dc = sorted((tuple(_canon(c) for c in r) for r in d_rows), key=repr)
         if len(sc) != len(dc):
-            msgs.append(f"row counts {len(sc)} vs {dc and len(dc)}")
+            msgs.append(f"row counts {len(sc)} vs {len(dc)}")
         elif sc != dc:
             diffs = [(a, b) for a, b in zip(sc, dc) if a != b][:2]
             msgs.append(f"strict cell diff: {diffs}")
-        for r in dc[:50]:
-            for tag, _ in r:
-                if tag.endswith("!"):
-                    msgs.append(f"duck emits non-portable type {tag}")
-                    break
+        odd = nonportable_columns(rel)
+        if odd:
+            msgs.append(f"duck emits non-portable types {odd}")
         if msgs:
             fails += 1
             print(f"{name}: STRICT-FAIL {' | '.join(msgs)[:400]}")
