@@ -10,6 +10,13 @@ column. At 100 TB this keeps the whole route map-side and
 whole-stage-codegen'd; the same functions serve batch and foreachBatch
 streaming.
 
+The reference writes the route twice, once per table type; here both
+lanes share one last-wins field probe (`_last_change`), one
+fields_to_index assembly (`_fields_to_index`) and one FTS projection
+with its delete tombstones (`_fts`). `route_binary` adds only the
+row-key and cell decode; `route_json` adds the insert-document parse and
+the geo route.
+
 Observable quirks preserved (SURVEY.md §2.1):
 - case-insensitive field-path match (J:152-158, B:116-120);
 - canonical `firstName`/`lastName` keys in fields_to_index regardless of
@@ -56,6 +63,34 @@ def _json_scalar(col: Column) -> Column:
     return F.get_json_object(col, "$")
 
 
+def _fields_to_index(first: Column, last: Column) -> Column:
+    """R13: per-record re-assembly of the ≤2 matching name fields into one
+    fields_to_index object — a map built from the non-null entries, keyed
+    by the canonical names whatever the input path casing (J:133, J:140)."""
+    entries = F.filter(
+        F.array(
+            F.struct(F.lit("firstName").alias("key"), first.alias("value")),
+            F.struct(F.lit("lastName").alias("key"), last.alias("value")),
+        ),
+        lambda e: e["value"].isNotNull(),
+    )
+    return F.map_from_entries(entries)
+
+
+def _fts(base: DataFrame, lane: str) -> DataFrame:
+    """R10/R12: FTS gets inserts/updates with ≥1 name field, plus all
+    deletes as tombstones {_id, operation} only (J:197-209); `lane` is the
+    `type` a live message carries."""
+    live = F.col("operation") != OP_DELETE
+    return base.where(~live | (F.size("fields_to_index") > 0)).select(
+        "_id",
+        "operation",
+        "ts",
+        F.when(live, F.lit(lane)).alias("type"),
+        F.when(live, F.col("fields_to_index")).alias("fields_to_index"),
+    )
+
+
 def route_json(cdc: DataFrame) -> tuple[DataFrame, DataFrame]:
     """JSON-table lane (FtsAndGeoServiceJSONWithCDC.java).
 
@@ -92,38 +127,12 @@ def route_json(cdc: DataFrame) -> tuple[DataFrame, DataFrame]:
         parsed,
     )
 
-    # R13: per-record re-assembly of the ≤2 matching name fields into one
-    # fields_to_index object — map built from the non-null entries.
-    entries = F.filter(
-        F.array(
-            F.struct(F.lit("firstName").alias("key"), first_name.alias("value")),
-            F.struct(F.lit("lastName").alias("key"), last_name.alias("value")),
-        ),
-        lambda e: e["value"].isNotNull(),
-    )
-    fields_to_index = F.map_from_entries(entries)
-
     base = cdc.select(
         F.col("_id"),
         F.col("op").alias("operation"),
         F.col("ts"),
-        fields_to_index.alias("fields_to_index"),
+        _fields_to_index(first_name, last_name).alias("fields_to_index"),
         address.alias("address"),
-    )
-
-    # R10/R12: FTS gets inserts/updates with ≥1 name field, plus all
-    # deletes (tombstone {_id, operation} only — J:197-209).
-    fts = base.where(
-        (F.col("operation") == OP_DELETE)
-        | ((F.col("operation") != OP_DELETE) & (F.size("fields_to_index") > 0))
-    ).select(
-        "_id",
-        "operation",
-        "ts",
-        F.when(F.col("operation") != OP_DELETE, F.lit("json")).alias("type"),
-        F.when(F.col("operation") != OP_DELETE, F.col("fields_to_index")).alias(
-            "fields_to_index"
-        ),
     )
 
     # Geo gets inserts/updates that touched address; never deletes
@@ -131,7 +140,7 @@ def route_json(cdc: DataFrame) -> tuple[DataFrame, DataFrame]:
     geo = base.where((F.col("operation") != OP_DELETE) & F.col("address").isNotNull()).select(
         "_id", "operation", "ts", "address"
     )
-    return fts, geo
+    return _fts(base, "json"), geo
 
 
 def route_binary(cdc: DataFrame) -> DataFrame:
@@ -142,39 +151,19 @@ def route_binary(cdc: DataFrame) -> DataFrame:
     decoded UTF-8 (B:70). Inserts surface as RECORD_UPDATE upstream (B:71),
     so only UPDATE and DELETE reach us.
     """
-    changes = F.col("changes")
-
-    def cell(path_lower: str) -> Column:
-        # last-wins like the Java accumulation loop (B:118/121 put
-        # overwrites); decode ≡ Bytes.toString (B:118)
-        matches = F.filter(changes, lambda c: F.lower(c["fieldPath"]) == F.lit(path_lower))
-        return F.get(matches, F.size(matches) - 1)["value"].cast("string")
-
-    entries = F.filter(
-        F.array(
-            F.struct(F.lit("firstName").alias("key"), cell("default.firstname").alias("value")),
-            F.struct(F.lit("lastName").alias("key"), cell("default.lastname").alias("value")),
-        ),
-        lambda e: e["value"].isNotNull(),
+    # last-wins like the Java accumulation loop (B:118/121 put
+    # overwrites); decode ≡ Bytes.toString (B:118)
+    first, last = (
+        _last_change(F.col("changes"), f"default.{name}").cast("string")
+        for name in ("firstname", "lastname")
     )
-
     base = cdc.select(
         F.col("row_key").cast("string").alias("_id"),
         F.col("op").alias("operation"),
         F.col("ts"),
-        F.map_from_entries(entries).alias("fields_to_index"),
+        _fields_to_index(first, last).alias("fields_to_index"),
     )
-    return base.where(
-        (F.col("operation") == OP_DELETE) | (F.size("fields_to_index") > 0)
-    ).select(
-        "_id",
-        "operation",
-        "ts",
-        F.when(F.col("operation") != OP_DELETE, F.lit("binary")).alias("type"),
-        F.when(F.col("operation") != OP_DELETE, F.col("fields_to_index")).alias(
-            "fields_to_index"
-        ),
-    )
+    return _fts(base, "binary")
 
 
 def fts_wire(fts: DataFrame) -> DataFrame:

@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -33,15 +32,6 @@ OP_UPDATE = "RECORD_UPDATE"
 OP_DELETE = "RECORD_DELETE"
 
 ADDRESS_DDL = "struct<city: string, state: string, street: string, zipCode: int>"
-
-ADDRESS_SCHEMA = StructType(
-    [
-        StructField("city", StringType()),
-        StructField("state", StringType()),
-        StructField("street", StringType()),
-        StructField("zipCode", IntegerType()),
-    ]
-)
 
 CDC_JSON_SCHEMA = StructType(
     [

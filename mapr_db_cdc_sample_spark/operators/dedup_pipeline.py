@@ -26,6 +26,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_confs
 from . import banding
 
 #: Shuffle width of the iterative label/frontier loops (connected
@@ -90,15 +91,10 @@ def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     convergence in O(log longest-chain) instead of O(chain). Warns loudly
     if the fixpoint isn't reached within max_iters (never silently
     returns split components)."""
-    spark = edges.sparkSession
     # Size the iteration shuffles to the label volume (CC_PARTITIONS),
     # not the global default.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", CC_PARTITIONS)
-    try:
+    with scoped_confs(edges.sparkSession, {"spark.sql.shuffle.partitions": CC_PARTITIONS}):
         return _cc_loop(edges, max_iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _cc_loop(edges: DataFrame, max_iters: int) -> DataFrame:

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import scoped_confs
+
 
 def _assign(vecs: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
     """Nearest centroid per vector (squared euclidean; ties → lowest id),
@@ -118,23 +120,21 @@ def kmeans_lite(
     # session-conf flip assumes a single-threaded driver (true for the
     # test/bench harness); a concurrent-query session would need the
     # repartition form instead
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        for _ in range(iters):
-            assigned = _assign(vecs, centroids)
-            centroids, it = _recompute(assigned, dim)
-            inertia.append(it)
-        # materialize the final assignment off the cache, then release it;
-        # the embedding column is dropped first — the assignment contract
-        # is (vec_id, cluster, d2), and checkpointing the vectors again
-        # would write ~20x the bytes for nothing
-        final = (
-            _assign(vecs, centroids)
-            .select("vec_id", "cluster", "d2")
-            .localCheckpoint(eager=True)
-        )
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
+            for _ in range(iters):
+                assigned = _assign(vecs, centroids)
+                centroids, it = _recompute(assigned, dim)
+                inertia.append(it)
+            # materialize the final assignment off the cache, then release
+            # it; the embedding column is dropped first — the assignment
+            # contract is (vec_id, cluster, d2), and checkpointing the
+            # vectors again would write ~20x the bytes for nothing
+            final = (
+                _assign(vecs, centroids)
+                .select("vec_id", "cluster", "d2")
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         vecs.unpersist()
     return final, inertia

@@ -12,9 +12,7 @@ aggregates (sum/count/min/max); the salt never leaks into output.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Conf overrides that make AQE's OptimizeSkewedJoin observable at test
@@ -44,30 +42,6 @@ AQE_SKEW_CONFS = {
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     "spark.sql.join.preferSortMergeJoin": "true",
 }
-
-
-@contextmanager
-def scoped_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set session confs for the duration of a block, restoring previous
-    values (or unsetting) afterwards. Assumes a single-threaded driver —
-    true for this harness; a concurrent session would need per-query
-    conf isolation instead."""
-    prev: dict[str, str | None] = {}
-    for k in confs:
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def skewed_segment_rollup(events: DataFrame, customer: DataFrame) -> DataFrame:

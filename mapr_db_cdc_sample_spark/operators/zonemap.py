@@ -35,36 +35,39 @@ def write_clustered(df: DataFrame, path: str, zone_key: str, n_files: int) -> No
     )
 
 
-def build_manifest(spark: SparkSession, path: str, zone_key: str) -> list[tuple]:
-    """[(file, lo, hi)] per data file — the zone map. One aggregate over
-    the key column only (column-pruned scan); at 100 TB this is built
-    incrementally at write time, never by re-scanning."""
+def build_manifest(spark: SparkSession, path: str, keys: list[str]) -> list[tuple]:
+    """[(file, [(lo, hi) per key])] per data file — the zone map. One
+    aggregate over the key columns only (column-pruned scan); at 100 TB
+    this is built incrementally at write time, never by re-scanning."""
     stats = (
         spark.read.parquet(path)
-        .select(F.input_file_name().alias("f"), F.col(zone_key).alias("k"))
+        .select(F.input_file_name().alias("f"), *keys)
         .groupBy("f")
-        .agg(F.min("k").alias("lo"), F.max("k").alias("hi"))
+        .agg(*(agg(k) for k in keys for agg in (F.min, F.max)))
         .collect()
     )
-    return [(r.f, r.lo, r.hi) for r in stats]
+    return [(r[0], list(zip(r[1::2], r[2::2]))) for r in stats]
 
 
 def pruned_scan(
     spark: SparkSession,
     manifest: list[tuple],
-    lo,
-    hi,
+    ranges: list[tuple],
 ) -> tuple[DataFrame, int, int]:
     """(df, n_selected_files, n_total_files): scan ONLY the files whose
-    [lo, hi] zone overlaps the predicate range; the caller re-applies the
-    exact predicate as the residual filter."""
-    selected = [f for f, flo, fhi in manifest if flo <= hi and fhi >= lo]
+    zones overlap EVERY predicate range — one (lo, hi) per manifest key;
+    the caller re-applies the exact predicate as the residual filter."""
+    selected = [
+        f
+        for f, zones in manifest
+        if all(zlo <= hi and zhi >= lo for (zlo, zhi), (lo, hi) in zip(zones, ranges))
+    ]
     if not selected:  # degenerate: nothing can match; empty frame, same schema
         return spark.read.parquet(manifest[0][0]).limit(0), 0, len(manifest)
     return spark.read.parquet(*selected), len(selected), len(manifest)
 
 
-# ------------------------- Z-order (2-D) clustering + two-column manifest
+# ------------------------- Z-order (2-D) clustering
 
 def zvalue(x, y, bits: int = 8):
     """Morton/Z-order interleave of two bucketized dims (JVM expressions
@@ -92,39 +95,3 @@ def write_zordered(df: DataFrame, path: str, xcol: str, ycol: str, n_files: int)
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def build_manifest2(spark: SparkSession, path: str, xcol: str, ycol: str) -> list[tuple]:
-    """[(file, xlo, xhi, ylo, yhi)] — the two-column zone map."""
-    stats = (
-        spark.read.parquet(path)
-        .select(F.input_file_name().alias("f"), F.col(xcol).alias("x"), F.col(ycol).alias("y"))
-        .groupBy("f")
-        .agg(
-            F.min("x").alias("xlo"),
-            F.max("x").alias("xhi"),
-            F.min("y").alias("ylo"),
-            F.max("y").alias("yhi"),
-        )
-        .collect()
-    )
-    return [(r.f, r.xlo, r.xhi, r.ylo, r.yhi) for r in stats]
-
-
-def pruned_scan2(
-    spark: SparkSession,
-    manifest: list[tuple],
-    xlo,
-    xhi,
-    ylo,
-    yhi,
-) -> tuple[DataFrame, int, int]:
-    """Scan only files whose zones overlap BOTH predicate ranges."""
-    selected = [
-        f
-        for f, fxlo, fxhi, fylo, fyhi in manifest
-        if fxlo <= xhi and fxhi >= xlo and fylo <= yhi and fyhi >= ylo
-    ]
-    if not selected:
-        return spark.read.parquet(manifest[0][0]).limit(0), 0, len(manifest)
-    return spark.read.parquet(*selected), len(selected), len(manifest)

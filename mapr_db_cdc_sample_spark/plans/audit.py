@@ -60,16 +60,14 @@ def codegen_stage_count(build_df) -> int:
 
     from pyspark.sql import SparkSession
 
+    from ..session import scoped_confs
+
     spark = SparkSession.getActiveSession()
     df = build_df()  # builders may (re)set session confs — build first
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        buf = io.StringIO()
+    buf = io.StringIO()
+    with scoped_confs(spark, {"spark.sql.adaptive.enabled": "false"}):
         with contextlib.redirect_stdout(buf):
             df.explain()  # physical planning happens here, with AQE off
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
     return len(set(re.findall(r"\*\((\d+)\)", buf.getvalue())))
 
 
@@ -190,8 +188,10 @@ def normalize_plan(plan: str) -> str:
     s = plan
     s = re.sub(r"#\d+[L]?", "#", s)
     # lambda-variable names carry a session-global counter (lambda x_1
-    # in a fresh session, x_6 after other queries ran)
+    # in a fresh session, x_6 after other queries ran); so do the
+    # common-expression aliases Spark plans for NULLIF
     s = re.sub(r"\blambda ([A-Za-z]+)_\d+", r"lambda \1_", s)
+    s = re.sub(r"\b_common_expr_\d+", "_common_expr_", s)
     # checkpointed/cached RDD lineage labels carry RDD ids
     s = re.sub(r"ExistingRDD\b[^\n]*", "ExistingRDD", s)
     s = re.sub(r"MapPartitionsRDD\[\d+\]", "MapPartitionsRDD[]", s)

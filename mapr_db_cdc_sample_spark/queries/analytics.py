@@ -1267,7 +1267,7 @@ def q170(spark, sf_dir):
     dims; planning intersects the predicate with it and scans only
     overlapping files (ratio asserted in tests); the exact residual
     filter keeps the result hash-identical to the full-table oracle."""
-    from ..operators.zonemap import build_manifest2, pruned_scan2, write_zordered
+    from ..operators.zonemap import build_manifest, pruned_scan, write_zordered
     from ..scratch import scratch_dir
 
     ev = load_tables(spark, sf_dir)["events"].withColumn(
@@ -1275,9 +1275,9 @@ def q170(spark, sf_dir):
     ).withColumn("dayb", F.dayofmonth(F.col("ts").cast("date")))
     path = scratch_dir("q170_zorder")
     write_zordered(ev, path, "ub", "dayb", 16)
-    manifest = build_manifest2(spark, path, "ub", "dayb")
+    manifest = build_manifest(spark, path, ["ub", "dayb"])
     xlo, xhi, ylo, yhi = 16, 79, 8, 15
-    df, _sel, _tot = pruned_scan2(spark, manifest, xlo, xhi, ylo, yhi)
+    df, _sel, _tot = pruned_scan(spark, manifest, [(xlo, xhi), (ylo, yhi)])
     return (
         df.where(F.col("ub").between(xlo, xhi) & F.col("dayb").between(ylo, yhi))
         .groupBy("event_type")

@@ -20,6 +20,7 @@ from ..functions import vectors as V
 from ..io import load_tables
 from ..operators import banding as B
 from ..operators.dedup_pipeline import CC_PARTITIONS, connected_components
+from ..session import scoped_confs
 from . import register
 from .analytics import _CC_ORACLE
 from .llm import _BANDS_CTE, _MINHASH_CTE, _minhash_corpus
@@ -386,13 +387,8 @@ def _bfs_hops(edges, max_depth: int = 20):
     level to cut lineage, and iteration shuffles sized to the label
     volume, not the global default (same discipline — and same
     CC_PARTITIONS — as operators/dedup_pipeline.connected_components)."""
-    spark = edges.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", CC_PARTITIONS)
-    try:
+    with scoped_confs(edges.sparkSession, {"spark.sql.shuffle.partitions": CC_PARTITIONS}):
         return _bfs_loop(edges, max_depth)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _bfs_loop(edges, max_depth: int):

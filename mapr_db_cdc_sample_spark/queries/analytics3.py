@@ -1561,6 +1561,8 @@ def q294(spark, sf_dir):
         F.sum(F.col("x") * F.col("x")).cast(d38).alias("sxx"),
         F.sum(F.col("y") * F.col("y")).cast(d38).alias("syy"),
     )
+    # a regular graph has zero degree variance: r² is undefined there, so
+    # r2_micro is NULL (DuckDB's `//` by zero), not an ANSI DIV error
     return mom.select(
         F.expr("CAST(m DIV 2 AS BIGINT)").alias("n_edges"),
         F.when(F.expr("m*sxy > sx*sy"), F.lit(1))
@@ -1571,7 +1573,7 @@ def q294(spark, sf_dir):
         F.expr(
             "CAST((2 * (m*sxy - sx*sy) * (m*sxy - sx*sy) * 1000000"
             " + (m*sxx - sx*sx) * (m*syy - sy*sy))"
-            " DIV (2 * (m*sxx - sx*sx) * (m*syy - sy*sy)) AS BIGINT)"
+            " DIV NULLIF(2 * (m*sxx - sx*sx) * (m*syy - sy*sy), 0) AS BIGINT)"
         ).alias("r2_micro"),
     )
 

@@ -25,6 +25,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import load_tables
+from ..session import scoped_confs
 from . import register
 
 
@@ -1892,7 +1893,7 @@ def q136(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     df = skew.skewed_segment_rollup(t["events"], t["customer"])
-    with skew.scoped_confs(spark, skew.AQE_SKEW_CONFS):
+    with scoped_confs(spark, skew.AQE_SKEW_CONFS):
         return df.localCheckpoint(eager=True)
 
 
@@ -2020,8 +2021,6 @@ def q138(spark, sf_dir):
     needed). Executed under scoped confs (q136's pattern); the
     might_contain marker is plan-asserted in tests. Oracle = the plain
     join: the filter is a pure reduction, invisible in the result."""
-    from ..operators.skew import scoped_confs
-
     t = load_tables(spark, sf_dir)
     df = bloom_pruned_join(t["lineitem"], t["orders"])
     with scoped_confs(spark, BLOOM_JOIN_CONFS):
@@ -2087,11 +2086,11 @@ def q139(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]
     path = scratch_dir("q139_zone")
     write_clustered(ev, path, "event_id", 16)
-    manifest = build_manifest(spark, path, "event_id")
+    manifest = build_manifest(spark, path, ["event_id"])
     # a range that is a strict subset of every sf's id space (ids start
     # at 0 at all scales), so pruning is non-trivial at each test size
     lo, hi = 250, 499
-    df, _n_sel, _n_tot = pruned_scan(spark, manifest, lo, hi)
+    df, _n_sel, _n_tot = pruned_scan(spark, manifest, [(lo, hi)])
     return (
         df.where(F.col("event_id").between(lo, hi))
         .groupBy("event_type")

@@ -18,6 +18,7 @@ from ..cdc.fixtures import synth_cdc_from_events
 from ..cdc.schema import CDC_JSON_SCHEMA
 from ..io import load_tables
 from ..scratch import scratch_dir
+from ..session import scoped_confs
 from ..sources.replay import read_replay, run_to_memory, write_replay
 from . import register
 
@@ -29,12 +30,8 @@ def _drain(stream_df, prefix: str, output_mode: str = "append"):
     is sized to the state volume instead."""
     spark = stream_df.sparkSession
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
         run_to_memory(stream_df, name, output_mode=output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -197,19 +194,8 @@ def q70(spark, sf_dir):
     n = cdc.count()
     path = write_replay(cdc.coalesce(1), n_chunks=1)
     stream = read_replay(spark, path, CDC_BINARY_SCHEMA)
-
     name = f"q70_{uuid.uuid4().hex[:8]}"
-
-    q = (
-        fts_wire(route_binary(stream))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_memory(fts_wire(route_binary(stream)), name)
     return _with_input_count(spark.table(name), n)
 
 

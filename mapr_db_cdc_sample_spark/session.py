@@ -14,6 +14,7 @@ Scale posture (100 TB target, tested on local[32]):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -79,6 +80,30 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # conf not settable at runtime in this build; keep going
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the duration of a block, restoring previous
+    values (or unsetting) afterwards. Assumes a single-threaded driver —
+    true for this harness; a concurrent session would need per-query
+    conf isolation instead."""
+    prev: dict[str, str | None] = {}
+    for k in confs:
+        try:
+            prev[k] = spark.conf.get(k)
+        except Exception:
+            prev[k] = None
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "mapr-db-cdc-sample-spark") -> SparkSession:

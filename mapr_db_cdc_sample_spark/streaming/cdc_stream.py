@@ -1,11 +1,15 @@
 """The reference's whole program as ONE Structured Streaming query
 (SURVEY.md §3.4): changelog stream → route (shared batch transform) →
-dual sink via foreachBatch, exactly-once through checkpointing.
+dual sink via foreachBatch, resumable through a checkpoint kept beside
+the FTS sink.
 
-The transformation is the same route_json/route_binary used in batch —
-written once against DataFrames, wrapped here (the foreachBatch body IS
-the batch pipeline). Per-record fan-out stays ≤2 messages; the delete
+The transformation is the same route_json used in batch — written once
+against DataFrames, wrapped here (the foreachBatch body IS the batch
+pipeline). Per-record fan-out stays ≤2 messages; the delete
 short-circuit (no flatten) is inherited from the shared transform.
+`route_json`, `fts_wire` and `geo_wire` are looked up in this module's
+namespace on every micro-batch, so a wrapper set on them here sees each
+batch.
 """
 
 from __future__ import annotations
@@ -15,7 +19,6 @@ import os
 from pyspark.sql import DataFrame
 
 from ..cdc.pipeline import fts_wire, geo_wire, route_json
-from ..sources.replay import checkpoint_dir
 
 
 def start_json_pipeline(
@@ -27,15 +30,18 @@ def start_json_pipeline(
     """Run the JSON-lane CDC pipeline: stream in, two parquet message
     sinks out (stand-ins for the fts_service / geo_service topics).
 
-    Delivery semantics: the streaming checkpoint makes each SINK
-    at-least-once with batch-level idempotence on restart — an upgrade
-    over the reference's enable.auto.commit=true (J:48, which can lose
-    records) — but the dual parquet appends are NOT jointly atomic: if
-    the fts write lands and the geo write fails inside one micro-batch,
-    the retried batch re-appends to fts (duplicates). True dual-sink
-    exactly-once needs a batch-id commit marker both readers honor;
-    callers needing it should dedup on (_id, operation, batch) at read
-    time. The two sink writes are submitted CONCURRENTLY (they share no
+    Delivery semantics: the streaming checkpoint lives at
+    `<fts_dir>/_checkpoint` — derived from the sink, as Spark's own
+    `_spark_metadata` is, and skipped by Spark and pyarrow readers of the
+    sink because of its `_` prefix. A restart over the same sinks
+    therefore resumes after the last committed micro-batch instead of
+    re-emitting the changelog — an upgrade over the reference's
+    enable.auto.commit=true (J:48, which can lose records). The dual
+    parquet appends are still NOT jointly atomic: if the fts write lands
+    and the geo write fails inside one micro-batch, the retried batch
+    re-appends to fts (duplicates). True dual-sink exactly-once needs a
+    batch-id commit marker both readers honor (an open ROADMAP item).
+    The two sink writes are submitted CONCURRENTLY (they share no
     shuffle, and Spark's scheduler overlaps independent jobs):
     sequential writes put two full job latencies on the micro-batch
     critical path and blew the ≤ ~800 ms budget (measured 942 ms median
@@ -63,7 +69,7 @@ def start_json_pipeline(
 
     writer = (
         cdc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir())
+        .option("checkpointLocation", os.path.join(fts_dir, "_checkpoint"))
         .outputMode("update")
     )
     trigger = trigger or {"availableNow": True}

@@ -205,8 +205,8 @@ def test_zonemap_pruned_scan_equals_full_filter(spark, tmp_path_factory, keys, l
     df = spark.createDataFrame([(k, k * 2) for k in keys], "k long, v long")
     path = str(tmp_path_factory.mktemp("zm") / "t")
     write_clustered(df, path, "k", 4)
-    manifest = build_manifest(spark, path, "k")
-    pruned, n_sel, n_tot = pruned_scan(spark, manifest, lo, hi)
+    manifest = build_manifest(spark, path, ["k"])
+    pruned, n_sel, n_tot = pruned_scan(spark, manifest, [(lo, hi)])
     got = sorted(
         tuple(r) for r in pruned.where(F.col("k").between(lo, hi)).collect()
     )

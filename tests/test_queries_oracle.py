@@ -42,3 +42,17 @@ def test_load_tables_views_follow_sf_dir(spark):
         load_tables(spark, sf_dir)
         want = pq.ParquetFile(os.path.join(sf_dir, "orders.parquet")).metadata.num_rows
         assert spark.sql("SELECT COUNT(*) FROM orders").first()[0] == want, sf_dir
+
+
+def test_q294_regular_candidate_graph_matches_oracle(spark, tmp_path):
+    """On generated data every node of q294's candidate graph has the same
+    degree, so the degree variance is 0: r2_micro must be NULL, as the
+    oracle's `//` gives, not an ANSI divide-by-zero error."""
+    from perfbench import datagen
+
+    from mapr_db_cdc_sample_spark.oracle import duck_connect
+
+    sf_dir = datagen.write(str(tmp_path / "sf0.01"), 0.01, 1)
+    q = REGISTRY["q294_degree_assortativity"]
+    ok, msg = compare(q.fn(spark, sf_dir), duck_connect(sf_dir), q.oracle)
+    assert ok, msg

@@ -147,8 +147,8 @@ def test_zorder_manifest_prunes_2d(spark, sf_dir):
 
     from mapr_db_cdc_sample_spark.io import load_tables
     from mapr_db_cdc_sample_spark.operators.zonemap import (
-        build_manifest2,
-        pruned_scan2,
+        build_manifest,
+        pruned_scan,
         write_zordered,
     )
     from mapr_db_cdc_sample_spark.scratch import scratch_dir
@@ -160,8 +160,8 @@ def test_zorder_manifest_prunes_2d(spark, sf_dir):
     )
     path = scratch_dir("test_zorder")
     write_zordered(ev, path, "ub", "dayb", 16)
-    manifest = build_manifest2(spark, path, "ub", "dayb")
-    _df, n_sel, n_tot = pruned_scan2(spark, manifest, 16, 79, 8, 15)
+    manifest = build_manifest(spark, path, ["ub", "dayb"])
+    _df, n_sel, n_tot = pruned_scan(spark, manifest, [(16, 79), (8, 15)])
     assert n_tot == 16, n_tot
     assert n_sel <= n_tot // 2, (n_sel, n_tot)
 

@@ -25,6 +25,11 @@ def _mem(prefix: str) -> str:
     return f"{prefix}_{uuid.uuid4().hex[:8]}"
 
 
+def _canon(values):
+    """Wire JSON values as an order-insensitive, comparable list."""
+    return sorted((json.loads(v) for v in values), key=lambda d: json.dumps(d, sort_keys=True))
+
+
 def _events_stream(spark, sf_dir, chunks=3):
     ev = load_tables(spark, sf_dir)["events"]
     path = write_replay(ev, n_chunks=chunks, order_by="ts")
@@ -45,16 +50,11 @@ def test_cdc_stream_equals_batch(spark, tmp_path):
     q = start_json_pipeline(stream, fts_dir, geo_dir)
     q.awaitTermination()
 
-    def canon(values):
-        return sorted(
-            (json.loads(v) for v in values), key=lambda d: json.dumps(d, sort_keys=True)
-        )
-
-    got_fts = canon(r.value for r in spark.read.parquet(fts_dir).collect())
-    got_geo = canon(r.value for r in spark.read.parquet(geo_dir).collect())
+    got_fts = _canon(r.value for r in spark.read.parquet(fts_dir).collect())
+    got_geo = _canon(r.value for r in spark.read.parquet(geo_dir).collect())
     exp_fts, exp_geo = route_json(cdc)
-    want_fts = canon(r.value for r in fts_wire(exp_fts).collect())
-    want_geo = canon(r.value for r in geo_wire(exp_geo).collect())
+    want_fts = _canon(r.value for r in fts_wire(exp_fts).collect())
+    want_geo = _canon(r.value for r in geo_wire(exp_geo).collect())
     assert got_fts == want_fts
     assert got_geo == want_geo
 
@@ -230,42 +230,26 @@ def test_rocksdb_stateful_stress_state_bounded_by_watermark(spark, sf_dir, tmp_p
 
 
 def test_cdc_pipeline_restart_is_exactly_once(spark, tmp_path):
-    """Restarting the checkpointed pipeline over the same replay dir must
-    not re-emit messages — the exactly-once upgrade over the reference's
-    enable.auto.commit (J:48)."""
-    from mapr_db_cdc_sample_spark.cdc.pipeline import route_json
+    """Starting the pipeline a second time over the same replay dir and
+    sinks must resume from the checkpoint kept beside the FTS sink and
+    re-emit nothing: both sinks hold exactly the batch route — the upgrade
+    over the reference's enable.auto.commit (J:48)."""
+    from mapr_db_cdc_sample_spark.cdc.pipeline import fts_wire, geo_wire, route_json
     from mapr_db_cdc_sample_spark.streaming.cdc_stream import start_json_pipeline
 
     cdc = golden_json_events(spark)
     replay = write_replay(cdc, n_chunks=2, base_dir=str(tmp_path / "replay"))
     fts_dir, geo_dir = str(tmp_path / "fts"), str(tmp_path / "geo")
-    ckpt = str(tmp_path / "ckpt")
 
     for _ in range(2):  # first run drains everything; second must be a no-op
         stream = read_replay(spark, replay, CDC_JSON_SCHEMA, files_per_trigger=1)
-        q = (
-            stream.writeStream.foreachBatch(
-                _route_and_append(fts_dir, geo_dir)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        start_json_pipeline(stream, fts_dir, geo_dir).awaitTermination()
 
-    exp_fts, _ = route_json(cdc)
-    assert spark.read.parquet(fts_dir).count() == exp_fts.count()
-
-
-def _route_and_append(fts_dir, geo_dir):
-    from mapr_db_cdc_sample_spark.cdc.pipeline import fts_wire, geo_wire, route_json
-
-    def process(batch, batch_id):
-        fts, geo = route_json(batch)
-        fts_wire(fts).write.mode("append").parquet(fts_dir)
-        geo_wire(geo).write.mode("append").parquet(geo_dir)
-
-    return process
+    exp_fts, exp_geo = route_json(cdc)
+    for got, want in ((fts_dir, fts_wire(exp_fts)), (geo_dir, geo_wire(exp_geo))):
+        assert _canon(r.value for r in spark.read.parquet(got).collect()) == _canon(
+            r.value for r in want.collect()
+        ), got
 
 
 def test_console_and_parquet_sinks(spark, tmp_path):
