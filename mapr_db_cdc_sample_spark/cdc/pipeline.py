@@ -6,16 +6,25 @@ R1-R15). Everything here is a *projection* — per-record fan-out is at most
 the per-record field accumulation the Java loop does imperatively
 (FtsAndGeoServiceJSONWithCDC.java:118-169) is done with higher-order array
 functions (`filter`/`transform`/`map_from_entries`) on the `changes`
-column. At 100 TB this keeps the whole route map-side and
-whole-stage-codegen'd; the same functions serve batch and foreachBatch
-streaming.
+column. At 100 TB this keeps the whole route map-side, with no
+exchange; the same functions serve batch and streaming.
 
 The reference writes the route twice, once per table type; here both
 lanes share one last-wins field probe (`_last_change`), one
 fields_to_index assembly (`_fields_to_index`) and one FTS projection
 with its delete tombstones (`_fts`). `route_binary` adds only the
-row-key and cell decode; `route_json` adds the insert-document parse and
-the geo route.
+row-key and cell decode; the JSON lane adds the insert-document parse
+and the address probe (`_json_base`) and the geo route.
+
+Each message is defined once: its keep-predicate (`_fts_keep`,
+`_geo_keep`) and its JSON wire value (`_fts_value`, `_geo_value`). Two
+forms of the JSON lane use them:
+- `route_json` returns the typed FTS and geo frames; `fts_wire` and
+  `geo_wire` serialize them (the batch API);
+- `route_json_wire` is the whole lane as one projection to
+  (topic, key, value) rows, at most 2 per record, built without a union.
+  The streaming pipeline plans it once on the stream
+  (streaming/cdc_stream.py) and only splits it by topic per micro-batch.
 
 Observable quirks preserved (SURVEY.md §2.1):
 - case-insensitive field-path match (J:152-158, B:116-120);
@@ -77,26 +86,59 @@ def _fields_to_index(first: Column, last: Column) -> Column:
     return F.map_from_entries(entries)
 
 
+def _live() -> Column:
+    return F.col("operation") != OP_DELETE
+
+
+def _fts_keep() -> Column:
+    """R10/R12 keep-predicate: FTS gets inserts/updates with ≥1 name
+    field, plus all deletes as tombstones (J:197-209)."""
+    return ~_live() | (F.size("fields_to_index") > 0)
+
+
+def _fts_shape(lane: str) -> list[Column]:
+    """The typed FTS columns over a base row: a live message carries
+    `lane` as its `type`; a delete carries only {_id, operation}."""
+    return [
+        F.when(_live(), F.lit(lane)).alias("type"),
+        F.when(_live(), F.col("fields_to_index")).alias("fields_to_index"),
+    ]
+
+
 def _fts(base: DataFrame, lane: str) -> DataFrame:
-    """R10/R12: FTS gets inserts/updates with ≥1 name field, plus all
-    deletes as tombstones {_id, operation} only (J:197-209); `lane` is the
-    `type` a live message carries."""
-    live = F.col("operation") != OP_DELETE
-    return base.where(~live | (F.size("fields_to_index") > 0)).select(
-        "_id",
-        "operation",
-        "ts",
-        F.when(live, F.lit(lane)).alias("type"),
-        F.when(live, F.col("fields_to_index")).alias("fields_to_index"),
+    """Typed FTS messages of a base frame (FIXTURES.md §A4)."""
+    return base.where(_fts_keep()).select("_id", "operation", "ts", *_fts_shape(lane))
+
+
+def _geo_keep() -> Column:
+    """Geo gets inserts/updates that touched address; never deletes
+    (README.md:154: delete notifies FTS only)."""
+    return _live() & F.col("address").isNotNull()
+
+
+def _fts_value() -> Column:
+    """FTS wire value: JSON with null fields omitted — matches the Jackson
+    output of R9 (J:100-114; delete shape J:198-205 has no
+    type/fields_to_index)."""
+    return F.to_json(
+        F.struct("_id", "operation", "type", "fields_to_index"),
+        {"ignoreNullFields": "true"},
     )
 
 
-def route_json(cdc: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """JSON-table lane (FtsAndGeoServiceJSONWithCDC.java).
+def _geo_value() -> Column:
+    """Geo wire value (no `type` field — SURVEY.md §2.1 quirk)."""
+    return F.to_json(F.struct("_id", "operation", "address"), {"ignoreNullFields": "true"})
 
-    Returns (fts_messages, geo_messages) with the typed shapes of
-    FIXTURES.md §A4; serialize with fts_wire/geo_wire for the wire form.
-    """
+
+def _wire(topic: str, value: Column) -> list[Column]:
+    """The (topic, key, value) wire columns of one message."""
+    return [F.lit(topic).alias("topic"), F.col("_id").alias("key"), value.alias("value")]
+
+
+def _json_base(cdc: DataFrame) -> DataFrame:
+    """JSON-lane base rows: (_id, operation, ts, fields_to_index, address),
+    one per changelog record, before either route's keep-predicate."""
     is_ins = F.col("op") == OP_INSERT
     is_upd = F.col("op") == OP_UPDATE
 
@@ -127,7 +169,7 @@ def route_json(cdc: DataFrame) -> tuple[DataFrame, DataFrame]:
         parsed,
     )
 
-    base = cdc.select(
+    return cdc.select(
         F.col("_id"),
         F.col("op").alias("operation"),
         F.col("ts"),
@@ -135,12 +177,38 @@ def route_json(cdc: DataFrame) -> tuple[DataFrame, DataFrame]:
         address.alias("address"),
     )
 
-    # Geo gets inserts/updates that touched address; never deletes
-    # (README.md:154: delete notifies FTS only).
-    geo = base.where((F.col("operation") != OP_DELETE) & F.col("address").isNotNull()).select(
-        "_id", "operation", "ts", "address"
-    )
+
+def route_json(cdc: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """JSON-table lane (FtsAndGeoServiceJSONWithCDC.java).
+
+    Returns (fts_messages, geo_messages) with the typed shapes of
+    FIXTURES.md §A4; serialize with fts_wire/geo_wire for the wire form.
+    """
+    base = _json_base(cdc)
+    geo = base.where(_geo_keep()).select("_id", "operation", "ts", "address")
     return _fts(base, "json"), geo
+
+
+def route_json_wire(cdc: DataFrame) -> DataFrame:
+    """JSON-table lane as ONE projection to (topic, key, value) rows:
+    each record yields its FTS and geo messages (0-2 rows) through
+    `inline(filter(array(fts_msg, geo_msg), isNotNull))` — the same rows
+    as fts_wire(fts) ∪ geo_wire(geo) of route_json, without a union, so
+    a stream is scanned once per consumer, not once per route."""
+    # _fts_keep reads the masked fields_to_index of _fts_shape here; the
+    # two differ only on deletes, which it keeps whatever they carry
+    msgs = _json_base(cdc).select("_id", "operation", "address", *_fts_shape("json"))
+    return msgs.select(
+        F.inline(
+            F.filter(
+                F.array(
+                    F.when(_fts_keep(), F.struct(*_wire(FTS_TOPIC, _fts_value()))),
+                    F.when(_geo_keep(), F.struct(*_wire(GEO_TOPIC, _geo_value()))),
+                ),
+                lambda m: m.isNotNull(),
+            )
+        )
+    )
 
 
 def route_binary(cdc: DataFrame) -> DataFrame:
@@ -167,25 +235,10 @@ def route_binary(cdc: DataFrame) -> DataFrame:
 
 
 def fts_wire(fts: DataFrame) -> DataFrame:
-    """Wire form of FTS messages: (topic, key, value) rows, value = JSON
-    with null fields omitted — matches the Jackson output of R9
-    (J:100-114; delete shape J:198-205 has no type/fields_to_index)."""
-    return fts.select(
-        F.lit(FTS_TOPIC).alias("topic"),
-        F.col("_id").alias("key"),
-        F.to_json(
-            F.struct("_id", "operation", "type", "fields_to_index"),
-            {"ignoreNullFields": "true"},
-        ).alias("value"),
-    )
+    """Wire form of FTS messages: (topic, key, value) rows."""
+    return fts.select(*_wire(FTS_TOPIC, _fts_value()))
 
 
 def geo_wire(geo: DataFrame) -> DataFrame:
-    """Wire form of Geo messages (no `type` field — SURVEY.md §2.1 quirk)."""
-    return geo.select(
-        F.lit(GEO_TOPIC).alias("topic"),
-        F.col("_id").alias("key"),
-        F.to_json(
-            F.struct("_id", "operation", "address"), {"ignoreNullFields": "true"}
-        ).alias("value"),
-    )
+    """Wire form of Geo messages."""
+    return geo.select(*_wire(GEO_TOPIC, _geo_value()))

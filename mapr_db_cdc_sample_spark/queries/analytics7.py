@@ -4971,7 +4971,10 @@ def q535(spark, sf_dir):
 
 # Is daily revenue mean-reverting or a random walk? Regress
 # delta_t = x_t - x_{t-1} on x_{t-1} (the zero-drift DF form): gamma =
-# Sxy_c/Sxx_c and its t-stat from exact pair moments — both
+# Sxy_c/Sxx_c and its t-stat t = gamma / sqrt((Syy_c/Sxx_c - gamma²)
+# / (m-2)) from exact pair moments, with the m-scaled centred sums
+# Sxx_c = m·Sxx - Sx², Syy_c = m·Syy - Sy², Sxy_c = m·Sxy - Sx·Sy (the
+# m cancels in each ratio) — both
 # textually-parallel q207 doubles over integer sums, ROUND(6). A
 # t below ~-2.9 rejects the unit root.
 _DF_ORACLE = _DAILY_CTE + """
@@ -5009,10 +5012,7 @@ SELECT m AS n_pairs,
                            - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
                           / (CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE)
                              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))))
-                    / CAST(m - 2 AS DOUBLE)
-                    * (CAST(m AS DOUBLE)
-                       / (CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE)
-                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))), 6)
+                    / CAST(m - 2 AS DOUBLE)), 6)
            AS t_stat_r6
 FROM pr
 """
@@ -5021,8 +5021,9 @@ FROM pr
 @register("q536_dickey_fuller", oracle=_DF_ORACLE)
 def q536(spark, sf_dir):
     """Zero-drift DF gamma + t-stat from exact pair moments (oracle
-    comment; t = gamma / sqrt((Syy_c/Sxx_c - gamma²)/(m-2) * m/Sxx_c),
-    the simple-regression SE identity on mean-cleared moments)."""
+    comment; t = gamma / sqrt((Syy_c/Sxx_c - gamma²)/(m-2)), the
+    simple-regression SE identity on mean-cleared moments: the m·
+    scaling of Syy_c and Sxx_c cancels in their ratio)."""
     daily = _daily_cents(spark, sf_dir)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
@@ -5054,8 +5055,7 @@ def q536(spark, sf_dir):
             f"ROUND(({gamma})"
             f" / SQRT(((CAST(m AS DOUBLE) * CAST(syy AS DOUBLE)"
             f" - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) / {den}"
-            f" - ({gamma}) * ({gamma})) / CAST(m - 2 AS DOUBLE)"
-            f" * (CAST(m AS DOUBLE) / {den})), 6)"
+            f" - ({gamma}) * ({gamma})) / CAST(m - 2 AS DOUBLE)), 6)"
         ).alias("t_stat_r6"),
     )
 

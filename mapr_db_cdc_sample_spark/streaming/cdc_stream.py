@@ -1,15 +1,17 @@
 """The reference's whole program as ONE Structured Streaming query
-(SURVEY.md §3.4): changelog stream → route (shared batch transform) →
-dual sink via foreachBatch, resumable through a checkpoint kept beside
-the FTS sink.
+(SURVEY.md §3.4): changelog stream → route → dual sink via foreachBatch,
+resumable through a checkpoint kept beside the FTS sink.
 
-The transformation is the same route_json used in batch — written once
-against DataFrames, wrapped here (the foreachBatch body IS the batch
-pipeline). Per-record fan-out stays ≤2 messages; the delete
-short-circuit (no flatten) is inherited from the shared transform.
-`route_json`, `fts_wire` and `geo_wire` are looked up in this module's
-namespace on every micro-batch, so a wrapper set on them here sees each
-batch.
+The route is `route_json_wire`, the JSON lane as one projection from
+changelog records to (topic, key, value) rows, and it is applied to the
+streaming DataFrame once per query: Spark plans it with the query and
+runs it incrementally on each micro-batch. `foreachBatch` only splits the
+routed rows by topic and appends each topic to its sink. Building the
+route inside `foreachBatch` would re-run its Python DataFrame
+construction (thousands of py4j calls for the higher-order functions) on
+every micro-batch, before either sink job could start. Per-record
+fan-out stays ≤2 messages, and the rows equal the batch API's
+fts_wire(route_json) ∪ geo_wire(route_json).
 """
 
 from __future__ import annotations
@@ -17,8 +19,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from ..cdc.pipeline import fts_wire, geo_wire, route_json
+from ..cdc.pipeline import FTS_TOPIC, GEO_TOPIC, route_json_wire
+# unused here; kept as module attributes because perfbench's WRAPPED resolves them from this module
+from ..cdc.pipeline import fts_wire, geo_wire, route_json  # noqa: F401
 
 
 def start_json_pipeline(
@@ -29,6 +34,10 @@ def start_json_pipeline(
 ):
     """Run the JSON-lane CDC pipeline: stream in, two parquet message
     sinks out (stand-ins for the fts_service / geo_service topics).
+
+    The route is built once, here, on the stream (`route_json_wire`); the
+    per-micro-batch body only filters the routed batch by topic and
+    appends each part to its sink.
 
     Delivery semantics: the streaming checkpoint lives at
     `<fts_dir>/_checkpoint` — derived from the sink, as Spark's own
@@ -46,29 +55,26 @@ def start_json_pipeline(
     sequential writes put two full job latencies on the micro-batch
     critical path and blew the ≤ ~800 ms budget (measured 942 ms median
     steady-state; concurrent writes hold it — LATENCY.json).
-    Micro-batches are poll-sized, so recomputing the shared route per
-    sink is cheaper than a persist barrier — safe ONLY because the
-    replay source is deterministic; a nondeterministic transform would
+    Micro-batches are poll-sized, so each sink job recomputing the route
+    over the batch is cheaper than a persist barrier — safe ONLY because
+    the replay source is deterministic; a nondeterministic transform would
     need the persist() barrier back to keep the two sinks consistent."""
+    sinks = ((FTS_TOPIC, fts_dir), (GEO_TOPIC, geo_dir))
 
     def process(batch: DataFrame, batch_id: int) -> None:
         from concurrent.futures import ThreadPoolExecutor
 
-        fts, geo = route_json(batch)
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
             jobs = [
-                pool.submit(
-                    lambda df, d: df.write.mode("append").parquet(d), fts_wire(fts), fts_dir
-                ),
-                pool.submit(
-                    lambda df, d: df.write.mode("append").parquet(d), geo_wire(geo), geo_dir
-                ),
+                pool.submit(batch.where(F.col("topic") == topic).write.mode("append").parquet, d)
+                for topic, d in sinks
             ]
             for j in jobs:
                 j.result()
 
     writer = (
-        cdc_stream.writeStream.foreachBatch(process)
+        route_json_wire(cdc_stream)
+        .writeStream.foreachBatch(process)
         .option("checkpointLocation", os.path.join(fts_dir, "_checkpoint"))
         .outputMode("update")
     )

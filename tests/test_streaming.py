@@ -59,6 +59,50 @@ def test_cdc_stream_equals_batch(spark, tmp_path):
     assert got_geo == want_geo
 
 
+def test_json_wire_route_equals_batch_wire_on_varied_traffic(spark, tmp_path):
+    """On seeded benchmark traffic (deletes, mixed-case and duplicate
+    field paths, records that route nowhere) the one-projection route
+    equals fts_wire(route_json) ∪ geo_wire(route_json) as a multiset of
+    (topic, key, value) rows, and the streaming pipeline over the same
+    file leaves each sink equal to its batch wire form."""
+    import collections
+    import os
+
+    from perfbench import changelog
+
+    from mapr_db_cdc_sample_spark.cdc.pipeline import (
+        fts_wire,
+        geo_wire,
+        route_json,
+        route_json_wire,
+    )
+    from mapr_db_cdc_sample_spark.streaming.cdc_stream import start_json_pipeline
+
+    (tbl,) = changelog.files(5, 1, 2000)
+    assert "RECORD_DELETE" in tbl.column("op").to_pylist()
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    cdc = spark.read.schema(CDC_JSON_SCHEMA).parquet(changelog.write_file(src, 0, tbl))
+
+    fts, geo = route_json(cdc)
+    want_fts, want_geo = fts_wire(fts), geo_wire(geo)
+
+    def rows(df):
+        return collections.Counter(tuple(r) for r in df.collect())
+
+    got = rows(route_json_wire(cdc))
+    assert got == rows(want_fts.unionByName(want_geo))
+    assert {t for t, _, _ in got} == {"fts_service", "geo_service"}
+    assert sum(got.values()) < 2 * tbl.num_rows
+
+    fts_dir, geo_dir = str(tmp_path / "fts"), str(tmp_path / "geo")
+    start_json_pipeline(read_replay(spark, src, CDC_JSON_SCHEMA), fts_dir, geo_dir).awaitTermination()
+    for got_dir, want in ((fts_dir, want_fts), (geo_dir, want_geo)):
+        assert _canon(r.value for r in spark.read.parquet(got_dir).collect()) == _canon(
+            r.value for r in want.collect()
+        ), got_dir
+
+
 def test_tumbling_window_matches_batch(spark, sf_dir):
     from mapr_db_cdc_sample_spark.streaming.windows import tumbling_counts
 

@@ -11,9 +11,11 @@ StreamingQueryProgress reports directly.
 
 `measure()` replays the sf0.001 synthetic changelog one file per
 trigger through the real dual-sink pipeline (streaming/cdc_stream.py)
-and returns the per-batch durations; run as a script it also writes
-LATENCY.json at the repo root (the committed evidence artifact —
-round-5 verdict, Next round #3)."""
+and returns each batch's full StreamingQueryProgress phase breakdown
+(PHASES), the steady-state median of each phase, and the core count the
+session ran on; run as a script it also writes LATENCY.json at the repo
+root (the committed evidence artifact). Set SPARK_GRAFT_CPUS to the
+core count to measure on (default 32)."""
 
 from __future__ import annotations
 
@@ -32,11 +34,14 @@ N_CHUNKS = 24  # replay files == max data micro-batches
 STEADY_TAIL = 8  # steady state: the last K batches (JIT/codegen settled)
 BUDGET_MS = 800
 CADENCE = "500 milliseconds"
+# StreamingQueryProgress.durationMs keys; triggerExecution spans the rest
+PHASES = ("triggerExecution", "addBatch", "queryPlanning", "walCommit", "commitOffsets",
+          "getBatch", "latestOffset")
 
 
 def measure(spark, base_dir: str, timeout_s: float = 120.0) -> dict:
     """Run the JSON CDC pipeline under the 500 ms processingTime trigger
-    and return {cadence, budget_ms, batches: [...], steady: {...}}."""
+    and return {cadence, budget_ms, cores, batches: [...], steady: {...}}."""
     from mapr_db_cdc_sample_spark.cdc.fixtures import synth_cdc_from_events
     from mapr_db_cdc_sample_spark.io import load_tables
     from mapr_db_cdc_sample_spark.sources.replay import read_replay, write_replay
@@ -65,16 +70,17 @@ def measure(spark, base_dir: str, timeout_s: float = 120.0) -> dict:
         {
             "batchId": p["batchId"],
             "numInputRows": p["numInputRows"],
-            "triggerExecution_ms": p["durationMs"]["triggerExecution"],
-            "addBatch_ms": p["durationMs"].get("addBatch"),
+            **{f"{k}_ms": p["durationMs"].get(k) for k in PHASES},
         }
         for p in progress
     ]
-    steady = [b["triggerExecution_ms"] for b in batches[-STEADY_TAIL:]]
+    tail = batches[-STEADY_TAIL:]
+    steady = [b["triggerExecution_ms"] for b in tail]
     return {
         "sf_dir": SF_SMALL,
         "cadence": CADENCE,
         "budget_ms": BUDGET_MS,
+        "cores": spark.sparkContext.defaultParallelism,
         "n_data_batches": len(batches),
         "steady_tail": STEADY_TAIL,
         "batches": batches,
@@ -87,6 +93,10 @@ def measure(spark, base_dir: str, timeout_s: float = 120.0) -> dict:
             ),
             "max_ms": max(steady) if steady else None,
             "within_budget": sum(1 for d in steady if d <= BUDGET_MS),
+            "phase_median_ms": {
+                k: statistics.median(b[f"{k}_ms"] or 0 for b in tail) if tail else None
+                for k in PHASES
+            },
         },
     }
 
@@ -107,7 +117,8 @@ def main() -> None:
         out = measure(spark, td)
     with open(os.path.join(REPO, "LATENCY.json"), "w") as fh:
         json.dump(out, fh, indent=1)
-    print(json.dumps({"steady": out["steady"], "n": out["n_data_batches"]}))
+    print(json.dumps({"steady": out["steady"], "n": out["n_data_batches"],
+                      "cores": out["cores"]}))
 
 
 if __name__ == "__main__":
