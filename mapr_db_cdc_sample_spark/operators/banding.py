@@ -1,5 +1,17 @@
-"""LSH band bucketing with a bucket-size cap — the shared candidate
-stage behind q44_minhash_lsh_pairs and operators/dedup_pipeline.
+"""MinHash LSH candidate generation with a bucket-size cap — the shared
+candidate stage behind the near-dup queries and
+operators/dedup_pipeline.
+
+One feed: signature (mh0..mh7) → ``minhash_bands`` (4 bands of 2) →
+``band_buckets`` (capped) → ``bucket_pairs`` (distinct doc_a < doc_b).
+Two entry points build it:
+
+- ``candidate_pairs``: the pairs alone, signatures from the
+  explode-and-aggregate ``minhash_signatures``;
+- ``candidate_grams``: the candidate-verify feed. ONE persisted
+  ``gram_sets`` pass yields the signatures as a cache-local projection
+  and joins both docs' gram sets onto each pair, so exact verification
+  (Jaccard, containment) runs on candidates only.
 
 Why the cap: a boilerplate cluster (millions of near-identical docs —
 routine in web corpora) lands every member in ONE band bucket. Naive
@@ -18,10 +30,7 @@ that partitioning (the groupBy after the window is exchange-free —
 EnsureRequirements sees hashpartitioning(band) already satisfied).
 Mega-bucket rows are buffered only by WindowExec's spillable row array
 (ExternalAppendOnlyUnsafeRowArray), never by an aggregation buffer, so
-the memory bound holds. Crucially this evaluates the expensive
-signature subtree ONCE — the previous count-then-join form computed
-the whole shingle->md5->minhash pipeline twice (once per join side),
-which doubled q44's cost at every scale.
+the memory bound holds, and the signature subtree is evaluated once.
 
 Truncation is never silent: `oversized_buckets` reports every dropped
 band with its member count, and the q86 registry entry exposes the
@@ -171,3 +180,19 @@ def signatures_from_grams(grams: DataFrame) -> DataFrame:
         "doc_id",
         *[_xor_min(seed).alias(f"mh{j}") for j, seed in enumerate(T.MINHASH_SEEDS)],
     )
+
+
+def candidate_grams(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The MinHash candidate-verify feed: corpus (doc_id, text) ->
+    (sig, pairs) from ONE persisted gram_sets pass. sig is (doc_id,
+    mh0..mh7), a cache-local projection of the grams; pairs is every
+    distinct capped-bucket candidate (doc_a < doc_b) with both docs'
+    gram sets (ga, gb) joined on, so exact verification runs on
+    candidates only."""
+    grams = gram_sets(corpus)
+    grams.persist()
+    sig = signatures_from_grams(grams)
+    cands = bucket_pairs(band_buckets(minhash_bands(sig)))
+    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("ga"))
+    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gb"))
+    return sig, cands.join(a, "doc_a").join(b, "doc_b")

@@ -37,41 +37,28 @@ from . import banding
 CC_PARTITIONS = "4"
 
 
-def duplicate_edges(
-    corpus: DataFrame,
-    jaccard_threshold: float = 0.5,
-    bucket_cap: int = banding.DEFAULT_BUCKET_CAP,
-) -> DataFrame:
+def duplicate_edges(corpus: DataFrame, jaccard_threshold: float = 0.5) -> DataFrame:
     """(doc_a, doc_b, jaccard) for verified near-duplicate pairs.
-    corpus: (doc_id, text). Band buckets above bucket_cap are excluded
-    from candidate generation (see operators/banding.py); audit the
-    exclusions with banding.oversized_buckets on the same corpus.
+    corpus: (doc_id, text). Band buckets above banding.DEFAULT_BUCKET_CAP
+    are excluded from candidate generation (see operators/banding.py);
+    audit the exclusions with banding.oversized_buckets on the same
+    corpus.
 
-    One tokenize+shingle+md5 pass feeds everything: the persisted
-    gram_sets table yields minhash signatures as a cache-local
-    projection (no explode/shuffle) AND the exact-Jaccard gram sets —
-    which intersect as long arrays, far cheaper than strings. Jaccard on
-    hashed shingles equals Jaccard on shingles (injective up to 60-bit
-    collisions).
+    Candidates and their gram sets come from banding.candidate_grams:
+    one tokenize+shingle+md5 pass feeds the signatures AND the
+    exact-Jaccard gram sets. Jaccard on hashed shingles equals Jaccard
+    on shingles (injective up to 60-bit collisions).
 
     The corpus is repartitioned first: the tokenize+md5 pass is the CPU
     bulk of the whole pipeline and must use every core, but a small
     parquet input is often one row-group = ONE partition (measured 6.3s
     single-core vs 0.4s repartitioned on 5k docs)."""
     corpus = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    grams = banding.gram_sets(corpus)
-    grams.persist()
-    sig = banding.signatures_from_grams(grams)
-    bands = banding.minhash_bands(sig.where(F.col("mh0").isNotNull()))
-    cands = banding.bucket_pairs(banding.band_buckets(bands, bucket_cap))
-    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("ga"))
-    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gb"))
+    _sig, pairs = banding.candidate_grams(corpus)
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     uni = F.size("ga") + F.size("gb") - inter
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
+        pairs.select(
             "doc_a",
             "doc_b",
             F.when(uni > 0, F.round(inter.cast("double") / uni, 4)).otherwise(0.0).alias(

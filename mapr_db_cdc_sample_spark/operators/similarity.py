@@ -1,40 +1,71 @@
-"""Vectorized (Arrow) similarity kernels — the pandas_udf alternative to
-the expression-based functions/vectors.py. Used when the per-row work is
-heavy enough that NumPy's SIMD beats codegen'd scalar folds; results are
-identical after round(4)."""
+"""Vectorized (Arrow/NumPy) cosine similarity kernels: one scorer, one
+top-k cell, one top-k reduce.
+
+Scorer: ``_cos_s4`` turns two vector blocks into round(cosine, 4) as
+int64 in 1e-4 units, ties half away from zero (Spark's HALF_UP ROUND and
+DuckDB's ROUND agree on that tie class; np.round is half-to-even). A
+zero-norm vector's NaN cosine scores ``_NAN_S4``, above every real
+cosine, as NaN sorts in Spark and DuckDB. ``_sim`` turns scores into the
+double ``sim`` column (NaN for the sentinel). Rankings compare exact
+ints, so partitioning can never reorder ties.
+
+Cell kernels run as one ``applyInPandas`` group per bounded (anchor ×
+candidate) cell of a grid, unpacked by ``_cell_sides``:
+
+- ``knn_block_topk``: ``_block_grid`` → ``_topk_cell`` → ``_topk_reduce``;
+- ``ann_hard_negatives``: ``_ivf_probe_grid`` → the same top-k cell with
+  k=1 across labels → the same reduce;
+- ``sim_block_pairs``: ``_block_grid`` → a threshold selection.
+
+``topk_cosine_pandas`` scores one query vector through the same scorer.
+Results equal the all-pairs SQL twins' after round(4)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+#: score of a NaN cosine (a zero-norm vector): real 1e4-scaled cosines
+#: lie in [-10000, 10000], and both SQL engines rank NaN greatest
+_NAN_S4 = 10001
 
-def _round4_half_away(x: np.ndarray) -> np.ndarray:
-    """round(x, 4) with exact-midpoint ties AWAY from zero — the tie
-    class both SQL engines use (Spark F.round is HALF_UP, DuckDB rounds
-    half away from zero), unlike np.round's half-to-even. Same FP
-    boundary the sqeuclid_milli kernel already handles; cosine doubles
-    rarely land on scaled midpoints, but when one does the engines and
-    this kernel now agree. NaN propagates (trunc(NaN) = NaN)."""
-    return np.trunc(x * 1e4 + np.copysign(0.5, x)) / 1e4
+
+def _cos_s4(a: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """(len(a), len(c)) int64 scores: round(cosine(a_i, c_j), 4) · 1e4,
+    exact-midpoint ties away from zero, NaN → ``_NAN_S4``."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        raw = (a @ c.T) / (
+            np.sqrt((a * a).sum(axis=1))[:, None]
+            * np.sqrt((c * c).sum(axis=1))[None, :]
+        )
+        s4 = np.trunc(raw * 1e4 + np.copysign(0.5, raw))
+    return np.where(np.isfinite(s4), s4, _NAN_S4).astype(np.int64)
+
+
+def _sim(s4: np.ndarray) -> pd.api.extensions.ExtensionArray:
+    """The ``sim`` output column of scores from ``_cos_s4``: NaN for
+    ``_NAN_S4``, as an Arrow-backed array. PySpark's pandas→Arrow
+    conversion turns a NumPy column's NaN into NULL, and NULL sorts
+    LAST under ``sim DESC`` where NaN sorts first."""
+    return pd.arrays.ArrowExtensionArray(
+        pa.array(np.where(s4 == _NAN_S4, np.nan, s4 / 1e4))
+    )
 
 
 def cosine_to_query_udf(query_vec: list[float]):
     """Build a pandas_udf computing cosine(embedding, query) in float64.
     The query vector is closed over → serialized once per task, not per
     row; batches arrive as Arrow arrays."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
+    q = np.asarray(query_vec, dtype=np.float64)[None, :]
 
     @pandas_udf("double")
     def cos(batch: pd.Series) -> pd.Series:
         m = np.vstack(batch.map(lambda a: np.asarray(a, dtype=np.float64)))
-        dots = m @ q
-        norms = np.sqrt((m * m).sum(axis=1))
-        return pd.Series(_round4_half_away(dots / (norms * qn)))
+        return pd.Series(_sim(_cos_s4(m, q)[:, 0]))
 
     return cos
 
@@ -52,30 +83,157 @@ def topk_cosine_pandas(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10
     )
 
 
-def pairwise_cosine_udf():
-    """pandas_udf computing cosine(a, b) over two array columns in
-    float64, rounded to 4 — the vectorized twin of
-    functions/vectors.cosine for PAIR frames (q492/q512's 4M-pair
-    stages ran the zip_with fold interpreted at ~10us/pair; the Arrow
-    kernel batches the same arithmetic through NumPy SIMD)."""
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.vstack(a.map(lambda x: np.asarray(x, dtype=np.float64)))
-        mb = np.vstack(b.map(lambda x: np.asarray(x, dtype=np.float64)))
-        dots = (ma * mb).sum(axis=1)
-        na = np.sqrt((ma * ma).sum(axis=1))
-        nb = np.sqrt((mb * mb).sum(axis=1))
-        return pd.Series(_round4_half_away(dots / (na * nb)))
-
-    return cos
-
-
 #: max vectors per block in the blocked kNN kernel — bounds a single
 #: task's matmul to BLOCK×BLOCK (~128MB of float64 sims at 4096) and a
 #: single group's Arrow payload to 2·BLOCK vectors, independent of
 #: dataset size.
 KNN_BLOCK_SIZE = 4096
+
+#: anchors per slab inside a cell: every temporary stays ~STRIP×m and
+#: freed slabs are recycled instead of faulting fresh pages (a
+#: first-touch 128 MB NumPy alloc cost ~10 s on a demand-paging host, a
+#: warm one 13 ms), so per-task memory stays ~16 MB at any block_size.
+_STRIP = 512
+
+
+def _cell_sides(pdf: pd.DataFrame):
+    """(a_ids, a_lab, a_mat, c_ids, c_lab, c_mat) of one grid cell, the
+    candidates sorted by id so that position order is id order; None
+    when either side is empty."""
+    sides = []
+    for flag in (1, 0):
+        p = pdf[pdf["is_anchor"] == flag]
+        if p.empty:
+            return None
+        sides.append(
+            (
+                p["vec_id"].to_numpy(dtype=np.int64),
+                p["label"].to_numpy(dtype=np.int64),
+                np.vstack(
+                    p["embedding"].map(lambda x: np.asarray(x, dtype=np.float64))
+                ),
+            )
+        )
+    (a_ids, a_lab, a_mat), (c_ids, c_lab, c_mat) = sides
+    order = np.argsort(c_ids, kind="stable")
+    return a_ids, a_lab, a_mat, c_ids[order], c_lab[order], c_mat[order]
+
+
+_TOPK_SCHEMA = "anchor bigint, la bigint, neighbor bigint, lb bigint, sim double"
+
+
+def _topk_cell(
+    k: int,
+    cross_label_only: bool = False,
+    same_label_only: bool = False,
+    metric: str = "cosine_r4",
+):
+    """The ``applyInPandas`` function ``cell``: per anchor of one grid
+    cell, its top-k candidates (never itself) as ``_TOPK_SCHEMA`` rows.
+
+    Ranking key: packed (score, position) int64. Candidates are sorted
+    by id, so the low POS_BITS encode the id ASC tiebreak exactly, and
+    argpartition/argsort run all-C along axis=1 (a per-anchor Python
+    lexsort loop was ~90% of cell CPU at sf1: 35 s vs 2 s of matmul).
+    POS_BITS=17 bounds cells to 131072 candidates; the score field then
+    needs |score| < 2^46 ≈ 7e13, which holds for cosine scores and for
+    sqeuclid milli distances (<= ~2e13 per the metric contract)."""
+    POS_BITS = 17
+    BAD = np.iinfo(np.int64).max
+
+    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        sides = _cell_sides(pdf)
+        if sides is None:
+            return pd.DataFrame({c: [] for c in ("anchor", "la", "neighbor", "lb", "sim")})
+        a_ids, a_lab, a_mat, c_ids, c_lab, c_mat = sides
+        m = len(c_ids)
+        # block_size is a public parameter and hash skew is unguarded:
+        # a cell with >= 2^POS_BITS candidates would silently overflow
+        # the position bits into the score field and corrupt the top-k
+        # ranking — fail loudly instead
+        if m >= (1 << POS_BITS):
+            raise ValueError(
+                f"candidate block holds {m} vectors >= 2^{POS_BITS} "
+                f"= {1 << POS_BITS}; packed (score, pos) ranking keys "
+                "would overflow — lower block_size (or raise POS_BITS)"
+            )
+        pos = np.arange(m, dtype=np.int64)
+        kk = min(k, m)
+        if metric == "sqeuclid_milli":
+            # round HALF AWAY FROM ZERO, as both SQL ROUNDs do on exact
+            # .5 ties (float32 odd multiples of 1/16 land on them); keep
+            # the quantized vectors in FLOAT64: every product and 64-term
+            # dot stays an exact integer below 2^53 (milli values^2 · dim
+            # <= ~2e13 per the metric contract), and the cross-term runs
+            # through BLAS dgemm — an int64 matmul falls back to NumPy's
+            # naive loop, ~20x slower per cell
+            qa_all, qc = (np.trunc(x * 1000 + np.copysign(0.5, x)) for x in (a_mat, c_mat))
+            qc_sq = (qc * qc).sum(axis=1)
+        frames = []
+        for s in range(0, len(a_ids), _STRIP):
+            sl = slice(s, s + _STRIP)
+            ids_s, lab_s = a_ids[sl], a_lab[sl]
+            if metric == "sqeuclid_milli":
+                qa = qa_all[sl]
+                score = (
+                    (qa * qa).sum(axis=1)[:, None]
+                    + qc_sq[None, :]
+                    - 2 * (qa @ qc.T)
+                ).astype(np.int64)  # exact integer-valued doubles -> int64
+                key = (score << POS_BITS) + pos[None, :]
+            else:
+                score = _cos_s4(a_mat[sl], c_mat)
+                key = ((-score) << POS_BITS) + pos[None, :]  # sim DESC, id ASC
+            bad = c_ids[None, :] == ids_s[:, None]
+            if cross_label_only:
+                bad |= c_lab[None, :] == lab_s[:, None]
+            elif same_label_only:
+                bad |= c_lab[None, :] != lab_s[:, None]
+            key[bad] = BAD
+            if kk < m:
+                part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
+            else:
+                part = np.broadcast_to(pos[None, :], key.shape)
+            sub = np.take_along_axis(key, part, axis=1)
+            ord2 = np.argsort(sub, axis=1, kind="stable")[:, :kk]
+            idx = np.take_along_axis(part, ord2, axis=1)
+            chosen = np.take_along_axis(key, idx, axis=1)
+            rows, cols = np.nonzero(chosen != BAD)
+            sel = idx[rows, cols]
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "anchor": ids_s[rows],
+                        "la": lab_s[rows],
+                        "neighbor": c_ids[sel],
+                        "lb": c_lab[sel],
+                        "sim": score[rows, sel],
+                    }
+                )
+            )
+        out = pd.concat(frames, ignore_index=True)
+        score = out["sim"].to_numpy()
+        out["sim"] = score.astype(np.float64) if metric == "sqeuclid_milli" else _sim(score)
+        return out
+
+    return cell
+
+
+def _topk_reduce(per_cell: DataFrame, k: int, metric: str = "cosine_r4") -> DataFrame:
+    """Global top-k per anchor from the per-cell top-k rows. The ranking
+    (score, then neighbor id ASC) is a total order, so every global
+    top-k row is inside its own cell's top-k and the reduce is exact."""
+    order = (
+        [F.col("sim").asc(), F.col("neighbor")]
+        if metric == "sqeuclid_milli"
+        else [F.col("sim").desc(), F.col("neighbor")]
+    )
+    w = Window.partitionBy("anchor").orderBy(*order)
+    return (
+        per_cell.withColumn("_rk", F.row_number().over(w))
+        .where(F.col("_rk") <= k)
+        .drop("_rk")
+    )
 
 
 def _block_grid(
@@ -158,12 +316,9 @@ def knn_block_topk(
     Anchors and candidates are each hashed into ceil(n/block_size)
     blocks by ``vec_id % B``; every (anchor-block × candidate-block)
     cell is ONE ``applyInPandas`` group that does a single NumPy matmul
-    (≤ block_size² sims) and emits that cell's per-anchor top-k; a final
-    window over ``anchor`` reduces the B_c·k candidates per anchor to
-    the global top-k. Because the ranking order — round(sim, 4) FIRST,
-    then (sim DESC, neighbor id ASC) — is a total order, every global
-    top-k row is inside its own cell's top-k, so the reduce is exact and
-    the hashes match the all-pairs SQL twins (q492/q512) unchanged.
+    (≤ block_size² sims) and emits that cell's per-anchor top-k
+    (``_topk_cell``); ``_topk_reduce`` then keeps the global top-k per
+    anchor, so the hashes match the all-pairs SQL twins (q492/q512).
 
     ``metric`` selects the scoring contract: ``cosine_r4`` (default)
     ranks by round(cosine, 4) DESC then neighbor id — the q492/q512
@@ -172,174 +327,28 @@ def knn_block_topk(
     ASC then neighbor id (dot products <= ~2e13 stay exact in int64 and
     in the double-typed `sim` column) — the q576 LOF twin.
 
-    Scale posture: no driver collect, no O(dataset) closure/broadcast —
-    the round-8 form shipped the FULL vector table in every task closure
-    (flagged weak in VERDICT r8). Here shuffle volume is n·(B_a + B_c)
-    vector rows into the grid plus n·B_c·k scored rows out of it, and
-    per-task memory is bounded by ``block_size`` regardless of n. At
-    fleet scale an IVF/LSH index (q52/q135) replaces this exact
-    baseline; this kernel is the recall oracle for it.
+    Scale posture: no driver collect, no O(dataset) closure/broadcast.
+    Shuffle volume is n·(B_a + B_c) vector rows into the grid plus
+    n·B_c·k scored rows out of it, and per-task memory is bounded by
+    ``block_size`` regardless of n. At fleet scale an IVF index
+    (``ann_hard_negatives``) replaces this exact baseline; this kernel
+    is the recall oracle for it.
 
     ``same_label_only`` restricts anchors and candidates to the SAME
     label (the q286 graph contract, the complement of
     ``cross_label_only``): the label joins the grid key, so each cell
     holds one label's block pair and the matmul never crosses labels —
-    per-cell work drops from n² to Σ n_label², and ``nb`` is sized from
-    the LARGEST label population rather than n."""
+    per-cell work drops from n² to Σ n_label²."""
     if cross_label_only and same_label_only:
         raise ValueError("cross_label_only and same_label_only are exclusive")
     gridded, keys, nb = _block_grid(embeddings, block_size, same_label_only)
-    out_schema = (
-        "anchor bigint, la bigint, neighbor bigint, lb bigint, sim double"
+    per_cell = gridded.groupBy(*keys).applyInPandas(
+        _topk_cell(k, cross_label_only, same_label_only, metric), _TOPK_SCHEMA
     )
-
-    # packed (score, position) int64 ranking key: candidates are sorted
-    # by id once per cell, so the low POS_BITS encode the id ASC
-    # tiebreak exactly; argpartition/argsort then run all-C along axis=1
-    # — the r10 per-anchor Python lexsort loop was ~90% of cell CPU at
-    # sf1 (measured 35s vs 2s of matmul). POS_BITS=17 bounds blocks to
-    # 131072 vectors (block_size is 4096); the score field then needs
-    # |score| < 2^46 ≈ 7e13 — cosine s_int <= 10001, sqeuclid milli
-    # distances <= ~2e13 per the metric contract.
-    #
-    # Anchors are processed in STRIP-row slabs so every temporary stays
-    # ~STRIP×block_size; freed slabs are recycled by the allocator
-    # instead of faulting fresh pages. That matters twice: per-task
-    # memory is bounded at ~16 MB regardless of block_size, and on
-    # cold-memory hosts (this sandbox demand-pages at ~300us/page —
-    # measured: a FIRST-touch 128 MB numpy alloc costs ~10 s while a
-    # warm one costs 13 ms) a full-cell key matrix made each worker pay
-    # tens of seconds of page faults before computing anything.
-    POS_BITS = 17
-    BAD = np.iinfo(np.int64).max
-    STRIP = 512
-
-    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "anchor": pd.Series(dtype=np.int64),
-                "la": pd.Series(dtype=np.int64),
-                "neighbor": pd.Series(dtype=np.int64),
-                "lb": pd.Series(dtype=np.int64),
-                "sim": pd.Series(dtype=np.float64),
-            }
-        )
-        a_pd = pdf[pdf["is_anchor"] == 1]
-        c_pd = pdf[pdf["is_anchor"] == 0]
-        if a_pd.empty or c_pd.empty:
-            return empty
-        a_ids = a_pd["vec_id"].to_numpy(dtype=np.int64)
-        a_lab = a_pd["label"].to_numpy(dtype=np.int64)
-        a_mat = np.vstack(
-            a_pd["embedding"].map(lambda x: np.asarray(x, dtype=np.float64))
-        )
-        c_ids = c_pd["vec_id"].to_numpy(dtype=np.int64)
-        c_lab = c_pd["label"].to_numpy(dtype=np.int64)
-        c_mat = np.vstack(
-            c_pd["embedding"].map(lambda x: np.asarray(x, dtype=np.float64))
-        )
-        order = np.argsort(c_ids, kind="stable")
-        c_ids, c_lab, c_mat = c_ids[order], c_lab[order], c_mat[order]
-        m = len(c_ids)
-        # block_size is a public parameter and hash skew is unguarded:
-        # a cell with >= 2^POS_BITS candidates would silently overflow
-        # the position bits into the score field and corrupt the top-k
-        # ranking — fail loudly instead (ADVICE r11)
-        if m >= (1 << POS_BITS):
-            raise ValueError(
-                f"candidate block holds {m} vectors >= 2^{POS_BITS} "
-                f"= {1 << POS_BITS}; packed (score, pos) ranking keys "
-                "would overflow — lower block_size (or raise POS_BITS)"
-            )
-        pos = np.arange(m, dtype=np.int64)
-        kk = min(k, m)
-        if metric == "sqeuclid_milli":
-            # round HALF AWAY FROM ZERO, not np.round's half-to-even:
-            # both SQL ROUNDs (Spark HALF_UP, DuckDB) go away from zero
-            # on exact .5 ties, and float32 values like odd multiples of
-            # 1/16 land exactly on x*1000 = .5 boundaries
-            # keep the quantized vectors in FLOAT64: every product and
-            # 64-term dot stays an exact integer below 2^53 (milli
-            # values ^2 * dim <= ~2e13 per the metric contract), and the
-            # cross-term then runs through BLAS dgemm — an int64 matmul
-            # falls back to NumPy's naive loop, ~20x slower per cell
-            qa_all = np.trunc(a_mat * 1000 + np.copysign(0.5, a_mat))
-            qc = np.trunc(c_mat * 1000 + np.copysign(0.5, c_mat))
-            qc_sq = (qc * qc).sum(axis=1)
-        else:
-            a_nrm_all = np.sqrt((a_mat * a_mat).sum(axis=1))
-            c_nrm = np.sqrt((c_mat * c_mat).sum(axis=1))
-        frames = []
-        for s in range(0, len(a_ids), STRIP):
-            sl = slice(s, s + STRIP)
-            ids_s, lab_s = a_ids[sl], a_lab[sl]
-            if metric == "sqeuclid_milli":
-                qa = qa_all[sl]
-                score = (
-                    (qa * qa).sum(axis=1)[:, None]
-                    + qc_sq[None, :]
-                    - 2 * (qa @ qc.T)
-                ).astype(np.int64)  # exact integer-valued doubles -> int64
-                key = (score << POS_BITS) + pos[None, :]
-            else:
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    raw = (a_mat[sl] @ c_mat.T) / (
-                        a_nrm_all[sl][:, None] * c_nrm[None, :]
-                    )
-                    s_f = np.trunc(raw * 1e4 + np.copysign(0.5, raw))
-                # zero-norm vectors yield NaN cosines; both SQL engines
-                # rank NaN GREATEST, above every real sim (ADVICE r10)
-                score = np.where(np.isfinite(s_f), s_f, 10001.0).astype(np.int64)
-                key = ((-score) << POS_BITS) + pos[None, :]  # sim DESC, id ASC
-            bad = c_ids[None, :] == ids_s[:, None]
-            if cross_label_only:
-                bad |= c_lab[None, :] == lab_s[:, None]
-            elif same_label_only:
-                bad |= c_lab[None, :] != lab_s[:, None]
-            key[bad] = BAD
-            if kk < m:
-                part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            else:
-                part = np.broadcast_to(pos[None, :], key.shape)
-            sub = np.take_along_axis(key, part, axis=1)
-            ord2 = np.argsort(sub, axis=1, kind="stable")[:, :kk]
-            idx = np.take_along_axis(part, ord2, axis=1)
-            chosen = np.take_along_axis(key, idx, axis=1)
-            rows, cols = np.nonzero(chosen != BAD)
-            sel = idx[rows, cols]
-            if metric == "sqeuclid_milli":
-                sim_out = score[rows, sel].astype(np.float64)
-            else:
-                s_sel = score[rows, sel].astype(np.float64)
-                sim_out = np.where(s_sel > 10000.5, np.nan, s_sel / 1e4)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "anchor": ids_s[rows],
-                        "la": lab_s[rows],
-                        "neighbor": c_ids[sel],
-                        "lb": c_lab[sel],
-                        "sim": sim_out,
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    per_cell = gridded.groupBy(*keys).applyInPandas(cell, out_schema)
     if nb == 1:
         # single candidate block: each cell's top-k IS the global top-k
         return per_cell
-    order = (
-        [F.col("sim").asc(), F.col("neighbor")]
-        if metric == "sqeuclid_milli"
-        else [F.col("sim").desc(), F.col("neighbor")]
-    )
-    w = Window.partitionBy("anchor").orderBy(*order)
-    return (
-        per_cell.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    return _topk_reduce(per_cell, k, metric)
 
 
 def sim_block_pairs(
@@ -349,52 +358,30 @@ def sim_block_pairs(
     block_size: int = KNN_BLOCK_SIZE,
 ) -> DataFrame:
     """All pairs (vec_a < vec_b, sim) with round(cosine, 4) > threshold
-    — the thresholded sibling of knn_block_topk, same distributed
-    block-nested-loop grid. The q51/q280 near-dup pair stage ran as a
-    row-expanded same-label self-join, materializing Σ n_label² pair
-    ROWS through the shuffle (12.7x at 10x data, BENCH_SF1 r9 — one
-    decade from the q286 cliff); here each cell is one bounded NumPy
-    matmul and only the pairs ABOVE threshold (output-proportional)
-    ever become rows. A pair (u, v) with u < v is emitted exactly once
-    — by the single cell (blk(u), blk(v)) whose anchor side holds u —
-    so no cross-cell dedup is needed. Pair set and round(4) sims are
-    identical to the self-join's, so the unchanged all-pairs oracles
-    keep proving exactness at every SF."""
+    — the thresholded sibling of knn_block_topk on the same
+    ``_block_grid``. Each cell is one bounded NumPy matmul and only the
+    pairs ABOVE threshold (output-proportional) ever become rows; a
+    row-expanded same-label self-join would shuffle Σ n_label² pair
+    rows. A pair (u, v) with u < v is emitted exactly once — by the
+    single cell (blk(u), blk(v)) whose anchor side holds u — so no
+    cross-cell dedup is needed. Pair set and round(4) sims equal the
+    self-join's, so the all-pairs oracles (q51/q280) prove exactness
+    at every SF."""
     gridded, keys, _nb = _block_grid(
         embeddings, block_size, same_label_only, need_max=False
     )
-    out_schema = "vec_a bigint, vec_b bigint, sim double"
 
     def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        a_pd = pdf[pdf["is_anchor"] == 1]
-        c_pd = pdf[pdf["is_anchor"] == 0]
-        if a_pd.empty or c_pd.empty:
+        sides = _cell_sides(pdf)
+        if sides is None:
             return pd.DataFrame({c: [] for c in ("vec_a", "vec_b", "sim")})
-        a_ids = a_pd["vec_id"].to_numpy(dtype=np.int64)
-        a_lab = a_pd["label"].to_numpy(dtype=np.int64)
-        a_mat = np.vstack(
-            a_pd["embedding"].map(lambda x: np.asarray(x, dtype=np.float64))
-        )
-        c_ids = c_pd["vec_id"].to_numpy(dtype=np.int64)
-        c_lab = c_pd["label"].to_numpy(dtype=np.int64)
-        c_mat = np.vstack(
-            c_pd["embedding"].map(lambda x: np.asarray(x, dtype=np.float64))
-        )
-        a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1))
-        c_nrm = np.sqrt((c_mat * c_mat).sum(axis=1))
-        # strip-wise slabs, same rationale as knn_block_topk's cell:
-        # bounded temporaries that the allocator recycles
+        a_ids, a_lab, a_mat, c_ids, c_lab, c_mat = sides
         frames = []
-        for s in range(0, len(a_ids), 512):
-            sl = slice(s, s + 512)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sims = _round4_half_away(
-                    (a_mat[sl] @ c_mat.T)
-                    / (a_nrm[sl][:, None] * c_nrm[None, :])
-                )
-            # zero-norm vectors yield NaN cosines; both SQL engines
-            # treat NaN as GREATER than the threshold: keep those pairs
-            ii, jj = np.nonzero((sims > threshold) | np.isnan(sims))
+        for s in range(0, len(a_ids), _STRIP):
+            sl = slice(s, s + _STRIP)
+            s4 = _cos_s4(a_mat[sl], c_mat)
+            # a NaN (zero-norm) sim ranks above any threshold: keep it
+            ii, jj = np.nonzero((s4 / 1e4 > threshold) | (s4 == _NAN_S4))
             ids_s, lab_s = a_ids[sl], a_lab[sl]
             keep = ids_s[ii] < c_ids[jj]
             if same_label_only:
@@ -402,12 +389,16 @@ def sim_block_pairs(
             ii, jj = ii[keep], jj[keep]
             frames.append(
                 pd.DataFrame(
-                    {"vec_a": ids_s[ii], "vec_b": c_ids[jj], "sim": sims[ii, jj]}
+                    {"vec_a": ids_s[ii], "vec_b": c_ids[jj], "sim": s4[ii, jj]}
                 )
             )
-        return pd.concat(frames, ignore_index=True)
+        out = pd.concat(frames, ignore_index=True)
+        out["sim"] = _sim(out["sim"].to_numpy())
+        return out
 
-    return gridded.groupBy(*keys).applyInPandas(cell, out_schema)
+    return gridded.groupBy(*keys).applyInPandas(
+        cell, "vec_a bigint, vec_b bigint, sim double"
+    )
 
 
 # --------------------------- IVF-probed hard negatives (q492's scale path)
@@ -465,19 +456,12 @@ def _ivf_probe_grid(
     # (ties -> lowest cell id via lexsort), cell membership = probes[0]
     C = np.array([c for _, c in centroids], dtype=np.float64)
     cids = np.array([int(i) for i, _ in centroids], dtype=np.int64)
-    cn = np.sqrt((C * C).sum(axis=1))
 
     @pandas_udf("array<int>")
     def probes(batch: pd.Series) -> pd.Series:
         X = np.vstack(batch.map(lambda a: np.asarray(a, dtype=np.float64)))
-        with np.errstate(invalid="ignore", divide="ignore"):
-            raw = (X @ C.T) / (
-                np.sqrt((X * X).sum(axis=1))[:, None] * cn[None, :]
-            )
-        s4 = np.trunc(raw * 1e4 + np.copysign(0.5, raw))
-        s4 = np.where(np.isfinite(s4), s4, 10001.0)
         # sim DESC, centroid id ASC — packed key, all-C argsort
-        key = (-s4.astype(np.int64) << 20) + np.arange(len(cids))[None, :]
+        key = (-_cos_s4(X, C) << 20) + np.arange(len(cids))[None, :]
         top = np.argsort(key, axis=1, kind="stable")[:, : int(p)]
         return pd.Series(list(cids[top].astype(np.int32)))
 
@@ -524,6 +508,7 @@ def _ivf_probe_grid(
     return cand.unionByName(anchors), n_cells, p
 
 
+
 def ann_hard_negatives(
     embeddings: DataFrame,
     cell_rows: int = 256,
@@ -541,101 +526,15 @@ def ann_hard_negatives(
     q38. Work is n·n_probe·cell_rows·dim — LINEAR in n with fixed
     probe count and cell size (C grows with n), vs the oracle's n²·dim.
 
-    Same determinism discipline as knn_block_topk: integer 1e4-scaled
-    half-away-rounded cosines end-to-end (the global per-anchor max
-    compares exact ints, so partitioning can't reorder ties), id-ASC
-    tiebreaks, zero-norm NaN ranks greatest. Returns (anchor, la,
+    The exact kernel's top-k cell (k=1, cross-label) and reduce run
+    over the IVF grid instead of the block grid, so scoring, ties and
+    the zero-norm NaN rule are the exact kernel's. Returns (anchor, la,
     hard_neg, lb, sim) for every anchor with at least one cross-label
     candidate in a probed cell."""
     gridded, _n_cells, _p = _ivf_probe_grid(
         embeddings, cell_rows, n_probe, train_iters, train_sample
     )
-    out_schema = "anchor bigint, la bigint, neg bigint, lb bigint, s4 bigint"
-
-    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "anchor": pd.Series(dtype=np.int64),
-                "la": pd.Series(dtype=np.int64),
-                "neg": pd.Series(dtype=np.int64),
-                "lb": pd.Series(dtype=np.int64),
-                "s4": pd.Series(dtype=np.int64),
-            }
-        )
-        a_pd = pdf[pdf["is_anchor"] == 1]
-        c_pd = pdf[pdf["is_anchor"] == 0]
-        if a_pd.empty or c_pd.empty:
-            return empty
-        a_ids = a_pd["vec_id"].to_numpy(dtype=np.int64)
-        a_lab = a_pd["label"].to_numpy(dtype=np.int64)
-        a_mat = np.vstack(
-            a_pd["embedding"].map(lambda x: np.asarray(x, dtype=np.float64))
-        )
-        c_ids = c_pd["vec_id"].to_numpy(dtype=np.int64)
-        c_lab = c_pd["label"].to_numpy(dtype=np.int64)
-        c_mat = np.vstack(
-            c_pd["embedding"].map(lambda x: np.asarray(x, dtype=np.float64))
-        )
-        order = np.argsort(c_ids, kind="stable")
-        c_ids, c_lab, c_mat = c_ids[order], c_lab[order], c_mat[order]
-        m = len(c_ids)
-        c_nrm = np.sqrt((c_mat * c_mat).sum(axis=1))
-        a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1))
-        NEG_INF = np.iinfo(np.int64).min
-        frames = []
-        for s in range(0, len(a_ids), 512):
-            sl = slice(s, s + 512)
-            ids_s, lab_s = a_ids[sl], a_lab[sl]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                raw = (a_mat[sl] @ c_mat.T) / (
-                    a_nrm[sl][:, None] * c_nrm[None, :]
-                )
-                s4 = np.trunc(raw * 1e4 + np.copysign(0.5, raw))
-            s4 = np.where(np.isfinite(s4), s4, 10001.0).astype(np.int64)
-            # max by (sim DESC, id ASC): ids are pos-ASC after the sort,
-            # so key = s4*(m+1) + (m - pos) makes higher sim, then lower
-            # pos, win a plain argmax
-            key = s4 * (m + 1) + (m - np.arange(m, dtype=np.int64))[None, :]
-            bad = (c_ids[None, :] == ids_s[:, None]) | (
-                c_lab[None, :] == lab_s[:, None]
-            )
-            key[bad] = NEG_INF
-            j = key.argmax(axis=1)
-            ok = key[np.arange(len(j)), j] != NEG_INF
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "anchor": ids_s[ok],
-                        "la": lab_s[ok],
-                        "neg": c_ids[j[ok]],
-                        "lb": c_lab[j[ok]],
-                        "s4": s4[np.arange(len(j)), j][ok],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    per_cell = gridded.groupBy("cell", "sub").applyInPandas(cell, out_schema)
-    best = (
-        per_cell.groupBy("anchor", "la")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("s4"),
-                    (-F.col("neg")).alias("nn"),
-                    F.col("neg"),
-                    F.col("lb"),
-                )
-            ).alias("b")
-        )
-        .select(
-            "anchor",
-            "la",
-            F.col("b.neg").alias("hard_neg"),
-            F.col("b.lb").alias("lb"),
-            F.when(F.col("b.s4") > 10000, F.lit(float("nan")))
-            .otherwise(F.col("b.s4") / 1e4)
-            .alias("sim"),
-        )
+    per_cell = gridded.groupBy("cell", "sub").applyInPandas(
+        _topk_cell(1, cross_label_only=True), _TOPK_SCHEMA
     )
-    return best
+    return _topk_reduce(per_cell, 1).withColumnRenamed("neighbor", "hard_neg")

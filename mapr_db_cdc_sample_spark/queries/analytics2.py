@@ -929,16 +929,9 @@ def q259(spark, sf_dir):
     persisted tokenize+shingle pass serves signatures and verification
     (q46's sharing pattern); scores are exact integers in 1e-4 units."""
     d = load_tables(spark, sf_dir)["documents"]
-    grams = B.gram_sets(_minhash_corpus(d))
-    grams.persist()
-    sig = B.signatures_from_grams(grams)
-    cands = B.bucket_pairs(B.band_buckets(B.minhash_bands(sig)))
-    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("ga"))
-    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gb"))
+    _sig, pairs = B.candidate_grams(_minhash_corpus(d))
     out = (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("k", F.size(F.array_intersect(F.col("ga"), F.col("gb"))))
+        pairs.withColumn("k", F.size(F.array_intersect(F.col("ga"), F.col("gb"))))
         .withColumn("na", F.size("ga"))
         .withColumn("nb", F.size("gb"))
         .where((F.col("na") > 0) & (F.col("nb") > 0))

@@ -885,19 +885,11 @@ def q433(spark, sf_dir):
     """Decile histogram of exact candidate-pair Jaccard in integer
     basis points (oracle comment above)."""
     d = load_tables(spark, sf_dir)["documents"]
-    corpus = _minhash_corpus(d)
-    grams = B.gram_sets(corpus)
-    grams.persist()
-    sig = B.signatures_from_grams(grams)
-    cands = B.bucket_pairs(B.band_buckets(B.minhash_bands(sig)))
-    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("ga"))
-    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gb"))
+    _sig, pairs = B.candidate_grams(_minhash_corpus(d))
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     uni = F.size("ga") + F.size("gb") - inter
     bp = (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .where(uni > 0)
+        pairs.where(uni > 0)
         .select(
             F.expr(
                 "(2 * 10000 * size(array_intersect(ga, gb))"

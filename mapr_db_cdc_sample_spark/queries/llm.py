@@ -329,23 +329,14 @@ def q46(spark, sf_dir):
     those candidates — the verifier never does all-pairs work. Threshold
     compares the ROUNDED value so the boundary is engine-stable."""
     d = load_tables(spark, sf_dir)["documents"]
-    corpus = _minhash_corpus(d)
     # one persisted tokenize+shingle+md5 pass feeds both the LSH candidate
-    # generation (signatures as a cache-local projection) and the verify
-    # gram sets, which intersect as long arrays (see operators/banding.py)
-    grams = B.gram_sets(corpus)
-    grams.persist()
-    sig = B.signatures_from_grams(grams)
-    cands = B.bucket_pairs(B.band_buckets(B.minhash_bands(sig)))
-    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("ga"))
-    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gb"))
+    # generation and the verify gram sets, which intersect as long arrays
+    _sig, pairs = B.candidate_grams(_minhash_corpus(d))
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     uni = F.size("ga") + F.size("gb") - inter
     jac = F.round(inter.cast("double") / uni, 4)
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .where((uni > 0) & (jac > 0.05))
+        pairs.where((uni > 0) & (jac > 0.05))
         .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
 
@@ -1513,29 +1504,21 @@ def q116(spark, sf_dir):
     estimate is a projection over the 8 signature columns; both
     similarities compare on ROUND(...,4) so the hash check is stable."""
     d = load_tables(spark, sf_dir)["documents"]
-    corpus = _minhash_corpus(d)
-    grams = B.gram_sets(corpus)
-    grams.persist()
-    sig = B.signatures_from_grams(grams)
-    cands = B.bucket_pairs(B.band_buckets(B.minhash_bands(sig)))
+    sig, pairs = B.candidate_grams(_minhash_corpus(d))
     sa = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"mh{j}").alias(f"a{j}") for j in range(8)]
     )
     sb = sig.select(
         F.col("doc_id").alias("doc_b"), *[F.col(f"mh{j}").alias(f"b{j}") for j in range(8)]
     )
-    ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("ga"))
-    gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gb"))
     agree = sum(
         F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0) for j in range(8)
     )
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     uni = F.size("ga") + F.size("gb") - inter
     scored = (
-        cands.join(sa, "doc_a")
+        pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .join(ga, "doc_a")
-        .join(gb, "doc_b")
         .select(
             "doc_a",
             "doc_b",

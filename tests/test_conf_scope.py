@@ -4,6 +4,8 @@ confs while they build hand the session back as they found it."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from mapr_db_cdc_sample_spark.queries import load_all
@@ -43,3 +45,23 @@ def test_queries_leave_session_confs_as_found(spark, sf_dir, name):
         before = {k: spark.conf.get(k) for k in keys}
         load_all()[name].fn(spark, sf_dir).count()
         assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_driver_memory_default_fits_the_box():
+    """The driver-heap default is half the box's memory: never above the
+    box, never above 16g, and 16g only on boxes of 32 GB or more."""
+    from mapr_db_cdc_sample_spark.session import _box_memory_bytes, default_driver_memory
+
+    def heap_bytes(box):
+        s = default_driver_memory(box)
+        assert s.endswith("m"), s
+        return int(s[:-1]) * 2**20
+
+    box = _box_memory_bytes()
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < box <= phys
+    for b in (2**30, 15_700_000_000, box, 32 * 2**30, 2**40):
+        assert 0 < heap_bytes(b) <= b // 2
+        assert heap_bytes(b) <= 16 * 2**30
+    assert default_driver_memory(15_700_000_000) == "7486m"
+    assert default_driver_memory(2**40) == "16384m"

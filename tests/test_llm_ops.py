@@ -285,6 +285,93 @@ def test_ann_probe_grid_bounds_cell_candidates(spark):
     assert sum(r["count"] for r in per_group) == 600
 
 
+def test_ann_full_probe_equals_exact_top1(spark, sf_dir):
+    """With every IVF cell probed, each anchor's candidates are every
+    vector, so ann_hard_negatives must equal the exact kernel
+    (knn_block_topk k=1 cross-label) row for row: both run the same
+    top-k cell and reduce, on different grids."""
+    from mapr_db_cdc_sample_spark.io import load_tables
+    from mapr_db_cdc_sample_spark.operators.similarity import (
+        ann_hard_negatives,
+        knn_block_topk,
+    )
+
+    e = load_tables(spark, sf_dir)["embeddings"]
+    n_cells = -(-e.count() // 64)
+    exact = sorted(
+        (r.anchor, r.neighbor, repr(r.sim))
+        for r in knn_block_topk(e, k=1, cross_label_only=True).collect()
+    )
+    approx = sorted(
+        (r.anchor, r.hard_neg, repr(r.sim))
+        for r in ann_hard_negatives(e, cell_rows=64, n_probe=n_cells).collect()
+    )
+    assert len(exact) == e.count()
+    assert approx == exact
+
+
+def _zero_vector_frame(spark):
+    """Six 3-d vectors in two labels; vec 4 is all zeros, so every cosine
+    with it is NaN (0/0)."""
+    rows = [
+        (1, 0, [1.0, 0.0, 0.0]),
+        (2, 0, [1.0, 1.0, 0.0]),
+        (3, 1, [0.0, 1.0, 0.0]),
+        (4, 1, [0.0, 0.0, 0.0]),
+        (5, 0, [0.0, 0.0, 1.0]),
+        (6, 1, [1.0, 0.0, 1.0]),
+    ]
+    return spark.createDataFrame(rows, "vec_id bigint, label int, embedding array<float>")
+
+
+NAN = "nan"
+
+
+def _rows(df):
+    return sorted(
+        tuple(NAN if isinstance(v, float) and v != v else v for v in r)
+        for r in df.collect()
+    )
+
+
+def test_zero_norm_nan_ranks_greatest_in_every_kernel(spark):
+    """The one sentinel rule the cosine kernels share: a zero-norm
+    vector's NaN cosine ranks above every real sim (as NaN does in
+    Spark and DuckDB ORDER BY) and passes any threshold. Ties on the
+    rounded sim (0.7071 twice) break to the lower id."""
+    from mapr_db_cdc_sample_spark.operators.similarity import (
+        ann_hard_negatives,
+        knn_block_topk,
+        sim_block_pairs,
+    )
+
+    e = _zero_vector_frame(spark)
+    top2 = [
+        (1, 0, 4, 1, NAN), (1, 0, 2, 0, 0.7071),
+        (2, 0, 4, 1, NAN), (2, 0, 1, 0, 0.7071),
+        (3, 1, 4, 1, NAN), (3, 1, 2, 0, 0.7071),
+        (4, 1, 1, 0, NAN), (4, 1, 2, 0, NAN),
+        (5, 0, 4, 1, NAN), (5, 0, 6, 1, 0.7071),
+        (6, 1, 4, 1, NAN), (6, 1, 1, 0, 0.7071),
+    ]
+    # one cell (no reduce) and 2-vector blocks (the window reduce)
+    for block_size in (4096, 2):
+        assert _rows(knn_block_topk(e, k=2, block_size=block_size)) == sorted(top2)
+    assert _rows(ann_hard_negatives(e)) == [
+        (1, 0, 4, 1, NAN),
+        (2, 0, 4, 1, NAN),
+        (3, 1, 2, 0, 0.7071),
+        (4, 1, 1, 0, NAN),
+        (5, 0, 4, 1, NAN),
+        (6, 1, 1, 0, 0.7071),
+    ]
+    assert _rows(sim_block_pairs(e, 0.6, same_label_only=False)) == [
+        (1, 2, 0.7071), (1, 4, NAN), (1, 6, 0.7071), (2, 3, 0.7071),
+        (2, 4, NAN), (3, 4, NAN), (4, 5, NAN), (4, 6, NAN), (5, 6, 0.7071),
+    ]
+    assert _rows(sim_block_pairs(e, 0.6)) == [(1, 2, 0.7071), (3, 4, NAN), (4, 6, NAN)]
+
+
 def test_block_grid_per_label_cell_bound_under_skew(spark):
     """r11 verdict task 7: the per-label grid must bound every cell's
     candidate rows by its OWN label's block count — a 10-row label next

@@ -259,6 +259,25 @@ def test_knn_block_kernel_block_invariant(spark, sf_dir):
         assert len(one) == 5 * len(anchors)
 
 
+def test_sim_block_pairs_block_invariant(spark, sf_dir):
+    """The thresholded pair kernel must return the same rows on a
+    16-vector-block grid as on the single cell the committed SFs run,
+    within labels and across them: each pair is emitted by exactly one
+    cell."""
+    from mapr_db_cdc_sample_spark.operators.similarity import sim_block_pairs
+
+    e = load_tables(spark, sf_dir)["embeddings"]
+
+    def rows(df):
+        return sorted((r.vec_a, r.vec_b, r.sim) for r in df.collect())
+
+    for same in (True, False):
+        one = rows(sim_block_pairs(e, 0.3, same_label_only=same))
+        many = rows(sim_block_pairs(e, 0.3, same_label_only=same, block_size=16))
+        assert one, same
+        assert one == many, same
+
+
 def test_knn_block_kernel_no_driver_collect(spark, sf_dir):
     """Guard the round-9 fix: the kernel source must not materialize
     the dataset on the driver (no .collect() on the embeddings input)."""
