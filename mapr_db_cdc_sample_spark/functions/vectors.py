@@ -25,14 +25,24 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column, decimals: int = 4) -> Column:
-    """Cosine similarity rounded to `decimals` — the rounding absorbs the
-    last-ulp association-order differences between engines, making
-    similarity queries oracle-checkable."""
-    return F.round(dot(a, b) / (norm(a) * norm(b)), decimals)
+def cosine_norms(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
+    """cosine(a, b) from precomputed norms, rounded to 4 decimals — the
+    rounding absorbs the last-ulp association-order differences between
+    engines, making similarity queries oracle-checkable. A zero norm gives
+    NaN (an ANSI division would raise), which ranks greatest, as in the
+    similarity kernels and the oracles' ``exact.cosine_duck``."""
+    den = a_norm * b_norm
+    return F.when(den == 0, F.lit(float("nan"))).otherwise(
+        F.round(dot(a, b) / den, 4)
+    )
 
 
-def cosine_pre(a: Column, b: Column, b_norm: Column, decimals: int = 4) -> Column:
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity rounded to 4 decimals (see ``cosine_norms``)."""
+    return cosine_norms(a, b, norm(a), norm(b))
+
+
+def cosine_pre(a: Column, b: Column, b_norm: Column) -> Column:
     """cosine(a, b) with b's norm PRECOMPUTED on the side that carries b.
 
     In the broadcast-query pattern (one query vector probed against the
@@ -41,4 +51,4 @@ def cosine_pre(a: Column, b: Column, b_norm: Column, decimals: int = 4) -> Colum
     the sf0.1 retrieval leg. b_norm is the same double norm() produces
     and the product keeps the same operand order, so the result is
     IEEE-identical to cosine() and every oracle hash is unaffected."""
-    return F.round(dot(a, b) / (norm(a) * b_norm), decimals)
+    return cosine_norms(a, b, norm(a), b_norm)

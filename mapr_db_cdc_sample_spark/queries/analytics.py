@@ -5,7 +5,8 @@ sketches (KMV, count-min), exact histogram-ntile consumers, and
 calendar/forensics/merge-audit ops.
 
 Determinism rules follow queries/relational.py's module docstring: exact
-integer/decimal arithmetic wherever sums occur, ROUND(6+) before ranking on
+integer/decimal arithmetic wherever sums occur (integer cents and
+round-half-up come from functions/exact.py), ROUND(6+) before ranking on
 transcendental outputs, unique ORDER BY tiebreakers under every LIMIT.
 """
 
@@ -14,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import cents, rhu
 from ..io import load_tables
 from . import register
 from ..operators import banding as B
@@ -34,7 +36,7 @@ _CC_ORACLE = _LSH_PAIRS_ORACLE.replace(
 ).replace(
     "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b\n"
     "FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.doc_id < b.doc_id",
-    """, pairs AS (
+    """, pairs AS MATERIALIZED (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.doc_id < b.doc_id
 ), und AS MATERIALIZED (
@@ -44,7 +46,7 @@ _CC_ORACLE = _LSH_PAIRS_ORACLE.replace(
     SELECT DISTINCT src, src FROM und
     UNION
     SELECT u.dst, w.label FROM walk w JOIN und u ON u.src = w.node
-), cc AS (
+), cc AS MATERIALIZED (
     SELECT node AS doc_id, MIN(label) AS component FROM walk GROUP BY node
 )
 SELECT component,
@@ -164,16 +166,15 @@ def q154(spark, sf_dir):
     broadcast back onto the fact — two scans of the same cached-in-OS
     parquet, zero fact-side shuffle beyond the 3-key aggregate."""
     li = load_tables(spark, sf_dir)["lineitem"]
-    cents = li.select(
-        F.col("l_returnflag").alias("flag"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+    priced = li.select(
+        F.col("l_returnflag").alias("flag"), cents("l_extendedprice").alias("c")
     )
-    stats = cents.groupBy("flag").agg(
+    stats = priced.groupBy("flag").agg(
         F.count("*").alias("n"),
         F.sum("c").cast("decimal(38,0)").cast("double").alias("s1"),
         F.sum(F.col("c") * F.col("c")).cast("decimal(38,0)").cast("double").alias("s2"),
     )
-    z = cents.join(F.broadcast(stats), "flag").select(
+    z = priced.join(F.broadcast(stats), "flag").select(
         "flag",
         F.round(
             (F.col("c") - F.col("s1") / F.col("n"))
@@ -323,7 +324,7 @@ def q157(spark, sf_dir):
             "user_id",
             "event_id",
             "ts",
-            (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+            cents("value").alias("c"),
         )
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -461,12 +462,12 @@ _PR_ITER_SQL = """, {out} AS (
 
 _PAGERANK_ORACLE = (
     """
-WITH edges AS (
+WITH edges AS MATERIALIZED (
     SELECT DISTINCT l_partkey AS src, l_suppkey + 10000000 AS dst FROM lineitem
     UNION ALL
     SELECT DISTINCT l_suppkey + 10000000 AS src, l_partkey AS dst FROM lineitem
 ),
-deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg FROM edges GROUP BY src),
+deg AS MATERIALIZED (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg FROM edges GROUP BY src),
 r0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE) AS rank FROM deg)"""
     + _PR_ITER_SQL.format(out="r1", inp="r0")
     + _PR_ITER_SQL.format(out="r2", inp="r1")
@@ -556,7 +557,7 @@ def _index_dedup_oracle() -> str:
     UNION ALL
     SELECT doc_id + 3000000, REVERSE(text) FROM documents WHERE doc_id % 13 = 0""",
     )
-    bands = """, bands AS (
+    bands = """, bands AS MATERIALIZED (
     SELECT doc_id, UNNEST([
         '0:' || mh0 || ':' || mh1,
         '1:' || mh2 || ':' || mh3,
@@ -574,7 +575,7 @@ def _index_dedup_oracle() -> str:
     SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
     FROM bands n JOIN old_capped o ON n.band = o.band
     WHERE n.doc_id >= 2000000
-), grams AS (
+), grams AS MATERIALIZED (
     SELECT doc_id, LIST_DISTINCT(hs) AS gs FROM hv
 ), dup AS (
     SELECT DISTINCT c.new_id FROM cand c
@@ -697,7 +698,7 @@ _SIMHASH_PAIRS_ORACLE = _simhash60_sql(
     SELECT doc_id, text FROM documents
     UNION ALL
     SELECT doc_id + 1000000, text || ' zz' FROM documents WHERE doc_id % 11 = 0"""
-) + f""", bands AS (
+) + f""", bands AS MATERIALIZED (
     SELECT doc_id, simhash,
            UNNEST([{", ".join(
                f"'{i}:' || ((simhash // {1 << (i * _SIMHASH_BAND_BITS)}) % {1 << _SIMHASH_BAND_BITS})"
@@ -950,7 +951,7 @@ def q165(spark, sf_dir):
 _POWER_ITER_SQL = """, u{t} AS (
     SELECT vec_id, CAST(ROUND(CAST(SUM(qv_ij * v) AS DOUBLE) / 10000.0) AS BIGINT) AS u
     FROM qx JOIN v{p} USING (j) GROUP BY vec_id
-), w{t} AS (
+), w{t} AS MATERIALIZED (
     SELECT j, CAST(SUM(qv_ij * u) AS BIGINT) AS w
     FROM qx JOIN u{t} USING (vec_id) GROUP BY j
 ), n{t} AS (
@@ -966,7 +967,7 @@ _POWER_ORACLE = (
 WITH q AS (
     SELECT vec_id, LIST_TRANSFORM(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
     FROM embeddings
-), qx AS (
+), qx AS MATERIALIZED (
     SELECT vec_id, i - 1 AS j, qv[i] AS qv_ij
     FROM q, UNNEST(RANGE(1, LEN(qv) + 1)) AS t(i)
 ), v0 AS (
@@ -1127,7 +1128,6 @@ def q168(spark, sf_dir):
     IEEE inputs in both engines instead of trusting engine-native corr()
     accumulation order."""
     li = load_tables(spark, sf_dir)["lineitem"]
-    cents = lambda c: (F.col(c).cast("decimal(18,2)") * 100).cast("bigint")  # noqa: E731
     m = li.select(
         F.col("l_returnflag").alias("flag"),
         cents("l_quantity").alias("q"),
@@ -1393,9 +1393,7 @@ def q174(spark, sf_dir):
     the shape that survives 10^9 input groups."""
     o = load_tables(spark, sf_dir)["orders"]
     pts = o.groupBy(F.col("o_custkey").alias("cust")).agg(
-        F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("x"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("x"),
         F.count("*").alias("y"),
     )
     w_higher = (
@@ -1498,7 +1496,7 @@ def q176(spark, sf_dir):
     li = load_tables(spark, sf_dir)["lineitem"]
     c = li.select(
         F.col("l_returnflag").alias("flag"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("uid"),
     )
     w = Window.partitionBy("flag").orderBy("cents", "uid")
@@ -1550,7 +1548,7 @@ def q177(spark, sf_dir):
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
         F.unix_micros("ts").alias("t"),
         F.lead(F.unix_micros("ts")).over(w).alias("t_next"),
     )
@@ -1881,13 +1879,12 @@ def q183(spark, sf_dir):
     ts) sort, the non-iterative form of a seemingly stateful scan.
     Integer cents keep it engine-exact."""
     ev = load_tables(spark, sf_dir)["events"].where(F.col("user_id") % 25 == 0)
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     flows = ev.select(
         "user_id",
         "ts",
         "event_id",
-        F.when(F.col("event_type").isin("purchase", "click"), cents)
-        .otherwise(-cents)
+        F.when(F.col("event_type").isin("purchase", "click"), cents("value"))
+        .otherwise(-cents("value"))
         .alias("delta"),
     )
     w = (
@@ -2153,9 +2150,7 @@ def q187(spark, sf_dir):
         .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("c_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
+            F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
         )
     ).localCheckpoint(eager=True)
     tot = rev.agg(F.sum("cents").cast("bigint").alias("t"))
@@ -2230,7 +2225,7 @@ def q188(spark, sf_dir):
     ).otherwise("treatment")
     assigned = ev.select(
         variant.alias("variant"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     s = assigned.groupBy("variant").agg(
         F.count("*").alias("n"),
@@ -2291,7 +2286,7 @@ def q189(spark, sf_dir):
         "ts",
         "event_id",
         F.when(F.col("event_id") % 3 == 0, F.lit(None)).otherwise(
-            (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
+            cents("value")
         ).alias("v"),
     )
     w = (
@@ -2392,7 +2387,7 @@ def q191(spark, sf_dir):
         F.unix_micros("ts").cast("string"),
         F.col("user_id").cast("string"),
         F.col("event_type"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").cast("string"),
+        cents("value").cast("string"),
     )
     h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("decimal(38,0)")
     return ev.agg(
@@ -2441,7 +2436,7 @@ def q192(spark, sf_dir):
         "user_id",
         "ts",
         "event_id",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+        cents("value").alias("v"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -2531,7 +2526,7 @@ WITH corpus AS (
     SELECT doc_id,
            LIST_FILTER(STRING_SPLIT(LOWER(text), ' '), t -> LENGTH(t) > 0) AS tk
     FROM corpus
-), sh AS (
+), sh AS MATERIALIZED (
     SELECT doc_id,
            LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, GREATEST(LEN(tk) - 1, 1)),
                           i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sg
@@ -2659,7 +2654,7 @@ def q195(spark, sf_dir):
     c = li.select(
         F.col("l_returnflag").alias("flag"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("uid"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+        cents("l_extendedprice").alias("v"),
     )
     b = c.groupBy("flag").agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
     return (
@@ -2682,11 +2677,11 @@ def q195(spark, sf_dir):
 _VOCAB_MIN_FREQ = 5
 
 _VOCAB_ORACLE = f"""
-WITH toks AS (
+WITH toks AS MATERIALIZED (
     SELECT doc_id, UNNEST(LIST_FILTER(STRING_SPLIT(LOWER(text), ' '),
                                       t -> LENGTH(t) > 0)) AS t
     FROM documents
-), vocab AS (
+), vocab AS MATERIALIZED (
     SELECT t FROM toks GROUP BY t HAVING COUNT(*) >= {_VOCAB_MIN_FREQ}
 ), scored AS (
     SELECT toks.doc_id,
@@ -2942,7 +2937,7 @@ def q200(spark, sf_dir):
     rows_ = o.select(
         "o_orderkey",
         F.col("o_orderpriority").alias("cat"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("y"),
+        cents("o_totalprice").alias("y"),
     )
     stats = rows_.groupBy("cat").agg(
         F.sum("y").cast("bigint").alias("s"), F.count("*").alias("n")
@@ -3001,9 +2996,7 @@ def q201(spark, sf_dir):
         .cast("bigint")
         .alias("last_day"),
         F.count("*").alias("freq"),
-        F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("monetary"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("monetary"),
     )
     r = F.ntile(4).over(Window.orderBy(F.col("last_day").desc(), "cust"))
     f = F.ntile(4).over(Window.orderBy(F.col("freq").desc(), "cust"))
@@ -3137,16 +3130,16 @@ def q203(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]
 
     def digest(corrupt: bool):
-        cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
+        v = cents("value")
         if corrupt:
-            cents = cents + F.when(F.col("event_id") % 1000 == 0, 1).otherwise(0)
+            v = v + F.when(F.col("event_id") % 1000 == 0, 1).otherwise(0)
         h = F.conv(
             F.substring(
                 F.md5(
                     F.concat_ws(
                         "|",
                         F.col("event_id").cast("string"),
-                        cents.cast("string"),
+                        v.cast("string"),
                     )
                 ),
                 1,
@@ -3380,7 +3373,7 @@ def q207(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]
     scored = ev.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("score"),
+        cents("value").alias("score"),
     )
     hist = scored.groupBy("score").agg(
         F.count("*").alias("n"), F.sum("label").cast("bigint").alias("n_pos")
@@ -3536,7 +3529,7 @@ def q209(spark, sf_dir):
     li = load_tables(spark, sf_dir)["lineitem"].where(F.col("l_orderkey") % 10 == 0)
     c = li.select(
         F.col("l_returnflag").alias("flag"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+        cents("l_extendedprice").alias("v"),
     )
     med = c.groupBy("flag").agg(
         F.floor(F.expr("percentile(v, 0.5)")).cast("bigint").alias("m")
@@ -3646,7 +3639,7 @@ def q211(spark, sf_dir):
     )
     touched = ev.select(
         "event_type",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
         F.first("event_type").over(w).alias("first_touch"),
     )
     return (
@@ -3783,7 +3776,7 @@ def q214(spark, sf_dir):
     li = load_tables(spark, sf_dir)["lineitem"].where(F.col("l_orderkey") % 10 == 0)
     c = li.select(
         F.col("l_returnflag").alias("flag"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+        cents("l_extendedprice").alias("v"),
     )
     bounds = c.groupBy("flag").agg(
         F.floor(F.expr("percentile(v, 0.05)")).cast("bigint").alias("lo"),
@@ -3870,11 +3863,11 @@ WITH q AS MATERIALIZED (
     SELECT vec_id, q, sig,
            CAST(LIST_SUM(LIST_TRANSFORM(q, x -> x * x)) AS BIGINT) AS nn
     FROM sigs
-), bands AS (
+), bands AS MATERIALIZED (
     SELECT vec_id, q, sig, nn, bits,
            UNNEST(RANGE(0, GREATEST(1, {_SRP_PLANES} // bits))) AS b
     FROM norms, params
-), bandkeys AS (
+), bandkeys AS MATERIALIZED (
     SELECT vec_id, q, nn,
            CAST(b AS VARCHAR) || ':' ||
            CAST((sig // (CAST(1 AS BIGINT) << CAST(b * bits AS INT)))
@@ -4135,7 +4128,7 @@ def q217(spark, sf_dir):
     )
     w = li.select(
         F.col("l_partkey").alias("part"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         age_q.alias("age_q"),
     )
     scaled = F.col("cents") * F.expr("shiftleft(1L, cast(30 - age_q as int))")
@@ -4188,9 +4181,7 @@ def q218(spark, sf_dir):
         .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("c_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
+            F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
         )
     )
     rn = F.row_number().over(Window.orderBy(F.col("cents").desc(), "nation"))
@@ -4340,7 +4331,7 @@ def q221(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]
     replayed = ev.unionAll(ev.where(F.col("event_id") % 3 == 0))
     dedup = replayed.groupBy("event_id").agg(
-        (F.max("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents(F.max("value")).alias("cents"),
         F.count("*").alias("seen"),
     )
     return dedup.agg(
@@ -4693,9 +4684,7 @@ def q228(spark, sf_dir):
     Unique (cents, custkey) rank tiebreak keeps ranks engine-stable."""
     o = load_tables(spark, sf_dir)["orders"]
     rev = o.groupBy("o_custkey").agg(
-        F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+        F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
     )
     ranked = rev.select(
         "cents",
@@ -4807,7 +4796,7 @@ def q230(spark, sf_dir):
         F.col("ts").cast("date").alias("day"),
         "ts",
         "event_id",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     wa = Window.partitionBy("day").orderBy("ts", "event_id")
     wd = Window.partitionBy("day").orderBy(F.col("ts").desc(), F.col("event_id").desc())
@@ -4876,7 +4865,7 @@ def q231(spark, sf_dir):
             F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
             .cast("bigint")
             .alias("x"),
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("y"),
+            cents("o_totalprice").alias("y"),
         )
     )
     s = f.groupBy("nation").agg(
@@ -5019,9 +5008,7 @@ def q233(spark, sf_dir):
         ev.groupBy(
             "event_type", F.col("ts").cast("date").alias("day")
         ).agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
+            F.sum(cents("value")).cast("bigint").alias("cents")
         )
     )
     epoch_day = F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
@@ -5076,9 +5063,12 @@ def q234(spark, sf_dir):
     digit, observed vs log10(1+1/d) expected frequency. Collapses to 9
     rows before any join."""
     o = load_tables(spark, sf_dir)["orders"]
-    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
     obs = (
-        o.select(F.substring(cents.cast("string"), 1, 1).cast("int").alias("digit"))
+        o.select(
+            F.substring(cents("o_totalprice").cast("string"), 1, 1)
+            .cast("int")
+            .alias("digit")
+        )
         .groupBy("digit")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
@@ -5112,7 +5102,7 @@ def q234(spark, sf_dir):
 _KMV_K = 64
 
 _KMV_ORACLE = f"""
-WITH h AS (
+WITH h AS MATERIALIZED (
     SELECT DISTINCT event_type,
            ('0x' || SUBSTR(MD5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
     FROM events
@@ -5131,7 +5121,7 @@ WITH h AS (
                 ELSE CAST(ROUND(({_KMV_K} - 1) * 1152921504606846976.0 / k.hk) AS BIGINT)
            END AS kmv_estimate
     FROM kth k JOIN exact e ON e.event_type = k.event_type
-), g AS (
+), g AS MATERIALIZED (
     SELECT DISTINCT h FROM h
 ), gtop AS (
     SELECT MAX(h) AS hk, CAST(COUNT(*) AS BIGINT) AS k
@@ -5295,9 +5285,8 @@ def q237(spark, sf_dir):
     pattern behind 'p95 of per-tenant p95 latency' dashboards; floors
     per the q80/q180 determinism recipe."""
     ev = load_tables(spark, sf_dir)["events"]
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     per_user = (
-        ev.select("user_id", cents.alias("cents"))
+        ev.select("user_id", cents("value").alias("cents"))
         .groupBy("user_id")
         .agg(F.floor(F.expr("percentile(cents, 0.95)")).cast("bigint").alias("p95"))
     )
@@ -5326,7 +5315,7 @@ _CM_ROWS = 4
 _CM_W = 1024
 
 _CM_ORACLE = f"""
-WITH rows_ AS (
+WITH rows_ AS MATERIALIZED (
     SELECT UNNEST(RANGE(0, {_CM_ROWS})) AS r
 ), cells AS (
     SELECT r.r AS r,
@@ -5563,7 +5552,7 @@ def q241(spark, sf_dir):
     scored = ev.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("score"),
+        cents("value").alias("score"),
     )
     t = exact_ntile_counts(scored, 10, descending=False)
     pos_share = F.col("pos").cast("double") / F.col("post")
@@ -5648,8 +5637,8 @@ def q242(spark, sf_dir):
 # midpoints (n=2000 vectors => resolution 5e-7), and double-ROUND ties
 # systematically diverged between engines at sf0.1 (observed:
 # -0.001585 vs -0.001586). The +2000 shift keeps every quantity
-# positive so floor-div (DuckDB //) and truncate-div (Spark DIV)
-# agree; round-half-up(p/q) = (2p + q) DIV (2q); the variance is
+# positive so floor-div and truncate-div agree (round-half-up:
+# functions/exact.py); the variance is
 # shift-invariant and M2 = n*s2 - s1^2 stays exact BIGINT (~4e13 at
 # sf0.1; DECIMAL(38,0) if vectors ever reach ~1e8 rows).
 _DIM_PROFILE_ORACLE = """
@@ -5693,10 +5682,10 @@ def q244(spark, sf_dir):
         F.sum(F.col("x") * F.col("x")).cast("bigint").alias("s2"),
     )
     mean = (
-        F.expr("(2 * s1 * 1000 + n) DIV (2 * n)").cast("double") / 1000000 - 2.0
+        F.expr(rhu("s1 * 1000", "n")).cast("double") / 1000000 - 2.0
     )
     var = (
-        F.expr("(2 * (n * s2 - s1 * s1) + n * n) DIV (2 * n * n)").cast("double")
+        F.expr(rhu("(n * s2 - s1 * s1)", "n * n")).cast("double")
         / 1000000
     )
     return moms.select(
@@ -5747,7 +5736,7 @@ def q245(spark, sf_dir):
     c = load_tables(spark, sf_dir)["customer"]
     dim = c.select(
         F.col("c_custkey").alias("k"),
-        (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("c_acctbal").alias("cents"),
     )
     batch = dim.select(
         "k",
@@ -5812,7 +5801,7 @@ def q246(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"].select(
         F.col("ts").cast("date").alias("day"),
         "event_id",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     base = ev.where(F.col("event_id") % 50 != 0)
     late = ev.where(F.col("event_id") % 50 == 0)
@@ -5870,7 +5859,7 @@ def q247(spark, sf_dir):
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("t"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     a = p.select(
         "user_id", F.col("event_id").alias("event_a"), F.col("t").alias("ta"), "cents"

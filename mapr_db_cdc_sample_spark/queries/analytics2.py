@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions import vectors as V
+from ..functions.exact import cents, cosine_duck, rhu
 from ..io import load_tables
 from ..operators import banding as B
 from ..operators.dedup_pipeline import CC_PARTITIONS, connected_components
@@ -91,9 +92,7 @@ def q249(spark, sf_dir):
         (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
         .cast("bigint")
         .alias("mi"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     ma = o.groupBy("o_custkey", "mi").agg(
         F.count("*").alias("mn"), F.sum("cents").alias("mcents")
@@ -459,13 +458,13 @@ def q253(spark, sf_dir):
 # the unique tiebreaker. At 100 TB candidate generation goes through
 # IVF/LSH (q52/q135) first; this exact linear form is the recall oracle
 # for that path, same contract as q38.
-_HARDNEG_ORACLE = """
+_HARDNEG_ORACLE = f"""
 WITH q AS MATERIALIZED (
     SELECT vec_id AS qid, label AS qlabel, embedding::DOUBLE[] AS qe
     FROM embeddings WHERE vec_id % 1000 = 0
 ), s AS (
     SELECT q.qid, e.vec_id,
-           ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qe), 4) AS sim
+           ROUND({cosine_duck('e.embedding::DOUBLE[]', 'q.qe')}, 4) AS sim
     FROM embeddings e JOIN q ON e.label <> q.qlabel
 ), r AS (
     SELECT qid, vec_id, sim,
@@ -678,9 +677,7 @@ def q257(spark, sf_dir):
         .join(F.broadcast(seg), F.col("c_custkey") == F.col("o_custkey"))
         .where(F.col("c_mktsegment").isin("BUILDING", "MACHINERY"))
         .select(
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            cents("o_totalprice").alias("cents"),
             F.when(F.col("c_mktsegment") == "BUILDING", 1).otherwise(2).alias("g"),
         )
     )
@@ -718,7 +715,7 @@ def q257(spark, sf_dir):
         F.col("n2").cast("bigint"),
         F.col("d_num").cast("bigint"),
         F.expr(
-            "CAST((2 * d_num * 1000000 + n1 * n2) DIV (2 * n1 * n2) AS BIGINT)"
+            f"CAST({rhu('d_num * 1000000', 'n1 * n2')} AS BIGINT)"
         ).alias("ks_micro"),
     )
 
@@ -786,9 +783,7 @@ def q258(spark, sf_dir):
         )
         .select(
             F.col("n_regionkey").alias("rk"),
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
     )
     cd = F.col("cents").cast("decimal(19,0)")
@@ -907,7 +902,7 @@ _CONTAIN_ORACLE = _MINHASH_CTE + _BANDS_CTE + """
 , cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.doc_id < b.doc_id
-), grams AS (
+), grams AS MATERIALIZED (
     SELECT doc_id, LIST_DISTINCT(hs) AS gs FROM hv
 )
 SELECT doc_a, doc_b,
@@ -938,10 +933,10 @@ def q259(spark, sf_dir):
         .select(
             "doc_a",
             "doc_b",
-            F.expr("CAST((2 * k * 10000 + na) DIV (2 * na) AS BIGINT)").alias(
+            F.expr(f"CAST({rhu('k * 10000', 'na')} AS BIGINT)").alias(
                 "cont_a"
             ),
-            F.expr("CAST((2 * k * 10000 + nb) DIV (2 * nb) AS BIGINT)").alias(
+            F.expr(f"CAST({rhu('k * 10000', 'nb')} AS BIGINT)").alias(
                 "cont_b"
             ),
         )
@@ -1032,8 +1027,7 @@ def q261(spark, sf_dir):
             "n_clicks",
             "n_abandoned",
             F.expr(
-                "CAST((2 * n_abandoned * 1000000 + n_clicks)"
-                " DIV (2 * n_clicks) AS BIGINT)"
+                f"CAST({rhu('n_abandoned * 1000000', 'n_clicks')} AS BIGINT)"
             ).alias("rate_micro"),
         )
         .orderBy("user_id")
@@ -1227,7 +1221,7 @@ def q264(spark, sf_dir):
             "event_id",
             "user_id",
             "event_type",
-            (F.col("value").cast("decimal(18,2)") * 100).cast("bigint"),
+            cents("value"),
         ).alias("value")
     )
     d = scratch_dir("q264_linerec")  # keyed: bench/sweep reps overwrite in place
@@ -1400,7 +1394,7 @@ def q268(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                (F.col("value").cast("decimal(18,2)") * 100).cast("bigint"),
+                cents("value"),
             ).otherwise(F.lit(0))
         )
         .cast("bigint")
@@ -1442,12 +1436,12 @@ _P_CASE = "CASE LEAST(n_rel, 10) " + " ".join(
 ) + " END"
 
 _NDCG_ORACLE = f"""
-WITH q AS (
+WITH q AS MATERIALIZED (
     SELECT vec_id AS qid, label AS qlabel, embedding::DOUBLE[] AS qe
     FROM embeddings WHERE vec_id % 1000 = 0
 ), s AS (
     SELECT q.qid, q.qlabel, e.vec_id, e.label,
-           ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qe), 4) AS sim
+           ROUND({cosine_duck('e.embedding::DOUBLE[]', 'q.qe')}, 4) AS sim
     FROM embeddings e JOIN q ON e.vec_id <> q.qid
 ), r AS (
     SELECT qid, qlabel, label, sim,
@@ -1513,8 +1507,7 @@ def q269(spark, sf_dir):
             "n_rel",
             "dcg_micro",
             F.expr(
-                f"CAST((2 * dcg_micro * 1000000 + {_P_CASE})"
-                f" DIV (2 * ({_P_CASE})) AS BIGINT)"
+                f"CAST({rhu('dcg_micro * 1000000', f'({_P_CASE})')} AS BIGINT)"
             ).alias("ndcg_micro"),
         )
         .orderBy("qid")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions import vectors as V
+from ..functions.exact import cents, cosine_duck, floor_rhu, rhu
 from ..io import load_tables
 from ..operators.dedup_pipeline import connected_components
 from ..operators.kcore import k_core
@@ -29,7 +30,7 @@ from .llm import _BANDS_CTE, _MINHASH_CTE
 # is HUGEINT -> cast back; Spark sums BIGINT natively (overflow would
 # throw under ANSI, not wrap).
 _DAILY_CTE = """
-WITH daily AS (
+WITH daily AS MATERIALIZED (
     SELECT o_orderdate AS day,
            CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
                 AS BIGINT) AS cents
@@ -41,9 +42,7 @@ WITH daily AS (
 def _daily_cents(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     return o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+        F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
     )
 
 
@@ -134,9 +133,11 @@ def q270(spark, sf_dir):
             F.col("npairs").cast("bigint").alias("n_pairs"),
             (
                 F.expr(
-                    "(2 * ((n*n*sxy - n*s*sxpy + npairs*s*s) + (n*n*sxx - n*s*s)) * 1000000"
-                    " + (n*n*sxx - n*s*s))"
-                    " DIV (2 * (n*n*sxx - n*s*s)) - 1000000"
+                    rhu(
+                        "((n*n*sxy - n*s*sxpy + npairs*s*s) + (n*n*sxx - n*s*s))"
+                        " * 1000000",
+                        "(n*n*sxx - n*s*s)",
+                    ) + " - 1000000"
                 )
             ).cast("bigint").alias("acf_micro"),
         )
@@ -296,8 +297,9 @@ def q273(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("sum_chars"),
             F.expr(
-                "CAST((2 * CAST(SUM(n_chars) AS DECIMAL(38,0)) * 1000000 + COUNT(*))"
-                " DIV (2 * COUNT(*)) AS BIGINT)"
+                "CAST("
+                + rhu("CAST(SUM(n_chars) AS DECIMAL(38,0)) * 1000000", "COUNT(*)")
+                + " AS BIGINT)"
             ).alias("mean_chars_micro"),
         )
         .orderBy("fold")
@@ -350,7 +352,7 @@ def q274(spark, sf_dir):
         "source",
         F.col("n_chars").cast("bigint").alias("n_chars"),
         F.col("c").cast("bigint").alias("n_docs"),
-        F.expr("(2 * cum * 1000000 + tot) DIV (2 * tot)").cast("bigint").alias(
+        F.expr(rhu("cum * 1000000", "tot")).cast("bigint").alias(
             "cdf_micro"
         ),
     ).orderBy("source", "n_chars")
@@ -639,10 +641,11 @@ def q279(spark, sf_dir):
             "w2",
             F.col("c").cast("bigint").alias("n"),
             F.expr(
-                "CAST((2 * (GREATEST(4 * CAST(c AS DECIMAL(38,0)) - 3, CAST(0 AS DECIMAL(38,0)))"
-                " * types + 3 * n1fwd * n1bwd) * 1000000"
-                " + 4 * c1 * types)"
-                " DIV (2 * 4 * c1 * types) AS BIGINT)"
+                "CAST(" + rhu(
+                    "(GREATEST(4 * CAST(c AS DECIMAL(38,0)) - 3, CAST(0"
+                    " AS DECIMAL(38,0))) * types + 3 * n1fwd * n1bwd) * 1000000",
+                    "4 * c1 * types",
+                ) + " AS BIGINT)"
             ).alias("p_kn_micro"),
         )
         .orderBy(F.col("n").desc(), "w1", "w2")
@@ -661,12 +664,14 @@ def q279(spark, sf_dir):
 # — the same scale posture as IVF — and the CC loop shuffles only edge
 # endpoints. Oracle: identical pair SQL + a recursive-CTE min-label
 # walk (the q152 pattern).
-_SEMDEDUP_ORACLE = """
-WITH RECURSIVE sims AS (
+_SEMDEDUP_ORACLE = f"""
+WITH RECURSIVE vecs AS MATERIALIZED (
+    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
+), sims AS MATERIALIZED (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-    FROM embeddings a JOIN embeddings b
+    FROM vecs a JOIN vecs b
       ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) > 0.3
+    WHERE ROUND({cosine_duck('a.e', 'b.e')}, 4) > 0.3
 ), und AS MATERIALIZED (
     SELECT vec_a AS src, vec_b AS dst FROM sims
     UNION SELECT vec_b, vec_a FROM sims
@@ -759,9 +764,12 @@ def q281(spark, sf_dir):
         "source",
         "doc_id",
         F.expr(
-            "CAST((2 * CAST(size(filter(tk, t -> t IN ('the','a','an','and','or','of','to','in','is','it')))"
-            " AS DECIMAL(38,0)) * 1000000 + size(tk))"
-            " DIV (2 * size(tk)) AS BIGINT)"
+            "CAST(" + rhu(
+                "CAST(size(filter(tk, t -> t IN"
+                " ('the','a','an','and','or','of','to','in','is','it')))"
+                " AS DECIMAL(38,0)) * 1000000",
+                "size(tk)",
+            ) + " AS BIGINT)"
         ).alias("score"),
     )
     rb = F.row_number().over(
@@ -842,8 +850,9 @@ def q283(spark, sf_dir):
             F.sum(1 - F.col("is_test")).cast("bigint").alias("n_train"),
             F.sum("is_test").cast("bigint").alias("n_test"),
             F.expr(
-                "CAST((2 * CAST(SUM(is_test) AS DECIMAL(38,0)) * 1000000 + COUNT(*))"
-                " DIV (2 * COUNT(*)) AS BIGINT)"
+                "CAST("
+                + rhu("CAST(SUM(is_test) AS DECIMAL(38,0)) * 1000000", "COUNT(*)")
+                + " AS BIGINT)"
             ).alias("test_share_micro"),
         )
         .orderBy("source", "lang")
@@ -924,11 +933,13 @@ def q282(spark, sf_dir):
 # within buckets, top-k per vector via one rank window over the
 # within-bucket pair frame (WindowGroupLimit pushes k=5 down). Rounded
 # (4) sims + vec_b tiebreak make ranks engine-deterministic.
-_KNN_ORACLE = """
-WITH p AS (
+_KNN_ORACLE = f"""
+WITH vecs AS MATERIALIZED (
+    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
+), p AS (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
-    FROM embeddings a JOIN embeddings b
+           ROUND({cosine_duck('a.e', 'b.e')}, 4) AS sim
+    FROM vecs a JOIN vecs b
       ON a.label = b.label AND a.vec_id <> b.vec_id
 ), r AS (
     SELECT vec_a, vec_b, sim,
@@ -978,7 +989,7 @@ def q286(spark, sf_dir):
 # Sunday=1; DuckDB dayofweek: Sunday=0) — both sides use the
 # engine-neutral epoch-day mod 7 (1970-01-01 was a THURSDAY; 0=Thu).
 _SEASONAL_IDX_ORACLE = _DAILY_CTE + """
-, d AS (
+, d AS MATERIALIZED (
     SELECT CAST(EPOCH_MS(CAST(day AS TIMESTAMP)) // 86400000 % 7 AS INT) AS dow7,
            cents
     FROM daily
@@ -1021,9 +1032,10 @@ def q287(spark, sf_dir):
             "n_days",
             "sum_cents",
             F.expr(
-                "CAST((2 * CAST(sum_cents AS DECIMAL(38,0)) * n * 1000000"
-                " + CAST(n_days AS DECIMAL(38,0)) * s)"
-                " DIV (2 * CAST(n_days AS DECIMAL(38,0)) * s) AS BIGINT)"
+                "CAST(" + rhu(
+                    "CAST(sum_cents AS DECIMAL(38,0)) * n * 1000000",
+                    "CAST(n_days AS DECIMAL(38,0)) * s",
+                ) + " AS BIGINT)"
             ).alias("index_micro"),
         )
         .orderBy("dow7")
@@ -1057,11 +1069,9 @@ FROM c ORDER BY abs_ncusum DESC, day LIMIT 3
 """
 
 
-@register("q288_cusum_changepoint", oracle=_CUSUM_ORACLE)
-def q288(spark, sf_dir):
-    """Top-3 CUSUM changepoint candidates (oracle comment): exact
-    integer n-scaled CUSUM, one ordered window above the daily
-    aggregate, unique (|nC| DESC, day) tiebreak under the LIMIT."""
+def _cusum(spark, sf_dir):
+    """(day, nc, n): the n-scaled CUSUM n·C_t = n·prefix_t − t·S of daily
+    revenue over n days, in DECIMAL(38,0); q288 and q484 rank it."""
     daily = _daily_cents(spark, sf_dir)
     d38 = "decimal(38,0)"
     w = Window.orderBy("day")
@@ -1073,11 +1083,19 @@ def q288(spark, sf_dir):
     tot = daily.agg(
         F.count("*").cast(d38).alias("n"), F.sum("cents").cast(d38).alias("s")
     )
-    c = p.crossJoin(F.broadcast(tot)).select(
-        "day", (F.col("n") * F.col("pre") - F.col("t") * F.col("s")).alias("nc")
+    return p.crossJoin(F.broadcast(tot)).select(
+        "day", (F.col("n") * F.col("pre") - F.col("t") * F.col("s")).alias("nc"), "n"
     )
+
+
+@register("q288_cusum_changepoint", oracle=_CUSUM_ORACLE)
+def q288(spark, sf_dir):
+    """Top-3 CUSUM changepoint candidates (oracle comment): exact
+    integer n-scaled CUSUM, one ordered window above the daily
+    aggregate, unique (|nC| DESC, day) tiebreak under the LIMIT."""
     return (
-        c.select(
+        _cusum(spark, sf_dir)
+        .select(
             "day",
             F.col("nc").cast("bigint").alias("ncusum"),
             F.abs("nc").cast("bigint").alias("abs_ncusum"),
@@ -1218,9 +1236,7 @@ def q291(spark, sf_dir):
               F.col("l_partkey") == F.col("p_partkey"))
         .select(
             F.col("p_brand").alias("brand"),
-            (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            cents("l_extendedprice").alias("cents"),
             "l_quantity",
         )
         .groupBy("brand", "cents")
@@ -1255,7 +1271,7 @@ def q291(spark, sf_dir):
 # be negative -> +SHIFT·di keeps operands positive; di >= 1); the
 # median of those integers uses the q80/q209 floor-truncate recipe.
 _THEILSEN_ORACLE = _DAILY_CTE + """
-, idx AS (
+, idx AS MATERIALIZED (
     SELECT cents, ROW_NUMBER() OVER (ORDER BY day) AS i FROM daily
 ), p AS (
     SELECT CAST(b.cents - a.cents AS HUGEINT) AS dc,
@@ -1310,8 +1326,7 @@ def q292(spark, sf_dir):
     )
     s = p.select(
         F.expr(
-            "CAST((2000000 * dc + di - PMOD(2000000 * dc + di, 2 * di))"
-            " DIV (2 * di) AS BIGINT)"
+            f"CAST({floor_rhu('1000000 * dc', 'di')} AS BIGINT)"
         ).alias("slope_micro")
     )
     # exact floor-interpolated median WITHOUT `percentile` (which
@@ -1477,8 +1492,9 @@ def q293(spark, sf_dir):
             "term",
             "c_st",
             F.expr(
-                "CAST((2 * CAST(c_st AS DECIMAL(38,0)) * big_n * 1000000"
-                " + n_s * c_t) DIV (2 * n_s * c_t) AS BIGINT)"
+                "CAST("
+                + rhu("CAST(c_st AS DECIMAL(38,0)) * big_n * 1000000", "n_s * c_t")
+                + " AS BIGINT)"
             ).alias("lift_micro"),
         )
     )
@@ -1505,13 +1521,13 @@ def q293(spark, sf_dir):
 # r² in round-half-up micro units; magnitudes ~1e20 at sf0.1 →
 # DECIMAL(38)/HUGEINT.
 _ASSORT_ORACLE = _MINHASH_CTE + _BANDS_CTE + """
-, pairs AS (
+, pairs AS MATERIALIZED (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.doc_id < b.doc_id
-), und AS (
+), und AS MATERIALIZED (
     SELECT doc_a AS u, doc_b AS v FROM pairs
     UNION ALL SELECT doc_b, doc_a FROM pairs
-), deg AS (
+), deg AS MATERIALIZED (
     SELECT u AS node, CAST(COUNT(*) AS HUGEINT) AS d FROM und GROUP BY u
 ), ed AS (
     SELECT du.d AS x, dv.d AS y
@@ -1813,7 +1829,7 @@ def q297(spark, sf_dir):
 # Predict missing part-part edges from the co-purchase graph: for a
 # candidate pair (a,b) NOT already linked, RA(a,b) = Σ_{z∈N(a)∩N(b)}
 # 1/deg(z). The reciprocal is the round-half-up integer micro unit
-# (2e6+d) DIV (2d) — the metric is DEFINED on the integer grid so both
+# rhu(1e6, d) — the metric is DEFINED on the integer grid so both
 # engines agree exactly, no decimal-sum rule needed. Wedge enumeration
 # is the q229 triangle shape: intermediaries z are capped at deg ≤ 64
 # (part of the metric — super-hubs carry no signal and their |N(z)|²
@@ -1895,7 +1911,7 @@ def q298(spark, sf_dir):
     wz = (
         ns.where(F.size("nb") <= 64)
         .select(
-            F.expr("(2 * 1000000 + size(nb)) DIV (2 * size(nb))").alias("r"),
+            F.expr(rhu("1000000", "size(nb)")).alias("r"),
             F.posexplode("nb").alias("_i", "a"),
             "nb",
         )
@@ -2050,7 +2066,7 @@ def q301(spark, sf_dir):
     """Gini gain at 63 equi-width thresholds of order value vs
     finished status, exact integer arithmetic (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"].select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("pos"),
     )
     mm = o.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))
@@ -2090,12 +2106,12 @@ def q301(spark, sf_dir):
             F.col("n_l").cast("bigint").alias("n_l"),
             F.col("p_l").cast("bigint").alias("pos_l"),
             F.expr(
-                "(2 * (bigp * (n - bigp) * n_l * (n - n_l)"
-                "      - n * (p_l * (n_l - p_l) * (n - n_l)"
-                "             + (bigp - p_l) * ((n - n_l) - (bigp - p_l)) * n_l))"
-                " * 1000000"
-                " + n * n_l * (n - n_l))"
-                " DIV (2 * n * n_l * (n - n_l))"
+                rhu(
+                    "(bigp * (n - bigp) * n_l * (n - n_l) - n * (p_l * (n_l - p_l)"
+                    " * (n - n_l) + (bigp - p_l) * ((n - n_l) - (bigp - p_l)) * n_l))"
+                    " * 1000000",
+                    "n * n_l * (n - n_l)",
+                )
             )
             .cast("bigint")
             .alias("gain_micro"),
@@ -2166,12 +2182,12 @@ _RR_CASE = (
 )
 
 _MRR_ORACLE = f"""
-WITH q AS (
+WITH q AS MATERIALIZED (
     SELECT vec_id AS qid, label AS qlabel, embedding::DOUBLE[] AS qe
     FROM embeddings WHERE vec_id % 500 = 0
 ), s AS (
     SELECT q.qid, q.qlabel, e.vec_id, e.label,
-           ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qe), 4) AS sim
+           ROUND({cosine_duck('e.embedding::DOUBLE[]', 'q.qe')}, 4) AS sim
     FROM embeddings e JOIN q ON e.vec_id <> q.qid
 ), r AS (
     SELECT qid, qlabel, label,
@@ -2365,7 +2381,7 @@ _BOOT_ORACLE = _DAILY_CTE + """
     SELECT b, CAST((2 * SUM(cents) + n) // (2 * n) AS BIGINT) AS mean_cents
     FROM draw JOIN idx ON idx.rn = draw.pick, nn
     GROUP BY b, n
-), ranked AS (
+), ranked AS MATERIALIZED (
     SELECT mean_cents, ROW_NUMBER() OVER (ORDER BY mean_cents, b) AS r FROM rep
 )
 SELECT (SELECT CAST(n AS BIGINT) FROM nn) AS n_days,
@@ -2419,7 +2435,7 @@ def q306(spark, sf_dir):
         .crossJoin(F.broadcast(nn))
         .groupBy("b", "n")
         .agg(F.sum("cents").alias("s"))
-        .select("b", F.expr("(2 * s + n) DIV (2 * n)").cast("bigint").alias("mean_cents"))
+        .select("b", F.expr(rhu("s", "n")).cast("bigint").alias("mean_cents"))
     )
     ranked = rep.select(
         "mean_cents", F.row_number().over(Window.orderBy("mean_cents", "b")).alias("r")
@@ -2507,7 +2523,7 @@ def q307(spark, sf_dir):
         "label", F.posexplode("v").alias("dim0", "x")
     )
     cent = dims.groupBy("label", (F.col("dim0") + 1).alias("dim")).agg(
-        F.expr("(2 * CAST(SUM(x) AS BIGINT) + COUNT(*)) DIV (2 * COUNT(*))").alias("c")
+        F.expr(rhu("CAST(SUM(x) AS BIGINT)", "COUNT(*)")).alias("c")
     )
     carr = cent.groupBy(F.col("label").alias("clabel")).agg(
         F.transform(
@@ -2531,9 +2547,9 @@ def q307(spark, sf_dir):
     s = ab.select(
         "label",
         F.expr(
-            "CASE WHEN GREATEST(a2, b2) = 0 THEN 0"
-            " ELSE (2 * (b2 - a2 + GREATEST(a2, b2)) * 1000000 + GREATEST(a2, b2))"
-            "      DIV (2 * GREATEST(a2, b2)) - 1000000 END"
+            "CASE WHEN GREATEST(a2, b2) = 0 THEN 0 ELSE"
+            f" {rhu('(b2 - a2 + GREATEST(a2, b2)) * 1000000', 'GREATEST(a2, b2)')} -"
+            " 1000000 END"
         ).alias("s_micro"),
     )
     return (
@@ -2541,8 +2557,8 @@ def q307(spark, sf_dir):
         .agg(
             F.count("*").cast("bigint").alias("n_points"),
             F.expr(
-                "CAST((2 * (SUM(s_micro) + COUNT(*) * 1000000) + COUNT(*))"
-                " DIV (2 * COUNT(*)) - 1000000 AS BIGINT)"
+                f"CAST({rhu('(SUM(s_micro) + COUNT(*) * 1000000)', 'COUNT(*)')} -"
+                " 1000000 AS BIGINT)"
             ).alias("mean_sil_micro"),
         )
         .select(F.col("label").cast("int").alias("label"), "n_points", "mean_sil_micro")
@@ -2586,9 +2602,7 @@ def q309(spark, sf_dir):
     li = load_tables(spark, sf_dir)["lineitem"]
     g = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
         F.count("*").cast("bigint").alias("n_items"),
-        F.sum((F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_cents"),
+        F.sum(cents("l_extendedprice")).cast("bigint").alias("sum_cents"),
     )
     return g.orderBy("flag").transpose().orderBy("key")
 
@@ -3057,7 +3071,7 @@ def q315(spark, sf_dir):
         "event_id",
         "user_id",
         "event_type",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     pyds.register(spark)
     d = scratch_dir("q315_linerec_sink")
@@ -3218,14 +3232,16 @@ def q317(spark, sf_dir):
     return m.select(
         F.col("n").cast("bigint").alias("n_terms"),
         F.expr(
-            "CAST((2 * ((n * sxy - sx * sy) + 10 * (n * sxx - sx * sx)) * 1000000"
-            " + (n * sxx - sx * sx)) DIV (2 * (n * sxx - sx * sx))"
-            " - 10000000 AS BIGINT)"
+            "CAST(" + rhu(
+                "((n * sxy - sx * sy) + 10 * (n * sxx - sx * sx)) * 1000000",
+                "(n * sxx - sx * sx)",
+            ) + " - 10000000 AS BIGINT)"
         ).alias("slope_micro"),
         F.expr(
-            "CAST((2 * ((sy * sxx - sx * sxy) + 100 * (n * sxx - sx * sx)) * 1000000"
-            " + (n * sxx - sx * sx)) DIV (2 * (n * sxx - sx * sx))"
-            " - 100000000 AS BIGINT)"
+            "CAST(" + rhu(
+                "((sy * sxx - sx * sxy) + 100 * (n * sxx - sx * sx)) * 1000000",
+                "(n * sxx - sx * sx)",
+            ) + " - 100000000 AS BIGINT)"
         ).alias("intercept_micro"),
     )
 
@@ -3288,8 +3304,7 @@ def q318(spark, sf_dir):
             "term",
             F.col("s1").cast("bigint").alias("n_occurrences"),
             F.expr(
-                "CAST((2 * (n * s2 - s1 * s1) * 1000000 + n * s1)"
-                " DIV (2 * n * s1) AS BIGINT)"
+                f"CAST({rhu('(n * s2 - s1 * s1) * 1000000', 'n * s1')} AS BIGINT)"
             ).alias("vmr_micro"),
         )
     )
@@ -3359,9 +3374,7 @@ def q319(spark, sf_dir):
         F.col("l_shipdate").alias("valid_ts"),
         F.expr("l_shipdate").alias("_base"),
         (h % 30).cast("int").alias("_lag"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         "l_orderkey",
         "l_linenumber",
     )
@@ -3434,7 +3447,7 @@ def q320(spark, sf_dir):
         F.col("embedding").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    sim = F.round(V.dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 4)
+    sim = V.cosine_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
     pairs = (
         a.join(b, ["bkt"])
         .where(F.col("va") != F.col("vb"))
@@ -3507,12 +3520,9 @@ def q321(spark, sf_dir):
         "n_docs",
         "n_tokens",
         "vocab_size",
-        "CAST((2 * vocab_size * 1000000 + n_tokens) DIV (2 * n_tokens) AS BIGINT)"
-        " AS ttr_micro",
-        "CAST((2 * n_tokens * 1000000 + n_docs) DIV (2 * n_docs) AS BIGINT)"
-        " AS mean_len_micro",
-        "CAST((2 * n_en * 1000000 + n_docs) DIV (2 * n_docs) AS BIGINT)"
-        " AS en_share_micro",
+        f"CAST({rhu('vocab_size * 1000000', 'n_tokens')} AS BIGINT) AS ttr_micro",
+        f"CAST({rhu('n_tokens * 1000000', 'n_docs')} AS BIGINT) AS mean_len_micro",
+        f"CAST({rhu('n_en * 1000000', 'n_docs')} AS BIGINT) AS en_share_micro",
     )
 
 
@@ -3601,8 +3611,10 @@ def q322(spark, sf_dir):
         .selectExpr(
             "source",
             "n_terms",
-            "CAST((2 * (sl + CAST(n_s AS DECIMAL(38,0)) * 1000000) + n_s)"
-            " DIV (2 * CAST(n_s AS DECIMAL(38,0))) - 1000000 AS BIGINT) AS kl_micro",
+            "CAST(" + rhu(
+                "(sl + CAST(n_s AS DECIMAL(38,0)) * 1000000)",
+                "CAST(n_s AS DECIMAL(38,0))",
+            ) + " - 1000000 AS BIGINT) AS kl_micro",
         )
         .orderBy("source")
     )
@@ -3619,7 +3631,7 @@ def q322(spark, sf_dir):
 # micro share. This is the eval-side guarantee layer over the
 # forecasting family (q94, q157, q290, q308).
 _CONF_ORACLE = _DAILY_CTE + """
-, idx AS (
+, idx AS MATERIALIZED (
     SELECT day, cents, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM daily
 ), nn AS (
     SELECT COUNT(*) AS n FROM daily
@@ -3627,13 +3639,13 @@ _CONF_ORACLE = _DAILY_CTE + """
     SELECT a.rn, a.day, a.cents, b.cents AS yhat,
            ABS(a.cents - b.cents) AS resid
     FROM idx a JOIN idx b ON b.rn = a.rn - 7
-), split AS (
+), split AS MATERIALIZED (
     SELECT p.*, 7 + ((n - 7) * 7) // 10 AS cut FROM pred p, nn
-), calib AS (
+), calib AS MATERIALIZED (
     SELECT resid, ROW_NUMBER() OVER (ORDER BY resid, rn) AS rr,
            COUNT(*) OVER () AS m
     FROM split WHERE rn <= cut
-), qhat AS (
+), qhat AS MATERIALIZED (
     SELECT resid AS q FROM calib
     WHERE rr = LEAST(CAST(CEIL(0.9 * (m + 1)) AS BIGINT), m)
 )
@@ -3690,8 +3702,9 @@ def q323(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_test"),
             F.max("q").cast("bigint").alias("qhat_cents"),
             F.expr(
-                "CAST((2 * COUNT(CASE WHEN resid <= q THEN 1 END) * 1000000"
-                " + COUNT(*)) DIV (2 * COUNT(*)) AS BIGINT)"
+                "CAST("
+                + rhu("COUNT(CASE WHEN resid <= q THEN 1 END) * 1000000", "COUNT(*)")
+                + " AS BIGINT)"
             ).alias("coverage_micro"),
         )
     )
@@ -3739,9 +3752,7 @@ def _q324_parts(spark, sf_dir):
         F.col("p_type").alias("typ"),
         F.col("p_size").alias("sz"),
         F.expr("p_size DIV 5").alias("szb"),
-        (F.col("p_retailprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("p_retailprice").alias("cents"),
     )
 
 
@@ -4070,7 +4081,6 @@ def q325(spark, sf_dir):
     o, li = t["orders"], t["lineitem"]
     cut_lo = F.lit("1998-05-01 00:00:00").cast("timestamp_ntz")
     cut_hi = F.lit("1998-06-01 00:00:00").cast("timestamp_ntz")
-    cents = (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint")
 
     def view(orders_slice):
         return (
@@ -4078,7 +4088,7 @@ def q325(spark, sf_dir):
             .groupBy("o_orderpriority")
             .agg(
                 F.count("*").alias("n_items"),
-                F.sum(cents).alias("rev_cents"),
+                F.sum(cents("l_extendedprice")).alias("rev_cents"),
             )
         )
 
@@ -4162,8 +4172,8 @@ def q326(spark, sf_dir):
             "src_b",
             "sum_min",
             "CAST(na + nb - sum_min AS BIGINT) AS sum_max",
-            "CAST((2 * sum_min * 1000000 + (na + nb - sum_min))"
-            " DIV (2 * (na + nb - sum_min)) AS BIGINT) AS wjacc_micro",
+            f"CAST({rhu('sum_min * 1000000', '(na + nb - sum_min)')} AS BIGINT)"
+            " AS wjacc_micro",
         )
         .orderBy("src_a", "src_b")
     )
@@ -4283,9 +4293,7 @@ def q328(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     monthly = o.select(
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     d = scratch_dir("q328_monthly")
     # full load, static overwrite
@@ -4320,7 +4328,7 @@ def q328(spark, sf_dir):
 # round-half-up integer over exact cent residuals. All work sits
 # above the daily aggregate.
 _TSCV_ORACLE = _DAILY_CTE + """
-, idx AS (
+, idx AS MATERIALIZED (
     SELECT day, cents, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM daily
 ), nn AS (
     SELECT COUNT(*) AS n FROM daily
@@ -4374,7 +4382,7 @@ def q329(spark, sf_dir):
         .groupBy("f")
         .agg(
             F.count("*").cast("bigint").alias("n_valid"),
-            F.expr("CAST((2 * SUM(resid) + COUNT(*)) DIV (2 * COUNT(*)) AS BIGINT)").alias(
+            F.expr(f"CAST({rhu('SUM(resid)', 'COUNT(*)')} AS BIGINT)").alias(
                 "mae_cents"
             ),
         )
@@ -4453,7 +4461,6 @@ def q330(spark, sf_dir):
         F.count("*").cast("bigint").alias("n_users"),
         F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("hits"),
         F.expr(
-            "CAST((2 * SUM(COALESCE(hit, 0)) * 1000000 + COUNT(*))"
-            " DIV (2 * COUNT(*)) AS BIGINT)"
+            f"CAST({rhu('SUM(COALESCE(hit, 0)) * 1000000', 'COUNT(*)')} AS BIGINT)"
         ).alias("hitrate_micro"),
     )

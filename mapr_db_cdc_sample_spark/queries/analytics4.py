@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import cents, rhu
 from ..io import load_tables
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
@@ -88,8 +89,9 @@ def q331(spark, sf_dir):
             .cast("bigint")
             .alias("n_correct"),
             F.expr(
-                "CAST((2 * COUNT(CASE WHEN nxt = pred THEN 1 END) * 1000000"
-                " + COUNT(*)) DIV (2 * COUNT(*)) AS BIGINT)"
+                "CAST("
+                + rhu("COUNT(CASE WHEN nxt = pred THEN 1 END) * 1000000", "COUNT(*)")
+                + " AS BIGINT)"
             ).alias("acc_micro"),
         )
         .orderBy("from_state")
@@ -280,12 +282,11 @@ def q334(spark, sf_dir):
         "CAST(n AS INT) AS n",
         "CAST(c AS INT) AS c",
         "CAST(n_users AS BIGINT) AS n_users",
-        """CAST(CASE WHEN n - c < 5 THEN 1000000
-                ELSE (2 * ((n*(n-1)*(n-2)*(n-3)*(n-4))
-                           - ((n-c)*(n-c-1)*(n-c-2)*(n-c-3)*(n-c-4))) * 1000000
-                      + (n*(n-1)*(n-2)*(n-3)*(n-4)))
-                     DIV (2 * (n*(n-1)*(n-2)*(n-3)*(n-4)))
-           END AS BIGINT) AS pass5_micro""",
+        "CAST(CASE WHEN n - c < 5 THEN 1000000 ELSE " + rhu(
+            "((n*(n-1)*(n-2)*(n-3)*(n-4)) - ((n-c)*(n-c-1)*(n-c-2)*(n-c-3)*(n-c-4)))"
+            " * 1000000",
+            "(n*(n-1)*(n-2)*(n-3)*(n-4))",
+        ) + " END AS BIGINT) AS pass5_micro",
     ).orderBy("n", "c")
 
 
@@ -348,9 +349,7 @@ def q335(spark, sf_dir):
     (oracle comment)."""
     ev = load_tables(spark, sf_dir)["events"]
     peruser = ev.groupBy("user_id").agg(
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+        F.sum(cents("value")).cast("bigint").alias("cents")
     )
     d38 = "decimal(38,0)"
 
@@ -423,8 +422,7 @@ def q335(spark, sf_dir):
         .selectExpr(
             "n_users",
             "CAST(n_extreme AS BIGINT) AS n_extreme",
-            "CAST((2 * (n_extreme + 1) * 1000000 + 101) DIV (2 * 101) AS BIGINT)"
-            " AS p_micro",
+            f"CAST({rhu('(n_extreme + 1) * 1000000', '101')} AS BIGINT) AS p_micro",
         )
     )
 
@@ -472,9 +470,7 @@ def q336(spark, sf_dir):
                 F.struct(
                     "event_id",
                     "event_type",
-                    (F.col("value").cast("decimal(18,2)") * 100)
-                    .cast("bigint")
-                    .alias("cents"),
+                    cents("value").alias("cents"),
                 )
             )
         )
@@ -564,9 +560,7 @@ def q337(spark, sf_dir):
         F.col("l_partkey").alias("part"),
         (F.col("l_linenumber") % 2 == 0).alias("is_receipt"),
         F.col("l_quantity").cast("bigint").alias("qty"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         "l_shipdate",
         "l_orderkey",
         "l_linenumber",
@@ -684,9 +678,7 @@ def q338(spark, sf_dir):
     hourly = ev.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("h")
     ).agg(
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+        F.sum(cents("value")).cast("bigint").alias("cents")
     )
     # r12 rewrite (guide §2.4): the former shape exploded the full
     # hourly spine, LEFT-joined the observations back, then ran FOUR
@@ -733,11 +725,11 @@ def q338(spark, sf_dir):
         .selectExpr(
             "user_id",
             "CAST(eh AS BIGINT) AS epoch_hour",
-            """CAST(CASE WHEN eh = pt THEN pv * 1000000
-                    ELSE ((2 * ((pv * (nt - eh) + nv * (eh - pt)) * 1000000
-                                + (nt - pt) * 1000000000000)
-                           + (nt - pt)) DIV (2 * (nt - pt))) - 1000000000000
-               END AS BIGINT) AS cents_micro""",
+            "CAST(CASE WHEN eh = pt THEN pv * 1000000 ELSE (" + rhu(
+                "((pv * (nt - eh) + nv * (eh - pt)) * 1000000 + (nt - pt)"
+                " * 1000000000000)",
+                "(nt - pt)",
+            ) + ") - 1000000000000 END AS BIGINT) AS cents_micro",
         )
         .orderBy("user_id", "epoch_hour")
     )
@@ -1008,8 +1000,7 @@ def q342(spark, sf_dir):
         .selectExpr(
             "CAST(n_lines AS INT) AS n_lines",
             "CAST(n_orders AS BIGINT) AS n_orders",
-            "CAST((2 * n_orders * 1000000 + total) DIV (2 * total) AS BIGINT)"
-            " AS share_micro",
+            f"CAST({rhu('n_orders * 1000000', 'total')} AS BIGINT) AS share_micro",
         )
         .orderBy("n_lines")
     )
@@ -1082,8 +1073,9 @@ def q343(spark, sf_dir):
         .agg(
             F.count("*").cast("bigint").alias("n_vecs"),
             F.expr(
-                "CAST((2 * CAST(SUM(CAST(cos6 * 1000000 AS BIGINT)) AS BIGINT)"
-                " + COUNT(*)) DIV (2 * COUNT(*)) AS BIGINT)"
+                "CAST("
+                + rhu("CAST(SUM(CAST(cos6 * 1000000 AS BIGINT)) AS BIGINT)", "COUNT(*)")
+                + " AS BIGINT)"
             ).alias("mean_cos_micro"),
         )
         .select(F.col("label").cast("int").alias("label"), "n_vecs", "mean_cos_micro")
@@ -1101,9 +1093,9 @@ def q343(spark, sf_dir):
 # rational slope/intercept — pred(v) = rhu((num_a + num_b*v)/den) with
 # positive-shift (slope sign unknown) — then MAX |pos - pred|.
 _LEARNED_IDX_ORACLE = _DAILY_CTE + """
-, idx AS (
+, idx AS MATERIALIZED (
     SELECT cents, ROW_NUMBER() OVER (ORDER BY cents, day) AS pos FROM daily
-), m AS (
+), m AS MATERIALIZED (
     SELECT CAST(COUNT(*) AS HUGEINT) AS n,
            CAST(SUM(CAST(cents AS HUGEINT)) AS HUGEINT) AS sx,
            CAST(SUM(CAST(pos AS HUGEINT)) AS HUGEINT) AS sy,
@@ -1147,10 +1139,11 @@ def q344(spark, sf_dir):
     err = idx.crossJoin(F.broadcast(m)).selectExpr(
         "pos",
         "n",
-        """((2 * ((sy * sxx - sx * sxy) + (n * sxy - sx * sy) * CAST(cents AS DECIMAL(38,0))
-               + 1000000 * (n * sxx - sx * sx))
-          + (n * sxx - sx * sx))
-         DIV (2 * (n * sxx - sx * sx))) - 1000000 AS pred""",
+        "(" + rhu(
+            "((sy * sxx - sx * sxy) + (n * sxy - sx * sy) * CAST(cents"
+            " AS DECIMAL(38,0)) + 1000000 * (n * sxx - sx * sx))",
+            "(n * sxx - sx * sx)",
+        ) + ") - 1000000 AS pred",
     )
     return err.agg(
         F.max("n").cast("bigint").alias("n_keys"),
@@ -1158,8 +1151,8 @@ def q344(spark, sf_dir):
             "max_abs_err"
         ),
         F.expr(
-            "CAST((2 * SUM(ABS(CAST(pos AS DECIMAL(38,0)) - pred)) + MAX(n))"
-            " DIV (2 * MAX(n)) AS BIGINT)"
+            f"CAST({rhu('SUM(ABS(CAST(pos AS DECIMAL(38,0)) - pred))', 'MAX(n)')}"
+            " AS BIGINT)"
         ).alias("mean_abs_err"),
     ).select("n_keys", "max_abs_err", "mean_abs_err")
 
@@ -1180,7 +1173,7 @@ from .analytics3 import _NB_ORACLE as _NB_SQL  # noqa: E402
 _KAPPA_ORACLE = (
     "WITH nb AS (" + _NB_SQL + ")"
     + """
-, conf AS (
+, conf AS MATERIALIZED (
     SELECT true_lang, pred_lang, COUNT(*) AS c FROM nb GROUP BY 1, 2
 ), nn AS (
     SELECT CAST(SUM(c) AS HUGEINT) AS n FROM conf
@@ -1248,9 +1241,10 @@ def q345(spark, sf_dir):
         .selectExpr(
             "CAST(n AS BIGINT) AS n_docs",
             "CAST(sum_diag AS BIGINT) AS n_agree",
-            """CAST((2 * ((n * sum_diag - sum_rc) + (n * n - sum_rc)) * 1000000
-                 + (n * n - sum_rc)) DIV (2 * (n * n - sum_rc)) - 1000000
-                AS BIGINT) AS kappa_micro""",
+            "CAST(" + rhu(
+                "((n * sum_diag - sum_rc) + (n * n - sum_rc)) * 1000000",
+                "(n * n - sum_rc)",
+            ) + " - 1000000 AS BIGINT) AS kappa_micro",
         )
     )
 
@@ -1321,12 +1315,14 @@ def q346(spark, sf_dir):
         .selectExpr(
             "brand",
             "CAST(n AS BIGINT) AS n",
-            """CAST((2 * ((n * sxy - sx * sy) + 100 * (n * sxx - sx * sx)) * 1000000
-                 + (n * sxx - sx * sx)) DIV (2 * (n * sxx - sx * sx))
-                - 100000000 AS BIGINT) AS slope_micro""",
-            """CAST((2 * ((sy * sxx - sx * sxy) + 1000 * (n * sxx - sx * sx)) * 1000000
-                 + (n * sxx - sx * sx)) DIV (2 * (n * sxx - sx * sx))
-                - 1000000000 AS BIGINT) AS intercept_micro""",
+            "CAST(" + rhu(
+                "((n * sxy - sx * sy) + 100 * (n * sxx - sx * sx)) * 1000000",
+                "(n * sxx - sx * sx)",
+            ) + " - 100000000 AS BIGINT) AS slope_micro",
+            "CAST(" + rhu(
+                "((sy * sxx - sx * sxy) + 1000 * (n * sxx - sx * sx)) * 1000000",
+                "(n * sxx - sx * sx)",
+            ) + " - 1000000000 AS BIGINT) AS intercept_micro",
         )
         .orderBy("brand")
     )
@@ -1397,7 +1393,7 @@ def q348(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey",
         "o_orderdate",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     order = [F.col("o_orderdate"), F.col("o_orderkey")]
     pages = []
@@ -1483,8 +1479,7 @@ def q349(spark, sf_dir):
         "month",
         "n_rows",
         "n_runs",
-        "CAST((2 * n_rows * 1000000 + n_runs) DIV (2 * n_runs) AS BIGINT)"
-        " AS rows_per_run_micro",
+        f"CAST({rhu('n_rows * 1000000', 'n_runs')} AS BIGINT) AS rows_per_run_micro",
     ).orderBy("month")
 
 
@@ -1500,11 +1495,11 @@ _VAR_ORACLE = _DAILY_CTE + """
 , deltas AS (
     SELECT day, cents - LAG(cents) OVER (ORDER BY day) AS d
     FROM daily
-), dd AS (
+), dd AS MATERIALIZED (
     SELECT day, d, ROW_NUMBER() OVER (ORDER BY d, day) AS rr,
            COUNT(*) OVER () AS m
     FROM deltas WHERE d IS NOT NULL
-), var_row AS (
+), var_row AS MATERIALIZED (
     SELECT d AS var_cents, rr, m FROM dd
     WHERE rr = GREATEST(CAST(CEIL(0.05 * m) AS BIGINT), 1)
 ), tail AS (
@@ -1547,8 +1542,8 @@ def q350(spark, sf_dir):
     return tail.selectExpr(
         "n_deltas",
         "var_cents",
-        "CAST(((2 * (s + k * 1000000000000) + k) DIV (2 * k)) - 1000000000000"
-        " AS BIGINT) AS es_cents",
+        f"CAST(({rhu('(s + k * 1000000000000)', 'k')}) - 1000000000000 AS BIGINT)"
+        " AS es_cents",
     )
 
 
@@ -1667,9 +1662,10 @@ def q351(spark, sf_dir):
             "CAST(i AS INT) AS checkpoint",
             "tokens_cum",
             "vocab_cum",
-            """CAST((2 * ((n * sxy - sx * sy) + 10 * (n * sxx - sx * sx)) * 1000000
-                 + (n * sxx - sx * sx)) DIV (2 * (n * sxx - sx * sx))
-                - 10000000 AS BIGINT) AS beta_micro""",
+            "CAST(" + rhu(
+                "((n * sxy - sx * sy) + 10 * (n * sxx - sx * sx)) * 1000000",
+                "(n * sxx - sx * sx)",
+            ) + " - 10000000 AS BIGINT) AS beta_micro",
         )
         .orderBy("checkpoint")
     )
@@ -1710,7 +1706,7 @@ def q352(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     rows_ = o.select(
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         (
             F.conv(
                 F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
@@ -1729,8 +1725,8 @@ def q352(spark, sf_dir):
         "month",
         "exact_cents",
         "est_cents",
-        "CAST((2 * ABS(est_cents - exact_cents) * 1000000 + exact_cents)"
-        " DIV (2 * exact_cents) AS BIGINT) AS rel_err_micro",
+        f"CAST({rhu('ABS(est_cents - exact_cents) * 1000000', 'exact_cents')}"
+        " AS BIGINT) AS rel_err_micro",
     ).orderBy("month")
 
 
@@ -1816,9 +1812,7 @@ def q354(spark, sf_dir):
         )
         .groupBy("c_nationkey")
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
+            F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
         )
     )
     nat = (
@@ -1843,10 +1837,10 @@ def q354(spark, sf_dir):
             "region",
             "nation",
             "cents",
-            "CAST((2 * cents * 1000000 + region_cents)"
-            " DIV (2 * region_cents) AS BIGINT) AS share_of_region_micro",
-            "CAST((2 * region_cents * 1000000 + world_cents)"
-            " DIV (2 * world_cents) AS BIGINT) AS region_share_micro",
+            f"CAST({rhu('cents * 1000000', 'region_cents')} AS BIGINT)"
+            " AS share_of_region_micro",
+            f"CAST({rhu('region_cents * 1000000', 'world_cents')} AS BIGINT)"
+            " AS region_share_micro",
         )
         .orderBy("region", "nation")
     )
@@ -1982,11 +1976,10 @@ def q356(spark, sf_dir):
     """Incremental forget (view minus U's contributions) must equal
     the U-free recompute (oracle comment)."""
     ev = load_tables(spark, sf_dir)["events"]
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
 
     def view(df):
         return df.groupBy(F.col("ts").cast("date").alias("day")).agg(
-            F.count("*").alias("n_events"), F.sum(cents).alias("cents")
+            F.count("*").alias("n_events"), F.sum(cents("value")).alias("cents")
         )
 
     full = view(ev)
@@ -2058,8 +2051,8 @@ def q357(spark, sf_dir):
             "lang",
             "ws_tokens",
             "re_tokens",
-            "CAST((2 * re_tokens * 1000000 + ws_tokens) DIV (2 * ws_tokens)"
-            " AS BIGINT) AS fertility_micro",
+            f"CAST({rhu('re_tokens * 1000000', 'ws_tokens')} AS BIGINT)"
+            " AS fertility_micro",
         )
         .orderBy("lang")
     )
@@ -2131,8 +2124,8 @@ def q358(spark, sf_dir):
             "doc_id",
             "CAST(n_lines AS BIGINT) AS n_lines",
             "CAST(n_boiler AS BIGINT) AS n_boiler",
-            "CAST((2 * n_boiler * 1000000 + n_lines) DIV (2 * n_lines)"
-            " AS BIGINT) AS boiler_share_micro",
+            f"CAST({rhu('n_boiler * 1000000', 'n_lines')} AS BIGINT)"
+            " AS boiler_share_micro",
         )
         .orderBy("doc_id")
     )
@@ -2209,7 +2202,7 @@ def q359(spark, sf_dir):
         "channel",
         F.when(F.col("rf") == 1, 1000000).otherwise(0).alias("first_c"),
         F.when(F.col("rl") == 1, 1000000).otherwise(0).alias("last_c"),
-        F.expr("(2 * 1000000 + n) DIV (2 * n)").alias("linear_c"),
+        F.expr(rhu("1000000", "n")).alias("linear_c"),
     )
     return (
         credits.groupBy("channel")
@@ -2276,8 +2269,8 @@ def q360(spark, sf_dir):
         w.where(F.col("cnt7") == 7)
         .selectExpr(
             "day",
-            "CAST((2 * errs * 1000000 + n) DIV (2 * n) AS BIGINT) AS day_rate_micro",
-            "CAST((2 * errs7 * 1000000 + n7) DIV (2 * n7) AS BIGINT) AS rate7_micro",
+            f"CAST({rhu('errs * 1000000', 'n')} AS BIGINT) AS day_rate_micro",
+            f"CAST({rhu('errs7 * 1000000', 'n7')} AS BIGINT) AS rate7_micro",
             "CAST(CASE WHEN errs * 50 > n AND errs7 * 100 > n7 THEN 1 ELSE 0 END"
             " AS INT) AS breach",
         )
@@ -2334,8 +2327,8 @@ def q361(spark, sf_dir):
             "CAST(item AS INT) AS item",
             "CAST(n AS BIGINT) AS n_events",
             "CAST(k AS BIGINT) AS n_buys",
-            "CAST((2 * (k * big_n + 20 * big_k) * 1000000 + big_n * (n + 20))"
-            " DIV (2 * big_n * (n + 20)) AS BIGINT) AS smoothed_micro",
+            f"CAST({rhu('(k * big_n + 20 * big_k) * 1000000', 'big_n * (n + 20)')}"
+            " AS BIGINT) AS smoothed_micro",
         )
         .orderBy(F.col("smoothed_micro").desc(), "item")
         .limit(25)
@@ -2417,12 +2410,11 @@ def q363(spark, sf_dir):
         .orderBy("ts", "event_id")
         .rowsBetween(-2, 0)
     )
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     return (
         ev.select(
             "event_id",
             "user_id",
-            psum(cents).over(w).alias("trail3_cents"),
+            psum(cents("value")).over(w).alias("trail3_cents"),
         )
         .orderBy("user_id", "event_id")
     )
@@ -2555,9 +2547,7 @@ def q365(spark, sf_dir):
         F.col("l_partkey").alias("part"),
         (F.col("l_linenumber") % 2 == 0).alias("is_receipt"),
         F.col("l_quantity").cast("bigint").alias("qty"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         "l_shipdate",
         "l_orderkey",
         "l_linenumber",

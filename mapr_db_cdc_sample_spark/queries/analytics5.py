@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import cents, rhu
 from ..io import load_tables
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
@@ -36,7 +37,7 @@ from .analytics3 import _DAILY_CTE, _daily_cents
 # then the EARLIEST day attaining that peak value at or before the
 # trough.
 _DRAWDOWN_ORACLE = _DAILY_CTE + """
-, p AS (
+, p AS MATERIALIZED (
     SELECT day, cents AS cum,
            CAST(MAX(cents) OVER (ORDER BY day
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -152,7 +153,7 @@ def q368(spark, sf_dir):
     scored = ev.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("score"),
+        cents("value").alias("score"),
     )
     hist = scored.groupBy("score").agg(
         F.count("*").alias("n"), F.sum("label").alias("npos")
@@ -183,13 +184,13 @@ def q368(spark, sf_dir):
         )
     )
     a = pos.selectExpr(
-        "CAST((2 * cumpos * 1000000 + rnk) DIV (2 * rnk) AS BIGINT) AS prec_micro"
+        f"CAST({rhu('cumpos * 1000000', 'rnk')} AS BIGINT) AS prec_micro"
     )
     return a.agg(
         F.count("*").cast("bigint").alias("np"),
         F.sum("prec_micro").cast("bigint").alias("s"),
     ).selectExpr(
-        "np", "CAST((2 * s + np) DIV (2 * np) AS BIGINT) AS ap_micro"
+        "np", f"CAST({rhu('s', 'np')} AS BIGINT) AS ap_micro"
     )
 
 
@@ -235,7 +236,7 @@ def q369(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]
     scored = ev.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("score"),
+        cents("value").alias("score"),
     )
     hist = scored.groupBy("score").agg(
         F.count("*").alias("n"), F.sum("label").alias("npos")
@@ -256,8 +257,7 @@ def q369(spark, sf_dir):
             "tp",
             "predp - tp AS fp",
             "np - tp AS fn",
-            "CAST((2 * 2 * tp * 1000000 + (predp + np)) DIV (2 * (predp + np))"
-            " AS BIGINT) AS f1_micro",
+            f"CAST({rhu('2 * tp * 1000000', '(predp + np)')} AS BIGINT) AS f1_micro",
         )
         .orderBy(F.col("f1_micro").desc(), F.col("threshold_cents").desc())
         .limit(1)
@@ -382,8 +382,8 @@ def q370(spark, sf_dir):
         F.max("nq").cast(d38).alias("nq"),
     ).selectExpr(
         "n_cells",
-        "CAST((2 * (s1 + np * 1000000) + np) DIV (2 * np) - 1000000 AS BIGINT) AS h1",
-        "CAST((2 * (s2 + nq * 1000000) + nq) DIV (2 * nq) - 1000000 AS BIGINT) AS h2",
+        f"CAST({rhu('(s1 + np * 1000000)', 'np')} - 1000000 AS BIGINT) AS h1",
+        f"CAST({rhu('(s2 + nq * 1000000)', 'nq')} - 1000000 AS BIGINT) AS h2",
     )
     return halves.selectExpr(
         "n_cells",
@@ -433,9 +433,7 @@ def q371(spark, sf_dir):
     the calendar-bounded day frame (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     d = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("cents"),
         F.count("*").cast("bigint").alias("n_orders"),
     )
     a = d.select(
@@ -459,8 +457,8 @@ def q371(spark, sf_dir):
         "dd AS discordant",
         "t - c - dd AS tied",
         "t AS n_pairs",
-        "CAST((2 * ((c - dd) + t) * 1000000 + t) DIV (2 * t) - 1000000 AS BIGINT)"
-        " AS tau_micro",
+        "CAST(" + rhu("((c - dd) + t) * 1000000", "t")
+        + " - 1000000 AS BIGINT) AS tau_micro",
     )
 
 
@@ -539,7 +537,7 @@ def q372(spark, sf_dir):
     """Per-bin PSI terms of order totalprice, current (1998+) vs
     reference (<1998) decile bins (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
-    price = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
+    price = cents("o_totalprice")
     ref = o.where(F.col("o_orderdate") < F.lit("1998-01-01").cast("date")).select(
         price.alias("price")
     )
@@ -624,9 +622,11 @@ def q372(spark, sf_dir):
         "CAST(bin AS BIGINT) AS bin",
         "c_ref",
         "c_cur",
-        f"CAST((2 * GREATEST((c_cur * CAST(nr AS {d38}) - c_ref * CAST(nc AS {d38}))"
-        f" * l_micro, 0) + CAST(nr AS {d38}) * nc)"
-        f" DIV (2 * CAST(nr AS {d38}) * nc) AS BIGINT) AS psi_term_micro",
+        "CAST(" + rhu(
+            f"GREATEST((c_cur * CAST(nr AS {d38}) - c_ref * CAST(nc AS {d38}))"
+            " * l_micro, 0)",
+            f"CAST(nr AS {d38}) * nc",
+        ) + " AS BIGINT) AS psi_term_micro",
     ).orderBy("bin")
 
 
@@ -749,7 +749,7 @@ def q374(spark, sf_dir):
                 F.col("o_orderdate") < F.lit("1998-01-01").cast("date"), 0
             ).otherwise(1).alias("yr"),
             (
-                (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint")
+                cents("l_extendedprice")
                 * (
                     F.lit(10000)
                     - (F.col("l_discount").cast("decimal(18,4)") * 10000).cast("bigint")
@@ -774,8 +774,11 @@ def q374(spark, sf_dir):
     wide = a.join(b, F.col("brand") == F.col("brand_b")).drop("brand_b")
     shift = f"1000000000 * CAST(1000000 AS {d38})"
     vol = (
-        f"(2 * (CAST(r0 AS {d38}) * (q1 - q0) + 1000000000 * CAST(q0 AS {d38}))"
-        f" * 1000000 + q0) DIV (2 * CAST(q0 AS {d38})) - {shift}"
+        rhu(
+            f"(CAST(r0 AS {d38}) * (q1 - q0) + 1000000000 * CAST(q0 AS {d38}))"
+            " * 1000000",
+            f"CAST(q0 AS {d38})",
+        ) + f" - {shift}"
     )
     return wide.selectExpr(
         "brand",
@@ -985,7 +988,7 @@ def q376(spark, sf_dir):
         .selectExpr(
             "key",
             "cnt",
-            "CAST((2 * cnt * 1000000 + n) DIV (2 * n) AS BIGINT) AS share_micro",
+            f"CAST({rhu('cnt * 1000000', 'n')} AS BIGINT) AS share_micro",
         )
         .orderBy("key")
     )
@@ -1036,12 +1039,12 @@ def q377(spark, sf_dir):
     week-1/week-4 spend moments (oracle comment)."""
     ev = load_tables(spark, sf_dir)["events"]
     day = F.col("ts").cast("date")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
+    spend = cents("value")
     per_user = ev.groupBy("user_id").agg(
-        F.sum(F.when(day < F.lit("2024-01-08").cast("date"), cents).otherwise(0))
+        F.sum(F.when(day < F.lit("2024-01-08").cast("date"), spend).otherwise(0))
         .cast("bigint")
         .alias("x"),
-        F.sum(F.when(day >= F.lit("2024-01-24").cast("date"), cents).otherwise(0))
+        F.sum(F.when(day >= F.lit("2024-01-24").cast("date"), spend).otherwise(0))
         .cast("bigint")
         .alias("y"),
     )
@@ -1132,15 +1135,13 @@ def q378(spark, sf_dir):
         )
         .agg(
             F.count("*").cast("bigint").alias("n"),
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents"),
+            F.sum(cents("o_totalprice")).cast("bigint").alias("cents"),
         )
     )
     means = cells.selectExpr(
         "treated",
         "post",
-        "CAST((2 * cents * 1000000 + n) DIV (2 * n) AS BIGINT) AS mean_micro",
+        f"CAST({rhu('cents * 1000000', 'n')} AS BIGINT) AS mean_micro",
     )
     pick = lambda tr, po: F.max(  # noqa: E731
         F.when((F.col("treated") == tr) & (F.col("post") == po), F.col("mean_micro"))
@@ -1284,8 +1285,8 @@ def q380(spark, sf_dir):
             "node",
             "deg",
             "CAST(COALESCE(tri, 0) AS BIGINT) AS n_triangles",
-            "CAST((2 * 2 * COALESCE(tri, 0) * 1000000 + deg * (deg - 1))"
-            " DIV (2 * deg * (deg - 1)) AS BIGINT) AS cc_micro",
+            f"CAST({rhu('2 * COALESCE(tri, 0) * 1000000', 'deg * (deg - 1)')}"
+            " AS BIGINT) AS cc_micro",
         )
         .orderBy(F.col("cc_micro").desc(), "node")
         .limit(20)
@@ -1336,9 +1337,7 @@ def q381(spark, sf_dir):
     count on the day spine (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     d = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("x"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("x"),
         F.count("*").cast("bigint").alias("y"),
     )
     d38 = "decimal(38,0)"
@@ -1604,9 +1603,7 @@ def q385(spark, sf_dir):
     per = (
         ev.groupBy("event_type", "user_id")
         .agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
+            F.sum(cents("value")).cast("bigint").alias("cents")
         )
         .localCheckpoint(eager=False)
     )
@@ -1694,8 +1691,7 @@ def q385(spark, sf_dir):
         .selectExpr(
             "event_type",
             "n_extreme",
-            "CAST((2 * (n_extreme + 1) * 1000000 + 61) DIV (2 * 61) AS BIGINT)"
-            " AS p_micro",
+            f"CAST({rhu('(n_extreme + 1) * 1000000', '61')} AS BIGINT) AS p_micro",
             "CAST(i AS BIGINT) AS bh_rank",
             "CAST(CASE WHEN i <= imax THEN 1 ELSE 0 END AS BIGINT) AS rejected",
         )
@@ -1715,17 +1711,17 @@ def q385(spark, sf_dir):
 # micro-cent round-half-ups of the same rationals. One LAG window for
 # the moving range, aggregates above the day frame.
 _XMR_ORACLE = _DAILY_CTE + """
-, mr AS (
+, mr AS MATERIALIZED (
     SELECT day, cents,
            ABS(cents - LAG(cents) OVER (ORDER BY day)) AS mrange
     FROM daily
-), stats AS (
+), stats AS MATERIALIZED (
     SELECT CAST(COUNT(*) AS HUGEINT) AS n,
            CAST(SUM(cents) AS HUGEINT) AS sx,
            CAST(COUNT(mrange) AS HUGEINT) AS n_mr,
            CAST(SUM(mrange) AS HUGEINT) AS s_mr
     FROM mr
-), flags AS (
+), flags AS MATERIALIZED (
     SELECT m.day, m.cents,
            CASE WHEN ABS(s.n_mr * (s.n * m.cents - s.sx)) * 100
                      > 266 * s.n * s.s_mr THEN 1 ELSE 0 END AS ooc
@@ -1778,13 +1774,13 @@ def q386(spark, sf_dir):
     return counts.crossJoin(F.broadcast(stats)).selectExpr(
         "n_days",
         "n_out_of_control",
-        "CAST((2 * sx * 1000000 + n) DIV (2 * n) AS BIGINT) AS center_micro",
-        "CAST((2 * (sx * n_mr * 100 + 266 * n * s_mr) * 1000000"
-        " + n * n_mr * 100) DIV (2 * n * n_mr * 100) AS BIGINT) AS ucl_micro",
-        f"CAST((2 * (sx * n_mr * 100 - 266 * n * s_mr + n * n_mr * 100"
-        f" * 100000000) * 1000000 + n * n_mr * 100)"
-        f" DIV (2 * n * n_mr * 100)"
-        f" - 100000000 * CAST(1000000 AS {d38}) AS BIGINT) AS lcl_micro",
+        f"CAST({rhu('sx * 1000000', 'n')} AS BIGINT) AS center_micro",
+        f"CAST({rhu('(sx * n_mr * 100 + 266 * n * s_mr) * 1000000', 'n * n_mr * 100')}"
+        " AS BIGINT) AS ucl_micro",
+        "CAST(" + rhu(
+            "(sx * n_mr * 100 - 266 * n * s_mr + n * n_mr * 100 * 100000000) * 1000000",
+            "n * n_mr * 100",
+        ) + f" - 100000000 * CAST(1000000 AS {d38}) AS BIGINT) AS lcl_micro",
     )
 
 
@@ -1998,11 +1994,10 @@ def q388(spark, sf_dir):
             "groups_pos",
             "groups_neg",
             "groups_zero",
-            f"CAST((2 * ((n * sxy - sx * sy) * 1000000"
-            f" + 1000000000 * (n * sxx - sx * sx))"
-            f" + (n * sxx - sx * sx))"
-            f" DIV (2 * (n * sxx - sx * sx))"
-            f" - 1000000000 * CAST(1000000 AS {d38}) AS BIGINT)"
+            "CAST(" + rhu(
+                "((n * sxy - sx * sy) * 1000000 + 1000000000 * (n * sxx - sx * sx))",
+                "(n * sxx - sx * sx)",
+            ) + f" - 1000000000 * CAST(1000000 AS {d38}) AS BIGINT)"
             " AS pooled_slope_micro",
             "CAST(CASE WHEN (n * sxy - sx * sy > 0"
             " AND groups_pos = 0 AND groups_neg > 0)"
@@ -2100,7 +2095,7 @@ def q389(spark, sf_dir):
 # triple intersection — the agreement matrix monitoring pipelines use
 # to pick a rule.
 _OUTAGREE_ORACLE = _DAILY_CTE + """
-, nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM daily
+, nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM daily
 ), m AS (
     SELECT CAST(SUM(cents) AS HUGEINT) AS sx,
            SUM(CAST(cents AS HUGEINT) * cents) AS sxx
@@ -2113,7 +2108,7 @@ _OUTAGREE_ORACLE = _DAILY_CTE + """
            COALESCE(SUM(c) OVER (ORDER BY cents
                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
     FROM hist
-), qs AS (
+), qs AS MATERIALIZED (
     SELECT MAX(CASE WHEN tag = 1 THEN v END) AS q1,
            MAX(CASE WHEN tag = 2 THEN v END) AS med,
            MAX(CASE WHEN tag = 3 THEN v END) AS q3
@@ -2326,8 +2321,7 @@ def q391(spark, sf_dir):
         "n",
         "n_distinct",
         "top_value",
-        "CAST((2 * top_count * 1000000 + n) DIV (2 * n) AS BIGINT)"
-        " AS top1_share_micro",
+        f"CAST({rhu('top_count * 1000000', 'n')} AS BIGINT) AS top1_share_micro",
         "CAST(CASE WHEN 100 * top_count > 95 * n THEN 1 ELSE 0 END AS BIGINT)"
         " AS nzv_flag",
         "CAST(CASE WHEN 100 * n_distinct > 90 * n THEN 1 ELSE 0 END AS BIGINT)"
@@ -2389,7 +2383,7 @@ def q392(spark, sf_dir):
             "fit_128",
             "fit_512",
             "fit_2048",
-            "CAST((2 * fit_512 * 1000000 + n_docs) DIV (2 * n_docs) AS BIGINT)"
+            f"CAST({rhu('fit_512 * 1000000', 'n_docs')} AS BIGINT)"
             " AS fit_512_share_micro",
         )
         .orderBy("source")
@@ -2458,7 +2452,7 @@ def q393(spark, sf_dir):
         "min_l",
         "rows_k_lt_5",
         "groups_l_lt_2",
-        "CAST((2 * rows_k_lt_5 * 1000000 + n_rows) DIV (2 * n_rows) AS BIGINT)"
+        f"CAST({rhu('rows_k_lt_5 * 1000000', 'n_rows')} AS BIGINT)"
         " AS at_risk_share_micro",
     )
 
@@ -2573,16 +2567,14 @@ def q395(spark, sf_dir):
     relative MDE on mean order value (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     d38 = "decimal(38,0)"
-    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
-    m = o.select(cents.alias("x")).agg(
+    m = o.select(cents("o_totalprice").alias("x")).agg(
         F.count("*").cast(d38).alias("n"),
         F.sum("x").cast(d38).alias("sx"),
         F.sum(F.col("x").cast(d38) * F.col("x")).cast(d38).alias("sxx"),
     )
     r = m.where(F.col("sx") > 0).selectExpr(
         "n",
-        "(2 * (2500 * (n * sxx - sx * sx) * 1000000) + sx * sx)"
-        " DIV (2 * sx * sx) AS ratio_micro",
+        f"{rhu('(2500 * (n * sxx - sx * sx) * 1000000)', 'sx * sx')} AS ratio_micro",
     )
     return r.selectExpr(
         "CAST(n AS BIGINT) AS n_orders",
@@ -2779,16 +2771,13 @@ def q397(spark, sf_dir):
         "tp",
         "pred_n",
         "true_n",
-        "CAST(CASE WHEN pred_n > 0"
-        " THEN (2 * tp * 1000000 + pred_n) DIV (2 * pred_n) ELSE 0 END"
+        f"CAST(CASE WHEN pred_n > 0 THEN {rhu('tp * 1000000', 'pred_n')} ELSE 0 END"
         " AS BIGINT) AS precision_micro",
-        "CAST(CASE WHEN true_n > 0"
-        " THEN (2 * tp * 1000000 + true_n) DIV (2 * true_n) ELSE 0 END"
+        f"CAST(CASE WHEN true_n > 0 THEN {rhu('tp * 1000000', 'true_n')} ELSE 0 END"
         " AS BIGINT) AS recall_micro",
-        "CAST(CASE WHEN pred_n + true_n > 0"
-        " THEN (2 * 2 * tp * 1000000 + (pred_n + true_n))"
-        " DIV (2 * (pred_n + true_n)) ELSE 0 END"
-        " AS BIGINT) AS f1_micro",
+        "CAST(CASE WHEN pred_n + true_n > 0 THEN"
+        f" {rhu('2 * tp * 1000000', '(pred_n + true_n)')} ELSE 0 END AS BIGINT)"
+        " AS f1_micro",
     ).orderBy("lang")
 
 
@@ -3084,7 +3073,7 @@ def q401(spark, sf_dir):
 # Wilcoxon practice) and 2*E[W+] = n(n+1)/2 is published alongside for
 # the direction read.
 _WILCOXON_ORACLE = _DAILY_CTE + """
-, idx AS (
+, idx AS MATERIALIZED (
     SELECT (CAST(day AS DATE) - DATE '1970-01-01') // 7 AS wk,
            (CAST(day AS DATE) - DATE '1970-01-01') % 7 AS dow,
            cents
@@ -3201,8 +3190,7 @@ def q403(spark, sf_dir):
         "n_days",
         "sae_model",
         "sae_naive",
-        "CAST((2 * sae_model * 1000000 + sae_naive) DIV (2 * sae_naive)"
-        " AS BIGINT) AS mase_micro",
+        f"CAST({rhu('sae_model * 1000000', 'sae_naive')} AS BIGINT) AS mase_micro",
     )
 
 
@@ -3240,7 +3228,7 @@ def q404(spark, sf_dir):
             "n_docs",
             "n_chars",
             "n_bytes",
-            "CAST((2 * n_bytes * 1000000 + n_chars) DIV (2 * n_chars) AS BIGINT)"
+            f"CAST({rhu('n_bytes * 1000000', 'n_chars')} AS BIGINT)"
             " AS bytes_per_char_micro",
         )
         .orderBy("lang")
@@ -3330,13 +3318,11 @@ def q405(spark, sf_dir):
             "a",
             "bb AS b",
             "sab",
-            "CAST((2 * sab * 1000000 + s_a) DIV (2 * s_a) AS BIGINT)"
-            " AS confidence_micro",
-            "CAST((2 * n * sab * 1000000 + s_a * s_b)"
-            " DIV (2 * s_a * s_b) AS BIGINT) AS lift_micro",
-            "CAST((2 * ((n * sab - s_a * s_b) * 1000000"
-            " + 1000000 * n * n) + n * n)"
-            " DIV (2 * n * n) - 1000000 AS BIGINT) AS leverage_micro",
+            f"CAST({rhu('sab * 1000000', 's_a')} AS BIGINT) AS confidence_micro",
+            f"CAST({rhu('n * sab * 1000000', 's_a * s_b')} AS BIGINT) AS lift_micro",
+            "CAST("
+            + rhu("((n * sab - s_a * s_b) * 1000000 + 1000000 * n * n)", "n * n")
+            + " - 1000000 AS BIGINT) AS leverage_micro",
         )
         .orderBy(F.col("lift_micro").desc(), "a", "b")
         .limit(15)
@@ -3439,10 +3425,10 @@ def q406(spark, sf_dir):
     )
     wide = a.join(bb, F.col("part") == F.col("pb"))
     terms = wide.selectExpr(
-        "(2 * r1 * q0 * 1000000 + 10000 * q1) DIV (2 * 10000 * q1) AS t_p1q0",
-        "(2 * r0 * q1 * 1000000 + 10000 * q0) DIV (2 * 10000 * q0) AS t_p0q1",
-        "(2 * r0 * 1000000 + 10000) DIV (2 * 10000) AS t_p0q0",
-        "(2 * r1 * 1000000 + 10000) DIV (2 * 10000) AS t_p1q1",
+        f"{rhu('r1 * q0 * 1000000', '10000 * q1')} AS t_p1q0",
+        f"{rhu('r0 * q1 * 1000000', '10000 * q0')} AS t_p0q1",
+        f"{rhu('r0 * 1000000', '10000')} AS t_p0q0",
+        f"{rhu('r1 * 1000000', '10000')} AS t_p1q1",
     ).agg(
         F.sum("t_p1q0").cast(d38).alias("p1q0_micro"),
         F.sum("t_p0q1").cast(d38).alias("p0q1_micro"),
@@ -3452,10 +3438,9 @@ def q406(spark, sf_dir):
     )
     return terms.selectExpr(
         "n_parts",
-        "CAST((2 * p1q0_micro * 1000000 + p0q0_micro) DIV (2 * p0q0_micro)"
-        " AS BIGINT) AS laspeyres_micro",
-        "CAST((2 * p1q1_micro * 1000000 + p0q1_micro) DIV (2 * p0q1_micro)"
-        " AS BIGINT) AS paasche_micro",
+        f"CAST({rhu('p1q0_micro * 1000000', 'p0q0_micro')} AS BIGINT)"
+        " AS laspeyres_micro",
+        f"CAST({rhu('p1q1_micro * 1000000', 'p0q1_micro')} AS BIGINT) AS paasche_micro",
         "ROUND(SQRT((CAST(p1q0_micro AS DOUBLE) / CAST(p0q0_micro AS DOUBLE))"
         " * (CAST(p1q1_micro AS DOUBLE) / CAST(p0q1_micro AS DOUBLE))), 6)"
         " AS fisher",
@@ -3525,9 +3510,7 @@ def q407(spark, sf_dir):
             F.year("o_orderdate").cast("int").alias("yr"),
         )
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
+            F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
         )
         # pinned: spend feeds hist AND the seg projection — unpinned,
         # each re-runs the orders scan+aggregate (guide §2.4;
@@ -3668,8 +3651,8 @@ def q408(spark, sf_dir):
             "n_edges",
             "wedges",
             "CAST(3 * n_triangles AS BIGINT) AS closed_wedges",
-            "CAST((2 * 3 * n_triangles * 1000000 + wedges) DIV (2 * wedges)"
-            " AS BIGINT) AS transitivity_micro",
+            f"CAST({rhu('3 * n_triangles * 1000000', 'wedges')} AS BIGINT)"
+            " AS transitivity_micro",
         )
     )
 
@@ -3798,7 +3781,7 @@ def q410(spark, sf_dir):
     (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     packed = (
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint") * 100000000
+        cents("o_totalprice") * 100000000
         + F.col("o_orderkey")
     ).alias("packed")
     base = o.select(
@@ -3873,7 +3856,7 @@ def q411(spark, sf_dir):
         "bucket",
         "n",
         "k",
-        "CAST((2 * k * 1000000 + n) DIV (2 * n) AS BIGINT) AS rate_micro",
+        f"CAST({rhu('k * 1000000', 'n')} AS BIGINT) AS rate_micro",
         "ROUND((CAST(k AS DOUBLE) + 1.959964 * 1.959964 / 2"
         " - 1.959964 * SQRT((CAST(k AS DOUBLE) * (n - k)) / n"
         " + 1.959964 * 1.959964 / 4))"
@@ -3945,8 +3928,8 @@ def q412(spark, sf_dir):
         "n2",
         "m",
         "observed",
-        "CAST((2 * ((n1 + 1) * (n2 + 1) - (m + 1)) * 1000000 + (m + 1))"
-        " DIV (2 * (m + 1)) AS BIGINT) AS chapman_micro",
+        f"CAST({rhu('((n1 + 1) * (n2 + 1) - (m + 1)) * 1000000', '(m + 1)')} AS BIGINT)"
+        " AS chapman_micro",
     )
 
 
@@ -4002,8 +3985,8 @@ def q413(spark, sf_dir):
             "r",
             "n_r",
             "n_tokens",
-            "CAST((2 * n1 * 1000000 + n_tokens) DIV (2 * n_tokens) AS BIGINT)"
-            " AS gt_unseen_mass_micro",
+            "CAST(" + rhu("n1 * 1000000", "n_tokens")
+            + " AS BIGINT) AS gt_unseen_mass_micro",
         )
         .orderBy("r")
     )
@@ -4049,9 +4032,7 @@ def q414(spark, sf_dir):
         )
         .groupBy(F.col("s_nationkey").alias("nation"), F.col("l_suppkey").alias("supp"))
         .agg(
-            F.sum((F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("r")
+            F.sum(cents("l_extendedprice")).cast("bigint").alias("r")
         )
     )
     return (
@@ -4065,8 +4046,7 @@ def q414(spark, sf_dir):
             "CAST(nation AS BIGINT) AS nation",
             "n_suppliers",
             "CAST(sr AS BIGINT) AS market_cents",
-            "CAST((2 * sr2 * 1000000 + sr * sr) DIV (2 * sr * sr) AS BIGINT)"
-            " AS hhi_micro",
+            f"CAST({rhu('sr2 * 1000000', 'sr * sr')} AS BIGINT) AS hhi_micro",
         )
         .orderBy("nation")
     )
@@ -4232,7 +4212,7 @@ def q416(spark, sf_dir):
             "from_type",
             "to_type",
             "n",
-            "CAST((2 * sg + 1000 * n) DIV (2 * 1000 * n) AS BIGINT) AS mean_gap_ms",
+            f"CAST({rhu('sg', '1000 * n')} AS BIGINT) AS mean_gap_ms",
         )
         .orderBy(F.col("n").desc(), "from_type", "to_type")
         .limit(15)
@@ -4310,10 +4290,8 @@ def q417(spark, sf_dir):
         F.sum("y").cast("bigint").alias("ybar_num"),
     )
     terms = u.crossJoin(F.broadcast(tot)).selectExpr(
-        "(2 * (k - y * n) * (k - y * n) * 1000000 + n * n) DIV (2 * n * n)"
-        " AS bs_micro",
-        "(2 * (ybar_num - y * m) * (ybar_num - y * m) * 1000000 + m * m)"
-        " DIV (2 * m * m) AS ref_micro",
+        f"{rhu('(k - y * n) * (k - y * n) * 1000000', 'n * n')} AS bs_micro",
+        rhu("(ybar_num - y * m) * (ybar_num - y * m) * 1000000", "m * m") + " AS ref_micro",
         "m",
     )
     return terms.agg(
@@ -4323,10 +4301,10 @@ def q417(spark, sf_dir):
         F.count("*").cast("bigint").alias("c"),
     ).selectExpr(
         "n_users",
-        "CAST((2 * sb + c) DIV (2 * c) AS BIGINT) AS brier_micro",
-        "CAST((2 * sr + c) DIV (2 * c) AS BIGINT) AS brier_ref_micro",
-        "CAST((2 * ((sr - sb) * 1000000 + 1000000 * sr) + sr) DIV (2 * sr)"
-        " - 1000000 AS BIGINT) AS skill_micro",
+        f"CAST({rhu('sb', 'c')} AS BIGINT) AS brier_micro",
+        f"CAST({rhu('sr', 'c')} AS BIGINT) AS brier_ref_micro",
+        f"CAST({rhu('((sr - sb) * 1000000 + 1000000 * sr)', 'sr')} - 1000000 AS BIGINT)"
+        " AS skill_micro",
     )
 
 
@@ -4395,10 +4373,11 @@ def q418(spark, sf_dir):
             "chars",
             "words",
             "sentences",
-            "CAST((2 * ((471 * chars * 50 * sentences + 25 * words * 100 * words"
-            " - 2143 * 50 * words * sentences) * 10000)"
-            " + 100 * 50 * words * sentences)"
-            " DIV (2 * 100 * 50 * words * sentences) AS BIGINT) AS ari_micro",
+            "CAST(" + rhu(
+                "((471 * chars * 50 * sentences + 25 * words * 100 * words - 2143"
+                " * 50 * words * sentences) * 10000)",
+                "100 * 50 * words * sentences",
+            ) + " AS BIGINT) AS ari_micro",
         )
         .orderBy("source")
     )

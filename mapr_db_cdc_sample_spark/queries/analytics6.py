@@ -7,10 +7,10 @@ study, bigram-LM next-token accuracy, and Spark-4 API rungs
 (DataFrame.lateralJoin).
 
 Determinism rules follow queries/relational.py's module docstring:
-integer cents via DECIMAL(18,2)*100, round-half-up on POSITIVE integer
-operands as (2p + q) DIV (2q), unique ORDER BY tiebreakers under every
-LIMIT, and doubles only in textually-parallel final expressions over
-exact integer aggregates (the q207 discipline)."""
+integer cents and round-half-up come from functions/exact.py, unique
+ORDER BY tiebreakers under every LIMIT, and doubles only in
+textually-parallel final expressions over exact integer aggregates (the
+q207 discipline)."""
 
 from __future__ import annotations
 
@@ -18,6 +18,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..functions.exact import cents, rhu
 from ..io import load_tables
 from ..operators import banding as B
 from ..operators.quantiles import exact_ntile_counts
@@ -226,7 +227,7 @@ def q423(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         F.col("o_orderpriority").alias("grp"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     hist = v.groupBy("grp", "cents").agg(F.count("*").cast("bigint").alias("c"))
     ties = hist.groupBy("cents").agg(F.sum("c").cast("bigint").alias("n"))
@@ -260,9 +261,10 @@ def q423(spark, sf_dir):
         "n",
         "k",
         F.expr(
-            "CAST((24000000 * CAST(s4 AS DECIMAL(38,0)) + CAST(n AS DECIMAL(38,0)) * (n + 1))"
-            " DIV (2 * CAST(n AS DECIMAL(38,0)) * (n + 1))"
-            " - 3000000 * (n + 1) AS BIGINT)"
+            "CAST(" + rhu(
+                "12000000 * CAST(s4 AS DECIMAL(38,0))",
+                "CAST(n AS DECIMAL(38,0)) * (n + 1)",
+            ) + " - 3000000 * (n + 1) AS BIGINT)"
         ).alias("h_micro"),
     )
 
@@ -301,7 +303,7 @@ def q424(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]
     g = ev.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("grp"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     agg = g.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -448,11 +450,10 @@ def q426(spark, sf_dir):
             "part",
             "d",
             "qty_sum",
-            "CAST((2 * 1000000 * qty_sum + d) DIV (2 * d) AS BIGINT) AS size_micro",
-            "CAST((2 * 1000000 * gap + (d - 1)) DIV (2 * (d - 1)) AS BIGINT)"
-            " AS interval_micro",
-            "CAST((2 * 1000000 * qty_sum * (d - 1) + d * gap) DIV (2 * d * gap)"
-            " AS BIGINT) AS rate_micro",
+            f"CAST({rhu('1000000 * qty_sum', 'd')} AS BIGINT) AS size_micro",
+            f"CAST({rhu('1000000 * gap', '(d - 1)')} AS BIGINT) AS interval_micro",
+            f"CAST({rhu('1000000 * qty_sum * (d - 1)', 'd * gap')} AS BIGINT)"
+            " AS rate_micro",
         )
         .orderBy("part")
     )
@@ -503,10 +504,8 @@ def q427(spark, sf_dir):
         "n_tokens",
         "n_types",
         "n_hapax",
-        "CAST((2 * 1000000 * n_types + n_tokens) DIV (2 * n_tokens) AS BIGINT)"
-        " AS ttr_micro",
-        "CAST((2 * 1000000 * n_hapax + n_types) DIV (2 * n_types) AS BIGINT)"
-        " AS hapax_micro",
+        f"CAST({rhu('1000000 * n_types', 'n_tokens')} AS BIGINT) AS ttr_micro",
+        f"CAST({rhu('1000000 * n_hapax', 'n_types')} AS BIGINT) AS hapax_micro",
     ).orderBy("source")
 
 
@@ -549,9 +548,7 @@ def q428(spark, sf_dir):
     comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+        F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
     )
     a = daily.alias("a")
     f_ = daily.select(F.date_add("day", 7).alias("fday"), F.col("cents").alias("fc"))
@@ -564,15 +561,14 @@ def q428(spark, sf_dir):
         F.count("*").cast("bigint").alias("n_days"),
         F.sum("err").cast("bigint").alias("sum_err"),
         F.sum("actual").cast("bigint").alias("sum_act"),
-        F.sum(F.expr("(2 * 2000000 * err + (fc + actual)) DIV (2 * (fc + actual))"))
+        F.sum(F.expr(rhu("2000000 * err", "(fc + actual)")))
         .cast("bigint")
         .alias("smape_sum"),
     )
     return per.selectExpr(
         "n_days",
-        "CAST((2 * 1000000 * sum_err + sum_act) DIV (2 * sum_act) AS BIGINT)"
-        " AS wape_micro",
-        "CAST((2 * smape_sum + n_days) DIV (2 * n_days) AS BIGINT) AS smape_micro",
+        f"CAST({rhu('1000000 * sum_err', 'sum_act')} AS BIGINT) AS wape_micro",
+        f"CAST({rhu('smape_sum', 'n_days')} AS BIGINT) AS smape_micro",
     )
 
 
@@ -735,8 +731,7 @@ def q430(spark, sf_dir):
     return sums.selectExpr(
         "n_pairs",
         "n_correct",
-        "CAST((2 * 1000000 * n_correct + n_pairs) DIV (2 * n_pairs) AS BIGINT)"
-        " AS acc_micro",
+        f"CAST({rhu('1000000 * n_correct', 'n_pairs')} AS BIGINT) AS acc_micro",
     )
 
 
@@ -774,7 +769,7 @@ def _q431_fact(spark, sf_dir):
     path = scratch_dir("q431_events")
     ev.select(
         "event_type",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     ).write.mode("overwrite").partitionBy("event_type").parquet(path)
     return spark.read.parquet(path)
 
@@ -838,7 +833,7 @@ def q432(spark, sf_dir):
         c.where(F.col("c_nationkey") == F.col("nation").outer())
         .select(
             F.col("c_custkey").alias("custkey"),
-            (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+            cents("c_acctbal").alias("cents"),
         )
         .orderBy(F.col("cents").desc(), "custkey")
         .limit(2)
@@ -860,7 +855,7 @@ _SIMHIST_ORACLE = _MINHASH_CTE + _BANDS_CTE + """
 , cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.doc_id < b.doc_id
-), grams AS (
+), grams AS MATERIALIZED (
     SELECT doc_id, LIST_DISTINCT(hs) AS gs FROM hv
 ), bp AS (
     SELECT (2 * 10000 * LEN(LIST_INTERSECT(ga.gs, gb.gs))
@@ -892,9 +887,10 @@ def q433(spark, sf_dir):
         pairs.where(uni > 0)
         .select(
             F.expr(
-                "(2 * 10000 * size(array_intersect(ga, gb))"
-                " + (size(ga) + size(gb) - size(array_intersect(ga, gb))))"
-                " DIV (2 * (size(ga) + size(gb) - size(array_intersect(ga, gb))))"
+                rhu(
+                    "10000 * size(array_intersect(ga, gb))",
+                    "(size(ga) + size(gb) - size(array_intersect(ga, gb)))",
+                )
             ).alias("bp")
         )
     )
@@ -968,7 +964,7 @@ def q434(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]
     v = ev.select(
         F.col("event_type").alias("grp"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     hist = v.groupBy("grp", "c").agg(F.count("*").cast("bigint").alias("cnt"))
     wg = Window.partitionBy("grp").orderBy("c").rowsBetween(
@@ -1246,8 +1242,7 @@ def q436(spark, sf_dir):
         )
         .selectExpr(
             "doc_id", "n_pos", "n_dup",
-            "CAST((2 * 1000000 * n_dup + n_pos) DIV (2 * n_pos) AS BIGINT)"
-            " AS dup_micro",
+            f"CAST({rhu('1000000 * n_dup', 'n_pos')} AS BIGINT) AS dup_micro",
         )
         .orderBy("doc_id")
     )
@@ -1326,8 +1321,7 @@ def q437(spark, sf_dir):
         )
         .selectExpr(
             "pri", "yr", "n",
-            "CAST((2 * 1000000 * num + 2 * n * big) DIV (2 * 2 * n * big)"
-            " AS BIGINT) AS tvd_micro",
+            f"CAST({rhu('1000000 * num', '2 * n * big')} AS BIGINT) AS tvd_micro",
         )
         .orderBy("pri", "yr")
     )
@@ -1354,7 +1348,7 @@ _RBO_PW_SQL = ", ".join(
 )
 
 _RBO_ORACLE = f"""
-WITH pr AS (
+WITH pr AS MATERIALIZED (
     SELECT l_partkey AS p,
            CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT))
                 AS BIGINT) AS rev,
@@ -1392,7 +1386,7 @@ def q438(spark, sf_dir):
     li = load_tables(spark, sf_dir)["lineitem"]
     pr = li.groupBy(F.col("l_partkey").alias("p")).agg(
         F.sum(
-            (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint")
+            cents("l_extendedprice")
         )
         .cast("bigint")
         .alias("rev"),
@@ -1422,7 +1416,7 @@ def q438(spark, sf_dir):
     )
     t = ag.selectExpr(
         "d", "agree",
-        "CAST((2 * 100 * pwm * agree + d) DIV (2 * d) AS BIGINT) AS term_nano",
+        f"CAST({rhu('100 * pwm * agree', 'd')} AS BIGINT) AS term_nano",
     )
     wc = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     return t.select(
@@ -1740,7 +1734,7 @@ def q442(spark, sf_dir):
         )
         .where(F.col("n") > 0)
     )
-    conf = u.selectExpr("y", "(2 * 1000000 * k + n) DIV (2 * n) AS conf_mi")
+    conf = u.selectExpr("y", f"{rhu('1000000 * k', 'n')} AS conf_mi")
     bins = conf.groupBy(
         F.least(F.expr("conf_mi DIV 100000"), F.lit(9)).alias("bin")
     ).agg(
@@ -1759,7 +1753,7 @@ def q442(spark, sf_dir):
         .selectExpr(
             "CAST(bin AS BIGINT) AS bin", "n_b", "pos", "confsum",
             "CAST(ABS(1000000 * pos - confsum) AS BIGINT) AS term",
-            "CAST((2 * tsum + m) DIV (2 * m) AS BIGINT) AS ece_micro",
+            f"CAST({rhu('tsum', 'm')} AS BIGINT) AS ece_micro",
         )
         .orderBy("bin")
     )
@@ -1799,11 +1793,10 @@ def q443(spark, sf_dir):
     """Atkinson(0.5) inequality per priority from an exact quantized
     sqrt sum (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
-    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
     v = o.select(
         F.col("o_orderpriority").alias("grp"),
-        cents.alias("cents"),
-        F.round(F.sqrt(cents.cast("double")) * 1000000, 0)
+        cents("o_totalprice").alias("cents"),
+        F.round(F.sqrt(cents("o_totalprice").cast("double")) * 1000000, 0)
         .cast("bigint")
         .alias("sq_mi"),
     )
@@ -1814,10 +1807,10 @@ def q443(spark, sf_dir):
     )
     return ag.selectExpr(
         "grp", "n",
-        "CAST(1000000 - (2 * 1000000 * CAST(sq AS DECIMAL(38,0)) * sq"
-        " + CAST(1000000000000 AS DECIMAL(38,0)) * n * sx)"
-        " DIV (2 * (CAST(1000000000000 AS DECIMAL(38,0)) * n * sx))"
-        " AS BIGINT) AS atkinson_micro",
+        "CAST(1000000 - " + rhu(
+            "1000000 * CAST(sq AS DECIMAL(38,0)) * sq",
+            "(CAST(1000000000000 AS DECIMAL(38,0)) * n * sx)",
+        ) + " AS BIGINT) AS atkinson_micro",
     ).orderBy("grp")
 
 
@@ -1894,8 +1887,7 @@ def q444(spark, sf_dir):
     )
     return per.selectExpr(
         "doc_id", "n_grams", "n_novel",
-        "CAST((2 * 1000000 * n_novel + n_grams) DIV (2 * n_grams) AS BIGINT)"
-        " AS novel_micro",
+        f"CAST({rhu('1000000 * n_novel', 'n_grams')} AS BIGINT) AS novel_micro",
     ).orderBy("doc_id")
 
 
@@ -1952,7 +1944,7 @@ def q445(spark, sf_dir):
     scored = ev.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("score"),
+        cents("value").alias("score"),
     )
     t = exact_ntile_counts(scored, 10, descending=False).select(
         F.col("tile").alias("bin"), "n", "pos"
@@ -2185,8 +2177,7 @@ def q446(spark, sf_dir):
         .withColumn("n_moved", F.sum("mvc").over(wall).cast("bigint"))
         .selectExpr(
             "node", "n_before", "n_after", "n_keys", "n_moved",
-            "CAST((2 * 1000000 * n_moved + n_keys) DIV (2 * n_keys) AS BIGINT)"
-            " AS moved_micro",
+            f"CAST({rhu('1000000 * n_moved', 'n_keys')} AS BIGINT) AS moved_micro",
         )
         .orderBy("node")
     )
@@ -2234,9 +2225,7 @@ def q447(spark, sf_dir):
     refinement (oracle comment; oracle is the direct one-pass form)."""
     li = load_tables(spark, sf_dir)["lineitem"]
     v = li.select(
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c")
+        cents("l_extendedprice").alias("c")
     )
     vb = v.withColumn("b", F.expr("c DIV 100000"))
     bh = vb.groupBy("b").agg(F.count("*").cast("bigint").alias("bcnt"))
@@ -2327,11 +2316,11 @@ def q448(spark, sf_dir):
     )
     terms = acf.crossJoin(F.broadcast(nn)).selectExpr(
         "lag", "acf_micro",
-        "CAST((2 * CAST(n AS DECIMAL(38,0)) * (n + 2)"
-        " * CAST(acf_micro AS DECIMAL(38,0)) * acf_micro"
-        " + CAST(1000000 AS DECIMAL(38,0)) * (n - lag))"
-        " DIV (2 * CAST(1000000 AS DECIMAL(38,0)) * (n - lag)) AS BIGINT)"
-        " AS term_micro",
+        "CAST(" + rhu(
+            "CAST(n AS DECIMAL(38,0)) * (n + 2) * CAST(acf_micro AS DECIMAL(38,0))"
+            " * acf_micro",
+            "CAST(1000000 AS DECIMAL(38,0)) * (n - lag)",
+        ) + " AS BIGINT) AS term_micro",
     )
     w = Window.orderBy("lag").rowsBetween(Window.unboundedPreceding, 0)
     return terms.select(
@@ -2395,11 +2384,11 @@ def q449(spark, sf_dir):
     )
     return tot.selectExpr(
         "n", "r", "CAST(n * s_tr - r * s_tn AS BIGINT) AS num",
-        "CAST((2 * 1000000 * CAST(n AS DECIMAL(38,0)) * (n * s_tr - r * s_tn)"
-        " * (n * s_tr - r * s_tn)"
-        " + CAST(r AS DECIMAL(38,0)) * (n - r) * (n * s_ttn - s_tn * s_tn))"
-        " DIV (2 * (CAST(r AS DECIMAL(38,0)) * (n - r)"
-        " * (n * s_ttn - s_tn * s_tn))) AS BIGINT) AS z2_micro",
+        "CAST(" + rhu(
+            "1000000 * CAST(n AS DECIMAL(38,0)) * (n * s_tr - r * s_tn) * (n * s_tr"
+            " - r * s_tn)",
+            "(CAST(r AS DECIMAL(38,0)) * (n - r) * (n * s_ttn - s_tn * s_tn))",
+        ) + " AS BIGINT) AS z2_micro",
     )
 
 
@@ -2674,9 +2663,7 @@ def q452(spark, sf_dir):
         F.col("l_orderkey").alias("okey"),
         F.col("l_linenumber").alias("line"),
         F.col("l_quantity").cast("bigint").alias("x"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("y"),
+        cents("l_extendedprice").alias("y"),
     )
     m = v.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -2720,7 +2707,7 @@ def q452(spark, sf_dir):
 # z = (R - mu)/sigma is the q207 double discipline over exact
 # n1/n2/R integers.
 _RUNS_ORACLE = _DAILY_CTE + """
-, h AS (
+, h AS MATERIALIZED (
     SELECT cents, CAST(COUNT(*) AS BIGINT) AS cnt FROM daily GROUP BY cents
 ), cum AS (
     SELECT cents, cnt,
@@ -2888,7 +2875,7 @@ def q454(spark, sf_dir):
         )
         .otherwise(0)
         .alias("treat"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     # pinned: h feeds the cumulative window AND the group sizes; pick
     # below feeds both decile sides — unpinned, the orders scan+groupBy
@@ -2994,8 +2981,7 @@ def q455(spark, sf_dir):
     return bits.selectExpr(
         "tok", "df", "gamma_bits",
         "CAST(32 * df AS BIGINT) AS raw_bits",
-        "CAST((2 * 1000000 * gamma_bits + 32 * df) DIV (2 * 32 * df) AS BIGINT)"
-        " AS ratio_micro",
+        f"CAST({rhu('1000000 * gamma_bits', '32 * df')} AS BIGINT) AS ratio_micro",
     ).orderBy("tok")
 
 
@@ -3013,9 +2999,9 @@ def q455(spark, sf_dir):
 _HW_ORACLE = _DAILY_CTE + """
 , idx AS MATERIALIZED (
     SELECT day, cents, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM daily
-), w7 AS (
+), w7 AS MATERIALIZED (
     SELECT rn, cents FROM idx WHERE rn <= 7
-), l0 AS (
+), l0 AS MATERIALIZED (
     SELECT CAST((2 * SUM(cents) * 1000000 + 7) // 14 AS BIGINT) AS l FROM w7
 ), s0 AS (
     SELECT LIST(cents * 1000000 - l0.l ORDER BY rn) AS s FROM w7, l0
@@ -3138,7 +3124,7 @@ WITH fp AS (
     SELECT mask, CAST(COUNT(*) AS BIGINT) AS cnt FROM tch GROUP BY mask
 ), subs AS (
     SELECT UNNEST(GENERATE_SERIES(0, 7)) AS s
-), v AS (
+), v AS MATERIALIZED (
     SELECT subs.s, CAST(COALESCE(SUM(cm.cnt), 0) AS BIGINT) AS v
     FROM subs LEFT JOIN cm ON (cm.mask & subs.s) = cm.mask GROUP BY subs.s
 ), w AS (
@@ -3349,9 +3335,7 @@ def q459(spark, sf_dir):
         li.select(
             F.date_format("l_shipdate", "yyyy-MM").alias("mon"),
             F.col("l_partkey").alias("part"),
-            (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            cents("l_extendedprice").alias("cents"),
         )
         .groupBy("mon", "part")
         .agg(F.sum("cents").cast("bigint").alias("rev"))
@@ -3448,22 +3432,21 @@ def q460(spark, sf_dir):
         .cast("bigint")
         .alias("area")
     )
+    span = "CAST(w1 - w0 AS DECIMAL(38,0))"
     return (
         win.crossJoin(F.broadcast(integ))
         .selectExpr(
             "n AS n_users", "area AS area_us", "sum_dur AS sum_dur_us",
-            "CAST((2 * 1000000 * CAST(area AS DECIMAL(38,0)) + (w1 - w0))"
-            " DIV (2 * CAST(w1 - w0 AS DECIMAL(38,0))) AS BIGINT) AS l_sweep_micro",
-            "CAST((2 * 1000000 * CAST(sum_dur AS DECIMAL(38,0)) + (w1 - w0))"
-            " DIV (2 * CAST(w1 - w0 AS DECIMAL(38,0))) AS BIGINT) AS l_lw_micro",
-            "CAST((2 * 1000000 * CAST(n AS DECIMAL(38,0)) * 86400000000"
-            " + (w1 - w0))"
-            " DIV (2 * CAST(w1 - w0 AS DECIMAL(38,0))) AS BIGINT)"
-            " AS lambda_day_micro",
-            "CAST((2 * 1000000 * CAST(sum_dur AS DECIMAL(38,0))"
-            " + CAST(n AS DECIMAL(38,0)) * 86400000000)"
-            " DIV (2 * CAST(n AS DECIMAL(38,0)) * 86400000000) AS BIGINT)"
-            " AS w_days_micro",
+            f"CAST({rhu('1000000 * CAST(area AS DECIMAL(38,0))', span)} AS BIGINT)"
+            " AS l_sweep_micro",
+            f"CAST({rhu('1000000 * CAST(sum_dur AS DECIMAL(38,0))', span)} AS BIGINT)"
+            " AS l_lw_micro",
+            f"CAST({rhu('1000000 * CAST(n AS DECIMAL(38,0)) * 86400000000', span)}"
+            " AS BIGINT) AS lambda_day_micro",
+            "CAST(" + rhu(
+                "1000000 * CAST(sum_dur AS DECIMAL(38,0))",
+                "CAST(n AS DECIMAL(38,0)) * 86400000000",
+            ) + " AS BIGINT) AS w_days_micro",
         )
     )
 
@@ -3586,7 +3569,7 @@ def q461(spark, sf_dir):
             .agg(
                 (
                     F.sum(
-                        F.expr("(2 * 85 * p * w + 100 * dw) DIV (2 * 100 * dw)")
+                        F.expr(rhu("85 * p * w", "100 * dw"))
                     )
                     + F.max(F.when(F.col("v") == F.col("s"), 150000).otherwise(0))
                 )
@@ -3655,9 +3638,7 @@ def q462(spark, sf_dir):
     h = (
         o.select(
             F.col("o_orderdate").alias("day"),
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("c"),
+            cents("o_totalprice").alias("c"),
         )
         .groupBy("day", "c")
         .agg(F.count("*").cast("bigint").alias("cnt"))
@@ -3753,9 +3734,7 @@ def q463(spark, sf_dir):
         .select(
             "m0",
             (mi - F.col("m0")).alias("age"),
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .where(F.col("age") <= 5)
         .groupBy("m0", "age")
@@ -3829,7 +3808,7 @@ def q464(spark, sf_dir):
     (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("c")
+        cents("o_totalprice").alias("c")
     )
     h = v.groupBy("c").agg(F.count("*").cast("bigint").alias("cnt"))
     wcum = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, -1)
@@ -3861,11 +3840,11 @@ def q464(spark, sf_dir):
         )
     )
     w = qr.crossJoin(F.broadcast(nn)).selectExpr(
-        "CAST((2 * 2 * (q3 - q1) * 1000000"
-        " + CAST(ROUND(POWER(CAST(n AS DOUBLE), CAST(1 AS DOUBLE) / CAST(3 AS DOUBLE)) * 1000000, 0)"
-        " AS BIGINT))"
-        " DIV (2 * CAST(ROUND(POWER(CAST(n AS DOUBLE), CAST(1 AS DOUBLE) / CAST(3 AS DOUBLE)) * 1000000, 0)"
-        " AS BIGINT)) AS BIGINT) AS width"
+        "CAST(" + rhu(
+            "2 * (q3 - q1) * 1000000",
+            "CAST(ROUND(POWER(CAST(n AS DOUBLE), CAST(1 AS DOUBLE) / CAST(3"
+            " AS DOUBLE)) * 1000000, 0) AS BIGINT)",
+        ) + " AS BIGINT) AS width"
     )
     return (
         v.crossJoin(F.broadcast(nn))
@@ -3913,7 +3892,7 @@ def q465(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     o = t["orders"].select(
         "o_custkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     c = t["customer"].select("c_custkey", "c_mktsegment")
 
@@ -4004,7 +3983,7 @@ def q466(spark, sf_dir):
         )
     )
     scored = train.selectExpr(
-        "ctx", "arm", "(2 * 1000000 * conv + n) DIV (2 * n) AS ctr_mi"
+        "ctx", "arm", f"{rhu('1000000 * conv', 'n')} AS ctr_mi"
     )
     wr = Window.partitionBy("ctx").orderBy(F.desc("ctr_mi"), "arm")
     policy = (
@@ -4031,8 +4010,7 @@ def q466(spark, sf_dir):
         policy.join(ev_m, "ctx")
         .selectExpr(
             "CAST(ctx AS BIGINT) AS ctx", "best_arm", "train_ctr_mi", "n_matched",
-            "CAST((2 * 1000000 * r + n_matched) DIV (2 * n_matched) AS BIGINT)"
-            " AS replay_reward_micro",
+            f"CAST({rhu('1000000 * r', 'n_matched')} AS BIGINT) AS replay_reward_micro",
         )
         .orderBy("ctx")
     )
@@ -4115,10 +4093,10 @@ def q467(spark, sf_dir):
     ).cast("double")
     return c.select(
         "n1", "n2", "n3",
-        F.expr("CAST((2 * 1000000 * n2 + n1) DIV (2 * n1) AS BIGINT)").alias(
+        F.expr(f"CAST({rhu('1000000 * n2', 'n1')} AS BIGINT)").alias(
             "r12_micro"
         ),
-        F.expr("CAST((2 * 1000000 * n3 + n2) DIV (2 * n2) AS BIGINT)").alias(
+        F.expr(f"CAST({rhu('1000000 * n3', 'n2')} AS BIGINT)").alias(
             "r23_micro"
         ),
         F.when(
@@ -4203,7 +4181,7 @@ def q469(spark, sf_dir):
     w = Window.orderBy("day").rowsBetween(-2, 2)
 
     def ma(col):
-        return F.expr(f"(2 * swin_{col} + cwin_{col}) DIV (2 * cwin_{col})")
+        return F.expr(f"{rhu(f'swin_{col}', f'cwin_{col}')}")
 
     p1 = daily.select(
         "day", "cents",
@@ -4265,7 +4243,7 @@ def q470(spark, sf_dir):
     li = load_tables(spark, sf_dir)["lineitem"]
     v = li.select(
         F.col("l_partkey").alias("e"),
-        (F.col("l_discount").cast("decimal(18,2)") * 100).cast("bigint").alias("x"),
+        cents("l_discount").alias("x"),
         F.col("l_quantity").cast("bigint").alias("y"),
     )
     per = v.groupBy("e").agg(
@@ -4286,8 +4264,8 @@ def q470(spark, sf_dir):
     )
     return tot.selectExpr(
         "n_entities", "sum_a", "sum_b",
-        "CAST(((2 * (1000000 * sum_a + 1000000000 * sum_b)) + sum_b)"
-        " DIV (2 * sum_b) - 1000000000 AS BIGINT) AS slope_micro",
+        f"CAST({rhu('(1000000 * sum_a + 1000000000 * sum_b)', 'sum_b')}"
+        " - 1000000000 AS BIGINT) AS slope_micro",
     )
 
 
@@ -4339,7 +4317,7 @@ def q471(spark, sf_dir):
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
     ).select(
         F.when(F.col("o_orderpriority") == "1-URGENT", "a").otherwise("b").alias("g"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     h = v.groupBy("c").agg(
         F.count(F.when(F.col("g") == "a", 1)).cast("bigint").alias("ca"),
@@ -4373,8 +4351,8 @@ def q471(spark, sf_dir):
     )
     return terms.crossJoin(F.broadcast(nn)).selectExpr(
         "na", "nb",
-        "CAST((2 * 1000000 * s + CAST(na AS DECIMAL(38,0)) * nb)"
-        " DIV (2 * CAST(na AS DECIMAL(38,0)) * nb) AS BIGINT) AS w1_cents_micro",
+        f"CAST({rhu('1000000 * s', 'CAST(na AS DECIMAL(38,0)) * nb')} AS BIGINT)"
+        " AS w1_cents_micro",
     )
 
 
@@ -4515,7 +4493,7 @@ def q473(spark, sf_dir):
         ag.join(med, "grp")
         .selectExpr(
             "grp", "n",
-            "CAST((2 * 1000000 * s + n) DIV (2 * n) AS BIGINT) AS mean_micro",
+            f"CAST({rhu('1000000 * s', 'n')} AS BIGINT) AS mean_micro",
             "m2",
         )
         .orderBy("grp")
@@ -4576,7 +4554,7 @@ def q474(spark, sf_dir):
     v = o.select(
         F.col("o_orderpriority").alias("a"),
         F.year("o_orderdate").cast("bigint").alias("b"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     # pinned: the cell moments feed both marginal ssq passes AND the
     # total aggregate — unpinned, the orders scan+aggregate runs three
@@ -4711,11 +4689,10 @@ def q475(spark, sf_dir):
         .selectExpr(
             "label", "n",
             "CAST(cent2 - self2 AS BIGINT) AS num",
-            "CAST(((2 * (1000000 * (cent2 - self2)"
-            " + 1000000000000 * (n * (n - 1))))"
-            " + n * (n - 1))"
-            " DIV (2 * n * (n - 1)) - 1000000000000 AS BIGINT)"
-            " AS mean_dot_micro",
+            "CAST(" + rhu(
+                "(1000000 * (cent2 - self2) + 1000000000000 * (n * (n - 1)))",
+                "n * (n - 1)",
+            ) + " - 1000000000000 AS BIGINT) AS mean_dot_micro",
         )
         .orderBy("label")
     )
@@ -4792,8 +4769,7 @@ def q476(spark, sf_dir):
     )
     return bf.crossJoin(F.broadcast(wg)).selectExpr(
         "butterflies", "sup_pairs", "wedges",
-        "CAST((2 * 1000000 * butterflies + wedges) DIV (2 * wedges) AS BIGINT)"
-        " AS per_wedge_micro",
+        f"CAST({rhu('1000000 * butterflies', 'wedges')} AS BIGINT) AS per_wedge_micro",
     )
 
 

@@ -4,11 +4,10 @@ test), measurement reliability (Cronbach's alpha), forensic digit audits
 and bounded-graph centrality (multi-source BFS closeness, modularity).
 
 Determinism rules follow queries/relational.py's module docstring:
-integer cents via DECIMAL(18,2)*100, round-half-up on POSITIVE integer
-operands as (2p + q) DIV (2q) (signed values get a positive shift
-first), unique ORDER BY tiebreakers under every LIMIT, and doubles only
-in textually-parallel final expressions over exact integer aggregates
-(the q207 discipline). Big products cast FACTORS to DECIMAL(38,0)
+integer cents and round-half-up come from functions/exact.py, unique
+ORDER BY tiebreakers under every LIMIT, and doubles only in
+textually-parallel final expressions over exact integer aggregates (the
+q207 discipline). Big products cast FACTORS to DECIMAL(38,0)
 (Spark) / HUGEINT (DuckDB) before multiplying."""
 
 from __future__ import annotations
@@ -18,11 +17,12 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import cents, cosine_duck, rhu
 from ..io import load_tables
 from . import register
 from ..operators import banding as B
 from .analytics import _CC_ORACLE
-from .analytics3 import _DAILY_CTE, _daily_cents
+from .analytics3 import _DAILY_CTE, _cusum, _daily_cents
 
 # ---------- q480: Welch's unequal-variance t-test (click vs purchase)
 
@@ -98,7 +98,7 @@ def q480(spark, sf_dir):
     e = load_tables(spark, sf_dir)["events"]
     v = e.filter(F.col("event_type").isin("click", "purchase")).select(
         F.col("event_type").alias("g"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     m = v.agg(
         F.sum(F.when(F.col("g") == "click", 1).otherwise(0)).cast("bigint").alias("n1"),
@@ -207,9 +207,7 @@ def q481(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         F.col("o_orderpriority").alias("grp"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     hist = v.groupBy("c").agg(F.count("*").cast("bigint").alias("cnt"))
     cum = hist.select(
@@ -251,7 +249,7 @@ def q481(spark, sf_dir):
             "nj",
             "aj",
             F.expr(
-                "CAST((2 * 1000000 * nj * a + n) DIV (2 * n) AS BIGINT)"
+                f"CAST({rhu('1000000 * nj * a', 'n')} AS BIGINT)"
             ).alias("expect_micro"),
             F.expr(
                 f"ROUND((CAST(aj AS DOUBLE) - {above})"
@@ -351,8 +349,9 @@ def q482(spark, sf_dir):
         F.expr("CAST(vt AS BIGINT)").alias("var_total_n2"),
         F.expr("CAST(pv AS BIGINT)").alias("sum_item_var_n2"),
         F.expr(
-            "CAST((2 * (1000000 * 4 * (vt - pv) + 1000000000 * (3 * vt))"
-            " + 3 * vt) DIV (2 * (3 * vt)) - 1000000000 AS BIGINT)"
+            "CAST("
+            + rhu("(1000000 * 4 * (vt - pv) + 1000000000 * (3 * vt))", "(3 * vt)")
+            + " - 1000000000 AS BIGINT)"
         ).alias("alpha_micro"),
     )
 
@@ -374,7 +373,7 @@ WITH v AS (
                                AS BIGINT) AS VARCHAR), 1) AS BIGINT) AS d
     FROM orders
     WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) > 0
-), obs AS (
+), obs AS MATERIALIZED (
     SELECT d, CAST(COUNT(*) AS BIGINT) AS c FROM v GROUP BY d
 ), n AS (
     SELECT CAST(SUM(c) AS BIGINT) AS n FROM obs
@@ -400,9 +399,8 @@ def q483(spark, sf_dir):
     The 9-row expectation table broadcasts; the scan aggregates into at
     most 9 groups map-side — no shuffle grows with volume."""
     o = load_tables(spark, sf_dir)["orders"]
-    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
     obs = (
-        o.select(cents.alias("c"))
+        o.select(cents("o_totalprice").alias("c"))
         .filter(F.col("c") > 0)
         .select(F.substring(F.col("c").cast("string"), 1, 1).cast("bigint").alias("d"))
         .groupBy("d")
@@ -434,11 +432,11 @@ def q483(spark, sf_dir):
 # Page's cumulative-sum scan for a level shift: S_k = sum_{i<=k}
 # (n*x_i - T) in SUM-SCALED integers (multiplying by n clears the mean
 # without division — S_k = n * sum_scaled deviation, exact). The
-# changepoint is argmax |S_k| with the EARLIEST day as tiebreaker. The
-# only window runs over the calendar-bounded daily frame (the q206
-# rule: volume collapses in a map-side day aggregate first).
+# changepoint is argmax |S_k| with the EARLIEST day as tiebreaker.
+# S_k = n*prefix_k - k*T is q288's n-scaled CUSUM, so the Spark side
+# ranks q288's DECIMAL(38,0) frame; the oracle keeps its own running sum.
 _CUSUM_ORACLE = _DAILY_CTE + """
-, tot AS (
+, tot AS MATERIALIZED (
     SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS t
     FROM daily
 ), s AS (
@@ -457,31 +455,15 @@ FROM s ORDER BY ABS(sk) DESC, day ASC LIMIT 1
 
 @register("q484_cusum_changepoint", oracle=_CUSUM_ORACLE)
 def q484(spark, sf_dir):
-    """CUSUM argmax |S_k| in sum-scaled exact integers (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
-    tot = daily.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("cents").cast("bigint").alias("t"),
-    )
-    s = (
-        daily.crossJoin(F.broadcast(tot))
-        .select(
-            "day",
-            "n",
-            F.sum(F.col("cents") * F.col("n") - F.col("t"))
-            .over(Window.orderBy("day"))
-            .alias("sk"),
-        )
-    )
+    """CUSUM argmax |S_k| (oracle comment): S_k is q288's n-scaled
+    CUSUM n·prefix_k − k·T, so this is the top row of its frame."""
+    nc = F.col("nc")
     return (
-        s.select(
+        _cusum(spark, sf_dir)
+        .select(
             F.col("day").alias("cp_day"),
-            F.abs(F.col("sk")).cast("bigint").alias("s_abs"),
-            F.when(F.col("sk") > 0, 1)
-            .when(F.col("sk") < 0, -1)
-            .otherwise(0)
-            .cast("int")
-            .alias("s_sign"),
+            F.abs(nc).cast("bigint").alias("s_abs"),
+            F.signum(nc).cast("int").alias("s_sign"),
             F.col("n").cast("bigint").alias("n_days"),
         )
         .orderBy(F.col("s_abs").desc(), F.col("cp_day").asc())
@@ -504,7 +486,7 @@ def q484(spark, sf_dir):
 _EWMA_ORACLE = _DAILY_CTE + """
 , idx AS MATERIALIZED (
     SELECT day, cents, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM daily
-), rec AS (
+), rec AS MATERIALIZED (
     WITH RECURSIVE r(rn, l, d) AS (
         SELECT 1, (SELECT cents FROM idx WHERE rn = 1) * 1000000,
                CAST(NULL AS BIGINT)
@@ -830,16 +812,16 @@ def q487(spark, sf_dir):
             "vol",
             F.expr("CAST(vol - win2 AS BIGINT)").alias("cut"),
             F.expr(
-                f"CAST((2 * (1000000 * (CAST(w2 AS {d38}) * win2"
-                f" - CAST(vol AS {d38}) * vol)"
-                f" + 1000000000 * (CAST(w2 AS {d38}) * w2))"
-                f" + CAST(w2 AS {d38}) * w2)"
-                f" DIV (2 * CAST(w2 AS {d38}) * w2) - 1000000000 AS BIGINT)"
+                "CAST(" + rhu(
+                    f"(1000000 * (CAST(w2 AS {d38}) * win2 - CAST(vol AS {d38}) * vol)"
+                    f" + 1000000000 * (CAST(w2 AS {d38}) * w2))",
+                    f"CAST(w2 AS {d38}) * w2",
+                ) + " - 1000000000 AS BIGINT)"
             ).alias("q_contrib_micro"),
             F.expr(
-                f"CAST((2 * 1000000 * CAST(vol - win2 AS {d38})"
-                f" + LEAST(vol, w2 - vol))"
-                f" DIV (2 * LEAST(vol, w2 - vol)) AS BIGINT)"
+                "CAST("
+                + rhu(f"1000000 * CAST(vol - win2 AS {d38})", "LEAST(vol, w2 - vol)")
+                + " AS BIGINT)"
             ).alias("conductance_micro"),
         )
         .orderBy("region")
@@ -917,7 +899,7 @@ def q488(spark, sf_dir):
         "n_lines",
         "n_boiler",
         F.expr(
-            "CAST((2 * 1000000 * n_boiler + n_lines) DIV (2 * n_lines) AS BIGINT)"
+            f"CAST({rhu('1000000 * n_boiler', 'n_lines')} AS BIGINT)"
         ).alias("boiler_micro"),
     ).orderBy("source")
 
@@ -1078,7 +1060,7 @@ def q490(spark, sf_dir):
             "k",
             "covered",
             F.expr(
-                "CAST((2 * 1000000 * covered + n) DIV (2 * n) AS BIGINT)"
+                f"CAST({rhu('1000000 * covered', 'n')} AS BIGINT)"
             ).alias("cover_micro"),
         )
         .orderBy("k")
@@ -1140,10 +1122,10 @@ def q491(spark, sf_dir):
         "n_toks",
         "n_chars",
         F.expr(
-            "CAST((2 * 1000000 * n_toks + n_docs) DIV (2 * n_docs) AS BIGINT)"
+            f"CAST({rhu('1000000 * n_toks', 'n_docs')} AS BIGINT)"
         ).alias("toks_per_doc_micro"),
         F.expr(
-            "CAST((2 * 1000000 * n_chars + n_toks) DIV (2 * n_toks) AS BIGINT)"
+            f"CAST({rhu('1000000 * n_chars', 'n_toks')} AS BIGINT)"
         ).alias("chars_per_tok_micro"),
     ).orderBy("lang")
 
@@ -1157,12 +1139,13 @@ def q491(spark, sf_dir):
 # label-blocked quadratic (anti-join on label), never a free cross
 # join; at fleet scale the anchor side buckets through an ANN index
 # first (q52's IVF), this query IS the exact-oracle baseline for it.
-_HARDNEG_ORACLE = """
-WITH pairs AS (
+_HARDNEG_ORACLE = f"""
+WITH vecs AS MATERIALIZED (
+    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
+), pairs AS (
     SELECT a.vec_id AS anchor, b.vec_id AS neg,
-           ROUND(list_cosine_similarity(a.embedding::DOUBLE[],
-                                        b.embedding::DOUBLE[]), 4) AS sim
-    FROM embeddings a JOIN embeddings b ON a.label <> b.label
+           ROUND({cosine_duck('a.e', 'b.e')}, 4) AS sim
+    FROM vecs a JOIN vecs b ON a.label <> b.label
 ), best AS (
     SELECT anchor, neg, sim,
            ROW_NUMBER() OVER (PARTITION BY anchor
@@ -1252,8 +1235,8 @@ def q493(spark, sf_dir):
             "mn",
             "mx",
             F.expr(
-                "ABS(v - (mn + (2 * ((2 * 255 * (v - mn) + (mx - mn))"
-                " DIV (2 * (mx - mn))) * (mx - mn) + 255) DIV 510))"
+                f"ABS(v - (mn + (2 * ({rhu('255 * (v - mn)', '(mx - mn)')}) * (mx - mn)"
+                " + 255) DIV 510))"
             ).alias("e"),
         )
     )
@@ -1268,7 +1251,7 @@ def q493(spark, sf_dir):
         "mx",
         "max_err",
         F.expr(
-            "CAST((2 * 1000000 * sum_err + n) DIV (2 * n) AS BIGINT)"
+            f"CAST({rhu('1000000 * sum_err', 'n')} AS BIGINT)"
         ).alias("mean_err_micro"),
     ).orderBy("dim")
 
@@ -1332,7 +1315,7 @@ def q494(spark, sf_dir):
     )
     ratio = per.select(
         "source",
-        F.expr("CAST((2 * 1000000 * d4 + n4) DIV (2 * n4) AS BIGINT)").alias(
+        F.expr(f"CAST({rhu('1000000 * d4', 'n4')} AS BIGINT)").alias(
             "r_micro"
         ),
     )
@@ -1344,7 +1327,7 @@ def q494(spark, sf_dir):
             .cast("bigint")
             .alias("n_flagged"),
             F.expr(
-                "CAST((2 * SUM(r_micro) + COUNT(*)) DIV (2 * COUNT(*)) AS BIGINT)"
+                f"CAST({rhu('SUM(r_micro)', 'COUNT(*)')} AS BIGINT)"
             ).alias("mean_ratio_micro"),
         )
         .orderBy("source")
@@ -1359,7 +1342,7 @@ def q494(spark, sf_dir):
 # ONE textually-parallel double expression over the same exact integer
 # moments, rounded to 6 (the house transcendental discipline).
 _AR1_ORACLE = _DAILY_CTE + """
-, idx AS (
+, idx AS MATERIALIZED (
     SELECT cents, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM daily
 ), pr AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS m,
@@ -1481,7 +1464,7 @@ def q496(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "click",
-                (F.col("value").cast("decimal(18,2)") * 100).cast("bigint"),
+                cents("value"),
             ).otherwise(0)
         )
         .cast("bigint")
@@ -1516,12 +1499,11 @@ def q496(spark, sf_dir):
             "n_u",
             "n_conv",
             F.expr(
-                "CAST((2 * 1000000 * n_conv * n + n_u * c)"
-                " DIV (2 * n_u * c) AS BIGINT)"
+                f"CAST({rhu('1000000 * n_conv * n', 'n_u * c')} AS BIGINT)"
             ).alias("lift_micro"),
             F.expr(
-                "CAST((2 * 1000000 * SUM(n_conv)"
-                " OVER (ORDER BY decile) + c) DIV (2 * c) AS BIGINT)"
+                f"CAST({rhu('1000000 * SUM(n_conv) OVER (ORDER BY decile)', 'c')}"
+                " AS BIGINT)"
             ).alias("cum_gain_micro"),
         )
         .orderBy("decile")
@@ -1676,8 +1658,8 @@ def q498(spark, sf_dir):
         F.expr("CAST(f2 AS BIGINT)").alias("f2_exact"),
         F.expr("CAST(m AS BIGINT)").alias("f2_sketch"),
         F.expr(
-            "CAST((2 * (1000000 * (m - f2) + 1000000000 * f2) + f2)"
-            " DIV (2 * f2) - 1000000000 AS BIGINT)"
+            f"CAST({rhu('(1000000 * (m - f2) + 1000000000 * f2)', 'f2')} - 1000000000"
+            " AS BIGINT)"
         ).alias("rel_err_micro"),
     )
 
@@ -1839,7 +1821,7 @@ def q500(spark, sf_dir):
         "n_checked",
         "n_viol",
         F.expr(
-            "CAST((2 * 1000000 * n_viol + n_checked) DIV (2 * n_checked) AS BIGINT)"
+            f"CAST({rhu('1000000 * n_viol', 'n_checked')} AS BIGINT)"
         ).alias("viol_micro"),
     ).orderBy("rule")
 
@@ -1940,7 +1922,7 @@ _HURST_ORACLE = _DAILY_CTE + """
                 AS BIGINT) AS rs_micro
     FROM blocks
     WHERE n = m AND CAST(m AS HUGEINT) * q > CAST(s AS HUGEINT) * s
-), per AS (
+), per AS MATERIALIZED (
     SELECT m, CAST(COUNT(*) AS BIGINT) AS n_blocks,
            CAST((2 * SUM(rs_micro) + COUNT(*)) // (2 * COUNT(*)) AS BIGINT)
                AS mean_rs_micro
@@ -2026,7 +2008,7 @@ def q502(spark, sf_dir):
     per = rs.groupBy("m").agg(
         F.count("*").cast("bigint").alias("n_blocks"),
         F.expr(
-            "CAST((2 * SUM(rs_micro) + COUNT(*)) DIV (2 * COUNT(*)) AS BIGINT)"
+            f"CAST({rhu('SUM(rs_micro)', 'COUNT(*)')} AS BIGINT)"
         ).alias("mean_rs_micro"),
     )
     pv = per.agg(
@@ -2137,8 +2119,7 @@ def q503(spark, sf_dir):
         "c",
         F.expr(
             "CAST(CASE WHEN b + c > 0 THEN"
-            " (2 * 1000000 * (b - c) * (b - c) + (b + c)) DIV (2 * (b + c))"
-            " ELSE 0 END AS BIGINT)"
+            f" {rhu('1000000 * (b - c) * (b - c)', '(b + c)')} ELSE 0 END AS BIGINT)"
         ).alias("chi2_micro"),
     )
 
@@ -2156,9 +2137,9 @@ _FRIEDMAN_ORACLE = _DAILY_CTE + """
     SELECT CAST(EPOCH_MS(CAST(day AS TIMESTAMP)) // 86400000 AS BIGINT) AS ed,
            cents
     FROM daily
-), wk AS (
+), wk AS MATERIALIZED (
     SELECT ed // 7 AS week, CAST(ed % 7 AS INT) AS dow7, cents FROM d
-), full_weeks AS (
+), full_weeks AS MATERIALIZED (
     SELECT week FROM wk GROUP BY week HAVING COUNT(*) = 7
 ), ranked AS (
     SELECT w.week, w.dow7,
@@ -2228,15 +2209,18 @@ def q504(spark, sf_dir):
             F.col("m").alias("n_weeks"),
             F.expr("CAST(sr2 AS BIGINT)").alias("sum_r2"),
             F.expr(
-                f"CAST((2 * (1000000 * (12 * sr2 - 3 * CAST(m AS {d38}) * m * 7 * 64)"
-                " + 1000000000 * (m * 56))"
-                " + m * 56) DIV (2 * m * 56) - 1000000000 AS BIGINT)"
+                "CAST(" + rhu(
+                    f"(1000000 * (12 * sr2 - 3 * CAST(m AS {d38}) * m * 7 * 64)"
+                    " + 1000000000 * (m * 56))",
+                    "m * 56",
+                ) + " - 1000000000 AS BIGINT)"
             ).alias("friedman_micro"),
             F.expr(
-                f"CAST((2 * (1000000 * (12 * sr2 - 3 * CAST(m AS {d38}) * m * 7 * 64)"
-                f" + 1000000000 * (CAST(m AS {d38}) * m * 336))"
-                f" + CAST(m AS {d38}) * m * 336)"
-                f" DIV (2 * CAST(m AS {d38}) * m * 336) - 1000000000 AS BIGINT)"
+                "CAST(" + rhu(
+                    f"(1000000 * (12 * sr2 - 3 * CAST(m AS {d38}) * m * 7 * 64)"
+                    f" + 1000000000 * (CAST(m AS {d38}) * m * 336))",
+                    f"CAST(m AS {d38}) * m * 336",
+                ) + " - 1000000000 AS BIGINT)"
             ).alias("kendall_w_micro"),
         )
     )
@@ -2300,12 +2284,12 @@ def q505(spark, sf_dir):
         "n_users",
         F.col("nn").alias("n_successes"),
         F.expr(
-            "CAST(CASE WHEN 4 * nn - sr2 > 0 THEN"
-            f" (2 * (1000000 * 3 * (4 * (CAST(c1 AS {d38}) * c1"
-            f" + CAST(c2 AS {d38}) * c2 + CAST(c3 AS {d38}) * c3"
-            f" + CAST(c4 AS {d38}) * c4) - CAST(nn AS {d38}) * nn))"
-            " + (4 * nn - sr2)) DIV (2 * (4 * nn - sr2))"
-            " ELSE 0 END AS BIGINT)"
+            "CAST(CASE WHEN 4 * nn - sr2 > 0 THEN " + rhu(
+                f"(1000000 * 3 * (4 * (CAST(c1 AS {d38}) * c1 + CAST(c2 AS {d38}) * c2"
+                f" + CAST(c3 AS {d38}) * c3 + CAST(c4 AS {d38}) * c4) - CAST(nn"
+                f" AS {d38}) * nn))",
+                "(4 * nn - sr2)",
+            ) + " ELSE 0 END AS BIGINT)"
         ).alias("q_micro"),
     )
 
@@ -2439,7 +2423,7 @@ def q507(spark, sf_dir):
     e = load_tables(spark, sf_dir)["events"]
     v = e.filter(F.col("event_type").isin("click", "purchase")).select(
         F.col("event_type").alias("g"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     hist = v.groupBy("g", "c").agg(F.count("*").cast("bigint").alias("cnt"))
     ties = hist.groupBy("c").agg(F.sum("cnt").cast("bigint").alias("n"))
@@ -2475,11 +2459,11 @@ def q507(spark, sf_dir):
             "u1_x2"
         ),
         F.expr(
-            f"CAST((2 * (1000000 * (2 * CAST(n1 AS {d38}) * n2"
-            f" - (sr2 - CAST(n1 AS {d38}) * (n1 + 1)))"
-            f" + 1000000000 * (2 * CAST(n1 AS {d38}) * n2))"
-            f" + 2 * CAST(n1 AS {d38}) * n2)"
-            f" DIV (2 * (2 * CAST(n1 AS {d38}) * n2)) - 1000000000 AS BIGINT)"
+            "CAST(" + rhu(
+                f"(1000000 * (2 * CAST(n1 AS {d38}) * n2 - (sr2 - CAST(n1 AS {d38})"
+                f" * (n1 + 1))) + 1000000000 * (2 * CAST(n1 AS {d38}) * n2))",
+                f"(2 * CAST(n1 AS {d38}) * n2)",
+            ) + " - 1000000000 AS BIGINT)"
         ).alias("rank_biserial_micro"),
     )
 
@@ -2625,8 +2609,7 @@ def q509(spark, sf_dir):
         F.col("d").cast("int").alias("dim"),
         "n",
         F.expr(
-            "CAST((2 * 1000000 * num + n * (mx - mn)) DIV (2 * n * (mx - mn))"
-            " AS BIGINT)"
+            f"CAST({rhu('1000000 * num', 'n * (mx - mn)')} AS BIGINT)"
         ).alias("ks_micro"),
     ).orderBy("dim")
 
@@ -2701,7 +2684,6 @@ FROM un ORDER BY feature
 def q510(spark, sf_dir):
     """Point-biserial r per candidate feature (oracle comment)."""
     e = load_tables(spark, sf_dir)["events"]
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     peru = e.groupBy("user_id").agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
         .cast("bigint")
@@ -2712,7 +2694,7 @@ def q510(spark, sf_dir):
         F.sum(F.when(F.col("event_type") == "signup", 1).otherwise(0))
         .cast("bigint")
         .alias("f3"),
-        F.sum(cents).cast("bigint").alias("f4"),
+        F.sum(cents("value")).cast("bigint").alias("f4"),
         F.count("*").cast("bigint").alias("f5"),
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
         .cast("bigint")
@@ -2836,12 +2818,11 @@ def q511(spark, sf_dir):
             "n_users",
             "n_conv",
             F.expr(
-                "CAST((2 * 1000000 * n_conv + n_users) DIV (2 * n_users)"
-                " AS BIGINT)"
+                f"CAST({rhu('1000000 * n_conv', 'n_users')} AS BIGINT)"
             ).alias("rate_micro"),
             F.expr(
-                "CAST(ABS((2 * 1000000 * n_conv + n_users) DIV (2 * n_users)"
-                " - (2 * 1000000 * c + n) DIV (2 * n)) AS BIGINT)"
+                f"CAST(ABS({rhu('1000000 * n_conv', 'n_users')} -"
+                f" {rhu('1000000 * c', 'n')}) AS BIGINT)"
             ).alias("dev_micro"),
         )
         .orderBy("fold")
@@ -2856,13 +2837,14 @@ def q511(spark, sf_dir):
 # per label in exact micro units. Scale posture: the all-pairs stage is
 # the exact baseline an ANN index replaces; everything after the top-5
 # pick is integer counting.
-_KNNNOISE_ORACLE = """
-WITH pairs AS (
+_KNNNOISE_ORACLE = f"""
+WITH vecs AS MATERIALIZED (
+    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
+), pairs AS (
     SELECT a.vec_id AS va, a.label AS la, b.label AS lb,
-           ROUND(list_cosine_similarity(a.embedding::DOUBLE[],
-                                        b.embedding::DOUBLE[]), 4) AS sim,
+           ROUND({cosine_duck('a.e', 'b.e')}, 4) AS sim,
            b.vec_id AS vb
-    FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
+    FROM vecs a JOIN vecs b ON a.vec_id <> b.vec_id
 ), top5 AS (
     SELECT va, la, lb,
            ROW_NUMBER() OVER (PARTITION BY va ORDER BY sim DESC, vb) AS rk
@@ -2900,8 +2882,7 @@ def q512(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_vecs"),
             F.sum("mism").cast("bigint").alias("n_mismatch"),
             F.expr(
-                "CAST((2 * 1000000 * SUM(mism) + 5 * COUNT(*))"
-                " DIV (2 * 5 * COUNT(*)) AS BIGINT)"
+                f"CAST({rhu('1000000 * SUM(mism)', '5 * COUNT(*)')} AS BIGINT)"
             ).alias("noise_micro"),
         )
         .orderBy("label")
@@ -3114,9 +3095,7 @@ def q515(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         F.col("o_orderpriority").alias("grp"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     hist = v.groupBy("grp", "c").agg(F.count("*").cast("bigint").alias("k"))
     wg = Window.partitionBy("grp")
@@ -3158,12 +3137,10 @@ def q515(spark, sf_dir):
             "n",
             "kcut",
             F.expr(
-                "CAST((2 * 1000 * tsum + (n - 2 * kcut))"
-                " DIV (2 * (n - 2 * kcut)) AS BIGINT)"
+                f"CAST({rhu('1000 * tsum', '(n - 2 * kcut)')} AS BIGINT)"
             ).alias("trimmed_mean_milli"),
             F.expr(
-                "CAST((2 * 1000 * (tsum + kcut * (vlo + vhi)) + n)"
-                " DIV (2 * n) AS BIGINT)"
+                f"CAST({rhu('1000 * (tsum + kcut * (vlo + vhi))', 'n')} AS BIGINT)"
             ).alias("winsor_mean_milli"),
         )
         .orderBy("grp")
@@ -3235,9 +3212,7 @@ def q516(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         F.col("o_orderpriority").alias("grp"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     # pinned: the histogram feeds the quartile windows AND the fence
     # count join below — two references, each a full orders re-scan
@@ -3370,8 +3345,7 @@ def q517(spark, sf_dir):
         "max_bucket",
         "total",
         F.expr(
-            "CAST((2 * 1000000 * max_bucket * p + total) DIV (2 * total)"
-            " AS BIGINT)"
+            f"CAST({rhu('1000000 * max_bucket * p', 'total')} AS BIGINT)"
         ).alias("imbalance_micro"),
     ).orderBy("p")
 
@@ -3445,8 +3419,8 @@ def q518(spark, sf_dir):
         "n_distinct",
         "n",
         F.expr(
-            "CAST(CAST(ROUND(1000000 * LN(CAST(n AS DOUBLE)), 0) AS BIGINT)"
-            " - (2 * sum_term + n) DIV (2 * n) AS BIGINT)"
+            "CAST(CAST(ROUND(1000000 * LN(CAST(n AS DOUBLE)), 0) AS BIGINT) -"
+            f" {rhu('sum_term', 'n')} AS BIGINT)"
         ).alias("entropy_micro"),
     ).orderBy("col")
 
@@ -3495,8 +3469,7 @@ def q519(spark, sf_dir):
             F.col("w").alias("n_days"),
             F.col("s").alias("n_events"),
             F.expr(
-                "CAST((2 * 1000000 * (w * q - s * s) + s * (w - 1))"
-                " DIV (2 * s * (w - 1)) AS BIGINT)"
+                f"CAST({rhu('1000000 * (w * q - s * s)', 's * (w - 1)')} AS BIGINT)"
             ).alias("dispersion_micro"),
         )
         .orderBy("event_type")
@@ -3559,9 +3532,10 @@ def q520(spark, sf_dir):
         F.sum(F.expr(f"CAST(q AS {d38}) * q")).alias("qq"),
     )
     cv2 = (
-        f"(2 * 1000000 * w * (w * qq - CAST(s AS {d38}) * s)"
-        f" + (w - 1) * CAST(s AS {d38}) * s)"
-        f" DIV (2 * (w - 1) * CAST(s AS {d38}) * s)"
+        rhu(
+            f"1000000 * w * (w * qq - CAST(s AS {d38}) * s)",
+            f"(w - 1) * CAST(s AS {d38}) * s",
+        )
     )
     cls = per.select(
         F.expr(
@@ -3639,11 +3613,12 @@ def q521(spark, sf_dir):
         F.sum(F.expr(f"CAST(q AS {d38}) * q")).alias("qq"),
         (F.max("week") - F.min("week") + 1).cast("bigint").alias("span"),
     )
-    adi = "(2 * 1000000 * span + w) DIV (2 * w)"
+    adi = rhu("1000000 * span", "w")
     cv2 = (
-        f"(2 * 1000000 * w * (w * qq - CAST(s AS {d38}) * s)"
-        f" + (w - 1) * CAST(s AS {d38}) * s)"
-        f" DIV (2 * (w - 1) * CAST(s AS {d38}) * s)"
+        rhu(
+            f"1000000 * w * (w * qq - CAST(s AS {d38}) * s)",
+            f"(w - 1) * CAST(s AS {d38}) * s",
+        )
     )
     cls = per.select(
         F.expr(
@@ -3722,7 +3697,7 @@ def q522(spark, sf_dir):
     e = load_tables(spark, sf_dir)["events"]
     v = e.filter(F.col("event_type").isin("click", "purchase")).select(
         F.col("event_type").alias("g"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     hist = v.groupBy("c").agg(
         F.sum(F.when(F.col("g") == "click", 1).otherwise(0))
@@ -3758,9 +3733,9 @@ def q522(spark, sf_dir):
             "syy"
         ),
     )
-    a = f"(2 * 1000 * sxy + CAST(n AS {d38}) * m) DIV (2 * CAST(n AS {d38}) * m)"
-    b = f"(2 * 1000 * sxx + CAST(n AS {d38}) * n) DIV (2 * CAST(n AS {d38}) * n)"
-    cc = f"(2 * 1000 * syy + CAST(m AS {d38}) * m) DIV (2 * CAST(m AS {d38}) * m)"
+    a = f"{rhu('1000 * sxy', f'CAST(n AS {d38}) * m')}"
+    b = f"{rhu('1000 * sxx', f'CAST(n AS {d38}) * n')}"
+    cc = f"{rhu('1000 * syy', f'CAST(m AS {d38}) * m')}"
     return sums.select(
         "n",
         "m",
@@ -3810,10 +3785,10 @@ def q523(spark, sf_dir):
         "n",
         F.col("s").alias("sum_w"),
         F.expr(
-            f"CAST((2 * 1000 * CAST(s AS {d38}) * s + q) DIV (2 * q) AS BIGINT)"
+            f"CAST({rhu(f'1000 * CAST(s AS {d38}) * s', 'q')} AS BIGINT)"
         ).alias("ess_milli"),
         F.expr(
-            "CAST((2 * 1000000 * wmax + s) DIV (2 * s) AS BIGINT)"
+            f"CAST({rhu('1000000 * wmax', 's')} AS BIGINT)"
         ).alias("max_share_micro"),
     )
 
@@ -3866,7 +3841,7 @@ def q524(spark, sf_dir):
     comment)."""
     daily = _daily_cents(spark, sf_dir)
     mu = daily.agg(
-        F.expr("(2 * SUM(cents) + COUNT(*)) DIV (2 * COUNT(*))").alias("m")
+        F.expr(rhu("SUM(cents)", "COUNT(*)")).alias("m")
     )
     idx = (
         daily.crossJoin(F.broadcast(mu))
@@ -3909,14 +3884,14 @@ def q524(spark, sf_dir):
     )
     return mom.select(
         "n",
-        F.expr("CAST((2 * 1000000 * sdiff + qq) DIV (2 * qq) AS BIGINT)").alias(
+        F.expr(f"CAST({rhu('1000000 * sdiff', 'qq')} AS BIGINT)").alias(
             "dw_micro"
         ),
         F.expr(
-            "CAST((2 * (1000000 * (p2 * qq - p1 * p1)"
-            " + 2000000 * (qq * qq - p1 * p1))"
-            " + (qq * qq - p1 * p1)) DIV (2 * (qq * qq - p1 * p1))"
-            " - 2000000 AS BIGINT)"
+            "CAST(" + rhu(
+                "(1000000 * (p2 * qq - p1 * p1) + 2000000 * (qq * qq - p1 * p1))",
+                "(qq * qq - p1 * p1)",
+            ) + " - 2000000 AS BIGINT)"
         ).alias("pacf2_micro"),
     )
 
@@ -3970,9 +3945,7 @@ def q525(spark, sf_dir):
     daily = (
         o.groupBy(F.col("o_orderdate").alias("day"))
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("x"),
+            F.sum(cents("o_totalprice")).cast("bigint").alias("x"),
             F.count("*").cast("bigint").alias("y"),
         )
         .localCheckpoint(eager=False)
@@ -4018,8 +3991,8 @@ def q525(spark, sf_dir):
             "nx",
             "nj",
             F.expr(
-                "CAST(CASE WHEN nx > 0 THEN (2 * 1000000 * nj + nx) DIV (2 * nx)"
-                " ELSE 0 END AS BIGINT)"
+                f"CAST(CASE WHEN nx > 0 THEN {rhu('1000000 * nj', 'nx')} ELSE 0 END"
+                " AS BIGINT)"
             ).alias("lambda_micro"),
         )
     )
@@ -4115,8 +4088,7 @@ def q526(spark, sf_dir):
             "source",
             "w",
             F.expr(
-                "CAST((2 * 1000000000 * COALESCE(c, 0) + tok) DIV (2 * tok)"
-                " AS BIGINT)"
+                f"CAST({rhu('1000000000 * COALESCE(c, 0)', 'tok')} AS BIGINT)"
             ).alias("fm"),
         )
         # pinned: f (|sources|×20 rows) feeds wstat AND both pair sides
@@ -4149,7 +4121,7 @@ def q526(spark, sf_dir):
     delta = terms.groupBy("s1", "s2").agg(
         F.count("*").cast("bigint").alias("n_terms"),
         F.expr(
-            "CAST((2 * SUM(zd) + COUNT(*)) DIV (2 * COUNT(*)) AS BIGINT)"
+            f"CAST({rhu('SUM(zd)', 'COUNT(*)')} AS BIGINT)"
         ).alias("delta_micro"),
     )
     return delta.orderBy("delta_micro", "s1", "s2").limit(10)
@@ -4165,7 +4137,7 @@ def q526(spark, sf_dir):
 _SEGOLS_ORACLE = _DAILY_CTE + """
 , idx AS (
     SELECT cents, ROW_NUMBER() OVER (ORDER BY day) AS i, day FROM daily
-), pre AS (
+), pre AS MATERIALIZED (
     SELECT i, day,
            SUM(i) OVER w AS sx, SUM(cents) OVER w AS sy,
            SUM(CAST(i AS HUGEINT) * i) OVER w AS sxx,
@@ -4299,7 +4271,7 @@ def q528(spark, sf_dir):
     h = (
         o.select(
             (
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
+                cents("o_totalprice")
                 % 100
             ).alias("ending")
         )
@@ -4313,7 +4285,7 @@ def q528(spark, sf_dir):
             "ending",
             "n",
             F.expr(
-                "CAST((2 * 1000000 * n + tot) DIV (2 * tot) AS BIGINT)"
+                f"CAST({rhu('1000000 * n', 'tot')} AS BIGINT)"
             ).alias("share_micro"),
         )
         .orderBy(F.col("n").desc(), "ending")
@@ -4364,9 +4336,7 @@ def q529(spark, sf_dir):
         F.date_trunc("month", F.col("o_orderdate").cast("date"))
         .cast("date")
         .alias("month"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     hist = v.groupBy("month", "c").agg(F.count("*").cast("bigint").alias("k"))
     wm = Window.partitionBy("month")
@@ -4397,8 +4367,7 @@ def q529(spark, sf_dir):
             "month",
             F.col("n").alias("n_orders"),
             F.expr(
-                f"CAST((2 * 1000000 * gg + CAST(n AS {d38}) * s)"
-                f" DIV (2 * CAST(n AS {d38}) * s) AS BIGINT)"
+                f"CAST({rhu('1000000 * gg', f'CAST(n AS {d38}) * s')} AS BIGINT)"
             ).alias("gini_micro"),
         )
         .orderBy("month")
@@ -4453,7 +4422,7 @@ def q530(spark, sf_dir):
         "user_id",
         "event_type",
         F.unix_timestamp(F.col("ts").cast("timestamp")).cast("bigint").alias("es"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     bound = ev.agg(F.expr("(MIN(es) + MAX(es)) DIV 2").alias("mid"))
     peru = (
@@ -4501,9 +4470,8 @@ def q530(spark, sf_dir):
         "h1_sum",
         "h2_sum",
         F.expr(
-            "CAST(CASE WHEN h1_sum > 0"
-            " THEN (2 * 1000000 * h2_sum + h1_sum) DIV (2 * h1_sum)"
-            " ELSE NULL END AS BIGINT)"
+            f"CAST(CASE WHEN h1_sum > 0 THEN {rhu('1000000 * h2_sum', 'h1_sum')} ELSE"
+            " NULL END AS BIGINT)"
         ).alias("ratio_micro"),
     ).orderBy("decile")
 
@@ -4558,11 +4526,10 @@ def q531(spark, sf_dir):
     """Largest-remainder Neyman allocation of 1000 samples (oracle
     comment)."""
     o = load_tables(spark, sf_dir)["orders"]
-    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
     d38 = "DECIMAL(38,0)"
-    m = o.select(F.col("o_orderpriority").alias("grp"), cents.alias("c")).groupBy(
-        "grp"
-    ).agg(
+    m = o.select(
+        F.col("o_orderpriority").alias("grp"), cents("o_totalprice").alias("c")
+    ).groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("c").cast("bigint").alias("s"),
         F.sum(F.expr(f"CAST(c AS {d38}) * c")).alias("q"),
@@ -4644,10 +4611,10 @@ def q532(spark, sf_dir):
             F.col("hour").cast("int").alias("hour"),
             "n",
             F.expr(
-                "CAST((2 * 1000000 * n + tot) DIV (2 * tot) AS BIGINT)"
+                f"CAST({rhu('1000000 * n', 'tot')} AS BIGINT)"
             ).alias("share_micro"),
             F.expr(
-                "CAST((2 * 1000000 * mx * 24 + tot) DIV (2 * tot) AS BIGINT)"
+                f"CAST({rhu('1000000 * mx * 24', 'tot')} AS BIGINT)"
             ).alias("par_micro"),
         )
         .orderBy("hour")
@@ -4775,8 +4742,7 @@ def q533(spark, sf_dir):
             # (type with no outgoing transitions) -> whole expr NULL -> p=0,
             # mirroring the oracle's LEFT-join construction exactly
             F.expr(
-                "CAST(COALESCE((2 * 1000000 * COALESCE(c, 0) + rn)"
-                " DIV (2 * rn), 0) AS BIGINT)"
+                f"CAST(COALESCE({rhu('1000000 * COALESCE(c, 0)', 'rn')}, 0) AS BIGINT)"
             ).alias("p"),
         )
     )
@@ -4856,7 +4822,7 @@ def q534(spark, sf_dir):
             "cap",
             "hits",
             F.expr(
-                "CAST((2 * 1000000 * hits + tot) DIV (2 * tot) AS BIGINT)"
+                f"CAST({rhu('1000000 * hits', 'tot')} AS BIGINT)"
             ).alias("hit_micro"),
         )
         .orderBy("cap")
@@ -4961,8 +4927,8 @@ def q535(spark, sf_dir):
     return terms.select(
         F.col("n").alias("n_docs"),
         F.expr(
-            "CAST(CASE WHEN sum_term >= 0 THEN (2 * sum_term + n) DIV (2 * n)"
-            " ELSE -((2 * (-sum_term) + n) DIV (2 * n)) END AS BIGINT)"
+            f"CAST(CASE WHEN sum_term >= 0 THEN {rhu('sum_term', 'n')} ELSE"
+            f" -({rhu('(-sum_term)', 'n')}) END AS BIGINT)"
         ).alias("mi_micro"),
     )
 
@@ -4978,7 +4944,7 @@ def q535(spark, sf_dir):
 # textually-parallel q207 doubles over integer sums, ROUND(6). A
 # t below ~-2.9 rejects the unit root.
 _DF_ORACLE = _DAILY_CTE + """
-, idx AS (
+, idx AS MATERIALIZED (
     SELECT cents, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM daily
 ), pr AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS m,
@@ -5143,7 +5109,7 @@ def q537(spark, sf_dir):
         .agg(
             F.sum(
                 F.expr(
-                    f"CAST(w AS {d38}) * ((2 * 1000000 * c + n) DIV (2 * n))"
+                    f"CAST(w AS {d38}) * ({rhu('1000000 * c', 'n')})"
                 )
             ).alias("num")
         )
@@ -5153,7 +5119,7 @@ def q537(spark, sf_dir):
         .select(
             "source",
             F.expr(
-                "CAST((2 * num + tw) DIV (2 * tw) AS BIGINT)"
+                f"CAST({rhu('num', 'tw')} AS BIGINT)"
             ).alias("std_rate_micro"),
         )
         .orderBy("source")
@@ -5169,14 +5135,14 @@ def q537(spark, sf_dir):
 # (x/n)^x)] expands to pure ln terms over exact integers — ONE
 # textually-parallel double, ROUND(6).
 _KUPIEC_ORACLE = _DAILY_CTE + """
-, idx AS (
+, idx AS MATERIALIZED (
     SELECT cents, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM daily
-), chg AS (
+), chg AS MATERIALIZED (
     SELECT b.cents - a.cents AS d
     FROM idx a JOIN idx b ON b.rn = a.rn + 1
 ), cnt AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n FROM chg
-), thr AS (
+), thr AS MATERIALIZED (
     SELECT MIN(d) AS v FROM (
         SELECT d, ROW_NUMBER() OVER (ORDER BY d, 1) AS rk FROM chg
     ), cnt WHERE rk >= cnt.n * 5 // 100 + 1

@@ -13,9 +13,8 @@ evaluation metrics (Davies-Bouldin, Calinski-Harabasz, LOF, pinball
 loss, log-rank, Fleiss kappa, Somers' D, MCC, Youden J).
 
 Determinism rules follow queries/relational.py's module docstring and
-CLAUDE.md: integer cents via DECIMAL(18,2)*100; round-half-up on
-POSITIVE integer operands as (2p + q) DIV (2q) (signed values take a
-positive shift first); transcendentals (LN/EXP/POWER) are rounded to 6
+CLAUDE.md: integer cents and round-half-up (positive and signed) come
+from functions/exact.py; transcendentals (LN/EXP/POWER) are rounded to 6
 decimals PER TERM, converted to micro integers, and only then summed,
 so cross-engine sums are exact integer arithmetic; doubles appear only
 in textually-parallel final expressions over exact integer aggregates
@@ -31,32 +30,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import cents, floor_rhu, floor_rhu_duck, rhu
 from ..io import load_tables
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
-
-# ---------- signed round-half-up helpers (floor semantics, both dialects)
-
-# DuckDB's // TRUNCATES toward zero (checked: (-7)//3 = -2) exactly like
-# Spark's DIV, and DuckDB has no PMOD — so a SIGNED rhu needs explicit
-# floor emulation on BOTH engines: floor-rhu(p/q) (q > 0) is
-# (a - floormod(a, 2q)) / (2q) with a = 2p + q; Spark gets floormod from
-# native PMOD, DuckDB from ((a % m) + m) % m. Positive operands keep the
-# plain (2p + q) // (2q) house form. Python // in grouped maps is
-# already floor and matches these fragments bit-for-bit.
-
-
-def _fr_duck(pe: str, qe: str) -> str:
-    a = f"(2 * ({pe}) + ({qe}))"
-    m = f"(2 * ({qe}))"
-    return f"(({a}) - ((({a}) % ({m})) + ({m})) % ({m})) // ({m})"
-
-
-def _fr_spark(pe: str, qe: str) -> str:
-    a = f"(2 * ({pe}) + ({qe}))"
-    m = f"(2 * ({qe}))"
-    return f"(({a}) - PMOD({a}, {m})) DIV ({m})"
-
 
 # ---------- q539: Jarque-Bera normality screen (per event type)
 
@@ -112,7 +89,7 @@ def q539(spark, sf_dir):
     e = load_tables(spark, sf_dir)["events"]
     v = e.select(
         F.col("event_type").alias("g"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     d38 = F.col("c").cast("decimal(38,0)")
     m = v.groupBy("g").agg(
@@ -192,9 +169,7 @@ def q540(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         F.col("o_orderpriority").alias("g"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     m = v.groupBy("g").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -296,9 +271,7 @@ def q541(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         F.col("o_orderpriority").alias("g"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     gm = v.groupBy("g").agg(
         F.count("*").cast("bigint").alias("n"), F.sum("c").cast("bigint").alias("s")
@@ -389,9 +362,7 @@ def q542(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     m = v.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -412,9 +383,10 @@ def q542(spark, sf_dir):
         F.col("c").alias("cents"),
         "n",
         F.expr(
-            "CAST((2 * 1000000 * ad * ad * (n - 1)"
-            " + n * (n * q2 - CAST(s AS DECIMAL(38,0)) * s))"
-            " DIV (2 * n * (n * q2 - CAST(s AS DECIMAL(38,0)) * s)) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * ad * ad * (n - 1)",
+                "n * (n * q2 - CAST(s AS DECIMAL(38,0)) * s)",
+            ) + " AS BIGINT)"
         ).alias("g2_micro"),
     )
 
@@ -457,7 +429,7 @@ def q543(spark, sf_dir):
     e = load_tables(spark, sf_dir)["events"]
     v = e.filter(F.col("event_type").isin("click", "view")).select(
         F.col("event_type").alias("g"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     m = v.agg(
         F.sum(F.when(F.col("g") == "click", 1).otherwise(0))
@@ -485,9 +457,10 @@ def q543(spark, sf_dir):
         F.col("n1").cast("bigint").alias("n1"),
         F.col("n2").cast("bigint").alias("n2"),
         F.expr(
-            "CAST((2 * 1000000 * (n1 * q1 - s1 * s1) * n2 * (n2 - 1)"
-            " + (n2 * q2 - s2 * s2) * n1 * (n1 - 1))"
-            " DIV (2 * (n2 * q2 - s2 * s2) * n1 * (n1 - 1)) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * (n1 * q1 - s1 * s1) * n2 * (n2 - 1)",
+                "(n2 * q2 - s2 * s2) * n1 * (n1 - 1)",
+            ) + " AS BIGINT)"
         ).alias("f_micro"),
     )
 
@@ -532,10 +505,9 @@ def q544(spark, sf_dir):
         "k1",
         "k2",
         F.expr(
-            "CAST((2 * 1000000 * (k1 - k2) * (k1 - k2) + (k1 + k2))"
-            " DIV (2 * (k1 + k2)) AS BIGINT)"
+            f"CAST({rhu('1000000 * (k1 - k2) * (k1 - k2)', '(k1 + k2)')} AS BIGINT)"
         ).alias("z2_micro"),
-        F.expr("CAST((2 * 1000000 * k1 + k2) DIV (2 * k2) AS BIGINT)").alias(
+        F.expr(f"CAST({rhu('1000000 * k1', 'k2')} AS BIGINT)").alias(
             "ratio_micro"
         ),
     )
@@ -594,7 +566,7 @@ def q545(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         (
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint") % 100
+            cents("o_totalprice") % 100
         ).alias("d2")
     )
     hist = v.groupBy("d2").agg(F.count("*").cast("bigint").alias("k"))
@@ -697,9 +669,7 @@ def q546(spark, sf_dir):
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
         F.col("o_orderpriority").alias("g"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     # pinned: hist feeds vals/grps/grid/sizes — four references, each of
     # which would re-run the orders scan + histogram (guide §2.4)
@@ -749,10 +719,11 @@ def q546(spark, sf_dir):
         F.col("jt2").cast("bigint").alias("jt2"),
         F.expr("CAST((n * n - sn2) DIV 2 AS BIGINT)").alias("e2"),
         F.expr(
-            "CAST((2 * 1000000 * 18 * (jt2 - (n * n - sn2) DIV 2)"
-            " * (jt2 - (n * n - sn2) DIV 2)"
-            " + (n * n * (2 * n + 3) - sn23))"
-            " DIV (2 * (n * n * (2 * n + 3) - sn23)) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * 18 * (jt2 - (n * n - sn2) DIV 2)"
+                " * (jt2 - (n * n - sn2) DIV 2)",
+                "(n * n * (2 * n + 3) - sn23)",
+            ) + " AS BIGINT)"
         ).alias("z2_micro"),
     )
 
@@ -805,7 +776,7 @@ def q547(spark, sf_dir):
     v = e.filter(F.col("event_type").isin("click", "error")).select(
         "event_id",
         F.col("event_type").alias("g"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     idx = v.select(
@@ -838,9 +809,10 @@ def q547(spark, sf_dir):
         F.col("w").cast("bigint").alias("w_click"),
         F.col("n1").cast("bigint").alias("n1"),
         F.expr(
-            "CAST((2 * 1000000 * 3 * (2 * w - n1 * (n + 1))"
-            " * (2 * w - n1 * (n + 1)) + n1 * n2 * (n + 1))"
-            " DIV (2 * n1 * n2 * (n + 1)) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * 3 * (2 * w - n1 * (n + 1)) * (2 * w - n1 * (n + 1))",
+                "n1 * n2 * (n + 1)",
+            ) + " AS BIGINT)"
         ).alias("z2_micro"),
     )
 
@@ -1167,8 +1139,10 @@ def q550(spark, sf_dir):
         F.expr("g0_6 DIV 6").alias("g0_d2"),
         (F.col("g0_6") + F.col("tail_6")).alias("lrv6_d2"),
         F.expr(
-            "CAST((2 * 1000000 * (CAST(g0_6 AS DECIMAL(38,0)) + tail_6)"
-            " + g0_6) DIV (2 * CAST(g0_6 AS DECIMAL(38,0))) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * (CAST(g0_6 AS DECIMAL(38,0)) + tail_6)",
+                "CAST(g0_6 AS DECIMAL(38,0))",
+            ) + " AS BIGINT)"
         ).alias("ratio_micro"),
     )
 
@@ -1344,7 +1318,7 @@ def q552(spark, sf_dir):
     )
     p = train.select(
         "seg",
-        F.expr("CAST((2 * 1000 * kf + nt) DIV (2 * nt) AS BIGINT)").alias("pm"),
+        F.expr(f"CAST({rhu('1000 * kf', 'nt')} AS BIGINT)").alias("pm"),
     )
     test = oc.filter(
         F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp")
@@ -1370,8 +1344,8 @@ def q552(spark, sf_dir):
     return terms.select(
         "n",
         F.expr(
-            "CAST((2 * 1000000 * CAST(num AS DECIMAL(38,0)) * num + den)"
-            " DIV (2 * den) AS BIGINT)"
+            f"CAST({rhu('1000000 * CAST(num AS DECIMAL(38,0)) * num', 'den')}"
+            " AS BIGINT)"
         ).alias("z2_micro"),
     )
 
@@ -1447,21 +1421,20 @@ def q553(spark, sf_dir):
     )
     terms = cells.select(
         F.expr(
-            "CAST((2 * 1000000 * CAST(a AS DECIMAL(38,0)) * d + n) DIV (2 * n)"
-            " AS BIGINT)"
+            f"CAST({rhu('1000000 * CAST(a AS DECIMAL(38,0)) * d', 'n')} AS BIGINT)"
         ).alias("t1_u"),
         F.expr(
-            "CAST((2 * 1000000 * CAST(b AS DECIMAL(38,0)) * c + n) DIV (2 * n)"
-            " AS BIGINT)"
+            f"CAST({rhu('1000000 * CAST(b AS DECIMAL(38,0)) * c', 'n')} AS BIGINT)"
         ).alias("t2_u"),
         F.expr(
-            "CAST((2 * 1000000 * CAST(a + b AS DECIMAL(38,0)) * (a + c) + n)"
-            " DIV (2 * n) AS BIGINT)"
+            f"CAST({rhu('1000000 * CAST(a + b AS DECIMAL(38,0)) * (a + c)', 'n')}"
+            " AS BIGINT)"
         ).alias("e_u"),
         F.expr(
-            "CAST((2 * 1000000 * CAST(a + b AS DECIMAL(38,0)) * (c + d)"
-            " * (a + c) * (b + d) + CAST(n AS DECIMAL(38,0)) * n * (n - 1))"
-            " DIV (2 * CAST(n AS DECIMAL(38,0)) * n * (n - 1)) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * CAST(a + b AS DECIMAL(38,0)) * (c + d) * (a + c) * (b + d)",
+                "CAST(n AS DECIMAL(38,0)) * n * (n - 1)",
+            ) + " AS BIGINT)"
         ).alias("v_u"),
         "a",
     )
@@ -1475,12 +1448,10 @@ def q553(spark, sf_dir):
     )
     return tot.select(
         F.expr(
-            "CAST((2 * 1000000 * CAST(st1 AS DECIMAL(38,0)) + st2)"
-            " DIV (2 * st2) AS BIGINT)"
+            f"CAST({rhu('1000000 * CAST(st1 AS DECIMAL(38,0))', 'st2')} AS BIGINT)"
         ).alias("or_micro"),
         F.expr(
-            "CAST((2 * 1000000 * dev_u * dev_u + 1000000 * sv_u)"
-            " DIV (2 * 1000000 * sv_u) AS BIGINT)"
+            f"CAST({rhu('1000000 * dev_u * dev_u', '1000000 * sv_u')} AS BIGINT)"
         ).alias("cmh_micro"),
     )
 
@@ -1740,8 +1711,7 @@ def q557(spark, sf_dir):
     )
     es = tail.groupBy("n", "kc").agg(
         F.expr(
-            "CAST((2 * SUM(d) + kc - PMOD(2 * SUM(d) + kc, 2 * kc))"
-            " DIV (2 * kc) AS BIGINT)"
+            f"CAST({floor_rhu('SUM(d)', 'kc')} AS BIGINT)"
         ).alias("es_cents")
     )
     return es.crossJoin(F.broadcast(var_row)).select(
@@ -1793,8 +1763,7 @@ def q558(spark, sf_dir):
     dd = pk.select(
         "t",
         F.expr(
-            "CAST((2 * 1000000 * (peak - cents) + peak) DIV (2 * peak)"
-            " AS BIGINT)"
+            f"CAST({rhu('1000000 * (peak - cents)', 'peak')} AS BIGINT)"
         ).alias("dd_u"),
         F.when(F.col("cents") == F.col("peak"), F.col("t")).alias("peak_t"),
     )
@@ -1805,8 +1774,7 @@ def q558(spark, sf_dir):
     return dur.agg(
         F.count("*").cast("bigint").alias("n"),
         F.expr(
-            "CAST((2 * SUM(dd_u * dd_u) + COUNT(*)) DIV (2 * COUNT(*))"
-            " AS BIGINT)"
+            f"CAST({rhu('SUM(dd_u * dd_u)', 'COUNT(*)')} AS BIGINT)"
         ).alias("ui2_micro2"),
         F.max("since_peak").cast("bigint").alias("max_drawdown_days"),
     )
@@ -1996,9 +1964,10 @@ def q559(spark, sf_dir):
             " WHEN sw * sxy < sx * sy THEN -1 ELSE 0 END AS INT)"
         ).alias("r_sign"),
         F.expr(
-            "CAST((2 * 1000000 * (sw * sxy - sx * sy) * (sw * sxy - sx * sy)"
-            " + (sw * sxx - sx * sx) * (sw * syy - sy * sy))"
-            " DIV (2 * (sw * sxx - sx * sx) * (sw * syy - sy * sy)) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * (sw * sxy - sx * sy) * (sw * sxy - sx * sy)",
+                "(sw * sxx - sx * sx) * (sw * syy - sy * sy)",
+            ) + " AS BIGINT)"
         ).alias("r2_micro"),
     )
 
@@ -2057,9 +2026,7 @@ def q560(spark, sf_dir):
     (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     y = o.select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c")
+        cents("o_totalprice").alias("c")
     )
     lams = spark.createDataFrame(
         [(-1000,), (-500,), (0,), (500,), (1000,)], "lam int"
@@ -2161,7 +2128,7 @@ def _part_graph(spark, sf_dir):
 # micro. One degree frame, one edge-endpoint join, four thresholds in
 # a single broadcast cross.
 _RICHCLUB_ORACLE = _PARTG_CTE + """
-, ks AS (
+, ks AS MATERIALIZED (
     SELECT * FROM (VALUES (4), (8), (16), (32)) AS t(k)
 ), nk AS MATERIALIZED (
     SELECT ks.k, CAST(COUNT(*) AS BIGINT) AS n_k
@@ -2211,9 +2178,8 @@ def q561(spark, sf_dir):
             "n_k",
             F.coalesce(F.col("e_k"), F.lit(0)).alias("e_k"),
             F.expr(
-                "CAST((2 * 1000000 * 2 * COALESCE(e_k, 0)"
-                " + n_k * (n_k - 1))"
-                " DIV (2 * n_k * (n_k - 1)) AS BIGINT)"
+                f"CAST({rhu('1000000 * 2 * COALESCE(e_k, 0)', 'n_k * (n_k - 1)')}"
+                " AS BIGINT)"
             ).alias("phi_micro"),
         )
         .orderBy("k")
@@ -2278,8 +2244,7 @@ def q562(spark, sf_dir):
             " / (CAST(slu AS DOUBLE) / 1000000.0), 6)"
         ).alias("alpha_r6"),
         F.expr(
-            "CAST((2 * 1000000 * (n * dmax - sd) + (n - 1) * (n - 2))"
-            " DIV (2 * (n - 1) * (n - 2)) AS BIGINT)"
+            f"CAST({rhu('1000000 * (n * dmax - sd)', '(n - 1) * (n - 2)')} AS BIGINT)"
         ).alias("centralization_micro"),
     )
 
@@ -2370,7 +2335,7 @@ def q563(spark, sf_dir):
         "asym",
         F.expr("n * (n - 1) DIV 2 - mut - asym").alias("nulls"),
         F.expr(
-            "CAST((2 * 1000000 * 2 * mut + l_arcs) DIV (2 * l_arcs) AS BIGINT)"
+            f"CAST({rhu('1000000 * 2 * mut', 'l_arcs')} AS BIGINT)"
         ).alias("reciprocity_micro"),
     )
 
@@ -2482,8 +2447,8 @@ def q565(spark, sf_dir):
         .agg(
             F.count("*").cast("bigint").alias("n_endpoints"),
             F.expr(
-                "CAST((2 * 1000000 * CAST(SUM(kv) AS DECIMAL(38,0)) + COUNT(*))"
-                " DIV (2 * COUNT(*)) AS BIGINT)"
+                f"CAST({rhu('1000000 * CAST(SUM(kv) AS DECIMAL(38,0))', 'COUNT(*)')}"
+                " AS BIGINT)"
             ).alias("knn_micro"),
         )
         .orderBy("k")
@@ -2549,14 +2514,13 @@ def q566(spark, sf_dir):
         "v1",
         "v2",
         F.expr(
-            "CAST((2 * 10000000000 * (s2 - n) + n * n) DIV (2 * n * n)"
-            " AS BIGINT)"
+            f"CAST({rhu('10000000000 * (s2 - n)', 'n * n')} AS BIGINT)"
         ).alias("yule_k_micro"),
         F.expr(
             "ROUND(100.0 * LN(CAST(n AS DOUBLE))"
             " / (1.0 - CAST(v1 AS DOUBLE) / CAST(v AS DOUBLE)), 6)"
         ).alias("honore_r_r6"),
-        F.expr("CAST((2 * 1000000 * v2 + v) DIV (2 * v) AS BIGINT)").alias(
+        F.expr(f"CAST({rhu('1000000 * v2', 'v')} AS BIGINT)").alias(
             "sichel_s_micro"
         ),
     )
@@ -2807,7 +2771,7 @@ def q568(spark, sf_dir):
     )
     wscore = wstat.select(
         "w",
-        F.expr("CAST((2 * 1000000 * deg + freq) DIV (2 * freq) AS BIGINT)").alias(
+        F.expr(f"CAST({rhu('1000000 * deg', 'freq')} AS BIGINT)").alias(
             "su"
         ),
     )
@@ -3059,10 +3023,10 @@ def q570(spark, sf_dir):
 
 # Domain-shift audit a la CORAL: Frobenius^2 distance between the two
 # halves' covariance matrices. Each cell C_ij = (n*M_ij - S_i*S_j)/n^2
-# is quantized to a signed integer via the FLOOR round-half-up identity
-# — DuckDB // is already floor division; Spark emulates floor with the
-# PMOD identity (the q292 fragment) — then the distance is an exact
-# integer sum of squared cell differences.
+# is quantized to a signed integer by the floor round-half-up (Spark:
+# floor_rhu; the oracle spells out the floor-mod emulation, since DuckDB
+# // truncates) — then the distance is an exact integer sum of squared
+# cell differences. q572 and q573 quantize their cells the same way.
 _CORAL_ORACLE = _EMB_CELLS_CTE + """
 , mom AS MATERIALIZED (
     SELECT CASE WHEN a.label < 5 THEN 0 ELSE 1 END AS g, a.i, b.i AS j,
@@ -3090,6 +3054,8 @@ SELECT CAST(SUM((a.cu - b.cu) * (a.cu - b.cu)) AS BIGINT) AS coral_f2
 FROM (SELECT i, j, cu FROM cov WHERE g = 0) a
 JOIN (SELECT i, j, cu FROM cov WHERE g = 1) b ON a.i = b.i AND a.j = b.j
 """
+
+_CU = f"CAST({floor_rhu('(1000 * (n * m - si * sj))', 'n * n')} AS BIGINT)"
 
 
 @register("q571_coral_shift", oracle=_CORAL_ORACLE)
@@ -3132,11 +3098,7 @@ def q571(spark, sf_dir):
             "g",
             "i",
             "j",
-            F.expr(
-                "CAST((2 * (1000 * (n * m - si * sj)) + n * n"
-                " - PMOD(2 * (1000 * (n * m - si * sj)) + n * n,"
-                " 2 * n * n)) DIV (2 * n * n) AS BIGINT)"
-            ).alias("cu"),
+            F.expr(_CU).alias("cu"),
         )
         .localCheckpoint(eager=False)
     )
@@ -3216,11 +3178,7 @@ def q572(spark, sf_dir):
             "g",
             "i",
             "j",
-            F.expr(
-                "CAST((2 * (1000 * (n * m - si * sj)) + n * n"
-                " - PMOD(2 * (1000 * (n * m - si * sj)) + n * n,"
-                " 2 * n * n)) DIV (2 * n * n) AS BIGINT)"
-            ).alias("cu"),
+            F.expr(_CU).alias("cu"),
         )
     )
     tr = cov.groupBy("g").agg(
@@ -3232,7 +3190,7 @@ def q572(spark, sf_dir):
     return tr.select(
         F.col("g").alias("label"),
         F.expr(
-            "CAST((2 * 1000000 * trc * trc + trc2) DIV (2 * trc2) AS BIGINT)"
+            f"CAST({rhu('1000000 * trc * trc', 'trc2')} AS BIGINT)"
         ).alias("pr_micro"),
     ).orderBy("label")
 
@@ -3295,11 +3253,7 @@ def q573(spark, sf_dir):
         .select(
             "i",
             "j",
-            F.expr(
-                "CAST((2 * (1000 * (n * m - si * sj)) + n * n"
-                " - PMOD(2 * (1000 * (n * m - si * sj)) + n * n,"
-                " 2 * n * n)) DIV (2 * n * n) AS BIGINT)"
-            ).alias("cu"),
+            F.expr(_CU).alias("cu"),
         )
     )
     blocks = cov.agg(
@@ -3338,8 +3292,9 @@ def q573(spark, sf_dir):
 
 # q574/q575 posture: quantize embeddings to integer milli (after the
 # mandatory CAST to DOUBLE), centroids by the FLOOR round-half-up
-# identity (signed sums; DuckDB // is floor, Spark uses the PMOD
-# fragment), squared point-centroid distances as exact integer milli^2.
+# identity (signed sums: Spark's floor_rhu; DuckDB // truncates, so the
+# oracle inlines floor_rhu_duck's floor-mod expansion), squared
+# point-centroid distances as exact integer milli^2.
 _CENT_CTE = _EMB_CELLS_CTE + """
 , sums AS MATERIALIZED (
     SELECT label AS g, i, CAST(SUM(xu) AS BIGINT) AS si,
@@ -3381,8 +3336,7 @@ def _centroid_frames(spark, sf_dir):
         "g",
         "i",
         F.expr(
-            "CAST((2 * si + n - PMOD(2 * si + n, 2 * n)) DIV (2 * n)"
-            " AS BIGINT)"
+            f"CAST({floor_rhu('si', 'n')} AS BIGINT)"
         ).alias("cm"),
     ).localCheckpoint(eager=False)
     d2 = (
@@ -3401,8 +3355,7 @@ def _centroid_frames(spark, sf_dir):
         F.count("*").cast("bigint").alias("n"),
         F.sum("d2").cast("decimal(38,0)").alias("sd2"),
         F.expr(
-            "CAST((2 * CAST(SUM(d2) AS DECIMAL(38,0)) + COUNT(*))"
-            " DIV (2 * COUNT(*)) AS BIGINT)"
+            f"CAST({rhu('CAST(SUM(d2) AS DECIMAL(38,0))', 'COUNT(*)')} AS BIGINT)"
         ).alias("s2"),
     ).localCheckpoint(eager=False)
     return cells, cen, scat
@@ -3460,8 +3413,8 @@ def q574(spark, sf_dir):
         .agg(
             F.max(
                 F.expr(
-                    "CAST((2 * 1000000 * (CAST(s2i AS DECIMAL(38,0)) + s2j)"
-                    " + dc2) DIV (2 * dc2) AS BIGINT)"
+                    f"CAST({rhu('1000000 * (CAST(s2i AS DECIMAL(38,0)) + s2j)', 'dc2')}"
+                    " AS BIGINT)"
                 )
             ).alias("rmax")
         )
@@ -3469,7 +3422,7 @@ def q574(spark, sf_dir):
     return r.agg(
         F.count("*").cast("bigint").alias("k"),
         F.expr(
-            "CAST((2 * SUM(rmax) + COUNT(*)) DIV (2 * COUNT(*)) AS BIGINT)"
+            f"CAST({rhu('SUM(rmax)', 'COUNT(*)')} AS BIGINT)"
         ).alias("db_micro"),
     )
 
@@ -3514,8 +3467,7 @@ def q575(spark, sf_dir):
     glob = sums.select(
         "i",
         F.expr(
-            "CAST((2 * sall + nall - PMOD(2 * sall + nall, 2 * nall))"
-            " DIV (2 * nall) AS BIGINT)"
+            f"CAST({floor_rhu('sall', 'nall')} AS BIGINT)"
         ).alias("gm"),
     )
     bd = (
@@ -3539,8 +3491,7 @@ def q575(spark, sf_dir):
         "nt",
         "k",
         F.expr(
-            "CAST((2 * 1000000 * b * (nt - k) + w * (k - 1))"
-            " DIV (2 * w * (k - 1)) AS BIGINT)"
+            f"CAST({rhu('1000000 * b * (nt - k)', 'w * (k - 1)')} AS BIGINT)"
         ).alias("ch_micro"),
     )
 
@@ -3622,8 +3573,7 @@ def q576(spark, sf_dir):
             F.col("va").alias("vec_id"),
             "kdist",
             F.expr(
-                "CAST((2 * 1000000 * 10 * kdist + skd) DIV (2 * skd)"
-                " AS BIGINT)"
+                f"CAST({rhu('1000000 * 10 * kdist', 'skd')} AS BIGINT)"
             ).alias("lof_micro"),
         )
         .orderBy(F.col("lof_micro").desc(), "vec_id")
@@ -3707,7 +3657,7 @@ def q577(spark, sf_dir):
         "d",
         "d_t",
         "n_t",
-        F.expr("CAST((2 * 1000000 * d_t + n_t) DIV (2 * n_t) AS BIGINT)").alias(
+        F.expr(f"CAST({rhu('1000000 * d_t', 'n_t')} AS BIGINT)").alias(
             "h_u"
         ),
     )
@@ -3846,14 +3796,13 @@ def q578(spark, sf_dir):
     terms = tab.select(
         "d1",
         F.expr(
-            "CAST((2 * 1000000 * dt * n1 + nt) DIV (2 * nt) AS BIGINT)"
+            f"CAST({rhu('1000000 * dt * n1', 'nt')} AS BIGINT)"
         ).alias("e_u"),
         F.expr(
-            "CAST(CASE WHEN nt > 1 THEN"
-            " (2 * 1000000 * CAST(dt AS DECIMAL(38,0)) * n1 * (nt - n1)"
-            " * (nt - dt) + CAST(nt AS DECIMAL(38,0)) * nt * (nt - 1))"
-            " DIV (2 * CAST(nt AS DECIMAL(38,0)) * nt * (nt - 1))"
-            " ELSE 0 END AS BIGINT)"
+            "CAST(CASE WHEN nt > 1 THEN " + rhu(
+                "1000000 * CAST(dt AS DECIMAL(38,0)) * n1 * (nt - n1) * (nt - dt)",
+                "CAST(nt AS DECIMAL(38,0)) * nt * (nt - 1)",
+            ) + " ELSE 0 END AS BIGINT)"
         ).alias("v_u"),
     )
     tot = terms.agg(
@@ -3864,8 +3813,7 @@ def q578(spark, sf_dir):
     )
     return tot.select(
         F.expr(
-            "CAST((2 * 1000000 * dev * dev + 1000000 * sv)"
-            " DIV (2 * 1000000 * sv) AS BIGINT)"
+            f"CAST({rhu('1000000 * dev * dev', '1000000 * sv')} AS BIGINT)"
         ).alias("logrank_chi2_micro")
     )
 
@@ -3908,9 +3856,7 @@ def q579(spark, sf_dir):
     comment)."""
     o = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
         F.substring("o_orderpriority", 1, 1).cast("bigint").alias("r"),
     )
     s = o.filter(
@@ -3938,9 +3884,9 @@ def q579(spark, sf_dir):
         "ht_cents",
         "true_cents",
         F.expr(
-            "CAST((2 * 1000000 * (CAST(ht_cents AS DECIMAL(38,0)) - true_cents) + true_cents"
-            " - PMOD(2 * 1000000 * (CAST(ht_cents AS DECIMAL(38,0)) - true_cents) + true_cents,"
-            " 2 * true_cents)) DIV (2 * true_cents) AS BIGINT)"
+            "CAST(" + floor_rhu(
+                "1000000 * (CAST(ht_cents AS DECIMAL(38,0)) - true_cents)", "true_cents"
+            ) + " AS BIGINT)"
         ).alias("rel_err_micro"),
     )
 
@@ -4009,9 +3955,7 @@ def q580(spark, sf_dir):
             wo.orderBy(
                 "l_linenumber",
                 "l_quantity",
-                (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast(
-                    "bigint"
-                ),
+                cents("l_extendedprice"),
                 "l_returnflag",
             )
         )
@@ -4046,14 +3990,10 @@ def q580(spark, sf_dir):
     return pbar.crossJoin(F.broadcast(pe)).select(
         F.col("n_items").cast("bigint").alias("n_items"),
         F.expr(
-            "CAST((2 * 1000000"
-            " * (tot * tot * (ss2 - 3 * n_items) - 6 * n_items * sum_cj2)"
-            " + (6 * n_items * (tot * tot - sum_cj2))"
-            " - PMOD(2 * 1000000"
-            " * (tot * tot * (ss2 - 3 * n_items) - 6 * n_items * sum_cj2)"
-            " + (6 * n_items * (tot * tot - sum_cj2)),"
-            " 2 * (6 * n_items * (tot * tot - sum_cj2))))"
-            " DIV (2 * (6 * n_items * (tot * tot - sum_cj2))) AS BIGINT)"
+            "CAST(" + floor_rhu(
+                "1000000 * (tot * tot * (ss2 - 3 * n_items) - 6 * n_items * sum_cj2)",
+                "(6 * n_items * (tot * tot - sum_cj2))",
+            ) + " AS BIGINT)"
         ).alias("fleiss_kappa_micro"),
     )
 
@@ -4083,7 +4023,7 @@ WITH cells_ AS MATERIALIZED (
 )
 SELECT CAST(c AS BIGINT) AS concordant, CAST(d AS BIGINT) AS discordant,
        CAST(ty AS BIGINT) AS ties_y,
-       CAST({_fr_duck('1000000 * (c - d)', 'c + d + ty')} AS BIGINT)
+       CAST({floor_rhu_duck('1000000 * (c - d)', 'c + d + ty')} AS BIGINT)
            AS somers_d_micro
 FROM pairsum
 """
@@ -4129,7 +4069,7 @@ def q581(spark, sf_dir):
         F.col("d").cast("bigint").alias("discordant"),
         F.col("ty").cast("bigint").alias("ties_y"),
         F.expr(
-            f"CAST({_fr_spark('1000000 * (c - d)', 'c + d + ty')} AS BIGINT)"
+            f"CAST({floor_rhu('(1000000 * (c - d))', '(c + d + ty)')} AS BIGINT)"
         ).alias("somers_d_micro"),
     )
 
@@ -4315,8 +4255,7 @@ def q583(spark, sf_dir):
         .groupBy("seg", "pri")
         .agg(
             F.expr(
-                "CAST((2 * 1000 * SUM(o) + COUNT(*)) DIV (2 * COUNT(*))"
-                " AS BIGINT)"
+                f"CAST({rhu('1000 * SUM(o)', 'COUNT(*)')} AS BIGINT)"
             ).alias("pm")
         )
     )
@@ -4336,10 +4275,11 @@ def q583(spark, sf_dir):
     )
     terms = per.select(
         F.expr(
-            "CAST((2 * 1000000 * CAST(obs * 1000 - em AS DECIMAL(38,0))"
-            " * (obs * 1000 - em) * n"
-            " + CAST(em AS DECIMAL(38,0)) * (n * 1000 - em))"
-            " DIV (2 * CAST(em AS DECIMAL(38,0)) * (n * 1000 - em)) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * CAST(obs * 1000 - em AS DECIMAL(38,0)) * (obs * 1000 - em)"
+                " * n",
+                "CAST(em AS DECIMAL(38,0)) * (n * 1000 - em)",
+            ) + " AS BIGINT)"
         ).alias("t_u")
     )
     return terms.agg(
@@ -4370,7 +4310,7 @@ WITH pp AS MATERIALIZED (
     FROM pp GROUP BY brand
 )
 SELECT brand, CAST(n AS BIGINT) AS n_parts,
-       CAST({_fr_duck('1000000 * (n * sxy - sx * sy)', 'n * sxx - sx * sx')}
+       CAST({floor_rhu_duck('1000000 * (n * sxy - sx * sy)', 'n * sxx - sx * sx')}
             AS BIGINT) AS elasticity_micro
 FROM m ORDER BY brand
 """
@@ -4407,8 +4347,9 @@ def q584(spark, sf_dir):
         "brand",
         F.col("n").cast("bigint").alias("n_parts"),
         F.expr(
-            f"CAST({_fr_spark('1000000 * (n * sxy - sx * sy)', 'n * sxx - sx * sx')}"
-            " AS BIGINT)"
+            "CAST("
+            + floor_rhu("(1000000 * (n * sxy - sx * sy))", "(n * sxx - sx * sx)")
+            + " AS BIGINT)"
         ).alias("elasticity_micro"),
     ).orderBy("brand")
 
@@ -4461,12 +4402,11 @@ def q585(spark, sf_dir):
             "blk"
         ),
         F.expr("CAST(EXTRACT(HOUR FROM ts) AS BIGINT) DIV 6").alias("slot"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     cellm = slots.groupBy("blk", "slot").agg(
         F.expr(
-            "CAST((2 * 1000000 * SUM(c) + COUNT(*)) DIV (2 * COUNT(*))"
-            " AS BIGINT)"
+            f"CAST({rhu('1000000 * SUM(c)', 'COUNT(*)')} AS BIGINT)"
         ).alias("mean_u")
     )
     ranked = cellm.select(
@@ -4484,9 +4424,11 @@ def q585(spark, sf_dir):
         "page_l",
         "b",
         F.expr(
-            "CAST((2 * 1000000 * 144 * (page_l - b * 4 * 25 DIV 4)"
-            " * (page_l - b * 4 * 25 DIV 4)"
-            " + b * 16 * 5 * 15) DIV (2 * b * 16 * 5 * 15) AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * 144 * (page_l - b * 4 * 25 DIV 4)"
+                " * (page_l - b * 4 * 25 DIV 4)",
+                "b * 16 * 5 * 15",
+            ) + " AS BIGINT)"
         ).alias("z2_micro"),
     )
 
@@ -4526,9 +4468,7 @@ def q586(spark, sf_dir):
     comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
         "o_orderkey",
     )
     topv = (
@@ -4557,7 +4497,7 @@ def q586(spark, sf_dir):
     )
     return agg.select(
         F.expr(
-            "CAST((2 * (s100 - 100 * l101) + 100) DIV (2 * 100) AS BIGINT)"
+            f"CAST({rhu('(s100 - 100 * l101)', '100')} AS BIGINT)"
         ).alias("hill_inv_micro"),
         F.expr(
             "ROUND(100000000.0 / CAST(s100 - 100 * l101 AS DOUBLE), 6)"
@@ -4736,7 +4676,7 @@ def q588(spark, sf_dir):
         .groupBy("c_custkey", F.col("c_nationkey").alias("nk"))
         .agg(
             F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
+                cents("o_totalprice")
             )
             .cast("bigint")
             .alias("y")
@@ -4844,9 +4784,7 @@ def q589(spark, sf_dir):
     """Integer ROC curve + Youden J at decile cuts (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
         "o_orderkey",
     )
@@ -4887,14 +4825,14 @@ def q589(spark, sf_dir):
             "decile",
             "theta",
             F.expr(
-                "CAST((2 * 1000000 * tp + pos) DIV (2 * pos) AS BIGINT)"
+                f"CAST({rhu('1000000 * tp', 'pos')} AS BIGINT)"
             ).alias("tpr_micro"),
             F.expr(
-                "CAST((2 * 1000000 * fp + neg) DIV (2 * neg) AS BIGINT)"
+                f"CAST({rhu('1000000 * fp', 'neg')} AS BIGINT)"
             ).alias("fpr_micro"),
             F.expr(
-                "CAST((2 * 1000000 * tp + pos) DIV (2 * pos)"
-                " - (2 * 1000000 * fp + neg) DIV (2 * neg) AS BIGINT)"
+                f"CAST({rhu('1000000 * tp', 'pos')} - {rhu('1000000 * fp', 'neg')}"
+                " AS BIGINT)"
             ).alias("j_micro"),
         )
         .orderBy("decile")
@@ -4951,9 +4889,7 @@ def q590(spark, sf_dir):
     """Sign + squared MCC and balanced accuracy (oracle comment)."""
     o = load_tables(spark, sf_dir)["orders"]
     v = o.select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("c"),
+        cents("o_totalprice").alias("c"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
         "o_orderkey",
     )
@@ -4991,15 +4927,14 @@ def q590(spark, sf_dir):
             " WHEN tp * tn < fp * fn THEN -1 ELSE 0 END AS INT)"
         ).alias("mcc_sign"),
         F.expr(
-            "CAST((2 * 1000000 * (tp * tn - fp * fn) * (tp * tn - fp * fn)"
-            " + (tp + fp) * (tp + fn) * (tn + fp) * (tn + fn))"
-            " DIV (2 * (tp + fp) * (tp + fn) * (tn + fp) * (tn + fn))"
-            " AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * (tp * tn - fp * fn) * (tp * tn - fp * fn)",
+                "(tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)",
+            ) + " AS BIGINT)"
         ).alias("mcc2_micro"),
         F.expr(
-            "CAST(((2 * 1000000 * tp + (tp + fn)) DIV (2 * (tp + fn))"
-            " + (2 * 1000000 * tn + (tn + fp)) DIV (2 * (tn + fp))) DIV 2"
-            " AS BIGINT)"
+            f"CAST(({rhu('1000000 * tp', '(tp + fn)')} +"
+            f" {rhu('1000000 * tn', '(tn + fp)')}) DIV 2 AS BIGINT)"
         ).alias("balanced_acc_micro"),
     )
 
@@ -5067,11 +5002,11 @@ def q591(spark, sf_dir):
     pt = idx.crossJoin(F.broadcast(m)).select(
         "day",
         F.expr(
-            "CAST((2 * 1000000 * ((n * stt - CAST(st AS DECIMAL(38,0)) * st)"
-            " + n * (n * t - st) * (n * t - st))"
-            " + n * n * (n * stt - CAST(st AS DECIMAL(38,0)) * st))"
-            " DIV (2 * n * n * (n * stt - CAST(st AS DECIMAL(38,0)) * st))"
-            " AS BIGINT)"
+            "CAST(" + rhu(
+                "1000000 * ((n * stt - CAST(st AS DECIMAL(38,0)) * st) + n * (n * t"
+                " - st) * (n * t - st))",
+                "n * n * (n * stt - CAST(st AS DECIMAL(38,0)) * st)",
+            ) + " AS BIGINT)"
         ).alias("h_u"),
         F.expr(
             f"CAST(ROUND((CAST(y AS DOUBLE) - {_BP_A} - {_BP_FIT}"
@@ -5086,10 +5021,10 @@ def q591(spark, sf_dir):
             F.col("h_u").alias("leverage_micro"),
             "e2_d2",
             F.expr(
-                "CAST((2 * CAST(e2_d2 AS DECIMAL(38,0)) * h_u * 1000000"
-                " + CAST(1000000 - h_u AS DECIMAL(38,0)) * (1000000 - h_u))"
-                " DIV (2 * CAST(1000000 - h_u AS DECIMAL(38,0))"
-                " * (1000000 - h_u)) AS BIGINT)"
+                "CAST(" + rhu(
+                    "CAST(e2_d2 AS DECIMAL(38,0)) * h_u * 1000000",
+                    "CAST(1000000 - h_u AS DECIMAL(38,0)) * (1000000 - h_u)",
+                ) + " AS BIGINT)"
             ).alias("infl_d2"),
         )
         .orderBy(F.col("infl_d2").desc(), "day")

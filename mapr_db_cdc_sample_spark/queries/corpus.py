@@ -449,7 +449,7 @@ def _target_case_sql() -> str:
 @register(
     "q100_mixture_weights",
     oracle=f"""
-    WITH per AS (
+    WITH per AS MATERIALIZED (
         SELECT lang,
                COUNT(*) AS n_docs,
                CAST(SUM(LEN(LIST_FILTER(STRING_SPLIT(LOWER(text), ' '),

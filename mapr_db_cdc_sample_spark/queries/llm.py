@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions import vectors as V
+from ..functions.exact import cosine_duck
 from ..io import load_tables
 from ..operators import banding as B
 from . import register
@@ -76,10 +77,10 @@ def _query_vec(e, vid: int):
 
 @register(
     "q38_cosine_topk",
-    oracle="""
+    oracle=f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
     SELECT e.vec_id,
-           ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qe::DOUBLE[]), 4) AS sim
+           ROUND({cosine_duck('e.embedding::DOUBLE[]', 'q.qe::DOUBLE[]')}, 4) AS sim
     FROM embeddings e, q
     WHERE e.vec_id <> 0
     ORDER BY sim DESC, e.vec_id
@@ -157,7 +158,7 @@ def q40(spark, sf_dir):
 from ..functions.text import MINHASH_SEEDS as _SEEDS
 
 _MINHASH_CTE = """
-WITH corpus AS (
+WITH corpus AS MATERIALIZED (
     SELECT doc_id, text FROM documents
     UNION ALL
     SELECT doc_id + 1000000, text || ' zz' FROM documents WHERE doc_id % 11 = 0
@@ -170,11 +171,11 @@ WITH corpus AS (
            LIST_TRANSFORM(RANGE(1, GREATEST(LEN(tk) - 1, 1)),
                           i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS sg
     FROM toks
-), hv AS (
+), hv AS MATERIALIZED (
     SELECT doc_id,
            LIST_TRANSFORM(sg, s -> ('0x' || SUBSTR(MD5(s), 1, 15))::BIGINT) AS hs
     FROM sh
-), sig AS (
+), sig AS MATERIALIZED (
     SELECT doc_id,
            {mins}
     FROM hv
@@ -193,7 +194,7 @@ _BANDS_CTE = """, bands AS (
         '2:' || mh4 || ':' || mh5,
         '3:' || mh6 || ':' || mh7]) AS band
     FROM sig WHERE mh0 IS NOT NULL
-), bands_capped AS (
+), bands_capped AS MATERIALIZED (
     -- model the Spark side's mega-bucket cap (banding.DEFAULT_BUCKET_CAP):
     -- buckets above the cap are dropped from candidate generation on BOTH
     -- engines, so a boilerplate cluster can never make them diverge
@@ -303,7 +304,7 @@ _JACCARD_ORACLE = _MINHASH_CTE + _BANDS_CTE + """
 , cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.doc_id < b.doc_id
-), grams AS (
+), grams AS MATERIALIZED (
     -- Jaccard over 60-bit-hashed shingles == over shingle strings (the
     -- hash map is shared with the Spark side, so even a collision would
     -- collide identically in both engines)
@@ -508,12 +509,15 @@ def q50(spark, sf_dir):
 
 # ------------------------------------- embedding near-dup + IVF (Q51-52)
 
-_NEARDUP_ORACLE = """
+_NEARDUP_ORACLE = f"""
+WITH vecs AS MATERIALIZED (
+    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
+)
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
-FROM embeddings a JOIN embeddings b
+       ROUND({cosine_duck('a.e', 'b.e')}, 4) AS sim
+FROM vecs a JOIN vecs b
   ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) > 0.3
+WHERE ROUND({cosine_duck('a.e', 'b.e')}, 4) > 0.3
 """
 
 
@@ -533,22 +537,22 @@ def q51(spark, sf_dir):
     return sim_block_pairs(e, threshold=0.3, same_label_only=True)
 
 
-_IVF_ORACLE = """
+_IVF_ORACLE = f"""
 WITH centroids AS MATERIALIZED (
     SELECT vec_id AS c_id, embedding AS ce FROM embeddings WHERE vec_id < 10
 ), assigned AS (
     SELECT e.vec_id, e.embedding,
            (SELECT c.c_id FROM centroids c
-            ORDER BY ROUND(list_cosine_similarity(e.embedding::DOUBLE[], c.ce::DOUBLE[]), 4) DESC, c.c_id
+            ORDER BY ROUND({cosine_duck('e.embedding::DOUBLE[]', 'c.ce::DOUBLE[]')}, 4) DESC, c.c_id
             LIMIT 1) AS c_id
     FROM embeddings e
 ), probe AS (
     SELECT c.c_id FROM centroids c, (SELECT embedding AS qe FROM embeddings WHERE vec_id = 42) q
-    ORDER BY ROUND(list_cosine_similarity(q.qe::DOUBLE[], c.ce::DOUBLE[]), 4) DESC, c.c_id
+    ORDER BY ROUND({cosine_duck('q.qe::DOUBLE[]', 'c.ce::DOUBLE[]')}, 4) DESC, c.c_id
     LIMIT 2
 )
 SELECT a.vec_id,
-       ROUND(list_cosine_similarity(a.embedding::DOUBLE[], q.qe::DOUBLE[]), 4) AS sim
+       ROUND({cosine_duck('a.embedding::DOUBLE[]', 'q.qe::DOUBLE[]')}, 4) AS sim
 FROM assigned a
 JOIN probe p ON a.c_id = p.c_id
 CROSS JOIN (SELECT embedding AS qe FROM embeddings WHERE vec_id = 42) q
@@ -573,8 +577,8 @@ def _ivf_parts(e):
         V.norm(F.col("embedding")).alias("cn"),
     )
     ee = e.select("vec_id", "embedding", V.norm(F.col("embedding")).alias("en"))
-    sim_to_c = F.round(
-        V.dot(F.col("embedding"), F.col("ce")) / (F.col("en") * F.col("cn")), 4
+    sim_to_c = V.cosine_norms(
+        F.col("embedding"), F.col("ce"), F.col("en"), F.col("cn")
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("c_sim").desc(), F.col("c_id"))
     assigned = (
@@ -602,8 +606,8 @@ def q52(spark, sf_dir):
         cent.join(F.broadcast(q))
         .select(
             "c_id",
-            F.round(
-                V.dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 4
+            V.cosine_norms(
+                F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")
             ).alias("q_sim"),
         )
         .orderBy(F.col("q_sim").desc(), F.col("c_id"))
@@ -616,8 +620,8 @@ def q52(spark, sf_dir):
         .where(F.col("vec_id") != 42)
         .select(
             "vec_id",
-            F.round(
-                V.dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 4
+            V.cosine_norms(
+                F.col("embedding"), F.col("qe"), F.col("en"), F.col("qn")
             ).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), F.col("vec_id"))
@@ -651,8 +655,8 @@ def q135(spark, sf_dir):
         for r in cent.join(F.broadcast(q))
         .select(
             "c_id",
-            F.round(
-                V.dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 4
+            V.cosine_norms(
+                F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")
             ).alias("q_sim"),
         )
         .orderBy(F.col("q_sim").desc(), F.col("c_id"))
@@ -666,8 +670,8 @@ def q135(spark, sf_dir):
         .where(F.col("vec_id") != 42)
         .select(
             "vec_id",
-            F.round(
-                V.dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 4
+            V.cosine_norms(
+                F.col("embedding"), F.col("qe"), F.col("en"), F.col("qn")
             ).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), F.col("vec_id"))
@@ -717,10 +721,10 @@ def q54(spark, sf_dir):
 
 @register(
     "q55_cosine_pandas_udf",
-    oracle="""
+    oracle=f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
     SELECT e.vec_id,
-           ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qe::DOUBLE[]), 4) AS sim
+           ROUND({cosine_duck('e.embedding::DOUBLE[]', 'q.qe::DOUBLE[]')}, 4) AS sim
     FROM embeddings e, q
     WHERE e.vec_id <> 0
     ORDER BY sim DESC, e.vec_id
@@ -1048,11 +1052,11 @@ def q101(spark, sf_dir):
 
 # ------------------------------------- retrieval composites (q105-q106)
 
-_RETRIEVE_ORACLE = """
+_RETRIEVE_ORACLE = f"""
     WITH q AS MATERIALIZED (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     hits AS (
         SELECT e.vec_id,
-               ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qe::DOUBLE[]), 4) AS sim
+               ROUND({cosine_duck('e.embedding::DOUBLE[]', 'q.qe::DOUBLE[]')}, 4) AS sim
         FROM embeddings e, q
         WHERE e.vec_id <> 0
         ORDER BY sim DESC, e.vec_id
@@ -1194,11 +1198,11 @@ def q106(spark, sf_dir):
 
 # The sem/bm25 top-20 CTEs shared by the q107 oracle: identical ranking
 # expressions to the q105/q106 oracles, wrapped with ROW_NUMBER.
-_RRF_ORACLE = """
+_RRF_ORACLE = f"""
     WITH q AS MATERIALIZED (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     sem AS (
         SELECT e.vec_id,
-               ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qe::DOUBLE[]), 4) AS sim
+               ROUND({cosine_duck('e.embedding::DOUBLE[]', 'q.qe::DOUBLE[]')}, 4) AS sim
         FROM embeddings e, q
         WHERE e.vec_id <> 0
         ORDER BY sim DESC, e.vec_id
@@ -1471,7 +1475,7 @@ _JACCARD_EST_ORACLE = _MINHASH_CTE + _BANDS_CTE + f"""
 , cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.doc_id < b.doc_id
-), grams AS (
+), grams AS MATERIALIZED (
     SELECT doc_id, LIST_DISTINCT(hs) AS gs FROM hv
 ), scored AS (
     SELECT cand.doc_a, cand.doc_b,
@@ -1645,7 +1649,7 @@ def q125(spark, sf_dir):
 
 # --------------- per-group centroid + embedding outliers (q127)
 
-_OUTLIER_ORACLE = """
+_OUTLIER_ORACLE = f"""
     WITH e AS MATERIALIZED (
         SELECT d.lang, v.vec_id,
                LIST_TRANSFORM(v.embedding,
@@ -1661,7 +1665,7 @@ _OUTLIER_ORACLE = """
         FROM comp GROUP BY lang
     ), scored AS (
         SELECT e.lang, e.vec_id,
-               ROUND(list_cosine_similarity(e.q::DOUBLE[], c.cen), 4) AS cos_centroid
+               ROUND({cosine_duck('e.q::DOUBLE[]', 'c.cen')}, 4) AS cos_centroid
         FROM e JOIN cent c ON c.lang = e.lang
     )
     SELECT lang, vec_id, cos_centroid

@@ -194,7 +194,7 @@ def q142(spark, sf_dir):
 @register(
     "q143_important_stock",
     oracle="""
-    WITH ps AS (
+    WITH ps AS MATERIALIZED (
         SELECT l_partkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS val
         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation ON s_nationkey = n_nationkey
@@ -278,7 +278,7 @@ def q144(spark, sf_dir):
 @register(
     "q145_top_supplier",
     oracle="""
-    WITH rev AS (
+    WITH rev AS MATERIALIZED (
         SELECT l_suppkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                               * CAST(1 - l_discount AS DECIMAL(4,2))) AS total_rev
         FROM lineitem
@@ -459,7 +459,7 @@ def q148(spark, sf_dir):
     oracle="""
     WITH red AS (
         SELECT p_partkey FROM part WHERE p_name LIKE 'red%'
-    ), shipped AS (
+    ), shipped AS MATERIALIZED (
         SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS DECIMAL(12,2))) AS qty
         FROM lineitem JOIN red ON l_partkey = p_partkey
         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -516,7 +516,7 @@ def q149(spark, sf_dir):
     oracle="""
     WITH ps AS (
         SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-    ), cand AS (
+    ), cand AS MATERIALIZED (
         SELECT l_partkey, s_suppkey, s_name, s_acctbal, n_name
         FROM ps
         JOIN supplier ON l_suppkey = s_suppkey

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.exact import cents
+
 OUTPUT_SCHEMA = (
     "_id string, firstName string, lastName string, age int, "
     "address string, is_deleted boolean, n_changes long"
@@ -156,8 +158,7 @@ def running_totals(events_stream: DataFrame) -> DataFrame:
         def close(self) -> None:
             pass
 
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    keyed = events_stream.select("user_id", cents.alias("cents"))
+    keyed = events_stream.select("user_id", cents("value").alias("cents"))
     return keyed.groupBy("user_id").transformWithStateInPandas(
         RunningTotals(),
         outputStructType=RUNNING_SCHEMA,
@@ -183,8 +184,7 @@ def running_totals_compat(events_stream: DataFrame) -> DataFrame:
             [{"user_id": key[0], "n_events": n, "spend_cents": cents}]
         )
 
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    keyed = events_stream.select("user_id", cents.alias("cents"))
+    keyed = events_stream.select("user_id", cents("value").alias("cents"))
     return keyed.groupBy("user_id").applyInPandasWithState(
         fold,
         outputStructType=RUNNING_SCHEMA,

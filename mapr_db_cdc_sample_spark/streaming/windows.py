@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import cents
+
 
 def tumbling_counts(
     events: DataFrame, width: str = "10 minutes", watermark: str = "30 minutes"
@@ -178,8 +180,7 @@ def tumbling_ohlc(
     watermarks never evict and state grows with the number of windows
     (fine for its bounded test horizon; long-running deployments should
     drain in update mode for incremental emission with GC)."""
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    keyed = events.withColumn("cents", cents)
+    keyed = events.withColumn("cents", cents("value"))
     return (
         keyed.withWatermark("ts", watermark)
         .groupBy(F.window("ts", width).alias("w"))

@@ -1,6 +1,8 @@
 """Full driver-gate rehearsal: runs entry() plus every queries() entry
-against its oracle_sql() via DuckDB — the exact comparison the driver's
-t2 performs. Usage:
+against its oracle_sql() via DuckDB, compared with oracle.compare (row
+count, column names and order-insensitive values with floats rounded to
+9 digits) — a close stand-in for the driver's t2 hash, not a copy of it.
+Usage:
 
     python tools/sweep.py [sf_dir] [name_prefix_filter]
 
