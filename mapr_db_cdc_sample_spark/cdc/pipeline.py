@@ -24,7 +24,8 @@ forms of the JSON lane use them:
 - `route_json_wire` is the whole lane as one projection to
   (topic, key, value) rows, at most 2 per record, built without a union.
   The streaming pipeline plans it once on the stream
-  (streaming/cdc_stream.py) and only splits it by topic per micro-batch.
+  (streaming/cdc_stream.py); each micro-batch is one collect of its rows,
+  published to both sinks as one file each, named by batch id.
 
 Observable quirks preserved (SURVEY.md §2.1):
 - case-insensitive field-path match (J:152-158, B:116-120);

@@ -2,28 +2,36 @@
 (SURVEY.md §3.4): changelog stream → route → dual sink via foreachBatch,
 resumable through a checkpoint kept beside the FTS sink.
 
-The route is `route_json_wire`, the JSON lane as one projection from
-changelog records to (topic, key, value) rows, and it is applied to the
-streaming DataFrame once per query: Spark plans it with the query and
-runs it incrementally on each micro-batch. `foreachBatch` only splits the
-routed rows by topic and appends each topic to its sink. Building the
-route inside `foreachBatch` would re-run its Python DataFrame
-construction (thousands of py4j calls for the higher-order functions) on
-every micro-batch, before either sink job could start. Per-record
-fan-out stays ≤2 messages, and the rows equal the batch API's
-fts_wire(route_json) ∪ geo_wire(route_json).
+The route, `route_json_wire` (fts_wire ∪ geo_wire of route_json as one
+projection to (topic, key, value) rows), is applied to the stream once
+per query: built per micro-batch, its Python construction would cost
+thousands of py4j calls each time. Each micro-batch runs one Spark job
+that collects the routed rows; the driver publishes them by batch id.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..cdc.pipeline import FTS_TOPIC, GEO_TOPIC, route_json_wire
 # unused here; kept as module attributes because perfbench's WRAPPED resolves them from this module
 from ..cdc.pipeline import fts_wire, geo_wire, route_json  # noqa: F401
+
+
+def publish(rows: pa.Table, fs: pafs.FileSystem, root: str, batch_id: int) -> None:
+    """Write `rows` to a hidden temp name, then move it over
+    `<root>/batch-<batch_id>.parquet`: a reader never sees a partial
+    file, and a replayed batch id replaces its own file."""
+    name = f"batch-{batch_id:019d}.parquet"
+    fs.create_dir(root, recursive=True)
+    pq.write_table(rows, f"{root}/.{name}", filesystem=fs)
+    fs.move(f"{root}/.{name}", f"{root}/{name}")
 
 
 def start_json_pipeline(
@@ -33,44 +41,35 @@ def start_json_pipeline(
     trigger: dict | None = None,
 ):
     """Run the JSON-lane CDC pipeline: stream in, two parquet message
-    sinks out (stand-ins for the fts_service / geo_service topics).
+    sinks out (stand-ins for the fts_service / geo_service topics), each
+    a local path or a URI `pyarrow.fs` resolves.
 
-    The route is built once, here, on the stream (`route_json_wire`); the
-    per-micro-batch body only filters the routed batch by topic and
-    appends each part to its sink.
+    Each micro-batch is one Spark job: the route runs map-side and its
+    wire rows reach the driver as Arrow. The driver `publish`es one file
+    per sink, FTS first, even for an empty slice, so every data batch
+    leaves a readable (topic, key, value) file in both sinks.
 
-    Delivery semantics: the streaming checkpoint lives at
-    `<fts_dir>/_checkpoint` — derived from the sink, as Spark's own
-    `_spark_metadata` is, and skipped by Spark and pyarrow readers of the
-    sink because of its `_` prefix. A restart over the same sinks
-    therefore resumes after the last committed micro-batch instead of
-    re-emitting the changelog — an upgrade over the reference's
-    enable.auto.commit=true (J:48, which can lose records). The dual
-    parquet appends are still NOT jointly atomic: if the fts write lands
-    and the geo write fails inside one micro-batch, the retried batch
-    re-appends to fts (duplicates). True dual-sink exactly-once needs a
-    batch-id commit marker both readers honor (an open ROADMAP item).
-    The two sink writes are submitted CONCURRENTLY (they share no
-    shuffle, and Spark's scheduler overlaps independent jobs):
-    sequential writes put two full job latencies on the micro-batch
-    critical path and blew the ≤ ~800 ms budget (measured 942 ms median
-    steady-state; concurrent writes hold it — LATENCY.json).
-    Micro-batches are poll-sized, so each sink job recomputing the route
-    over the batch is cheaper than a persist barrier — safe ONLY because
-    the replay source is deterministic; a nondeterministic transform would
-    need the persist() barrier back to keep the two sinks consistent."""
-    sinks = ((FTS_TOPIC, fts_dir), (GEO_TOPIC, geo_dir))
+    Delivery: the checkpoint lives at `<fts_dir>/_checkpoint` (its `_`
+    prefix hides it from readers), so a restart resumes after the last
+    committed batch, unlike the reference's auto-commit (J:48). A batch
+    that fails, before or between its two files, replays under the same
+    batch id with the same input and replaces its own files: exactly-once
+    per sink, from a replayable source and a sink idempotent per batch id.
+
+    Scale bound: only routed wire rows reach the driver, and a batch is
+    bounded by the source's per-trigger limit (`maxFilesPerTrigger` /
+    `maxOffsetsPerTrigger`). `spark.driver.maxResultSize` fails an
+    oversized batch loudly, and the failed batch id replays idempotently.
+    The Kafka path (`sources/kafka.write_routed`) stays executor-side."""
+    sinks = [
+        (topic, *pafs.FileSystem.from_uri(d if ":" in d else os.path.abspath(d)))
+        for topic, d in ((FTS_TOPIC, fts_dir), (GEO_TOPIC, geo_dir))
+    ]
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-            jobs = [
-                pool.submit(batch.where(F.col("topic") == topic).write.mode("append").parquet, d)
-                for topic, d in sinks
-            ]
-            for j in jobs:
-                j.result()
+        rows = batch.toArrow()
+        for topic, fs, root in sinks:
+            publish(rows.filter(pc.equal(rows["topic"], topic)), fs, root, batch_id)
 
     writer = (
         route_json_wire(cdc_stream)

@@ -30,6 +30,13 @@ def _canon(values):
     return sorted((json.loads(v) for v in values), key=lambda d: json.dumps(d, sort_keys=True))
 
 
+def _wire_rows(df):
+    """(topic, key, value) rows of a DataFrame as a multiset."""
+    import collections
+
+    return collections.Counter(tuple(r) for r in df.collect())
+
+
 def _events_stream(spark, sf_dir, chunks=3):
     ev = load_tables(spark, sf_dir)["events"]
     path = write_replay(ev, n_chunks=chunks, order_by="ts")
@@ -65,7 +72,6 @@ def test_json_wire_route_equals_batch_wire_on_varied_traffic(spark, tmp_path):
     equals fts_wire(route_json) ∪ geo_wire(route_json) as a multiset of
     (topic, key, value) rows, and the streaming pipeline over the same
     file leaves each sink equal to its batch wire form."""
-    import collections
     import os
 
     from perfbench import changelog
@@ -87,11 +93,8 @@ def test_json_wire_route_equals_batch_wire_on_varied_traffic(spark, tmp_path):
     fts, geo = route_json(cdc)
     want_fts, want_geo = fts_wire(fts), geo_wire(geo)
 
-    def rows(df):
-        return collections.Counter(tuple(r) for r in df.collect())
-
-    got = rows(route_json_wire(cdc))
-    assert got == rows(want_fts.unionByName(want_geo))
+    got = _wire_rows(route_json_wire(cdc))
+    assert got == _wire_rows(want_fts.unionByName(want_geo))
     assert {t for t, _, _ in got} == {"fts_service", "geo_service"}
     assert sum(got.values()) < 2 * tbl.num_rows
 
@@ -296,6 +299,93 @@ def test_cdc_pipeline_restart_is_exactly_once(spark, tmp_path):
         ), got
 
 
+@pytest.mark.parametrize("fail_at", ["between_sinks", "before_sinks"])
+def test_cdc_pipeline_replays_a_failed_batch_exactly_once(spark, tmp_path, monkeypatch, fail_at):
+    """Batch k fails once, after its FTS file lands and before its geo
+    file, or before either lands. A restart over the same checkpoint and
+    sinks replays batch k under the same batch id, and its files replace
+    what the failed attempt left: each sink equals its batch wire form,
+    with no duplicate and no loss. A sink that appends per attempt
+    duplicates batch k's FTS rows in the first case."""
+    import os
+
+    from perfbench import changelog
+
+    from mapr_db_cdc_sample_spark.cdc.pipeline import fts_wire, geo_wire, route_json
+    from mapr_db_cdc_sample_spark.streaming import cdc_stream
+
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    for i, tbl in enumerate(changelog.files(7, 3, 500)):
+        changelog.write_file(src, i, tbl)
+    fts_dir, geo_dir = str(tmp_path / "fts"), str(tmp_path / "geo")
+    k, failing = 1, ("geo" if fail_at == "between_sinks" else "fts")
+    publish, failed = cdc_stream.publish, []
+
+    def flaky(rows, fs, root, batch_id):
+        if batch_id == k and os.path.basename(root) == failing and not failed:
+            failed.append(batch_id)
+            raise RuntimeError("injected sink failure")
+        publish(rows, fs, root, batch_id)
+
+    monkeypatch.setattr(cdc_stream, "publish", flaky)
+
+    def run():
+        stream = read_replay(spark, src, CDC_JSON_SCHEMA, files_per_trigger=1)
+        cdc_stream.start_json_pipeline(stream, fts_dir, geo_dir).awaitTermination()
+
+    with pytest.raises(Exception, match="injected sink failure"):
+        run()
+    name = f"batch-{k:019d}.parquet"
+    assert os.path.exists(os.path.join(fts_dir, name)) == (failing == "geo")
+    assert not os.path.exists(os.path.join(geo_dir, name))
+    run()
+
+    fts, geo = route_json(spark.read.schema(CDC_JSON_SCHEMA).parquet(src))
+    for got_dir, want in ((fts_dir, fts_wire(fts)), (geo_dir, geo_wire(geo))):
+        assert _wire_rows(spark.read.parquet(got_dir)) == _wire_rows(want), got_dir
+        published = sorted(n for n in os.listdir(got_dir) if n.startswith("batch-"))
+        assert published == [f"batch-{b:019d}.parquet" for b in range(3)], got_dir
+
+
+def test_cdc_pipeline_publishes_empty_geo_file_per_batch(spark, tmp_path):
+    """A changelog of deletes never routes to geo, yet every data batch
+    leaves one geo file, so the geo sink reads back as 0 rows with the
+    (topic, key, value) string schema."""
+    import glob
+    import os
+
+    import pyarrow.compute as pc
+
+    from perfbench import changelog
+
+    from mapr_db_cdc_sample_spark.streaming.cdc_stream import start_json_pipeline
+
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    n_deletes = 0
+    for i, tbl in enumerate(changelog.files(11, 2, 500)):
+        deletes = tbl.filter(pc.equal(tbl["op"], "RECORD_DELETE"))
+        n_deletes += deletes.num_rows
+        changelog.write_file(src, i, deletes)
+    assert n_deletes > 0
+    fts_dir, geo_dir = str(tmp_path / "fts"), str(tmp_path / "geo")
+    q = start_json_pipeline(read_replay(spark, src, CDC_JSON_SCHEMA), fts_dir, geo_dir)
+    q.awaitTermination()
+
+    data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data_batches) == 2
+    assert len(glob.glob(os.path.join(geo_dir, "batch-*.parquet"))) == len(data_batches)
+    geo = spark.read.parquet(geo_dir)
+    assert geo.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in geo.schema.fields] == [
+        ("topic", "string"),
+        ("key", "string"),
+        ("value", "string"),
+    ]
+    assert spark.read.parquet(fts_dir).count() == n_deletes
+
+
 def test_console_and_parquet_sinks(spark, tmp_path):
     """R14 console trace + parquet file sink both drain the golden wire
     stream (console output is driver-side; we assert clean termination,
@@ -496,6 +586,29 @@ def test_stream_ohlc_matches_batch(spark, sf_dir):
     assert got == want2
 
 
+def _busy_core_share(interval_s: float = 1.0) -> float:
+    """Share of the box's CPU time spent busy over `interval_s` seconds
+    while the caller sleeps. Unlike the 1-minute load average, this does
+    not count the suite's own preceding Spark jobs: it sees only work
+    that runs concurrently with an idle test. Falls back to the load
+    average per core where /proc/stat is unavailable."""
+    import os
+    import time
+
+    def sample():
+        with open("/proc/stat") as fh:
+            f = [int(x) for x in fh.readline().split()[1:9]]
+        return f[3] + f[4], sum(f)  # (idle + iowait, total)
+
+    try:
+        idle0, total0 = sample()
+        time.sleep(interval_s)
+        idle1, total1 = sample()
+    except (OSError, ValueError, IndexError):
+        return os.getloadavg()[0] / (os.cpu_count() or 1)
+    return 1.0 - (idle1 - idle0) / max(total1 - total0, 1)
+
+
 def test_cdc_latency_budget(spark, tmp_path):
     """BASELINE.md's one reference-derived latency target (round-5
     verdict, Next round #3): under the reference's 500 ms cadence
@@ -514,10 +627,12 @@ def test_cdc_latency_budget(spark, tmp_path):
     from tools.latency import BUDGET_MS, REPO, measure
 
     # Sample box load BEFORE measuring: a concurrent Spark session (a
-    # judge sweep, a parallel CI shard) saturates all cores and makes
-    # ANY absolute-milliseconds bound meaningless — the r9 judge saw
-    # this test fail under their own sweep and pass in isolation.
-    busy_box = os.getloadavg()[0] / (os.cpu_count() or 1) > 0.5
+    # sweep, a parallel CI shard) saturates all cores and makes ANY
+    # absolute-milliseconds bound meaningless. The sample is taken while
+    # this test is idle, so the suite's own earlier Spark jobs, which
+    # keep the 1-minute load average above half the cores on a 4-core
+    # box, do not count as a concurrent session.
+    busy_box = _busy_core_share() > 0.5
 
     out = measure(spark, str(tmp_path))
     assert out["n_data_batches"] >= 16, out["n_data_batches"]
@@ -542,7 +657,8 @@ def test_cdc_latency_budget(spark, tmp_path):
         import pytest as _pytest
 
         _pytest.skip(
-            "busy box (loadavg/core > 0.5) — latency bound not asserted; "
+            "busy box (over half the CPU busy before measuring) — latency "
+            "bound not asserted; "
             f"measured steady median {steady['median_ms']} ms "
             f"(budget {BUDGET_MS} ms)"
         )
