@@ -23,9 +23,11 @@ forms of the JSON lane use them:
   `geo_wire` serialize them (the batch API);
 - `route_json_wire` is the whole lane as one projection to
   (topic, key, value) rows, at most 2 per record, built without a union.
-  The streaming pipeline plans it once on the stream
-  (streaming/cdc_stream.py); each micro-batch is one collect of its rows,
-  published to both sinks as one file each, named by batch id.
+The binary lane's wire form is `fts_wire(route_binary(cdc))`: one FTS
+row at most per record. The streaming pipeline
+(streaming/cdc_stream.py `start_pipeline`) plans either wire form once
+on the stream; each micro-batch is one collect of its rows, published
+to each of the lane's sinks as one file, named by batch id.
 
 Observable quirks preserved (SURVEY.md §2.1):
 - case-insensitive field-path match (J:152-158, B:116-120);

@@ -1,7 +1,8 @@
 """Streaming operators exposed as driver-checkable queries (rows-only:
 genuinely non-SQL-expressible per-trigger semantics). Each entry builds a
 bounded replay stream from the testdata, drains it with an availableNow
-trigger into a memory sink, and returns the result as a batch DataFrame.
+trigger (the CDC lanes into their file sinks, the rest into a memory
+sink), and returns the result as a batch DataFrame.
 
 These are the SURVEY.md §2.2 streaming rows: the CDC pipeline end-to-end,
 tumbling/sliding/session windows, watermarked dedup, stream-static join,
@@ -185,18 +186,20 @@ def q69(spark, sf_dir):
 def q70(spark, sf_dir):
     """Binary-lane CDC streaming: the wide-column golden corpus replayed
     through route_binary (RECORD_UPDATE-as-insert, UTF-8 cell decode,
-    FTS-only routing)."""
+    FTS-only routing) into the same pipeline as q60, with one FTS sink,
+    read back."""
     from ..cdc.fixtures import golden_binary_events
-    from ..cdc.pipeline import fts_wire, route_binary
+    from ..cdc.pipeline import FTS_TOPIC, fts_wire, route_binary
     from ..cdc.schema import CDC_BINARY_SCHEMA
+    from ..streaming.cdc_stream import start_pipeline
 
     cdc = golden_binary_events(spark)
     n = cdc.count()
     path = write_replay(cdc.coalesce(1), n_chunks=1)
     stream = read_replay(spark, path, CDC_BINARY_SCHEMA)
-    name = f"q70_{uuid.uuid4().hex[:8]}"
-    run_to_memory(fts_wire(route_binary(stream)), name)
-    return _with_input_count(spark.table(name), n)
+    fts_dir = f"{scratch_dir()}/fts"
+    start_pipeline(fts_wire(route_binary(stream)), {FTS_TOPIC: fts_dir}).awaitTermination()
+    return _with_input_count(spark.read.parquet(fts_dir), n)
 
 
 @register("q102_stream_quality_gate")

@@ -3,7 +3,7 @@
 Scale posture (100 TB target, tested on local[32]):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
   dynamic join-strategy switching replace hand-tuned partition counts.
-- Shuffle partitions sized for the local harness via SPARK_GRAFT_CPUS; on a
+- Shuffle partitions sized to the box's core count; on a
   real cluster this is overridden (AQE coalesces down from a high initial
   count, so the same code scales up).
 - UTC session timezone: oracle (DuckDB) comparisons are tz-naive; all
@@ -42,9 +42,7 @@ RUNTIME_CONFS = {
     # q436's linear (shingle, doc) collapse spill at 10x data
     # (BENCH_SF1 r9: 20x). On a real cluster this is the conf to raise
     # further; plan fingerprints normalize partition counts away.
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_INITIAL", "256"
-    ),
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Small dims (region/nation/supplier) must broadcast; 64 MB is safe on
     # executors with >=4 GB and removes shuffles from every dim join.
@@ -149,14 +147,10 @@ def get_spark(app_name: str = "mapr-db-cdc-sample-spark") -> SparkSession:
         # initialPartitionNum=256 (RUNTIME_CONFS), so this static value
         # only reaches lanes AQE does not re-plan — chiefly streaming
         # stateful operators, whose width is pinned into the checkpoint.
-        # Default it to the box's core count instead of a magic 32
-        # (identical on local[32]); on a real cluster spark-submit sets
-        # it to executor-fleet parallelism, and SPARK_GRAFT_SHUFFLE
-        # overrides everywhere.
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE", str(os.cpu_count() or 8)),
-        )
+        # It is the box's core count instead of a magic 32 (identical on
+        # local[32]); on a real cluster spark-submit sets it to
+        # executor-fleet parallelism.
+        .config("spark.sql.shuffle.partitions", str(os.cpu_count() or 8))
         .config(
             "spark.driver.memory",
             os.environ.get(

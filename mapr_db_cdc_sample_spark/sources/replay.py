@@ -67,11 +67,6 @@ def read_replay(
     )
 
 
-def checkpoint_dir() -> str:
-    # unique by contract: checkpoint offsets/state are query-scoped
-    return scratch_dir()
-
-
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
     """Drain a bounded stream into an in-memory table (availableNow →
     processes everything, then stops). Returns the StreamingQuery after
@@ -80,7 +75,8 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir())
+        # unique dir: checkpoint offsets/state are query-scoped
+        .option("checkpointLocation", scratch_dir())
         .trigger(availableNow=True)
         .start()
     )

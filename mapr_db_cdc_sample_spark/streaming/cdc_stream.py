@@ -1,10 +1,12 @@
 """The reference's whole program as ONE Structured Streaming query
-(SURVEY.md §3.4): changelog stream → route → dual sink via foreachBatch,
-resumable through a checkpoint kept beside the FTS sink.
+(SURVEY.md §3.4): changelog stream → route → per-topic file sinks via
+foreachBatch, resumable through a checkpoint kept beside the FTS sink.
 
-The route, `route_json_wire` (fts_wire ∪ geo_wire of route_json as one
-projection to (topic, key, value) rows), is applied to the stream once
-per query: built per micro-batch, its Python construction would cost
+`start_pipeline` runs any (topic, key, value) wire stream into one sink
+per topic; both lanes use it. The JSON lane's route, `route_json_wire`
+(fts_wire ∪ geo_wire of route_json as one projection), and the binary
+lane's `fts_wire(route_binary(·))` are applied to the stream once per
+query: built per micro-batch, their Python construction would cost
 thousands of py4j calls each time. Each micro-batch runs one Spark job
 that collects the routed rows; the driver publishes them by batch id.
 """
@@ -34,48 +36,57 @@ def publish(rows: pa.Table, fs: pafs.FileSystem, root: str, batch_id: int) -> No
     fs.move(f"{root}/.{name}", f"{root}/{name}")
 
 
-def start_json_pipeline(
-    cdc_stream: DataFrame,
-    fts_dir: str,
-    geo_dir: str,
-    trigger: dict | None = None,
-):
-    """Run the JSON-lane CDC pipeline: stream in, two parquet message
-    sinks out (stand-ins for the fts_service / geo_service topics), each
-    a local path or a URI `pyarrow.fs` resolves.
+def start_pipeline(wire: DataFrame, sinks: dict[str, str], trigger: dict | None = None):
+    """Run a (topic, key, value) wire stream into one parquet message
+    sink per topic in `sinks` (stand-ins for the fts_service /
+    geo_service topics), each a local path or a URI `pyarrow.fs`
+    resolves. Topics `sinks` does not name are not published.
 
     Each micro-batch is one Spark job: the route runs map-side and its
     wire rows reach the driver as Arrow. The driver `publish`es one file
-    per sink, FTS first, even for an empty slice, so every data batch
-    leaves a readable (topic, key, value) file in both sinks.
+    per sink, in `sinks` order (FTS first), even for an empty slice, so
+    every data batch leaves a readable (topic, key, value) file in each
+    sink.
 
-    Delivery: the checkpoint lives at `<fts_dir>/_checkpoint` (its `_`
-    prefix hides it from readers), so a restart resumes after the last
-    committed batch, unlike the reference's auto-commit (J:48). A batch
-    that fails, before or between its two files, replays under the same
-    batch id with the same input and replaces its own files: exactly-once
-    per sink, from a replayable source and a sink idempotent per batch id.
+    Delivery: the checkpoint lives at `<sinks[FTS_TOPIC]>/_checkpoint`
+    (its `_` prefix hides it from readers), so a restart resumes after
+    the last committed batch, unlike the reference's auto-commit (J:48).
+    A batch that fails, before or between its files, replays under the
+    same batch id with the same input and replaces its own files:
+    exactly-once per sink, from a replayable source and a sink idempotent
+    per batch id.
 
     Scale bound: only routed wire rows reach the driver, and a batch is
     bounded by the source's per-trigger limit (`maxFilesPerTrigger` /
     `maxOffsetsPerTrigger`). `spark.driver.maxResultSize` fails an
     oversized batch loudly, and the failed batch id replays idempotently.
     The Kafka path (`sources/kafka.write_routed`) stays executor-side."""
-    sinks = [
+    roots = [
         (topic, *pafs.FileSystem.from_uri(d if ":" in d else os.path.abspath(d)))
-        for topic, d in ((FTS_TOPIC, fts_dir), (GEO_TOPIC, geo_dir))
+        for topic, d in sinks.items()
     ]
 
     def process(batch: DataFrame, batch_id: int) -> None:
         rows = batch.toArrow()
-        for topic, fs, root in sinks:
+        for topic, fs, root in roots:
             publish(rows.filter(pc.equal(rows["topic"], topic)), fs, root, batch_id)
 
     writer = (
-        route_json_wire(cdc_stream)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(fts_dir, "_checkpoint"))
+        wire.writeStream.foreachBatch(process)
+        .option("checkpointLocation", os.path.join(sinks[FTS_TOPIC], "_checkpoint"))
         .outputMode("update")
     )
     trigger = trigger or {"availableNow": True}
     return writer.trigger(**trigger).start()
+
+
+def start_json_pipeline(
+    cdc_stream: DataFrame,
+    fts_dir: str,
+    geo_dir: str,
+    trigger: dict | None = None,
+):
+    """The JSON lane: `route_json_wire` into an FTS and a geo sink."""
+    return start_pipeline(
+        route_json_wire(cdc_stream), {FTS_TOPIC: fts_dir, GEO_TOPIC: geo_dir}, trigger
+    )

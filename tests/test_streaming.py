@@ -66,6 +66,42 @@ def test_cdc_stream_equals_batch(spark, tmp_path):
     assert got_geo == want_geo
 
 
+def _binary_replay(spark, sf_dir, src):
+    """The binary changelog synthesized from the sf events, written to
+    `src` as 3 replay files; returns the changelog as read back."""
+    from mapr_db_cdc_sample_spark.cdc.fixtures import synth_binary_cdc_from_events
+    from mapr_db_cdc_sample_spark.cdc.schema import CDC_BINARY_SCHEMA
+
+    events = load_tables(spark, sf_dir)["events"]
+    write_replay(synth_binary_cdc_from_events(events), n_chunks=3, base_dir=src)
+    return spark.read.schema(CDC_BINARY_SCHEMA).parquet(src)
+
+
+def test_binary_cdc_stream_equals_batch(spark, sf_dir, tmp_path):
+    """The binary lane through the same pipeline as the JSON lane, one
+    replay file per micro-batch: its one FTS sink equals the batch wire
+    form as a multiset, holds exactly one file per batch id, and the run
+    makes no geo sink (the binary lane has no geo route, B:30)."""
+    import os
+
+    from mapr_db_cdc_sample_spark.cdc.pipeline import FTS_TOPIC, fts_wire, route_binary
+    from mapr_db_cdc_sample_spark.cdc.schema import CDC_BINARY_SCHEMA
+    from mapr_db_cdc_sample_spark.streaming.cdc_stream import start_pipeline
+
+    src, fts_dir = str(tmp_path / "in"), str(tmp_path / "fts")
+    cdc = _binary_replay(spark, sf_dir, src)
+    n = len([f for f in os.listdir(src) if f.startswith("part-")])
+    assert n >= 3
+    stream = read_replay(spark, src, CDC_BINARY_SCHEMA, files_per_trigger=1)
+    start_pipeline(fts_wire(route_binary(stream)), {FTS_TOPIC: fts_dir}).awaitTermination()
+
+    got = _wire_rows(spark.read.parquet(fts_dir))
+    assert got and got == _wire_rows(fts_wire(route_binary(cdc)))
+    published = sorted(f for f in os.listdir(fts_dir) if f.startswith("batch-"))
+    assert published == [f"batch-{b:019d}.parquet" for b in range(n)]
+    assert sorted(os.listdir(tmp_path)) == ["fts", "in"]
+
+
 def test_json_wire_route_equals_batch_wire_on_varied_traffic(spark, tmp_path):
     """On seeded benchmark traffic (deletes, mixed-case and duplicate
     field paths, records that route nowhere) the one-projection route
@@ -299,26 +335,54 @@ def test_cdc_pipeline_restart_is_exactly_once(spark, tmp_path):
         ), got
 
 
-@pytest.mark.parametrize("fail_at", ["between_sinks", "before_sinks"])
-def test_cdc_pipeline_replays_a_failed_batch_exactly_once(spark, tmp_path, monkeypatch, fail_at):
+@pytest.mark.parametrize(
+    "lane, fail_at",
+    [("json", "between_sinks"), ("json", "before_sinks"), ("binary", "before_sinks")],
+    ids=["between_sinks", "before_sinks", "binary-before_sinks"],
+)
+def test_cdc_pipeline_replays_a_failed_batch_exactly_once(
+    spark, sf_dir, tmp_path, monkeypatch, lane, fail_at
+):
     """Batch k fails once, after its FTS file lands and before its geo
     file, or before either lands. A restart over the same checkpoint and
     sinks replays batch k under the same batch id, and its files replace
     what the failed attempt left: each sink equals its batch wire form,
     with no duplicate and no loss. A sink that appends per attempt
-    duplicates batch k's FTS rows in the first case."""
+    duplicates batch k's FTS rows in the first case. The binary lane has
+    one sink, so it fails only before its file."""
     import os
 
     from perfbench import changelog
 
-    from mapr_db_cdc_sample_spark.cdc.pipeline import fts_wire, geo_wire, route_json
+    from mapr_db_cdc_sample_spark.cdc.pipeline import (
+        FTS_TOPIC,
+        fts_wire,
+        geo_wire,
+        route_binary,
+        route_json,
+    )
+    from mapr_db_cdc_sample_spark.cdc.schema import CDC_BINARY_SCHEMA
     from mapr_db_cdc_sample_spark.streaming import cdc_stream
 
     src = str(tmp_path / "in")
-    os.makedirs(src)
-    for i, tbl in enumerate(changelog.files(7, 3, 500)):
-        changelog.write_file(src, i, tbl)
     fts_dir, geo_dir = str(tmp_path / "fts"), str(tmp_path / "geo")
+    if lane == "json":
+        os.makedirs(src)
+        for i, tbl in enumerate(changelog.files(7, 3, 500)):
+            changelog.write_file(src, i, tbl)
+        schema = CDC_JSON_SCHEMA
+        fts, geo = route_json(spark.read.schema(schema).parquet(src))
+        want = {fts_dir: fts_wire(fts), geo_dir: geo_wire(geo)}
+
+        def start(stream):
+            return cdc_stream.start_json_pipeline(stream, fts_dir, geo_dir)
+    else:
+        schema = CDC_BINARY_SCHEMA
+        want = {fts_dir: fts_wire(route_binary(_binary_replay(spark, sf_dir, src)))}
+
+        def start(stream):
+            return cdc_stream.start_pipeline(fts_wire(route_binary(stream)), {FTS_TOPIC: fts_dir})
+
     k, failing = 1, ("geo" if fail_at == "between_sinks" else "fts")
     publish, failed = cdc_stream.publish, []
 
@@ -331,8 +395,7 @@ def test_cdc_pipeline_replays_a_failed_batch_exactly_once(spark, tmp_path, monke
     monkeypatch.setattr(cdc_stream, "publish", flaky)
 
     def run():
-        stream = read_replay(spark, src, CDC_JSON_SCHEMA, files_per_trigger=1)
-        cdc_stream.start_json_pipeline(stream, fts_dir, geo_dir).awaitTermination()
+        start(read_replay(spark, src, schema, files_per_trigger=1)).awaitTermination()
 
     with pytest.raises(Exception, match="injected sink failure"):
         run()
@@ -341,11 +404,11 @@ def test_cdc_pipeline_replays_a_failed_batch_exactly_once(spark, tmp_path, monke
     assert not os.path.exists(os.path.join(geo_dir, name))
     run()
 
-    fts, geo = route_json(spark.read.schema(CDC_JSON_SCHEMA).parquet(src))
-    for got_dir, want in ((fts_dir, fts_wire(fts)), (geo_dir, geo_wire(geo))):
-        assert _wire_rows(spark.read.parquet(got_dir)) == _wire_rows(want), got_dir
+    for got_dir, wire in want.items():
+        assert _wire_rows(spark.read.parquet(got_dir)) == _wire_rows(wire), got_dir
         published = sorted(n for n in os.listdir(got_dir) if n.startswith("batch-"))
         assert published == [f"batch-{b:019d}.parquet" for b in range(3)], got_dir
+    assert os.path.exists(geo_dir) == (lane == "json")
 
 
 def test_cdc_pipeline_publishes_empty_geo_file_per_batch(spark, tmp_path):
@@ -384,31 +447,6 @@ def test_cdc_pipeline_publishes_empty_geo_file_per_batch(spark, tmp_path):
         ("value", "string"),
     ]
     assert spark.read.parquet(fts_dir).count() == n_deletes
-
-
-def test_console_and_parquet_sinks(spark, tmp_path):
-    """R14 console trace + parquet file sink both drain the golden wire
-    stream (console output is driver-side; we assert clean termination,
-    parquet we read back)."""
-    from mapr_db_cdc_sample_spark.cdc.pipeline import fts_wire, route_json
-    from mapr_db_cdc_sample_spark.streaming.sinks import console_debug, parquet_append
-
-    cdc = golden_json_events(spark)
-    replay = write_replay(cdc, n_chunks=2, base_dir=str(tmp_path / "replay"))
-    stream = read_replay(spark, replay, CDC_JSON_SCHEMA, files_per_trigger=1)
-    fts, _ = route_json(stream)
-    wire = fts_wire(fts)
-
-    q1 = console_debug(wire)
-    q1.awaitTermination()
-    assert q1.exception() is None
-
-    stream2 = read_replay(spark, replay, CDC_JSON_SCHEMA, files_per_trigger=1)
-    fts2, _ = route_json(stream2)
-    out = str(tmp_path / "sink")
-    q2 = parquet_append(fts_wire(fts2), out)
-    q2.awaitTermination()
-    assert spark.read.parquet(out).count() == 3  # 2 fts msgs + tombstone
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -618,13 +656,10 @@ def test_cdc_latency_budget(spark, tmp_path):
     end-to-end budget (J:41+J:59). Measured from StreamingQueryProgress
     over a 24-batch sf0.001 replay; steady state is the trailing 8
     batches (JIT/codegen settled). The committed LATENCY.json artifact
-    is produced by `python tools/latency.py`; set
-    SPARK_GRAFT_WRITE_LATENCY=1 to refresh it from this run too (the
-    default keeps `pytest` from dirtying the working tree)."""
-    import json as _json
+    is produced by `python tools/latency.py` alone."""
     import os
 
-    from tools.latency import BUDGET_MS, REPO, measure
+    from tools.latency import BUDGET_MS, measure
 
     # Sample box load BEFORE measuring: a concurrent Spark session (a
     # sweep, a parallel CI shard) saturates all cores and makes ANY
@@ -647,9 +682,6 @@ def test_cdc_latency_budget(spark, tmp_path):
     # the skip reason — a weakened bound (the r10 form asserted 20x)
     # would go silently green on exactly the CI shards where a real
     # 5-15x regression hides (ADVICE r10).
-    if os.environ.get("SPARK_GRAFT_WRITE_LATENCY"):
-        with open(os.path.join(REPO, "LATENCY.json"), "w") as fh:
-            _json.dump(out, fh, indent=1)
     if os.environ.get("SPARK_GRAFT_PERF_GATE"):
         assert steady["median_ms"] <= BUDGET_MS, steady
         assert steady["p90_ms"] <= BUDGET_MS * 1.5, steady

@@ -14,8 +14,9 @@ trigger through the real dual-sink pipeline (streaming/cdc_stream.py)
 and returns each batch's full StreamingQueryProgress phase breakdown
 (PHASES), the steady-state median of each phase, and the core count the
 session ran on; run as a script it also writes LATENCY.json at the repo
-root (the committed evidence artifact). Set SPARK_GRAFT_CPUS to the
-core count to measure on (default 32)."""
+root (the committed evidence artifact). The script runs on the engine's
+own session (`session.get_spark`): SPARK_GRAFT_CPUS sets the core count
+to measure on (default: all cores)."""
 
 from __future__ import annotations
 
@@ -104,14 +105,9 @@ def measure(spark, base_dir: str, timeout_s: float = 120.0) -> dict:
 def main() -> None:
     import tempfile
 
-    from pyspark.sql import SparkSession
+    from mapr_db_cdc_sample_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("latency")
     spark.sparkContext.setLogLevel("ERROR")
     with tempfile.TemporaryDirectory() as td:
         out = measure(spark, td)
