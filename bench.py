@@ -23,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mapr_db_cdc_sample_spark.queries import load_all
-from mapr_db_cdc_sample_spark.session import get_spark
+from mapr_db_cdc_sample_spark.session import get_spark, release
 
 # Headline set: the scale-sensitive shapes (big aggs, joins, windows,
 # set ops, CDC route, LLM ops get added as they land).
@@ -258,7 +258,7 @@ def build_payload(
         # accumulated stale blocks inflated late-running queries (q109 was
         # 4.5s dirty vs 1.5s isolated). Round-over-round comparisons for
         # the LSH family should expect ~+1.5s of now-visible real work.
-        "note": "per-query cache-isolated since r4 (clearCache between queries)",
+        "note": "per-query cache-isolated since r4 (release between queries)",
     }
     if canary is not None:
         # must land BEFORE the greedy query fill so the box-state probe
@@ -306,7 +306,8 @@ def time_queries(
 
     A session starts warm with Q01 (priming codegen/JIT and the parquet
     footer cache); each query's time is the min of `runs` runs, its
-    cached blocks are cleared afterwards, and the session restarts every
+    cached and pinned blocks are released afterwards
+    (`session.release`), and the session restarts every
     `recycle` queries. `on_result(name, sec)` is called as each result
     lands. Returns ({name: sec}, the first session's cold Q01 seconds).
 
@@ -339,9 +340,9 @@ def time_queries(
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
         on_result(name, timings[name])
-        # Cached blocks left behind by persist()ing queries would build up
+        # Cached and pinned blocks left behind by a query would build up
         # heap pressure and distort later queries' timings — isolate them.
-        spark.catalog.clearCache()
+        release(spark)
     spark.stop()
     return timings, cold_s
 
@@ -382,7 +383,7 @@ def main() -> None:
     # tests/test_plans.py. Captured in a FRESH session, pre-execution —
     # the same context as the pytest gate: a session that has executed
     # hundreds of plans carries runtime state (e.g. the size statistics
-    # of q294's eager localCheckpoint RDD) that can flip a join strategy
+    # of q294's pinned RDD) that can flip a join strategy
     # in the embed while the baseline and the pytest recompute, both
     # fresh-session, agree (round-7 verdict task 3).
     from mapr_db_cdc_sample_spark.plans.audit import plan_fingerprint

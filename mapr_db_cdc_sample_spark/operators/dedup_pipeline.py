@@ -26,7 +26,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import scoped_confs
+from ..session import pin, scoped_confs
 from . import banding
 
 #: Shuffle width of the iterative label/frontier loops (connected
@@ -88,7 +88,7 @@ def _cc_loop(edges: DataFrame, max_iters: int) -> DataFrame:
     sym = edges.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    sym = sym.localCheckpoint()  # cut the LSH/verify lineage out of the loop
+    sym = pin(sym)  # cut the LSH/verify lineage out of the loop
     # Seed labels with min(self, neighbors) instead of self: the same
     # one-shuffle cost as the former distinct() (groupBy src), but
     # star/clique clusters — the typical dup-cluster shape — are already
@@ -101,7 +101,7 @@ def _cc_loop(edges: DataFrame, max_iters: int) -> DataFrame:
         .select(
             "doc_id", F.least(F.col("doc_id"), F.col("nmin")).alias("component")
         )
-        .localCheckpoint()
+        .transform(pin)
     )
     # Labels only ever decrease (least/min everywhere), so sum(component)
     # strictly decreases iff any label moved — convergence is one cheap
@@ -134,9 +134,9 @@ def _cc_loop(edges: DataFrame, max_iters: int) -> DataFrame:
                 "doc_id",
                 F.coalesce(F.col("c_comp"), F.col("component")).alias("component"),
             )
-            # eager checkpoint: keeps every iteration's plan O(1) deep —
-            # without it analysis cost grows with the iteration count
-            .localCheckpoint()
+            # pinned: keeps every iteration's plan O(1) deep — without it
+            # analysis cost grows with the iteration count
+            .transform(pin)
         )
         cur_sum = labels.agg(F.sum("component")).collect()[0][0]
         if cur_sum == prev_sum:

@@ -6,8 +6,8 @@ nodes of degree < k until a fixpoint (the order of deletions does not
 matter — the result is unique). A fixpoint with per-round aggregation
 is not expressible in a single SQL query (recursive CTEs forbid
 aggregates over the recursive term), so the loop runs on the driver
-with scalar counts per round; edges are localCheckpoint'ed so lineage
-stays flat (same pattern as operators/dedup_pipeline.py's connected
+with scalar counts per round; edges are pinned (`session.pin`) so the
+plan stays flat (same pattern as operators/dedup_pipeline.py's connected
 components).
 
 Scale design (round-11 fix for the r10-measured 16.4x decade ratio):
@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def _degrees(e: DataFrame) -> DataFrame:
     return (
@@ -64,15 +66,15 @@ def k_core(
     delta path (removed nodes / degree-delta rows); larger rounds take
     the shuffle path instead.
     """
-    e = edges.select("a", "b").localCheckpoint()
-    deg = _degrees(e).localCheckpoint()
+    e = pin(edges.select("a", "b"))
+    deg = pin(_degrees(e))
     for _ in range(max_rounds):
         removed = deg.where(F.col("d") < k).select("node")
         r = removed.count()  # bounded driver action: one scalar per round
         if r == 0:
             break
         if r <= broadcast_cap:
-            rem = F.broadcast(removed.localCheckpoint())
+            rem = F.broadcast(pin(removed))
             rem_a = rem.withColumnRenamed("node", "a")
             rem_b = rem.withColumnRenamed("node", "b")
             # degree deltas for SURVIVING endpoints of lost edges: an
@@ -87,13 +89,13 @@ def k_core(
                 lost_a.unionAll(lost_b)
                 .groupBy("node")
                 .agg(F.count("*").alias("dd"))
-                .localCheckpoint()
+                .transform(pin)
             )
             if delta.count() <= broadcast_cap:
                 e = (
                     e.join(rem_a, "a", "left_anti")
                     .join(rem_b, "b", "left_anti")
-                    .localCheckpoint()
+                    .transform(pin)
                 )
                 deg = (
                     deg.join(rem, "node", "left_anti")
@@ -102,7 +104,7 @@ def k_core(
                         "node",
                         (F.col("d") - F.coalesce(F.col("dd"), F.lit(0))).alias("d"),
                     )
-                    .localCheckpoint()
+                    .transform(pin)
                 )
                 continue
         # shuffle path: a mass-peel round (or a removed hub with more
@@ -113,9 +115,9 @@ def k_core(
             e.join(keep.withColumnRenamed("node", "a"), "a")
             .join(keep.withColumnRenamed("node", "b"), "b")
             .select("a", "b")
-            .localCheckpoint()
+            .transform(pin)
         )
-        deg = _degrees(e).localCheckpoint()
+        deg = pin(_degrees(e))
     return (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))

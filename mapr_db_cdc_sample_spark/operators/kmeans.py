@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..session import scoped_confs
+from ..session import pin, scoped_confs
 
 
 def _assign(vecs: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
@@ -126,14 +126,15 @@ def kmeans_lite(
                 assigned = _assign(vecs, centroids)
                 centroids, it = _recompute(assigned, dim)
                 inertia.append(it)
-            # materialize the final assignment off the cache, then release
-            # it; the embedding column is dropped first — the assignment
-            # contract is (vec_id, cluster, d2), and checkpointing the
-            # vectors again would write ~20x the bytes for nothing
+            # pinned inside the conf scope, so the final assignment runs
+            # off the cache before `vecs` is released below; the embedding
+            # column is dropped first — the assignment contract is
+            # (vec_id, cluster, d2), and pinning the vectors again would
+            # write ~20x the bytes for nothing
             final = (
                 _assign(vecs, centroids)
                 .select("vec_id", "cluster", "d2")
-                .localCheckpoint(eager=True)
+                .transform(pin)
             )
     finally:
         vecs.unpersist()

@@ -10,12 +10,12 @@ rounds" is the reproducible contract.
 Scale posture mirrors operators/kcore.py: per-round work is one
 edges x labels join plus a (node, label) count aggregate — both keyed
 shuffles bounded by the labeled frontier. The adjacency is
-localCheckpoint'ed ONCE so the (possibly expensive) edge derivation is
-materialized a single time; the R rounds stay LAZY — each round's
-output feeds the next exactly once, so the final action evaluates a
-linear chain of ~3R shuffles in one job instead of R eager checkpoint
-jobs that each re-run their upstream (r12, guide §2/§5: q320 spent 5x
-its time re-deriving the SRP kNN graph every round). No driver-side
+pinned ONCE so the (possibly expensive) edge derivation runs a single
+time; the R rounds are not pinned — each round's output feeds the next
+exactly once, so the final action evaluates a linear chain of ~3R
+shuffles in one job instead of R checkpoint jobs that each re-run
+their upstream (r12, guide §2/§5: q320 spent 5x its time re-deriving
+the SRP kNN graph every round). No driver-side
 data beyond the loop counter.
 
 Used by q320 (queries/analytics3.py); property-twinned against a
@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import pin
 
 
 def label_propagation(edges: DataFrame, seeds: DataFrame, rounds: int = 5) -> DataFrame:
@@ -38,11 +40,11 @@ def label_propagation(edges: DataFrame, seeds: DataFrame, rounds: int = 5) -> Da
     adj = (
         edges.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionAll(edges.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        # one eager materialization of the edge derivation; rounds below
-        # reference adj R times and must not re-run its upstream
-        .localCheckpoint()
+        # rounds below reference adj R times and must not re-run the
+        # edge derivation
+        .transform(pin)
     )
-    seeds = seeds.select("node", "label").localCheckpoint()
+    seeds = pin(seeds.select("node", "label"))
     labels = seeds
     for _ in range(rounds):
         msgs = adj.join(
@@ -55,8 +57,8 @@ def label_propagation(edges: DataFrame, seeds: DataFrame, rounds: int = 5) -> Da
             .agg(F.min(F.struct((-F.col("cnt")).alias("neg"), "label")).alias("s"))
             .select("node", F.col("s.label").alias("label"))
         )
-        # lazy: labels_k is consumed exactly once (by round k+1), so the
-        # chain is linear and one final action runs all rounds
+        # not pinned: labels_k is consumed exactly once (by round k+1),
+        # so the chain is linear and one final action runs all rounds
         labels = seeds.unionAll(
             best.join(seeds.select("node"), "node", "left_anti")
         )

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def exact_ntile_counts(
     scored: DataFrame,
@@ -53,7 +55,7 @@ def exact_ntile_counts(
     # to <= n_tiles tie groups by the broadcast join (r12, guide §2.4).
     hist = scored.groupBy(score).agg(
         F.count("*").alias("gn"), F.sum(label).cast("bigint").alias("gpos")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     wd = Window.orderBy(order)
     cums = hist.select(
         score,
@@ -114,7 +116,7 @@ def exact_ntile_counts(
         # pinned: locate (<= n_tiles rows) feeds the probe broadcast AND
         # the at_b join — unpinned, the |scores|-sized cumulative window
         # subtree runs twice
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     probe = scored.join(F.broadcast(locate.select("tile", score, "k")), score)
     rn = F.row_number().over(Window.partitionBy("tile").orderBy(tb.asc()))
     part = (

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import pin
+
 #: score of a NaN cosine (a zero-norm vector): real 1e4-scaled cosines
 #: lie in [-10000, 10000], and both SQL engines rank NaN greatest
 _NAN_S4 = 10001
@@ -467,7 +469,7 @@ def _ivf_probe_grid(
 
     assigned = base.select(
         "vec_id", "label", "embedding", probes("embedding").alias("pc")
-    ).localCheckpoint()
+    ).transform(pin)
 
     # ---- sub-block split of oversized cells (bounded per-task matmul)
     cand0 = assigned.select(

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 #: node ids must be < this for the (deg, id) packing to stay injective
 _ID_SPACE = 100000000
 
@@ -63,17 +65,12 @@ def _oriented(e: DataFrame):
     algorithms pin their edge list; same rule as
     operators/dedup_pipeline.py.
 
-    Both pins are EAGER (r12 session 3): a lazy pin referenced by
-    several stages of ONE action lets concurrent stages race to compute
-    the blocks, re-running the subtree per racer — the documented
-    lpa/q461 rule, re-measured here at sf1: q564 19.9/12.4 s lazy vs
-    11.1/10.8 s eager back-to-back, and the racing spikes (26 s runs)
-    disappear. The orientation joins take SHUFFLE_HASH builds of the
-    |V|-row keyed frame, and _closed_wedges hash-builds eo for its
-    closing semi-join — at sf1 the wedge stream is 50.5M rows and the
-    sort-merge sort of it was the residual cost (guide §3.1; measured
-    with both hint sets + eager pins: 5.8-12.1 s vs 15.5-19.4 s)."""
-    e = e.localCheckpoint()
+    The orientation joins take SHUFFLE_HASH builds of the |V|-row keyed
+    frame, and _closed_wedges hash-builds eo for its closing semi-join —
+    at sf1 the wedge stream is 50.5M rows and the sort-merge sort of it
+    was the residual cost (guide §3.1; measured with both hint sets:
+    5.8-12.1 s vs 15.5-19.4 s)."""
+    e = pin(e)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -109,7 +106,7 @@ def _oriented(e: DataFrame):
             F.greatest("ku", "kv").alias("kdst"),
         )
     )
-    eo = eo.localCheckpoint()
+    eo = pin(eo)
     return e, eo
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import cents, rhu
 from ..io import load_tables
+from ..session import pin
 from . import register
 from ..operators import banding as B
 from ..operators.dedup_pipeline import connected_components
@@ -506,16 +507,16 @@ def q160(spark, sf_dir):
                 F.col("l_partkey").alias("dst"),
             )
         )
-        # eager checkpoint, not persist+unpersist: the caller executes the
-        # returned plan later, so an unpersist here would fire before the
-        # action; the checkpoint also cuts the distinct() out of the
-        # 3-reference lineage (edges is read 3x, built once)
-        .localCheckpoint(eager=True)
+        # pinned, not persist+unpersist: the caller executes the returned
+        # plan later, so an unpersist here would fire before the action;
+        # the pin also cuts the distinct() out of the 3-reference
+        # lineage (edges is read 3x, built once)
+        .transform(pin)
     )
     deg = (
         edges.groupBy("src")
         .agg(F.count("*").cast("bigint").alias("outdeg"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     ranks = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("rank"))
     for _ in range(3):
@@ -744,9 +745,7 @@ def q162(spark, sf_dir):
     # pinned: the fingerprint frame feeds BOTH sides of the band
     # self-join — without the checkpoint the tokenize + 60-column vote
     # aggregate runs twice (guide §2.4)
-    sh = votes.select("doc_id", sim.cast("long").alias("simhash")).localCheckpoint(
-        eager=False
-    )
+    sh = pin(votes.select("doc_id", sim.cast("long").alias("simhash")))
     mask = (1 << _SIMHASH_BAND_BITS) - 1
     bands = sh.select(
         "doc_id",
@@ -1001,7 +1000,7 @@ def q166(spark, sf_dir):
                 )
             ).alias("j", "qv_ij"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     v = spark.range(64).select(
         F.col("id").alias("j"), F.lit(1000000).cast("bigint").alias("v")
@@ -1024,7 +1023,7 @@ def q166(spark, sf_dir):
             # re-quantized v — unpinned, the whole round's two matvec
             # shuffles run twice, and the doubling compounds per round
             # (guide §2.4; before-plan: 36 Exchanges, 56 scans of qx)
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         wd = F.col("w").cast("decimal(19,0)")
         nrm = w.agg(
@@ -1213,7 +1212,7 @@ def q169(spark, sf_dir):
         .groupBy("etype", "dow")
         .agg(F.count("*").alias("c"))
     )
-    cells = cells.localCheckpoint(eager=True)  # 3 consumers below
+    cells = pin(cells)  # 3 consumers below
     tot = cells.agg(F.sum("c").cast("bigint").alias("n"))
     px = cells.groupBy("etype").agg(F.sum("c").cast("bigint").alias("cx"))
     py = cells.groupBy("dow").agg(F.sum("c").cast("bigint").alias("cy"))
@@ -2017,7 +2016,7 @@ def q185(spark, sf_dir):
         )
         .groupBy("etype", "dow")
         .agg(F.count("*").alias("o"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     tot = cells.agg(F.sum("o").cast("bigint").alias("n"))
     px = cells.groupBy("etype").agg(F.sum("o").cast("bigint").alias("rx"))
@@ -2152,7 +2151,7 @@ def q187(spark, sf_dir):
         .agg(
             F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
         )
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     tot = rev.agg(F.sum("cents").cast("bigint").alias("t"))
     w = (
         Window.orderBy(F.col("cents").desc(), "nation")
@@ -2572,7 +2571,7 @@ def q194(spark, sf_dir):
     toks = corpus.select(
         "doc_id",
         F.array_distinct(T.shingles(T.tokens(F.col("text")), 3)).alias("tk"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     tok_freq = (
         toks.select(F.explode("tk").alias("t"))
         .groupBy("t")
@@ -2712,7 +2711,7 @@ def q196(spark, sf_dir):
         F.explode(
             F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
         ).alias("t"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
     vocab = toks.groupBy("t").agg(F.count("*").alias("freq")).where(
         F.col("freq") >= _VOCAB_MIN_FREQ
     )
@@ -3909,7 +3908,7 @@ def q215(spark, sf_dir):
         F.transform(
             "embedding", lambda x: F.round(x.cast("double") * 1000).cast("bigint")
         ).alias("q"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin)
 
     import hashlib
 
@@ -3939,8 +3938,8 @@ def q215(spark, sf_dir):
     # joins below — without the checkpoint it would re-run per reference
     sigs = dots.select(
         "vec_id", "q", sig.cast("bigint").alias("sig"), nn.alias("nn")
-    ).localCheckpoint(eager=False)
-    n = q.count()  # q is localCheckpointed, so this is a cached scan
+    ).transform(pin)
+    n = q.count()  # q is pinned, so later reads scan its blocks
     bits = _srp_bits(n)
     nbands = max(1, _SRP_PLANES // bits)
     # band join + pair dedup move ONLY (vec_id, band): the former shape

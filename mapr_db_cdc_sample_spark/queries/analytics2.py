@@ -21,7 +21,7 @@ from ..functions.exact import cents, cosine_duck, rhu
 from ..io import load_tables
 from ..operators import banding as B
 from ..operators.dedup_pipeline import CC_PARTITIONS, connected_components
-from ..session import scoped_confs
+from ..session import pin, scoped_confs
 from . import register
 from .analytics import _CC_ORACLE
 from .llm import _BANDS_CTE, _MINHASH_CTE, _minhash_corpus
@@ -382,8 +382,8 @@ FROM d GROUP BY hops ORDER BY hops""",
 
 def _bfs_hops(edges, max_depth: int = 20):
     """(node, hops) = BFS level from each component's min-label root over
-    the undirected edge list. Frontier-sized joins, localCheckpoint per
-    level to cut lineage, and iteration shuffles sized to the label
+    the undirected edge list. Frontier-sized joins, pinned per level to
+    cut lineage, and iteration shuffles sized to the label
     volume, not the global default (same discipline — and same
     CC_PARTITIONS — as operators/dedup_pipeline.connected_components)."""
     with scoped_confs(edges.sparkSession, {"spark.sql.shuffle.partitions": CC_PARTITIONS}):
@@ -397,14 +397,14 @@ def _bfs_loop(edges, max_depth: int):
             edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
         .distinct()
-        .localCheckpoint()
+        .transform(pin)
     )
     dist = (
         connected_components(edges)
         .select(F.col("component").alias("node"))
         .distinct()
         .select("node", F.lit(0).alias("hops"))
-        .localCheckpoint()
+        .transform(pin)
     )
     frontier = dist
     for depth in range(1, max_depth + 1):
@@ -414,7 +414,7 @@ def _bfs_loop(edges, max_depth: int):
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .select("node", F.lit(depth).alias("hops"))
-            .localCheckpoint()
+            .transform(pin)
         )
         if nxt.count() == 0:  # scalar driver action, bounded by diameter
             break
@@ -436,7 +436,7 @@ def q253(spark, sf_dir):
     pairs = (
         B.candidate_pairs(_minhash_corpus(d))
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .transform(pin)
     )
     dist = _bfs_hops(pairs)
     return (

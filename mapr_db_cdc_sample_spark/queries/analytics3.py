@@ -20,6 +20,7 @@ from ..functions import text as T
 from ..functions import vectors as V
 from ..functions.exact import cents, cosine_duck, floor_rhu, rhu
 from ..io import load_tables
+from ..session import pin
 from ..operators.dedup_pipeline import connected_components
 from ..operators.kcore import k_core
 from ..operators.lpa import label_propagation
@@ -1114,7 +1115,7 @@ def q288(spark, sf_dir):
 # nature (no SQL oracle): k=3 rounds, each ONE distributed anti-join of
 # the (source, shingle) frame against the covered-shingle set plus an
 # 8-row argmax on the driver (sources are a dimension); the covered set
-# is localCheckpoint'ed per round like BFS frontiers. The property twin
+# is pinned per round like BFS frontiers. The property twin
 # replays the greedy from raw Python shingle sets.
 @register("q289_greedy_source_cover", tags=("approx",))
 def q289(spark, sf_dir):
@@ -1127,7 +1128,7 @@ def q289(spark, sf_dir):
         .where(F.col("s").isNotNull())
         .select("source", T.shingle_hash60(F.col("s")).alias("h"))
         .distinct()
-        .localCheckpoint()
+        .transform(pin)
     )
     covered = None
     rows, picked = [], []
@@ -1147,7 +1148,7 @@ def q289(spark, sf_dir):
         newly = sh.where(F.col("source") == best).select("h")
         covered = (
             newly if covered is None else covered.unionByName(newly).distinct()
-        ).localCheckpoint()
+        ).transform(pin)
         rows.append((step, best, int(counts[best]), covered.count()))
     return spark.createDataFrame(
         rows, "step int, source string, new_shingles bigint, covered_total bigint"
@@ -1305,7 +1306,7 @@ def q292(spark, sf_dir):
     # scan->aggregate->window subtree)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("i")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     a = idx.select(F.col("cents").alias("ca"), F.col("i").alias("ia"))
     b = idx.select(F.col("cents").alias("cb"), F.col("i").alias("ib"))
     # BIGINT throughout: floor((2e6*dc + di) / (2*di)) == the oracle's
@@ -1348,13 +1349,13 @@ def q292(spark, sf_dir):
     # deterministic. The single-partition pieces are now P rows and one
     # ~n/P-row slice (guide §2.3/§5: no single-task sort may scale with
     # the quadratic pair volume).
-    s_ck = s.localCheckpoint()  # one barrier; the range sampling pass,
+    s_ck = pin(s)  # one barrier; the range sampling pass,
     # the range shuffle and the target-slice scan all read its blocks
     P = spark.sparkContext.defaultParallelism
     rp = (
         s_ck.repartitionByRange(P, "slope_micro")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # counts pass + target scan share
+        .transform(pin)  # counts pass + target scan share
         # the shuffled layout (and the pid column must be computed once:
         # a re-run could legally renumber partitions)
     )
@@ -1476,7 +1477,7 @@ def q293(spark, sf_dir):
     st = (
         tok.groupBy("source", "term")
         .agg(F.count("*").alias("c_st"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     d38 = "decimal(38,0)"
     s = st.groupBy("source").agg(F.sum("c_st").cast(d38).alias("n_s"))
@@ -1561,7 +1562,7 @@ def q294(spark, sf_dir):
     pairs = B.candidate_pairs(_minhash_corpus(d)).select("doc_a", "doc_b")
     und = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionAll(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    ).localCheckpoint()
+    ).transform(pin)
     d38 = "decimal(38,0)"
     deg = und.groupBy(F.col("u").alias("node")).agg(F.count("*").cast(d38).alias("d"))
     ed = (
@@ -1745,20 +1746,20 @@ def q297(spark, sf_dir):
     # subtree before its own pin)
     tok = d.select(
         "doc_id", "lang", F.explode(T.tokens(F.col("text"))).alias("term")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     train = tok.where(F.col("doc_id") % 5 != 0)
     ct = (
         train.groupBy("lang", "term")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = ct.groupBy("lang").agg(F.sum("c").cast("bigint").alias("tot"))
-    voc = train.agg(F.countDistinct("term").alias("v")).localCheckpoint(eager=False)
+    voc = pin(train.agg(F.countDistinct("term").alias("v")))
     priors = (
         d.where(F.col("doc_id") % 5 != 0)
         .groupBy("lang")
         .agg(F.count("*").alias("n_docs"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ntr = priors.agg(F.sum("n_docs").cast("bigint").alias("n_train"))
     micro = lambda x: F.round(F.log(x) * 1000000).cast("bigint")  # noqa: E731
@@ -1886,10 +1887,7 @@ def q298(spark, sf_dir):
             li.select("l_orderkey", "l_partkey"), "l_orderkey", "l_partkey"
         )
         .select(F.col("u").alias("a"), F.col("v").alias("b"))
-        # EAGER: e feeds both union branches of the adjacency AND the
-        # anti-join — concurrent map stages raced to materialize the
-        # lazy pin (sf1 A/B: eager 7.2/7.3 s vs lazy 8.8/16.7 s)
-        .localCheckpoint()
+        .transform(pin)
     )
     # r12 session 3 (guide §2.4 — the decade cost was NOT the wedges,
     # which number only 2.5M at sf1, but the adjacency machinery:
@@ -2401,7 +2399,7 @@ def q306(spark, sf_dir):
     # once per reference (guide §2.4)
     idx = daily.select(
         "cents", (F.row_number().over(Window.orderBy("day")) - 1).alias("rn")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     nn = idx.agg(F.count("*").alias("n"))
     draw = (
         spark.range(0, 200)
@@ -2875,7 +2873,7 @@ def q312(spark, sf_dir):
             F.round(F.col("l_discount").cast("double") * 100).cast("bigint").alias("d"),
         )
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     n = pairs.agg(F.sum("cnt").cast("bigint").alias("n"))
 
@@ -3577,7 +3575,7 @@ def q322(spark, sf_dir):
     st = (
         tok.groupBy("source", "term")
         .agg(F.count("*").alias("c_st"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     s = st.groupBy("source").agg(F.sum("c_st").cast("bigint").alias("n_s"))
     t = st.groupBy("term").agg(F.sum("c_st").cast("bigint").alias("c_t"))
@@ -3669,7 +3667,7 @@ def q323(spark, sf_dir):
     # Exchanges)
     idx = daily.select(
         "day", "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     nn = idx.agg(F.count("*").alias("n"))
     pred = (
         idx.alias("a")
@@ -3682,7 +3680,7 @@ def q323(spark, sf_dir):
     split = (
         pred.crossJoin(F.broadcast(nn))
         .withColumn("cut", F.expr("7 + ((n - 7) * 7) DIV 10"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     wcal = Window.orderBy("resid", "rn")
     calib = (

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import cents, rhu
 from ..io import load_tables
+from ..session import pin
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
 
@@ -905,18 +906,18 @@ def q341(spark, sf_dir):
     um = (
         ev.select("user_id", F.date_format("ts", "yyyy-MM").alias("m"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     months = (
         um.select("m")
         .distinct()
         .select("m", F.row_number().over(Window.orderBy("m")).alias("mi"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     labeled = (
         um.join(F.broadcast(months), "m")
         .select("user_id", "mi")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     c, p = labeled.alias("c"), labeled.alias("p")
     pairs = (
@@ -1213,7 +1214,7 @@ def q345(spark, sf_dir):
     conf = (
         nb.groupBy("true_lang", "pred_lang")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     d38 = "decimal(38,0)"
     nn = conf.agg(F.sum("c").cast(d38).alias("n"))
@@ -1911,8 +1912,8 @@ def q355(spark, sf_dir):
     # (unpinned, each chunk's events scan + two windows + groupBy runs
     # twice), and merged feeds three consumers (guide §2.4; before-plan:
     # 13 Exchanges, 19 Sorts)
-    a = sessionize(ev.where(F.col("ts") < cut)).localCheckpoint(eager=False)
-    b = sessionize(ev.where(F.col("ts") >= cut)).localCheckpoint(eager=False)
+    a = pin(sessionize(ev.where(F.col("ts") < cut)))
+    b = pin(sessionize(ev.where(F.col("ts") >= cut)))
     wa = Window.partitionBy("user_id").orderBy(F.col("session_start").desc())
     wb = Window.partitionBy("user_id").orderBy("session_start")
     last_a = a.withColumn("rn", F.row_number().over(wa)).where(F.col("rn") == 1).drop("rn")
@@ -1933,7 +1934,7 @@ def q355(spark, sf_dir):
             F.col("y.session_end").alias("session_end"),
             (F.col("x.n_events") + F.col("y.n_events")).alias("n_events"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a_kept = a.join(
         merged.select("user_id", F.col("sid_a").alias("sid")), ["user_id", "sid"], "left_anti"

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import cents, rhu
 from ..io import load_tables
+from ..session import pin
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
 
@@ -549,9 +550,7 @@ def q372(spark, sf_dir):
     # are pinned because each is referenced twice and would otherwise
     # re-run its full orders-scan subtree per reference (guide §2.4;
     # before-plan: 19 Exchanges)
-    hist = (
-        ref.groupBy("price").agg(F.count("*").alias("n")).localCheckpoint(eager=False)
-    )
+    hist = pin(ref.groupBy("price").agg(F.count("*").alias("n")))
     wcum = Window.orderBy("price").rowsBetween(Window.unboundedPreceding, 0)
     wbef = Window.orderBy("price").rowsBetween(Window.unboundedPreceding, -1)
     cumh = hist.select(
@@ -574,7 +573,7 @@ def q372(spark, sf_dir):
         .select(F.col("price").alias("e"))
         .distinct()
         .agg(F.sort_array(F.collect_list("e")).alias("edges"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bin_of = F.lit(1) + F.size(
         F.filter(F.col("edges"), lambda e: e < F.col("price"))
@@ -583,13 +582,13 @@ def q372(spark, sf_dir):
         ref.crossJoin(F.broadcast(edges))
         .groupBy(bin_of.alias("bin"))
         .agg(F.count("*").cast("bigint").alias("c_ref"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     cbin = (
         cur.crossJoin(F.broadcast(edges))
         .groupBy(bin_of.alias("bin"))
         .agg(F.count("*").cast("bigint").alias("c_cur"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tots = rbin.agg(F.sum("c_ref").cast("bigint").alias("nr")).crossJoin(
         cbin.agg(F.sum("c_cur").cast("bigint").alias("nc"))
@@ -1605,7 +1604,7 @@ def q385(spark, sf_dir):
         .agg(
             F.sum(cents("value")).cast("bigint").alias("cents")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     d38 = "decimal(38,0)"
 
@@ -1679,7 +1678,7 @@ def q385(spark, sf_dir):
         "event_type",
         "n_extreme",
         F.row_number().over(Window.orderBy("n_extreme", "event_type")).alias("i"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cut = ranked.agg(
         F.coalesce(
             F.max(F.when(50 * (F.col("n_extreme") + 1) <= 61 * F.col("i"), F.col("i"))),
@@ -2160,7 +2159,7 @@ def q390(spark, sf_dir):
     # pinned: daily (|days| rows) feeds FIVE consumers (nn, m, hist,
     # devh, flags) — unpinned, each re-runs the lineitem×orders daily
     # aggregate (guide §2.4; before-plan: 29 Exchanges)
-    daily = _daily_cents(spark, sf_dir).localCheckpoint(eager=False)
+    daily = pin(_daily_cents(spark, sf_dir))
     d38 = "decimal(38,0)"
     nn = daily.agg(F.count("*").cast("bigint").alias("n"))
     m = daily.agg(
@@ -2894,7 +2893,7 @@ def q399(spark, sf_dir):
     tf = (
         tok.groupBy("doc_id", "term")
         .agg(F.count("*").cast("bigint").alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     df = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
     nn = tf.agg(F.countDistinct("doc_id").cast("bigint").alias("n"))
@@ -2913,7 +2912,7 @@ def q399(spark, sf_dir):
             ).alias("w"),
         )
         # pinned: w feeds norms AND both sides of the term self-join
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("w").cast(d38) * F.col("w")).cast(d38).alias("nrm")
@@ -3005,7 +3004,7 @@ def q400(spark, sf_dir):
             FROM orders GROUP BY o_orderdate
         )
         """
-    ).localCheckpoint(eager=False).createOrReplaceTempView("q400_ranked")
+    ).transform(pin).createOrReplaceTempView("q400_ranked")
     return spark.sql(
         """
         BEGIN
@@ -3285,7 +3284,7 @@ def q405(spark, sf_dir):
     sets = (
         li.groupBy(F.col("l_orderkey").alias("ok"))
         .agg(F.collect_set("l_partkey").alias("ps"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     n = sets.agg(F.count("*").cast("bigint").alias("n"))
     s1 = (
@@ -3515,12 +3514,12 @@ def q407(spark, sf_dir):
         # pinned: spend feeds hist AND the seg projection — unpinned,
         # each re-runs the orders scan+aggregate (guide §2.4;
         # before-plan: 16 Exchanges)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     hist = (
         spend.groupBy("yr", "cents")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)  # feeds the windows AND nn
+        .transform(pin)  # feeds the windows AND nn
     )
     wc = Window.partitionBy("yr").orderBy("cents").rowsBetween(
         Window.unboundedPreceding, 0

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..functions.exact import cents, rhu
 from ..io import load_tables
+from ..session import pin
 from ..operators import banding as B
 from ..operators.quantiles import exact_ntile_counts
 from . import register
@@ -622,14 +623,14 @@ def q429(spark, sf_dir):
         d.where(F.col("source") == "src0")
         .select(F.md5("text").alias("k"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     probes = (
         d.where(F.col("source") == "src1")
         .select(F.md5("text").alias("k"))
         .distinct()
         .join(members, "k", "left_anti")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     three = F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("i")
 
@@ -650,7 +651,7 @@ def q429(spark, sf_dir):
             ).alias("pos"),
         )
 
-    bits = positions(members).select("pos").distinct().localCheckpoint(eager=False)
+    bits = pin(positions(members).select("pos").distinct())
     fp = (
         positions(probes)
         .join(bits, "pos")
@@ -1092,7 +1093,7 @@ def q435(spark, sf_dir):
         # tie histogram AND the group sizes — unpinned, the orders
         # scan+aggregate runs four times (guide §2.4; before-plan: 9
         # Exchanges)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = m.select(
         F.col("grp"), F.col("mon").alias("mon_a"), F.col("x").alias("xa")
@@ -1298,7 +1299,7 @@ def q437(spark, sf_dir):
     cls = (
         b.groupBy("pri", "yr", "st")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     csz = cls.groupBy("pri", "yr").agg(F.sum("c").cast("bigint").alias("n"))
     glob = cls.groupBy("st").agg(F.sum("c").cast("bigint").alias("g"))
@@ -1958,7 +1959,7 @@ def q445(spark, sf_dir):
         "bin", "n", "pos",
         F.sum("n").over(w).alias("cn"),
         F.sum("pos").over(w).alias("cp"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     j = cum.select(
         F.col("bin").alias("j"), F.col("n").alias("jn"),
         F.col("pos").alias("jpos"), F.col("cn").alias("jcn"),
@@ -2884,7 +2885,7 @@ def q454(spark, sf_dir):
     h = (
         v.groupBy("treat", "c")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     wt = Window.partitionBy("treat").orderBy("c").rowsBetween(
         Window.unboundedPreceding, -1
@@ -2911,7 +2912,7 @@ def q454(spark, sf_dir):
                 )
             ).alias("qv")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = pick.where(F.col("treat") == 1).select("d", F.col("qv").alias("v_treat"))
     b = pick.where(F.col("treat") == 0).select("d", F.col("qv").alias("v_ctrl"))
@@ -3542,7 +3543,7 @@ def q461(spark, sf_dir):
     # nested broadcast builds execute as small sub-jobs inside the one
     # final action, with no per-round shuffle of |E| rows and no
     # per-round checkpoint barrier.
-    e = e.localCheckpoint()
+    e = pin(e)
     deg = e.groupBy("u").agg(F.sum("w").cast("bigint").alias("dw"))
     seed = (
         deg.agg(F.max("dw").alias("mx"))
@@ -4568,7 +4569,7 @@ def q474(spark, sf_dir):
             .cast("decimal(38,0)")
             .alias("q"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
 
     def ssq(df, key):
@@ -4744,12 +4745,10 @@ def q476(spark, sf_dir):
     sets = (
         li.groupBy(F.col("l_partkey").alias("p"))
         .agg(F.sort_array(F.collect_set("l_suppkey")).alias("ss"))
-        # EAGER: referenced by the 87M-row pair expansion AND the wedge
-        # aggregate inside one action — the lazy pin let their stages
-        # race to compute the blocks (sf1 A/B: 8.75 s lazy / 7.33 s
-        # eager; a packed single-bigint pair key was also tried and
-        # measured flat, 7.30 vs 7.75 — the two-column hash agg is fine)
-        .localCheckpoint()
+        # pinned: referenced by the 87M-row pair expansion AND the wedge
+        # aggregate (a packed single-bigint pair key was tried at sf1 and
+        # measured flat, 7.30 vs 7.75 s — the two-column hash agg is fine)
+        .transform(pin)
     )
     pairs = (
         sets.select(F.posexplode("ss").alias("_i", "s1"), "ss")
@@ -4820,7 +4819,7 @@ def q477(spark, sf_dir):
             F.col("o_orderpriority").alias("a"), F.col("o_orderstatus").alias("b")
         )
         .agg(F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ra = cells.groupBy("a").agg(F.sum("n").cast("bigint").alias("r"))
     cb = cells.groupBy("b").agg(F.sum("n").cast("bigint").alias("c"))

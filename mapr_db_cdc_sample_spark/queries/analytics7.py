@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import cents, cosine_duck, rhu
 from ..io import load_tables
+from ..session import pin
 from . import register
 from ..operators import banding as B
 from .analytics import _CC_ORACLE
@@ -233,7 +234,7 @@ def q481(spark, sf_dir):
         # pinned: g (|groups| rows) feeds tot AND the final projection —
         # unpinned, the orders scan + median-broadcast aggregate run
         # twice (guide §2.4)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = g.agg(
         F.sum("nj").cast("bigint").alias("n"), F.sum("aj").cast("bigint").alias("a")
@@ -570,7 +571,7 @@ def q485(spark, sf_dir):
 # rational sum(1/d) has denominator 60 = lcm(1..6), so harmonic_micro =
 # rhu(1e6 * sum(60/d * cnt_d) / 60) is EXACT integer arithmetic. Spark
 # runs 6 frontier rounds keyed (src, node) — multi-source BFS, level
-# frames localCheckpoint'd like q253; the volume collapses to <= 625
+# frames pinned like q253; the volume collapses to <= 625
 # node pairs before any iteration.
 _CLOSENESS_ORACLE = """
 WITH RECURSIVE e AS MATERIALIZED (
@@ -642,17 +643,17 @@ def q486(spark, sf_dir):
             F.col("s_nationkey").cast("int").alias("dst"),
         )
         .distinct()
-        .localCheckpoint()  # <= 625 rows; join subtree runs exactly once
+        .transform(pin)  # <= 625 rows; join subtree runs exactly once
     )
     und = (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint()
+        .transform(pin)
     )
     nodes = und.select(F.col("src").alias("node")).distinct()
     dist = nodes.select(
         F.col("node").alias("src"), F.col("node"), F.lit(0).alias("dist")
-    ).localCheckpoint()
+    ).transform(pin)
     frontier = dist
     for depth in range(1, 7):
         nxt = (
@@ -661,7 +662,7 @@ def q486(spark, sf_dir):
             .distinct()
             .join(dist.select("src", "node"), ["src", "node"], "left_anti")
             .select("src", "node", F.lit(depth).alias("dist"))
-            .localCheckpoint()
+            .transform(pin)
         )
         if nxt.count() == 0:  # bounded driver action (<= 625-row frames)
             break
@@ -2184,13 +2185,13 @@ def q504(spark, sf_dir):
         F.expr("ed DIV 7").alias("week"),
         F.pmod(F.col("ed"), F.lit(7)).cast("int").alias("dow7"),
         "cents",
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     full_weeks = (
         wk.groupBy("week")
         .count()
         .filter(F.col("count") == 7)
         .select("week")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ranked = wk.join(full_weeks, "week").select(
         "week",
@@ -2507,7 +2508,7 @@ def q508(spark, sf_dir):
     pairs = (
         B.candidate_pairs(_minhash_corpus(d))
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .transform(pin)
     )
     cc = connected_components(pairs)  # operator expects (doc_a, doc_b)
     sizes = cc.groupBy("component").agg(F.count("*").cast("bigint").alias("sz"))
@@ -2718,7 +2719,7 @@ def q510(spark, sf_dir):
         # union branches — unpinned, the events scan + per-user
         # aggregate run five times (guide §2.4; before-plan: 10
         # Exchanges)
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     names = {
         1: "f1_clicks",
         2: "f2_views",
@@ -3220,7 +3221,7 @@ def q516(spark, sf_dir):
     hist = (
         v.groupBy("grp", "c")
         .agg(F.count("*").cast("bigint").alias("k"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     wg = Window.partitionBy("grp")
     cum = hist.select(
@@ -3849,7 +3850,7 @@ def q524(spark, sf_dir):
             F.expr("(cents - m) DIV 100000").alias("d"),
             F.row_number().over(Window.orderBy("day")).alias("rn"),
         )
-        .localCheckpoint()
+        .transform(pin)
     )
     a = idx.select(F.col("d").alias("da"), "rn")
     b1 = idx.select(F.col("d").alias("d1"), (F.col("rn") + 1).alias("rn"))
@@ -3948,7 +3949,7 @@ def q525(spark, sf_dir):
             F.sum(cents("o_totalprice")).cast("bigint").alias("x"),
             F.count("*").cast("bigint").alias("y"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     n = daily.agg(F.count("*").cast("bigint").alias("n"))
 
@@ -4071,7 +4072,7 @@ def q526(spark, sf_dir):
         # pinned: uni feeds stot, top AND the f left-join — unpinned,
         # the tokenize+explode pass runs three times (guide §2.4;
         # before-plan: 16 Exchanges)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     stot = uni.groupBy("source").agg(F.sum("c").cast("bigint").alias("tok"))
     top = (
@@ -4092,7 +4093,7 @@ def q526(spark, sf_dir):
             ).alias("fm"),
         )
         # pinned: f (|sources|×20 rows) feeds wstat AND both pair sides
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     d38 = "DECIMAL(38,0)"
     wstat = f.groupBy("w").agg(
@@ -5098,7 +5099,7 @@ def q537(spark, sf_dir):
             F.count("*").cast("bigint").alias("n"),
             F.sum("conv").cast("bigint").alias("c"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     std = strata.groupBy("dow7").agg(F.sum("n").cast("bigint").alias("w"))
     wtot = std.agg(F.sum("w").cast("bigint").alias("tw"))
@@ -5173,13 +5174,13 @@ def q538(spark, sf_dir):
     # the breach count (guide §2.4; before-plan: 24 Exchanges, 14 Sorts)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     a = idx.select(F.col("cents").alias("xa"), "rn")
     b = idx.select(F.col("cents").alias("xb"), (F.col("rn") - 1).alias("rn"))
     chg = (
         a.join(b, "rn")
         .select((F.col("xb") - F.col("xa")).alias("d"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     cnt = chg.agg(F.count("*").cast("bigint").alias("n"))
     ranked = chg.select(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import cents, floor_rhu, floor_rhu_duck, rhu
 from ..io import load_tables
+from ..session import pin
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
 
@@ -676,7 +677,7 @@ def q546(spark, sf_dir):
     hist = (
         v.groupBy("g", "c")
         .agg(F.count("*").cast("bigint").alias("k"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     vals = hist.select("c").distinct()
     grps = hist.select("g").distinct()
@@ -2096,7 +2097,7 @@ WITH li AS MATERIALIZED (
 
 def _part_graph(spark, sf_dir):
     """Canonical co-purchase part edges (u < v) + degree frame,
-    localCheckpointed (the operators/triangles rule: graph algorithms
+    pinned (the operators/triangles rule: graph algorithms
     pin their edge list or re-derive the join lineage per reference)."""
     from ..operators.triangles import cooccurrence_edges
 
@@ -2107,10 +2108,7 @@ def _part_graph(spark, sf_dir):
     )
     # collect_set-per-order + codegen pair expansion (2 shuffles) in
     # place of distinct -> self-join -> distinct (3): same edge set
-    # EAGER (r12 session 3): e feeds both union branches of deg and the
-    # per-query edge joins — concurrent stages raced on the lazy pin
-    # (the triangles-operator measurement; same shape here)
-    e = cooccurrence_edges(li, "ok", "p").localCheckpoint()
+    e = pin(cooccurrence_edges(li, "ok", "p"))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -3069,7 +3067,7 @@ def q571(spark, sf_dir):
     cells = (
         _emb_cells(spark, sf_dir)
         .withColumn("g", F.when(F.col("label") < 5, 0).otherwise(1))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     mom = _emb_moments(
         _emb_quant(spark, sf_dir).withColumn(
@@ -3085,7 +3083,7 @@ def q571(spark, sf_dir):
     )
     sums = cells.groupBy("g", "i").agg(
         F.sum("xu").cast("decimal(38,0)").alias("si")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     su = sums.select("g", F.col("i"), F.col("si"))
     sv = sums.select(
         F.col("g").alias("g2"), F.col("i").alias("jj"), F.col("si").alias("sj")
@@ -3100,7 +3098,7 @@ def q571(spark, sf_dir):
             "j",
             F.expr(_CU).alias("cu"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = cov.filter(F.col("g") == 0).select("i", "j", F.col("cu").alias("ca"))
     b = cov.filter(F.col("g") == 1).select("i", "j", F.col("cu").alias("cb"))
@@ -3320,14 +3318,14 @@ _CENT_CTE = _EMB_CELLS_CTE + """
 def _centroid_frames(spark, sf_dir):
     """(cells, cen, scat) mirroring _CENT_CTE on the Spark side.
 
-    All three frames are pinned (lazy localCheckpoint): cells feeds the
+    All three frames are pinned: cells feeds the
     centroid sums AND the scatter join (plus q575's global sums), cen
     feeds the scatter join AND both centroid-gap sides (q574) / the
     global-centroid join (q575), scat feeds both R_ij sides / the
     totals — unpinned, the embedding explode and centroid aggregates
     each re-ran per reference (guide §2.4; q574/q575 before-plans: 11
     Exchanges each)."""
-    cells = _emb_cells(spark, sf_dir).localCheckpoint(eager=False)
+    cells = pin(_emb_cells(spark, sf_dir))
     sums = cells.groupBy(F.col("label").alias("g"), "i").agg(
         F.sum("xu").cast("bigint").alias("si"),
         F.count("*").cast("bigint").alias("n"),
@@ -3338,7 +3336,7 @@ def _centroid_frames(spark, sf_dir):
         F.expr(
             f"CAST({floor_rhu('si', 'n')} AS BIGINT)"
         ).alias("cm"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     d2 = (
         cells.join(
             F.broadcast(cen),
@@ -3357,7 +3355,7 @@ def _centroid_frames(spark, sf_dir):
         F.expr(
             f"CAST({rhu('CAST(SUM(d2) AS DECIMAL(38,0))', 'COUNT(*)')} AS BIGINT)"
         ).alias("s2"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     return cells, cen, scat
 
 
@@ -3558,7 +3556,7 @@ def q576(spark, sf_dir):
         )
         # n*k rows; referenced by kd AND nb (which re-joins kd) — without
         # this the block-matmul kernel subtree executes THREE times
-        .localCheckpoint()
+        .transform(pin)
     )
     kd = rk.groupBy("va").agg(F.max("du").alias("kdist"))
     kq = kd.select(F.col("va").alias("vb"), F.col("kdist").alias("kdq"))
@@ -3759,7 +3757,7 @@ def q578(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_all"),
             F.sum("ev").cast("bigint").alias("n_ev"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     dense = (
         cnt.select("d")
@@ -3969,7 +3967,7 @@ def q580(spark, sf_dir):
         ranked.filter((F.col("rk") <= 3) & (F.col("nl") >= 3))
         .groupBy("ok", "cat")
         .agg(F.count("*").cast("bigint").alias("nij"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     pbar = cellc.groupBy("ok").agg(
         F.sum(F.col("nij") * F.col("nij")).cast("bigint").alias("s2")
@@ -4565,7 +4563,7 @@ def q587(spark, sf_dir):
         seq.filter(F.col("nxt").isNotNull())
         .groupBy(F.col("event_type").alias("a"), F.col("nxt").alias("b"))
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rows_ = tc.groupBy("a").agg(F.sum("c").cast("bigint").alias("r"))
     tot = tc.agg(F.sum("c").cast("bigint").alias("t"))
@@ -4684,7 +4682,7 @@ def q588(spark, sf_dir):
         # pinned: cy feeds tot, the global term AND the nation groups —
         # unpinned, the orders×customer aggregate runs three times
         # (guide §2.4; before-plan: 11 Exchanges)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = cy.agg(
         F.count("*").cast("bigint").alias("n"),

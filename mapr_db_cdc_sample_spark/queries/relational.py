@@ -25,7 +25,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import load_tables
-from ..session import scoped_confs
+from ..session import pin, scoped_confs
 from . import register
 
 
@@ -1885,7 +1885,7 @@ def q136(spark, sf_dir):
     OptimizeSkewedJoin splits the hot partition into advisory-sized
     pieces at runtime (plan-asserted in tests via the skew=true marker).
     The skew confs are scoped to THIS query's execution — the result is
-    materialized under them (localCheckpoint), then the session confs are
+    pinned under them (`pin` is eager in a conf scope), then the confs are
     restored, because Spark reads SQLConf at execution time, not at
     DataFrame construction. Oracle = the plain join: splitting must be
     invisible in the result."""
@@ -1894,7 +1894,7 @@ def q136(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     df = skew.skewed_segment_rollup(t["events"], t["customer"])
     with scoped_confs(spark, skew.AQE_SKEW_CONFS):
-        return df.localCheckpoint(eager=True)
+        return pin(df)
 
 
 # ------------- sessionized funnel (q137)
@@ -2024,7 +2024,7 @@ def q138(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     df = bloom_pruned_join(t["lineitem"], t["orders"])
     with scoped_confs(spark, BLOOM_JOIN_CONFS):
-        return df.localCheckpoint(eager=True)
+        return pin(df)
 
 
 #: Thresholds that let InjectRuntimeFilter fire at test scale: the

@@ -306,18 +306,16 @@ def q243(spark, sf_dir):
 @register("q284_stream_running_totals")
 def q284(spark, sf_dir):
     """Per-user running totals through the arbitrary-state streaming
-    rung: transformWithStateInPandas (Spark 4 named-state API) when the
-    environment has protobuf, its applyInPandasWithState twin otherwise
-    (streaming/stateful.py:running_totals_auto — identical emission
-    contract, so the final row per user equals the batch aggregate
-    either way; the stream==batch law is asserted in
-    tests/test_streaming.py for whichever lane the container runs)."""
+    rung (streaming/stateful.py:running_totals, applyInPandasWithState):
+    every micro-batch emits each touched user's post-batch totals, so the
+    final row per user equals the batch aggregate (the stream==batch law
+    is asserted in tests/test_streaming.py)."""
     from pyspark.sql import Window
 
-    from ..streaming.stateful import running_totals_auto
+    from ..streaming.stateful import running_totals
 
     stream, n = _events_stream(spark, sf_dir, chunks=3)
-    out = _drain(running_totals_auto(stream), "q284", output_mode="update")
+    out = _drain(running_totals(stream), "q284", output_mode="update")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (
         out.withColumn("rn", F.row_number().over(w))

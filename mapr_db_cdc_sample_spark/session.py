@@ -16,7 +16,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime-settable confs applied to any session we are handed (the driver
 #: may construct its own SparkSession; these are all safe to set at runtime).
@@ -80,12 +80,17 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Number of open `scoped_confs` blocks; `pin` is eager while it is > 0.
+_scope_depth = 0
+
+
 @contextmanager
 def scoped_confs(spark: SparkSession, confs: dict[str, str]):
     """Set session confs for the duration of a block, restoring previous
     values (or unsetting) afterwards. Assumes a single-threaded driver —
     true for this harness; a concurrent session would need per-query
     conf isolation instead."""
+    global _scope_depth
     prev: dict[str, str | None] = {}
     for k in confs:
         try:
@@ -94,14 +99,41 @@ def scoped_confs(spark: SparkSession, confs: dict[str, str]):
             prev[k] = None
     for k, v in confs.items():
         spark.conf.set(k, v)
+    _scope_depth += 1
     try:
         yield
     finally:
+        _scope_depth -= 1
         for k, v in prev.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Pin a frame that several consumers read: cut its plan at a local
+    checkpoint so the subtree below runs once. The only place the engine
+    calls `localCheckpoint`.
+
+    The rule: eager inside a `scoped_confs` block, lazy everywhere else.
+    Spark reads SQLConf when a job runs, not when a plan is built, so a
+    pin made under scoped confs must run its job before the block
+    restores them. Elsewhere the first action that reads the frame fills
+    the blocks, which saves a separate job. Either way the plan is cut at
+    the pin. The blocks stay in block storage until `release`."""
+    return df.localCheckpoint(eager=_scope_depth > 0)
+
+
+def release(spark: SparkSession) -> None:
+    """Free what finished queries pinned or cached: clear the catalog
+    cache, then unpersist every RDD still in block storage: `pin` blocks
+    are persistent RDDs outside the catalog cache, which `clearCache()`
+    does not see. Call it between queries, after each result has been
+    consumed."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
 
 
 def _box_memory_bytes() -> int:

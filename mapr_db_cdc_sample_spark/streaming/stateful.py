@@ -7,7 +7,10 @@ applyInPandasWithState keyed by _id: state = the document's current
 fields; inserts replace, updates merge per-field (last-write-wins in ts
 order within a batch — matching the Java loop's ObjectNode.put overwrite
 semantics), deletes clear. Emits the post-batch state of every touched
-document; deleted docs emit is_deleted=true.
+document; deleted docs emit is_deleted=true. `running_totals` (q284)
+folds per-user spend on the same rung. Spark 4's
+transformWithStateInPandas is not used: its Python worker protocol
+needs protobuf, which the engine does not depend on.
 
 Scale: state is per-key and O(fields); use RocksDB state store
 (spark.sql.streaming.stateStore.providerClass) for 100 TB keyspaces.
@@ -106,73 +109,20 @@ def materialize(cdc_stream: DataFrame) -> DataFrame:
     )
 
 
-# ------------------- transformWithState: running per-user spend totals
+# ------------------- running per-user spend totals
 
 RUNNING_SCHEMA = "user_id long, n_events long, spend_cents long"
 
 
 def running_totals(events_stream: DataFrame) -> DataFrame:
-    """Per-user running (event count, spend) via transformWithStateInPandas
-    — Spark 4's arbitrary-state API (the successor to
-    applyInPandasWithState used by `materialize` above): explicit named
-    state handles (getValueState), timers, and TTL support. State here is
-    one (n, cents) ValueState per user; every micro-batch emits the
-    user's post-batch totals, so the LAST emission per user equals the
-    batch aggregate (the stream==batch law tests assert).
+    """Per-user running (event count, spend) on applyInPandasWithState.
+    State is one (n, cents) pair per user; every micro-batch emits each
+    touched user's post-batch totals, so the LAST emission per user
+    equals the batch aggregate (the stream==batch law q284's test
+    asserts).
 
     Scale: state is O(1) per key; the RocksDB state store provider holds
-    100 TB keyspaces; emission is update-mode (only touched keys).
-
-    ENV GATE: the transformWithState Python worker protocol serializes
-    state over protobuf, which this container does not ship (no pip
-    install) — the guard below raises a clear error instead of an
-    opaque executor ImportError; tests skip when protobuf is absent and
-    the applyInPandasWithState lane (`materialize`) carries the
-    always-on stateful-streaming coverage."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise EnvironmentError(
-            "transformWithStateInPandas requires the protobuf package in "
-            "the Python workers; not available in this environment"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, cents long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = self._totals.get() if self._totals.exists() else (0, 0)
-            for pdf in rows:
-                n += int(len(pdf))
-                cents += int(pdf["cents"].sum())
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                [{"user_id": key[0], "n_events": n, "spend_cents": cents}]
-            )
-
-        def close(self) -> None:
-            pass
-
-    keyed = events_stream.select("user_id", cents("value").alias("cents"))
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType=RUNNING_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def running_totals_compat(events_stream: DataFrame) -> DataFrame:
-    """Same running-totals semantics on the always-available
-    applyInPandasWithState rung — the fallback lane that keeps q284 a
-    first-class registry entry in containers without protobuf (see
-    running_totals' env gate). Identical emission contract: every
-    micro-batch yields each touched user's post-batch totals."""
+    100 TB keyspaces; emission is update-mode (only touched keys)."""
 
     def fold(key, pdfs, state: GroupState):
         n, cents = state.get if state.exists else (0, 0)
@@ -192,12 +142,3 @@ def running_totals_compat(events_stream: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def running_totals_auto(events_stream: DataFrame) -> DataFrame:
-    """Prefer the transformWithStateInPandas lane, fall back to the
-    applyInPandasWithState twin when the container lacks protobuf."""
-    try:
-        return running_totals(events_stream)
-    except EnvironmentError:
-        return running_totals_compat(events_stream)

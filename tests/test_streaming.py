@@ -699,20 +699,10 @@ def test_cdc_latency_budget(spark, tmp_path):
 
 
 def test_transform_with_state_running_totals(spark, tmp_path):
-    """transformWithStateInPandas rung (Spark 4 arbitrary-state API):
-    per-user running totals; the final emission per user must equal the
-    batch aggregate. Skips when the container lacks protobuf (the
-    worker-side state protocol needs it — documented env gate in
-    streaming/stateful.py); the guard path is asserted either way."""
+    """Arbitrary-state rung behind q284: per-user running totals; the
+    final emission per user must equal the batch aggregate."""
     from mapr_db_cdc_sample_spark.sources.replay import read_replay, write_replay
     from mapr_db_cdc_sample_spark.streaming.stateful import running_totals
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        have_pb = True
-    except ImportError:
-        have_pb = False
 
     ev = load_tables(spark, "/root/testdata/sf0.001")["events"].orderBy(
         "event_id"
@@ -723,16 +713,8 @@ def test_transform_with_state_running_totals(spark, tmp_path):
     from pyspark.sql import Window
 
     from mapr_db_cdc_sample_spark.sources.replay import run_to_memory
-    from mapr_db_cdc_sample_spark.streaming.stateful import running_totals_compat
 
-    if not have_pb:
-        with pytest.raises(EnvironmentError, match="protobuf"):
-            running_totals(stream)
-        # the compat lane must still uphold stream==batch so q284 stays
-        # a first-class registry entry in this container
-        totals = running_totals_compat(stream)
-    else:
-        totals = running_totals(stream)
+    totals = running_totals(stream)
 
     name = _mem("q284")
     run_to_memory(totals, name, output_mode="update")

@@ -13,10 +13,15 @@ StreamingQueryProgress reports directly.
 trigger through the real dual-sink pipeline (streaming/cdc_stream.py)
 and returns each batch's full StreamingQueryProgress phase breakdown
 (PHASES), the steady-state median of each phase, and the core count the
-session ran on; run as a script it also writes LATENCY.json at the repo
-root (the committed evidence artifact). The script runs on the engine's
-own session (`session.get_spark`): SPARK_GRAFT_CPUS sets the core count
-to measure on (default: all cores)."""
+session ran on. Run as a script, it measures RUNS times in one session,
+each run on fresh sinks with a box canary (`canary.box_canary`) taken
+just before it, and writes LATENCY.json at the repo root (the committed
+evidence artifact): the run whose steady median is the median of the
+runs, plus every run's steady median and canary under "runs", so one
+slow run on a shared box is neither committed alone nor hidden. The
+script runs on the engine's own session (`session.get_spark`):
+SPARK_GRAFT_CPUS sets the core count to measure on (default: all
+cores)."""
 
 from __future__ import annotations
 
@@ -34,6 +39,7 @@ SF_SMALL = "/root/testdata/sf0.001"
 N_CHUNKS = 24  # replay files == max data micro-batches
 STEADY_TAIL = 8  # steady state: the last K batches (JIT/codegen settled)
 BUDGET_MS = 800
+RUNS = 3  # measure() calls per script run; the median run is written
 CADENCE = "500 milliseconds"
 # StreamingQueryProgress.durationMs keys; triggerExecution spans the rest
 PHASES = ("triggerExecution", "addBatch", "queryPlanning", "walCommit", "commitOffsets",
@@ -105,16 +111,24 @@ def measure(spark, base_dir: str, timeout_s: float = 120.0) -> dict:
 def main() -> None:
     import tempfile
 
+    from mapr_db_cdc_sample_spark.canary import box_canary
     from mapr_db_cdc_sample_spark.session import get_spark
 
     spark = get_spark("latency")
     spark.sparkContext.setLogLevel("ERROR")
-    with tempfile.TemporaryDirectory() as td:
-        out = measure(spark, td)
+    runs = []
+    for _ in range(RUNS):
+        canary = box_canary()
+        with tempfile.TemporaryDirectory() as td:
+            runs.append((measure(spark, td), canary))
+    out = sorted(runs, key=lambda r: r[0]["steady"]["median_ms"])[RUNS // 2][0]
+    out["runs"] = [
+        {"steady_median_ms": r["steady"]["median_ms"], "canary": c} for r, c in runs
+    ]
     with open(os.path.join(REPO, "LATENCY.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({"steady": out["steady"], "n": out["n_data_batches"],
-                      "cores": out["cores"]}))
+                      "cores": out["cores"], "runs": out["runs"]}))
 
 
 if __name__ == "__main__":

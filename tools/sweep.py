@@ -25,7 +25,7 @@ sys.path.insert(0, REPO)
 
 import __spark_entry__ as E  # noqa: E402
 from mapr_db_cdc_sample_spark.oracle import compare, duck_connect  # noqa: E402
-from mapr_db_cdc_sample_spark.session import get_spark  # noqa: E402
+from mapr_db_cdc_sample_spark.session import get_spark, release  # noqa: E402
 
 
 def main() -> int:
@@ -64,11 +64,11 @@ def main() -> int:
         secs = time.perf_counter() - t0
         results[name]["secs"] = round(secs, 1)
         print(f"{name}: {status} ({secs:.1f}s)")
-        # Several queries persist() intermediates and hand back a lazy DF,
-        # so their cached blocks outlive the query; across a 190+ entry
-        # sweep that accumulates into executor memory pressure. Each query
-        # still pays its own persists — this only stops cross-query leak.
-        spark.catalog.clearCache()
+        # Queries persist() or pin intermediates and hand back a lazy DF,
+        # so their blocks outlive the query; across a 590-entry sweep that
+        # accumulates into executor memory pressure. Each query still pays
+        # its own pins — this only stops the cross-query leak.
+        release(spark)
     print(f"== {fails} failures ==")
     out = os.environ.get("SPARK_GRAFT_SWEEP_JSON")
     if out:
