@@ -304,8 +304,10 @@ def time_queries(
 ) -> tuple[dict[str, float], float]:
     """Time each query through the noop sink, in order.
 
-    A session starts warm with Q01 (priming codegen/JIT and the parquet
-    footer cache); each query's time is the min of `runs` runs, its
+    A session starts warm with Q01 (priming codegen/JIT; a restarted
+    session reuses the table schemas `io` inferred in the first one, so
+    its set-up starts no schema-inference job); each query's time is
+    the min of `runs` runs, its
     cached and pinned blocks are released afterwards
     (`session.release`), and the session restarts every
     `recycle` queries. `on_result(name, sec)` is called as each result

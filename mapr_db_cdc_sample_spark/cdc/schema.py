@@ -70,3 +70,7 @@ CDC_BINARY_SCHEMA = StructType(
         ),
     ]
 )
+
+#: A published CDC message (cdc/pipeline `_wire`), as the streaming sinks
+#: store it: readers pass it instead of inferring the sink's schema.
+WIRE_SCHEMA = StructType([StructField(c, StringType()) for c in ("topic", "key", "value")])

@@ -4,6 +4,15 @@ All scans go through here so predicate pushdown / column pruning are
 verified in one place: `spark.read.parquet` + lazy DataFrames keep filters
 and projections in Catalyst where they reach the parquet reader
 (PushedFilters / ReadSchema in `.explain`).
+
+A schema-less `spark.read.parquet` starts one schema-inference job per
+file, even for a single file, so a new session's `load_tables` would
+start ten jobs. Spark's inferred schema is kept per table file for the
+life of the process (`_SCHEMAS`), keyed by the file's real path, size
+and mtime: a later session reads an unchanged file with that schema and
+starts no job, and a rewritten file is inferred again. This holds only
+because every engine session infers under the same parquet-reading
+confs, which `session.tune` sets (`nanosAsLong` and the rest).
 """
 
 from __future__ import annotations
@@ -12,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import tune
 
@@ -36,13 +46,34 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 
+#: Spark's inferred schema per table file, keyed by (real path, st_size,
+#: st_mtime_ns). Valid across sessions only while every session infers
+#: under the same parquet confs from `session.tune`
+#: (`spark.sql.legacy.parquet.nanosAsLong` decides events.ts's type).
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, with the schema Spark inferred for the
+    same unchanged file earlier in this process, so it starts no job.
+    A path that is not a local regular file is inferred every time."""
+    if not os.path.isfile(path):  # a URI, a directory or a missing path
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.realpath(path), st.st_size, st.st_mtime_ns)
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One parquet table as a DataFrame (lazy scan, memoized)."""
     key = (id(spark), sf_dir, name)
     if key in _CACHE:
         return _CACHE[key]
-    tune(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
     ts_type = dict(df.dtypes).get("ts") if name == "events" else None
     if ts_type == "bigint":
         # nanosAsLong read (see session.RUNTIME_CONFS): ns → µs timestamp,

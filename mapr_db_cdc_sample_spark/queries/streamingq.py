@@ -16,7 +16,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from ..cdc.fixtures import synth_cdc_from_events
-from ..cdc.schema import CDC_JSON_SCHEMA
+from ..cdc.schema import CDC_JSON_SCHEMA, WIRE_SCHEMA
 from ..io import load_tables
 from ..scratch import scratch_dir
 from ..session import scoped_confs
@@ -76,9 +76,8 @@ def q60(spark, sf_dir):
     fts_dir, geo_dir = f"{base}/fts", f"{base}/geo"
     q = start_json_pipeline(stream, fts_dir, geo_dir)
     q.awaitTermination()
-    return _with_input_count(
-        spark.read.parquet(fts_dir).unionAll(spark.read.parquet(geo_dir)), n
-    )
+    read = spark.read.schema(WIRE_SCHEMA).parquet
+    return _with_input_count(read(fts_dir).unionAll(read(geo_dir)), n)
 
 
 @register("q61_tumbling_window")
@@ -199,7 +198,7 @@ def q70(spark, sf_dir):
     stream = read_replay(spark, path, CDC_BINARY_SCHEMA)
     fts_dir = f"{scratch_dir()}/fts"
     start_pipeline(fts_wire(route_binary(stream)), {FTS_TOPIC: fts_dir}).awaitTermination()
-    return _with_input_count(spark.read.parquet(fts_dir), n)
+    return _with_input_count(spark.read.schema(WIRE_SCHEMA).parquet(fts_dir), n)
 
 
 @register("q102_stream_quality_gate")

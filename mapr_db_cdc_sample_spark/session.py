@@ -120,8 +120,10 @@ def pin(df: DataFrame) -> DataFrame:
     Spark reads SQLConf when a job runs, not when a plan is built, so a
     pin made under scoped confs must run its job before the block
     restores them. Elsewhere the first action that reads the frame fills
-    the blocks, which saves a separate job. Either way the plan is cut at
-    the pin. The blocks stay in block storage until `release`."""
+    the blocks, which saves only the pin's final-stage job: with a
+    shuffle below the pin, `localCheckpoint` runs every AQE shuffle stage
+    while the pin is made, lazy or not. Either way the plan is cut at the
+    pin. The blocks stay in block storage until `release`."""
     return df.localCheckpoint(eager=_scope_depth > 0)
 
 

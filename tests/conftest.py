@@ -36,3 +36,20 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture(scope="session")
+def count_jobs():
+    """`count_jobs(spark, group, build)`: the Spark jobs `build()` starts,
+    counted with the status tracker under the job group `group`."""
+
+    def count(spark, group: str, build) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -47,26 +47,16 @@ def test_no_local_checkpoint_outside_session():
     assert not found, "pin with session.pin:\n" + "\n".join(found)
 
 
-def _jobs(spark, group: str, build) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setJobGroup("", "")
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_pin_is_lazy_outside_a_conf_scope_and_eager_inside(spark):
+def test_pin_is_lazy_outside_a_conf_scope_and_eager_inside(spark, count_jobs):
     """A shuffle-free frame: pinning it outside `scoped_confs` starts no
     job; inside, the pin's one job runs before the confs are restored."""
-    assert _jobs(spark, "pin-lazy", lambda: pin(spark.range(1000))) == 0
+    assert count_jobs(spark, "pin-lazy", lambda: pin(spark.range(1000))) == 0
 
     def scoped():
         with scoped_confs(spark, {"spark.sql.shuffle.partitions": "3"}):
             pin(spark.range(1000))
 
-    assert _jobs(spark, "pin-eager", scoped) == 1
+    assert count_jobs(spark, "pin-eager", scoped) == 1
 
 
 def test_release_frees_pinned_blocks(spark, sf_dir):

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from mapr_db_cdc_sample_spark.cdc.fixtures import golden_json_events
 from mapr_db_cdc_sample_spark.cdc.schema import CDC_JSON_SCHEMA
-from mapr_db_cdc_sample_spark.io import load_tables, table
+from mapr_db_cdc_sample_spark.io import load_tables
 from mapr_db_cdc_sample_spark.sources.replay import (
     read_replay,
     run_to_memory,
