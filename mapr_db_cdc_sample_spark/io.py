@@ -45,6 +45,20 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: of re-listing on every query invocation.
 _CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
+#: The SparkContext whose sessions `_CACHE` and `_VIEWS` hold. A session of
+#: another context (the old one was stopped and a new session built, as
+#: bench.time_queries and perfbench do) empties both, so a stopped session
+#: and its scans do not stay reachable for the life of the process.
+_context = None
+
+
+def _own(spark: SparkSession) -> None:
+    global _context
+    if spark.sparkContext is not _context:
+        _CACHE.clear()
+        _VIEWS.clear()
+        _context = spark.sparkContext
+
 
 #: Spark's inferred schema per table file, keyed by (real path, st_size,
 #: st_mtime_ns). Valid across sessions only while every session infers
@@ -70,6 +84,7 @@ def _read(spark: SparkSession, path: str) -> DataFrame:
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One parquet table as a DataFrame (lazy scan, memoized)."""
+    _own(spark)
     key = (id(spark), sf_dir, name)
     if key in _CACHE:
         return _CACHE[key]

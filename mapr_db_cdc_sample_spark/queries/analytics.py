@@ -16,7 +16,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import cents, rhu
-from ..io import load_tables
 from ..session import pin
 from . import register
 from ..operators import banding as B
@@ -58,15 +57,14 @@ FROM cc GROUP BY component ORDER BY component""",
 
 
 @register("q152_dup_components", oracle=_CC_ORACLE)
-def q152(spark, sf_dir):
+def q152(documents):
     """Connected components over the MinHash-LSH candidate-pair graph
     (iterative min-label propagation with pointer doubling,
     operators/dedup_pipeline.py) — the distributed-graph step of corpus
     dedup exposed as its own operator, hash-checked against a recursive-
     CTE oracle. Component label = min doc_id reachable, so labels are
     engine-independent."""
-    d = load_tables(spark, sf_dir)["documents"]
-    pairs = B.candidate_pairs(_minhash_corpus(d))
+    pairs = B.candidate_pairs(_minhash_corpus(documents))
     cc = connected_components(pairs.select("doc_a", "doc_b"))
     return (
         cc.groupBy("component")
@@ -101,15 +99,14 @@ FROM orders
 
 
 @register("q153_column_profile", oracle=_PROFILE_ORACLE)
-def q153(spark, sf_dir):
+def q153(orders):
     """One-pass column profiling (the ANALYZE TABLE / data-quality scan a
     pipeline runs before training): row count, per-column null counts,
     exact distincts, min/max — all in a single wide aggregate so the scan
     happens once. Dates reduced to epoch-day BIGINTs and doubles to
     DECIMAL(18,2) so every value is engine-exact."""
-    o = load_tables(spark, sf_dir)["orders"]
     dec = F.col("o_totalprice").cast("decimal(18,2)")
-    return o.agg(
+    return orders.agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("o_custkey").alias("custkey_distinct"),
         (F.count("*") - F.count("o_custkey")).alias("custkey_nulls"),
@@ -161,13 +158,12 @@ FROM z GROUP BY flag ORDER BY flag
 
 
 @register("q154_zscore_outliers", oracle=_ZSCORE_ORACLE)
-def q154(spark, sf_dir):
+def q154(lineitem):
     """Per-group anomaly scoring: z-score of l_extendedprice within each
     returnflag group, counting |z| > 2.5 outliers. Group stats (3 rows)
     broadcast back onto the fact — two scans of the same cached-in-OS
     parquet, zero fact-side shuffle beyond the 3-key aggregate."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    priced = li.select(
+    priced = lineitem.select(
         F.col("l_returnflag").alias("flag"), cents("l_extendedprice").alias("c")
     )
     stats = priced.groupBy("flag").agg(
@@ -217,18 +213,17 @@ FROM keyed ORDER BY priority, doc_id LIMIT 20
 
 
 @register("q155_weighted_sample", oracle=_WSAMPLE_ORACLE)
-def q155(spark, sf_dir):
+def q155(documents):
     """Weighted sampling without replacement (Efraimidis-Spirakis via
     exponential keys): deterministic hash-derived uniform, priority
     -ln(u)/weight, global top-k by priority. Distributed shape: per-
     partition top-k then TakeOrderedAndProject — no shuffle of the corpus,
     only k rows per partition reach the driver-side merge."""
-    d = load_tables(spark, sf_dir)["documents"]
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
         + F.lit(1.0)
     ) / F.lit(4294967297.0)
-    keyed = d.where(F.col("n_chars") > 0).select(
+    keyed = documents.where(F.col("n_chars") > 0).select(
         "doc_id",
         "n_chars",
         F.round(-F.log(u) / F.col("n_chars"), 9).alias("priority"),
@@ -260,14 +255,13 @@ FROM toks GROUP BY source ORDER BY source
 
 
 @register("q156_bpe_token_count", oracle=_BPE_ORACLE)
-def q156(spark, sf_dir):
+def q156(documents):
     """Token counting with a BPE-ish pretokenizer regex (space-prefixed
     word/number/punct runs — the GPT-2 pattern minus lookarounds): per-
     source token totals and chars-per-token, the budget numbers an LLM
     data pipeline reports. Pure JVM regex per row, map-side combinable
     aggregate — no Python in the loop."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "source",
         F.size(F.expr(f"regexp_extract_all(text, '{_BPE_RE}', 0)")).alias("n_tok"),
         F.length("text").alias("n_char"),
@@ -312,14 +306,14 @@ FROM lagged ORDER BY user_id, event_id
 
 
 @register("q157_ewma_smooth", oracle=_EWMA_ORACLE)
-def q157(spark, sf_dir):
+def q157(events):
     """Exponential smoothing over per-user event streams as an 8-tap
     integer-exact filter (weights 2^k on cents): the time-series smoothing
     primitive with zero FP-accumulation drift — numerator/denominator are
     BIGINT sums, one IEEE division at the end. Single shuffle on the
     (user, ts) window key."""
     ev = (
-        load_tables(spark, sf_dir)["events"]
+        events
         .where(F.col("user_id") % 100 == 0)
         .select(
             "user_id",
@@ -362,14 +356,14 @@ ORDER BY day_num
 
 
 @register("q158_bitmap_distinct", oracle=_BITMAP_ORACLE)
-def q158(spark, sf_dir):
+def q158(events):
     """Exact distinct users per day via mergeable roaring-style bitmaps
     (bitmap_construct_agg / bitmap_or_agg, Spark 3.5+): per-(day, bucket)
     bitmaps are built map-side, daily counts are bitmap popcounts, and the
     global count REUSES the same bitmaps by OR-merging — the exact-distinct
     analogue of the q123 HLL identity, re-aggregable without rescanning.
     Oracle = plain COUNT(DISTINCT) (bitmaps must be invisible)."""
-    ev = load_tables(spark, sf_dir)["events"].select(
+    ev = events.select(
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
         .cast("bigint")
         .alias("day_num"),
@@ -403,7 +397,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 
 @register("q159_csv_source", oracle=_CSV_SRC_ORACLE)
-def q159(spark, sf_dir):
+def q159(spark, events):
     """Source-format coverage (q134's JSON twin): events serialized to
     RFC-4180 CSV (quote-doubling escape, so the JSON `props` strings with
     embedded commas/quotes survive) and read back with an EXPLICIT schema
@@ -412,10 +406,9 @@ def q159(spark, sf_dir):
     must be lossless; props_chars hashes the quoting fidelity."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     path = scratch_dir("q159_csv")
     csv_opts = {"quote": '"', "escape": '"', "header": "false"}
-    ev.select(
+    events.select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         "user_id",
@@ -481,7 +474,7 @@ FROM r3 ORDER BY rank DESC, node LIMIT 25
 
 
 @register("q160_pagerank", oracle=_PAGERANK_ORACLE)
-def q160(spark, sf_dir):
+def q160(lineitem):
     """PageRank (3 fixed power iterations, d=0.85) over the undirected
     part<->supplier co-purchase graph — the canonical iterative-algorithm
     shape on Spark: per-iteration plan is [broadcast rank+degree tables
@@ -494,8 +487,7 @@ def q160(spark, sf_dir):
     (q118 pattern) to make every iteration exchange-free on the edge
     side. Oracle = 3 unrolled SQL iterations with integer-exact
     contribution sums (engine-identical, see comment above)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    pairs = li.select("l_partkey", "l_suppkey").distinct()
+    pairs = lineitem.select("l_partkey", "l_suppkey").distinct()
     edges = (
         pairs.select(
             F.col("l_partkey").alias("src"),
@@ -593,7 +585,7 @@ ORDER BY doc_id""".format(cap=B.DEFAULT_BUCKET_CAP)
 
 
 @register("q161_index_dedup", oracle=_index_dedup_oracle())
-def q161(spark, sf_dir):
+def q161(spark, documents):
     """Incremental (cross-run) dedup: a NEW document batch is deduplicated
     against a PERSISTED LSH signature index of the existing corpus — the
     continuous-ingest shape of corpus dedup, where the index outlives any
@@ -606,16 +598,15 @@ def q161(spark, sf_dir):
     novel docs survive."""
     from ..scratch import scratch_dir
 
-    d = load_tables(spark, sf_dir)["documents"]
-    old = d.select("doc_id", "text")
+    old = documents.select("doc_id", "text")
     new = (
-        d.where(F.col("doc_id") % 7 == 0)
+        documents.where(F.col("doc_id") % 7 == 0)
         .select(
             (F.col("doc_id") + 2000000).alias("doc_id"),
             F.concat("text", F.lit(" qq")).alias("text"),
         )
         .unionAll(
-            d.where(F.col("doc_id") % 13 == 0).select(
+            documents.where(F.col("doc_id") % 13 == 0).select(
                 (F.col("doc_id") + 3000000).alias("doc_id"),
                 F.reverse("text").alias("text"),
             )
@@ -717,7 +708,7 @@ ORDER BY doc_a, doc_b
 
 
 @register("q162_simhash_pairs", oracle=_SIMHASH_PAIRS_ORACLE)
-def q162(spark, sf_dir):
+def q162(documents):
     """SimHash near-dup PAIRS (the dedup-matrix cell q45 leaves open:
     fingerprints -> candidate pairs): 60-bit simhash, banded into 4
     15-bit segments — by pigeonhole any pair within hamming distance 3
@@ -725,8 +716,7 @@ def q162(spark, sf_dir):
     sparse 15-bit buckets (never all-pairs), then the exact popcount
     filter keeps pairs with BIT_COUNT(XOR) <= 3. One explode + one
     60-column vote aggregate (map-side combinable), one band shuffle."""
-    d = load_tables(spark, sf_dir)["documents"]
-    corpus = _minhash_corpus(d)
+    corpus = _minhash_corpus(documents)
     tok = corpus.select(
         "doc_id", F.explode(T.tokens(F.col("text"))).alias("t")
     ).select("doc_id", T.shingle_hash60(F.col("t")).alias("h"))
@@ -809,7 +799,7 @@ ORDER BY user_id
 
 
 @register("q163_snapshot_diff", oracle=_SNAPDIFF_ORACLE)
-def q163(spark, sf_dir):
+def q163(events):
     """Point-in-time snapshot DIFF (CDC audit: what changed between two
     materializations): the q114 struct-max argmax evaluated at two time
     cutoffs, full-outer joined on the key with an added/removed/changed/
@@ -817,7 +807,6 @@ def q163(spark, sf_dir):
     aggregation; at scale the T1 snapshot is the stored table and only
     the (T1, T2] delta is scanned — this query IS that identity, with
     the oracle recomputing both sides from scratch."""
-    ev = load_tables(spark, sf_dir)["events"]
 
     def snap(df):
         m = F.max(F.struct("ts", "event_id", "event_type")).alias("m")
@@ -827,8 +816,8 @@ def q163(spark, sf_dir):
             F.col("m.event_type").alias("event_type"),
         )
 
-    s1 = snap(ev.where(F.col("ts") < F.lit(_SNAPDIFF_T1).cast("timestamp")))
-    s2 = snap(ev)
+    s1 = snap(events.where(F.col("ts") < F.lit(_SNAPDIFF_T1).cast("timestamp")))
+    s2 = snap(events)
     j = s1.alias("s1").join(
         s2.alias("s2"), F.col("s1.user_id") == F.col("s2.user_id"), "full_outer"
     )
@@ -857,7 +846,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 
 @register("q164_orc_source", oracle=_ORC_SRC_ORACLE)
-def q164(spark, sf_dir):
+def q164(spark, events):
     """Source-format coverage: ORC (the third columnar/landing format
     after parquet and JSON/CSV text) — native Spark writer/reader, stripe
     statistics give the same scan-level pushdown class as parquet. The
@@ -866,9 +855,8 @@ def q164(spark, sf_dir):
     encoder-exact)."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     path = scratch_dir("q164_orc")
-    ev.select(
+    events.select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         "user_id",
@@ -899,7 +887,7 @@ FROM events GROUP BY 1 ORDER BY day_num
 
 
 @register("q165_compaction", oracle=_COMPACT_ORACLE)
-def q165(spark, sf_dir):
+def q165(spark, events):
     """Small-files compaction — the table-maintenance job every streaming
     ingest needs (micro-batches land thousands of KB-sized files; scans
     then pay per-file open/footer cost). A 64-way fragmented copy of
@@ -910,10 +898,9 @@ def q165(spark, sf_dir):
     4x/16x file-count reduction is asserted in tests/test_scale_ops.py."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     frag_path = scratch_dir("q165_frag")
     compact_path = scratch_dir("q165_compact")
-    ev.select("event_id", "ts", "user_id", "event_type", "value").repartition(
+    events.select("event_id", "ts", "user_id", "event_type", "value").repartition(
         64
     ).write.mode("overwrite").parquet(frag_path)
     # compact: coalesce merges partitions without a shuffle; target file
@@ -982,7 +969,7 @@ SELECT CAST(j AS INT) AS j, v FROM v3 ORDER BY j
 
 
 @register("q166_power_iteration", oracle=_POWER_ORACLE)
-def q166(spark, sf_dir):
+def q166(spark, embeddings):
     """Top principal direction of the embedding matrix by 3 distributed
     power iterations (v <- normalize(Xᵀ(Xv))) — the PCA building block,
     fully distributed: NO driver-side collect anywhere; the 64-row
@@ -990,9 +977,8 @@ def q166(spark, sf_dir):
     matrix, each round is two small-key aggregations. The matrix explode
     is checkpointed once and reread each round. Bit-identical to the SQL
     oracle via integer-exact quantized arithmetic (see comment above)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
     qx = (
-        emb.select(
+        embeddings.select(
             "vec_id",
             F.posexplode(
                 F.transform(
@@ -1055,19 +1041,18 @@ FROM keyed GROUP BY 1, 2 ORDER BY lang, split
 
 
 @register("q167_train_val_test", oracle=_SPLIT_ORACLE)
-def q167(spark, sf_dir):
+def q167(documents):
     """Deterministic 80/10/10 train/val/test split by content-stable hash
     (md5 of the doc key, NOT random): re-running the pipeline on a grown
     corpus keeps every existing doc in its original split — the property
     that prevents train/test leakage across dataset versions. Pure map +
     small aggregate; the split column costs one hash per row."""
-    d = load_tables(spark, sf_dir)["documents"]
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
         % 10
     )
-    keyed = d.select(
+    keyed = documents.select(
         "lang",
         "n_chars",
         F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test").alias("split"),
@@ -1119,15 +1104,14 @@ FROM s ORDER BY flag
 
 
 @register("q168_correlation_matrix", oracle=_CORR_ORACLE)
-def q168(spark, sf_dir):
+def q168(lineitem):
     """Per-group Pearson correlation matrix over the lineitem measures —
     the profiling statistic feeding feature selection. ONE pass builds
     all nine exact moments (map-side combinable wide aggregate, shuffle
     carries 3 groups x 10 numbers); the r formula then runs on identical
     IEEE inputs in both engines instead of trusting engine-native corr()
     accumulation order."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    m = li.select(
+    m = lineitem.select(
         F.col("l_returnflag").alias("flag"),
         cents("l_quantity").alias("q"),
         cents("l_extendedprice").alias("p"),
@@ -1197,15 +1181,14 @@ FROM terms GROUP BY etype ORDER BY etype
 
 
 @register("q169_mutual_information", oracle=_MI_ORACLE)
-def q169(spark, sf_dir):
+def q169(events):
     """Mutual information between event type and day-of-week — the
     dependence screen run before using a feature pair. Contingency cells
     aggregate first (shuffle carries |types| x 7 cells, not events);
     marginals broadcast back; one ln per CELL, rounded, then summed in
     decimal so the reduction is order-free."""
-    ev = load_tables(spark, sf_dir)["events"]
     cells = (
-        ev.select(
+        events.select(
             F.col("event_type").alias("etype"),
             F.dayofweek(F.col("ts").cast("date")).alias("dow"),
         )
@@ -1256,7 +1239,7 @@ GROUP BY event_type ORDER BY event_type
 
 
 @register("q170_zorder_prune", oracle=_ZORDER_ORACLE)
-def q170(spark, sf_dir):
+def q170(spark, events):
     """Z-order (Morton) clustering + two-column zone-map pruning — the
     q139 data-skipping story extended to 2-D predicates: one layout
     serves range filters on BOTH user and day because bit-interleaved
@@ -1269,7 +1252,7 @@ def q170(spark, sf_dir):
     from ..operators.zonemap import build_manifest, pruned_scan, write_zordered
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"].withColumn(
+    ev = events.withColumn(
         "ub", (F.col("user_id") % 256).cast("int")
     ).withColumn("dayb", F.dayofmonth(F.col("ts").cast("date")))
     path = scratch_dir("q170_zorder")
@@ -1298,7 +1281,7 @@ FROM documents WHERE doc_id % 20 = 0 ORDER BY doc_id
 
 
 @register("q171_arrow_udf", oracle=_ARROW_UDF_ORACLE)
-def q171(spark, sf_dir):
+def q171(documents):
     """Arrow-optimized scalar Python UDF (`@udf(..., useArrow=True)`,
     Spark 3.5+/4): the third rung of the Python-eval ladder the surface
     documents — q57 row-at-a-time pickle, q55/q58 pandas_udf, and this:
@@ -1310,9 +1293,8 @@ def q171(spark, sf_dir):
     def n_words(text: str) -> int:
         return text.count(" ") + 1
 
-    d = load_tables(spark, sf_dir)["documents"]
     return (
-        d.where(F.col("doc_id") % 20 == 0)
+        documents.where(F.col("doc_id") % 20 == 0)
         .select("doc_id", n_words("text").alias("n_words_udf"))
         .orderBy("doc_id")
     )
@@ -1329,7 +1311,7 @@ FROM events WHERE value > 0 GROUP BY event_type ORDER BY event_type
 
 
 @register("q172_observed_metrics", oracle=_OBSERVE_ORACLE)
-def q172(spark, sf_dir):
+def q172(events):
     """Inline data-quality metrics with df.observe (CollectMetrics): the
     pipeline counts rows/nulls/range-violations IN the same pass that
     computes the result — no second scan for the audit numbers (at 100 TB
@@ -1339,9 +1321,8 @@ def q172(spark, sf_dir):
     Observation API."""
     from pyspark.sql import Observation
 
-    ev = load_tables(spark, sf_dir)["events"]
     obs = Observation("q172_quality")
-    observed = ev.observe(
+    observed = events.observe(
         obs,
         F.count(F.lit(1)).alias("rows_seen"),
         F.sum(F.when(F.col("value") <= 0, 1).otherwise(0)).alias("nonpositive"),
@@ -1383,15 +1364,14 @@ ORDER BY x DESC, cust
 
 
 @register("q174_pareto_frontier", oracle=_SKYLINE_ORACLE)
-def q174(spark, sf_dir):
+def q174(orders):
     """Skyline / Pareto frontier of customers on (total spend, order
     count) — the multi-objective 'best' query. NOT the naive quadratic
     NOT-EXISTS self-join: dominance reduces to two window maxima (a
     strictly-higher-x running max via an integer RANGE frame, and a
     same-x partition max), so the whole operator is one sort shuffle —
     the shape that survives 10^9 input groups."""
-    o = load_tables(spark, sf_dir)["orders"]
-    pts = o.groupBy(F.col("o_custkey").alias("cust")).agg(
+    pts = orders.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.sum(cents("o_totalprice")).cast("bigint").alias("x"),
         F.count("*").alias("y"),
     )
@@ -1429,7 +1409,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 
 @register("q175_schema_evolution", oracle=_SCHEMA_EVO_ORACLE)
-def q175(spark, sf_dir):
+def q175(spark, events):
     """Schema evolution on a partitioned landing table: version-1 files
     lack a column that version-2 files carry; `mergeSchema` unions the
     schemas at read time and v1 rows surface NULL for the new column (the
@@ -1438,10 +1418,9 @@ def q175(spark, sf_dir):
     NULLs exactly like the oracle's CASE over the original events."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     path = scratch_dir("q175_evo")
-    v1 = ev.where(F.col("event_id") % 2 == 0).select("event_id", "event_type")
-    v2 = ev.where(F.col("event_id") % 2 == 1).select(
+    v1 = events.where(F.col("event_id") % 2 == 0).select("event_id", "event_type")
+    v2 = events.where(F.col("event_id") % 2 == 1).select(
         "event_id", "event_type", F.col("user_id").alias("enriched_uid")
     )
     v1.write.mode("overwrite").parquet(path + "/v=1")
@@ -1486,14 +1465,13 @@ FROM binned GROUP BY flag, bin ORDER BY flag, bin
 
 
 @register("q176_equidepth_histogram", oracle=_EQUIDEPTH_ORACLE)
-def q176(spark, sf_dir):
+def q176(lineitem):
     """Equi-depth histogram (8 quantile bins per group) — the statistic
     CBOs and drift monitors actually keep (equi-width q121 starves on
     skew; equi-depth adapts). ntile over a total order with a unique
     tiebreaker is deterministic in both engines; one window sort + the
     |groups|x8 aggregate."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    c = li.select(
+    c = lineitem.select(
         F.col("l_returnflag").alias("flag"),
         cents("l_extendedprice").alias("cents"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("uid"),
@@ -1537,13 +1515,13 @@ FROM held GROUP BY user_id ORDER BY user_id
 
 
 @register("q177_time_weighted_avg", oracle=_TWAP_ORACLE)
-def q177(spark, sf_dir):
+def q177(events):
     """Time-weighted average (TWAP) per user: each reading holds until
     the next event (step-function integral / total time) — the correct
     average for irregularly-sampled series where plain AVG over-weights
     bursts. One (user, ts) window shuffle for the lead; integer-exact
     cents x micros accumulation."""
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("user_id") % 10 == 0)
+    ev = events.where(F.col("user_id") % 10 == 0)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "user_id",
@@ -1597,15 +1575,14 @@ FROM parsed GROUP BY event_type ORDER BY event_type
 
 
 @register("q178_dead_letter_route", oracle=_DLQ_ORACLE)
-def q178(spark, sf_dir):
+def q178(events):
     """Dead-letter routing for malformed ingest records: parse failures
     become NULL (never exceptions — one poison record must not kill a
     100 TB job), counted per type in the same pass that aggregates the
     survivors. The reference's JSON lane handles malformed changes the
     same nulling way (cdc/pipeline.py); this is the generic landing-zone
     form."""
-    ev = load_tables(spark, sf_dir)["events"]
-    raw = ev.select(
+    raw = events.select(
         "event_type",
         F.when(F.col("event_id") % 5 == 0, F.concat(F.lit("x"), F.col("props")))
         .otherwise(F.col("props"))
@@ -1648,7 +1625,7 @@ GROUP BY o.o_orderstatus ORDER BY status
 
 
 @register("q179_incremental_join", oracle=_DELTA_JOIN_ORACLE)
-def q179(spark, sf_dir):
+def q179(orders, lineitem):
     """Incremental materialized-JOIN maintenance (q117's identity lifted
     from aggregates to joins): the stored term A⋈B and the three delta
     terms dA⋈B, A⋈dB, dA⋈dB are computed independently and unioned; the
@@ -1657,14 +1634,12 @@ def q179(spark, sf_dir):
     union (partial-agg merge, q117 style), so the refresh shuffles only
     delta-sized data at the margin — the reason view maintenance beats
     recompute at 100 TB."""
-    t = load_tables(spark, sf_dir)
     split = F.lit(_DELTA_JOIN_SPLIT).cast("timestamp")
-    o_old = t["orders"].where(F.col("o_orderdate") < split)
-    o_new = t["orders"].where(F.col("o_orderdate") >= split)
-    l_all = t["lineitem"]
+    o_old = orders.where(F.col("o_orderdate") < split)
+    o_new = orders.where(F.col("o_orderdate") >= split)
     # lineitem has no independent arrival date here; side it by shipdate
-    l_old = l_all.where(F.col("l_shipdate") < split)
-    l_new = l_all.where(F.col("l_shipdate") >= split)
+    l_old = lineitem.where(F.col("l_shipdate") < split)
+    l_new = lineitem.where(F.col("l_shipdate") >= split)
 
     def term(o, l):
         return (
@@ -1710,7 +1685,7 @@ FROM lineitem WHERE l_orderkey % 10 = 0 GROUP BY flag ORDER BY flag
 
 
 @register("q180_percentile_vector", oracle=_PCTL_ORACLE)
-def q180(spark, sf_dir):
+def q180(lineitem):
     """Exact interpolated percentile vector per group (p25/p50/p75/p95)
     — the latency-style summary for monitoring dashboards. Spark's exact
     percentile is a sort-based aggregate (one shuffle on the 3-key
@@ -1721,7 +1696,7 @@ def q180(spark, sf_dir):
     distributed selection, and this entry pins the exact semantics those
     approximate. Floor-truncate at cents absorbs interpolation-product
     ulps (q80 recipe)."""
-    li = load_tables(spark, sf_dir)["lineitem"].where(
+    li = lineitem.where(
         F.col("l_orderkey") % 10 == 0
     )
 
@@ -1764,15 +1739,14 @@ ORDER BY p.prev, p.cur
 
 
 @register("q181_markov_transitions", oracle=_MARKOV_ORACLE)
-def q181(spark, sf_dir):
+def q181(events):
     """First-order Markov transition matrix of user behavior (the
     path-mining / next-event-prediction statistic): one (user, ts)
     window shuffle builds the lag pairs, the matrix aggregate carries
     |types|² cells, transition probabilities divide exact counts.
     At 100 TB the window shuffle is the only event-volume stage."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
+    seq = events.select(
         F.col("event_type").alias("cur"),
         F.lag("event_type").over(w).alias("prev"),
     )
@@ -1815,21 +1789,20 @@ GROUP BY 1, 2 ORDER BY cohort_week, week_offset
 
 
 @register("q182_retention_cohorts", oracle=_RETENTION_ORACLE)
-def q182(spark, sf_dir):
+def q182(events):
     """Retention cohort analysis (the product-analytics staple): users
     cohorted by first-active week, counted per (cohort, week offset).
     Two partial-aggregatable passes over (user, week) presences — the
     activity table is DISTINCT (user, week), orders of magnitude smaller
     than events — then a broadcast of the per-user cohort map. Epoch-
     week integers keep every value engine-exact."""
-    ev = load_tables(spark, sf_dir)["events"]
     week = (
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")) / 7
     ).cast("bigint")
-    firsts = ev.groupBy("user_id").agg(
+    firsts = events.groupBy("user_id").agg(
         F.min(week).alias("cohort_week")
     )
-    activity = ev.select("user_id", week.alias("active_week")).distinct()
+    activity = events.select("user_id", week.alias("active_week")).distinct()
     return (
         activity.join(firsts, "user_id")
         .groupBy(
@@ -1871,13 +1844,13 @@ FROM pref ORDER BY user_id, event_id
 
 
 @register("q183_floored_balance", oracle=_FLOORED_ORACLE)
-def q183(spark, sf_dir):
+def q183(events):
     """Running balance floored at zero (inventory/credit semantics) WITHOUT
     recursion: cap-at-zero folds into prefix-sum minus its running
     minimum (clamped at 0) — two stacked window aggregates on one (user,
     ts) sort, the non-iterative form of a seemingly stateful scan.
     Integer cents keep it engine-exact."""
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("user_id") % 25 == 0)
+    ev = events.where(F.col("user_id") % 25 == 0)
     flows = ev.select(
         "user_id",
         "ts",
@@ -1936,14 +1909,13 @@ ORDER BY check_name
 
 
 @register("q184_integrity_audit", oracle=_INTEGRITY_ORACLE)
-def q184(spark, sf_dir):
+def q184(lineitem, orders, customer):
     """Referential-integrity audit — the data-contract checks a pipeline
     runs before promoting a table: orphaned facts (anti join), unknown
     dimension keys (anti join), duplicate primary keys (having count>1),
     null keys (scan). Each check is its own minimal-shape job; anti
     joins broadcast the key side when small and all checks reduce to
     one-row counts."""
-    t = load_tables(spark, sf_dir)
 
     def one(name, cnt_df):
         return cnt_df.select(
@@ -1951,20 +1923,20 @@ def q184(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_bad"),
         )
 
-    orphans = t["lineitem"].select("l_orderkey").join(
-        t["orders"].select("o_orderkey"),
+    orphans = lineitem.select("l_orderkey").join(
+        orders.select("o_orderkey"),
         F.col("l_orderkey") == F.col("o_orderkey"),
         "left_anti",
     )
-    unknown_cust = t["orders"].select("o_custkey").join(
-        t["customer"].select("c_custkey"),
+    unknown_cust = orders.select("o_custkey").join(
+        customer.select("c_custkey"),
         F.col("o_custkey") == F.col("c_custkey"),
         "left_anti",
     )
     dup_keys = (
-        t["customer"].groupBy("c_custkey").count().where(F.col("count") > 1)
+        customer.groupBy("c_custkey").count().where(F.col("count") > 1)
     )
-    null_keys = t["orders"].where(
+    null_keys = orders.where(
         F.col("o_orderkey").isNull() | F.col("o_custkey").isNull()
     )
     return (
@@ -2003,14 +1975,13 @@ FROM terms GROUP BY etype ORDER BY etype
 
 
 @register("q185_chi_square", oracle=_CHI2_ORACLE)
-def q185(spark, sf_dir):
+def q185(events):
     """Chi-square independence statistic over the (event type, day-of-
     week) contingency table — the third dependence screen (q168 corr,
     q169 MI). Same cells-first shape: the statistic's cost is the one
     contingency aggregate; everything after broadcasts."""
-    ev = load_tables(spark, sf_dir)["events"]
     cells = (
-        ev.select(
+        events.select(
             F.col("event_type").alias("etype"),
             F.dayofweek(F.col("ts").cast("date")).alias("dow"),
         )
@@ -2077,7 +2048,7 @@ ORDER BY cust, supp
 
 
 @register("q186_spatial_join", oracle=_SPATIAL_ORACLE)
-def q186(spark, sf_dir):
+def q186(customer, supplier):
     """Spatial radius join (geo lane): operators/spatial.radius_join
     bounds the quadratic work to grid cells with a latitude-aware
     east-west halo on a mod-360 longitude ring (wrap-correct at the
@@ -2087,13 +2058,12 @@ def q186(spark, sf_dir):
     product) — it verifies semantics, not grid-consistency."""
     from ..operators.spatial import radius_join
 
-    t = load_tables(spark, sf_dir)
-    cust = t["customer"].where(F.col("c_custkey") % 5 == 0).select(
+    cust = customer.where(F.col("c_custkey") % 5 == 0).select(
         F.col("c_custkey").alias("cust"),
         ((F.col("c_custkey") * 37 % 1200) / 10.0 - 60.0).alias("clat"),
         ((F.col("c_custkey") * 91 % 3600) / 10.0 - 180.0).alias("clon"),
     )
-    supp = t["supplier"].select(
+    supp = supplier.select(
         F.col("s_suppkey").alias("supp"),
         ((F.col("s_suppkey") * 53 % 1200) / 10.0 - 60.0).alias("slat"),
         ((F.col("s_suppkey") * 17 % 3600) / 10.0 - 180.0).alias("slon"),
@@ -2136,17 +2106,16 @@ FROM ranked, tot ORDER BY cents DESC, nation
 
 
 @register("q187_pareto_share", oracle=_PARETO_ORACLE)
-def q187(spark, sf_dir):
+def q187(orders, customer, nation):
     """Pareto 80/20 contribution analysis: nations ranked by revenue with
     cumulative share; `in_core` marks the head that covers 80% of
     revenue (flag computed from the PRE-row cumulative so the boundary
     nation is included, engine-stable on exact cents). Dim joins
     broadcast; the window runs over |nations| rows."""
-    t = load_tables(spark, sf_dir)
     rev = (
-        t["orders"]
-        .join(F.broadcast(t["customer"]), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("c_nationkey"))
+        orders
+        .join(F.broadcast(customer), F.col("c_custkey") == F.col("o_custkey"))
+        .join(F.broadcast(nation), F.col("n_nationkey") == F.col("c_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
@@ -2208,13 +2177,13 @@ FROM wide
 
 
 @register("q188_ab_test", oracle=_ABTEST_ORACLE)
-def q188(spark, sf_dir):
+def q188(events):
     """A/B experiment readout: hash-assigned variants (deterministic,
     rerun-stable — the q167 principle), mean lift and Welch t-statistic
     from one integer-exact moment aggregate per variant. The entire
     analysis is 2 aggregate rows pivoted wide; event volume touches only
     the first aggregate."""
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("event_type") == "purchase")
+    ev = events.where(F.col("event_type") == "purchase")
     variant = F.when(
         F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
@@ -2273,13 +2242,13 @@ ORDER BY user_id, event_id
 
 
 @register("q189_ignore_nulls_window", oracle=_IGNORE_NULLS_ORACLE)
-def q189(spark, sf_dir):
+def q189(events):
     """IGNORE NULLS window navigation — the missing cell of the q22
     lag/lead/first/last family and the engine primitive under LOCF
     (q111 builds it manually; this is the declarative form): every third
     reading is nulled and last_value(..., ignoreNulls) carries the
     previous good value forward in one window pass."""
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("user_id") % 50 == 0)
+    ev = events.where(F.col("user_id") % 50 == 0)
     vals = ev.select(
         "user_id",
         "ts",
@@ -2316,7 +2285,7 @@ FROM events GROUP BY 1, 2 ORDER BY event_type, month
 
 
 @register("q190_rollup_chain", oracle=_ROLLUP_CHAIN_ORACLE)
-def q190(spark, sf_dir):
+def q190(events):
     """Rollup lattice: the monthly aggregate is computed FROM the daily
     aggregate, never from raw events — the day table is the materialized
     rollup every warehouse maintains, and higher granularities reaggregate
@@ -2324,9 +2293,8 @@ def q190(spark, sf_dir):
     time lattice). The oracle aggregates raw events directly, proving the
     two-level chain exact. Shuffle sizes: events→days once, then
     days→months on a table that is ~1/30th the size."""
-    ev = load_tables(spark, sf_dir)["events"]
     daily = (
-        ev.groupBy(
+        events.groupBy(
             "event_type",
             F.col("ts").cast("date").alias("day"),
         )
@@ -2368,7 +2336,7 @@ FROM events
 
 
 @register("q191_table_fingerprint", oracle=_FINGERPRINT_ORACLE)
-def q191(spark, sf_dir):
+def q191(events):
     """Order-independent table fingerprint: canonicalize every column to
     an integer string (epoch-micros, cents), md5 each row to 60 bits,
     SUM in DECIMAL(38,0), publish the sum mod 2^60 as BIGINT. Any row
@@ -2379,7 +2347,6 @@ def q191(spark, sf_dir):
     sum to 53 significant bits — round-4 advice); it is exactly the
     wrap-around checksum two replicas would exchange. One map pass + one
     scalar aggregate."""
-    ev = load_tables(spark, sf_dir)["events"]
     row_str = F.concat_ws(
         "|",
         F.col("event_id").cast("string"),
@@ -2389,7 +2356,7 @@ def q191(spark, sf_dir):
         cents("value").cast("string"),
     )
     h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("decimal(38,0)")
-    return ev.agg(
+    return events.agg(
         F.count("*").alias("n"),
         (F.sum(h) % F.lit(1152921504606846976).cast("decimal(38,0)"))
         .cast("bigint")
@@ -2425,12 +2392,12 @@ ORDER BY user_id, event_id
 
 
 @register("q192_rolling_anomaly", oracle=_ROLLING_ANOM_ORACLE)
-def q192(spark, sf_dir):
+def q192(events):
     """Rolling anomaly score: z of each reading against its own trailing
     24-event window (q154's global z-score made streaming-shaped — the
     monitoring primitive). Exact BIGINT rolling sum/sumsq feed identical
     IEEE mean/std; full windows only. One (user, ts) sort shuffle."""
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("user_id") % 25 == 0)
+    ev = events.where(F.col("user_id") % 25 == 0)
     c = ev.select(
         "user_id",
         "ts",
@@ -2480,14 +2447,13 @@ FROM sizes
 
 
 @register("q193_skew_report", oracle=_SKEW_REPORT_ORACLE)
-def q193(spark, sf_dir):
+def q193(lineitem):
     """Key-skew diagnosis — the report run BEFORE choosing a join
     strategy (broadcast / salt / AQE, q74/q112/q136): group-size
     distribution of the join key, heavy-hitter count and their row
     share. Two aggregates, the second over |keys| rows; the decision it
     feeds is exactly why q136 exists."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    sizes = li.groupBy(F.col("l_orderkey").alias("k")).agg(F.count("*").alias("c"))
+    sizes = lineitem.groupBy(F.col("l_orderkey").alias("k")).agg(F.count("*").alias("c"))
     heavy = F.when(F.col("c") >= 7, 1).otherwise(0)
     return sizes.agg(
         F.count("*").alias("n_keys"),
@@ -2548,7 +2514,7 @@ ORDER BY doc_a, doc_b
 
 
 @register("q194_ppjoin", oracle=_PPJOIN_ORACLE)
-def q194(spark, sf_dir):
+def q194(documents):
     """Set-similarity self-join with PREFIX FILTERING (PPJoin family)
     over 3-gram shingle sets: shingles ranked by ascending global
     frequency, each doc emits only its prefix (|set| - ceil(t|set|) + 1
@@ -2561,7 +2527,7 @@ def q194(spark, sf_dir):
     near-dup pair set)."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"].where(F.col("doc_id") % 8 == 0)
+    d = documents.where(F.col("doc_id") % 8 == 0)
     corpus = d.select("doc_id", "text").unionAll(
         d.where(F.col("doc_id") % 3 == 0).select(
             (F.col("doc_id") + 1000000).alias("doc_id"),
@@ -2645,11 +2611,11 @@ ORDER BY c.flag, c.uid
 
 
 @register("q195_minmax_scale", oracle=_MINMAX_ORACLE)
-def q195(spark, sf_dir):
+def q195(lineitem):
     """Per-group min-max feature scaling (the [0,1] normalization before
     model input): group bounds are a 3-row broadcast back onto the fact;
     integer numerator/denominator feed one IEEE division per row."""
-    li = load_tables(spark, sf_dir)["lineitem"].where(F.col("l_orderkey") % 20 == 0)
+    li = lineitem.where(F.col("l_orderkey") % 20 == 0)
     c = li.select(
         F.col("l_returnflag").alias("flag"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("uid"),
@@ -2699,14 +2665,13 @@ FROM scored
 
 
 @register("q196_vocab_oov", oracle=_VOCAB_ORACLE)
-def q196(spark, sf_dir):
+def q196(documents):
     """Tokenizer-vocabulary build (min-frequency cutoff) + per-doc OOV
     scoring against it — the two-pass vocabulary pipeline every tokenizer
     training run starts with. The vocab broadcasts back onto the token
     stream; the high-OOV flag (oov > 20%) uses integer cross-products,
     no division. One token pass feeds both stages."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id",
         F.explode(
             F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
@@ -2762,20 +2727,19 @@ ORDER BY day_num, g.event_type
 
 
 @register("q197_zero_fill_grid", oracle=_ZEROFILL_ORACLE)
-def q197(spark, sf_dir):
+def q197(spark, events):
     """Zero-filled reporting grid: every (calendar day × type) cell
     reported, absent combinations as explicit zeros — the BI contract
     that makes downstream charts gap-free (q10's bounded cross join of
     two TINY dims + a left join of the sparse counts; the fact table
     never cross-joins anything)."""
-    ev = load_tables(spark, sf_dir)["events"]
     days = spark.range(30).select(
         F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int")).alias("day")
     )
-    types = ev.select("event_type").distinct()
+    types = events.select("event_type").distinct()
     grid = days.crossJoin(F.broadcast(types))
     counts = (
-        ev.where(F.col("user_id") % 100 == 0)
+        events.where(F.col("user_id") % 100 == 0)
         .groupBy(F.col("ts").cast("date").alias("day"), "event_type")
         .agg(
             F.count("*").alias("n"),
@@ -2814,16 +2778,15 @@ FROM weekly ORDER BY event_type, week
 
 
 @register("q198_period_growth", oracle=_MOM_ORACLE)
-def q198(spark, sf_dir):
+def q198(events):
     """Period-over-period growth (week-over-week per type): the rollup +
     lag window that powers every trend dashboard. Aggregate first (cells
     = |types|×|weeks|), window second — the window never sees event
     volume."""
-    ev = load_tables(spark, sf_dir)["events"]
     week = (
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")) / 7
     ).cast("bigint")
-    weekly = ev.groupBy("event_type", week.alias("week")).agg(F.count("*").alias("n"))
+    weekly = events.groupBy("event_type", week.alias("week")).agg(F.count("*").alias("n"))
     w = Window.partitionBy("event_type").orderBy("week")
     prev = F.lag("n").over(w)
     return (
@@ -2865,13 +2828,13 @@ ORDER BY item_a, item_b
 
 
 @register("q199_item_cooccurrence", oracle=_COOC_ORACLE)
-def q199(spark, sf_dir):
+def q199(lineitem):
     """Item-item co-occurrence similarity (the recsys candidate build):
     pair expansion strictly WITHIN each order basket (quadratic only in
     basket size, the LSH invariant again), cosine from exact integer
     counts with marginals broadcast back. cooc >= 2 prunes the noise
     tail before the join."""
-    li = load_tables(spark, sf_dir)["lineitem"].where(F.col("l_orderkey") % 10 == 0)
+    li = lineitem.where(F.col("l_orderkey") % 10 == 0)
     baskets = li.select(
         F.col("l_orderkey").alias("ord"), F.col("l_partkey").alias("item")
     ).distinct()
@@ -2927,12 +2890,12 @@ ORDER BY r.o_orderkey
 
 
 @register("q200_target_encoding", oracle=_TARGET_ENC_ORACLE)
-def q200(spark, sf_dir):
+def q200(orders):
     """Leave-one-out target encoding (categorical → numeric without
     target leakage): per-category exact sums broadcast back, each row's
     encoding excludes itself via (sum - y) / (n - 1). The standard
     high-cardinality-categorical feature for gradient boosting."""
-    o = load_tables(spark, sf_dir)["orders"].where(F.col("o_orderkey") % 10 == 0)
+    o = orders.where(F.col("o_orderkey") % 10 == 0)
     rows_ = o.select(
         "o_orderkey",
         F.col("o_orderpriority").alias("cat"),
@@ -2978,7 +2941,7 @@ FROM scored GROUP BY r, f, m ORDER BY r, f, m
 
 
 @register("q201_rfm_segments", oracle=_RFM_ORACLE)
-def q201(spark, sf_dir):
+def q201(orders):
     """RFM segmentation (recency / frequency / monetary quartiles — the
     CRM workhorse): one per-customer aggregate, three ntile windows with
     unique tiebreaks (engine-deterministic), segment rollup. Windows run
@@ -2987,8 +2950,7 @@ def q201(spark, sf_dir):
     (plan-asserted: 2 exchanges total), so only the three in-memory
     sorts of the collapsed frame remain. At extreme |customers| the
     q206-style boundary-histogram assignment is the escape hatch."""
-    o = load_tables(spark, sf_dir)["orders"]
-    per_cust = o.groupBy(F.col("o_custkey").alias("cust")).agg(
+    per_cust = orders.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.max(
             F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
         )
@@ -3041,20 +3003,19 @@ ORDER BY user_id, event_id
 
 
 @register("q202_sequence_match", oracle=_SEQ_ORACLE)
-def q202(spark, sf_dir):
+def q202(events):
     """Sequence-pattern detection (MATCH_RECOGNIZE-lite): purchases with
     a click by the same user within the preceding hour. The carried
     last-click timestamp (last_value ignoreNulls over a 1-PRECEDING
     frame) turns the event-sequence join into ONE window pass — no
     self-join, no interval explosion."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     click_us = F.when(F.col("event_type") == "click", F.unix_micros("ts"))
-    marked = ev.select(
+    marked = events.select(
         "user_id",
         "ts",
         "event_id",
@@ -3117,7 +3078,7 @@ ORDER BY bucket
 
 
 @register("q203_merkle_diff", oracle=_MERKLE_ORACLE)
-def q203(spark, sf_dir):
+def q203(events):
     """Merkle-bucket replica diff (anti-entropy repair): both replicas
     reduce to 1024 per-bucket (fingerprint, count) digests — q191's
     order-free checksum, bucketed — and only differing buckets surface
@@ -3126,7 +3087,6 @@ def q203(spark, sf_dir):
     fingerprint comparison stays on the full DECIMAL(38,0) sums (a
     DOUBLE cast would truncate the ~70-bit bucket sums to 53 bits and
     could silently equate differing digests — round-4 advice)."""
-    ev = load_tables(spark, sf_dir)["events"]
 
     def digest(corrupt: bool):
         v = cents("value")
@@ -3147,7 +3107,7 @@ def q203(spark, sf_dir):
             16,
             10,
         ).cast("decimal(38,0)")
-        return ev.groupBy((F.col("event_id") % 1024).alias("bucket")).agg(
+        return events.groupBy((F.col("event_id") % 1024).alias("bucket")).agg(
             F.sum(h).cast("decimal(38,0)").alias("fp"),
             F.count("*").alias("n"),
         )
@@ -3177,19 +3137,18 @@ GROUP BY 1 ORDER BY segment
 
 
 @register("q204_late_dim_fallback", oracle=_LATE_DIM_ORACLE)
-def q204(spark, sf_dir):
+def q204(customer, orders):
     """Late-arriving dimension handling: facts whose dim row hasn't
     landed yet (1/7th of customers withheld) roll up under an explicit
     UNKNOWN member instead of being dropped or failing the job — the
     warehouse conformance pattern that keeps totals complete. Broadcast
     left join + COALESCE; re-running after the dim lands reclassifies
     automatically."""
-    t = load_tables(spark, sf_dir)
-    dim = t["customer"].where(F.col("c_custkey") % 7 != 0).select(
+    dim = customer.where(F.col("c_custkey") % 7 != 0).select(
         "c_custkey", "c_mktsegment"
     )
     return (
-        t["orders"]
+        orders
         .join(F.broadcast(dim), F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy(F.coalesce(F.col("c_mktsegment"), F.lit("UNKNOWN")).alias("segment"))
         .agg(
@@ -3231,14 +3190,13 @@ FROM swept GROUP BY day ORDER BY day_num
 
 
 @register("q205_max_concurrency", oracle=_CONCURRENCY_ORACLE)
-def q205(spark, sf_dir):
+def q205(events):
     """Max concurrent user sessions per day by SWEEP LINE: each session
     interval becomes a +1/-1 endpoint, one (day, time)-ordered running
     sum gives instantaneous concurrency, max per day is the capacity
     number. The interval problem that looks like a self-join is one
     window pass over 2x|sessions| points."""
-    ev = load_tables(spark, sf_dir)["events"]
-    sessions = ev.groupBy(
+    sessions = events.groupBy(
         "user_id", F.col("ts").cast("date").alias("day")
     ).agg(
         F.min(F.unix_micros("ts")).alias("t0"),
@@ -3296,7 +3254,7 @@ FROM per_dec, tot ORDER BY decile
 
 
 @register("q206_lift_table", oracle=_LIFT_ORACLE)
-def q206(spark, sf_dir):
+def q206(events):
     """Decile lift table computed WITHOUT ranking event volume (round-4
     verdict #4): ntile(10) over (score DESC, event_id) is positional, so
     the per-decile (n, pos) counts are derivable from (a) the SCORE
@@ -3308,14 +3266,13 @@ def q206(spark, sf_dir):
     Exact: every quantity is integer until the final lift division, and
     the boundary-group probe ranks by the SAME (event_id ASC within
     equal score) order ntile uses."""
-    ev = load_tables(spark, sf_dir)["events"]
     label = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
     score = (
         F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
         + F.when(F.col("event_type") == "purchase", 2000000000).otherwise(0)
     )
-    scored = ev.select("event_id", label.alias("label"), score.alias("score"))
+    scored = events.select("event_id", label.alias("label"), score.alias("score"))
     tiles = exact_ntile_counts(scored, 10, descending=True)
     return tiles.select(
         F.col("tile").alias("decile"),
@@ -3359,7 +3316,7 @@ FROM sums
 
 
 @register("q207_auc_ranksum", oracle=_AUC_ORACLE)
-def q207(spark, sf_dir):
+def q207(events):
     """Exact ROC AUC by the Mann-Whitney rank-sum identity, computed
     from the SCORE HISTOGRAM (round-4 verdict #3): a map-side-combinable
     groupBy(score) collapses event volume to |distinct scores| rows; the
@@ -3369,8 +3326,7 @@ def q207(spark, sf_dir):
     only the histogram — so the plan has no global sort of event volume.
     Identical value to the per-event form: average tied ranks are
     constant within a tie group, so grouping by score loses nothing."""
-    ev = load_tables(spark, sf_dir)["events"]
-    scored = ev.select(
+    scored = events.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
         cents("value").alias("score"),
     )
@@ -3437,14 +3393,13 @@ GROUP BY day ORDER BY day_num
 
 
 @register("q208_interval_coverage", oracle=_COVERAGE_ORACLE)
-def q208(spark, sf_dir):
+def q208(events):
     """Interval-union coverage per day (utilization: total microseconds
     with >= 1 active session): q205's sweep line, integrating span
     lengths where the PRIOR point's running concurrency was positive.
     Union length without merging intervals — two window steps over
     2x|sessions| points, all-integer arithmetic."""
-    ev = load_tables(spark, sf_dir)["events"]
-    sessions = ev.groupBy("user_id", F.col("ts").cast("date").alias("day")).agg(
+    sessions = events.groupBy("user_id", F.col("ts").cast("date").alias("day")).agg(
         F.min(F.unix_micros("ts")).alias("t0"),
         (F.max(F.unix_micros("ts")) + 1).alias("t1"),
     )
@@ -3518,14 +3473,14 @@ GROUP BY dev.flag ORDER BY flag
 
 
 @register("q209_mad_outliers", oracle=_MAD_ORACLE)
-def q209(spark, sf_dir):
+def q209(lineitem):
     """Robust outlier detection via Median Absolute Deviation — immune
     to the outliers themselves (unlike q154's mean/std z-score; this
     completes the robust pair). Two grouped medians (floor-truncated,
     q80 recipe) broadcast back; the 3-sigma-equivalent cut |x-med| >
     3*1.4826*MAD compares EXACT INTEGERS (k scaled to 14826/10000), so
     the boundary can't drift between engines."""
-    li = load_tables(spark, sf_dir)["lineitem"].where(F.col("l_orderkey") % 10 == 0)
+    li = lineitem.where(F.col("l_orderkey") % 10 == 0)
     c = li.select(
         F.col("l_returnflag").alias("flag"),
         cents("l_extendedprice").alias("v"),
@@ -3579,14 +3534,13 @@ FROM longest GROUP BY max_streak ORDER BY max_streak
 
 
 @register("q210_activity_streaks", oracle=_STREAKS_ORACLE)
-def q210(spark, sf_dir):
+def q210(events):
     """Longest consecutive-day activity streak per user — GAPS AND
     ISLANDS: day_number minus row_number is constant within a
     consecutive run, so streaks fall out of one window + one groupBy
     with no self-join or iteration. Runs on the DISTINCT (user, day)
     presence table, never on raw events."""
-    ev = load_tables(spark, sf_dir)["events"]
-    days = ev.select(
+    days = events.select(
         "user_id",
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
         .cast("bigint")
@@ -3627,16 +3581,15 @@ GROUP BY first_touch ORDER BY first_touch
 
 
 @register("q211_first_touch", oracle=_ATTRIB_ORACLE)
-def q211(spark, sf_dir):
+def q211(events):
     """First-touch attribution: each purchase's value credited to the
     channel (event type) that OPENED the user's day — one first_value
     window over (user, day) and a tiny rollup; the attribution model
     swap (last-touch, linear) is a one-line window change."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id", F.col("ts").cast("date")).orderBy(
         "ts", "event_id"
     )
-    touched = ev.select(
+    touched = events.select(
         "event_type",
         cents("value").alias("cents"),
         F.first("event_type").over(w).alias("first_touch"),
@@ -3675,15 +3628,14 @@ FROM unified GROUP BY event_type ORDER BY event_type
 
 
 @register("q212_union_by_name", oracle=_UNION_BY_NAME_ORACLE)
-def q212(spark, sf_dir):
+def q212(events):
     """Schema-reconciling union (unionByName + allowMissingColumns): a
     legacy feed lacking a column and a modern feed with different column
     ORDER unify by NAME — positional unionAll would silently misalign
     columns here (the classic multi-team ingest bug). Missing columns
     NULL-fill, proven by the per-branch aggregates."""
-    ev = load_tables(spark, sf_dir)["events"]
-    legacy = ev.where(F.col("event_id") % 2 == 0).select("event_id", "event_type")
-    modern = ev.where(F.col("event_id") % 2 == 1).select(
+    legacy = events.where(F.col("event_id") % 2 == 0).select("event_id", "event_type")
+    modern = events.where(F.col("event_id") % 2 == 1).select(
         "user_id", "event_id", "event_type"  # deliberately different order
     )
     unified = legacy.unionByName(modern, allowMissingColumns=True)
@@ -3714,14 +3666,14 @@ FROM per_type GROUP BY user_id ORDER BY user_id
 
 
 @register("q213_map_rollup", oracle=_MAP_ROLLUP_ORACLE)
-def q213(spark, sf_dir):
+def q213(events):
     """Map-shaped per-user rollup (the 'counts per category as one
     column' feature): encoded as a canonically SORTED 'k:v,...' string —
     engine-portable where native map types are not (map key order is
     engine-defined; the sorted encoding is hashable everywhere). Build:
     per-(user, type) aggregate, then sort_array over collected structs —
     both stages map-side combinable."""
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("user_id") % 50 == 0)
+    ev = events.where(F.col("user_id") % 50 == 0)
     per_type = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
     entries = per_type.groupBy("user_id").agg(
         F.array_join(
@@ -3767,12 +3719,12 @@ GROUP BY c.flag ORDER BY flag
 
 
 @register("q214_winsorize", oracle=_WINSOR_ORACLE)
-def q214(spark, sf_dir):
+def q214(lineitem):
     """Winsorization (clip to [p05, p95]) — the outlier treatment that
     keeps rows instead of dropping them (q154/q209 detect; this
     repairs). Floor-truncated integer percentile bounds broadcast back;
     clipping and the verification sums are pure integer ops."""
-    li = load_tables(spark, sf_dir)["lineitem"].where(F.col("l_orderkey") % 10 == 0)
+    li = lineitem.where(F.col("l_orderkey") % 10 == 0)
     c = li.select(
         F.col("l_returnflag").alias("flag"),
         cents("l_extendedprice").alias("v"),
@@ -3889,7 +3841,7 @@ ORDER BY vec_a, vec_b
 
 
 @register("q215_srp_lsh_cosine", oracle=_srp_oracle())
-def q215(spark, sf_dir):
+def q215(embeddings):
     """Random-hyperplane LSH (SRP) for embedding cosine — the third LSH
     family here (MinHash:Jaccard q44, SimHash:text q162, SRP:vectors):
     32 integer-coefficient hyperplanes (md5-derived, engine-identical)
@@ -3902,7 +3854,7 @@ def q215(spark, sf_dir):
     within constant-size sign buckets. The oracle derives the same
     bits from the same integer expression, so the n-adaptive parameter
     stays hash-gated."""
-    emb = load_tables(spark, sf_dir)["embeddings"].where(F.col("vec_id") % 2 == 0)
+    emb = embeddings.where(F.col("vec_id") % 2 == 0)
     q = emb.select(
         "vec_id",
         F.transform(
@@ -4037,15 +3989,14 @@ FROM per_session GROUP BY day ORDER BY day_num
 
 
 @register("q216_bounce_rate", oracle=_BOUNCE_ORACLE)
-def q216(spark, sf_dir):
+def q216(events):
     """Daily bounce rate: 30-minute-gap sessionization (the q81 lag+cumsum
     sessionizer) rolled up to single-event-session counts per day — the
     product-analytics KPI. One (user, ts) window shuffle, then
     session-level aggregates; integer counts throughout."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev_us = F.lag(F.unix_micros("ts")).over(w)
-    gaps = ev.select(
+    gaps = events.select(
         "user_id",
         "ts",
         "event_id",
@@ -4108,7 +4059,7 @@ FROM w GROUP BY part ORDER BY part
 
 
 @register("q217_time_decay_popularity", oracle=_DECAY_ORACLE)
-def q217(spark, sf_dir):
+def q217(lineitem):
     """Time-decayed popularity score (freshness-weighted revenue per
     part): half-life decay with a POWER-OF-TWO base per quarter,
     accumulated as the exact scaled integer SUM(cents << (30 - age_q))
@@ -4118,7 +4069,7 @@ def q217(spark, sf_dir):
     (cents ~2^24 x shift <=2^30 = 2^54); only the running sum needs the
     decimal widening. Age capped at 30 quarters so the largest shift
     stays bounded."""
-    li = load_tables(spark, sf_dir)["lineitem"].where(F.col("l_partkey") % 50 == 0)
+    li = lineitem.where(F.col("l_partkey") % 50 == 0)
     age_q = F.least(
         F.floor(
             F.datediff(F.lit("2001-12-31").cast("date"), F.col("l_shipdate").cast("date")) / 91
@@ -4168,16 +4119,15 @@ FROM ranked GROUP BY 1 ORDER BY cents DESC, nation
 
 
 @register("q218_topk_other", oracle=_TOPK_OTHER_ORACLE)
-def q218(spark, sf_dir):
+def q218(orders, customer, nation):
     """Top-5 nations by revenue with everything else folded into one
     OTHER row — the BI pattern that keeps totals reconciling (a bare
     top-k silently drops the tail). Rank with a unique tiebreak over
     the small aggregate, relabel, re-aggregate."""
-    t = load_tables(spark, sf_dir)
     rev = (
-        t["orders"]
-        .join(F.broadcast(t["customer"]), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("c_nationkey"))
+        orders
+        .join(F.broadcast(customer), F.col("c_custkey") == F.col("o_custkey"))
+        .join(F.broadcast(nation), F.col("n_nationkey") == F.col("c_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
@@ -4217,16 +4167,15 @@ ORDER BY k
 
 
 @register("q219_null_safe_join", oracle=_NULLSAFE_ORACLE)
-def q219(spark, sf_dir):
+def q219(events):
     """Null-safe equi-join (`eqNullSafe` / IS NOT DISTINCT FROM): NULL
     keys MATCH each other instead of vanishing — the semantics dimension
     a plain equi-join silently drops (dedup on nullable business keys
     needs exactly this). Scale shape: both sides pre-aggregate to
     per-key counts BEFORE the join, so the pair count is na*nb on
     |keys| rows — the join never materializes the cross-pair volume."""
-    ev = load_tables(spark, sf_dir)["events"]
     a = (
-        ev.where(F.col("event_id") % 2 == 0)
+        events.where(F.col("event_id") % 2 == 0)
         .groupBy(
             F.when(F.col("event_id") % 5 == 0, None)
             .otherwise(F.col("user_id") % 20)
@@ -4235,7 +4184,7 @@ def q219(spark, sf_dir):
         .agg(F.count("*").alias("na"))
     )
     b = (
-        ev.where(F.col("event_id") % 2 == 1)
+        events.where(F.col("event_id") % 2 == 1)
         .groupBy(
             F.when(F.col("event_id") % 7 == 0, None)
             .otherwise(F.col("user_id") % 20)
@@ -4269,19 +4218,18 @@ FROM norm GROUP BY lang ORDER BY lang
 
 
 @register("q220_text_normalize", oracle=_TEXTNORM_ORACLE)
-def q220(spark, sf_dir):
+def q220(documents):
     """Text-normalization pass (casefold → strip non-alnum → collapse
     whitespace → trim): the cleaning stage ahead of tokenization, kept
     to regex constructs with identical Java/RE2 semantics. Per-language
     audit counters verify the transform byte-for-byte (chars, spaces,
     fully-emptied docs)."""
-    d = load_tables(spark, sf_dir)["documents"]
     clean = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", " "), " +", " "
         )
     )
-    norm = d.select("lang", clean.alias("clean"))
+    norm = documents.select("lang", clean.alias("clean"))
     return (
         norm.groupBy("lang")
         .agg(
@@ -4320,15 +4268,14 @@ FROM dedup
 
 
 @register("q221_idempotent_ingest", oracle=_IDEMPOTENT_ORACLE)
-def q221(spark, sf_dir):
+def q221(events):
     """Idempotent-ingest audit: an at-least-once delivery (every 3rd
     event redelivered) collapses back to exactly-once by keying on the
     event id — one groupBy, with delivered/duplicate counters proving
     how much redelivery the dedup absorbed. The batch twin of the
     streaming dropDuplicatesWithinWatermark lane (q64), and the
     verification a pipeline runs after enabling retries."""
-    ev = load_tables(spark, sf_dir)["events"]
-    replayed = ev.unionAll(ev.where(F.col("event_id") % 3 == 0))
+    replayed = events.unionAll(events.where(F.col("event_id") % 3 == 0))
     dedup = replayed.groupBy("event_id").agg(
         cents(F.max("value")).alias("cents"),
         F.count("*").alias("seen"),
@@ -4365,17 +4312,16 @@ FROM days ORDER BY day_num
 
 
 @register("q222_order_backlog", oracle=_BACKLOG_ORACLE)
-def q222(spark, sf_dir):
+def q222(orders, lineitem):
     """Order backlog time series: cumulative opened-minus-shipped per day
     (the operational WIP metric). Both event streams aggregate to daily
     counts FIRST (the q198 aggregate-then-window rule), full-outer align
     on the day spine, one global cumsum over |days| rows."""
-    t = load_tables(spark, sf_dir)
     day = lambda c: F.datediff(F.col(c).cast("date"), F.lit("1970-01-01").cast("date")).cast("bigint")  # noqa: E731
-    opened = t["orders"].groupBy(day("o_orderdate").alias("d")).agg(
+    opened = orders.groupBy(day("o_orderdate").alias("d")).agg(
         F.count("*").alias("n_open")
     )
-    shipped = t["lineitem"].groupBy(day("l_shipdate").alias("d")).agg(
+    shipped = lineitem.groupBy(day("l_shipdate").alias("d")).agg(
         F.countDistinct("l_orderkey").alias("n_ship")
     )
     days = (
@@ -4420,19 +4366,18 @@ FROM ranked WHERE rn <= 3 ORDER BY col, rn
 
 
 @register("q223_frequent_values", oracle=_FREQ_PROFILE_ORACLE)
-def q223(spark, sf_dir):
+def q223(orders):
     """Frequent-value profiling (top-3 values per column with counts) —
     the q153 profile's categorical companion, the skew/anomaly signal a
     catalog shows per column. Columns unpivot into one (col, val)
     stream; a single aggregate + WindowGroupLimit top-3 per column."""
-    o = load_tables(spark, sf_dir)["orders"]
     cols = (
-        o.select(F.lit("o_orderstatus").alias("col"), F.col("o_orderstatus").alias("val"))
+        orders.select(F.lit("o_orderstatus").alias("col"), F.col("o_orderstatus").alias("val"))
         .unionAll(
-            o.select(F.lit("o_orderpriority"), F.col("o_orderpriority"))
+            orders.select(F.lit("o_orderpriority"), F.col("o_orderpriority"))
         )
         .unionAll(
-            o.select(
+            orders.select(
                 F.lit("order_year"),
                 F.year(F.col("o_orderdate").cast("date")).cast("string"),
             )
@@ -4466,14 +4411,13 @@ FROM events GROUP BY 1 ORDER BY category
 
 
 @register("q224_literal_map_lookup", oracle=_MAP_LOOKUP_ORACLE)
-def q224(spark, sf_dir):
+def q224(events):
     """Tiny static dimension as a LITERAL MAP expression — the join a
     100 TB plan should never run: a 4-entry enum lookup compiles into
     the scan projection (whole-stage codegen, zero exchange for the
     enrichment) instead of a broadcast join's build/probe machinery.
     The cutover point vs q05-style broadcast joins is a few thousand
     entries; below it, expressions win outright."""
-    ev = load_tables(spark, sf_dir)["events"]
     cat_map = F.create_map(
         F.lit("click"), F.lit("engagement"),
         F.lit("view"), F.lit("engagement"),
@@ -4481,7 +4425,7 @@ def q224(spark, sf_dir):
         F.lit("signup"), F.lit("acquisition"),
     )
     return (
-        ev.select(
+        events.select(
             F.coalesce(cat_map[F.col("event_type")], F.lit("other")).alias("category"),
             "user_id",
         )
@@ -4514,15 +4458,14 @@ FROM changes GROUP BY user_id ORDER BY user_id
 
 
 @register("q225_dedup_consecutive", oracle=_DEDUP_CONSEC_ORACLE)
-def q225(spark, sf_dir):
+def q225(events):
     """Consecutive-repeat compression (distinct-until-changed): keep only
     rows where the state CHANGED from the previous row per key — log
     compaction for state streams (a sensor emitting the same reading
     10^6 times stores once). One lag window; the survivor count is the
     true state-transition count."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
+    seq = events.select(
         "user_id",
         "event_id",
         "event_type",
@@ -4555,16 +4498,15 @@ FROM lineitem GROUP BY flag ORDER BY flag
 
 
 @register("q226_weighted_mean", oracle=_WMEAN_ORACLE)
-def q226(spark, sf_dir):
+def q226(lineitem):
     """Quantity-weighted mean price per flag — the weighted aggregate a
     plain AVG silently gets wrong. Both factor columns cast to DECIMAL
     BEFORE the product (CLAUDE.md rule: cast factors, not products), so
     the weighted sum is exact and one IEEE division finishes."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     qd = F.col("l_quantity").cast("decimal(18,2)")
     pd_ = F.col("l_extendedprice").cast("decimal(18,2)")
     return (
-        li.groupBy(F.col("l_returnflag").alias("flag"))
+        lineitem.groupBy(F.col("l_returnflag").alias("flag"))
         .agg(
             F.sum(qd).cast("double").alias("total_qty"),
             F.round(
@@ -4608,18 +4550,17 @@ FROM probs ORDER BY event_type
 
 
 @register("q227_distribution_drift", oracle=_DRIFT_ORACLE)
-def q227(spark, sf_dir):
+def q227(events):
     """Distribution drift between the first and last week of the month
     (per-type share shift; 0.5*sum(abs_drift) is the total variation
     distance) — the monitoring statistic behind data-drift alerts.
     Event volume touches one filtered aggregate; the comparison is
     |types| rows of exact-count-derived probabilities."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = F.when(F.col("ts").cast("date") < F.lit("2024-01-08").cast("date"), "early").when(
         F.col("ts").cast("date") >= F.lit("2024-01-24").cast("date"), "late"
     )
     counts = (
-        ev.select("event_type", w.alias("w"))
+        events.select("event_type", w.alias("w"))
         .where(F.col("w").isNotNull())
         .groupBy("w", "event_type")
         .agg(F.count("*").alias("c"))
@@ -4675,14 +4616,13 @@ FROM sums
 
 
 @register("q228_gini_concentration", oracle=_GINI_ORACLE)
-def q228(spark, sf_dir):
+def q228(orders):
     """Gini coefficient of customer revenue concentration — the
     inequality statistic behind 'whale' analyses, computed by the exact
     rank identity (no Lorenz-curve materialization): one sort over
     |customers| rows, two DECIMAL-exact sums, one scalar formula.
     Unique (cents, custkey) rank tiebreak keeps ranks engine-stable."""
-    o = load_tables(spark, sf_dir)["orders"]
-    rev = o.groupBy("o_custkey").agg(
+    rev = orders.groupBy("o_custkey").agg(
         F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
     )
     ranked = rev.select(
@@ -4736,7 +4676,7 @@ JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
 
 
 @register("q229_triangle_count", oracle=_TRIANGLE_ORACLE)
-def q229(spark, sf_dir):
+def q229(lineitem):
     """Triangle count over the co-purchase part graph via degree
     orientation: orient every canonical edge from its lower-(degree,id)
     endpoint, join out-neighborhoods pairwise per source, close the
@@ -4747,7 +4687,7 @@ def q229(spark, sf_dir):
     from ..operators.triangles import cooccurrence_edges, triangle_count
 
     li = (
-        load_tables(spark, sf_dir)["lineitem"]
+        lineitem
         .where(F.col("l_partkey") % 2 == 0)
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
     )
@@ -4785,13 +4725,12 @@ FROM r GROUP BY day ORDER BY day
 
 
 @register("q230_ohlc_bars", oracle=_OHLC_ORACLE)
-def q230(spark, sf_dir):
+def q230(events):
     """Daily OHLC bars over the event stream: open/close from
     row_number inside the (day) partition with the (ts, event_id)
     unique tiebreak, high/low/count from plain aggregates. One
     partitioned sort shuffle; collapses to |days| rows."""
-    ev = load_tables(spark, sf_dir)["events"]
-    c = ev.select(
+    c = events.select(
         F.col("ts").cast("date").alias("day"),
         "ts",
         "event_id",
@@ -4849,16 +4788,15 @@ FROM s ORDER BY nation
 
 
 @register("q231_trend_slope", oracle=_TREND_ORACLE)
-def q231(spark, sf_dir):
+def q231(orders, customer, nation):
     """Per-nation revenue trend: closed-form least-squares slope from
     exact integer moment sums (one broadcast-dim join + one hash
     aggregate — regression without iteration or a driver loop). Factors
     cast to DOUBLE only in the final per-group formula."""
-    t = load_tables(spark, sf_dir)
     f = (
-        t["orders"]
-        .join(F.broadcast(t["customer"]), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("c_nationkey"))
+        orders
+        .join(F.broadcast(customer), F.col("c_custkey") == F.col("o_custkey"))
+        .join(F.broadcast(nation), F.col("n_nationkey") == F.col("c_nationkey"))
         .select(
             F.col("n_name").alias("nation"),
             F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
@@ -4917,7 +4855,7 @@ SELECT doc_id, term, tfidf FROM ranked WHERE rn <= 3 ORDER BY doc_id, term
 
 
 @register("q232_tfidf_keywords", oracle=_TFIDF_ORACLE)
-def q232(spark, sf_dir):
+def q232(documents):
     """Top-3 TF-IDF keywords per document (corpus curation / retrieval
     feature): tf and df are two map-side-combinable aggregates over the
     exploded token stream, idf joins back on term, top-k is a
@@ -4926,13 +4864,12 @@ def q232(spark, sf_dir):
     engine-stable."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id", F.explode(T.tokens(F.col("text"))).alias("term")
     ).where(~F.col("term").isin(*T.STOPWORDS))
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").cast("bigint").alias("tf"))
     df = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
-    nd = d.agg(F.count("*").cast("bigint").alias("n"))
+    nd = documents.agg(F.count("*").cast("bigint").alias("n"))
     scored = (
         tf.join(df, "term")
         .crossJoin(F.broadcast(nd))
@@ -4996,15 +4933,14 @@ ORDER BY event_type, day
 
 
 @register("q233_seasonal_anomaly", oracle=_SEASONAL_ORACLE)
-def q233(spark, sf_dir):
+def q233(events):
     """Seasonal (day-of-week) anomaly detection on daily revenue per
     event type: two hash aggregates (daily totals, then per-(type, dow)
     exact moment sums) and one small join back — the baseline frame is
     |types| x 7 rows, broadcastable at any scale. z is rounded before
     the threshold so the flag set is engine-stable."""
-    ev = load_tables(spark, sf_dir)["events"]
     daily = (
-        ev.groupBy(
+        events.groupBy(
             "event_type", F.col("ts").cast("date").alias("day")
         ).agg(
             F.sum(cents("value")).cast("bigint").alias("cents")
@@ -5056,14 +4992,13 @@ FROM obs, tot ORDER BY digit
 
 
 @register("q234_benford_profile", oracle=_BENFORD_ORACLE)
-def q234(spark, sf_dir):
+def q234(orders):
     """Benford first-digit profile of order totals (fraud/data-quality
     forensics): one 9-group aggregate over the integer-cents leading
     digit, observed vs log10(1+1/d) expected frequency. Collapses to 9
     rows before any join."""
-    o = load_tables(spark, sf_dir)["orders"]
     obs = (
-        o.select(
+        orders.select(
             F.substring(cents("o_totalprice").cast("string"), 1, 1)
             .cast("int")
             .alias("digit")
@@ -5140,7 +5075,7 @@ ORDER BY event_type
 
 
 @register("q235_kmv_sketch", oracle=_KMV_ORACLE)
-def q235(spark, sf_dir):
+def q235(events):
     """KMV distinct-count sketch per event type + merged '__all__' row.
     Per-type k-smallest comes from a PARTITIONED window over the
     distinct (type, hash) stream; the global sketch uses sort+LIMIT
@@ -5148,8 +5083,7 @@ def q235(spark, sf_dir):
     volume). ROUND before the BIGINT cast (Spark truncates, DuckDB
     rounds). Deterministic end to end: md5 hashes, integer ranks, one
     IEEE division."""
-    ev = load_tables(spark, sf_dir)["events"]
-    h = ev.select(
+    h = events.select(
         "event_type",
         F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10)
         .cast("bigint")
@@ -5224,17 +5158,16 @@ WHERE rn = 1 ORDER BY component""",
 
 
 @register("q236_canonical_selection", oracle=_CANONICAL_ORACLE)
-def q236(spark, sf_dir):
+def q236(documents):
     """Canonical-document selection per near-dup cluster: LSH candidate
     pairs → pointer-doubling connected components → struct-argmax keeps
     the longest doc (smallest doc_id on ties) per component. The argmax
     is max(struct(n_chars, -doc_id)) — a partial-aggregatable hash
     aggregate, no per-component window sort, the same shape as q114's
     snapshot compaction."""
-    d = load_tables(spark, sf_dir)["documents"]
-    pairs = B.candidate_pairs(_minhash_corpus(d))
+    pairs = B.candidate_pairs(_minhash_corpus(documents))
     cc = connected_components(pairs.select("doc_a", "doc_b"))
-    joined = cc.join(d.select("doc_id", "n_chars"), "doc_id")
+    joined = cc.join(documents.select("doc_id", "n_chars"), "doc_id")
     m = F.max(F.struct(F.col("n_chars").alias("a"), (-F.col("doc_id")).alias("b")))
     return (
         joined.groupBy("component")
@@ -5277,15 +5210,14 @@ FROM per_user
 
 
 @register("q237_p95_of_p95", oracle=_P95P95_ORACLE)
-def q237(spark, sf_dir):
+def q237(events):
     """Two-level percentile SLA report: exact per-user p95 (level 1,
     event volume collapses on the uniform user key) then the
     distribution of those p95s over the |users| frame (level 2). The
     pattern behind 'p95 of per-tenant p95 latency' dashboards; floors
     per the q80/q180 determinism recipe."""
-    ev = load_tables(spark, sf_dir)["events"]
     per_user = (
-        ev.select("user_id", cents("value").alias("cents"))
+        events.select("user_id", cents("value").alias("cents"))
         .groupBy("user_id")
         .agg(F.floor(F.expr("percentile(cents, 0.95)")).cast("bigint").alias("p95"))
     )
@@ -5342,14 +5274,13 @@ GROUP BY 1, 2 ORDER BY exact_n DESC, user_id
 
 
 @register("q238_countmin_heavy_hitters", oracle=_CM_ORACLE)
-def q238(spark, sf_dir):
+def q238(events):
     """Count-min sketch build + heavy-hitter probe: the sketch is ONE
     map-side-combinable aggregate over (row, md5-bucket) — 4096 cells
     regardless of volume, the mergeable frequency summary a 100 TB
     pipeline ships between stages. The top-10 exact candidates probe it
     with a broadcast join; estimate = min over rows (one-sided error,
     visible next to the exact count)."""
-    ev = load_tables(spark, sf_dir)["events"]
     r = F.explode(F.sequence(F.lit(0), F.lit(_CM_ROWS - 1))).alias("r")
 
     def bucket(rcol, key):
@@ -5367,11 +5298,11 @@ def q238(spark, sf_dir):
         )
 
     cells = (
-        ev.select("user_id", r)
+        events.select("user_id", r)
         .groupBy("r", bucket(F.col("r"), F.col("user_id")).alias("bucket"))
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-    exact = ev.groupBy("user_id").agg(F.count("*").cast("bigint").alias("exact_n"))
+    exact = events.groupBy("user_id").agg(F.count("*").cast("bigint").alias("exact_n"))
     cand = (
         exact.orderBy(F.col("exact_n").desc(), "user_id")
         .limit(10)
@@ -5407,16 +5338,15 @@ GROUP BY 1 ORDER BY n DESC, path LIMIT 5
 
 
 @register("q239_path_trigrams", oracle=_PATHS_ORACLE)
-def q239(spark, sf_dir):
+def q239(events):
     """Top-5 three-step event paths per (user, day) visit: two LEAD
     windows inside the visit partition (uniformly keyed, never global),
     concat, one hash aggregate, TakeOrderedAndProject top-5 with the
     path string as the unique tiebreak."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id", F.col("ts").cast("date")).orderBy(
         "ts", "event_id"
     )
-    seq = ev.select(
+    seq = events.select(
         F.col("event_type").alias("a"),
         F.lead("event_type", 1).over(w).alias("b"),
         F.lead("event_type", 2).over(w).alias("c"),
@@ -5466,19 +5396,18 @@ FROM buckets, base b ORDER BY day_bucket
 
 
 @register("q240_conversion_survival", oracle=_SURVIVAL_ORACLE)
-def q240(spark, sf_dir):
+def q240(events):
     """Time-to-conversion survival curve: first click per user, first
     purchase at-or-after it (one shuffle join on the uniform user key),
     integer day buckets, cumulative conversion over the |buckets| frame
     with the clicker population broadcast. The retention/latency shape
     that never sorts event volume globally."""
-    ev = load_tables(spark, sf_dir)["events"]
     clicks = (
-        ev.where(F.col("event_type") == "click")
+        events.where(F.col("event_type") == "click")
         .groupBy("user_id")
         .agg(F.min(F.unix_micros("ts")).alias("tc"))
     )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
+    purchases = events.where(F.col("event_type") == "purchase").select(
         "user_id", F.unix_micros("ts").alias("t")
     )
     conv = (
@@ -5541,14 +5470,13 @@ ORDER BY bin
 
 
 @register("q241_woe_binning", oracle=_WOE_ORACLE)
-def q241(spark, sf_dir):
+def q241(events):
     """Weight-of-evidence decile encoding of the value column against
     the purchase label: exact positional bins come from the histogram
     ntile (operators/quantiles.exact_ntile_counts — no global sort of
     event volume), WOE/IV from the per-bin exact counts. Second
     consumer of the q206 machinery."""
-    ev = load_tables(spark, sf_dir)["events"]
-    scored = ev.select(
+    scored = events.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
         cents("value").alias("score"),
@@ -5600,13 +5528,12 @@ FROM per_dec ORDER BY decile
 
 
 @register("q242_calibration_curve", oracle=_CALIB_ORACLE)
-def q242(spark, sf_dir):
+def q242(events):
     """Calibration / reliability curve per score decile (mean predicted
     score vs observed positive rate) from the exact histogram ntile —
     event volume is never globally sorted; the per-tile score sums come
     out of the same boundary probe that resolves the tie split."""
-    ev = load_tables(spark, sf_dir)["events"]
-    scored = ev.select(
+    scored = events.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
         (
@@ -5660,7 +5587,7 @@ FROM moms ORDER BY dim
 
 
 @register("q244_embedding_dim_profile", oracle=_DIM_PROFILE_ORACLE)
-def q244(spark, sf_dir):
+def q244(embeddings):
     """Per-dimension embedding profile: posexplode the quantized vector
     (one pass, 64x fan-out of integers only — the float payload is
     dropped before the shuffle), exact integer moment sums per
@@ -5668,11 +5595,10 @@ def q244(spark, sf_dir):
     the oracle comment: the exact mean grid lands on double-ROUND tie
     midpoints, which diverged between engines at sf0.1). 64 output rows
     at any scale."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
     v = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 1000).cast("bigint") + 2000
     )
-    dims = emb.select(F.posexplode(v).alias("pos", "x")).select(
+    dims = embeddings.select(F.posexplode(v).alias("pos", "x")).select(
         (F.col("pos") + 1).cast("int").alias("dim"), "x"
     )
     moms = dims.groupBy("dim").agg(
@@ -5725,15 +5651,14 @@ FROM merged GROUP BY action ORDER BY action
 
 
 @register("q245_scd1_merge_audit", oracle=_SCD1_ORACLE)
-def q245(spark, sf_dir):
+def q245(customer):
     """SCD Type-1 MERGE audit: one full-outer join on the dimension key
     classifies the incoming batch (inserted / updated / unchanged) and
     checksums the post-merge values — the exactly-what-changed report a
     MERGE INTO emits, with no storage engine required. Keys absent from
     the batch keep their old value (COALESCE), matching MERGE's
     WHEN-NOT-MATCHED-BY-SOURCE default."""
-    c = load_tables(spark, sf_dir)["customer"]
-    dim = c.select(
+    dim = customer.select(
         F.col("c_custkey").alias("k"),
         cents("c_acctbal").alias("cents"),
     )
@@ -5789,7 +5714,7 @@ GROUP BY e.day ORDER BY day
 
 
 @register("q246_late_data_patch", oracle=_LATE_PATCH_ORACLE)
-def q246(spark, sf_dir):
+def q246(events):
     """Incremental late-data patching of a daily rollup: the base
     rollup (on-time events) keeps its untouched days via a broadcast
     ANTI join against the affected-day list; only affected days are
@@ -5797,7 +5722,7 @@ def q246(spark, sf_dir):
     between reprocessing a handful of partitions and the whole table —
     and the oracle is the full recompute, so the equivalence is
     hash-proven."""
-    ev = load_tables(spark, sf_dir)["events"].select(
+    ev = events.select(
         F.col("ts").cast("date").alias("day"),
         "event_id",
         cents("value").alias("cents"),
@@ -5846,15 +5771,14 @@ ORDER BY user_id, event_a, event_b
 
 
 @register("q247_double_charge", oracle=_DOUBLE_CHARGE_ORACLE)
-def q247(spark, sf_dir):
+def q247(events):
     """Duplicate-charge audit: purchases by the same user for the same
     amount within +/-5 minutes. The join key is (user, cents) — an
     equi-join whose candidates are confined to identical-amount groups
     per user — with the time window as a post-filter; the canonical
     event_id ordering emits each pair once. gap may be negative-ordered
     in time (a<b is by id), so the bound is two-sided."""
-    ev = load_tables(spark, sf_dir)["events"]
-    p = ev.where(F.col("event_type") == "purchase").select(
+    p = events.where(F.col("event_type") == "purchase").select(
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("t"),
@@ -5927,18 +5851,17 @@ FROM b GROUP BY month ORDER BY month
 
 
 @register("q248_business_day_latency", oracle=_BUSDAY_ORACLE)
-def q248(spark, sf_dir):
+def q248(lineitem, orders):
     """Order→first-line-ship latency in business days, averaged per
     order month: weekday arithmetic on epoch days ((d+3)%7 => 0=Monday;
     epoch day 0 = Thursday), all integer, no UDF or calendar dimension.
     One broadcast-free equi-join on the order key + one aggregate."""
-    t = load_tables(spark, sf_dir)
     li = (
-        t["lineitem"]
+        lineitem
         .where(F.col("l_linenumber") == 1)
         .select("l_orderkey", F.col("l_shipdate").cast("date").alias("ship"))
         .join(
-            t["orders"].select(
+            orders.select(
                 "o_orderkey", F.col("o_orderdate").cast("date").alias("odate")
             ),
             F.col("o_orderkey") == F.col("l_orderkey"),

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..functions import vectors as V
 from ..functions.exact import cents, cosine_duck, rhu
-from ..io import load_tables
 from ..operators import banding as B
 from ..operators.dedup_pipeline import CC_PARTITIONS, connected_components
 from ..session import pin, scoped_confs
@@ -79,14 +78,14 @@ FROM f WHERE kind = 1 ORDER BY o_orderkey
 
 
 @register("q249_pit_feature_join", oracle=_PIT_ORACLE)
-def q249(spark, sf_dir):
+def q249(orders):
     """Point-in-time-correct feature join: per-order customer features
     (prior order count + prior spend in cents) from month-end snapshots
     effective the FOLLOWING month, so same-month activity never leaks
     into the feature. Snapshots and events are unioned and carried
     forward with last(ignorenulls) over one customer-partitioned window
     — no range join, one shuffle key end to end."""
-    o = load_tables(spark, sf_dir)["orders"].select(
+    o = orders.select(
         "o_orderkey",
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
@@ -166,7 +165,7 @@ FROM r WHERE rn = 1 ORDER BY name
 
 
 @register("q250_fuzzy_name_match", oracle=_FUZZY_ORACLE)
-def q250(spark, sf_dir):
+def q250(part):
     """Fuzzy dimension matching: nearest-neighbor part name by exact
     Levenshtein distance over the distinct-name dimension, via the
     length-banded bounded-pair plan (operators/editdist.py — the
@@ -176,7 +175,7 @@ def q250(spark, sf_dir):
     makes the argmin engine-independent."""
     from ..operators.editdist import nearest_name_match
 
-    d = load_tables(spark, sf_dir)["part"].select(
+    d = part.select(
         F.col("p_name").alias("name")
     )
     return nearest_name_match(d).orderBy("name")
@@ -208,12 +207,12 @@ FROM s ORDER BY doc_id, chunk_idx
 
 
 @register("q251_char_chunking", oracle=_CHUNK_ORACLE)
-def q251(spark, sf_dir):
+def q251(documents):
     """Overlapping fixed-size character chunking (vs q115's token
     windows): sequence+posexplode generates chunk starts JVM-side, the
     chunk hash is the cross-engine md5 anchor. Stride 150 / size 200
     gives a 50-char overlap so no boundary content is lost to a split."""
-    d = load_tables(spark, sf_dir)["documents"].select(
+    d = documents.select(
         "doc_id", "text", F.length("text").alias("n")
     )
     s = d.select(
@@ -283,14 +282,13 @@ FROM p GROUP BY vec_id ORDER BY vec_id
 
 
 @register("q252_random_projection", oracle=_RP_ORACLE)
-def q252(spark, sf_dir):
+def q252(spark, embeddings):
     """8-d signed random projection of the embedding corpus. The +/-1
     coefficients come from md5 parity so both engines derive the SAME
     matrix; products keep decimal factors x integer signs, so the sum is
     exact and order-free. Output is one row per vector (pivot on the
     projection index)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    e = emb.select(
+    e = embeddings.select(
         "vec_id", F.posexplode(F.col("embedding")).alias("i", "vf")
     ).select(
         "vec_id",
@@ -302,7 +300,7 @@ def q252(spark, sf_dir):
     # distinct-over-explode alternative re-scans the whole corpus just to
     # learn "64"
     dims = (
-        emb.select(F.size("embedding").alias("d"))
+        embeddings.select(F.size("embedding").alias("d"))
         .limit(1)
         .select(F.explode(F.sequence(F.lit(0), F.col("d") - 1)).alias("i"))
         .select(F.col("i").cast("bigint").alias("i"))
@@ -426,15 +424,14 @@ def _bfs_loop(edges, max_depth: int):
 
 
 @register("q253_bfs_hops", oracle=_BFS_ORACLE)
-def q253(spark, sf_dir):
+def q253(documents):
     """Hop-distance histogram from dup-cluster roots over the MinHash-LSH
     candidate graph: component roots come from connected_components
     (pointer doubling), levels from frontier BFS. The capped recursive-
     walk oracle enumerates (node, dist<=20) states and takes the min —
     exact for every reached node."""
-    d = load_tables(spark, sf_dir)["documents"]
     pairs = (
-        B.candidate_pairs(_minhash_corpus(d))
+        B.candidate_pairs(_minhash_corpus(documents))
         .select("doc_a", "doc_b")
         .transform(pin)
     )
@@ -477,18 +474,17 @@ FROM r WHERE rnk <= 3 ORDER BY qid, rnk
 
 
 @register("q254_hard_negatives", oracle=_HARDNEG_ORACLE)
-def q254(spark, sf_dir):
+def q254(embeddings):
     """Label-constrained exact top-k cosine: hard-negative mining for
     contrastive training. Broadcast query side carries precomputed norms
     (V.cosine_pre); the per-query top-3 ranks on the rounded sim."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    q = e.where(F.col("vec_id") % 1000 == 0).select(
+    q = embeddings.where(F.col("vec_id") % 1000 == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),
         F.col("embedding").alias("qe"),
         V.norm(F.col("embedding")).alias("qn"),
     )
-    s = e.join(F.broadcast(q), F.col("label") != F.col("qlabel")).select(
+    s = embeddings.join(F.broadcast(q), F.col("label") != F.col("qlabel")).select(
         "qid",
         "vec_id",
         V.cosine_pre(F.col("embedding"), F.col("qe"), F.col("qn")).alias("sim"),
@@ -544,13 +540,12 @@ FROM r GROUP BY doc_id ORDER BY doc_id
 
 
 @register("q255_passage_dedup", oracle=_PASSAGE_ORACLE)
-def q255(spark, sf_dir):
+def q255(documents):
     """Per-document passage-level dup profile: 20-word aligned blocks,
     md5 block hashes, first occurrence (by doc_id, block idx) keeps the
     block, every later identical block counts as duplicated."""
-    d = load_tables(spark, sf_dir)["documents"]
-    corpus = d.select("doc_id", "text").unionAll(
-        d.where(F.col("doc_id") % 7 == 0).select(
+    corpus = documents.select("doc_id", "text").unionAll(
+        documents.where(F.col("doc_id") % 7 == 0).select(
             (F.col("doc_id") + 1000000).alias("doc_id"), "text"
         )
     )
@@ -604,10 +599,10 @@ ORDER BY day
 
 
 @register("q256_cumulative_distinct", oracle=_CUMU_ORACLE)
-def q256(spark, sf_dir):
+def q256(events):
     """Cumulative distinct users per day via first-seen decomposition —
     the scale-safe form of a running COUNT(DISTINCT)."""
-    ev = load_tables(spark, sf_dir)["events"].select(
+    ev = events.select(
         "user_id", F.to_date("ts").alias("day")
     )
     fs = ev.groupBy("user_id").agg(F.min("day").alias("first_day"))
@@ -666,14 +661,13 @@ FROM cum, t GROUP BY t.n1, t.n2
 
 
 @register("q257_ks_statistic", oracle=_KS_ORACLE)
-def q257(spark, sf_dir):
+def q257(customer, orders):
     """Two-sample KS distance via a distributed CDF: bucketed prefix-sum
     decomposition keeps every sort partition bucket-local; the sup is
     exact integer arithmetic, reported in micro-units (round-half-up)."""
-    t = load_tables(spark, sf_dir)
-    seg = t["customer"].select("c_custkey", "c_mktsegment")
+    seg = customer.select("c_custkey", "c_mktsegment")
     s = (
-        t["orders"]
+        orders
         .join(F.broadcast(seg), F.col("c_custkey") == F.col("o_custkey"))
         .where(F.col("c_mktsegment").isin("BUILDING", "MACHINERY"))
         .select(
@@ -766,19 +760,18 @@ FROM b
 
 
 @register("q258_anova_f", oracle=_ANOVA_ORACLE)
-def q258(spark, sf_dir):
+def q258(orders, customer, nation):
     """One-way ANOVA across customer regions from exact sufficient
     statistics; the only FP-order-sensitive reduction runs through an
     ordered 5-row window so the engines agree to the last ulp."""
-    t = load_tables(spark, sf_dir)
     s = (
-        t["orders"]
+        orders
         .join(
-            F.broadcast(t["customer"].select("c_custkey", "c_nationkey")),
+            F.broadcast(customer.select("c_custkey", "c_nationkey")),
             F.col("c_custkey") == F.col("o_custkey"),
         )
         .join(
-            F.broadcast(t["nation"].select("n_nationkey", "n_regionkey")),
+            F.broadcast(nation.select("n_nationkey", "n_regionkey")),
             F.col("n_nationkey") == F.col("c_nationkey"),
         )
         .select(
@@ -852,12 +845,12 @@ FROM m ORDER BY event_type
 
 
 @register("q260_mergeable_moments", oracle=_MOMENTS_ORACLE)
-def q260(spark, sf_dir):
+def q260(events):
     """Mean/variance per event type through per-day mergeable partials
     (n, sum, sumsq in exact micro-units) merged by a second aggregate —
     hash-identical to the oracle's direct single pass, proving the merge
     is lossless."""
-    ev = load_tables(spark, sf_dir)["events"].select(
+    ev = events.select(
         "event_type",
         F.to_date("ts").alias("day"),
         (F.col("value").cast("decimal(18,6)") * 1000000)
@@ -865,12 +858,12 @@ def q260(spark, sf_dir):
         .alias("micros"),
     )
     md = F.col("micros").cast("decimal(19,0)")
-    part = ev.groupBy("event_type", "day").agg(
+    partials = ev.groupBy("event_type", "day").agg(
         F.count("*").alias("pn"),
         F.sum("micros").alias("ps"),
         F.sum(md * md).alias("pq"),
     )
-    m = part.groupBy("event_type").agg(
+    m = partials.groupBy("event_type").agg(
         F.sum("pn").cast("bigint").alias("n"),
         F.sum("ps").cast("bigint").alias("s"),
         F.sum("pq").cast("decimal(38,0)").alias("q"),
@@ -919,12 +912,11 @@ ORDER BY doc_a, doc_b
 
 
 @register("q259_containment_join", oracle=_CONTAIN_ORACLE)
-def q259(spark, sf_dir):
+def q259(documents):
     """Directed shingle containment on the LSH candidate feed: one
     persisted tokenize+shingle pass serves signatures and verification
     (q46's sharing pattern); scores are exact integers in 1e-4 units."""
-    d = load_tables(spark, sf_dir)["documents"]
-    _sig, pairs = B.candidate_grams(_minhash_corpus(d))
+    _sig, pairs = B.candidate_grams(_minhash_corpus(documents))
     out = (
         pairs.withColumn("k", F.size(F.array_intersect(F.col("ga"), F.col("gb"))))
         .withColumn("na", F.size("ga"))
@@ -981,12 +973,12 @@ FROM a GROUP BY user_id ORDER BY user_id
 
 
 @register("q261_abandoned_clicks", oracle=_ABANDON_ORACLE)
-def q261(spark, sf_dir):
+def q261(events):
     """7-day abandonment per user, join-free: next-purchase carry-back
     through one descending user window; rate round-half-up in integer
     micro-units."""
     e = (
-        load_tables(spark, sf_dir)["events"]
+        events
         .where(F.col("event_type").isin("click", "purchase"))
         .select(
             "user_id",
@@ -1071,13 +1063,12 @@ FROM r WHERE rnk <= 3 ORDER BY user_id, rnk
 
 
 @register("q262_negative_sampling", oracle=_NEGSAMPLE_ORACLE)
-def q262(spark, sf_dir):
+def q262(spark, events):
     """Hash-deterministic negative sampling: md5 slots -> candidate
     items, observed interactions removed by anti-join, top-3 in slot
     order."""
-    ev = load_tables(spark, sf_dir)["events"]
     inter = (
-        ev.where(F.col("event_type") == "purchase")
+        events.where(F.col("event_type") == "purchase")
         .select(
             "user_id",
             F.get_json_object("props", "$.k").cast("bigint").alias("item"),
@@ -1154,13 +1145,12 @@ ORDER BY src_a, src_b
 
 
 @register("q263_source_sketch_overlap", oracle=_SRC_SKETCH_ORACLE)
-def q263(spark, sf_dir):
+def q263(documents):
     """Pairwise source-overlap estimates from one-pass merged MinHash
     sketches (min-of-mins), compared as exact integer match counts."""
-    d = load_tables(spark, sf_dir)["documents"]
     # plain explode (not _outer): a source whose docs all shingle to
     # empty must vanish on BOTH engines (the oracle's UNNEST drops it)
-    sh = d.select(
+    sh = documents.select(
         "source", F.explode(T.shingles(T.tokens(F.col("text")), 3)).alias("s")
     ).select("source", T.shingle_hash60(F.col("s")).alias("h"))
     sig = sh.groupBy("source").agg(
@@ -1207,15 +1197,14 @@ GROUP BY event_type ORDER BY event_type
 
 
 @register("q264_python_datasource", oracle=_PYDS_ORACLE)
-def q264(spark, sf_dir):
+def q264(spark, events):
     """Custom format round-trip through the Spark 4 Python Data Source
     API: write `event_id|user_id|event_type|cents` lines, scan them back
     with per-file splits executing in Python workers, aggregate."""
     from ..scratch import scratch_dir
     from ..sources import pyds
 
-    ev = load_tables(spark, sf_dir)["events"]
-    sl = ev.where(F.col("event_id") % 20 == 0).select(
+    sl = events.where(F.col("event_id") % 20 == 0).select(
         F.concat_ws(
             "|",
             "event_id",
@@ -1258,10 +1247,9 @@ ORDER BY n.n_name, l.bal2 DESC, l.c_name
 
 
 @register("q265_lateral_topk", oracle=_LATERAL_SQL)
-def q265(spark, sf_dir):
+def q265(spark):
     """Correlated LATERAL (ORDER BY + LIMIT) top-2 balances per nation —
     same SQL text runs on both engines; unique (bal2, name) tiebreak."""
-    load_tables(spark, sf_dir)
     return spark.sql(_LATERAL_SQL)
 
 
@@ -1285,10 +1273,9 @@ ORDER BY l_returnflag, l_linestatus
 
 
 @register("q266_pipe_sql", oracle=_PIPE_ORACLE)
-def q266(spark, sf_dir):
+def q266(spark):
     """Pipe-syntax aggregation with a named parameter for the shipdate
     cutoff — Spark 4 SQL surface; decimal-cast factor sums as always."""
-    load_tables(spark, sf_dir)
     return spark.sql(
         """
         FROM lineitem
@@ -1327,10 +1314,9 @@ FROM src GROUP BY 1 ORDER BY lkey
 
 
 @register("q267_collated_groupby", oracle=_COLLATE_ORACLE)
-def q267(spark, sf_dir):
+def q267(spark):
     """GROUP BY under UTF8_LCASE collation (Spark 4 surface): binary-
     distinct case variants counted inside each case-insensitive group."""
-    load_tables(spark, sf_dir)
     return spark.sql(
         """
         WITH src AS (
@@ -1379,11 +1365,10 @@ FROM u ORDER BY user_id
 
 
 @register("q268_try_arithmetic", oracle=_TRYDIV_ORACLE)
-def q268(spark, sf_dir):
+def q268(events):
     """try_divide under ANSI mode: NULL instead of a thrown job on
     zero denominators; raw bit-identical IEEE ratios of exact integers."""
-    ev = load_tables(spark, sf_dir)["events"]
-    u = ev.groupBy("user_id").agg(
+    u = events.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("n_events"),
         F.sum((F.col("event_type") == "purchase").cast("long"))
         .cast("bigint")
@@ -1467,18 +1452,17 @@ ORDER BY d.qid
 
 
 @register("q269_ndcg_at_k", oracle=_NDCG_ORACLE)
-def q269(spark, sf_dir):
+def q269(embeddings):
     """NDCG@10 over label-relevance retrieval: broadcast query side,
     rounded-cosine ranking, integer-literal log weights — the metric is
     exact integer arithmetic, reported round-half-up in micro-units."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    q = e.where(F.col("vec_id") % 1000 == 0).select(
+    q = embeddings.where(F.col("vec_id") % 1000 == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),
         F.col("embedding").alias("qe"),
         V.norm(F.col("embedding")).alias("qn"),
     )
-    s = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
+    s = embeddings.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
         "qid",
         "qlabel",
         "vec_id",
@@ -1494,7 +1478,7 @@ def q269(spark, sf_dir):
         .cast("bigint")
         .alias("dcg_micro")
     )
-    lc = e.groupBy("label").agg(F.count("*").alias("cnt"))
+    lc = embeddings.groupBy("label").agg(F.count("*").alias("cnt"))
     nr = (
         q.join(F.broadcast(lc), F.col("label") == F.col("qlabel"))
         .select("qid", (F.col("cnt") - 1).cast("bigint").alias("n_rel"))

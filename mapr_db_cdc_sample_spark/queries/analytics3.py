@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..functions import vectors as V
 from ..functions.exact import cents, cosine_duck, floor_rhu, rhu
-from ..io import load_tables
 from ..session import pin
 from ..operators.dedup_pipeline import connected_components
 from ..operators.kcore import k_core
@@ -40,9 +39,8 @@ WITH daily AS MATERIALIZED (
 """
 
 
-def _daily_cents(spark, sf_dir):
-    o = load_tables(spark, sf_dir)["orders"]
-    return o.groupBy(F.col("o_orderdate").alias("day")).agg(
+def _daily_cents(orders):
+    return orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
     )
 
@@ -92,12 +90,12 @@ ORDER BY lag
 
 
 @register("q270_autocorrelation", oracle=_ACF_ORACLE)
-def q270(spark, sf_dir):
+def q270(orders):
     """ACF lags 1..7 of daily revenue in exact integer arithmetic (see
     oracle comment). One aggregate builds the |days| series; ONE ordered
     window pass produces all 7 lag columns; stack+groupBy computes the
     per-lag cross moments map-side-combinably."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     d38 = "decimal(38,0)"
     base = daily.agg(
         F.count("*").cast(d38).alias("n"),
@@ -177,11 +175,11 @@ ORDER BY day
 
 
 @register("q271_bollinger_breakout", oracle=_BOLL_ORACLE)
-def q271(spark, sf_dir):
+def q271(orders):
     """Trailing 7-day Bollinger breakout flags with the sqrt-free
     integer band test (oracle comment). One day-ordered window above
     the daily aggregate produces count/sum/sum-of-squares together."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     d38 = "decimal(38,0)"
     w = Window.orderBy("day").rowsBetween(-6, 0)
     c38 = F.col("cents").cast(d38)
@@ -234,12 +232,11 @@ ORDER BY n DESC, pair LIMIT 20
 
 
 @register("q272_bpe_pair_stats", oracle=_BPE_PAIRS_ORACLE)
-def q272(spark, sf_dir):
+def q272(documents):
     """Top-20 BPE merge candidates (adjacent in-token char pairs).
     Both explodes are JVM generators; the count is partial-aggregable;
     the (n DESC, pair) sort has a unique tiebreaker under LIMIT."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(F.explode(T.tokens(F.col("text"))).alias("tok"))
+    toks = documents.select(F.explode(T.tokens(F.col("text"))).alias("tok"))
     pairs = toks.select(
         F.explode(
             F.when(
@@ -280,11 +277,10 @@ FROM f GROUP BY fold ORDER BY fold
 
 
 @register("q273_cv_folds", oracle=_CV_FOLDS_ORACLE)
-def q273(spark, sf_dir):
+def q273(documents):
     """Deterministic md5 5-fold split with per-fold balance stats.
     fold is a pure projection (no shuffle before the 5-group agg);
     conv(substr(md5)) is the repo's cross-engine hash anchor."""
-    d = load_tables(spark, sf_dir)["documents"]
     fold = F.pmod(
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast(
             "long"
@@ -292,7 +288,7 @@ def q273(spark, sf_dir):
         F.lit(5),
     ).cast("int")
     return (
-        d.select(fold.alias("fold"), "n_chars")
+        documents.select(fold.alias("fold"), "n_chars")
         .groupBy("fold")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
@@ -334,12 +330,11 @@ FROM r ORDER BY source, n_chars
 
 
 @register("q274_quantile_normalize", oracle=_QNORM_ORACLE)
-def q274(spark, sf_dir):
+def q274(documents):
     """Within-source empirical-CDF normalization of document length
     (oracle comment has the plan shape: group-collapse, then
     source-partitioned windows — no global sort, no SinglePartition)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    g = d.groupBy("source", "n_chars").agg(F.count("*").alias("c"))
+    g = documents.groupBy("source", "n_chars").agg(F.count("*").alias("c"))
     wc = Window.partitionBy("source").orderBy("n_chars")
     wt = Window.partitionBy("source")
     r = g.select(
@@ -385,10 +380,10 @@ ORDER BY dim_i, dim_j
 """
 
 
-def _gram_partials(spark, sf_dir):
+def _gram_partials(embeddings):
     """(dim_i, dim_j, gram_q) partial Gram rows, one upper triangle per
     Arrow batch — shared by q275 (exact sum) and q276 (PCA)."""
-    emb = load_tables(spark, sf_dir)["embeddings"].select(
+    emb = embeddings.select(
         F.transform(
             "embedding", lambda x: F.round(x.cast("double") * 1000).cast("long")
         ).alias("v")
@@ -415,11 +410,11 @@ def _gram_partials(spark, sf_dir):
 
 
 @register("q275_gram_matrix", oracle=_GRAM_ORACLE)
-def q275(spark, sf_dir):
+def q275(embeddings):
     """Distributed exact Gram matrix (see oracle comment): per-batch
     numpy partials via mapInPandas, merged by a 2080-group integer sum."""
     return (
-        _gram_partials(spark, sf_dir)
+        _gram_partials(embeddings)
         .groupBy("dim_i", "dim_j")
         .agg(F.sum("gram_q").cast("bigint").alias("gram_q"))
         .orderBy("dim_i", "dim_j")
@@ -437,12 +432,12 @@ def q275(spark, sf_dir):
 # (tests/test_properties.py) checks against direct covariance of the
 # collected vectors at sf0.001.
 @register("q276_pca_explained", tags=("approx",))
-def q276(spark, sf_dir):
+def q276(spark, embeddings):
     import numpy as np
 
-    gram_rows = q275(spark, sf_dir).collect()  # 2080 rows, bounded
+    gram_rows = q275(embeddings).collect()  # 2080 rows, bounded
     sums = (
-        load_tables(spark, sf_dir)["embeddings"]
+        embeddings
         .select(
             F.posexplode(
                 F.transform(
@@ -504,9 +499,9 @@ ORDER BY name_a, name_b
 
 
 @register("q277_sorted_neighborhood", oracle=_SNM_ORACLE)
-def q277(spark, sf_dir):
+def q277(part):
     """Sorted-neighborhood candidate pairs (window w=3, dist <= 4)."""
-    d = load_tables(spark, sf_dir)["part"].select(
+    d = part.select(
         F.col("p_name").alias("name")
     ).distinct()
     w = Window.orderBy("name")
@@ -554,10 +549,9 @@ FROM r WHERE rn <= 5 ORDER BY source, n_tokens DESC, bucket
 
 
 @register("q278_feature_hashing", oracle=_FEATHASH_ORACLE)
-def q278(spark, sf_dir):
+def q278(documents):
     """Hashing-trick bucket histogram, top-5 buckets per source."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select("source", F.explode(T.tokens(F.col("text"))).alias("tok"))
+    toks = documents.select("source", F.explode(T.tokens(F.col("text"))).alias("tok"))
     b = toks.select(
         "source", F.pmod(T.h16(F.col("tok")), F.lit(256)).alias("bucket")
     ).groupBy("source", "bucket").agg(F.count("*").alias("c"))
@@ -610,12 +604,11 @@ ORDER BY n DESC, w1, w2 LIMIT 30
 
 
 @register("q279_kn_bigram_lm", oracle=_KN_ORACLE)
-def q279(spark, sf_dir):
+def q279(documents):
     """Kneser-Ney bigram probabilities (oracle comment has the exact
     quarter-count identity). One token pass builds bigram types; all
     context statistics are windows over the TYPE frame."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(T.tokens(F.col("text")).alias("l"))
+    toks = documents.select(T.tokens(F.col("text")).alias("l"))
     bg = (
         toks.select(F.explode(T.shingles(F.col("l"), 2)).alias("s"))
         .select(
@@ -692,19 +685,19 @@ ORDER BY e.vec_id
 
 
 @register("q280_semantic_dedup", oracle=_SEMDEDUP_ORACLE)
-def q280(spark, sf_dir):
+def q280(embeddings):
     """SemDeDup keep/drop decisions (oracle comment). Pairs from q51's
     bucketed stage; groups from pointer-doubling CC; singletons keep
     themselves via the left join."""
     from .llm import q51
 
-    pairs = q51(spark, sf_dir).select(
+    pairs = q51(embeddings).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
     cc = connected_components(pairs).select(
         F.col("doc_id").alias("vec_id"), F.col("component").alias("rep0")
     )
-    e = load_tables(spark, sf_dir)["embeddings"].select("vec_id")
+    e = embeddings.select("vec_id")
     return (
         e.join(cc, "vec_id", "left")
         .select(
@@ -756,11 +749,10 @@ ORDER BY b.source, pair_rank
 
 
 @register("q281_preference_pairs", oracle=_PREF_ORACLE)
-def q281(spark, sf_dir):
+def q281(documents):
     """Top-vs-bottom preference pairs per source (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     tk = T.tokens(F.col("text"))
-    q = d.select("source", "doc_id", tk.alias("tk")).where(F.size("tk") > 0)
+    q = documents.select("source", "doc_id", tk.alias("tk")).where(F.size("tk") > 0)
     q = q.select(
         "source",
         "doc_id",
@@ -831,9 +823,8 @@ FROM s GROUP BY source, lang ORDER BY source, lang
 
 
 @register("q283_stratified_split", oracle=_STRAT_ORACLE)
-def q283(spark, sf_dir):
+def q283(documents):
     """Stratified deterministic split audit (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     is_test = F.when(
         F.pmod(
             F.conv(
@@ -845,7 +836,7 @@ def q283(spark, sf_dir):
         F.lit(1),
     ).otherwise(F.lit(0))
     return (
-        d.select("source", "lang", is_test.alias("is_test"))
+        documents.select("source", "lang", is_test.alias("is_test"))
         .groupBy("source", "lang")
         .agg(
             F.sum(1 - F.col("is_test")).cast("bigint").alias("n_train"),
@@ -875,15 +866,14 @@ def q283(spark, sf_dir):
 # engine-deterministic. No SQL oracle (greedy argmax is iterative);
 # the property twin replays the same greedy over DuckDB-computed sims.
 @register("q282_mmr_rerank", tags=("approx",))
-def q282(spark, sf_dir):
+def q282(spark, embeddings):
     from ..functions import vectors as V
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    qv = e.orderBy("vec_id").limit(1).select(
+    qv = embeddings.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
     scored = (
-        e.crossJoin(F.broadcast(qv))
+        embeddings.crossJoin(F.broadcast(qv))
         .where(F.col("vec_id") != F.col("qid"))
         .select("vec_id", "embedding", V.cosine(F.col("embedding"), F.col("qe")).alias("rel"))
         .orderBy(F.col("rel").desc(), "vec_id")
@@ -953,7 +943,7 @@ FROM r WHERE rank <= 5 ORDER BY vec_a, rank
 
 
 @register("q286_knn_graph", oracle=_KNN_ORACLE)
-def q286(spark, sf_dir):
+def q286(embeddings):
     """Same-label k-NN graph, k=5, via the distributed block-matmul
     kernel (operators/similarity.knn_block_topk, same_label_only):
     each (label × anchor-block × candidate-block) cell is one NumPy
@@ -965,8 +955,7 @@ def q286(spark, sf_dir):
     unchanged all-pairs oracle proves the kernel exact."""
     from ..operators.similarity import knn_block_topk
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    topk = knn_block_topk(e, k=5, same_label_only=True)
+    topk = knn_block_topk(embeddings, k=5, same_label_only=True)
     w = Window.partitionBy("anchor").orderBy(F.col("sim").desc(), "neighbor")
     return (
         topk.withColumn("rank", F.row_number().over(w))
@@ -1008,11 +997,11 @@ GROUP BY dow7, n, s ORDER BY dow7
 
 
 @register("q287_seasonal_index", oracle=_SEASONAL_IDX_ORACLE)
-def q287(spark, sf_dir):
+def q287(orders):
     """Weekday seasonal index in exact integer arithmetic (oracle
     comment; epoch-day mod 7 sidesteps the engines' DAYOFWEEK origin
     mismatch)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     d38 = "decimal(38,0)"
     d = daily.select(
         F.pmod(F.unix_date(F.col("day").cast("date")), F.lit(7)).cast("int").alias("dow7"),
@@ -1070,10 +1059,10 @@ FROM c ORDER BY abs_ncusum DESC, day LIMIT 3
 """
 
 
-def _cusum(spark, sf_dir):
+def _cusum(orders):
     """(day, nc, n): the n-scaled CUSUM n·C_t = n·prefix_t − t·S of daily
     revenue over n days, in DECIMAL(38,0); q288 and q484 rank it."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     d38 = "decimal(38,0)"
     w = Window.orderBy("day")
     p = daily.select(
@@ -1090,12 +1079,12 @@ def _cusum(spark, sf_dir):
 
 
 @register("q288_cusum_changepoint", oracle=_CUSUM_ORACLE)
-def q288(spark, sf_dir):
+def q288(orders):
     """Top-3 CUSUM changepoint candidates (oracle comment): exact
     integer n-scaled CUSUM, one ordered window above the daily
     aggregate, unique (|nC| DESC, day) tiebreak under the LIMIT."""
     return (
-        _cusum(spark, sf_dir)
+        _cusum(orders)
         .select(
             "day",
             F.col("nc").cast("bigint").alias("ncusum"),
@@ -1118,10 +1107,9 @@ def q288(spark, sf_dir):
 # is pinned per round like BFS frontiers. The property twin
 # replays the greedy from raw Python shingle sets.
 @register("q289_greedy_source_cover", tags=("approx",))
-def q289(spark, sf_dir):
-    d = load_tables(spark, sf_dir)["documents"]
+def q289(spark, documents):
     sh = (
-        d.select(
+        documents.select(
             "source",
             F.explode_outer(T.shingles(T.tokens(F.col("text")), 3)).alias("s"),
         )
@@ -1177,9 +1165,9 @@ ORDER BY day
 
 
 @register("q290_lag_features", oracle=_LAGFEAT_ORACLE)
-def q290(spark, sf_dir):
+def q290(orders):
     """Lag/rolling feature frame for forecasting (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     w = Window.orderBy("day")
     f = Window.orderBy("day").rowsBetween(-6, 0)
     return daily.select(
@@ -1228,12 +1216,11 @@ FROM r GROUP BY brand ORDER BY brand
 
 
 @register("q291_weighted_median", oracle=_WMEDIAN_ORACLE)
-def q291(spark, sf_dir):
+def q291(lineitem, part):
     """Quantity-weighted lower median per brand (oracle comment)."""
-    t = load_tables(spark, sf_dir)
     g = (
-        t["lineitem"]
-        .join(F.broadcast(t["part"].select("p_partkey", "p_brand")),
+        lineitem
+        .join(F.broadcast(part.select("p_partkey", "p_brand")),
               F.col("l_partkey") == F.col("p_partkey"))
         .select(
             F.col("p_brand").alias("brand"),
@@ -1290,7 +1277,7 @@ FROM s
 
 
 @register("q292_theil_sen", oracle=_THEILSEN_ORACLE)
-def q292(spark, sf_dir):
+def q292(spark, orders):
     """Theil-Sen slope of daily revenue (oracle comment).
 
     Precondition: ``daily`` has >= 2 rows (so >= 1 pair). On an empty
@@ -1299,7 +1286,7 @@ def q292(spark, sf_dir):
     precondition by construction (lineitem always spans years of
     shipdates), so the edge is declared rather than papered over.
     """
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     # pinned: idx feeds BOTH sides of the pair join — without the
     # checkpoint the orders aggregate + global row_number window run
     # twice (guide §2.4; the before-plan holds two copies of the
@@ -1466,11 +1453,10 @@ FROM r WHERE rn <= 5 ORDER BY source, lift_micro DESC, term
 
 
 @register("q293_distinctive_terms", oracle=_KEYNESS_ORACLE)
-def q293(spark, sf_dir):
+def q293(documents):
     """Top-5 keyness terms per source by exact-rational lift (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    tok = d.select("source", F.explode(T.tokens(F.col("text"))).alias("term"))
+    tok = documents.select("source", F.explode(T.tokens(F.col("text"))).alias("term"))
     # pinned: st feeds s, t, n AND the lift join — unpinned, the
     # tokenize+explode pass runs four times (guide §2.4; before-plan: 9
     # Exchanges)
@@ -1551,15 +1537,14 @@ FROM mom
 
 
 @register("q294_degree_assortativity", oracle=_ASSORT_ORACLE)
-def q294(spark, sf_dir):
+def q294(documents):
     """Sqrt-free degree assortativity of the LSH candidate graph
     (oracle comment). Cites the same capped banding pipeline as
     q44/q152 (operators/banding.py)."""
     from ..operators import banding as B
     from .llm import _minhash_corpus
 
-    d = load_tables(spark, sf_dir)["documents"]
-    pairs = B.candidate_pairs(_minhash_corpus(d)).select("doc_a", "doc_b")
+    pairs = B.candidate_pairs(_minhash_corpus(documents)).select("doc_a", "doc_b")
     und = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionAll(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     ).transform(pin)
@@ -1613,11 +1598,10 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 
 
 @register("q295_sql_udf", oracle=_SQLUDF_ORACLE)
-def q295(spark, sf_dir):
+def q295(spark):
     """Catalog-resident SQL UDF inlined by Catalyst (oracle comment).
     Integer pct discount (exact ROUND before the int cast — Spark
     truncates, DuckDB rounds) keeps the product exact BIGINT."""
-    load_tables(spark, sf_dir)
     spark.sql("DROP TEMPORARY FUNCTION IF EXISTS disc_cents")
     spark.sql(
         "CREATE TEMPORARY FUNCTION disc_cents(price DECIMAL(18,2), disc DOUBLE)"
@@ -1649,10 +1633,9 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
 
 
 @register("q296_identifier_param", oracle=_IDENT_ORACLE)
-def q296(spark, sf_dir):
+def q296(spark):
     """Dynamic table/column reference via IDENTIFIER(:p) with named
     parameter binding (oracle comment)."""
-    load_tables(spark, sf_dir)
     return spark.sql(
         "SELECT IDENTIFIER(:grp), CAST(COUNT(*) AS BIGINT) AS n"
         " FROM IDENTIFIER(:tbl) WHERE IDENTIFIER(:st) = :val"
@@ -1734,17 +1717,16 @@ FROM p WHERE rn = 1 ORDER BY doc_id
 
 
 @register("q297_naive_bayes_langid", oracle=_NB_ORACLE)
-def q297(spark, sf_dir):
+def q297(documents):
     """Laplace-smoothed multinomial NB trained on the 80% split,
     scoring the held-out 20% (oracle comment for the determinism
     scheme). Model table broadcast; scores are integer micro-logprobs."""
-    d = load_tables(spark, sf_dir)["documents"]
     # pinned: tok feeds the train split (ct + voc) AND the held-out tf —
     # unpinned, the CPU-heavy tokenize+explode pass runs four times; ct,
     # voc and priors are each referenced twice downstream (guide §2.4;
     # before-plan: 16 Exchanges, and q345 held ~5 copies of this whole
     # subtree before its own pin)
-    tok = d.select(
+    tok = documents.select(
         "doc_id", "lang", F.explode(T.tokens(F.col("text"))).alias("term")
     ).transform(pin)
     train = tok.where(F.col("doc_id") % 5 != 0)
@@ -1756,7 +1738,7 @@ def q297(spark, sf_dir):
     tot = ct.groupBy("lang").agg(F.sum("c").cast("bigint").alias("tot"))
     voc = pin(train.agg(F.countDistinct("term").alias("v")))
     priors = (
-        d.where(F.col("doc_id") % 5 != 0)
+        documents.where(F.col("doc_id") % 5 != 0)
         .groupBy("lang")
         .agg(F.count("*").alias("n_docs"))
         .transform(pin)
@@ -1870,13 +1852,12 @@ ORDER BY s.ra_micro DESC, s.a, s.b LIMIT 30
 
 
 @register("q298_link_prediction", oracle=_RA_ORACLE)
-def q298(spark, sf_dir):
+def q298(lineitem):
     """Top-30 predicted co-purchase links by resource-allocation index
     (oracle comment). Hub-capped wedge join keeps the candidate stage
     linear in nodes; never all-pairs."""
     from ..operators.triangles import cooccurrence_edges
 
-    li = load_tables(spark, sf_dir)["lineitem"]
     # collect_set-per-order + codegen pair expansion (2 shuffles) in
     # place of distinct -> self-join -> distinct (3): same edge set
     # pinned: referenced from both the adjacency expansion and the
@@ -1884,7 +1865,7 @@ def q298(spark, sf_dir):
     # algorithms pin their edge list or re-derive the lineage per ref)
     e = (
         cooccurrence_edges(
-            li.select("l_orderkey", "l_partkey"), "l_orderkey", "l_partkey"
+            lineitem.select("l_orderkey", "l_partkey"), "l_orderkey", "l_partkey"
         )
         .select(F.col("u").alias("a"), F.col("v").alias("b"))
         .transform(pin)
@@ -1951,12 +1932,11 @@ def q298(spark, sf_dir):
 # Per-order part lists are tiny (<=7 lineitems); a pathological hot
 # order would cost O(m^2) pairs in EITHER formulation.
 @register("q299_k_core", tags=("iterative",))
-def q299(spark, sf_dir):
+def q299(lineitem):
     """Nodes of the 3-core with their final in-core degree, by
     iterative peeling (see comment above for why rows-only)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     pairs = (
-        li.groupBy("l_orderkey")
+        lineitem.groupBy("l_orderkey")
         .agg(F.collect_set("l_partkey").alias("ps"))
         .select(
             F.explode(
@@ -1995,10 +1975,9 @@ GROUP BY ALL ORDER BY ALL
 
 
 @register("q300_ordered_listagg", oracle=_LISTAGG_ORACLE)
-def q300(spark, sf_dir):
+def q300(spark):
     """Ordered LISTAGG of distinct ship months per (flag, status)
     via WITHIN GROUP (oracle comment)."""
-    load_tables(spark, sf_dir)
     return spark.sql(
         "SELECT l_returnflag, l_linestatus,"
         "       listagg(m, ',') WITHIN GROUP (ORDER BY m) AS months,"
@@ -2060,10 +2039,10 @@ ORDER BY bucket
 
 
 @register("q301_decision_stump", oracle=_STUMP_ORACLE)
-def q301(spark, sf_dir):
+def q301(spark, orders):
     """Gini gain at 63 equi-width thresholds of order value vs
     finished status, exact integer arithmetic (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"].select(
+    o = orders.select(
         cents("o_totalprice").alias("cents"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("pos"),
     )
@@ -2138,10 +2117,10 @@ GROUP BY event_type ORDER BY event_type
 
 
 @register("q302_xml_roundtrip", oracle=_XML_ORACLE)
-def q302(spark, sf_dir):
+def q302(events):
     """Serialize events to XML, parse back with from_xml, aggregate
     parsed fields (oracle comment proves losslessness)."""
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("event_id") % 5 == 0)
+    ev = events.where(F.col("event_id") % 5 == 0)
     xml = ev.select(
         F.format_string(
             "<e><u>%d</u><t>%s</t><c>%d</c></e>",
@@ -2210,17 +2189,16 @@ ORDER BY fr.qid
 
 
 @register("q303_reciprocal_rank", oracle=_MRR_ORACLE)
-def q303(spark, sf_dir):
+def q303(embeddings):
     """First-relevant rank + integer-literal reciprocal per query
     (oracle comment). Broadcast query side, rounded-cosine ranking."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    q = e.where(F.col("vec_id") % 500 == 0).select(
+    q = embeddings.where(F.col("vec_id") % 500 == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),
         F.col("embedding").alias("qe"),
         V.norm(F.col("embedding")).alias("qn"),
     )
-    s = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
+    s = embeddings.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
         "qid",
         "qlabel",
         "vec_id",
@@ -2245,9 +2223,9 @@ def q303(spark, sf_dir):
             .alias("first_rank")
         )
     )
-    lc = e.groupBy("label").agg(F.count("*").alias("cnt"))
+    lc = embeddings.groupBy("label").agg(F.count("*").alias("cnt"))
     nr = (
-        e.where(F.col("vec_id") % 500 == 0)
+        embeddings.where(F.col("vec_id") % 500 == 0)
         .join(F.broadcast(lc), "label")
         .select(
             F.col("vec_id").alias("qid"), (F.col("cnt") - 1).cast("bigint").alias("n_rel")
@@ -2281,12 +2259,11 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 
 
 @register("q304_crosstab", oracle=_XTAB_ORACLE)
-def q304(spark, sf_dir):
+def q304(orders):
     """status x priority contingency table via stat.crosstab (oracle
     comment). Crosstab is a pivoted count aggregate — one shuffle on
     the pair frame, |statuses| rows out."""
-    o = load_tables(spark, sf_dir)["orders"]
-    xt = o.stat.crosstab("o_orderstatus", "o_orderpriority")
+    xt = orders.stat.crosstab("o_orderstatus", "o_orderpriority")
     return xt.orderBy("o_orderstatus_o_orderpriority")
 
 
@@ -2325,11 +2302,10 @@ ORDER BY term
 
 
 @register("q305_inverted_index", oracle=_INVIDX_ORACLE)
-def q305(spark, sf_dir):
+def q305(documents):
     """Posting-list construction with rank-bounded lists (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    td = d.select(
+    td = documents.select(
         "doc_id", F.explode(T.tokens(F.col("text"))).alias("term")
     ).distinct()
     dfr = td.groupBy("term").agg(F.count("*").alias("doc_freq"))
@@ -2390,10 +2366,10 @@ SELECT (SELECT CAST(n AS BIGINT) FROM nn) AS n_days,
 
 
 @register("q306_bootstrap_ci", oracle=_BOOT_ORACLE)
-def q306(spark, sf_dir):
+def q306(spark, orders):
     """Percentile bootstrap on mean daily revenue with md5-derived
     resampling (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     # pinned: idx feeds the draw grid, the resample join and the count —
     # without the checkpoint the orders aggregate + global window run
     # once per reference (guide §2.4)
@@ -2506,10 +2482,9 @@ FROM s GROUP BY label ORDER BY label
 
 
 @register("q307_centroid_silhouette", oracle=_SILH_ORACLE)
-def q307(spark, sf_dir):
+def q307(embeddings):
     """Integer-exact centroid silhouette per label (oracle comment)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    q = e.select(
+    q = embeddings.select(
         "vec_id",
         "label",
         F.transform(
@@ -2594,11 +2569,10 @@ ORDER BY key
 
 
 @register("q309_transpose", oracle=_TRANSPOSE_ORACLE)
-def q309(spark, sf_dir):
+def q309(lineitem):
     """Per-flag metrics reshaped via DataFrame.transpose (oracle
     comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    g = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
+    g = lineitem.groupBy(F.col("l_returnflag").alias("flag")).agg(
         F.count("*").cast("bigint").alias("n_items"),
         F.sum(cents("l_extendedprice")).cast("bigint").alias("sum_cents"),
     )
@@ -2649,7 +2623,7 @@ ORDER BY i.day
 
 
 @register("q308_holt_linear", oracle=_HOLT_ORACLE)
-def q308(spark, sf_dir):
+def q308(orders):
     """Holt linear trend smoothing in exact integer micro-cents
     (oracle comment). The recurrence is inherently sequential, so the
     fold runs as ONE applyInPandas group over the |days| aggregate —
@@ -2662,7 +2636,7 @@ def q308(spark, sf_dir):
     re-built a ~100-node expression tree per element)."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
 
     def holt(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("day").reset_index(drop=True)
@@ -2731,12 +2705,11 @@ FROM s ORDER BY doc_id
 
 
 @register("q310_hof_suite", oracle=_HOF_ORACLE)
-def q310(spark, sf_dir):
+def q310(documents):
     """exists/forall + transform_keys/transform_values/map_zip_with
     exercised down to oracle-checkable integer scalars (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    s = d.select(
+    s = documents.select(
         "doc_id",
         T.tokens(F.col("text")).alias("w"),
     ).withColumn("w50", F.slice("w", 1, 50))
@@ -2797,12 +2770,11 @@ ORDER BY user_id, session_start
 
 
 @register("q311_session_window_batch", oracle=_SESSW_ORACLE)
-def q311(spark, sf_dir):
+def q311(events):
     """Gap-based sessions via the batch session_window API (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     return (
-        ev.groupBy(F.session_window("ts", "4 hours").alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "4 hours").alias("w"), "user_id")
         .agg(F.count("*").cast("bigint").alias("n_events"))
         .select(
             "user_id",
@@ -2860,15 +2832,14 @@ FROM moms
 
 
 @register("q312_spearman_rank", oracle=_SPEARMAN_ORACLE)
-def q312(spark, sf_dir):
+def q312(lineitem):
     """Tie-aware Spearman rho from value histograms (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     # pinned: pairs (|qty|×|disc| ≈ 550 rows) feeds n, both rank
     # histograms AND the moment join — unpinned, the lineitem
     # scan+groupBy runs four times (guide §2.4; before-plan: 13
     # Exchanges)
     pairs = (
-        li.groupBy(
+        lineitem.groupBy(
             F.col("l_quantity").cast("bigint").alias("q"),
             F.round(F.col("l_discount").cast("double") * 100).cast("bigint").alias("d"),
         )
@@ -2945,11 +2916,10 @@ FROM ranked ORDER BY source
 
 
 @register("q314_token_apportionment", oracle=_APPORTION_ORACLE)
-def q314(spark, sf_dir):
+def q314(documents):
     """Hamilton apportionment of a 1M-token budget across sources
     (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    tc = d.groupBy("source").agg(
+    tc = documents.groupBy("source").agg(
         F.sum(F.size(T.tokens(F.col("text")))).cast("bigint").alias("tokens")
     )
     t = tc.agg(F.sum("tokens").cast("bigint").alias("total"))
@@ -3005,13 +2975,13 @@ FROM embeddings ORDER BY vec_id
 
 
 @register("q313_map_in_arrow", oracle=_Q8_ORACLE)
-def q313(spark, sf_dir):
+def q313(embeddings):
     """int8 quantization stats computed on raw Arrow RecordBatches
     (oracle comment)."""
     import numpy as np
     import pyarrow as pa
 
-    e = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
+    e = embeddings.select("vec_id", "embedding")
 
     def quantize(batches):
         for batch in batches:
@@ -3058,14 +3028,13 @@ GROUP BY event_type ORDER BY event_type
 
 
 @register("q315_pyds_writer", oracle=_PYDSW_ORACLE)
-def q315(spark, sf_dir):
+def q315(spark, events):
     """Custom-sink round trip through the Python DataSourceWriter
     (oracle comment)."""
     from ..scratch import scratch_dir
     from ..sources import pyds
 
-    ev = load_tables(spark, sf_dir)["events"]
-    sl = ev.where(F.col("event_id") % 20 == 1).select(
+    sl = events.where(F.col("event_id") % 20 == 1).select(
         "event_id",
         "user_id",
         "event_type",
@@ -3118,13 +3087,13 @@ FROM m GROUP BY label ORDER BY label
 
 
 @register("q316_apply_in_arrow", oracle=_SCATTER_ORACLE)
-def q316(spark, sf_dir):
+def q316(embeddings):
     """Per-label integer scatter via applyInArrow grouped map (oracle
     comment)."""
     import numpy as np
     import pyarrow as pa
 
-    e = load_tables(spark, sf_dir)["embeddings"].select("label", "embedding")
+    e = embeddings.select("label", "embedding")
 
     def scatter(table: "pa.Table") -> "pa.Table":
         label = table.column("label")[0].as_py()
@@ -3198,12 +3167,11 @@ FROM m
 
 
 @register("q317_zipf_slope", oracle=_ZIPF_ORACLE)
-def q317(spark, sf_dir):
+def q317(documents):
     """Zipf slope/intercept over the top-1000 term frequencies (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     tf = (
-        d.select(F.explode(T.tokens(F.col("text"))).alias("term"))
+        documents.select(F.explode(T.tokens(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("freq"))
     )
@@ -3280,16 +3248,15 @@ FROM v ORDER BY vmr_micro DESC, term LIMIT 20
 
 
 @register("q318_term_burstiness", oracle=_BURST_ORACLE)
-def q318(spark, sf_dir):
+def q318(documents):
     """Top-20 overdispersed terms by exact-rational VMR (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     td = (
-        d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
+        documents.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
         .groupBy("term", "doc_id")
         .agg(F.count("*").alias("c"))
     )
-    nn = d.agg(F.count("*").cast("decimal(38,0)").alias("n"))
+    nn = documents.agg(F.count("*").cast("decimal(38,0)").alias("n"))
     d38 = "decimal(38,0)"
     m = td.groupBy("term").agg(
         F.sum("c").cast(d38).alias("s1"),
@@ -3349,9 +3316,8 @@ FROM pick WHERE rn = 1 ORDER BY partkey
 
 
 @register("q319_bitemporal_asof", oracle=_BITEMP_ORACLE)
-def q319(spark, sf_dir):
+def q319(lineitem):
     """Bitemporal as-of via filtered struct-argmax (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     h = F.conv(
         F.substring(
             F.md5(
@@ -3367,7 +3333,7 @@ def q319(spark, sf_dir):
         16,
         10,
     ).cast("bigint")
-    obs = li.where(F.col("l_partkey") % 50 == 0).select(
+    obs = lineitem.where(F.col("l_partkey") % 50 == 0).select(
         F.col("l_partkey").alias("partkey"),
         F.col("l_shipdate").alias("valid_ts"),
         F.expr("l_shipdate").alias("_base"),
@@ -3415,13 +3381,12 @@ def q319(spark, sf_dir):
 # SFs (n <= 2000) the adaptive width stays 6 bits, so the twin-checked
 # graph is unchanged.
 @register("q320_label_propagation", tags=("iterative",))
-def q320(spark, sf_dir):
+def q320(embeddings):
     """5-round LPA over an SRP-bucketed top-3 neighbor graph (see
     comment; bucket bits ∝ log n)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    n = e.count()
+    n = embeddings.count()
     bits = max(6, int((max(n, 1) + 31) // 32 - 1).bit_length())
-    withb = e.select(
+    withb = embeddings.select(
         "vec_id",
         "label",
         "embedding",
@@ -3501,16 +3466,15 @@ FROM d, t
 
 
 @register("q321_corpus_card", oracle=_CARD_ORACLE)
-def q321(spark, sf_dir):
+def q321(documents):
     """One-row corpus profile in exact micro-unit rationals (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
+    tok = documents.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
     t = tok.agg(
         F.count("*").cast("bigint").alias("n_tokens"),
         F.countDistinct("term").cast("bigint").alias("vocab_size"),
     )
-    dd = d.agg(
+    dd = documents.agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.count(F.when(F.col("lang") == "en", 1)).cast("bigint").alias("n_en"),
     )
@@ -3564,11 +3528,10 @@ GROUP BY c.source, s.n_s ORDER BY c.source
 
 
 @register("q322_kl_divergence", oracle=_KL_ORACLE)
-def q322(spark, sf_dir):
+def q322(documents):
     """Source-vs-corpus unigram KL in discretized micro-nats (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    tok = d.select("source", F.explode(T.tokens(F.col("text"))).alias("term"))
+    tok = documents.select("source", F.explode(T.tokens(F.col("text"))).alias("term"))
     # pinned: st feeds the source totals, term totals, grand total AND
     # the contribution join — unpinned, the tokenize+explode pass runs
     # four times (guide §2.4; before-plan: 9 Exchanges)
@@ -3657,10 +3620,10 @@ FROM split WHERE rn > cut
 
 
 @register("q323_conformal_coverage", oracle=_CONF_ORACLE)
-def q323(spark, sf_dir):
+def q323(orders):
     """Split-conformal interval for the lag-7 forecast with held-out
     coverage (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     # pinned: idx feeds nn AND both sides of the lag-7 join; split feeds
     # the calibration AND test halves — unpinned, the daily aggregate +
     # global window run up to five times (guide §2.4; before-plan: 12
@@ -3741,8 +3704,7 @@ ORDER BY score_micro DESC, a, b LIMIT 50
 """
 
 
-def _q324_parts(spark, sf_dir):
-    part = load_tables(spark, sf_dir)["part"]
+def _q324_parts(part):
     return part.select(
         F.col("p_partkey").alias("pk"),
         F.col("p_name").alias("name"),
@@ -4021,7 +3983,7 @@ _Q324_NON_BN_MAX = 3401198
 
 
 @register("q324_fs_linkage", oracle=_FS_ORACLE)
-def q324(spark, sf_dir):
+def q324(spark, part):
     """Fellegi-Sunter linkage with integer-literal log-odds (oracle
     comment). Adaptive two-phase exact top-50: phase 1 enumerates only
     the brand∧name-agreeing pairs (the four top score tiers, a highly
@@ -4035,7 +3997,7 @@ def q324(spark, sf_dir):
     passes (_q324_scored_topk), each pruned to its local top-50 by
     TakeOrdered. Both phases are exact, so the unchanged full-block
     oracle hash-gates whichever branch ran."""
-    p = _q324_parts(spark, sf_dir)
+    p = _q324_parts(part)
     bn = _q324_bn_topk(p, 50)
     head = bn.collect()  # <= 50 rows, driver-bounded
     if len(head) == 50 and head[-1]["score_micro"] > _Q324_NON_BN_MAX:
@@ -4072,17 +4034,15 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
 
 
 @register("q325_join_ivm", oracle=_IVM_ORACLE)
-def q325(spark, sf_dir):
+def q325(orders, lineitem):
     """Join-view maintained by the delta rule; returned view must equal
     the from-scratch recompute (oracle comment)."""
-    t = load_tables(spark, sf_dir)
-    o, li = t["orders"], t["lineitem"]
     cut_lo = F.lit("1998-05-01 00:00:00").cast("timestamp_ntz")
     cut_hi = F.lit("1998-06-01 00:00:00").cast("timestamp_ntz")
 
     def view(orders_slice):
         return (
-            orders_slice.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+            orders_slice.join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
             .groupBy("o_orderpriority")
             .agg(
                 F.count("*").alias("n_items"),
@@ -4090,9 +4050,9 @@ def q325(spark, sf_dir):
             )
         )
 
-    base_view = view(o.where(F.col("o_orderdate") < cut_lo))
+    base_view = view(orders.where(F.col("o_orderdate") < cut_lo))
     delta_view = view(
-        o.where((F.col("o_orderdate") >= cut_lo) & (F.col("o_orderdate") < cut_hi))
+        orders.where((F.col("o_orderdate") >= cut_lo) & (F.col("o_orderdate") < cut_hi))
     )
     return (
         base_view.unionByName(delta_view)
@@ -4141,11 +4101,10 @@ ORDER BY s.src_a, s.src_b
 
 
 @register("q326_weighted_jaccard", oracle=_WJACC_ORACLE)
-def q326(spark, sf_dir):
+def q326(documents):
     """Exact count-weighted Jaccard per source pair (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     st = (
-        d.select("source", F.explode(T.tokens(F.col("text"))).alias("term"))
+        documents.select("source", F.explode(T.tokens(F.col("text"))).alias("term"))
         .groupBy("source", "term")
         .agg(F.count("*").alias("c"))
     )
@@ -4220,11 +4179,10 @@ WHERE rn = 1 AND NOT EXISTS (SELECT 1 FROM crossed)
 
 
 @register("q327_sprt_monitor", oracle=_SPRT_ORACLE)
-def q327(spark, sf_dir):
+def q327(events):
     """First SPRT boundary crossing of the daily conversion LLR walk
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
+    daily = events.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.when(F.col("event_type") == "purchase", 1)).alias("conv"),
         F.count(F.when(F.col("event_type") != "purchase", 1)).alias("other"),
     )
@@ -4283,13 +4241,12 @@ FROM orders GROUP BY 1 ORDER BY month
 
 
 @register("q328_dynamic_partition_overwrite", oracle=_DPO_ORACLE)
-def q328(spark, sf_dir):
+def q328(spark, orders):
     """Month-partitioned write, dynamic single-partition overwrite,
     full read-back audit (oracle comment)."""
     from ..scratch import scratch_dir
 
-    o = load_tables(spark, sf_dir)["orders"]
-    monthly = o.select(
+    monthly = orders.select(
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),
         cents("o_totalprice").alias("cents"),
     )
@@ -4348,10 +4305,10 @@ GROUP BY f.f ORDER BY fold
 
 
 @register("q329_time_series_cv", oracle=_TSCV_ORACLE)
-def q329(spark, sf_dir):
+def q329(spark, orders):
     """Five expanding-window folds scoring the lag-7 forecast (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
     )
@@ -4427,10 +4384,10 @@ FROM holdout
 
 
 @register("q330_hitrate_popularity", oracle=_HITRATE_ORACLE)
-def q330(spark, sf_dir):
+def q330(events):
     """Leave-last-out hit rate@10 of the popularity baseline (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"].select(
+    ev = events.select(
         "event_id",
         "user_id",
         "ts",

@@ -14,7 +14,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import cents, rhu
-from ..io import load_tables
 from ..session import pin
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
@@ -59,12 +58,11 @@ GROUP BY t.prev ORDER BY from_state
 
 
 @register("q331_markov_eval", oracle=_MARKOV_EVAL_ORACLE)
-def q331(spark, sf_dir):
+def q331(events):
     """Per-state top-1 accuracy of the trained transition argmax
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
+    seq = events.select(
         "user_id",
         F.col("event_type").alias("prev"),
         F.lead("event_type").over(w).alias("nxt"),
@@ -121,17 +119,16 @@ FROM orders GROUP BY 1 ORDER BY month
 
 
 @register("q332_partition_advisor", oracle=_ADVISOR_ORACLE)
-def q332(spark, sf_dir):
+def q332(orders):
     """Per-month byte estimate and target file counts (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     width = (
         F.lit(32)
         + F.length("o_orderstatus")
         + F.length("o_orderpriority")
     )
     return (
-        o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
+        orders.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),
             F.sum(width).cast("bigint").alias("est_bytes"),
@@ -177,12 +174,11 @@ FROM runs GROUP BY user_id ORDER BY user_id
 
 
 @register("q333_udtf_table_arg", oracle=_STREAK_ORACLE)
-def q333(spark, sf_dir):
+def q333(spark):
     """Per-user ordered-stream stats via a TABLE-argument UDTF (oracle
     comment)."""
     from pyspark.sql.functions import udtf
 
-    load_tables(spark, sf_dir)
 
     @udtf(returnType="user_id bigint, n_events int, n_purchases int, longest_streak int")
     class UserStreaks:
@@ -260,13 +256,12 @@ FROM grp ORDER BY n, c
 
 
 @register("q334_pass_at_k", oracle=_PASSK_ORACLE)
-def q334(spark, sf_dir):
+def q334(events):
     """pass@5 per (attempts, successes) cell, exact rationals (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     peruser = (
-        ev.withColumn("rn", F.row_number().over(w))
+        events.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 10)
         .groupBy("user_id")
         .agg(
@@ -345,11 +340,10 @@ FROM cmp
 
 
 @register("q335_permutation_test", oracle=_PERM_ORACLE)
-def q335(spark, sf_dir):
+def q335(spark, events):
     """Deterministic permutation test of the parity revenue split
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    peruser = ev.groupBy("user_id").agg(
+    peruser = events.groupBy("user_id").agg(
         F.sum(cents("value")).cast("bigint").alias("cents")
     )
     d38 = "decimal(38,0)"
@@ -454,13 +448,12 @@ GROUP BY 1 ORDER BY event_type
 
 
 @register("q336_corrupt_records", oracle=_CORRUPT_ORACLE)
-def q336(spark, sf_dir):
+def q336(spark, events):
     """PERMISSIVE JSON read with corrupt-record capture (oracle
     comment)."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
-    sl = ev.where(F.col("event_id") % 20 == 2).select(
+    sl = events.where(F.col("event_id") % 20 == 2).select(
         F.when(
             F.col("event_id") % 3 == 0,
             # truncated JSON: drop the closing brace and value tail
@@ -552,12 +545,11 @@ ORDER BY partkey
 
 
 @register("q337_fifo_cogs", oracle=_FIFO_ORACLE)
-def q337(spark, sf_dir):
+def q337(lineitem):
     """FIFO lot matching as a cumulative-interval intersection join
     (oracle comment). Unit cost = integer cents DIV qty (exact same
     truncation on both engines)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    flows = li.where(F.col("l_partkey") % 25 == 0).select(
+    flows = lineitem.where(F.col("l_partkey") % 25 == 0).select(
         F.col("l_partkey").alias("part"),
         (F.col("l_linenumber") % 2 == 0).alias("is_receipt"),
         F.col("l_quantity").cast("bigint").alias("qty"),
@@ -671,12 +663,11 @@ ORDER BY user_id, epoch_hour
 
 
 @register("q338_linear_interpolation", oracle=_INTERP_ORACLE)
-def q338(spark, sf_dir):
+def q338(events):
     """Linear interpolation between bracketing hourly observations
     (oracle comment). NOTE the oracle walks prev/next time from a
     masked column so only OBSERVED hours anchor the interpolation."""
-    ev = load_tables(spark, sf_dir)["events"]
-    hourly = ev.groupBy(
+    hourly = events.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("h")
     ).agg(
         F.sum(cents("value")).cast("bigint").alias("cents")
@@ -755,12 +746,11 @@ GROUP BY 1 ORDER BY ny_hour
 
 
 @register("q339_timezone_profile", oracle=_TZ_ORACLE)
-def q339(spark, sf_dir):
+def q339(events):
     """New-York local-hour activity histogram via convert_timezone
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     return (
-        ev.select(
+        events.select(
             F.hour(
                 F.expr("convert_timezone('UTC', 'America/New_York', ts)")
             ).alias("ny_hour")
@@ -814,13 +804,12 @@ FROM ranked ORDER BY source
 
 
 @register("q340_temperature_sampling", oracle=_TEMP_ORACLE)
-def q340(spark, sf_dir):
+def q340(documents):
     """n^0.7 temperature mixing weights + exact Hamilton allocation
     (oracle comment)."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"]
-    tc = d.groupBy("source").agg(
+    tc = documents.groupBy("source").agg(
         F.sum(F.size(T.tokens(F.col("text")))).cast("bigint").alias("tokens")
     )
     sc = tc.select(
@@ -896,15 +885,14 @@ ORDER BY month
 
 
 @register("q341_user_churn_summary", oracle=_CHURN_ORACLE)
-def q341(spark, sf_dir):
+def q341(events):
     """Growth-accounting triad per month (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     # pinned: um feeds the month spine AND the labeled frame, months
     # feeds labeled AND the final re-attach, labeled feeds both sides of
     # the full-outer lag join — unpinned, the events distinct runs four
     # times (guide §2.4; before-plan: 12 Exchanges)
     um = (
-        ev.select("user_id", F.date_format("ts", "yyyy-MM").alias("m"))
+        events.select("user_id", F.date_format("ts", "yyyy-MM").alias("m"))
         .distinct()
         .transform(pin)
     )
@@ -980,14 +968,13 @@ FROM h, t ORDER BY n_lines
 
 
 @register("q342_fanout_histogram", oracle=_FANOUT_ORACLE)
-def q342(spark, sf_dir):
+def q342(orders, lineitem):
     """orders->lineitem fan-out histogram with shares (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
     fan = (
-        t["orders"]
+        orders
         .join(
-            t["lineitem"].select("l_orderkey"),
+            lineitem.select("l_orderkey"),
             F.col("l_orderkey") == F.col("o_orderkey"),
             "left",
         )
@@ -1043,11 +1030,10 @@ FROM c GROUP BY label ORDER BY label
 
 
 @register("q343_matryoshka_quality", oracle=_MATRYOSHKA_ORACLE)
-def q343(spark, sf_dir):
+def q343(embeddings):
     """Mean full-vs-16d-prefix cosine per label (oracle comment).
     dot(x, x16) = ||x16||^2, so only the two squared norms are needed."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    q = e.select(
+    q = embeddings.select(
         "label",
         F.transform(
             "embedding", lambda x: F.round(x.cast("double") * 1000).cast("bigint")
@@ -1120,12 +1106,12 @@ FROM err
 
 
 @register("q344_learned_index_error", oracle=_LEARNED_IDX_ORACLE)
-def q344(spark, sf_dir):
+def q344(orders):
     """Max/mean |position - OLS prediction| over the sorted key array
     (oracle comment)."""
     from .analytics3 import _daily_cents
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("cents", "day")).alias("pos")
     )
@@ -1201,12 +1187,12 @@ FROM nn, diag, pe
 
 
 @register("q345_cohens_kappa", oracle=_KAPPA_ORACLE)
-def q345(spark, sf_dir):
+def q345(documents):
     """Chance-corrected agreement of the q297 classifier (oracle
     comment)."""
     from .analytics3 import q297
 
-    nb = q297(spark, sf_dir)
+    nb = q297(documents)
     # pinned: conf (|langs|² rows) feeds FIVE consumers (nn, diag, rows_,
     # cols_ and through them pe) — without the checkpoint each one re-runs
     # the whole q297 classifier subtree (guide §2.4; the before-plan held
@@ -1287,14 +1273,13 @@ ORDER BY brand
 
 
 @register("q346_grouped_ols", oracle=_GROUPED_OLS_ORACLE)
-def q346(spark, sf_dir):
+def q346(lineitem, part):
     """Per-brand OLS of quantity on discount percent from grouped
     integer moments (oracle comment)."""
-    t = load_tables(spark, sf_dir)
     pts = (
-        t["lineitem"]
+        lineitem
         .join(
-            F.broadcast(t["part"].select("p_partkey", "p_brand")),
+            F.broadcast(part.select("p_partkey", "p_brand")),
             F.col("p_partkey") == F.col("l_partkey"),
         )
         .select(
@@ -1349,10 +1334,9 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
 
 
 @register("q347_sql_variables", oracle=_SQLVAR_ORACLE)
-def q347(spark, sf_dir):
+def q347(spark):
     """DECLARE VARIABLE + SET VAR + EXECUTE IMMEDIATE ... USING
     (oracle comment)."""
-    load_tables(spark, sf_dir)
     spark.sql("DECLARE OR REPLACE VARIABLE price_floor DOUBLE DEFAULT 0.0")
     spark.sql("SET VAR price_floor = 150000.0")
     return spark.sql(
@@ -1387,11 +1371,11 @@ ORDER BY o_orderdate, o_orderkey LIMIT 30
 
 
 @register("q348_keyset_pagination", oracle=_KEYSET_ORACLE)
-def q348(spark, sf_dir):
+def q348(orders):
     """Three keyset-cursor pages stitched back together (oracle
     comment). Cursor boundaries come from small page-tail collects —
     bounded driver traffic by construction (10 rows/page)."""
-    o = load_tables(spark, sf_dir)["orders"].select(
+    o = orders.select(
         "o_orderkey",
         "o_orderdate",
         cents("o_totalprice").alias("cents"),
@@ -1450,10 +1434,9 @@ FROM agg ORDER BY month
 
 
 @register("q349_encoding_audit", oracle=_RLE_ORACLE)
-def q349(spark, sf_dir):
+def q349(lineitem):
     """Per-month RLE run statistics for l_returnflag under the ship
     order (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     month = F.date_format("l_shipdate", "yyyy-MM")
     # the synthetic lineitem carries a few duplicate (shipdate, orderkey,
     # linenumber) triples, so the flag itself is the final tiebreaker —
@@ -1461,7 +1444,7 @@ def q349(spark, sf_dir):
     w = Window.partitionBy(month).orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber", "l_returnflag"
     )
-    seq = li.select(
+    seq = lineitem.select(
         month.alias("month"),
         "l_returnflag",
         F.lag("l_returnflag").over(w).alias("prev"),
@@ -1516,10 +1499,10 @@ FROM tail
 
 
 @register("q350_historical_var", oracle=_VAR_ORACLE)
-def q350(spark, sf_dir):
+def q350(orders):
     """5% historical VaR + expected shortfall of daily revenue deltas
     (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     deltas = daily.select(
         "day", (F.col("cents") - F.lag("cents").over(Window.orderBy("day"))).alias("d")
     ).where(F.col("d").isNotNull())
@@ -1608,15 +1591,14 @@ FROM pts p, m ORDER BY checkpoint
 
 
 @register("q351_heaps_law", oracle=_HEAPS_ORACLE)
-def q351(spark, sf_dir):
+def q351(spark, documents):
     """Vocabulary-growth checkpoints + Heaps exponent (oracle
     comment)."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"]
-    dt = d.select("doc_id", F.size(T.tokens(F.col("text"))).alias("ntok"))
+    dt = documents.select("doc_id", F.size(T.tokens(F.col("text"))).alias("ntok"))
     firsts = (
-        d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
+        documents.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.min("doc_id").alias("first_doc"))
     )
@@ -1701,11 +1683,10 @@ FROM agg ORDER BY month
 
 
 @register("q352_sampled_aggregate_error", oracle=_SAMPLED_ORACLE)
-def q352(spark, sf_dir):
+def q352(orders):
     """10% md5-sample revenue estimate vs exact, with relative error
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    rows_ = o.select(
+    rows_ = orders.select(
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),
         cents("o_totalprice").alias("cents"),
         (
@@ -1750,11 +1731,10 @@ FROM documents WHERE doc_id % 100 = 0 ORDER BY doc_id
 
 
 @register("q353_binary_fns", oracle=_BINFN_ORACLE)
-def q353(spark, sf_dir):
+def q353(documents):
     """Digest/codec parity over a doc slice (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     return (
-        d.where(F.col("doc_id") % 100 == 0)
+        documents.where(F.col("doc_id") % 100 == 0)
         .select(
             "doc_id",
             F.md5("text").alias("md5_hex"),
@@ -1801,14 +1781,13 @@ ORDER BY region, nation
 
 
 @register("q354_geo_hierarchy_shares", oracle=_GEO_ORACLE)
-def q354(spark, sf_dir):
+def q354(orders, customer, nation, region):
     """Nation revenue with share-of-region and region-share-of-world
     (oracle comment)."""
-    t = load_tables(spark, sf_dir)
     rev = (
-        t["orders"]
+        orders
         .join(
-            t["customer"].select("c_custkey", "c_nationkey"),
+            customer.select("c_custkey", "c_nationkey"),
             F.col("c_custkey") == F.col("o_custkey"),
         )
         .groupBy("c_nationkey")
@@ -1818,11 +1797,11 @@ def q354(spark, sf_dir):
     )
     nat = (
         rev.join(
-            F.broadcast(t["nation"].select("n_nationkey", "n_name", "n_regionkey")),
+            F.broadcast(nation.select("n_nationkey", "n_name", "n_regionkey")),
             F.col("n_nationkey") == F.col("c_nationkey"),
         )
         .join(
-            F.broadcast(t["region"].select("r_regionkey", "r_name")),
+            F.broadcast(region.select("r_regionkey", "r_name")),
             F.col("r_regionkey") == F.col("n_regionkey"),
         )
         .select(
@@ -1880,10 +1859,9 @@ ORDER BY user_id, session_start
 
 
 @register("q355_incremental_sessionize", oracle=_INCR_SESS_ORACLE)
-def q355(spark, sf_dir):
+def q355(events):
     """Two-chunk sessionization + boundary repair == batch sessions
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     cut = F.lit("2024-01-15 00:00:00").cast("timestamp_ntz")
 
     def sessionize(chunk):
@@ -1912,8 +1890,8 @@ def q355(spark, sf_dir):
     # (unpinned, each chunk's events scan + two windows + groupBy runs
     # twice), and merged feeds three consumers (guide §2.4; before-plan:
     # 13 Exchanges, 19 Sorts)
-    a = pin(sessionize(ev.where(F.col("ts") < cut)))
-    b = pin(sessionize(ev.where(F.col("ts") >= cut)))
+    a = pin(sessionize(events.where(F.col("ts") < cut)))
+    b = pin(sessionize(events.where(F.col("ts") >= cut)))
     wa = Window.partitionBy("user_id").orderBy(F.col("session_start").desc())
     wb = Window.partitionBy("user_id").orderBy("session_start")
     last_a = a.withColumn("rn", F.row_number().over(wa)).where(F.col("rn") == 1).drop("rn")
@@ -1973,18 +1951,17 @@ GROUP BY 1 ORDER BY day
 
 
 @register("q356_forget_audit", oracle=_FORGET_ORACLE)
-def q356(spark, sf_dir):
+def q356(events):
     """Incremental forget (view minus U's contributions) must equal
     the U-free recompute (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
 
     def view(df):
         return df.groupBy(F.col("ts").cast("date").alias("day")).agg(
             F.count("*").alias("n_events"), F.sum(cents("value")).alias("cents")
         )
 
-    full = view(ev)
-    forget = view(ev.where(F.col("user_id") % 97 == 0))
+    full = view(events)
+    forget = view(events.where(F.col("user_id") % 97 == 0))
     return (
         full.alias("f")
         .join(forget.alias("u"), "day", "left")
@@ -2030,10 +2007,9 @@ FROM agg WHERE ws_tokens > 0 ORDER BY lang
 
 
 @register("q357_tokenizer_fertility", oracle=_FERTILITY_ORACLE)
-def q357(spark, sf_dir):
+def q357(documents):
     """Subword-per-word fertility per language (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    t = d.select(
+    t = documents.select(
         "lang",
         F.size(F.filter(F.split("text", " "), lambda x: F.length(x) > 0))
         .cast("bigint")
@@ -2096,13 +2072,12 @@ ORDER BY doc_id
 
 
 @register("q358_boilerplate_share", oracle=_BOILER_ORACLE)
-def q358(spark, sf_dir):
+def q358(documents):
     """Per-doc share of source-repeated lines (oracle comment). Only
     docs with at least one boilerplate line are emitted — the
     cleaning-queue worklist, not a full-corpus report."""
-    d = load_tables(spark, sf_dir)["documents"]
     lines_ = (
-        d.select(
+        documents.select(
             "doc_id", "source", F.explode(F.split("text", "\\. ")).alias("l")
         )
         .where(F.length(F.trim("l")) >= 20)
@@ -2173,15 +2148,14 @@ FROM credits GROUP BY channel ORDER BY channel
 
 
 @register("q359_attribution_models", oracle=_ATTRIB_ORACLE)
-def q359(spark, sf_dir):
+def q359(events):
     """First/last/linear attribution credits per channel (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    buys = ev.where(F.col("event_type") == "purchase").select(
+    buys = events.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("bid"), "user_id", F.col("ts").alias("bts")
     )
     touches = buys.join(
-        ev.alias("e"),
+        events.alias("e"),
         (F.col("e.user_id") == buys["user_id"])
         & (F.col("e.event_type") != "purchase")
         & (F.col("e.ts") < F.col("bts"))
@@ -2249,11 +2223,10 @@ FROM w WHERE cnt7 = 7 ORDER BY day
 
 
 @register("q360_slo_burn_rate", oracle=_SLO_ORACLE)
-def q360(spark, sf_dir):
+def q360(events):
     """Two-window error-budget burn-rate table (oracle comment).
     Breach = day rate > 2x the 1% budget AND 7-day rate > 1x."""
-    ev = load_tables(spark, sf_dir)["events"]
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
+    daily = events.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count("*").cast("bigint").alias("n"),
         F.count(F.when(F.col("event_type") == "error", 1)).cast("bigint").alias("errs"),
     )
@@ -2308,10 +2281,10 @@ ORDER BY smoothed_micro DESC, item LIMIT 25
 
 
 @register("q361_bayesian_smoothing", oracle=_BAYES_ORACLE)
-def q361(spark, sf_dir):
+def q361(events):
     """Pseudo-count-smoothed per-item purchase rates, top-25 (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"].select(
+    ev = events.select(
         F.get_json_object("props", "$.k").cast("int").alias("item"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("buy"),
     )
@@ -2353,11 +2326,10 @@ FROM orders GROUP BY 1, 2 ORDER BY month, status
 
 
 @register("q362_reshape_roundtrip", oracle=_RESHAPE_ORACLE)
-def q362(spark, sf_dir):
+def q362(orders):
     """pivot -> unpivot == identity on the (month, status) counts
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    base = o.groupBy(
+    base = orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),
         F.col("o_orderstatus").alias("status"),
     ).agg(F.count("*").cast("bigint").alias("n"))
@@ -2393,7 +2365,7 @@ ORDER BY user_id, event_id
 
 
 @register("q363_pandas_udaf_window", oracle=_PUDAF_ORACLE)
-def q363(spark, sf_dir):
+def q363(events):
     """Custom pandas aggregate over a trailing 3-row window (oracle
     comment)."""
     from pyspark.sql.functions import PandasUDFType, pandas_udf
@@ -2405,7 +2377,7 @@ def q363(spark, sf_dir):
     def psum(v):
         return int(v.sum())
 
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("user_id") % 20 == 0)
+    ev = events.where(F.col("user_id") % 20 == 0)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -2457,13 +2429,12 @@ ORDER BY decile
 
 
 @register("q364_qq_contrast", oracle=_QQ_ORACLE)
-def q364(spark, sf_dir):
+def q364(spark, lineitem, orders):
     """Decile QQ table of quantity, finished vs open orders (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
     pts = (
-        t["lineitem"]
-        .join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
+        lineitem
+        .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(
             F.when(F.col("o_orderstatus") == "F", "F").otherwise("OP").alias("cohort"),
             F.col("l_quantity").cast("bigint").alias("v"),
@@ -2541,10 +2512,9 @@ GROUP BY 1 ORDER BY lot_year
 
 
 @register("q365_inventory_aging", oracle=_AGING_ORACLE)
-def q365(spark, sf_dir):
+def q365(lineitem):
     """Unsold FIFO remainder per lot year (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    flows = li.where(F.col("l_partkey") % 25 == 0).select(
+    flows = lineitem.where(F.col("l_partkey") % 25 == 0).select(
         F.col("l_partkey").alias("part"),
         (F.col("l_linenumber") % 2 == 0).alias("is_receipt"),
         F.col("l_quantity").cast("bigint").alias("qty"),
@@ -2620,15 +2590,14 @@ ORDER BY ABS(a.rnk - b.rnk) DESC, a.item LIMIT 15
 
 
 @register("q366_top_movers", oracle=_MOVERS_ORACLE)
-def q366(spark, sf_dir):
+def q366(events):
     """Largest WoW rank changes among purchased items (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     # engine-neutral week index: days-since-epoch DIV 7 (Spark 3+
     # rejects the 'ww' pattern and ISO week origins differ anyway)
     week = F.expr("CAST(datediff(CAST(ts AS DATE), DATE'1970-01-01') AS BIGINT) DIV 7")
     wk = (
-        ev.where((F.col("event_type") == "purchase") & week.isin(2818, 2819))
+        events.where((F.col("event_type") == "purchase") & week.isin(2818, 2819))
         .groupBy(
             F.get_json_object("props", "$.k").cast("int").alias("item"),
             week.alias("week"),

@@ -19,7 +19,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import cents, rhu
-from ..io import load_tables
 from ..session import pin
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
@@ -61,10 +60,10 @@ GROUP BY t.t_day, t.t_cents, t.p_cents, t.dd_cents
 
 
 @register("q367_max_drawdown", oracle=_DRAWDOWN_ORACLE)
-def q367(spark, sf_dir):
+def q367(orders):
     """Max drawdown (peak day, trough day, depth) of the daily-revenue
     level series — all integer cents (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     p = daily.select(
         "day",
@@ -147,11 +146,10 @@ FROM a
 
 
 @register("q368_average_precision", oracle=_AP_ORACLE)
-def q368(spark, sf_dir):
+def q368(events):
     """Average precision of the purchase-vs-rest score ranking, from
     the score histogram + tie-group windows (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    scored = ev.select(
+    scored = events.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
         cents("value").alias("score"),
@@ -231,11 +229,10 @@ ORDER BY f1_micro DESC, threshold_cents DESC LIMIT 1
 
 
 @register("q369_best_f1", oracle=_BESTF1_ORACLE)
-def q369(spark, sf_dir):
+def q369(events):
     """Best-F1 threshold sweep over the score histogram (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    scored = ev.select(
+    scored = events.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
         cents("value").alias("score"),
     )
@@ -317,16 +314,15 @@ FROM halves
 
 
 @register("q370_js_divergence", oracle=_JSD_ORACLE)
-def q370(spark, sf_dir):
+def q370(events):
     """Jensen-Shannon divergence between first-week and last-week
     (event_type, item) distributions, in discretized micro-nats
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     day = F.col("ts").cast("date")
     early = day < F.lit("2024-01-08").cast("date")
     late = day >= F.lit("2024-01-24").cast("date")
     cells = (
-        ev.where(early | late)
+        events.where(early | late)
         .groupBy(
             "event_type", F.get_json_object("props", "$.k").cast("int").alias("item")
         )
@@ -429,11 +425,10 @@ FROM s
 
 
 @register("q371_kendall_tau", oracle=_KENDALL_ORACLE)
-def q371(spark, sf_dir):
+def q371(orders):
     """Kendall tau-a between daily revenue and daily order count on
     the calendar-bounded day frame (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    d = o.groupBy(F.col("o_orderdate").alias("day")).agg(
+    d = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(cents("o_totalprice")).cast("bigint").alias("cents"),
         F.count("*").cast("bigint").alias("n_orders"),
     )
@@ -534,15 +529,14 @@ FROM terms ORDER BY bin
 
 
 @register("q372_psi_stability", oracle=_PSI_ORACLE)
-def q372(spark, sf_dir):
+def q372(spark, orders):
     """Per-bin PSI terms of order totalprice, current (1998+) vs
     reference (<1998) decile bins (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     price = cents("o_totalprice")
-    ref = o.where(F.col("o_orderdate") < F.lit("1998-01-01").cast("date")).select(
+    ref = orders.where(F.col("o_orderdate") < F.lit("1998-01-01").cast("date")).select(
         price.alias("price")
     )
-    cur = o.where(F.col("o_orderdate") >= F.lit("1998-01-01").cast("date")).select(
+    cur = orders.where(F.col("o_orderdate") >= F.lit("1998-01-01").cast("date")).select(
         price.alias("price")
     )
     # pinned: hist feeds the cumulative windows AND nref (nr == Σn of the
@@ -658,10 +652,9 @@ ORDER BY ALL
 
 
 @register("q373_group_by_all", oracle=_GBALL_ORACLE)
-def q373(spark, sf_dir):
+def q373(spark):
     """GROUP BY ALL + ORDER BY ALL + lateral column aliases over the
     yearly order-status rollup (oracle comment)."""
-    load_tables(spark, sf_dir)
     return spark.sql(
         """
         SELECT yr, status, n, cents,
@@ -727,20 +720,18 @@ FROM wide ORDER BY brand
 
 
 @register("q374_revenue_bridge", oracle=_BRIDGE_ORACLE)
-def q374(spark, sf_dir):
+def q374(lineitem, orders, part):
     """Per-brand 1997->1998 revenue bridge: volume effect at the old
     rate + exact-complement price/mix effect (oracle comment)."""
-    t = load_tables(spark, sf_dir)
-    l, o, p = t["lineitem"], t["orders"], t["part"]
     li = (
-        l.join(
-            o.where(
+        lineitem.join(
+            orders.where(
                 (F.col("o_orderdate") >= F.lit("1997-01-01").cast("date"))
                 & (F.col("o_orderdate") < F.lit("1999-01-01").cast("date"))
             ).select("o_orderkey", "o_orderdate"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        .join(F.broadcast(p.select("p_partkey", "p_brand")),
+        .join(F.broadcast(part.select("p_partkey", "p_brand")),
               F.col("l_partkey") == F.col("p_partkey"))
         .select(
             F.col("p_brand").alias("brand"),
@@ -852,11 +843,10 @@ ORDER BY vec_id
 
 
 @register("q375_hamming_recall", oracle=_HAMMING_ORACLE)
-def q375(spark, sf_dir):
+def q375(embeddings):
     """Recall@10 of sign-bit Hamming search vs exact cosine for five
     query vectors (oracle comment)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    v = e.select(
+    v = embeddings.select(
         "vec_id",
         F.transform(
             "embedding", lambda x: F.round(x.cast("double") * 1000).cast("bigint")
@@ -959,13 +949,12 @@ ORDER BY key
 
 
 @register("q376_misra_gries", oracle=_MG_ORACLE)
-def q376(spark, sf_dir):
+def q376(events):
     """Keys with global frequency > n/6 via per-partition Misra-Gries
     candidates + candidate-only exact recount (oracle comment)."""
     from ..operators.misra_gries import mg_candidates
 
-    ev = load_tables(spark, sf_dir)["events"]
-    keyed = ev.select(
+    keyed = events.select(
         F.when(
             F.col("event_type") == "purchase",
             F.concat(
@@ -1033,13 +1022,12 @@ FROM m WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
 
 
 @register("q377_cuped_adjustment", oracle=_CUPED_ORACLE)
-def q377(spark, sf_dir):
+def q377(events):
     """CUPED theta and variance-reduction fraction from exact per-user
     week-1/week-4 spend moments (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     day = F.col("ts").cast("date")
     spend = cents("value")
-    per_user = ev.groupBy("user_id").agg(
+    per_user = events.groupBy("user_id").agg(
         F.sum(F.when(day < F.lit("2024-01-08").cast("date"), spend).otherwise(0))
         .cast("bigint")
         .alias("x"),
@@ -1108,19 +1096,17 @@ FROM means
 
 
 @register("q378_diff_in_diff", oracle=_DID_ORACLE)
-def q378(spark, sf_dir):
+def q378(orders, customer):
     """Difference-in-differences on mean order value: BUILDING vs
     AUTOMOBILE, 1997 vs 1998 (oracle comment)."""
-    t = load_tables(spark, sf_dir)
-    o, c = t["orders"], t["customer"]
     cells = (
-        o.where(
+        orders.where(
             (F.col("o_orderdate") >= F.lit("1997-01-01").cast("date"))
             & (F.col("o_orderdate") < F.lit("1999-01-01").cast("date"))
         )
         .join(
             F.broadcast(
-                c.where(F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")).select(
+                customer.where(F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")).select(
                     "c_custkey", "c_mktsegment"
                 )
             ),
@@ -1179,15 +1165,14 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 
 @register("q379_metadata_columns", oracle=_META_ORACLE)
-def q379(spark, sf_dir):
+def q379(spark, events):
     """Per-file row audit of a partitioned write via the _metadata
     hidden column (oracle comment)."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     d = scratch_dir("q379_by_type")
     (
-        ev.select("event_id", "event_type")
+        events.select("event_id", "event_type")
         .coalesce(1)
         .write.mode("overwrite")
         .partitionBy("event_type")
@@ -1252,13 +1237,13 @@ ORDER BY cc_micro DESC, d.node LIMIT 20
 
 
 @register("q380_clustering_coefficient", oracle=_CLUSTERING_ORACLE)
-def q380(spark, sf_dir):
+def q380(lineitem):
     """Top-20 local clustering coefficients over the co-purchase part
     graph (oracle comment)."""
     from ..operators.triangles import cooccurrence_edges, triangle_list
 
     li = (
-        load_tables(spark, sf_dir)["lineitem"]
+        lineitem
         .where(F.col("l_partkey") % 2 == 0)
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
     )
@@ -1331,11 +1316,10 @@ ORDER BY day
 
 
 @register("q381_rolling_correlation", oracle=_ROLLCORR_ORACLE)
-def q381(spark, sf_dir):
+def q381(orders):
     """Trailing-28-day Pearson correlation of daily revenue vs order
     count on the day spine (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    d = o.groupBy(F.col("o_orderdate").alias("day")).agg(
+    d = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(cents("o_totalprice")).cast("bigint").alias("x"),
         F.count("*").cast("bigint").alias("y"),
     )
@@ -1388,10 +1372,9 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 
 @register("q382_ordered_set_aggs", oracle=_ORDSET_ORACLE)
-def q382(spark, sf_dir):
+def q382(spark):
     """Built-in MEDIAN + PERCENTILE_DISC WITHIN GROUP per event type
     (oracle comment)."""
-    load_tables(spark, sf_dir)
     return spark.sql(
         """
         SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1439,10 +1422,9 @@ FROM masks GROUP BY user_id % 8 ORDER BY bucket
 
 
 @register("q383_bitmask_rollup", oracle=_BITMASK_ORACLE)
-def q383(spark, sf_dir):
+def q383(spark):
     """BIT_AND/BIT_OR/BIT_XOR rollup of per-user capability masks
     (oracle comment)."""
-    load_tables(spark, sf_dir)
     return spark.sql(
         """
         WITH masks AS (
@@ -1492,9 +1474,8 @@ FROM orders GROUP BY 1 ORDER BY yr
 
 
 @register("q384_multi_agg_pivot", oracle=_MPIVOT_ORACLE)
-def q384(spark, sf_dir):
+def q384(spark):
     """PIVOT with two aggregates per status value (oracle comment)."""
-    load_tables(spark, sf_dir)
     wide = spark.sql(
         """
         SELECT * FROM (
@@ -1590,17 +1571,16 @@ FROM ranked r, cut c ORDER BY r.event_type
 
 
 @register("q385_bh_fdr", oracle=_BH_ORACLE)
-def q385(spark, sf_dir):
+def q385(spark, events):
     """BH step-up at FDR 0.10 over five md5-permutation p-values
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     # pinned: per feeds the observed split AND the 60-permutation
     # expansion — unpinned, the events scan+aggregate runs twice; ranked
     # below is pinned because the BH cut AND the final projection would
     # otherwise each re-run the whole permutation subtree (guide §2.4;
     # before-plan: 12 Exchanges)
     per = (
-        ev.groupBy("event_type", "user_id")
+        events.groupBy("event_type", "user_id")
         .agg(
             F.sum(cents("value")).cast("bigint").alias("cents")
         )
@@ -1741,10 +1721,10 @@ FROM stats s
 
 
 @register("q386_xmr_control_chart", oracle=_XMR_ORACLE)
-def q386(spark, sf_dir):
+def q386(orders):
     """XmR chart summary of daily revenue: center, UCL/LCL, exact
     out-of-control day count (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     mr = daily.select(
         "day",
         "cents",
@@ -1832,11 +1812,10 @@ FROM pairs WHERE na > 0 AND nb > 0 ORDER BY label
 
 
 @register("q387_centroid_drift", oracle=_CDRIFT_ORACLE)
-def q387(spark, sf_dir):
+def q387(embeddings):
     """Per-label cosine between early-half and late-half embedding
     centroids (oracle comment)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    v = e.select(
+    v = embeddings.select(
         "vec_id",
         "label",
         F.transform(
@@ -1942,14 +1921,13 @@ FROM gsig, pool p WHERE p.n * p.sxx - p.sx * p.sx > 0
 
 
 @register("q388_simpsons_paradox", oracle=_SIMPSON_ORACLE)
-def q388(spark, sf_dir):
+def q388(lineitem, part):
     """Pooled vs per-brand slope signs of quantity~discount (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
     pts = (
-        t["lineitem"]
+        lineitem
         .join(
-            F.broadcast(t["part"].select("p_partkey", "p_brand")),
+            F.broadcast(part.select("p_partkey", "p_brand")),
             F.col("l_partkey") == F.col("p_partkey"),
         )
         .select(
@@ -2043,12 +2021,11 @@ FROM classed GROUP BY abc ORDER BY abc
 
 
 @register("q389_abc_classification", oracle=_ABC_ORACLE)
-def q389(spark, sf_dir):
+def q389(lineitem):
     """A/B/C revenue classes over the part dimension frame (oracle
     comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     d38 = "decimal(38,0)"
-    per_part = li.groupBy(F.col("l_partkey").alias("part")).agg(
+    per_part = lineitem.groupBy(F.col("l_partkey").alias("part")).agg(
         F.expr(
             f"CAST((2 * SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS {d38})"
             f" * (10000 - CAST(CAST(l_discount AS DECIMAL(18,4)) * 10000 AS BIGINT)))"
@@ -2153,13 +2130,13 @@ FROM flags
 
 
 @register("q390_outlier_agreement", oracle=_OUTAGREE_ORACLE)
-def q390(spark, sf_dir):
+def q390(orders):
     """Agreement matrix of 3-sigma / MAD / Tukey outlier rules on daily
     revenue, all flags exact integer predicates (oracle comment)."""
     # pinned: daily (|days| rows) feeds FIVE consumers (nn, m, hist,
     # devh, flags) — unpinned, each re-runs the lineitem×orders daily
     # aggregate (guide §2.4; before-plan: 29 Exchanges)
-    daily = pin(_daily_cents(spark, sf_dir))
+    daily = pin(_daily_cents(orders))
     d38 = "decimal(38,0)"
     nn = daily.agg(F.count("*").cast("bigint").alias("n"))
     m = daily.agg(
@@ -2280,16 +2257,15 @@ FROM prof ORDER BY feature
 
 
 @register("q391_feature_screen", oracle=_FSCREEN_ORACLE)
-def q391(spark, sf_dir):
+def q391(lineitem):
     """NZV / high-cardinality screen over four candidate feature
     columns (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     stacked = (
-        li.selectExpr("'l_linestatus' AS feature", "l_linestatus AS val")
-        .unionAll(li.selectExpr("'l_returnflag'", "l_returnflag"))
-        .unionAll(li.selectExpr("'l_partkey'", "CAST(l_partkey AS STRING)"))
+        lineitem.selectExpr("'l_linestatus' AS feature", "l_linestatus AS val")
+        .unionAll(lineitem.selectExpr("'l_returnflag'", "l_returnflag"))
+        .unionAll(lineitem.selectExpr("'l_partkey'", "CAST(l_partkey AS STRING)"))
         .unionAll(
-            li.selectExpr(
+            lineitem.selectExpr(
                 "'l_quantity'", "CAST(CAST(l_quantity AS BIGINT) AS STRING)"
             )
         )
@@ -2353,13 +2329,12 @@ FROM toks GROUP BY source ORDER BY source
 
 
 @register("q392_context_budget_fit", oracle=_CTXFIT_ORACLE)
-def q392(spark, sf_dir):
+def q392(documents):
     """Share of docs fitting 128/512/2048-token windows per source
     (oracle comment)."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "source", F.size(T.tokens(F.col("text"))).cast("bigint").alias("n_tok")
     )
     return (
@@ -2422,11 +2397,10 @@ FROM g
 
 
 @register("q393_k_anonymity", oracle=_KANON_ORACLE)
-def q393(spark, sf_dir):
+def q393(customer):
     """k-anonymity (k=5) and l-diversity (l=2) audit over the
     (nation, balance-band) quasi-identifier (oracle comment)."""
-    c = load_tables(spark, sf_dir)["customer"]
-    g = c.groupBy(
+    g = customer.groupBy(
         F.col("c_nationkey").alias("nation"),
         F.floor(F.col("c_acctbal") / 2000).cast("bigint").alias("bal_band"),
     ).agg(
@@ -2490,20 +2464,18 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM customer) AS n_customers,
 
 
 @register("q394_pseudonymization", oracle=_PSEUDO_ORACLE)
-def q394(spark, sf_dir):
+def q394(customer, orders):
     """sha256 key tokenization preserves the orders->customer join
     bit-for-bit (oracle comment)."""
-    t = load_tables(spark, sf_dir)
-    c, o = t["customer"], t["orders"]
     tok = lambda col: F.sha2(  # noqa: E731
         F.concat(F.lit("pepper:"), F.col(col).cast("string")), 256
     )
-    ch = c.select(F.col("c_custkey").alias("ck"), tok("c_custkey").alias("tok"))
-    oh = o.select(tok("o_custkey").alias("otok"))
-    n_cust = c.agg(F.count("*").cast("bigint").alias("n_customers"))
+    ch = customer.select(F.col("c_custkey").alias("ck"), tok("c_custkey").alias("tok"))
+    oh = orders.select(tok("o_custkey").alias("otok"))
+    n_cust = customer.agg(F.count("*").cast("bigint").alias("n_customers"))
     n_tok = ch.agg(F.countDistinct("tok").cast("bigint").alias("n_tokens"))
     jr = (
-        o.join(c, F.col("o_custkey") == F.col("c_custkey"))
+        orders.join(customer, F.col("o_custkey") == F.col("c_custkey"))
         .agg(F.count("*").cast("bigint").alias("joined_raw"))
     )
     jt = oh.join(F.broadcast(ch.select("tok")), F.col("otok") == F.col("tok")).agg(
@@ -2561,12 +2533,11 @@ FROM r
 
 
 @register("q395_ab_power", oracle=_POWER_ORACLE)
-def q395(spark, sf_dir):
+def q395(orders):
     """Required n per arm for 80% power, 5% two-sided alpha, 2%
     relative MDE on mean order value (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     d38 = "decimal(38,0)"
-    m = o.select(cents("o_totalprice").alias("x")).agg(
+    m = orders.select(cents("o_totalprice").alias("x")).agg(
         F.count("*").cast(d38).alias("n"),
         F.sum("x").cast(d38).alias("sx"),
         F.sum(F.col("x").cast(d38) * F.col("x")).cast(d38).alias("sxx"),
@@ -2610,16 +2581,15 @@ FROM alerts ORDER BY peak_burst DESC, user_id LIMIT 15
 
 
 @register("q396_velocity_alerts", oracle=_VELOCITY_ORACLE)
-def q396(spark, sf_dir):
+def q396(events):
     """Trailing-24h RANGE-frame burst detection per user (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))
         .rangeBetween(-86400000000, 0)
     )
-    bursts = ev.select(
+    bursts = events.select(
         "user_id", "ts", F.count("*").over(w).alias("burst")
     )
     return (
@@ -2696,12 +2666,11 @@ FROM per_class ORDER BY lang
 
 
 @register("q397_per_class_prf", oracle=_PRF_ORACLE)
-def q397(spark, sf_dir):
+def q397(documents):
     """Per-class precision/recall/F1 of the q47 langid heuristic
     against declared labels (oracle comment)."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"]
     tk = T.tokens(F.col("text"))
     markers = {
         "en": ("the", "a", "of"),
@@ -2712,7 +2681,7 @@ def q397(spark, sf_dir):
     def in_markers(ws):
         return lambda x: x.isin(*ws)
 
-    scored = d.select(
+    scored = documents.select(
         "lang",
         *[
             F.size(F.filter(tk, in_markers(ws))).alias(f"s_{lg}")
@@ -2806,15 +2775,14 @@ FROM s
 
 
 @register("q398_binary_file_source", oracle=_BINFILE_ORACLE)
-def q398(spark, sf_dir):
+def q398(spark, nation):
     """binaryFile-format round trip: write a byte-deterministic text
     file, read it back as an opaque blob, digest it (oracle comment)."""
     from ..scratch import scratch_dir
 
-    n = load_tables(spark, sf_dir)["nation"]
     d = scratch_dir("q398_blob")
     (
-        n.orderBy("n_nationkey")
+        nation.orderBy("n_nationkey")
         .selectExpr("CAST(n_nationkey AS STRING) || '|' || n_name AS value")
         .coalesce(1)
         .write.mode("overwrite")
@@ -2880,13 +2848,12 @@ ORDER BY cos4 DESC, d.doc_a, d.doc_b LIMIT 15
 
 
 @register("q399_sparse_cosine_pairs", oracle=_SPARSECOS_ORACLE)
-def q399(spark, sf_dir):
+def q399(documents):
     """Top-15 TF-IDF cosine pairs over rare (df<=25) terms (oracle
     comment)."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"]
-    tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
+    tok = documents.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
     # pinned: tf feeds df, nn AND the weight join — unpinned, the
     # CPU-heavy tokenize+explode pass re-runs per reference (guide §2.4;
     # before-plan: 23 Exchanges)
@@ -2983,10 +2950,9 @@ ORDER BY e.k LIMIT 1
 
 
 @register("q400_sql_scripting", oracle=_SCRIPT_ORACLE)
-def q400(spark, sf_dir):
+def q400(spark):
     """BEGIN/DECLARE/WHILE compound statement doubling-searching the
     25%-coverage day count (oracle comment)."""
-    load_tables(spark, sf_dir)
     # The WHILE loop's scalar subqueries re-evaluate the view per SET;
     # over a plain view that re-ran the orders aggregate + global
     # window ~2+log2(k) times (guide §2.4). Pin the |days|-row ranked
@@ -3038,7 +3004,7 @@ def q400(spark, sf_dir):
 
 
 @register("q401_dynamic_gap_sessions")
-def q401(spark, sf_dir):
+def q401(events):
     """session_window with a per-row gap expression (purchase 30 min,
     rest 10 min): session and event counts. Rows-only vs a lag-based
     oracle is NOT registered because Spark's dynamic session merge
@@ -3047,11 +3013,10 @@ def q401(spark, sf_dir):
     twin (tests/test_properties.py) checks Spark-vs-Spark: the
     session_window result must equal the iterative lag-based
     sessionizer computed IN SPARK with identical semantics."""
-    ev = load_tables(spark, sf_dir)["events"]
     gap = F.when(F.col("event_type") == "purchase", F.lit("30 minutes")).otherwise(
         F.lit("10 minutes")
     )
-    sess = ev.groupBy("user_id", F.session_window("ts", gap).alias("w")).agg(
+    sess = events.groupBy("user_id", F.session_window("ts", gap).alias("w")).agg(
         F.count("*").alias("n")
     )
     return sess.agg(
@@ -3099,10 +3064,10 @@ FROM ranked
 
 
 @register("q402_wilcoxon_signed_rank", oracle=_WILCOXON_ORACLE)
-def q402(spark, sf_dir):
+def q402(orders):
     """2*W+ signed-rank statistic of week-over-week same-weekday
     revenue deltas, from the |delta| histogram (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     epoch = F.datediff(F.col("day").cast("date"), F.lit("1970-01-01").cast("date"))
     idx = daily.select(
         (epoch.cast("bigint") / 7).cast("bigint").alias("wk"),
@@ -3167,10 +3132,10 @@ FROM ev
 
 
 @register("q403_mase_benchmark", oracle=_MASE_ORACLE)
-def q403(spark, sf_dir):
+def q403(orders):
     """MASE of the lag-7 seasonal-naive vs lag-1 naive on daily revenue
     (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     w = Window.orderBy("day")
     lagd = daily.select(
         "cents",
@@ -3212,11 +3177,10 @@ FROM documents GROUP BY lang ORDER BY lang
 
 
 @register("q404_encoding_density", oracle=_ENCDENS_ORACLE)
-def q404(spark, sf_dir):
+def q404(documents):
     """UTF-8 bytes per character by language (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     return (
-        d.groupBy("lang")
+        documents.groupBy("lang")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum(F.char_length("text")).cast("bigint").alias("n_chars"),
@@ -3270,10 +3234,9 @@ ORDER BY lift_micro DESC, s2.a, s2.bb LIMIT 15
 
 
 @register("q405_association_rules", oracle=_ASSOC_ORACLE)
-def q405(spark, sf_dir):
+def q405(lineitem):
     """Top-15 item-pair rules by lift, with confidence and leverage in
     exact micro units (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     # ONE map-side-combined collect_set per order (dedupes items like
     # the former DISTINCT), pinned: the basket frame feeds n / s1 / the
     # pair expansion — the former distinct b was re-derived per
@@ -3282,7 +3245,7 @@ def q405(spark, sf_dir):
     # codegen flatten/transform idiom (q299/q461); per-basket fan
     # unchanged (<= 7 items/order).
     sets = (
-        li.groupBy(F.col("l_orderkey").alias("ok"))
+        lineitem.groupBy(F.col("l_orderkey").alias("ok"))
         .agg(F.collect_set("l_partkey").alias("ps"))
         .transform(pin)
     )
@@ -3382,15 +3345,14 @@ FROM terms
 
 
 @register("q406_price_indices", oracle=_PRICEIDX_ORACLE)
-def q406(spark, sf_dir):
+def q406(lineitem, orders):
     """Laspeyres/Paasche/Fisher price indices 1997->1998 over parts
     active in both years (oracle comment)."""
-    t = load_tables(spark, sf_dir)
     d38 = "decimal(38,0)"
     li = (
-        t["lineitem"]
+        lineitem
         .join(
-            t["orders"]
+            orders
             .where(
                 (F.col("o_orderdate") >= F.lit("1997-01-01").cast("date"))
                 & (F.col("o_orderdate") < F.lit("1999-01-01").cast("date"))
@@ -3495,12 +3457,11 @@ GROUP BY a.seg, b.seg ORDER BY seg_1997, seg_1998
 
 
 @register("q407_segment_migration", oracle=_MIGRATION_ORACLE)
-def q407(spark, sf_dir):
+def q407(spark, orders):
     """Quartile-spend migration matrix for customers active in 1997
     and 1998 (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     spend = (
-        o.where(
+        orders.where(
             (F.col("o_orderdate") >= F.lit("1997-01-01").cast("date"))
             & (F.col("o_orderdate") < F.lit("1999-01-01").cast("date"))
         )
@@ -3619,13 +3580,13 @@ FROM w, tri
 
 
 @register("q408_triad_census", oracle=_TRIAD_ORACLE)
-def q408(spark, sf_dir):
+def q408(lineitem):
     """Wedges, closed wedges, and global transitivity of the
     co-purchase graph (oracle comment)."""
     from ..operators.triangles import cooccurrence_edges, triangle_count
 
     li = (
-        load_tables(spark, sf_dir)["lineitem"]
+        lineitem
         .where(F.col("l_partkey") % 2 == 0)
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
     )
@@ -3700,11 +3661,10 @@ ORDER BY vec_a, vec_b
 
 
 @register("q409_mutual_nn", oracle=_MNN_ORACLE)
-def q409(spark, sf_dir):
+def q409(embeddings):
     """Reciprocal cosine-nearest-neighbor pairs among the first 120
     vectors (oracle comment)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    v = e.where(F.col("vec_id") < 120).select(
+    v = embeddings.where(F.col("vec_id") < 120).select(
         "vec_id",
         F.transform(
             "embedding", lambda x: F.round(x.cast("double") * 1000).cast("bigint")
@@ -3775,15 +3735,14 @@ FROM o GROUP BY prio ORDER BY prio
 
 
 @register("q410_argmax_aggregates", oracle=_ARGMAX_ORACLE)
-def q410(spark, sf_dir):
+def q410(orders):
     """MAX_BY/MIN_BY with a packed unique ordering per order priority
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     packed = (
         cents("o_totalprice") * 100000000
         + F.col("o_orderkey")
     ).alias("packed")
-    base = o.select(
+    base = orders.select(
         F.col("o_orderpriority").alias("prio"),
         F.col("o_orderstatus").alias("status"),
         packed,
@@ -3840,11 +3799,10 @@ FROM g ORDER BY bucket
 
 
 @register("q411_wilson_ci", oracle=_WILSON_ORACLE)
-def q411(spark, sf_dir):
+def q411(events):
     """Wilson 95% bounds on per-bucket purchase conversion (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    u = ev.groupBy("user_id").agg(
+    u = events.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("conv")
     )
     g = u.groupBy((F.col("user_id") % 8).cast("bigint").alias("bucket")).agg(
@@ -3899,12 +3857,11 @@ FROM c
 
 
 @register("q412_capture_recapture", oracle=_CHAPMAN_ORACLE)
-def q412(spark, sf_dir):
+def q412(events):
     """Chapman mark-recapture estimate of the active population from
     week-1/week-2 overlap (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     day = F.col("ts").cast("date")
-    u = ev.groupBy("user_id").agg(
+    u = events.groupBy("user_id").agg(
         F.max(
             F.when(day < F.lit("2024-01-08").cast("date"), 1).otherwise(0)
         ).alias("w1"),
@@ -3962,13 +3919,12 @@ FROM fof f, tot t WHERE f.r <= 5 ORDER BY f.r
 
 
 @register("q413_good_turing", oracle=_GT_ORACLE)
-def q413(spark, sf_dir):
+def q413(documents):
     """Frequency-of-frequencies (r<=5) + Good-Turing unseen mass
     (oracle comment)."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"]
-    tok = d.select(F.explode(T.tokens(F.col("text"))).alias("term"))
+    tok = documents.select(F.explode(T.tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("term").agg(F.count("*").cast("bigint").alias("r"))
     fof = tf.groupBy("r").agg(F.count("*").cast("bigint").alias("n_r"))
     tot = fof.agg(
@@ -4018,15 +3974,14 @@ FROM sup GROUP BY nation ORDER BY nation
 
 
 @register("q414_hhi_concentration", oracle=_HHI_ORACLE)
-def q414(spark, sf_dir):
+def q414(lineitem, supplier):
     """HHI of supplier revenue shares per nation market (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
     d38 = "decimal(38,0)"
     sup = (
-        t["lineitem"]
+        lineitem
         .join(
-            F.broadcast(t["supplier"].select("s_suppkey", "s_nationkey")),
+            F.broadcast(supplier.select("s_suppkey", "s_nationkey")),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .groupBy(F.col("s_nationkey").alias("nation"), F.col("l_suppkey").alias("supp"))
@@ -4093,10 +4048,9 @@ FROM checks GROUP BY fd ORDER BY fd
 
 
 @register("q415_fd_discovery", oracle=_FD_ORACLE)
-def q415(spark, sf_dir):
+def q415(orders, customer, nation, lineitem):
     """Functional-dependency audit over four candidate FDs (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
 
     def check(name, df):
         g = df.groupBy("x").agg(
@@ -4108,9 +4062,9 @@ def q415(spark, sf_dir):
     stacked = (
         check(
             "o_custkey->c_nationkey",
-            t["orders"]
+            orders
             .join(
-                F.broadcast(t["customer"].select("c_custkey", "c_nationkey")),
+                F.broadcast(customer.select("c_custkey", "c_nationkey")),
                 F.col("o_custkey") == F.col("c_custkey"),
             )
             .select(F.col("o_custkey").alias("x"), F.col("c_nationkey").alias("y")),
@@ -4118,7 +4072,7 @@ def q415(spark, sf_dir):
         .unionAll(
             check(
                 "n_nationkey->n_regionkey",
-                t["nation"].select(
+                nation.select(
                     F.col("n_nationkey").alias("x"), F.col("n_regionkey").alias("y")
                 ),
             )
@@ -4126,9 +4080,9 @@ def q415(spark, sf_dir):
         .unionAll(
             check(
                 "l_orderkey->o_custkey",
-                t["lineitem"]
+                lineitem
                 .join(
-                    t["orders"].select("o_orderkey", "o_custkey"),
+                    orders.select("o_orderkey", "o_custkey"),
                     F.col("l_orderkey") == F.col("o_orderkey"),
                 )
                 .select(F.col("l_orderkey").alias("x"), F.col("o_custkey").alias("y")),
@@ -4137,7 +4091,7 @@ def q415(spark, sf_dir):
         .unionAll(
             check(
                 "l_partkey->l_suppkey",
-                t["lineitem"].select(
+                lineitem.select(
                     F.col("l_partkey").alias("x"), F.col("l_suppkey").alias("y")
                 ),
             )
@@ -4191,12 +4145,11 @@ GROUP BY prev, nxt ORDER BY n DESC, from_type, to_type LIMIT 15
 
 
 @register("q416_transition_latency", oracle=_TRANSLAT_ORACLE)
-def q416(spark, sf_dir):
+def q416(events):
     """Mean inter-event gap per (from, to) transition, top-15 by count
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
+    seq = events.select(
         F.col("event_type").alias("prev"),
         F.lead("event_type").over(w).alias("nxt"),
         (F.lead(F.unix_micros("ts")).over(w) - F.unix_micros("ts")).alias("gap_us"),
@@ -4263,14 +4216,13 @@ FROM terms
 
 
 @register("q417_brier_skill", oracle=_BRIER_ORACLE)
-def q417(spark, sf_dir):
+def q417(events):
     """Brier score of the weeks-1-3 share forecast for week-4 purchase
     + skill vs climatology (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     day = F.col("ts").cast("date")
     pre = day < F.lit("2024-01-28").cast("date")
     u = (
-        ev.groupBy("user_id")
+        events.groupBy("user_id")
         .agg(
             F.count(F.when(pre, 1)).cast("bigint").alias("n"),
             F.count(F.when(pre & (F.col("event_type") == "purchase"), 1))
@@ -4340,14 +4292,13 @@ FROM agg WHERE words > 0 AND sentences > 0 ORDER BY source
 
 
 @register("q418_readability_ari", oracle=_ARI_ORACLE)
-def q418(spark, sf_dir):
+def q418(documents):
     """ARI readability per source from exact char/word/sentence totals
     (oracle comment)."""
     from ..functions import text as T
 
-    d = load_tables(spark, sf_dir)["documents"]
     tk = T.tokens(F.col("text"))
-    base = d.select(
+    base = documents.select(
         "source",
         F.aggregate(
             tk, F.lit(0).cast("bigint"), lambda a, t: a + F.length(t)

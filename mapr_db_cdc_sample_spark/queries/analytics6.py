@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions.exact import cents, rhu
-from ..io import load_tables
 from ..session import pin
 from ..operators import banding as B
 from ..operators.quantiles import exact_ntile_counts
@@ -54,18 +53,17 @@ FROM p GROUP BY batch ORDER BY batch
 
 
 @register("q420_length_bucket_batching", oracle=_BATCH_ORACLE)
-def q420(spark, sf_dir):
+def q420(documents):
     """Per-batch padding waste under length-sorted batching (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    hist = d.groupBy("n_chars").agg(F.count("*").alias("cnt"))
+    hist = documents.groupBy("n_chars").agg(F.count("*").alias("cnt"))
     w = Window.orderBy("n_chars").rowsBetween(Window.unboundedPreceding, -1)
     cum = hist.select(
         "n_chars", F.coalesce(F.sum("cnt").over(w), F.lit(0)).alias("cum_before")
     )
     wr = Window.partitionBy("n_chars").orderBy("doc_id")
     pos = (
-        d.select("doc_id", "n_chars")
+        documents.select("doc_id", "n_chars")
         .withColumn("rn", F.row_number().over(wr))
         .join(cum, "n_chars")
         .select("n_chars", (F.col("cum_before") + F.col("rn") - 1).alias("pos"))
@@ -108,16 +106,15 @@ GROUP BY nation, segment ORDER BY nation, segment
 
 
 @register("q421_l_diversity", oracle=_LDIV_ORACLE)
-def q421(spark, sf_dir):
+def q421(customer):
     """l-diversity over (nation, segment) quasi-identifier groups
     (oracle comment)."""
-    c = load_tables(spark, sf_dir)["customer"]
     band = F.expr(
         "(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) + 100000)"
         " DIV 200000"
     )
     return (
-        c.select(
+        customer.select(
             F.col("c_nationkey").alias("nation"),
             F.col("c_mktsegment").alias("segment"),
             band.alias("band"),
@@ -159,11 +156,10 @@ FROM a2 ORDER BY authority2 DESC, partkey LIMIT 20
 
 
 @register("q422_hits_scores", oracle=_HITS_ORACLE)
-def q422(spark, sf_dir):
+def q422(lineitem):
     """Two-round integer HITS; top-20 authority parts (oracle
     comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    e = li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct()
+    e = lineitem.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct()
     a1 = e.groupBy("p").agg(F.count("*").cast("bigint").alias("a"))
     h1 = e.join(a1, "p").groupBy("s").agg(F.sum("a").cast("bigint").alias("h"))
     a2 = e.join(h1, "s").groupBy("p").agg(F.sum("h").cast("bigint").alias("a"))
@@ -222,11 +218,10 @@ FROM s, tot
 
 
 @register("q423_kruskal_wallis", oracle=_KW_ORACLE)
-def q423(spark, sf_dir):
+def q423(orders):
     """Kruskal-Wallis H in exact micro units from the value histogram
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("grp"),
         cents("o_totalprice").alias("cents"),
     )
@@ -298,11 +293,10 @@ FROM agg a JOIN agg b ON a.grp = 1 AND b.grp = 0
 
 
 @register("q424_cohens_d", oracle=_COHEN_ORACLE)
-def q424(spark, sf_dir):
+def q424(events):
     """Cohen's d with pooled variance over exact integer moments
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    g = ev.select(
+    g = events.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("grp"),
         cents("value").alias("cents"),
     )
@@ -368,11 +362,10 @@ FROM r WHERE rn <= 8 GROUP BY epoch ORDER BY epoch
 
 
 @register("q425_epoch_shuffle", oracle=_EPOCH_ORACLE)
-def q425(spark, sf_dir):
+def q425(spark, documents):
     """First 8 docs of each epoch's md5-keyed permutation (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    e = d.select("doc_id").crossJoin(
+    e = documents.select("doc_id").crossJoin(
         F.broadcast(
             spark.range(0, 3).select(F.col("id").cast("bigint").alias("epoch"))
         )
@@ -431,11 +424,10 @@ FROM per WHERE d >= 2 ORDER BY part
 
 
 @register("q426_croston_demand", oracle=_CROSTON_ORACLE)
-def q426(spark, sf_dir):
+def q426(lineitem):
     """Croston size/interval/rate in round-half-up micro units (oracle
     comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    f = li.where(F.col("l_partkey") % 50 == 0).select(
+    f = lineitem.where(F.col("l_partkey") % 50 == 0).select(
         F.col("l_partkey").alias("part"),
         F.col("l_shipdate").cast("date").alias("day"),
         F.col("l_quantity").cast("bigint").alias("qty"),
@@ -486,12 +478,11 @@ FROM per ORDER BY source
 
 
 @register("q427_type_token_ratio", oracle=_TTR_ORACLE)
-def q427(spark, sf_dir):
+def q427(documents):
     """TTR + hapax share per source over the token TYPE frame (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     tf = (
-        d.select("source", F.explode(T.tokens(F.col("text"))).alias("tok"))
+        documents.select("source", F.explode(T.tokens(F.col("text"))).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
@@ -544,11 +535,10 @@ FROM per
 
 
 @register("q428_forecast_errors", oracle=_FCERR_ORACLE)
-def q428(spark, sf_dir):
+def q428(orders):
     """WAPE + sMAPE of the calendar lag-7 naive forecast (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
+    daily = orders.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         F.sum(cents("o_totalprice")).cast("bigint").alias("cents")
     )
     a = daily.alias("a")
@@ -609,24 +599,23 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM members) AS n_members,
 
 
 @register("q429_bloom_fpr", oracle=_BLOOM_ORACLE)
-def q429(spark, sf_dir):
+def q429(documents):
     """Observed Bloom-filter false positives against the exact anti-join
     truth (oracle comment). COUNT(DISTINCT pos) = 3 (not COUNT(*)) on
     the probe side: two of a key's 3 hashes can collide on one
     position."""
-    d = load_tables(spark, sf_dir)["documents"]
     # pinned: members feeds the probe anti-join, the bit positions AND
     # its count; probes feeds the fp positions AND its count; bits feeds
     # the fp join AND its count — unpinned, each documents scan+distinct
     # re-ran per reference (guide §2.4; before-plan: 13 Exchanges)
     members = (
-        d.where(F.col("source") == "src0")
+        documents.where(F.col("source") == "src0")
         .select(F.md5("text").alias("k"))
         .distinct()
         .transform(pin)
     )
     probes = (
-        d.where(F.col("source") == "src1")
+        documents.where(F.col("source") == "src1")
         .select(F.md5("text").alias("k"))
         .distinct()
         .join(members, "k", "left_anti")
@@ -702,11 +691,10 @@ FROM sums
 
 
 @register("q430_bigram_prediction", oracle=_BIGRAM_ORACLE)
-def q430(spark, sf_dir):
+def q430(documents):
     """Bigram argmax next-token accuracy over the corpus (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    tok = d.select("doc_id", F.posexplode(T.tokens(F.col("text"))).alias("pos", "w"))
+    tok = documents.select("doc_id", F.posexplode(T.tokens(F.col("text"))).alias("pos", "w"))
     wd = Window.partitionBy("doc_id").orderBy("pos")
     pairs = (
         tok.withColumn("w2", F.lead("w").over(wd))
@@ -762,13 +750,12 @@ GROUP BY e.event_type ORDER BY e.event_type
 """
 
 
-def _q431_fact(spark, sf_dir):
+def _q431_fact(spark, events):
     """Partitioned fact layout for q431 (rebuilt in scratch per call)."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     path = scratch_dir("q431_events")
-    ev.select(
+    events.select(
         "event_type",
         cents("value").alias("cents"),
     ).write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -776,15 +763,14 @@ def _q431_fact(spark, sf_dir):
 
 
 @register("q431_dpp_prune", oracle=_DPP_ORACLE)
-def q431(spark, sf_dir):
+def q431(spark, events):
     """Star-schema aggregate over a partitioned fact with a runtime
     dim filter — the scan prunes via dynamic partition pruning (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    fact = _q431_fact(spark, sf_dir)
+    fact = _q431_fact(spark, events)
     w = Window.orderBy(F.col("cnt").desc(), "event_type")
     dim = (
-        ev.groupBy("event_type")
+        events.groupBy("event_type")
         .agg(F.count("*").alias("cnt"))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 2)
@@ -823,15 +809,14 @@ ORDER BY o.nation, l.cents DESC, l.custkey
 
 
 @register("q432_lateral_join_df", oracle=_LATDF_ORACLE)
-def q432(spark, sf_dir):
+def q432(customer):
     """Top-2 customers per nation via DataFrame.lateralJoin +
     Column.outer() (oracle comment)."""
-    c = load_tables(spark, sf_dir)["customer"]
-    outer = c.groupBy(F.col("c_nationkey").alias("nation")).agg(
+    outer = customer.groupBy(F.col("c_nationkey").alias("nation")).agg(
         F.count("*").cast("bigint").alias("n_cust")
     )
     inner = (
-        c.where(F.col("c_nationkey") == F.col("nation").outer())
+        customer.where(F.col("c_nationkey") == F.col("nation").outer())
         .select(
             F.col("c_custkey").alias("custkey"),
             cents("c_acctbal").alias("cents"),
@@ -877,11 +862,10 @@ FROM bp GROUP BY decile ORDER BY decile
 
 
 @register("q433_dedup_threshold_curve", oracle=_SIMHIST_ORACLE)
-def q433(spark, sf_dir):
+def q433(documents):
     """Decile histogram of exact candidate-pair Jaccard in integer
     basis points (oracle comment above)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    _sig, pairs = B.candidate_grams(_minhash_corpus(d))
+    _sig, pairs = B.candidate_grams(_minhash_corpus(documents))
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     uni = F.size("ga") + F.size("gb") - inter
     bp = (
@@ -959,11 +943,10 @@ FROM tot
 
 
 @register("q434_brown_forsythe", oracle=_BROWN_FORSYTHE_ORACLE)
-def q434(spark, sf_dir):
+def q434(events):
     """Brown-Forsythe F over doubled-median absolute deviations (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    v = ev.select(
+    v = events.select(
         F.col("event_type").alias("grp"),
         cents("value").alias("c"),
     )
@@ -1078,12 +1061,11 @@ ORDER BY nn.grp
 
 
 @register("q435_mann_kendall", oracle=_MK_ORACLE)
-def q435(spark, sf_dir):
+def q435(orders):
     """Mann-Kendall S / var18 / continuity-corrected z per priority
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     m = (
-        o.select(
+        orders.select(
             F.col("o_orderpriority").alias("grp"),
             F.date_format("o_orderdate", "yyyy-MM").alias("mon"),
         )
@@ -1182,7 +1164,7 @@ ORDER BY npos.doc_id
 
 
 @register("q436_substring_dup_profile", oracle=_SUBDUP_ORACLE)
-def q436(spark, sf_dir):
+def q436(spark, documents):
     """Per-doc shared 20-char-shingle coverage in micro units (oracle
     comment). The position stream collapses to (shingle, doc) COUNTS
     first, so the wide string key is shuffled once and the dup-set
@@ -1196,10 +1178,9 @@ def q436(spark, sf_dir):
     ~200x-multiplying shingle explode runs on 2 cores (410s at the
     sf1 rehearsal vs 2.3s/core-minute of actual work; shuffling the
     raw docs first costs MBs)."""
-    d = load_tables(spark, sf_dir)["documents"]
     width = int(spark.sparkContext.defaultParallelism)
     sh = (
-        d.where(F.length("text") >= 20)
+        documents.where(F.length("text") >= 20)
         .repartition(width)
         .select(
             "doc_id",
@@ -1284,11 +1265,10 @@ FROM grid, tot GROUP BY pri, yr, n, big ORDER BY pri, yr
 
 
 @register("q437_t_closeness", oracle=_TCLOSE_ORACLE)
-def q437(spark, sf_dir):
+def q437(orders):
     """t-closeness TVD per (priority, year) class in micro units
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    b = o.select(
+    b = orders.select(
         F.col("o_orderpriority").alias("pri"),
         F.year("o_orderdate").cast("bigint").alias("yr"),
         F.col("o_orderstatus").alias("st"),
@@ -1381,11 +1361,10 @@ FROM t ORDER BY depth
 
 
 @register("q438_rank_biased_overlap", oracle=_RBO_ORACLE)
-def q438(spark, sf_dir):
+def q438(spark, lineitem):
     """Truncated RBO(p=0.9, k=50) of revenue vs quantity part rankings
     in exact nano units (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    pr = li.groupBy(F.col("l_partkey").alias("p")).agg(
+    pr = lineitem.groupBy(F.col("l_partkey").alias("p")).agg(
         F.sum(
             cents("l_extendedprice")
         )
@@ -1463,12 +1442,11 @@ FROM ag ORDER BY lag
 
 
 @register("q439_cross_correlation", oracle=_CCF_ORACLE)
-def q439(spark, sf_dir):
+def q439(spark, events):
     """CCF of daily clicks vs purchases at lags -7..7 (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     x = (
-        ev.select(
+        events.select(
             F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
             .alias("t"),
             "event_type",
@@ -1561,12 +1539,11 @@ FROM best WHERE rn = 1 ORDER BY grp
 
 
 @register("q440_pettitt_changepoint", oracle=_PETTITT_ORACLE)
-def q440(spark, sf_dir):
+def q440(orders):
     """Pettitt K, changepoint month and p per priority (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     m = (
-        o.select(
+        orders.select(
             F.col("o_orderpriority").alias("grp"),
             F.date_format("o_orderdate", "yyyy-MM").alias("mon"),
         )
@@ -1642,14 +1619,13 @@ ORDER BY a, b
 
 
 @register("q441_symspell_join", oracle=_SYMSPELL_ORACLE)
-def q441(spark, sf_dir):
+def q441(part):
     """Distance-1 vocab pairs via deletion-variant equi-join (oracle
     comment)."""
-    p = load_tables(spark, sf_dir)["part"]
     v = (
-        p.select(F.explode(F.split("p_name", " ")).alias("tok"))
-        .unionAll(p.select(F.col("p_brand").alias("tok")))
-        .unionAll(p.select(F.col("p_type").alias("tok")))
+        part.select(F.explode(F.split("p_name", " ")).alias("tok"))
+        .unionAll(part.select(F.col("p_brand").alias("tok")))
+        .unionAll(part.select(F.col("p_type").alias("tok")))
         .select(F.lower("tok").alias("t"))
         .where(F.length("t") > 0)
         .distinct()
@@ -1714,14 +1690,13 @@ FROM bins, tot ORDER BY bin
 
 
 @register("q442_expected_calibration_error", oracle=_ECE_ORACLE)
-def q442(spark, sf_dir):
+def q442(events):
     """Per-bin calibration mass + overall ECE in exact micro units
     (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     cut = F.lit("2024-01-28").cast("date")
     day = F.col("ts").cast("date")
     u = (
-        ev.groupBy("user_id")
+        events.groupBy("user_id")
         .agg(
             F.count(F.when(day < cut, 1)).cast("bigint").alias("n"),
             F.count(F.when((day < cut) & (F.col("event_type") == "purchase"), 1))
@@ -1790,11 +1765,10 @@ FROM ag ORDER BY grp
 
 
 @register("q443_atkinson_index", oracle=_ATKINSON_ORACLE)
-def q443(spark, sf_dir):
+def q443(orders):
     """Atkinson(0.5) inequality per priority from an exact quantized
     sqrt sum (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("grp"),
         cents("o_totalprice").alias("cents"),
         F.round(F.sqrt(cents("o_totalprice").cast("double")) * 1000000, 0)
@@ -1852,11 +1826,10 @@ FROM per ORDER BY doc_id
 
 
 @register("q444_ngram_novelty", oracle=_NOVEL_ORACLE)
-def q444(spark, sf_dir):
+def q444(documents):
     """Per-test-doc unseen-8-gram share vs the md5 train split (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id",
         (
             F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
@@ -1938,11 +1911,10 @@ FROM cum c JOIN iso ON c.bin = iso.bin ORDER BY bin
 
 
 @register("q445_isotonic_calibration", oracle=_ISOTONIC_ORACLE)
-def q445(spark, sf_dir):
+def q445(events):
     """Isotonic bin rates via the minimax PAV identity over decile
     aggregates (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    scored = ev.select(
+    scored = events.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
         cents("value").alias("score"),
@@ -2057,7 +2029,7 @@ ORDER BY node
 
 
 @register("q446_consistent_hash_rebalance", oracle=_CHASH_ORACLE)
-def q446(spark, sf_dir):
+def q446(spark, orders):
     """Per-node placement before/after adding a ring node + moved share
     (oracle comment). The Spark path is the deployment form: the ring
     is computed ON THE DRIVER with hashlib md5 (160 entries — the
@@ -2098,8 +2070,7 @@ def q446(spark, sf_dir):
             for b in range(lo >> 24, (hi >> 24) + 1)
         ]
 
-    o = load_tables(spark, sf_dir)["orders"]
-    ks = o.select(
+    ks = orders.select(
         F.conv(
             F.substring(
                 F.md5(F.concat(F.lit("k"), F.col("o_orderkey").cast("string"))), 1, 8
@@ -2221,11 +2192,10 @@ FROM cum, nn GROUP BY nn.n
 
 
 @register("q447_two_pass_median", oracle=_MED2P_ORACLE)
-def q447(spark, sf_dir):
+def q447(lineitem):
     """Exact doubled median via coarse-bucket pass + bucket-local
     refinement (oracle comment; oracle is the direct one-pass form)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    v = li.select(
+    v = lineitem.select(
         cents("l_extendedprice").alias("c")
     )
     vb = v.withColumn("b", F.expr("c DIV 100000"))
@@ -2286,7 +2256,7 @@ def q447(spark, sf_dir):
 # Q accumulates the rounded terms — the two-stage rounding is the
 # contract, engine-exact by construction.
 from .analytics3 import _ACF_ORACLE as _ACF_FEED  # noqa: E402
-from .analytics3 import _DAILY_CTE, _daily_cents  # noqa: E402
+from .analytics3 import _DAILY_CTE, _daily_cents, q270  # noqa: E402
 
 _LB_ORACLE = f"""
 WITH acf AS ({_ACF_FEED}), nn AS (
@@ -2307,12 +2277,10 @@ FROM terms ORDER BY lag
 
 
 @register("q448_ljung_box", oracle=_LB_ORACLE)
-def q448(spark, sf_dir):
+def q448(orders):
     """Cumulative Ljung-Box Q over q270's exact ACF (oracle comment)."""
-    from . import REGISTRY
-
-    acf = REGISTRY["q270_autocorrelation"].fn(spark, sf_dir)
-    nn = _daily_cents(spark, sf_dir).agg(
+    acf = q270(orders)
+    nn = _daily_cents(orders).agg(
         F.count("*").cast("bigint").alias("n")
     )
     terms = acf.crossJoin(F.broadcast(nn)).selectExpr(
@@ -2364,11 +2332,10 @@ FROM tot
 
 
 @register("q449_cochran_armitage", oracle=_CA_ORACLE)
-def q449(spark, sf_dir):
+def q449(orders):
     """Cochran-Armitage Z² for trend in exact micro units (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    g = o.select(
+    g = orders.select(
         F.substring("o_orderpriority", 1, 1).cast("bigint").alias("t"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
     )
@@ -2444,13 +2411,12 @@ FROM et e JOIN rec ON rec.rn = e.rn ORDER BY t
 
 
 @register("q450_kaplan_meier", oracle=_KM_ORACLE)
-def q450(spark, sf_dir):
+def q450(events):
     """Product-limit survival curve in exact micro units (oracle
     comment)."""
     import pandas as pd
 
-    ev = load_tables(spark, sf_dir)["events"]
-    e = ev.select(
+    e = events.select(
         "user_id", F.col("ts").cast("date").alias("day"), "event_type"
     )
     ends = e.agg(F.max("day").alias("obs_end"))
@@ -2548,11 +2514,10 @@ FROM neg GROUP BY w, c, n_pairs ORDER BY w, c
 
 
 @register("q451_skipgram_pairs", oracle=_SKIPGRAM_ORACLE)
-def q451(spark, sf_dir):
+def q451(spark, documents):
     """Skip-gram pair types + md5-CDF unigram^0.75 negatives (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id", F.posexplode(T.tokens(F.col("text"))).alias("i0", "tok")
     ).select("doc_id", (F.col("i0") + 1).alias("i"), "tok")
     a = toks.select("doc_id", F.col("i").alias("ia"), F.col("tok").alias("w"))
@@ -2656,11 +2621,10 @@ FROM q ORDER BY d2 DESC, okey, line, x, y LIMIT 20
 
 
 @register("q452_mahalanobis_outliers", oracle=_MAHA_ORACLE)
-def q452(spark, sf_dir):
+def q452(lineitem):
     """Top-20 bivariate Mahalanobis outliers over exact integer moments
     (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    v = li.select(
+    v = lineitem.select(
         F.col("l_orderkey").alias("okey"),
         F.col("l_linenumber").alias("line"),
         F.col("l_quantity").cast("bigint").alias("x"),
@@ -2749,10 +2713,10 @@ FROM ag
 
 
 @register("q453_runs_test", oracle=_RUNS_ORACLE)
-def q453(spark, sf_dir):
+def q453(orders):
     """Wald-Wolfowitz runs z over the daily-revenue sign sequence
     (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     h = daily.groupBy("cents").agg(F.count("*").cast("bigint").alias("cnt"))
     wcum = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
     cum = h.select(
@@ -2866,11 +2830,10 @@ ORDER BY decile
 
 
 @register("q454_quantile_treatment_effects", oracle=_QTE_ORACLE)
-def q454(spark, sf_dir):
+def q454(spark, orders):
     """Per-decile treated-vs-control order-value shift in exact cents
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.when(
             F.substring("o_orderpriority", 1, 1).cast("int") <= 2, 1
         )
@@ -2959,12 +2922,11 @@ FROM bits ORDER BY tok
 
 
 @register("q455_postinglist_compression", oracle=_PLIST_ORACLE)
-def q455(spark, sf_dir):
+def q455(documents):
     """Per-term Elias-gamma vs raw posting-list bits (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     postings = (
-        d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok"))
+        documents.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok"))
         .distinct()
     )
     wt = Window.partitionBy("tok").orderBy("doc_id")
@@ -3042,14 +3004,14 @@ WHERE rec.rn >= 8 ORDER BY i.day
 
 
 @register("q456_holt_winters", oracle=_HW_ORACLE)
-def q456(spark, sf_dir):
+def q456(orders):
     """Holt-Winters additive (m=7) one-step forecasts in exact integer
     micro-cents (oracle comment). Python ints reproduce the
     positive-shift floor-division bit-for-bit — the q308 grouped-map
     lane for sequential state."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
 
     def hw(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("day").reset_index(drop=True)
@@ -3142,14 +3104,13 @@ FROM phi ORDER BY channel
 
 
 @register("q457_shapley_attribution", oracle=_SHAP_ORACLE)
-def q457(spark, sf_dir):
+def q457(spark, events):
     """Exact 3-channel Shapley conversion credit (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    fp = ev.groupBy("user_id").agg(
+    fp = events.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("pts")
     )
     conv = fp.where(F.col("pts").isNotNull())
-    e = ev.where(
+    e = events.where(
         F.col("event_type").isin("click", "view", "signup")
     ).select("user_id", "ts", "event_type")
     tch = (
@@ -3258,10 +3219,10 @@ FROM cents_scale ORDER BY k
 
 
 @register("q458_goertzel_weekly", oracle=_GOERTZEL_ORACLE)
-def q458(spark, sf_dir):
+def q458(spark, orders):
     """Weekly-harmonic DFT projections of daily revenue (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     w = Window.orderBy("day")
     idx = daily.select("cents", F.row_number().over(w).alias("rn"))
     lits = spark.createDataFrame(
@@ -3328,12 +3289,11 @@ ORDER BY months_on_board DESC, part
 
 
 @register("q459_leaderboard_persistence", oracle=_LEADER_ORACLE)
-def q459(spark, sf_dir):
+def q459(lineitem):
     """Tenure profile of monthly top-10 revenue parts (oracle
     comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     m = (
-        li.select(
+        lineitem.select(
             F.date_format("l_shipdate", "yyyy-MM").alias("mon"),
             F.col("l_partkey").alias("part"),
             cents("l_extendedprice").alias("cents"),
@@ -3405,11 +3365,10 @@ FROM win, integ
 
 
 @register("q460_littles_law", oracle=_LITTLE_ORACLE)
-def q460(spark, sf_dir):
+def q460(events):
     """Sweep-line L vs lambda*W in exact micro units (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    iv = ev.groupBy("user_id").agg(
+    iv = events.groupBy("user_id").agg(
         F.unix_micros(F.min("ts")).alias("a"),
         F.unix_micros(F.max("ts")).alias("b"),
     )
@@ -3505,10 +3464,9 @@ FROM p3 ORDER BY score_micro DESC, part LIMIT 20
 
 
 @register("q461_rwr_proximity", oracle=_RWR_ORACLE)
-def q461(spark, sf_dir):
+def q461(lineitem):
     """Three-round seeded RWR scores in integer micro (oracle
     comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     # Directed co-purchase edges with order counts, derived the q299
     # way: ONE map-side-combined collect_set per order (dedupes repeat
     # partkeys exactly like the former DISTINCT) + codegen pair
@@ -3517,7 +3475,7 @@ def q461(spark, sf_dir):
     # gone; the r10 decade measurement put q461's cost in exactly this
     # derivation). Per-order part lists are <= 7 items.
     pairs = (
-        li.groupBy("l_orderkey")
+        lineitem.groupBy("l_orderkey")
         .agg(F.collect_set("l_partkey").alias("ps"))
         .select(
             F.explode(
@@ -3632,12 +3590,11 @@ GROUP BY cum.tday, nn.n ORDER BY day
 
 
 @register("q462_rolling_p95", oracle=_ROLLP_ORACLE)
-def q462(spark, sf_dir):
+def q462(spark, orders):
     """Exact trailing-7-day p95 via mergeable day histograms (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     h = (
-        o.select(
+        orders.select(
             F.col("o_orderdate").alias("day"),
             cents("o_totalprice").alias("c"),
         )
@@ -3725,13 +3682,12 @@ ORDER BY cohort_month, age
 
 
 @register("q463_cohort_ltv", oracle=_LTV_ORACLE)
-def q463(spark, sf_dir):
+def q463(orders):
     """Cumulative cohort revenue by month age 0..5 (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     mi = F.year("o_orderdate") * 12 + F.month("o_orderdate")
-    fo = o.groupBy(F.col("o_custkey").alias("cust")).agg(F.min(mi).alias("m0"))
+    fo = orders.groupBy(F.col("o_custkey").alias("cust")).agg(F.min(mi).alias("m0"))
     rev = (
-        o.join(fo, F.col("o_custkey") == F.col("cust"))
+        orders.join(fo, F.col("o_custkey") == F.col("cust"))
         .select(
             "m0",
             (mi - F.col("m0")).alias("age"),
@@ -3804,11 +3760,10 @@ GROUP BY bin, bin_lo, w.width ORDER BY bin
 
 
 @register("q464_fd_binning", oracle=_FD_ORACLE)
-def q464(spark, sf_dir):
+def q464(orders):
     """Freedman-Diaconis-width histogram with exact integer edges
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         cents("o_totalprice").alias("c")
     )
     h = v.groupBy("c").agg(F.count("*").cast("bigint").alias("cnt"))
@@ -3887,15 +3842,14 @@ SELECT lane, segment, n_orders, rev_cents FROM (
 
 
 @register("q465_join_hint_parity", oracle=_HINTS_ORACLE)
-def q465(spark, sf_dir):
+def q465(orders, customer):
     """Identical aggregate through three hinted join strategies (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
-    o = t["orders"].select(
+    o = orders.select(
         "o_custkey",
         cents("o_totalprice").alias("cents"),
     )
-    c = t["customer"].select("c_custkey", "c_mktsegment")
+    c = customer.select("c_custkey", "c_mktsegment")
 
     def lane(name, hint):
         return (
@@ -3959,11 +3913,10 @@ FROM policy p JOIN eval_m e ON p.ctx = e.ctx ORDER BY ctx
 
 
 @register("q466_bandit_replay", oracle=_REPLAY_ORACLE)
-def q466(spark, sf_dir):
+def q466(events):
     """Replay estimate of the greedy policy per context (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    base = ev.select(
+    base = events.select(
         (
             F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
             .cast("bigint")
@@ -4058,24 +4011,23 @@ FROM c
 
 
 @register("q467_funnel_significance", oracle=_FUNNEL_Z_ORACLE)
-def q467(spark, sf_dir):
+def q467(events):
     """Pooled two-proportion z between consecutive funnel drops (oracle
     comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
     v1 = (
-        ev.where(F.col("event_type") == "view")
+        events.where(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
     )
     v2 = (
-        ev.where(F.col("event_type") == "click")
+        events.where(F.col("event_type") == "click")
         .join(v1, "user_id")
         .where(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
     )
     v3 = (
-        ev.where(F.col("event_type") == "purchase")
+        events.where(F.col("event_type") == "purchase")
         .join(v2, "user_id")
         .where(F.col("ts") > F.col("t2"))
         .groupBy("user_id")
@@ -4130,7 +4082,7 @@ def q467(spark, sf_dir):
     FROM events WHERE event_id % 20 = 0 ORDER BY event_id
     """,
 )
-def q468(spark, sf_dir):
+def q468(events):
     """Arrow-optimized scalar Python UDF, md5-exact (oracle comment)."""
     import hashlib
 
@@ -4140,9 +4092,8 @@ def q468(spark, sf_dir):
     def tag_hash(etype: str, eid: int) -> int:
         return int(hashlib.md5(f"{etype}#{eid}".encode()).hexdigest()[:7], 16)
 
-    ev = load_tables(spark, sf_dir)["events"]
     return (
-        ev.where(F.col("event_id") % 20 == 0)
+        events.where(F.col("event_id") % 20 == 0)
         .select("event_id", tag_hash("event_type", "event_id").alias("tag_hash"))
         .orderBy("event_id")
     )
@@ -4175,10 +4126,10 @@ ORDER BY day
 
 
 @register("q469_kz_filter", oracle=_KZ_ORACLE)
-def q469(spark, sf_dir):
+def q469(orders):
     """KZ(5,3) smoothed daily revenue in exact integer cents (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     w = Window.orderBy("day").rowsBetween(-2, 2)
 
     def ma(col):
@@ -4238,11 +4189,10 @@ FROM tot
 
 
 @register("q470_fixed_effects_slope", oracle=_FE_ORACLE)
-def q470(spark, sf_dir):
+def q470(lineitem):
     """n-weighted within-estimator slope in signed micro units (oracle
     comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    v = li.select(
+    v = lineitem.select(
         F.col("l_partkey").alias("e"),
         cents("l_discount").alias("x"),
         F.col("l_quantity").cast("bigint").alias("y"),
@@ -4310,11 +4260,10 @@ FROM terms, nn
 
 
 @register("q471_wasserstein_1d", oracle=_W1_ORACLE)
-def q471(spark, sf_dir):
+def q471(orders):
     """Exact W1 between urgent and low order-value distributions
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.where(
+    v = orders.where(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
     ).select(
         F.when(F.col("o_orderpriority") == "1-URGENT", "a").otherwise("b").alias("g"),
@@ -4384,10 +4333,9 @@ FROM sc ORDER BY score DESC, cell LIMIT 5
 
 
 @register("q472_kde_mode", oracle=_KDE_ORACLE)
-def q472(spark, sf_dir):
+def q472(spark, orders):
     """Top-5 triangular-kernel density cells (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.expr(
             "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) DIV 1000"
         ).alias("cell")
@@ -4448,10 +4396,9 @@ FROM ag JOIN med ON ag.grp = med.grp ORDER BY ag.grp
 
 
 @register("q473_props_json_stats", oracle=_PROPS_ORACLE)
-def q473(spark, sf_dir):
+def q473(events):
     """Per-type stats of the JSON props.k field (oracle comment)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    v = ev.where(F.col("props").isNotNull()).select(
+    v = events.where(F.col("props").isNotNull()).select(
         F.col("event_type").alias("grp"),
         F.get_json_object("props", "$.k").cast("bigint").alias("k"),
     )
@@ -4548,11 +4495,10 @@ FROM ta, tb, tc
 
 
 @register("q474_twoway_anova", oracle=_ANOVA2_ORACLE)
-def q474(spark, sf_dir):
+def q474(orders):
     """Interaction F of the priority x year cell-means decomposition
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("a"),
         F.year("o_orderdate").cast("bigint").alias("b"),
         cents("o_totalprice").alias("c"),
@@ -4662,11 +4608,10 @@ FROM nn JOIN agg ON nn.label = agg.label ORDER BY nn.label
 
 
 @register("q475_embedding_isotropy", oracle=_ISOTROPY_ORACLE)
-def q475(spark, sf_dir):
+def q475(embeddings):
     """Per-label mean pairwise dot via ||Σv||² − Σ||v||² (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    q = e.select(
+    q = embeddings.select(
         "label",
         F.expr(
             "transform(embedding,"
@@ -4731,10 +4676,9 @@ FROM bf, wg
 
 
 @register("q476_butterfly_count", oracle=_BUTTERFLY_ORACLE)
-def q476(spark, sf_dir):
+def q476(lineitem):
     """Exact butterfly / wedge counts on the supplier-part graph
     (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     # ONE map-side-combined collect_set per part replaces the
     # distinct -> self-join supplier-pair derivation (guide §2.4): the
     # per-part supplier set IS the distinct (p, s) frame, pairs expand
@@ -4743,7 +4687,7 @@ def q476(spark, sf_dir):
     # distinct shuffle and both join exchanges are gone. Fan bound
     # unchanged (<= 52 suppliers/part at sf0.1).
     sets = (
-        li.groupBy(F.col("l_partkey").alias("p"))
+        lineitem.groupBy(F.col("l_partkey").alias("p"))
         .agg(F.sort_array(F.collect_set("l_suppkey")).alias("ss"))
         # pinned: referenced by the 87M-row pair expansion AND the wedge
         # aggregate (a packed single-bigint pair key was tried at sf1 and
@@ -4808,14 +4752,13 @@ FROM terms
 
 
 @register("q477_g_test", oracle=_GTEST_ORACLE)
-def q477(spark, sf_dir):
+def q477(orders):
     """G statistic in per-cell-rounded micro units (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     # pinned: the contingency cells feed ra, cb, nn, dfc AND the terms
     # join — unpinned, the orders scan+aggregate runs five times
     # (guide §2.4; before-plan: 10 Exchanges)
     cells = (
-        o.groupBy(
+        orders.groupBy(
             F.col("o_orderpriority").alias("a"), F.col("o_orderstatus").alias("b")
         )
         .agg(F.count("*").cast("bigint").alias("n"))
@@ -4885,10 +4828,10 @@ FROM ag
 
 
 @register("q478_turning_point_test", oracle=_TP_ORACLE)
-def q478(spark, sf_dir):
+def q478(orders):
     """Turning-point count + normal z over the daily series (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     w = Window.orderBy("day")
     s = daily.select(
         "cents",
@@ -4973,11 +4916,10 @@ FROM c ORDER BY grp
 
 
 @register("q479_shape_profile", oracle=_SHAPE_ORACLE)
-def q479(spark, sf_dir):
+def q479(orders):
     """Per-priority skewness and excess kurtosis (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     d38 = "decimal(38,0)"
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
             "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) DIV 100"

@@ -18,7 +18,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import cents, cosine_duck, rhu
-from ..io import load_tables
 from ..session import pin
 from . import register
 from ..operators import banding as B
@@ -93,11 +92,10 @@ FROM m
 
 
 @register("q480_welch_ttest", oracle=_WELCH_ORACLE)
-def q480(spark, sf_dir):
+def q480(events):
     """Welch t² + Satterthwaite df as rounded doubles over exact integer
     moments (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    v = e.filter(F.col("event_type").isin("click", "purchase")).select(
+    v = events.filter(F.col("event_type").isin("click", "purchase")).select(
         F.col("event_type").alias("g"),
         cents("value").alias("c"),
     )
@@ -203,10 +201,9 @@ FROM g, tot ORDER BY g.grp
 
 
 @register("q481_mood_median_test", oracle=_MOOD_ORACLE)
-def q481(spark, sf_dir):
+def q481(orders):
     """Mood's median test per-group contributions (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("grp"),
         cents("o_totalprice").alias("c"),
     )
@@ -309,10 +306,9 @@ FROM ab
 
 
 @register("q482_cronbach_alpha", oracle=_CRONBACH_ORACLE)
-def q482(spark, sf_dir):
+def q482(events):
     """Cronbach's alpha in exact signed micro units (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    peru = e.groupBy("user_id").agg(
+    peru = events.groupBy("user_id").agg(
         *[
             F.sum(F.when(F.col("event_type") == t, 1).otherwise(0))
             .cast("bigint")
@@ -395,13 +391,12 @@ ORDER BY exp.d
 
 
 @register("q483_benford_audit", oracle=_BENFORD_ORACLE)
-def q483(spark, sf_dir):
+def q483(spark, orders):
     """Benford first-digit chi-square contributions (oracle comment).
     The 9-row expectation table broadcasts; the scan aggregates into at
     most 9 groups map-side — no shuffle grows with volume."""
-    o = load_tables(spark, sf_dir)["orders"]
     obs = (
-        o.select(cents("o_totalprice").alias("c"))
+        orders.select(cents("o_totalprice").alias("c"))
         .filter(F.col("c") > 0)
         .select(F.substring(F.col("c").cast("string"), 1, 1).cast("bigint").alias("d"))
         .groupBy("d")
@@ -455,12 +450,12 @@ FROM s ORDER BY ABS(sk) DESC, day ASC LIMIT 1
 
 
 @register("q484_cusum_changepoint", oracle=_CUSUM_ORACLE)
-def q484(spark, sf_dir):
+def q484(orders):
     """CUSUM argmax |S_k| (oracle comment): S_k is q288's n-scaled
     CUSUM n·prefix_k − k·T, so this is the top row of its frame."""
     nc = F.col("nc")
     return (
-        _cusum(spark, sf_dir)
+        _cusum(orders)
         .select(
             F.col("day").alias("cp_day"),
             F.abs(nc).cast("bigint").alias("s_abs"),
@@ -512,13 +507,13 @@ ORDER BY i.day
 
 
 @register("q485_ewma_control", oracle=_EWMA_ORACLE)
-def q485(spark, sf_dir):
+def q485(orders):
     """EWMA residual chart in exact integer micro-cents (oracle
     comment). Python ints reproduce the rhu bit-for-bit — the q308/q456
     grouped-map lane for sequential state."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
 
     def ewma(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("day").reset_index(drop=True)
@@ -610,10 +605,9 @@ ORDER BY n.n_name
 
 
 @register("q486_harmonic_closeness", oracle=_CLOSENESS_ORACLE)
-def q486(spark, sf_dir):
+def q486(orders, customer, lineitem, supplier, nation):
     """Radius-6 harmonic closeness by multi-source frontier BFS (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
     # Edge derivation is the whole cost at scale. Two r10-measured traps
     # (28x decade ratio, 8x fresh-run spread) are closed here:
     #  1. orders x lineitem is fact-x-fact: the 2-column orders projection
@@ -624,13 +618,13 @@ def q486(spark, sf_dir):
     #     (linear, AQE-coalesced), hash build on the narrower orders side.
     #  2. e is referenced twice by the undirected union; without a
     #     checkpoint Spark re-executes the whole 4-table join per branch.
-    ord_nat = t["orders"].join(
-        F.broadcast(t["customer"]),
-        t["customer"]["c_custkey"] == t["orders"]["o_custkey"],
+    ord_nat = orders.join(
+        F.broadcast(customer),
+        customer["c_custkey"] == orders["o_custkey"],
     ).select("o_orderkey", "c_nationkey")
-    lin_nat = t["lineitem"].join(
-        F.broadcast(t["supplier"]),
-        t["supplier"]["s_suppkey"] == t["lineitem"]["l_suppkey"],
+    lin_nat = lineitem.join(
+        F.broadcast(supplier),
+        supplier["s_suppkey"] == lineitem["l_suppkey"],
     ).select("l_orderkey", "s_nationkey")
     e = (
         lin_nat.join(
@@ -678,10 +672,9 @@ def q486(spark, sf_dir):
         .cast("bigint")
         .alias("h60"),
     )
-    n = load_tables(spark, sf_dir)["nation"]
     return (
         per.join(
-            F.broadcast(n), n["n_nationkey"] == per["src"]
+            F.broadcast(nation), nation["n_nationkey"] == per["src"]
         )
         .select(
             "n_name",
@@ -754,16 +747,15 @@ FROM com, tot ORDER BY region
 
 
 @register("q487_region_modularity", oracle=_MODULARITY_ORACLE)
-def q487(spark, sf_dir):
+def q487(orders, lineitem, customer, supplier, nation):
     """Region-partition modularity contributions + conductance in exact
     micro units (oracle comment). Note 4*W*W_in - vol^2 = w2*win2 -
     vol^2 with w2 = 2W and win2 = 2*W_in — the oracle's identity."""
-    t = load_tables(spark, sf_dir)
     dirw = (
-        t["orders"]
-        .join(t["lineitem"], t["lineitem"]["l_orderkey"] == t["orders"]["o_orderkey"])
-        .join(F.broadcast(t["customer"]), t["customer"]["c_custkey"] == t["orders"]["o_custkey"])
-        .join(F.broadcast(t["supplier"]), t["supplier"]["s_suppkey"] == t["lineitem"]["l_suppkey"])
+        orders
+        .join(lineitem, lineitem["l_orderkey"] == orders["o_orderkey"])
+        .join(F.broadcast(customer), customer["c_custkey"] == orders["o_custkey"])
+        .join(F.broadcast(supplier), supplier["s_suppkey"] == lineitem["l_suppkey"])
         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
         .groupBy(
             F.col("c_nationkey").cast("int").alias("a"),
@@ -790,9 +782,8 @@ def q487(spark, sf_dir):
         .groupBy("a", "b")
         .agg(F.sum("w").cast("bigint").alias("s"))
     )
-    n = load_tables(spark, sf_dir)["nation"]
-    na = n.select(F.col("n_nationkey").alias("a"), F.col("n_regionkey").alias("ca"))
-    nb = n.select(F.col("n_nationkey").alias("b"), F.col("n_regionkey").alias("cb"))
+    na = nation.select(F.col("n_nationkey").alias("a"), F.col("n_regionkey").alias("ca"))
+    nb = nation.select(F.col("n_nationkey").alias("b"), F.col("n_regionkey").alias("cb"))
     lab = sym.join(F.broadcast(na), "a").join(F.broadcast(nb), "b")
     com = lab.groupBy(F.col("ca").alias("c")).agg(
         F.sum("s").cast("bigint").alias("vol"),
@@ -863,10 +854,9 @@ FROM per ORDER BY source
 
 
 @register("q488_boilerplate_lines", oracle=_BOILER_ORACLE)
-def q488(spark, sf_dir):
+def q488(documents):
     """Cross-doc repeated 10-token lines per source (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id",
         "source",
         F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0).alias(
@@ -945,11 +935,10 @@ ORDER BY pmi_r6 DESC, b.w1, b.w2 LIMIT 20
 
 
 @register("q489_pmi_collocations", oracle=_PMI_ORACLE)
-def q489(spark, sf_dir):
+def q489(documents):
     """Top-20 adjacent-bigram PMI, rounded-rank discipline (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id",
         F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0).alias(
             "ts"
@@ -1034,11 +1023,10 @@ GROUP BY ks.k, tot.n ORDER BY ks.k
 
 
 @register("q490_vocab_coverage", oracle=_COVER_ORACLE)
-def q490(spark, sf_dir):
+def q490(spark, documents):
     """Top-k type coverage of the token stream (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     uni = (
-        d.select(
+        documents.select(
             F.explode(
                 F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
             ).alias("w")
@@ -1095,10 +1083,9 @@ FROM per ORDER BY lang
 
 
 @register("q491_tokenizer_fertility", oracle=_FERT_ORACLE)
-def q491(spark, sf_dir):
+def q491(documents):
     """Fertility ratios by lang in exact micro units (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "lang",
         F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0).alias(
             "ts"
@@ -1160,16 +1147,15 @@ ORDER BY sim DESC, anchor LIMIT 20
 
 
 @register("q492_hard_negative_mining", oracle=_HARDNEG_ORACLE)
-def q492(spark, sf_dir):
+def q492(embeddings):
     """Per-anchor hardest cross-label negative, top-20 (oracle
     comment)."""
     from ..operators.similarity import knn_block_topk
 
-    e = load_tables(spark, sf_dir)["embeddings"]
     # block-matmul kNN kernel: no pair frame ever materializes (the pair
     # join shipped ~4GB of duplicated vectors through Arrow — see
     # operators/similarity.knn_block_topk)
-    top1 = knn_block_topk(e, k=1, cross_label_only=True)
+    top1 = knn_block_topk(embeddings, k=1, cross_label_only=True)
     return (
         top1.select("anchor", F.col("neighbor").alias("hard_neg"), "sim")
         .orderBy(F.col("sim").desc(), "anchor")
@@ -1214,10 +1200,9 @@ ORDER BY dim
 
 
 @register("q493_quantization_audit", oracle=_QUANT_ORACLE)
-def q493(spark, sf_dir):
+def q493(embeddings):
     """Exact-integer int8 quantization error per dim (oracle comment)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    vals = e.select(
+    vals = embeddings.select(
         F.posexplode(
             F.transform(
                 "embedding",
@@ -1292,10 +1277,9 @@ FROM ratio GROUP BY source ORDER BY source
 
 
 @register("q494_repetition_screen", oracle=_REPEAT_ORACLE)
-def q494(spark, sf_dir):
+def q494(documents):
     """Within-doc 4-gram repetition flags per source (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id",
         "source",
         F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0).alias(
@@ -1377,10 +1361,10 @@ FROM pr
 
 
 @register("q495_ar1_halflife", oracle=_AR1_ORACLE)
-def q495(spark, sf_dir):
+def q495(orders):
     """AR(1) rho + OU half-life over exact pair moments (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
     )
@@ -1457,11 +1441,10 @@ FROM dec, tot ORDER BY dec.decile
 
 
 @register("q496_gains_deciles", oracle=_GAINS_ORACLE)
-def q496(spark, sf_dir):
+def q496(events):
     """Decile lift + cumulative gains in exact micro units (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    peru = e.groupBy("user_id").agg(
+    peru = events.groupBy("user_id").agg(
         F.sum(
             F.when(
                 F.col("event_type") == "click",
@@ -1544,9 +1527,9 @@ FROM t
 
 
 @register("q497_weekday_seasonality", oracle=_SEASTR_ORACLE)
-def q497(spark, sf_dir):
+def q497(orders):
     """Weekday eta² of daily revenue (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     d38 = "DECIMAL(38,0)"
     g = daily.select(
         F.pmod(F.unix_date(F.col("day").cast("date")), F.lit(7))
@@ -1621,11 +1604,10 @@ FROM med, f2
 
 
 @register("q498_ams_f2_sketch", oracle=_AMS_ORACLE)
-def q498(spark, sf_dir):
+def q498(spark, events):
     """Median-of-8 AMS F2 estimate vs exact, fully integer (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    cu = e.groupBy("user_id").agg(F.count("*").cast("bigint").alias("c"))
+    cu = events.groupBy("user_id").agg(F.count("*").cast("bigint").alias("c"))
     js = spark.createDataFrame([(j,) for j in range(1, 9)], "j int")
     signs = (
         cu.crossJoin(F.broadcast(js))
@@ -1694,10 +1676,9 @@ FROM u ORDER BY event_type
 
 
 @register("q499_dp_laplace_counts", oracle=_DP_ORACLE)
-def q499(spark, sf_dir):
+def q499(events):
     """Seeded-Laplace DP count release (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    g = e.groupBy("event_type").agg(F.count("*").cast("bigint").alias("n"))
+    g = events.groupBy("event_type").agg(F.count("*").cast("bigint").alias("n"))
     u = g.select(
         "event_type",
         "n",
@@ -1768,12 +1749,12 @@ FROM allr ORDER BY rule
 
 
 @register("q500_consistency_rules", oracle=_RULES_ORACLE)
-def q500(spark, sf_dir):
+def q500(lineitem, orders, customer):
     """Five-rule integrity scorecard (oracle comment)."""
-    t = load_tables(spark, sf_dir)
-    l, o, c = t["lineitem"], t["orders"], t["customer"]
     r1 = (
-        l.join(o.select("o_orderkey"), l["l_orderkey"] == o["o_orderkey"], "left")
+        lineitem.join(
+            orders.select("o_orderkey"), lineitem["l_orderkey"] == orders["o_orderkey"], "left"
+        )
         .agg(
             F.count("*").cast("bigint").alias("n_checked"),
             F.sum(F.when(F.col("o_orderkey").isNull(), 1).otherwise(0))
@@ -1783,7 +1764,10 @@ def q500(spark, sf_dir):
         .select(F.lit("lineitem_orphan").alias("rule"), "n_checked", "n_viol")
     )
     r2 = (
-        l.join(o.select("o_orderkey", "o_orderdate"), l["l_orderkey"] == o["o_orderkey"])
+        lineitem.join(
+            orders.select("o_orderkey", "o_orderdate"),
+            lineitem["l_orderkey"] == orders["o_orderkey"],
+        )
         .agg(
             F.count("*").cast("bigint").alias("n_checked"),
             F.sum(F.when(F.col("l_shipdate") < F.col("o_orderdate"), 1).otherwise(0))
@@ -1792,13 +1776,13 @@ def q500(spark, sf_dir):
         )
         .select(F.lit("ship_before_order").alias("rule"), "n_checked", "n_viol")
     )
-    r3 = o.agg(
+    r3 = orders.agg(
         F.count("*").cast("bigint").alias("n_checked"),
         F.sum(F.when(F.col("o_totalprice") <= 0, 1).otherwise(0))
         .cast("bigint")
         .alias("n_viol"),
     ).select(F.lit("nonpositive_price").alias("rule"), "n_checked", "n_viol")
-    r4 = l.agg(
+    r4 = lineitem.agg(
         F.count("*").cast("bigint").alias("n_checked"),
         F.sum(
             F.when((F.col("l_discount") < 0) | (F.col("l_discount") > 1), 1).otherwise(0)
@@ -1807,7 +1791,11 @@ def q500(spark, sf_dir):
         .alias("n_viol"),
     ).select(F.lit("discount_range").alias("rule"), "n_checked", "n_viol")
     r5 = (
-        o.join(F.broadcast(c.select("c_custkey")), o["o_custkey"] == c["c_custkey"], "left")
+        orders.join(
+            F.broadcast(customer.select("c_custkey")),
+            orders["o_custkey"] == customer["c_custkey"],
+            "left",
+        )
         .agg(
             F.count("*").cast("bigint").alias("n_checked"),
             F.sum(F.when(F.col("c_custkey").isNull(), 1).otherwise(0))
@@ -1855,10 +1843,9 @@ GROUP BY event_type, magnitude ORDER BY event_type, magnitude
 
 
 @register("q501_interarrival_histogram", oracle=_ARRIVAL_ORACLE)
-def q501(spark, sf_dir):
+def q501(events):
     """Digit-count bucketed inter-arrival histogram (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    ev = e.select(
+    ev = events.select(
         "user_id",
         "event_type",
         F.unix_timestamp(F.col("ts").cast("timestamp")).cast("bigint").alias("es"),
@@ -1960,9 +1947,9 @@ FROM per, pv ORDER BY per.m
 
 
 @register("q502_hurst_exponent", oracle=_HURST_ORACLE)
-def q502(spark, sf_dir):
+def q502(spark, orders):
     """R/S Hurst slope over 4 pivoted block sizes (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
     )
@@ -2075,11 +2062,10 @@ FROM cells
 
 
 @register("q503_mcnemar_paired", oracle=_MCNEMAR_ORACLE)
-def q503(spark, sf_dir):
+def q503(events):
     """McNemar discordant-pair chi² in exact micro units (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    ev = e.select(
+    ev = events.select(
         "user_id",
         "event_type",
         F.unix_timestamp(F.col("ts").cast("timestamp")).cast("bigint").alias("es"),
@@ -2169,11 +2155,11 @@ FROM m, s
 
 
 @register("q504_friedman_kendall_w", oracle=_FRIEDMAN_ORACLE)
-def q504(spark, sf_dir):
+def q504(orders):
     """Friedman chi² + Kendall W over complete weekday blocks (oracle
     comment; k=7: k+1=8, k(k+1)²=448 -> 3k(k+1)²=1344; the oracle
     folds constants: m*k*(k+1)=56m, m²k(k²-1)=336m²)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     d = daily.select(
         F.unix_date(F.col("day").cast("date")).cast("bigint").alias("ed"), "cents"
     )
@@ -2264,10 +2250,9 @@ FROM agg
 
 
 @register("q505_cochran_q", oracle=_COCHRANQ_ORACLE)
-def q505(spark, sf_dir):
+def q505(events):
     """Cochran's Q in exact micro units (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    peru = e.groupBy("user_id").agg(
+    peru = events.groupBy("user_id").agg(
         *[
             F.max(F.when(F.col("event_type") == t, 1).otherwise(0)).alias(f"x{i}")
             for i, t in enumerate(("click", "view", "purchase", "signup"), 1)
@@ -2331,12 +2316,11 @@ ORDER BY n_docs DESC, ahash LIMIT 20
 
 
 @register("q506_perceptual_ahash", oracle=_AHASH_ORACLE)
-def q506(spark, sf_dir):
+def q506(documents):
     """aHash collision groups over the md5-nibble fake decode (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     nib = (
-        d.select("doc_id", F.md5("text").alias("h"))
+        documents.select("doc_id", F.md5("text").alias("h"))
         .select(
             "doc_id",
             F.posexplode(
@@ -2418,11 +2402,10 @@ FROM agg
 
 
 @register("q507_mann_whitney_u", oracle=_MWU_ORACLE)
-def q507(spark, sf_dir):
+def q507(events):
     """Mann-Whitney U (doubled, exact) + rank-biserial micro (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    v = e.filter(F.col("event_type").isin("click", "purchase")).select(
+    v = events.filter(F.col("event_type").isin("click", "purchase")).select(
         F.col("event_type").alias("g"),
         cents("value").alias("c"),
     )
@@ -2498,15 +2481,14 @@ ORDER BY cluster_size""",
 
 
 @register("q508_dup_cluster_histogram", oracle=_CLUSTHIST_ORACLE)
-def q508(spark, sf_dir):
+def q508(documents):
     """Cluster-size histogram of the LSH dup graph + singleton row
     (oracle comment)."""
     from ..operators.dedup_pipeline import connected_components
     from .llm import _minhash_corpus
 
-    d = load_tables(spark, sf_dir)["documents"]
     pairs = (
-        B.candidate_pairs(_minhash_corpus(d))
+        B.candidate_pairs(_minhash_corpus(documents))
         .select("doc_a", "doc_b")
         .transform(pin)
     )
@@ -2515,7 +2497,7 @@ def q508(spark, sf_dir):
     hist = sizes.groupBy(F.col("sz").alias("cluster_size")).agg(
         F.count("*").cast("bigint").alias("n_clusters")
     )
-    n_docs = d.agg(F.count("*").cast("bigint").alias("nd"))
+    n_docs = documents.agg(F.count("*").cast("bigint").alias("nd"))
     n_cc = cc.agg(F.count("*").cast("bigint").alias("nc"))
     singles = (
         n_docs.crossJoin(n_cc)
@@ -2567,10 +2549,9 @@ FROM top ORDER BY dim
 
 
 @register("q509_uniformity_ks", oracle=_UNIKS_ORACLE)
-def q509(spark, sf_dir):
+def q509(embeddings):
     """Exact per-dim KS distance vs uniform[min,max] (oracle comment)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    vals = e.select(
+    vals = embeddings.select(
         F.posexplode(
             F.transform(
                 "embedding",
@@ -2682,10 +2663,9 @@ FROM un ORDER BY feature
 
 
 @register("q510_leakage_scan", oracle=_PBS_ORACLE)
-def q510(spark, sf_dir):
+def q510(events):
     """Point-biserial r per candidate feature (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    peru = e.groupBy("user_id").agg(
+    peru = events.groupBy("user_id").agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
         .cast("bigint")
         .alias("f1"),
@@ -2789,10 +2769,9 @@ FROM per, tot ORDER BY fold
 
 
 @register("q511_split_parity_audit", oracle=_FOLD_ORACLE)
-def q511(spark, sf_dir):
+def q511(events):
     """md5-fold conversion parity audit (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    peru = e.groupBy("user_id").agg(
+    peru = events.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
         .cast("bigint")
         .alias("conv")
@@ -2864,12 +2843,11 @@ FROM noise GROUP BY la ORDER BY label
 
 
 @register("q512_knn_label_noise", oracle=_KNNNOISE_ORACLE)
-def q512(spark, sf_dir):
+def q512(embeddings):
     """k=5 neighbor label-disagreement per label (oracle comment)."""
     from ..operators.similarity import knn_block_topk
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    top5 = knn_block_topk(e, k=5)  # block-matmul kernel (see q492)
+    top5 = knn_block_topk(embeddings, k=5)  # block-matmul kernel (see q492)
     noise = top5.groupBy(
         F.col("anchor").alias("va"), F.col("la")
     ).agg(
@@ -2938,13 +2916,12 @@ FROM picks ORDER BY grp, q
 
 
 @register("q513_latency_quantiles", oracle=_LATQ_ORACLE)
-def q513(spark, sf_dir):
+def q513(spark, lineitem, orders):
     """Exact grouped p50/p90/p99 with floor-trunc interpolation (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
     lat = (
-        t["lineitem"]
-        .join(t["orders"], t["orders"]["o_orderkey"] == t["lineitem"]["l_orderkey"])
+        lineitem
+        .join(orders, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(
             F.col("o_orderpriority").alias("grp"),
             F.datediff(
@@ -3013,10 +2990,9 @@ FROM u ORDER BY key_r6 DESC, doc_id LIMIT 10
 
 
 @register("q514_gumbel_topk", oracle=_GUMBEL_ORACLE)
-def q514(spark, sf_dir):
+def q514(documents):
     """Seeded Gumbel top-10 weighted sample (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    u = d.filter(F.col("n_chars") > 0).select(
+    u = documents.filter(F.col("n_chars") > 0).select(
         "doc_id",
         "n_chars",
         (
@@ -3091,10 +3067,9 @@ ORDER BY tr.grp
 
 
 @register("q515_trimmed_winsorized", oracle=_TRIM_ORACLE)
-def q515(spark, sf_dir):
+def q515(orders):
     """Exact 5% trimmed + winsorized means per group (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("grp"),
         cents("o_totalprice").alias("c"),
     )
@@ -3206,12 +3181,11 @@ ORDER BY qq.grp
 
 
 @register("q516_tukey_outliers", oracle=_TUKEY_ORACLE)
-def q516(spark, sf_dir):
+def q516(orders):
     """Tukey 1.5*IQR outlier counts from exact quartiles (oracle
     comment; fences at doubled-milli scale: low = 5*q1-3*q3, high =
     5*q3-3*q1)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("grp"),
         cents("o_totalprice").alias("c"),
     )
@@ -3321,10 +3295,9 @@ FROM per ORDER BY p
 
 
 @register("q517_partition_skew_whatif", oracle=_SKEWIF_ORACLE)
-def q517(spark, sf_dir):
+def q517(spark, events):
     """Hash-partition imbalance at P=32/64/128 (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    keyed = e.select(
+    keyed = events.select(
         F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
         .alias("h")
@@ -3384,20 +3357,19 @@ FROM terms ORDER BY col
 
 
 @register("q518_column_entropy_profile", oracle=_COLENT_ORACLE)
-def q518(spark, sf_dir):
+def q518(orders):
     """Per-column entropy with per-term micro rounding (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     src = (
-        o.select(F.col("o_orderstatus").alias("v"), F.lit("o_orderstatus").alias("col"))
+        orders.select(F.col("o_orderstatus").alias("v"), F.lit("o_orderstatus").alias("col"))
         .unionByName(
-            o.select(
+            orders.select(
                 F.col("o_orderpriority").alias("v"),
                 F.lit("o_orderpriority").alias("col"),
             )
         )
         .unionByName(
-            o.select(
+            orders.select(
                 F.year("o_orderdate").cast("string").alias("v"),
                 F.lit("order_year").alias("col"),
             )
@@ -3451,11 +3423,10 @@ FROM m WHERE w > 1 AND s > 0 ORDER BY event_type
 
 
 @register("q519_overdispersion", oracle=_OVERD_ORACLE)
-def q519(spark, sf_dir):
+def q519(events):
     """Index of dispersion per event type, exact micro (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    d = e.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
+    d = events.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.count("*").cast("bigint").alias("x")
     )
     m = d.groupBy("event_type").agg(
@@ -3516,10 +3487,9 @@ FROM cls GROUP BY xyz ORDER BY xyz
 
 
 @register("q520_xyz_classification", oracle=_XYZ_ORACLE)
-def q520(spark, sf_dir):
+def q520(lineitem):
     """XYZ variability classes from exact weekly CV² (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    wk = li.groupBy(
+    wk = lineitem.groupBy(
         F.col("l_partkey").alias("part"),
         F.expr(
             "CAST(DATEDIFF(CAST(l_shipdate AS DATE), DATE '1970-01-01')"
@@ -3596,11 +3566,10 @@ FROM cls GROUP BY sbc ORDER BY sbc
 
 
 @register("q521_sbc_intermittency", oracle=_SBC_ORACLE)
-def q521(spark, sf_dir):
+def q521(lineitem):
     """SBC demand quadrants in exact micro comparisons (oracle
     comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    wk = li.groupBy(
+    wk = lineitem.groupBy(
         F.col("l_partkey").alias("part"),
         F.expr(
             "CAST(DATEDIFF(CAST(l_shipdate AS DATE), DATE '1970-01-01')"
@@ -3691,12 +3660,11 @@ FROM sums
 
 
 @register("q522_energy_distance", oracle=_ENERGY_ORACLE)
-def q522(spark, sf_dir):
+def q522(events):
     """Pairs-free exact energy distance in milli-cents (oracle
     comment; sxy uses fx*(m-fy) + fy*(n-fx) expanded over the cum frame's
     window totals n/m)."""
-    e = load_tables(spark, sf_dir)["events"]
-    v = e.filter(F.col("event_type").isin("click", "purchase")).select(
+    v = events.filter(F.col("event_type").isin("click", "purchase")).select(
         F.col("event_type").alias("g"),
         cents("value").alias("c"),
     )
@@ -3772,11 +3740,10 @@ FROM m
 
 
 @register("q523_ess_weights_audit", oracle=_ESS_ORACLE)
-def q523(spark, sf_dir):
+def q523(documents):
     """Kish ESS + max weight share, exact (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     d38 = "DECIMAL(38,0)"
-    m = d.filter(F.col("n_chars") > 0).agg(
+    m = documents.filter(F.col("n_chars") > 0).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("n_chars").cast("bigint").alias("s"),
         F.sum(F.expr(f"CAST(n_chars AS {d38}) * n_chars")).alias("q"),
@@ -3837,10 +3804,10 @@ FROM mom
 
 
 @register("q524_serial_correlation", oracle=_SERIAL_ORACLE)
-def q524(spark, sf_dir):
+def q524(orders):
     """Durbin-Watson + Durbin-Levinson PACF(2), exact micro (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     mu = daily.agg(
         F.expr(rhu("SUM(cents)", "COUNT(*)")).alias("m")
     )
@@ -3936,15 +3903,14 @@ FROM n, qx, qy, exc
 
 
 @register("q525_tail_dependence", oracle=_TAILDEP_ORACLE)
-def q525(spark, sf_dir):
+def q525(orders):
     """Upper-tail dependence of daily (revenue, volume) (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     # pinned: daily feeds n, both q95 rank windows AND the exceedance
     # aggregate — unpinned, the orders scan+aggregate runs four times
     # (guide §2.4; before-plan: 20 Exchanges)
     daily = (
-        o.groupBy(F.col("o_orderdate").alias("day"))
+        orders.groupBy(F.col("o_orderdate").alias("day"))
         .agg(
             F.sum(cents("o_totalprice")).cast("bigint").alias("x"),
             F.count("*").cast("bigint").alias("y"),
@@ -4056,12 +4022,11 @@ FROM delta ORDER BY delta_micro, s1, s2 LIMIT 10
 
 
 @register("q526_burrows_delta", oracle=_BURROWS_ORACLE)
-def q526(spark, sf_dir):
+def q526(documents):
     """Top-10 most stylometrically similar source pairs (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     uni = (
-        d.select(
+        documents.select(
             "source",
             F.explode(
                 F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
@@ -4181,10 +4146,10 @@ FROM cand ORDER BY sse_r3, k LIMIT 1
 
 
 @register("q527_segmented_ols_break", oracle=_SEGOLS_ORACLE)
-def q527(spark, sf_dir):
+def q527(orders):
     """Two-segment OLS break by prefix-moment SSE argmin (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     d38 = "DECIMAL(38,0)"
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("i"), "day"
@@ -4266,11 +4231,10 @@ FROM h, t ORDER BY h.n DESC, h.ending LIMIT 10
 
 
 @register("q528_price_ending_audit", oracle=_ENDING_ORACLE)
-def q528(spark, sf_dir):
+def q528(orders):
     """Top-10 cent endings with exact shares (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     h = (
-        o.select(
+        orders.select(
             (
                 cents("o_totalprice")
                 % 100
@@ -4329,11 +4293,10 @@ FROM g WHERE s > 0 ORDER BY month
 
 
 @register("q529_monthly_gini", oracle=_GINITREND_ORACLE)
-def q529(spark, sf_dir):
+def q529(orders):
     """Per-month exact Gini via the pairs-free identity (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.date_trunc("month", F.col("o_orderdate").cast("date"))
         .cast("date")
         .alias("month"),
@@ -4416,10 +4379,9 @@ FROM dec ORDER BY decile
 
 
 @register("q530_regression_to_mean", oracle=_RTM_ORACLE)
-def q530(spark, sf_dir):
+def q530(events):
     """H1-decile to H2 spend ratios (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    ev = e.select(
+    ev = events.select(
         "user_id",
         "event_type",
         F.unix_timestamp(F.col("ts").cast("timestamp")).cast("bigint").alias("es"),
@@ -4523,12 +4485,11 @@ FROM ranked ORDER BY grp
 
 
 @register("q531_neyman_allocation", oracle=_NEYMAN_ORACLE)
-def q531(spark, sf_dir):
+def q531(orders):
     """Largest-remainder Neyman allocation of 1000 samples (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
     d38 = "DECIMAL(38,0)"
-    m = o.select(
+    m = orders.select(
         F.col("o_orderpriority").alias("grp"), cents("o_totalprice").alias("c")
     ).groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -4594,10 +4555,9 @@ FROM h, t ORDER BY hour
 
 
 @register("q532_hourly_load_curve", oracle=_LOAD_ORACLE)
-def q532(spark, sf_dir):
+def q532(events):
     """Hour-of-day load curve with PAR (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    h = e.select(
+    h = events.select(
         F.expr(
             "CAST((CAST(unix_timestamp(CAST(ts AS TIMESTAMP)) AS BIGINT)"
             " % 86400) DIV 3600 AS BIGINT)"
@@ -4708,14 +4668,13 @@ FROM types t, rec ORDER BY event_type
 
 
 @register("q533_markov_stationary", oracle=_STATIONARY_ORACLE)
-def q533(spark, sf_dir):
+def q533(spark, events):
     """20-step power iteration in exact integer micro (oracle
     comment)."""
     import pandas as pd
 
-    e = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select("user_id", "event_type", F.lead("event_type").over(w).alias("nxt"))
+    seq = events.select("user_id", "event_type", F.lead("event_type").over(w).alias("nxt"))
     tc = (
         seq.filter(F.col("nxt").isNotNull())
         .groupBy(F.col("event_type").alias("a"), F.col("nxt").alias("b"))
@@ -4799,11 +4758,10 @@ GROUP BY cs.cap, t.tot ORDER BY cs.cap
 
 
 @register("q534_cache_hit_curve", oracle=_CACHE_ORACLE)
-def q534(spark, sf_dir):
+def q534(spark, events):
     """Static-LFU hit-rate at cache sizes 10/100/1000 (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    cu = e.groupBy("user_id").agg(F.count("*").cast("bigint").alias("c"))
+    cu = events.groupBy("user_id").agg(F.count("*").cast("bigint").alias("c"))
     ranked = cu.select(
         "c",
         F.row_number().over(Window.orderBy(F.col("c").desc(), "user_id")).alias("rk"),
@@ -4879,10 +4837,9 @@ FROM terms
 
 
 @register("q535_binned_mutual_information", oracle=_BINMI_ORACLE)
-def q535(spark, sf_dir):
+def q535(documents):
     """Decile-binned MI with per-cell micro rounding (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id",
         "n_chars",
         F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0).alias(
@@ -4986,12 +4943,12 @@ FROM pr
 
 
 @register("q536_dickey_fuller", oracle=_DF_ORACLE)
-def q536(spark, sf_dir):
+def q536(orders):
     """Zero-drift DF gamma + t-stat from exact pair moments (oracle
     comment; t = gamma / sqrt((Syy_c/Sxx_c - gamma²)/(m-2)), the
     simple-regression SE identity on mean-cleared moments: the m·
     scaling of Syy_c and Sxx_c cancels in their ratio)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
     )
@@ -5068,17 +5025,15 @@ FROM terms t, wtot ORDER BY t.source
 
 
 @register("q537_direct_standardization", oracle=_STDZ_ORACLE)
-def q537(spark, sf_dir):
+def q537(events, documents):
     """Weekday-standardized conversion per source (oracle comment; the
     events->documents attach is the declared synthetic cohort join:
     source of doc_id = user_id mod |documents|)."""
-    e = load_tables(spark, sf_dir)["events"]
-    d = load_tables(spark, sf_dir)["documents"]
-    nd = d.agg(F.count("*").cast("bigint").alias("ndocs"))
+    nd = documents.agg(F.count("*").cast("bigint").alias("ndocs"))
     ev = (
-        e.crossJoin(F.broadcast(nd))
+        events.crossJoin(F.broadcast(nd))
         .join(
-            F.broadcast(d.select("doc_id", "source")),
+            F.broadcast(documents.select("doc_id", "source")),
             F.col("doc_id") == F.expr("user_id % ndocs"),
         )
         .select(
@@ -5165,10 +5120,10 @@ FROM cnt, thr, x
 
 
 @register("q538_kupiec_backtest", oracle=_KUPIEC_ORACLE)
-def q538(spark, sf_dir):
+def q538(orders):
     """Kupiec proportion-of-failures LR for the 5% historical VaR
     (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     # pinned: idx feeds both sides of the lag join (unpinned, the daily
     # aggregate + global window run twice); chg feeds cnt, ranked AND
     # the breach count (guide §2.4; before-plan: 24 Exchanges, 14 Sorts)

@@ -31,7 +31,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import cents, floor_rhu, floor_rhu_duck, rhu
-from ..io import load_tables
 from ..session import pin
 from . import register
 from .analytics3 import _DAILY_CTE, _daily_cents
@@ -84,11 +83,10 @@ FROM m ORDER BY g
 
 
 @register("q539_jarque_bera", oracle=_JB_ORACLE)
-def q539(spark, sf_dir):
+def q539(events):
     """JB = n/6*(skew^2 + exkurt^2/4) over exact integer raw moments
     (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    v = e.select(
+    v = events.select(
         F.col("event_type").alias("g"),
         cents("value").alias("c"),
     )
@@ -164,11 +162,10 @@ FROM tot
 
 
 @register("q540_bartlett_test", oracle=_BARTLETT_ORACLE)
-def q540(spark, sf_dir):
+def q540(orders):
     """Bartlett T with per-group micro-quantized LN terms and integer
     dollar^2 pooled SS (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("g"),
         cents("o_totalprice").alias("c"),
     )
@@ -266,11 +263,10 @@ FROM tot
 
 
 @register("q541_levene_mean", oracle=_LEVENE_ORACLE)
-def q541(spark, sf_dir):
+def q541(orders):
     """Mean-centered Levene W via n_j-scaled exact deviations (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("g"),
         cents("o_totalprice").alias("c"),
     )
@@ -357,11 +353,10 @@ FROM pick
 
 
 @register("q542_grubbs_test", oracle=_GRUBBS_ORACLE)
-def q542(spark, sf_dir):
+def q542(orders):
     """Exact-rational Grubbs G^2 for the most extreme order (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         "o_orderkey",
         cents("o_totalprice").alias("c"),
     )
@@ -425,10 +420,9 @@ FROM m
 
 
 @register("q543_variance_ratio_f", oracle=_FRATIO_ORACLE)
-def q543(spark, sf_dir):
+def q543(events):
     """Exact-rational two-sample variance-ratio F (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    v = e.filter(F.col("event_type").isin("click", "view")).select(
+    v = events.filter(F.col("event_type").isin("click", "view")).select(
         F.col("event_type").alias("g"),
         cents("value").alias("c"),
     )
@@ -490,11 +484,10 @@ FROM m
 
 
 @register("q544_poisson_rate_test", oracle=_POISSONRATE_ORACLE)
-def q544(spark, sf_dir):
+def q544(events):
     """Conditional Poisson rate test z^2 as an exact rational (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    m = e.agg(
+    m = events.agg(
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
         .cast("bigint")
         .alias("k1"),
@@ -561,11 +554,10 @@ FROM dot
 
 
 @register("q545_anderson_darling_digits", oracle=_AD_ORACLE)
-def q545(spark, sf_dir):
+def q545(orders):
     """Histogram-collapsed AD statistic for cents-digit uniformity
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         (
             cents("o_totalprice") % 100
         ).alias("d2")
@@ -664,11 +656,10 @@ FROM jt, sizes
 
 
 @register("q546_jonckheere_terpstra", oracle=_JT_ORACLE)
-def q546(spark, sf_dir):
+def q546(orders):
     """JT ordered-trend statistic on the dense value-group grid (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         F.col("o_orderpriority").alias("g"),
         cents("o_totalprice").alias("c"),
     )
@@ -771,10 +762,9 @@ FROM agg
 
 
 @register("q547_siegel_tukey", oracle=_ST_ORACLE)
-def q547(spark, sf_dir):
+def q547(events):
     """Alternating extreme-rank dispersion test (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    v = e.filter(F.col("event_type").isin("click", "error")).select(
+    v = events.filter(F.col("event_type").isin("click", "error")).select(
         "event_id",
         F.col("event_type").alias("g"),
         cents("value").alias("c"),
@@ -877,10 +867,10 @@ FROM m2
 
 
 @register("q548_breusch_pagan", oracle=_BP_ORACLE)
-def q548(spark, sf_dir):
+def q548(orders):
     """LM = n*R^2 of dollar^2-quantized residuals on time (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         F.col("cents").alias("y"),
         F.row_number().over(Window.orderBy("day")).alias("t"),
@@ -994,10 +984,10 @@ FROM m
 
 
 @register("q549_chow_break_f", oracle=_CHOW_ORACLE)
-def q549(spark, sf_dir):
+def q549(orders):
     """Chow F from pooled-vs-split exact integer OLS moments (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     idx = daily.select(
         F.col("cents").alias("y"),
@@ -1086,10 +1076,10 @@ FROM comb
 
 
 @register("q550_newey_west", oracle=_NW_ORACLE)
-def q550(spark, sf_dir):
+def q550(orders):
     """Bartlett-kernel HAC lrv over one range self-join (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         F.col("cents").alias("y"),
         F.row_number().over(Window.orderBy("day")).alias("t"),
@@ -1219,11 +1209,10 @@ FROM m
 
 
 @register("q551_granger_causality", oracle=_GRANGER_ORACLE)
-def q551(spark, sf_dir):
+def q551(events):
     """Lag-1 Granger F via Cramer-solved two-regressor OLS (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    dc = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
+    dc = events.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
         .cast("bigint")
         .alias("np"),
@@ -1299,13 +1288,12 @@ FROM terms
 
 
 @register("q552_spiegelhalter_z", oracle=_SPIEGEL_ORACLE)
-def q552(spark, sf_dir):
+def q552(orders, customer):
     """Scale-free integer Spiegelhalter Z^2 over milli rates (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
-    oc = t["orders"].join(
-        F.broadcast(t["customer"]),
-        t["customer"]["c_custkey"] == t["orders"]["o_custkey"],
+    oc = orders.join(
+        F.broadcast(customer),
+        customer["c_custkey"] == orders["o_custkey"],
     )
     train = (
         oc.filter(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -1401,13 +1389,12 @@ FROM tot
 
 
 @register("q553_mantel_haenszel", oracle=_MH_ORACLE)
-def q553(spark, sf_dir):
+def q553(orders, customer):
     """MH pooled OR + CMH chi^2 with per-stratum micro terms (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
-    base = t["orders"].join(
-        F.broadcast(t["customer"]),
-        t["customer"]["c_custkey"] == t["orders"]["o_custkey"],
+    base = orders.join(
+        F.broadcast(customer),
+        customer["c_custkey"] == orders["o_custkey"],
     ).select(
         F.col("o_orderpriority").alias("st"),
         F.when(F.col("c_acctbal") > 0, 1).otherwise(0).alias("x"),
@@ -1501,10 +1488,10 @@ FROM tot
 
 
 @register("q554_seasonal_strength", oracle=_SEASTR_ORACLE)
-def q554(spark, sf_dir):
+def q554(orders):
     """Weekday ANOVA on the exact 7x-scaled MA-detrended series (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     w7 = Window.orderBy("day").rowsBetween(-3, 3)
     ma = daily.select(
         "day",
@@ -1601,10 +1588,10 @@ FROM wide
 
 
 @register("q555_ar2_yule_walker", oracle=_AR2_ORACLE)
-def q555(spark, sf_dir):
+def q555(orders):
     """Yule-Walker AR(2) over dollar^2-quantized autocovariances
     (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         F.col("cents").alias("y"),
         F.row_number().over(Window.orderBy("day")).alias("t"),
@@ -1690,9 +1677,9 @@ FROM k
 
 
 @register("q557_expected_shortfall", oracle=_ES_ORACLE)
-def q557(spark, sf_dir):
+def q557(orders):
     """Exact tail mean below the 5% order statistic (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     mv = daily.select(
         "day", (F.col("cents") - F.lag("cents").over(Window.orderBy("day"))).alias("d")
     ).filter(F.col("d").isNotNull())
@@ -1752,9 +1739,9 @@ FROM dur
 
 
 @register("q558_ulcer_index", oracle=_ULCER_ORACLE)
-def q558(spark, sf_dir):
+def q558(orders):
     """UI^2 in micro^2 + longest below-peak run (oracle comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     w = Window.orderBy("day")
     pk = daily.select(
         "cents",
@@ -1831,13 +1818,13 @@ FROM hs, rec, fit ORDER BY hs.h
 
 
 @register("q556_theta_forecast", oracle=_THETA_ORACLE)
-def q556(spark, sf_dir):
+def q556(orders):
     """All-integer theta(2): scaled theta line -> SES(1/5) -> half-drift
     (oracle comment). Python // is floor; the oracle emulates floor
     explicitly (DuckDB // truncates)."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     mx = daily.agg(F.max("day").alias("mx"))
     lastd = daily.crossJoin(F.broadcast(mx)).filter(
         F.col("day") >= F.col("mx") - F.expr("INTERVAL 364 DAY")
@@ -1926,11 +1913,10 @@ FROM mom
 
 
 @register("q559_ewm_correlation", oracle=_EWCORR_ORACLE)
-def q559(spark, sf_dir):
+def q559(spark, events):
     """EW corr^2 with integer milli weights by rhu recursion (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"]
-    dc = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
+    dc = events.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
         .cast("bigint")
         .alias("x"),
@@ -2022,11 +2008,10 @@ FROM ll ORDER BY rk
 
 
 @register("q560_box_cox_scan", oracle=_BOXCOX_ORACLE)
-def q560(spark, sf_dir):
+def q560(spark, orders):
     """POWER-free Box-Cox profile likelihood grid, ranked by rounded ll
     (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    y = o.select(
+    y = orders.select(
         cents("o_totalprice").alias("c")
     )
     lams = spark.createDataFrame(
@@ -2095,14 +2080,14 @@ WITH li AS MATERIALIZED (
 """
 
 
-def _part_graph(spark, sf_dir):
+def _part_graph(lineitem):
     """Canonical co-purchase part edges (u < v) + degree frame,
     pinned (the operators/triangles rule: graph algorithms
     pin their edge list or re-derive the join lineage per reference)."""
     from ..operators.triangles import cooccurrence_edges
 
     li = (
-        load_tables(spark, sf_dir)["lineitem"]
+        lineitem
         .where(F.col("l_partkey") % 2 == 0)
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
     )
@@ -2149,10 +2134,10 @@ ORDER BY nk.k
 
 
 @register("q561_rich_club", oracle=_RICHCLUB_ORACLE)
-def q561(spark, sf_dir):
+def q561(spark, lineitem):
     """phi(k) over the co-purchase graph at four thresholds (oracle
     comment)."""
-    e, deg = _part_graph(spark, sf_dir)
+    e, deg = _part_graph(lineitem)
     ks = spark.createDataFrame([(4,), (8,), (16,), (32,)], "k int")
     nk = (
         ks.join(deg, deg["deg"] > ks["k"])
@@ -2214,9 +2199,9 @@ FROM lt, cz
 
 
 @register("q562_powerlaw_alpha", oracle=_PLAW_ORACLE)
-def q562(spark, sf_dir):
+def q562(lineitem):
     """Degree-MLE alpha + Freeman centralization (oracle comment)."""
-    _, deg = _part_graph(spark, sf_dir)
+    _, deg = _part_graph(lineitem)
     lt = deg.filter(F.col("deg") >= 2).agg(
         F.count("*").cast("bigint").alias("n2"),
         F.sum(
@@ -2286,20 +2271,19 @@ FROM m, nn
 
 
 @register("q563_reciprocity_dyads", oracle=_DYAD_ORACLE)
-def q563(spark, sf_dir):
+def q563(orders, lineitem, customer, supplier):
     """Dyad census + arc reciprocity on the trade digraph (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
     e = (
-        t["orders"]
-        .join(t["lineitem"], t["lineitem"]["l_orderkey"] == t["orders"]["o_orderkey"])
+        orders
+        .join(lineitem, lineitem["l_orderkey"] == orders["o_orderkey"])
         .join(
-            F.broadcast(t["customer"]),
-            t["customer"]["c_custkey"] == t["orders"]["o_custkey"],
+            F.broadcast(customer),
+            customer["c_custkey"] == orders["o_custkey"],
         )
         .join(
-            F.broadcast(t["supplier"]),
-            t["supplier"]["s_suppkey"] == t["lineitem"]["l_suppkey"],
+            F.broadcast(supplier),
+            supplier["s_suppkey"] == lineitem["l_suppkey"],
         )
         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
         .select(
@@ -2368,12 +2352,12 @@ ORDER BY support
 
 
 @register("q564_truss_support", oracle=_TRUSS_ORACLE)
-def q564(spark, sf_dir):
+def q564(lineitem):
     """Edge-support histogram from oriented triangle enumeration
     (oracle comment)."""
     from ..operators.triangles import triangle_list
 
-    e, _ = _part_graph(spark, sf_dir)
+    e, _ = _part_graph(lineitem)
     tri = triangle_list(e)
     # triangle_list orders corners by the (deg, id) orientation, NOT by
     # id — canonicalize each exploded edge back to u < v or the join
@@ -2430,10 +2414,10 @@ FROM ed GROUP BY ku ORDER BY k
 
 
 @register("q565_neighbor_degree_curve", oracle=_KNNDEG_ORACLE)
-def q565(spark, sf_dir):
+def q565(lineitem):
     """knn(k) mixing curve over edge-endpoint degrees (oracle
     comment)."""
-    e, deg = _part_graph(spark, sf_dir)
+    e, deg = _part_graph(lineitem)
     und = e.select("u", "v").unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -2487,11 +2471,10 @@ FROM spec
 
 
 @register("q566_lexical_richness", oracle=_RICHNESS_ORACLE)
-def q566(spark, sf_dir):
+def q566(documents):
     """K/R/S over one frequency-spectrum aggregate (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     tf = (
-        d.select(
+        documents.select(
             F.explode(
                 F.filter(F.split(F.lower("text"), " "), lambda x: F.length(x) > 0)
             ).alias("term")
@@ -2574,11 +2557,10 @@ ORDER BY n_docs DESC, gram LIMIT 20
 
 
 @register("q567_winnowing_fingerprints", oracle=_WINNOW_ORACLE)
-def q567(spark, sf_dir):
+def q567(documents):
     """True-winnowing fingerprints (rightmost window min) -> cross-doc
     collision groups (oracle comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = documents.select(
         "doc_id",
         F.filter(F.split(F.lower("text"), " "), lambda x: F.length(x) > 0).alias(
             "ts"
@@ -2707,12 +2689,11 @@ ORDER BY score_micro DESC, phrase LIMIT 20
 
 
 @register("q568_rake_keywords", oracle=_RAKE_ORACLE)
-def q568(spark, sf_dir):
+def q568(documents):
     """RAKE deg/freq phrase scores with micro word terms (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
     stops = [s.strip("'") for s in _RAKE_STOPS.split(",")]
-    toks = d.select(
+    toks = documents.select(
         "doc_id",
         F.filter(F.split(F.lower("text"), " "), lambda x: F.length(x) > 0).alias(
             "ts"
@@ -2828,11 +2809,10 @@ FROM m ORDER BY source
 
 
 @register("q569_lognormal_length_fit", oracle=_LOGNORM_ORACLE)
-def q569(spark, sf_dir):
+def q569(documents):
     """Log-space MoM fit + lognormality gap per source (oracle
     comment)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    v = d.filter(F.col("n_chars") > 0).select(
+    v = documents.filter(F.col("n_chars") > 0).select(
         "source",
         F.expr(
             "CAST(ROUND(LN(CAST(n_chars AS DOUBLE)) * 1000000, 0) AS BIGINT)"
@@ -2885,12 +2865,11 @@ WITH cells AS MATERIALIZED (
 """
 
 
-def _emb_quant(spark, sf_dir):
+def _emb_quant(embeddings):
     """(vec_id, label, xs: array<bigint>) milli-quantized embeddings —
     the same CAST-to-DOUBLE + ROUND half-up expression as the oracle
     CTE, applied per element while the vector is still an array."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    return emb.select(
+    return embeddings.select(
         "vec_id",
         "label",
         F.expr(
@@ -2900,8 +2879,8 @@ def _emb_quant(spark, sf_dir):
     )
 
 
-def _emb_cells(spark, sf_dir):
-    q = _emb_quant(spark, sf_dir)
+def _emb_cells(embeddings):
+    q = _emb_quant(embeddings)
     return q.select(
         "vec_id", "label", F.posexplode("xs").alias("p", "xu")
     ).select("vec_id", "label", (F.col("p") + 1).alias("i"), "xu")
@@ -2976,11 +2955,11 @@ FROM f2, ns
 
 
 @register("q570_mmd_poly2", oracle=_MMD_ORACLE)
-def q570(spark, sf_dir):
+def q570(embeddings):
     """Pairs-free polynomial MMD^2 over exact Gram moments (oracle
     comment)."""
-    cells = _emb_cells(spark, sf_dir)
-    half = _emb_quant(spark, sf_dir).withColumn(
+    cells = _emb_cells(embeddings)
+    half = _emb_quant(embeddings).withColumn(
         "g", F.when(F.col("label") < 5, 0).otherwise(1)
     )
     mom = _emb_moments(half, "g")
@@ -3057,7 +3036,7 @@ _CU = f"CAST({floor_rhu('(1000 * (n * m - si * sj))', 'n * n')} AS BIGINT)"
 
 
 @register("q571_coral_shift", oracle=_CORAL_ORACLE)
-def q571(spark, sf_dir):
+def q571(embeddings):
     """Integer-quantized covariance cells -> exact Frobenius^2 CORAL
     (oracle comment)."""
     # pinned: cells feeds ns AND the per-dim sums; sums feeds both
@@ -3065,12 +3044,12 @@ def q571(spark, sf_dir):
     # diff — unpinned, each re-ran its subtree per reference (guide
     # §2.4; before-plan: 13 Exchanges)
     cells = (
-        _emb_cells(spark, sf_dir)
+        _emb_cells(embeddings)
         .withColumn("g", F.when(F.col("label") < 5, 0).otherwise(1))
         .transform(pin)
     )
     mom = _emb_moments(
-        _emb_quant(spark, sf_dir).withColumn(
+        _emb_quant(embeddings).withColumn(
             "g", F.when(F.col("label") < 5, 0).otherwise(1)
         ),
         "g",
@@ -3152,11 +3131,11 @@ FROM tr ORDER BY label
 
 
 @register("q572_participation_ratio", oracle=_PR_ORACLE)
-def q572(spark, sf_dir):
+def q572(embeddings):
     """Eigen-free effective dimensionality per label (oracle
     comment)."""
-    cells = _emb_cells(spark, sf_dir)
-    mom = _emb_moments(_emb_quant(spark, sf_dir), "label").select(
+    cells = _emb_cells(embeddings)
+    mom = _emb_moments(_emb_quant(embeddings), "label").select(
         F.col("g"), "i", "j", F.col("m").cast("decimal(38,0)").alias("m")
     )
     ns = cells.groupBy(F.col("label").alias("g")).agg(
@@ -3234,12 +3213,12 @@ FROM blocks
 
 
 @register("q573_linear_cka", oracle=_CKA_ORACLE)
-def q573(spark, sf_dir):
+def q573(embeddings):
     """Sqrt-free linear CKA^2 between dimension halves (oracle
     comment)."""
-    cells = _emb_cells(spark, sf_dir).withColumn("g", F.lit(1))
+    cells = _emb_cells(embeddings).withColumn("g", F.lit(1))
     mom = _emb_moments(
-        _emb_quant(spark, sf_dir).withColumn("g", F.lit(1)), "g"
+        _emb_quant(embeddings).withColumn("g", F.lit(1)), "g"
     ).select("i", "j", F.col("m").cast("decimal(38,0)").alias("m"))
     ns = cells.agg(F.countDistinct("vec_id").cast("decimal(38,0)").alias("n"))
     sums = cells.groupBy("i").agg(F.sum("xu").cast("decimal(38,0)").alias("si"))
@@ -3315,7 +3294,7 @@ _CENT_CTE = _EMB_CELLS_CTE + """
 """
 
 
-def _centroid_frames(spark, sf_dir):
+def _centroid_frames(embeddings):
     """(cells, cen, scat) mirroring _CENT_CTE on the Spark side.
 
     All three frames are pinned: cells feeds the
@@ -3325,7 +3304,7 @@ def _centroid_frames(spark, sf_dir):
     totals — unpinned, the embedding explode and centroid aggregates
     each re-ran per reference (guide §2.4; q574/q575 before-plans: 11
     Exchanges each)."""
-    cells = pin(_emb_cells(spark, sf_dir))
+    cells = pin(_emb_cells(embeddings))
     sums = cells.groupBy(F.col("label").alias("g"), "i").agg(
         F.sum("xu").cast("bigint").alias("si"),
         F.count("*").cast("bigint").alias("n"),
@@ -3387,10 +3366,10 @@ FROM r
 
 
 @register("q574_davies_bouldin", oracle=_DB_ORACLE)
-def q574(spark, sf_dir):
+def q574(embeddings):
     """Squared-scatter DB index, exact integer rationals (oracle
     comment)."""
-    _, cen, scat = _centroid_frames(spark, sf_dir)
+    _, cen, scat = _centroid_frames(embeddings)
     a = cen.select(F.col("g").alias("gi"), "i", F.col("cm").alias("ca"))
     b = cen.select(F.col("g").alias("gj"), F.col("i").alias("ib"), F.col("cm").alias("cb"))
     cd = (
@@ -3455,9 +3434,9 @@ FROM bsum, tot
 
 
 @register("q575_calinski_harabasz", oracle=_CH_ORACLE)
-def q575(spark, sf_dir):
+def q575(embeddings):
     """Integer-exact CH variance ratio (oracle comment)."""
-    cells, cen, scat = _centroid_frames(spark, sf_dir)
+    cells, cen, scat = _centroid_frames(embeddings)
     sums = cells.groupBy("i").agg(
         F.sum("xu").cast("bigint").alias("sall"),
         F.count("*").cast("bigint").alias("nall"),
@@ -3537,7 +3516,7 @@ ORDER BY lof_micro DESC, vec_id LIMIT 20
 
 
 @register("q576_lof_outliers", oracle=_LOF_ORACLE)
-def q576(spark, sf_dir):
+def q576(embeddings):
     """kdist-ratio LOF-lite via the distributed block-matmul kernel
     (oracle comment). The kernel's sqeuclid_milli metric reproduces the
     SQL twin's exact int64 distances and its (du ASC, vb ASC) rank
@@ -3546,9 +3525,8 @@ def q576(spark, sf_dir):
     run)."""
     from ..operators.similarity import knn_block_topk
 
-    emb = load_tables(spark, sf_dir)["embeddings"]
     rk = (
-        knn_block_topk(emb, k=10, metric="sqeuclid_milli")
+        knn_block_topk(embeddings, k=10, metric="sqeuclid_milli")
         .select(
             F.col("anchor").alias("va"),
             F.col("neighbor").alias("vb"),
@@ -3620,10 +3598,10 @@ FROM haz ORDER BY t
 
 
 @register("q577_nelson_aalen", oracle=_NA_ORACLE)
-def q577(spark, sf_dir):
+def q577(events):
     """Window-cumulative hazard over per-time micro terms (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"].select(
+    e = events.select(
         "user_id", F.col("ts").cast("date").alias("day"), "event_type"
     )
     ends = e.agg(F.max("day").alias("obs_end"))
@@ -3730,10 +3708,10 @@ FROM tot
 
 
 @register("q578_logrank_test", oracle=_LOGRANK_ORACLE)
-def q578(spark, sf_dir):
+def q578(events):
     """Two-cohort log-rank chi^2, per-time micro terms (oracle
     comment)."""
-    e = load_tables(spark, sf_dir)["events"].select(
+    e = events.select(
         "user_id", F.col("ts").cast("date").alias("day"), "event_type"
     )
     ends = e.agg(F.max("day").alias("obs_end"))
@@ -3849,10 +3827,10 @@ FROM est, truth
 
 
 @register("q579_horvitz_thompson", oracle=_HT_ORACLE)
-def q579(spark, sf_dir):
+def q579(orders):
     """HT estimator over an md5 unequal-probability sample (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"].select(
+    o = orders.select(
         "o_orderkey",
         cents("o_totalprice").alias("c"),
         F.substring("o_orderpriority", 1, 1).cast("bigint").alias("r"),
@@ -3932,20 +3910,19 @@ FROM pbar, pe
 
 
 @register("q580_fleiss_kappa", oracle=_FLEISS_ORACLE)
-def q580(spark, sf_dir):
+def q580(lineitem):
     """Exact-rational Fleiss kappa over 3-line rating grids (oracle
     comment). Derivation: P = (ss2 - 3N)/(6N), Pe = sum_j (cj/(3N))^2,
     kappa = (P - Pe)/(1 - Pe) cleared over the common denominator
     6N*(3N)^2 — tot = 3N, so kappa = (tot^2*(ss2-3N) - 6N*sum cj^2)
     / (6N*(tot^2 - sum cj^2))."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     # the full3 "has >= 3 lines" gate is a whole-partition COUNT on the
     # SAME l_orderkey partitioning the rank window already pays for
     # (row_number assigns 1..n, so count(rk<=3 rows)=3 <=> n>=3): the
     # former groupBy + self-join added an exchange and re-ran the
     # window subtree (guide §2.4)
     wo = Window.partitionBy("l_orderkey")
-    ranked = li.select(
+    ranked = lineitem.select(
         F.col("l_orderkey").alias("ok"),
         F.col("l_returnflag").alias("cat"),
         F.row_number()
@@ -4028,10 +4005,9 @@ FROM pairsum
 
 
 @register("q581_somers_d", oracle=_SOMERS_ORACLE)
-def q581(spark, sf_dir):
+def q581(lineitem):
     """Histogram-collapsed Somers' D_yx (oracle comment)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    cells = li.groupBy(
+    cells = lineitem.groupBy(
         F.round(F.col("l_discount") * 100, 0).cast("bigint").alias("x"),
         F.round(F.col("l_quantity"), 0).cast("bigint").alias("y"),
     ).agg(F.count("*").cast("bigint").alias("k"))
@@ -4117,10 +4093,10 @@ SELECT n_test, l10_x10, l50_x10, l90_x10 FROM loss
 
 
 @register("q582_pinball_loss", oracle=_PINBALL_ORACLE)
-def q582(spark, sf_dir):
+def q582(orders):
     """10x-cleared integer pinball losses per quantile (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     bounds = daily.agg(
         F.min("day").alias("mn"), F.max("day").alias("mx")
     )
@@ -4234,13 +4210,12 @@ FROM terms
 
 
 @register("q583_hosmer_lemeshow", oracle=_HL_ORACLE)
-def q583(spark, sf_dir):
+def q583(orders, customer):
     """Integer HL chi^2 over NTILE deciles of milli rates (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
-    base = t["orders"].join(
-        F.broadcast(t["customer"]),
-        t["customer"]["c_custkey"] == t["orders"]["o_custkey"],
+    base = orders.join(
+        F.broadcast(customer),
+        customer["c_custkey"] == orders["o_custkey"],
     ).select(
         "o_orderkey",
         "o_orderdate",
@@ -4315,13 +4290,12 @@ FROM m ORDER BY brand
 
 
 @register("q584_price_elasticity", oracle=_ELAST_ORACLE)
-def q584(spark, sf_dir):
+def q584(lineitem, part):
     """Per-brand log-log OLS elasticity, exact integer moments (oracle
     comment)."""
-    t = load_tables(spark, sf_dir)
     pp = (
-        t["lineitem"]
-        .join(F.broadcast(t["part"]), t["part"]["p_partkey"] == t["lineitem"]["l_partkey"])
+        lineitem
+        .join(F.broadcast(part), part["p_partkey"] == lineitem["l_partkey"])
         .groupBy("p_brand", "p_partkey", "p_retailprice")
         .agg(F.sum(F.round("l_quantity", 0).cast("bigint")).alias("sq"))
         .select(
@@ -4390,12 +4364,11 @@ FROM l
 
 
 @register("q585_page_trend", oracle=_PAGE_ORACLE)
-def q585(spark, sf_dir):
+def q585(events):
     """Page's L over weekday blocks x 6h-slot treatments (oracle
     comment). k = 4: E[L] = b*k(k+1)^2/4 = 25b, Var = b*k^2(k+1)(k^2-1)
     / 144 = b*16*5*15/144 — the 144 is cleared into the numerator."""
-    e = load_tables(spark, sf_dir)["events"]
-    slots = e.select(
+    slots = events.select(
         (F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01")) % 7).alias(
             "blk"
         ),
@@ -4461,11 +4434,10 @@ FROM agg
 
 
 @register("q586_hill_tail_index", oracle=_HILL_ORACLE)
-def q586(spark, sf_dir):
+def q586(orders):
     """Hill estimator over the top-101 order statistics (oracle
     comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         cents("o_totalprice").alias("c"),
         "o_orderkey",
     )
@@ -4551,11 +4523,10 @@ FROM cond, marg
 
 
 @register("q587_entropy_rate", oracle=_ENTRATE_ORACLE)
-def q587(spark, sf_dir):
+def q587(events):
     """Conditional vs marginal transition entropy (oracle comment)."""
-    e = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select("event_type", F.lead("event_type").over(w).alias("nxt"))
+    seq = events.select("event_type", F.lead("event_type").over(w).alias("nxt"))
     # pinned: tc (|types|² rows) feeds rows_, tot AND the cond join —
     # unpinned, the per-user lead() window over events runs three times
     # (guide §2.4; before-plan: 16 Exchanges)
@@ -4662,14 +4633,13 @@ FROM gsum, btw
 
 
 @register("q588_theil_index", oracle=_THEIL_ORACLE)
-def q588(spark, sf_dir):
+def q588(orders, customer):
     """Theil T + between/within decomposition (oracle comment)."""
-    t = load_tables(spark, sf_dir)
     cy = (
-        t["orders"]
+        orders
         .join(
-            F.broadcast(t["customer"]),
-            t["customer"]["c_custkey"] == t["orders"]["o_custkey"],
+            F.broadcast(customer),
+            customer["c_custkey"] == orders["o_custkey"],
         )
         .groupBy("c_custkey", F.col("c_nationkey").alias("nk"))
         .agg(
@@ -4778,10 +4748,9 @@ FROM conf, cls ORDER BY decile
 
 
 @register("q589_youden_threshold", oracle=_YOUDEN_ORACLE)
-def q589(spark, sf_dir):
+def q589(spark, orders):
     """Integer ROC curve + Youden J at decile cuts (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         cents("o_totalprice").alias("c"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
         "o_orderkey",
@@ -4883,10 +4852,9 @@ FROM conf
 
 
 @register("q590_matthews_corr", oracle=_MCC_ORACLE)
-def q590(spark, sf_dir):
+def q590(orders):
     """Sign + squared MCC and balanced accuracy (oracle comment)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    v = o.select(
+    v = orders.select(
         cents("o_totalprice").alias("c"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
         "o_orderkey",
@@ -4980,10 +4948,10 @@ ORDER BY infl_d2 DESC, day LIMIT 10
 
 
 @register("q591_ols_influence", oracle=_INFL_ORACLE)
-def q591(spark, sf_dir):
+def q591(orders):
     """Exact leverage + rounded influence, top-10 days (oracle
     comment)."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = _daily_cents(orders)
     idx = daily.select(
         "day",
         F.col("cents").alias("y"),
@@ -5034,7 +5002,7 @@ def q591(spark, sf_dir):
 
 
 @register("q592_ann_hard_negatives", tags=("approx",))
-def q592(spark, sf_dir):
+def q592(embeddings):
     """IVF-probed hard-negative mining (r11 verdict task 4): per anchor,
     the most-similar cross-label vector among its n_probe nearest IVF
     cells — the runnable scale lane whose EXACT recall oracle is
@@ -5046,8 +5014,7 @@ def q592(spark, sf_dir):
     discipline as the exact kernel so the comparison is well-defined."""
     from ..operators.similarity import ann_hard_negatives
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    res = ann_hard_negatives(e)
+    res = ann_hard_negatives(embeddings)
     return (
         res.select("anchor", "hard_neg", "sim")
         .orderBy(F.col("sim").desc(), "anchor")

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from ..cdc.fixtures import synth_binary_cdc_from_events, synth_cdc_from_events
 from ..cdc.pipeline import route_binary, route_json
-from ..io import load_tables
 from . import register
 
 # The synthetic changelog (cdc/fixtures.py synth_cdc_from_events) expressed
@@ -41,11 +40,10 @@ WHERE operation = 'RECORD_DELETE'
 
 
 @register("q41_cdc_route_fts", oracle=_CDC_FTS_ORACLE)
-def q41(spark, sf_dir):
+def q41(events):
     """End-to-end CDC routing semantics, hash-checked: synth changelog →
     route_json → FTS messages (map exploded to columns for the oracle)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    cdc = synth_cdc_from_events(ev)
+    cdc = synth_cdc_from_events(events)
     fts, _geo = route_json(cdc)
     return fts.select(
         "_id",
@@ -67,11 +65,10 @@ WHERE event_type NOT IN ('signup', 'error') AND event_id % 3 = 2
 
 
 @register("q42_cdc_route_geo", oracle=_CDC_GEO_ORACLE)
-def q42(spark, sf_dir):
+def q42(events):
     """Geo route of the synthetic changelog (address updates only — the
     synth INSERT docs carry no address, matching README scenario 1)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    cdc = synth_cdc_from_events(ev)
+    cdc = synth_cdc_from_events(events)
     _fts, geo = route_json(cdc)
     return geo.select(
         "_id",
@@ -115,11 +112,10 @@ WHERE event_type IN ('signup', 'error')
 
 
 @register("q419_cdc_route_binary", oracle=_CDC_BINARY_ORACLE)
-def q419(spark, sf_dir):
+def q419(events):
     """Binary-lane CDC routing, hash-checked end-to-end: synth binary
     changelog → route_binary → FTS messages (oracle comment above)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    cdc = synth_binary_cdc_from_events(ev)
+    cdc = synth_binary_cdc_from_events(events)
     fts = route_binary(cdc)
     return fts.select(
         "_id",

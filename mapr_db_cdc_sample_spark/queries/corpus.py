@@ -28,7 +28,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
-from ..io import load_tables
 from . import register
 
 # --- deterministic PII injection (the corpus has none of its own) -------
@@ -86,15 +85,14 @@ def _pii_corpus(d):
     FROM corpus
     """,
 )
-def q88(spark, sf_dir):
+def q88(documents):
     """PII redaction: regex scrub of emails/phones/IPs with per-doc match
     counts and an md5 of the redacted text (the hash keeps the oracle
     comparison exact without shipping full text). Pure projection — zero
     shuffles; regexes are Java/RE2-common syntax so both engines match
     byte-identically. At 100 TB this is the map-only pass fused into the
     ingest scan."""
-    d = load_tables(spark, sf_dir)["documents"]
-    c = _pii_corpus(d)
+    c = _pii_corpus(documents)
     red = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(F.col("text"), _EMAIL_RE, "<EMAIL>"),
@@ -139,15 +137,14 @@ def q88(spark, sf_dir):
     FROM g
     """,
 )
-def q89(spark, sf_dir):
+def q89(documents):
     """Repetition filter (Gopher-style quality signals): fraction of
     tokens taken by the most frequent word + duplicate-2-gram fraction,
     thresholded into a keep flag. Entirely array expressions — a pure
     projection with NO shuffle (per-doc cost is O(distinct x len),
     bounded by doc length). Thresholds compare the ROUNDED values so the
     keep bit is engine-stable."""
-    d = load_tables(spark, sf_dir)["documents"]
-    base = d.select("doc_id", T.tokens(F.col("text")).alias("tk")).where(
+    base = documents.select("doc_id", T.tokens(F.col("text")).alias("tk")).where(
         F.size("tk") >= 2
     )
     tk = F.col("tk")
@@ -216,14 +213,13 @@ _DEFAULT_RATE24 = 16777216  # unknown strata kept whole
                     ELSE {_DEFAULT_RATE24} END
     """,
 )
-def q90(spark, sf_dir):
+def q90(documents):
     """Deterministic stratified sampling (domain mixing): per-language
     keep rates applied via an md5-derived 24-bit integer threshold —
     reproducible across engines, runs, and cluster sizes (unlike
     sample()/TABLESAMPLE, whose RNG is engine-local). Pure filter, no
     shuffle; at 100 TB this composes with partition pruning since the
     decision needs only (doc_id, lang)."""
-    d = load_tables(spark, sf_dir)["documents"]
     u24 = F.conv(
         F.substring(F.md5(F.concat(F.lit("s42-"), F.col("doc_id").cast("string"))), 1, 6),
         16,
@@ -233,7 +229,7 @@ def q90(spark, sf_dir):
         *[F.when(F.col("lang") == k, F.lit(v)) for k, v in _RATE24.items()],
         F.lit(_DEFAULT_RATE24),
     )
-    return d.where(u24 < thresh).select("doc_id", "lang")
+    return documents.where(u24 < thresh).select("doc_id", "lang")
 
 
 @register(
@@ -245,7 +241,7 @@ def q90(spark, sf_dir):
     LIMIT 256
     """,
 )
-def q91(spark, sf_dir):
+def q91(documents):
     """Deterministic training-order shuffle: sort by a seeded md5 of the
     doc key. Epoch N is just a different seed — same corpus, different
     order, zero RNG state to coordinate. The LIMIT form here plans as
@@ -253,10 +249,9 @@ def q91(spark, sf_dir):
     form is orderBy(skey) = range-partitioned sort, the standard
     cluster-wide shuffle, with the md5 key uniform by construction (no
     skew, no hot partition)."""
-    d = load_tables(spark, sf_dir)["documents"]
     skey = F.md5(F.concat(F.lit("epoch0-"), F.col("doc_id").cast("string")))
     return (
-        d.select("doc_id", skey.alias("skey"))
+        documents.select("doc_id", skey.alias("skey"))
         .orderBy("skey")
         .limit(256)
     )
@@ -285,7 +280,7 @@ def q91(spark, sf_dir):
     GROUP BY lang, shard, seq_id
     """,
 )
-def q92(spark, sf_dir):
+def q92(documents):
     """Sequence packing: assign documents to fixed 1024-token training
     sequences by running-offset within (lang, shard). Packing is
     SHARD-local (shard = doc_id % 8): each window partition sees only
@@ -294,8 +289,7 @@ def q92(spark, sf_dir):
     actually runs (pack within a shard, never a global scan order).
     Integer arithmetic end to end; the window shuffles once on the
     uniform (lang, shard) key."""
-    d = load_tables(spark, sf_dir)["documents"]
-    t = d.select(
+    t = documents.select(
         "doc_id",
         "lang",
         (F.col("doc_id") % 8).alias("shard"),
@@ -364,7 +358,7 @@ _DECONTAM_ORACLE = """
 
 
 @register("q99_decontamination", oracle=_DECONTAM_ORACLE)
-def q99(spark, sf_dir):
+def q99(spark, documents):
     """Benchmark decontamination: flag corpus docs sharing >= 10 hashed
     word-3-grams with any benchmark doc. The benchmark side is exploded
     and BROADCAST (real benchmark suites are a few million grams — driver
@@ -373,20 +367,19 @@ def q99(spark, sf_dir):
     nothing quadratic ever materializes. Same hashed-gram map as the
     MinHash pipeline (functions/text.py), so Jaccard-style counts match
     DuckDB's LIST_INTERSECT exactly."""
-    d = load_tables(spark, sf_dir)["documents"]
     sc = spark.sparkContext
-    bench_src = d.where(F.col("doc_id") % 97 == 0).select(
+    bench_src = documents.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("b_id"), F.col("text").alias("b_text")
     )
     planted = (
-        d.where(F.col("doc_id") % 13 == 0)
+        documents.where(F.col("doc_id") % 13 == 0)
         .join(F.broadcast(bench_src), F.col("b_id") == (F.col("doc_id") % 6) * 97)
         .select(
             (F.col("doc_id") + 2000000).alias("doc_id"),
             F.concat(F.col("text"), F.lit(" "), F.col("b_text")).alias("text"),
         )
     )
-    corpus = d.select("doc_id", "text").unionAll(planted)
+    corpus = documents.select("doc_id", "text").unionAll(planted)
     # Materialize TOKENS at the exchange, then build grams from the
     # shipped arrays: inside shingles() the tokens subtree is inlined
     # into every element_at (Spark has no CSE inside lambdas), so
@@ -462,7 +455,7 @@ def _target_case_sql() -> str:
     FROM per, tot
     """,
 )
-def q100(spark, sf_dir):
+def q100(documents):
     """Mixture reweighting (domain balancing): per-language token counts,
     actual token share, and the sampling weight target_share/actual_share
     that a deterministic sampler (q90) applies to hit the target mix.
@@ -470,8 +463,7 @@ def q100(spark, sf_dir):
     cost is the token-count scan, which fuses with the quality pass.
     Shares/weights are double divisions of exact integers (bit-identical
     across engines), rounded(6) for display stability."""
-    d = load_tables(spark, sf_dir)["documents"]
-    per = d.groupBy("lang").agg(
+    per = documents.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(T.tokens(F.col("text")))).cast("bigint").alias("n_tokens"),
     )
@@ -500,7 +492,7 @@ def q100(spark, sf_dir):
     WHERE pos <= 40
     """,
 )
-def q103(spark, sf_dir):
+def q103(documents):
     """Deterministic fixed-size per-stratum sample (eval/holdout fold
     selection): the N lexicographically-first seeded md5 keys per
     language. Unlike rate-based sampling (q90) this guarantees EXACTLY
@@ -508,11 +500,10 @@ def q103(spark, sf_dir):
     window triggers WindowGroupLimit (plan-asserted) — every task
     locally top-ks before the lang shuffle, so the exchange carries
     O(strata x N), not the corpus."""
-    d = load_tables(spark, sf_dir)["documents"]
     skey = F.md5(F.concat(F.lit("fold7-"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("lang").orderBy(skey, F.col("doc_id"))
     return (
-        d.select("lang", "doc_id", F.row_number().over(w).alias("pos"))
+        documents.select("lang", "doc_id", F.row_number().over(w).alias("pos"))
         .where(F.col("pos") <= 40)
     )
 
@@ -585,7 +576,7 @@ _PIPELINE_ORACLE = """
 
 
 @register("q104_corpus_pipeline", oracle=_PIPELINE_ORACLE)
-def q104(spark, sf_dir):
+def q104(spark, documents):
     """The WHOLE corpus pipeline as one DAG — quality gate (q87's) →
     exact dedup (min-id per fingerprint) → benchmark decontamination
     (q99's, on the surviving docs) → stratified sampling (q90's integer
@@ -598,8 +589,7 @@ def q104(spark, sf_dir):
     from .llm import quality_gated
 
     sc = spark.sparkContext
-    d = load_tables(spark, sf_dir)["documents"]
-    gated = quality_gated(d)
+    gated = quality_gated(documents)
     kept = (
         gated.groupBy(F.md5(T.normalize(F.col("text"))).alias("fp"))
         .agg(F.min(F.struct("doc_id", "lang", "n_tokens", "text")).alias("r"))
@@ -618,7 +608,7 @@ def q104(spark, sf_dir):
         ).alias("gs"),
     )
     btoks = (
-        d.where(F.col("doc_id") % 97 == 0)
+        documents.where(F.col("doc_id") % 97 == 0)
         .select(F.col("doc_id").alias("bench_id"), T.tokens(F.col("text")).alias("tk"))
         .repartition(sc.defaultParallelism)
     )
@@ -723,7 +713,7 @@ _PPL_ORACLE = """
 
 
 @register("q110_perplexity_filter", oracle=_PPL_ORACLE)
-def q110(spark, sf_dir):
+def q110(documents):
     """Perplexity-style quality filter (the CCNet recipe, self-trained):
     fit an add-1-smoothed bigram LM on the corpus itself, score every doc
     by its average negative log-likelihood, drop the high-NLL tail
@@ -740,8 +730,7 @@ def q110(spark, sf_dir):
     Determinism: ln rounded(6) into a DECIMAL-exact sum (order-free),
     one double division, final round(4); kept compares the rounded
     value."""
-    d = load_tables(spark, sf_dir)["documents"]
-    tk = d.select("doc_id", T.tokens(F.col("text")).alias("tk"))
+    tk = documents.select("doc_id", T.tokens(F.col("text")).alias("tk"))
     db = (
         tk.select("doc_id", F.explode(T.shingles(F.col("tk"), 2)).alias("bg"))
         .groupBy("doc_id", "bg")
@@ -798,7 +787,7 @@ _CHUNK_ORACLE = f"""
 
 
 @register("q115_doc_chunking", oracle=_CHUNK_ORACLE)
-def q115(spark, sf_dir):
+def q115(documents):
     """Context-window chunking: split each document into {chunk}=64-token
     windows advancing by {stride}=48 (16-token overlap so no boundary
     context is lost) — the standard prep before tokenizer/packing in a
@@ -807,8 +796,7 @@ def q115(spark, sf_dir):
     the SAME materialized token array (no re-tokenization per chunk),
     posexplode supplies chunk_idx. Chunk content is carried as an md5 so
     the cross-engine check is exact without shipping the tokens."""
-    d = load_tables(spark, sf_dir)["documents"]
-    base = d.select("doc_id", T.tokens(F.col("text")).alias("tk")).where(
+    base = documents.select("doc_id", T.tokens(F.col("text")).alias("tk")).where(
         F.size("tk") > 0
     )
     chunks = F.transform(

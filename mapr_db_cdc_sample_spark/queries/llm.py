@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..functions import vectors as V
 from ..functions.exact import cosine_duck
-from ..io import load_tables
 from ..operators import banding as B
 from . import register
 
@@ -49,13 +48,12 @@ _STOP_SQL = "('the', 'a', 'of', 'and', 'to')"
     GROUP BY 1
     """,
 )
-def q37(spark, sf_dir):
+def q37(documents):
     """Exact near-dup: hash-groupBy on normalized text, keep min doc_id.
     The corpus has no exact dups, so a deterministic mutated copy of every
     7th doc is unioned in — those groups must come back with n_docs=2."""
-    d = load_tables(spark, sf_dir)["documents"]
-    corpus = d.select("doc_id", "text").unionAll(
-        d.where(F.col("doc_id") % 7 == 0).select(
+    corpus = documents.select("doc_id", "text").unionAll(
+        documents.where(F.col("doc_id") % 7 == 0).select(
             (F.col("doc_id") + 1000000).alias("doc_id"),
             F.concat(F.col("text"), F.lit(" ")).alias("text"),
         )
@@ -87,17 +85,16 @@ def _query_vec(e, vid: int):
     LIMIT 10
     """,
 )
-def q38(spark, sf_dir):
+def q38(embeddings):
     """Similarity search, exact top-k cosine. The query vector is a 1-row
     broadcast (never a fact-side crossJoin) carrying its precomputed norm;
     ranking is on the ROUNDED sim so the top-k set is stable across
     engines; orderBy+limit plans as TakeOrderedAndProject. Scale path:
     operators/lsh.py (IVF/LSH) replaces the linear scan; this exact form
     is the recall oracle."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    q = _query_vec(e, 0)
+    q = _query_vec(embeddings, 0)
     return (
-        e.where(F.col("vec_id") != 0)
+        embeddings.where(F.col("vec_id") != 0)
         .join(F.broadcast(q))
         .select(
             "vec_id",
@@ -119,11 +116,10 @@ def q38(spark, sf_dir):
     LIMIT 50
     """,
 )
-def q39(spark, sf_dir):
+def q39(documents):
     """Text analysis: tokenize → stopword filter → top term frequencies."""
-    d = load_tables(spark, sf_dir)["documents"]
     return (
-        d.select(F.explode(T.tokens(F.col("text"))).alias("term"))
+        documents.select(F.explode(T.tokens(F.col("text"))).alias("term"))
         .where(~F.col("term").isin(*T.STOPWORDS))
         .groupBy("term")
         .agg(F.count("*").alias("n"))
@@ -141,9 +137,8 @@ def q39(spark, sf_dir):
     FROM documents GROUP BY lang
     """,
 )
-def q40(spark, sf_dir):
-    d = load_tables(spark, sf_dir)["documents"]
-    return d.groupBy("lang").agg(
+def q40(documents):
+    return documents.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.round(F.sum("n_chars").cast("double") / F.count("*"), 2).alias("avg_chars"),
         F.countDistinct("source").alias("n_sources"),
@@ -230,23 +225,21 @@ _minhash_signatures = B.minhash_signatures
 
 
 @register("q43_minhash_signatures", oracle=_MINHASH_ORACLE)
-def q43(spark, sf_dir):
+def q43(documents):
     """MinHash signatures: 8 hashes over word-3-gram shingles, computed as
     XOR permutations of a single 60-bit md5-derived shingle hash."""
-    d = load_tables(spark, sf_dir)["documents"]
-    return _minhash_signatures(_minhash_corpus(d))
+    return _minhash_signatures(_minhash_corpus(documents))
 
 
 @register("q44_minhash_lsh_pairs", oracle=_LSH_PAIRS_ORACLE)
-def q44(spark, sf_dir):
+def q44(documents):
     """MinHash + LSH banding (4 bands x 2 hashes): candidate near-dup
     pairs = docs sharing any band bucket — the classic shingle -> minhash
     -> band -> bucket pipeline (operators/banding.py). Buckets above
     DEFAULT_BUCKET_CAP are dropped BEFORE id collection (boilerplate
     mega-cluster guard; q86 surfaces the dropped count); within-bucket
     pairs are emitted with higher-order functions, no self-join."""
-    d = load_tables(spark, sf_dir)["documents"]
-    bands = B.minhash_bands(_minhash_signatures(_minhash_corpus(d)))
+    bands = B.minhash_bands(_minhash_signatures(_minhash_corpus(documents)))
     return B.bucket_pairs(B.band_buckets(bands))
 
 
@@ -275,12 +268,11 @@ def _simhash_oracle() -> str:
 
 
 @register("q45_simhash", oracle=_simhash_oracle())
-def q45(spark, sf_dir):
+def q45(documents):
     """SimHash document fingerprints (16-bit): per-token 16-bit md5-derived
     hash, ±1 vote per bit, sign → bit. One explode + one groupBy (map-side
     partials); near-dup docs differ in few bits (Hamming)."""
-    d = load_tables(spark, sf_dir)["documents"]
-    tok = d.select(
+    tok = documents.select(
         "doc_id", F.explode(T.tokens(F.col("text"))).alias("t")
     ).select("doc_id", T.h16(F.col("t")).alias("h"))
     votes = tok.groupBy("doc_id").agg(
@@ -323,16 +315,15 @@ WHERE LEN(ga.gs) + LEN(gb.gs) - LEN(LIST_INTERSECT(ga.gs, gb.gs)) > 0
 
 
 @register("q46_ngram_jaccard", oracle=_JACCARD_ORACLE)
-def q46(spark, sf_dir):
+def q46(documents):
     """n-gram Jaccard verify stage, candidate-driven: the pair set is the
     q44 LSH candidate feed (signature -> band -> capped bucket), and the
     exact |A∩B| / |A∪B| on distinct 3-gram shingle sets runs ONLY on
     those candidates — the verifier never does all-pairs work. Threshold
     compares the ROUNDED value so the boundary is engine-stable."""
-    d = load_tables(spark, sf_dir)["documents"]
     # one persisted tokenize+shingle+md5 pass feeds both the LSH candidate
     # generation and the verify gram sets, which intersect as long arrays
-    _sig, pairs = B.candidate_grams(_minhash_corpus(d))
+    _sig, pairs = B.candidate_grams(_minhash_corpus(documents))
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     uni = F.size("ga") + F.size("gb") - inter
     jac = F.round(inter.cast("double") / uni, 4)
@@ -369,11 +360,10 @@ FROM scores WHERE n_tok > 0
 
 
 @register("q47_langid", oracle=_LANGID_ORACLE)
-def q47(spark, sf_dir):
+def q47(documents):
     """Language-ID heuristic: marker-stopword voting with a fixed
     tie-break order (en > es > de > fr). Deterministic in both engines;
     prediction quality is a property of the marker lists, not the plan."""
-    d = load_tables(spark, sf_dir)["documents"]
     tk = T.tokens(F.col("text"))
     markers = {
         "en": ("the", "a", "of"),
@@ -384,7 +374,7 @@ def q47(spark, sf_dir):
     def in_markers(ws):
         return lambda x: x.isin(*ws)
 
-    scored = d.select(
+    scored = documents.select(
         "doc_id",
         "lang",
         *[
@@ -428,13 +418,12 @@ FROM t WHERE LEN(tk) > 0
 
 
 @register("q48_quality_score", oracle=_QUALITY_ORACLE)
-def q48(spark, sf_dir):
+def q48(documents):
     """Quality scoring: length, avg token length, stopword ratio, vowel
     ratio, type-token ratio — the standard cheap text-quality features,
     all integer-exact before one final rounded division."""
-    d = load_tables(spark, sf_dir)["documents"]
     tk = T.tokens(F.col("text"))
-    base = d.select(
+    base = documents.select(
         "doc_id",
         F.length("text").alias("n_chars_obs"),
         tk.alias("tk"),
@@ -470,11 +459,10 @@ def q48(spark, sf_dir):
     FROM documents
     """,
 )
-def q49(spark, sf_dir):
+def q49(documents):
     """Token counting: whitespace, regex (BPE-ish word/number pieces), and
     the chars/4 BPE estimate used for budget accounting."""
-    d = load_tables(spark, sf_dir)["documents"]
-    return d.select(
+    return documents.select(
         "doc_id",
         F.size(F.filter(F.split(F.col("text"), " "), lambda x: F.length(x) > 0)).alias(
             "ws_tokens"
@@ -496,11 +484,10 @@ def q49(spark, sf_dir):
     FROM documents
     """,
 )
-def q50(spark, sf_dir):
+def q50(documents):
     """Document fingerprints: order-insensitive content hash (sorted
     distinct token set) + prefix hash."""
-    d = load_tables(spark, sf_dir)["documents"]
-    return d.select(
+    return documents.select(
         "doc_id",
         T.fingerprint(F.col("text")).alias("content_fp"),
         F.md5(F.substring(F.col("text"), 1, 64)).alias("prefix_fp"),
@@ -522,7 +509,7 @@ WHERE ROUND({cosine_duck('a.e', 'b.e')}, 4) > 0.3
 
 
 @register("q51_embedding_neardup", oracle=_NEARDUP_ORACLE)
-def q51(spark, sf_dir):
+def q51(embeddings):
     """Embedding-cosine near-dup: all-pairs WITHIN a bucket (label = the
     coarse quantizer stand-in), threshold on rounded sim, via the
     distributed block-matmul kernel (operators/similarity.
@@ -533,8 +520,7 @@ def q51(spark, sf_dir):
     and round(4) sims identical; oracle unchanged."""
     from ..operators.similarity import sim_block_pairs
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    return sim_block_pairs(e, threshold=0.3, same_label_only=True)
+    return sim_block_pairs(embeddings, threshold=0.3, same_label_only=True)
 
 
 _IVF_ORACLE = f"""
@@ -593,15 +579,14 @@ def _ivf_parts(e):
 
 
 @register("q52_ann_ivf", oracle=_IVF_ORACLE)
-def q52(spark, sf_dir):
+def q52(embeddings):
     """ANN, IVF-style: 10 fixed centroids (vec_id < 10 — a deterministic
     'training' stand-in), every vector assigned to its nearest centroid
     (argmax over a 10-row broadcast), query probes its top-2 cells, exact
     top-5 within the probed cells. The linear scan of q38 becomes a scan
     of ~2/10ths of the data; q135 materializes this assignment as a
     write-time partition key — the 100 TB form."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    cent, assigned, q = _ivf_parts(e)
+    cent, assigned, q = _ivf_parts(embeddings)
     probe = (
         cent.join(F.broadcast(q))
         .select(
@@ -630,7 +615,7 @@ def q52(spark, sf_dir):
 
 
 @register("q135_ivf_partition_scan", oracle=_IVF_ORACLE)
-def q135(spark, sf_dir):
+def q135(spark, embeddings):
     """The PERSISTED form of q52: the centroid assignment becomes a
     write-time partition key (cell=N directories — the q133 pattern
     applied to vectors), and the query plans against the LAYOUT — the
@@ -644,8 +629,7 @@ def q135(spark, sf_dir):
     result."""
     from ..scratch import scratch_dir
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    cent, assigned, q = _ivf_parts(e)
+    cent, assigned, q = _ivf_parts(embeddings)
     path = scratch_dir("q135_ivf")
     assigned.withColumnRenamed("c_id", "cell").write.mode("overwrite").partitionBy(
         "cell"
@@ -691,7 +675,7 @@ _MAX_ML_LSH_DOCS = 5000
 
 
 @register("q53_minhash_lsh_ml", tags=("approx",))
-def q53(spark, sf_dir):
+def q53(documents):
     """pyspark.ml MinHashLSH near-dup pairs (approximate; rows-only check
     — recall vs the exact q44 pipeline is asserted in tests). Input is
     capped at _MAX_ML_LSH_DOCS (deterministic doc_id prefix): the ml
@@ -701,7 +685,7 @@ def q53(spark, sf_dir):
     from ..operators.lsh import minhash_lsh_pairs
 
     d = (
-        load_tables(spark, sf_dir)["documents"]
+        documents
         .orderBy("doc_id")
         .limit(_MAX_ML_LSH_DOCS)
     )
@@ -710,13 +694,12 @@ def q53(spark, sf_dir):
 
 
 @register("q54_brp_ann", tags=("approx",))
-def q54(spark, sf_dir):
+def q54(embeddings):
     """BucketedRandomProjectionLSH ANN candidates + exact cosine re-rank
     (approximate; recall vs q38 asserted in tests)."""
     from ..operators.lsh import brp_ann_candidates
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    return brp_ann_candidates(e, query_vec_id=0, k=10)
+    return brp_ann_candidates(embeddings, query_vec_id=0, k=10)
 
 
 @register(
@@ -731,14 +714,13 @@ def q54(spark, sf_dir):
     LIMIT 10
     """,
 )
-def q55(spark, sf_dir):
+def q55(embeddings):
     """q38 semantics through the Arrow pandas_udf kernel — proves the
     vectorized Python path gives bit-identical (rounded) results to both
     the JVM expression plan and the DuckDB oracle."""
     from ..operators.similarity import topk_cosine_pandas
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    return topk_cosine_pandas(e, query_vec_id=0, k=10)
+    return topk_cosine_pandas(embeddings, query_vec_id=0, k=10)
 
 
 @register(
@@ -755,14 +737,13 @@ def q55(spark, sf_dir):
     FROM documents
     """,
 )
-def q56(spark, sf_dir):
+def q56(documents):
     """Multimodal plumbing end-to-end: binary payload column + typed
     metadata through mapInPandas (Arrow batches). The fake decoder is
     md5-derived, so even this Python stage is hash-checkable in SQL."""
     from ..operators.multimodal import extract_features, synth_media
 
-    d = load_tables(spark, sf_dir)["documents"]
-    return extract_features(synth_media(d))
+    return extract_features(synth_media(documents))
 
 
 @register(
@@ -775,11 +756,10 @@ def q56(spark, sf_dir):
           FROM embeddings)
     """,
 )
-def q71(spark, sf_dir):
+def q71(embeddings):
     """Table function: posexplode (value + ordinal position) over the
     embedding head — DuckDB twin built from UNNEST of (i, x) structs."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    return e.select(
+    return embeddings.select(
         "vec_id", F.posexplode(F.slice(F.col("embedding"), 1, 8)).alias("pos", "val")
     )
 
@@ -794,13 +774,12 @@ def q71(spark, sf_dir):
     FROM embeddings
     """,
 )
-def q72(spark, sf_dir):
+def q72(embeddings):
     """Nested-array construction + flatten. Array outputs serialized to
     strings (q34 pattern) so every comparator can hash them; float
     elements via DOUBLE -> DECIMAL(12,6) for engine-stable text."""
-    e = load_tables(spark, sf_dir)["embeddings"]
     emb = F.col("embedding")
-    return e.select(
+    return embeddings.select(
         "vec_id",
         F.array_join(
             F.transform(
@@ -826,23 +805,21 @@ def q72(spark, sf_dir):
 
 
 @register("q73_dropdup_subset", tags=("approx",))
-def q73(spark, sf_dir):
+def q73(events):
     """dropDuplicates on a key subset — row choice is nondeterministic by
     contract (SURVEY.md §2.2 Q30 note), so only the deterministic shape
     (one row per key) is exposed for the rows-only check."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return ev.dropDuplicates(["user_id"]).select("user_id")
+    return events.dropDuplicates(["user_id"]).select("user_id")
 
 
 @register("q83_kmeans", tags=("approx",))
-def q83(spark, sf_dir):
+def q83(embeddings):
     """Iterative k-means (3 driver-loop iterations, deterministic init) —
     cluster sizes + rounded within-cluster inertia (rows-only; the
     monotone-inertia property is asserted in tests)."""
     from ..operators.kmeans import kmeans_lite
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-    assigned, _inertia = kmeans_lite(e, k=5, iters=3)
+    assigned, _inertia = kmeans_lite(embeddings, k=5, iters=3)
     return assigned.groupBy("cluster").agg(
         F.count("*").alias("n_points"),
         F.round(F.sum("d2"), 2).alias("inertia"),
@@ -867,13 +844,12 @@ FROM bc GROUP BY n_ids
 
 
 @register("q86_lsh_bucket_stats", oracle=_LSH_BUCKET_STATS_ORACLE)
-def q86(spark, sf_dir):
+def q86(documents):
     """LSH band bucket-size distribution + the dropped flag for buckets
     above DEFAULT_BUCKET_CAP — the audit surface that makes the q44/q85
     mega-bucket cap visible (no silent truncation). One count per band,
     then a tiny groupBy over the counts."""
-    d = load_tables(spark, sf_dir)["documents"]
-    bands = B.minhash_bands(_minhash_signatures(_minhash_corpus(d)))
+    bands = B.minhash_bands(_minhash_signatures(_minhash_corpus(documents)))
     return (
         B.band_counts(bands)
         .groupBy(F.col("n_ids").cast("int").alias("bucket_size"))
@@ -935,14 +911,13 @@ def quality_gated(d):
 
 
 @register("q87_training_corpus", oracle=_TRAINING_CORPUS_ORACLE)
-def q87(spark, sf_dir):
+def q87(documents):
     """The composite a training-data pipeline actually ships: quality
     gate (quality_gated above) -> exact dedup (min doc_id per
     normalized-text fingerprint) -> per-language corpus budget
     (docs, tokens, mean TTR via decimal-exact sum). Every stage is a
     shuffle on a uniform key (fingerprint, lang); nothing quadratic."""
-    d = load_tables(spark, sf_dir)["documents"]
-    scored = quality_gated(d)
+    scored = quality_gated(documents)
     # keep-min-doc_id per fingerprint as min(struct(doc_id, ...)): a pure
     # hash aggregate with map-side partials — no per-partition sort like a
     # row_number window would need (doc_id leads the struct, so struct
@@ -962,15 +937,14 @@ def q87(spark, sf_dir):
 
 
 @register("q85_dedup_corpus", tags=("approx",))
-def q85(spark, sf_dir):
+def q85(documents):
     """End-to-end dedup: corpus with planted duplicates in → kept corpus
     out (LSH candidates → Jaccard verify → connected components → keep
     canonical per cluster). Rows-only; removal guarantees asserted in
     tests."""
     from ..operators.dedup_pipeline import dedup_corpus
 
-    d = load_tables(spark, sf_dir)["documents"]
-    corpus = _minhash_corpus(d)  # planted near-dups for every 11th doc
+    corpus = _minhash_corpus(documents)  # planted near-dups for every 11th doc
     return dedup_corpus(corpus, jaccard_threshold=0.5).select("doc_id")
 
 
@@ -1001,7 +975,7 @@ _QUANT_ORACLE = """
 
 
 @register("q101_embedding_quantize", oracle=_QUANT_ORACLE)
-def q101(spark, sf_dir):
+def q101(embeddings):
     """Int8 scalar quantization of the embedding column (the compression
     step before an ANN index ships to serving): per-vector scale =
     max|x|/127, code = floor(x/scale + 0.5) — floor(x+0.5) instead of
@@ -1012,12 +986,11 @@ def q101(spark, sf_dir):
     and `q` as materialized attributes — inlining them into the lambdas
     would re-run array_max per element (the q99 lesson). Pure map work:
     zero shuffles at any corpus size."""
-    e = load_tables(spark, sf_dir)["embeddings"]
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     # zero/empty vectors are excluded BEFORE dividing: scale 0 would make
     # x/scale NaN and the int cast abort under ANSI (both engines filter
     # identically, so the exclusion is oracle-visible, not silent)
-    scaled = e.select(
+    scaled = embeddings.select(
         "vec_id",
         v.alias("v"),
         (F.array_max(F.transform(v, F.abs)) / 127.0).alias("scale"),
@@ -1069,17 +1042,15 @@ _RETRIEVE_ORACLE = f"""
 
 
 @register("q105_semantic_retrieval", oracle=_RETRIEVE_ORACLE)
-def q105(spark, sf_dir):
+def q105(embeddings, documents):
     """Semantic retrieval end-to-end: exact top-k cosine over embeddings
     (q38's kernel) joined back to the documents table — the fetch step a
     vector store performs after ANN. The 10-row hit list broadcasts into
     the documents join, so the fetch is a partition-pruned point lookup
     at scale, never a fact-fact shuffle."""
-    t = load_tables(spark, sf_dir)
-    e, d = t["embeddings"], t["documents"]
-    q = _query_vec(e, 0)
+    q = _query_vec(embeddings, 0)
     hits = (
-        e.where(F.col("vec_id") != 0)
+        embeddings.where(F.col("vec_id") != 0)
         .join(F.broadcast(q))
         .select(
             "vec_id",
@@ -1089,7 +1060,7 @@ def q105(spark, sf_dir):
         .limit(10)
     )
     return (
-        d.join(F.broadcast(hits), d["doc_id"] == hits["vec_id"])
+        documents.join(F.broadcast(hits), documents["doc_id"] == hits["vec_id"])
         .select("vec_id", "sim", "lang", F.md5(F.col("text")).alias("text_md5"))
         .orderBy(F.col("sim").desc(), F.col("vec_id"))
     )
@@ -1179,7 +1150,7 @@ def _bm25_scored(d):
 
 
 @register("q106_bm25_retrieval", oracle=_BM25_ORACLE)
-def q106(spark, sf_dir):
+def q106(documents):
     """BM25 keyword retrieval (k1=1.2, b=0.75, fixed 3-term query): the
     lexical half of hybrid search. One linear pass computes per-doc term
     frequencies; the corpus stats (N, avgdl, per-term document
@@ -1188,9 +1159,8 @@ def q106(spark, sf_dir):
     Determinism: idf (the only transcendental) is rounded(6) on both
     engines before entering the product; ranking is on the rounded(4)
     score with doc_id tiebreak."""
-    d = load_tables(spark, sf_dir)["documents"]
     return (
-        _bm25_scored(d)
+        _bm25_scored(documents)
         .orderBy(F.col("score").desc(), F.col("doc_id"))
         .limit(20)
     )
@@ -1253,7 +1223,7 @@ _RRF_ORACLE = f"""
 
 
 @register("q107_hybrid_rrf", oracle=_RRF_ORACLE)
-def q107(spark, sf_dir):
+def q107(embeddings, documents):
     """Hybrid retrieval via reciprocal-rank fusion (k=60): fuse the
     semantic top-20 (q105's cosine kernel) with the BM25 top-20 (q106's
     kernel). Both legs end in TakeOrderedAndProject, so the fusion
@@ -1263,11 +1233,9 @@ def q107(spark, sf_dir):
     score is a sum of two exact IEEE divisions of integer ranks (ranks
     themselves are row_numbers over rounded scores with unique id
     tiebreaks), rounded(6)."""
-    t = load_tables(spark, sf_dir)
-    e, d = t["embeddings"], t["documents"]
-    q = _query_vec(e, 0)
+    q = _query_vec(embeddings, 0)
     sem = (
-        e.where(F.col("vec_id") != 0)
+        embeddings.where(F.col("vec_id") != 0)
         .join(F.broadcast(q))
         .select(
             "vec_id",
@@ -1281,7 +1249,7 @@ def q107(spark, sf_dir):
         )
     )
     bm = (
-        _bm25_scored(d)
+        _bm25_scored(documents)
         .orderBy(F.col("score").desc(), F.col("doc_id"))
         .limit(20)
         .withColumn(
@@ -1334,7 +1302,7 @@ _ENTROPY_ORACLE = """
 
 
 @register("q108_token_entropy", oracle=_ENTROPY_ORACLE)
-def q108(spark, sf_dir):
+def q108(documents):
     """Token-distribution entropy quality filter: Shannon entropy of the
     per-doc unigram distribution (low entropy = repetitive boilerplate —
     the information-theoretic sibling of q89's Gopher repetition rules).
@@ -1344,9 +1312,8 @@ def q108(spark, sf_dir):
     rounded(6) per term, and the sum runs in exact DECIMAL so it is
     associative (order-independent) on both engines; final value
     rounded(4), kept-flag compares the rounded value."""
-    d = load_tables(spark, sf_dir)["documents"]
     tf = (
-        d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok"))
+        documents.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("c"))
     )
@@ -1402,7 +1369,7 @@ _OVERLAP_ORACLE = """
 
 
 @register("q109_source_overlap", oracle=_OVERLAP_ORACLE)
-def q109(spark, sf_dir):
+def q109(documents):
     """Inter-source contamination matrix: for every source pair, the
     count and Jaccard of shared distinct 3-gram shingles — the corpus
     diagnostic behind 'which crawls duplicate each other' (and the
@@ -1414,9 +1381,8 @@ def q109(spark, sf_dir):
     self-join: a join would recompute the shingle subtree twice), then a
     count groupBy on ~|S|^2 keys joined to two broadcast per-source
     counts. All integers until one final rounded division."""
-    d = load_tables(spark, sf_dir)["documents"]
     sg = (
-        d.select(
+        documents.select(
             "source", F.explode(T.shingles(T.tokens(F.col("text")), 3)).alias("s")
         )
         .select("source", F.md5("s").alias("h"))
@@ -1496,7 +1462,7 @@ FROM scored
 
 
 @register("q116_jaccard_estimate", oracle=_JACCARD_EST_ORACLE)
-def q116(spark, sf_dir):
+def q116(documents):
     """Estimator quality audit: for every LSH candidate pair, the
     signature-based Jaccard ESTIMATE (fraction of agreeing minhashes —
     the only similarity a pure-LSH pipeline ever sees) side by side with
@@ -1507,8 +1473,7 @@ def q116(spark, sf_dir):
     candidates, AND exact verification (q46's sharing pattern); the
     estimate is a projection over the 8 signature columns; both
     similarities compare on ROUND(...,4) so the hash check is stable."""
-    d = load_tables(spark, sf_dir)["documents"]
-    sig, pairs = B.candidate_grams(_minhash_corpus(d))
+    sig, pairs = B.candidate_grams(_minhash_corpus(documents))
     sa = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"mh{j}").alias(f"a{j}") for j in range(8)]
     )
@@ -1553,7 +1518,7 @@ _FUZZY_ORACLE = """
 
 
 @register("q122_fuzzy_match", oracle=_FUZZY_ORACLE)
-def q122(spark, sf_dir):
+def q122(part):
     """Entity resolution by blocked fuzzy matching: candidate pairs come
     only from within a blocking key ((p_brand, p_type) — the classic
     cheap compound blocker; widening to p_brand alone quadruples the
@@ -1564,14 +1529,13 @@ def q122(spark, sf_dir):
     implement classic Levenshtein so the distance is integer-exact.
     At 100 TB the block key comes from a cheap normalizer (brand, zip,
     sorted-token prefix) and blocks are capped like LSH buckets."""
-    p = load_tables(spark, sf_dir)["part"]
-    a = p.select(
+    a = part.select(
         F.col("p_partkey").alias("part_a"),
         F.col("p_name").alias("name_a"),
         "p_brand",
         "p_type",
     )
-    b = p.select(
+    b = part.select(
         F.col("p_partkey").alias("part_b"),
         F.col("p_name").alias("name_b"),
         "p_brand",
@@ -1608,7 +1572,7 @@ _FRAME_ORACLE = """
 
 
 @register("q124_frame_sample", oracle=_FRAME_ORACLE)
-def q124(spark, sf_dir):
+def q124(documents):
     """Multimodal frame sampling: fixed-size byte frames over the binary
     payload, every 4th kept (operators/multimodal.sample_frames). The
     generator explodes frame indices, not payload copies; slicing and
@@ -1617,8 +1581,7 @@ def q124(spark, sf_dir):
     corpus is pure ASCII, so char == byte positions)."""
     from ..operators.multimodal import sample_frames, synth_media
 
-    d = load_tables(spark, sf_dir)["documents"]
-    return sample_frames(synth_media(d))
+    return sample_frames(synth_media(documents))
 
 
 _RESIZE_ORACLE = """
@@ -1634,7 +1597,7 @@ _RESIZE_ORACLE = """
 
 
 @register("q125_media_resize", oracle=_RESIZE_ORACLE)
-def q125(spark, sf_dir):
+def q125(documents):
     """Multimodal resize/thumbnail pass through mapInPandas Arrow batches
     (operators/multimodal.resize_media): halved (fake-)decoded dims and
     a thumbnail hash. The Python side is the REAL batch plumbing a GPU/
@@ -1643,8 +1606,7 @@ def q125(spark, sf_dir):
     oracle, so even this Python path is hash-checked."""
     from ..operators.multimodal import resize_media, synth_media
 
-    d = load_tables(spark, sf_dir)["documents"]
-    return resize_media(synth_media(d))
+    return resize_media(synth_media(documents))
 
 
 # --------------- per-group centroid + embedding outliers (q127)
@@ -1677,7 +1639,7 @@ _OUTLIER_ORACLE = f"""
 
 
 @register("q127_embedding_outliers", oracle=_OUTLIER_ORACLE)
-def q127(spark, sf_dir):
+def q127(embeddings, documents):
     """Embedding quality filter: per-language centroid, then the 3 docs
     least aligned with their group (lowest cosine to centroid) — the
     standard embedding-space outlier sweep before training. Cross-engine
@@ -1688,10 +1650,8 @@ def q127(spark, sf_dir):
     final cosine division is floating point, and it divides identical
     doubles. Centroids are k x dim (a broadcast); ranking is
     WindowGroupLimit on the ROUNDED cosine with vec_id tiebreak."""
-    t = load_tables(spark, sf_dir)
-    v, d = t["embeddings"], t["documents"]
-    e = v.join(
-        d.select(F.col("doc_id").alias("vec_id"), "lang"), "vec_id"
+    e = embeddings.join(
+        documents.select(F.col("doc_id").alias("vec_id"), "lang"), "vec_id"
     ).select(
         "lang",
         "vec_id",
@@ -1772,7 +1732,7 @@ _ITEMSETS_ORACLE = """
 
 
 @register("q131_frequent_itemsets", oracle=_ITEMSETS_ORACLE)
-def q131(spark, sf_dir):
+def q131(lineitem):
     """Frequent itemsets over order baskets (pyspark.ml FPGrowth) — the
     co-occurrence miner (what parts sell together; for corpora: what
     sources/tags co-occur). Baskets = distinct parts per order;
@@ -1787,11 +1747,10 @@ def q131(spark, sf_dir):
     miner still builds the full lattice)."""
     from pyspark.ml.fpm import FPGrowth
 
-    li = load_tables(spark, sf_dir)["lineitem"]
     # collect_set dedups parts within the order itself — the former
     # distinct() added a full (orderkey, partkey) shuffle for nothing
     # (guide §2.4), and map-side partial collect_set combines besides
-    baskets = li.select("l_orderkey", "l_partkey").groupBy("l_orderkey").agg(
+    baskets = lineitem.select("l_orderkey", "l_partkey").groupBy("l_orderkey").agg(
         F.collect_set("l_partkey").alias("items")
     )
     model = FPGrowth(

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..io import load_tables
 from ..session import pin, scoped_confs
 from . import register
 
@@ -50,11 +49,10 @@ def _dec_avg(col):
     FROM lineitem
     """,
 )
-def q01(spark, sf_dir):
+def q01(lineitem):
     """Parquet scan + projection + count. Scale: column pruning means the
     scan reads one column; count/min/max are map-side partials."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return li.select("l_orderkey").agg(
+    return lineitem.select("l_orderkey").agg(
         F.count("*").alias("n_rows"),
         F.count("l_orderkey").alias("n_vals"),
         F.min("l_orderkey").alias("min_key"),
@@ -75,12 +73,11 @@ def q01(spark, sf_dir):
            AND o_totalprice < 500)
     """,
 )
-def q02(spark, sf_dir):
+def q02(orders):
     """Compound predicates: AND/OR/NOT, IN, BETWEEN, LIKE, IS NOT NULL.
     Scale: whole predicate is pushed to the parquet scan (PushedFilters)."""
-    o = load_tables(spark, sf_dir)["orders"]
     c = F.col
-    return o.where(
+    return orders.where(
         (
             c("o_totalprice").between(1000, 100000)
             & c("o_orderstatus").isin("O", "F")
@@ -102,11 +99,10 @@ def q02(spark, sf_dir):
     FROM orders
     """,
 )
-def q03(spark, sf_dir):
+def q03(orders):
     """Computed projection + CASE WHEN + coalesce/nullif (R9 analogue)."""
-    o = load_tables(spark, sf_dir)["orders"]
     p = F.col("o_totalprice")
-    return o.select(
+    return orders.select(
         "o_orderkey",
         F.when(p > 200000, "big").when(p > 50000, "mid").otherwise("small").alias("bucket"),
         F.coalesce(F.nullif(F.col("o_orderstatus"), F.lit("O")), F.lit("OPEN")).alias(
@@ -131,14 +127,13 @@ def q03(spark, sf_dir):
     WHERE o_totalprice > 150000
     """,
 )
-def q04(spark, sf_dir):
+def q04(orders, customer):
     """Inner equi-join; planner picks broadcast/SMJ. Scale: orders is the
     big side; filter is pushed below the join by Catalyst."""
-    t = load_tables(spark, sf_dir)
     return (
-        t["orders"]
+        orders
         .where(F.col("o_totalprice") > 150000)
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
+        .join(customer, F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "c_name", "o_totalprice")
     )
 
@@ -152,14 +147,13 @@ def q04(spark, sf_dir):
     JOIN region ON n_regionkey = r_regionkey
     """,
 )
-def q05(spark, sf_dir):
+def q05(customer, nation, region):
     """Broadcast hash join: nation (25) and region (5) ship to every
     executor — zero shuffle of the fact side at any scale."""
-    t = load_tables(spark, sf_dir)
     return (
-        t["customer"]
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
+        customer
+        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey", "n_name", "r_name")
     )
 
@@ -172,13 +166,13 @@ def q05(spark, sf_dir):
       ON c_custkey = o_custkey AND o_totalprice > 300000
     """,
 )
-def q06(spark, sf_dir):
+def q06(orders, customer):
     """Left outer join with a join-side predicate (stays in the ON clause
     so unmatched customers survive)."""
-    t = load_tables(spark, sf_dir)
-    o = t["orders"]
-    return t["customer"].join(
-        o, (F.col("c_custkey") == F.col("o_custkey")) & (F.col("o_totalprice") > 300000), "left"
+    return customer.join(
+        orders,
+        (F.col("c_custkey") == F.col("o_custkey")) & (F.col("o_totalprice") > 300000),
+        "left",
     ).select("c_custkey", "o_orderkey")
 
 
@@ -190,10 +184,9 @@ def q06(spark, sf_dir):
       ON c_custkey = o_custkey AND c_acctbal > 9000
     """,
 )
-def q06r(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    return t["customer"].join(
-        t["orders"], (F.col("c_custkey") == F.col("o_custkey")) & (F.col("c_acctbal") > 9000), "right"
+def q06r(customer, orders):
+    return customer.join(
+        orders, (F.col("c_custkey") == F.col("o_custkey")) & (F.col("c_acctbal") > 9000), "right"
     ).select("c_custkey", "o_orderkey")
 
 
@@ -206,10 +199,9 @@ def q06r(spark, sf_dir):
       ON c.c_custkey = o.o_custkey
     """,
 )
-def q07(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    c = t["customer"].where(F.col("c_acctbal") > 5000)
-    o = t["orders"].where(F.col("o_totalprice") > 100000)
+def q07(customer, orders):
+    c = customer.where(F.col("c_acctbal") > 5000)
+    o = orders.where(F.col("o_totalprice") > 100000)
     return c.join(o, F.col("c_custkey") == F.col("o_custkey"), "full").select(
         "c_custkey", "o_orderkey"
     )
@@ -223,11 +215,10 @@ def q07(spark, sf_dir):
                   WHERE o_custkey = c_custkey AND o_totalprice > 250000)
     """,
 )
-def q08(spark, sf_dir):
+def q08(orders, customer):
     """Left semi join ≡ EXISTS. Scale: semi-join shuffles only keys."""
-    t = load_tables(spark, sf_dir)
-    o = t["orders"].where(F.col("o_totalprice") > 250000)
-    return t["customer"].join(
+    o = orders.where(F.col("o_totalprice") > 250000)
+    return customer.join(
         o, F.col("c_custkey") == F.col("o_custkey"), "left_semi"
     ).select("c_custkey", "c_name")
 
@@ -239,10 +230,9 @@ def q08(spark, sf_dir):
     WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
     """,
 )
-def q09(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    return t["customer"].join(
-        t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_anti"
+def q09(customer, orders):
+    return customer.join(
+        orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti"
     ).select("c_custkey", "c_name")
 
 
@@ -250,11 +240,10 @@ def q09(spark, sf_dir):
     "q10_cross_join",
     oracle="SELECT r_name, n_name FROM region CROSS JOIN nation",
 )
-def q10(spark, sf_dir):
+def q10(region, nation):
     """Bounded cross join (5×25). Scale: only ever dims-by-dims; the
     engine never cross-joins a fact table (see Q38's design)."""
-    t = load_tables(spark, sf_dir)
-    return t["region"].crossJoin(t["nation"]).select("r_name", "n_name")
+    return region.crossJoin(nation).select("r_name", "n_name")
 
 
 @register(
@@ -265,13 +254,12 @@ def q10(spark, sf_dir):
       ON s_nationkey = c_nationkey AND s_acctbal > c_acctbal
     """,
 )
-def q11(spark, sf_dir):
+def q11(supplier, customer):
     """Theta join: equi key (nationkey) + non-equi band — planner keeps
     the equi part as the shuffle key and applies the band as a post-join
     filter, so it scales like a normal hash join."""
-    t = load_tables(spark, sf_dir)
-    return t["supplier"].join(
-        t["customer"],
+    return supplier.join(
+        customer,
         (F.col("s_nationkey") == F.col("c_nationkey")) & (F.col("s_acctbal") > F.col("c_acctbal")),
     ).select("s_suppkey", "c_custkey")
 
@@ -287,7 +275,7 @@ def q11(spark, sf_dir):
     WHERE p.event_type = 'purchase'
     """,
 )
-def q12(spark, sf_dir):
+def q12(events):
     """As-of join: for each purchase, the latest click at-or-before it by
     the same user. Spark-first: union the two sides, one window pass with
     last(ignoreNulls) — a single shuffle on user_id, no range join, no
@@ -295,11 +283,10 @@ def q12(spark, sf_dir):
     row order agree. Oracle = correlated MAX subquery (ANSI)."""
     from ..operators.asof import asof_join
 
-    ev = load_tables(spark, sf_dir)["events"]
-    purchases = ev.where(F.col("event_type") == "purchase").select(
+    purchases = events.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
+    clicks = events.where(F.col("event_type") == "click").select("user_id", "ts")
     return asof_join(
         purchases, clicks, key="user_id", left_ts="ts", right_ts="ts", carry=["ts"]
     ).select("event_id", "user_id", F.col("asof_ts").alias("last_click_ts"))
@@ -322,13 +309,12 @@ def q12(spark, sf_dir):
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def q13(spark, sf_dir):
+def q13(lineitem):
     """Hash aggregate (TPC-H Q1 shape). Scale: partial aggregation is
     map-side; only |groups| rows shuffle. Decimal sums keep the oracle
     hash exact."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        lineitem.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             _dec_sum("l_quantity").alias("sum_qty"),
@@ -351,10 +337,9 @@ def q13(spark, sf_dir):
     FROM lineitem GROUP BY l_returnflag
     """,
 )
-def q14(spark, sf_dir):
+def q14(lineitem):
     """Multi COUNT(DISTINCT) — Spark expands to two aggregate passes."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return li.groupBy("l_returnflag").agg(
+    return lineitem.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("d_part"),
         F.countDistinct("l_suppkey").alias("d_supp"),
         F.count("*").alias("n"),
@@ -371,9 +356,8 @@ def q14(spark, sf_dir):
     FROM orders
     """,
 )
-def q15(spark, sf_dir):
-    o = load_tables(spark, sf_dir)["orders"]
-    return o.agg(
+def q15(orders):
+    return orders.agg(
         F.count("*").alias("n"),
         _dec_sum("o_totalprice").alias("total"),
         F.min("o_totalprice").alias("lo"),
@@ -392,9 +376,8 @@ def q15(spark, sf_dir):
     FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
 )
-def q16(spark, sf_dir):
-    o = load_tables(spark, sf_dir)["orders"]
-    return o.rollup("o_orderstatus", "o_orderpriority").agg(
+def q16(orders):
+    return orders.rollup("o_orderstatus", "o_orderpriority").agg(
         F.grouping("o_orderstatus").cast("int").alias("g_status"),
         F.grouping("o_orderpriority").cast("int").alias("g_prio"),
         F.count("*").alias("n"),
@@ -410,9 +393,8 @@ def q16(spark, sf_dir):
     FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
 )
-def q17(spark, sf_dir):
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return li.cube("l_returnflag", "l_linestatus").agg(
+def q17(lineitem):
+    return lineitem.cube("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n"), _dec_sum("l_quantity").alias("qty")
     )
 
@@ -425,9 +407,8 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 
 
 @register("q18_grouping_sets", oracle=_Q18_SQL)
-def q18(spark, sf_dir):
+def q18(spark):
     """GROUPING SETS — same ANSI text runs on both engines."""
-    load_tables(spark, sf_dir)
     return spark.sql(_Q18_SQL)
 
 
@@ -441,9 +422,8 @@ def q18(spark, sf_dir):
     FROM orders GROUP BY o_orderpriority
     """,
 )
-def q19(spark, sf_dir):
-    o = load_tables(spark, sf_dir)["orders"]
-    return o.groupBy("o_orderpriority").agg(
+def q19(orders):
+    return orders.groupBy("o_orderpriority").agg(
         F.sum(F.when(F.col("o_orderstatus") == "O", 1).otherwise(0)).alias("n_open"),
         F.count(F.when(F.col("o_totalprice") > 100000, 1)).alias("n_big"),
         F.count("*").alias("n"),
@@ -458,11 +438,10 @@ def q19(spark, sf_dir):
     FROM lineitem GROUP BY l_orderkey
     """,
 )
-def q20(spark, sf_dir):
+def q20(lineitem):
     """collect_list re-assembly (R13 analogue: rebuild a per-record object
     after explode). sort_array makes the list deterministic."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return li.groupBy("l_orderkey").agg(
+    return lineitem.groupBy("l_orderkey").agg(
         F.array_join(
             F.transform(
                 F.sort_array(F.collect_list("l_linenumber")), lambda x: x.cast("string")
@@ -485,13 +464,12 @@ def q20(spark, sf_dir):
     FROM orders
     """,
 )
-def q21(spark, sf_dir):
+def q21(orders):
     """Ranking trio; rank/dense_rank exercise real ties (5 priorities),
     row_number adds a unique tiebreaker so it stays deterministic."""
-    o = load_tables(spark, sf_dir)["orders"]
     w_unique = Window.partitionBy("o_orderstatus").orderBy("o_orderpriority", "o_orderkey")
     w_ties = Window.partitionBy("o_orderstatus").orderBy("o_orderpriority")
-    return o.select(
+    return orders.select(
         "o_orderkey",
         F.row_number().over(w_unique).alias("rn"),
         F.rank().over(w_ties).alias("rk"),
@@ -513,11 +491,10 @@ def q21(spark, sf_dir):
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
 )
-def q22(spark, sf_dir):
-    ev = load_tables(spark, sf_dir)["events"]
+def q22(events):
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return ev.select(
+    return events.select(
         "event_id",
         F.lag("value").over(w).alias("prev_v"),
         F.lead("value").over(w).alias("next_v"),
@@ -539,16 +516,15 @@ def q22(spark, sf_dir):
     FROM events
     """,
 )
-def q23(spark, sf_dir):
+def q23(events):
     """Window frames. Decimal inside the frame sum: DuckDB computes
     sliding sums with segment trees (different FP association) — decimal
     makes both exact."""
-    ev = load_tables(spark, sf_dir)["events"]
     v = F.col("value").cast("decimal(18,2)")
     base = Window.partitionBy("user_id").orderBy("ts", "event_id")
     running = base.rowsBetween(Window.unboundedPreceding, 0)
     sliding = base.rowsBetween(-2, 0)
-    return ev.select(
+    return events.select(
         "event_id",
         F.sum(v).over(running).cast("double").alias("running"),
         F.sum(v).over(sliding).cast("double").alias("sliding"),
@@ -566,10 +542,9 @@ def q23(spark, sf_dir):
     WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
     """,
 )
-def q24(spark, sf_dir):
-    o = load_tables(spark, sf_dir)["orders"]
+def q24(orders):
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
-    return o.select(
+    return orders.select(
         "o_orderkey",
         F.ntile(4).over(w).alias("quartile"),
         F.percent_rank().over(w).alias("pr"),
@@ -588,16 +563,15 @@ def q24(spark, sf_dir):
     WHERE rn <= 3
     """,
 )
-def q25(spark, sf_dir):
+def q25(orders):
     """Generic top-k per group: row_number + filter. Scale: Spark's
     WindowGroupLimit pushes the k-limit into the sort (no full
     materialization per group)."""
-    o = load_tables(spark, sf_dir)["orders"]
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
     return (
-        o.withColumn("rn", F.row_number().over(w))
+        orders.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice")
     )
@@ -615,13 +589,12 @@ def q25(spark, sf_dir):
     LIMIT 100
     """,
 )
-def q26(spark, sf_dir):
+def q26(orders):
     """Multi-key sort with explicit null ordering + LIMIT → Spark plans
     TakeOrderedAndProject (no global sort materialization). Unique
     tiebreaker (o_orderkey) makes the LIMIT set stable."""
-    o = load_tables(spark, sf_dir)["orders"]
     return (
-        o.select(
+        orders.select(
             "o_orderkey",
             "o_totalprice",
             F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("status_n"),
@@ -643,15 +616,14 @@ def q26(spark, sf_dir):
     SELECT c_custkey AS key, 'rich' AS src FROM customer WHERE c_acctbal > 9000
     """,
 )
-def q27a(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
+def q27a(orders, customer):
     a = (
-        t["orders"]
+        orders
         .where(F.col("o_orderstatus") == "O")
         .select(F.col("o_custkey").alias("key"), F.lit("open").alias("src"))
     )
     b = (
-        t["customer"]
+        customer
         .where(F.col("c_acctbal") > 9000)
         .select(F.col("c_custkey").alias("key"), F.lit("rich").alias("src"))
     )
@@ -666,10 +638,9 @@ def q27a(spark, sf_dir):
     SELECT c_custkey AS key FROM customer WHERE c_acctbal > 9000
     """,
 )
-def q27b(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    a = t["orders"].where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("key"))
-    b = t["customer"].where(F.col("c_acctbal") > 9000).select(F.col("c_custkey").alias("key"))
+def q27b(orders, customer):
+    a = orders.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("key"))
+    b = customer.where(F.col("c_acctbal") > 9000).select(F.col("c_custkey").alias("key"))
     return a.union(b).distinct()
 
 
@@ -681,10 +652,9 @@ def q27b(spark, sf_dir):
     SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'F'
     """,
 )
-def q28(spark, sf_dir):
-    o = load_tables(spark, sf_dir)["orders"]
-    a = o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("key"))
-    b = o.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("key"))
+def q28(orders):
+    a = orders.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("key"))
+    b = orders.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("key"))
     return a.intersect(b)
 
 
@@ -696,10 +666,9 @@ def q28(spark, sf_dir):
     SELECT o_custkey AS key FROM orders WHERE o_totalprice > 50000
     """,
 )
-def q29(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    a = t["customer"].select(F.col("c_custkey").alias("key"))
-    b = t["orders"].where(F.col("o_totalprice") > 50000).select(F.col("o_custkey").alias("key"))
+def q29(customer, orders):
+    a = customer.select(F.col("c_custkey").alias("key"))
+    b = orders.where(F.col("o_totalprice") > 50000).select(F.col("o_custkey").alias("key"))
     return a.subtract(b)  # EXCEPT (distinct semantics)
 
 
@@ -707,9 +676,8 @@ def q29(spark, sf_dir):
     "q30_distinct",
     oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
 )
-def q30(spark, sf_dir):
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return li.select("l_returnflag", "l_linestatus").distinct()
+def q30(lineitem):
+    return lineitem.select("l_returnflag", "l_linestatus").distinct()
 
 
 # ------------------------------------------------------- scalar families
@@ -734,13 +702,12 @@ def q30(spark, sf_dir):
     FROM part
     """,
 )
-def q31(spark, sf_dir):
+def q31(part):
     """String family. R7's equalsIgnoreCase ≡ lower(a)=lower(b) lives in
     the CDC lane; here the full built-in surface. NOTE: Spark
     regexp_replace is global by default; DuckDB needs the 'g' flag."""
-    p = load_tables(spark, sf_dir)["part"]
     c = F.col
-    return p.select(
+    return part.select(
         "p_partkey",
         F.upper(c("p_name")).alias("up_name"),
         F.lower(c("p_brand")).alias("lo_brand"),
@@ -773,12 +740,11 @@ def q31(spark, sf_dir):
     FROM orders
     """,
 )
-def q32(spark, sf_dir):
+def q32(orders):
     """Date/time family — wall-clock-stable functions only (session tz is
     UTC; no epoch math, cf. FIXTURES.md oracle-parity notes)."""
-    o = load_tables(spark, sf_dir)["orders"]
     od = F.col("o_orderdate")
-    return o.select(
+    return orders.select(
         "o_orderkey",
         F.year(od).alias("y"),
         F.month(od).alias("m"),
@@ -811,14 +777,13 @@ def q32(spark, sf_dir):
     FROM part
     """,
 )
-def q33(spark, sf_dir):
+def q33(part):
     """Math family. Transcendentals rounded to 6 (JVM vs libm last-ulp);
     sqrt is IEEE-exact but rounded for uniformity; floor/ceil return
     DOUBLE in DuckDB and LONG in Spark → cast via double."""
-    p = load_tables(spark, sf_dir)["part"]
     rp = F.col("p_retailprice")
     sz = F.col("p_size")
-    return p.select(
+    return part.select(
         "p_partkey",
         F.abs(rp - 1000.0).alias("dist"),
         F.round(rp, 1).alias("r1"),
@@ -851,12 +816,11 @@ def q33(spark, sf_dir):
     FROM embeddings
     """,
 )
-def q34(spark, sf_dir):
+def q34(embeddings):
     """Array family incl. higher-order transform/filter/aggregate over the
     64-dim embedding column."""
-    e = load_tables(spark, sf_dir)["embeddings"]
     emb = F.col("embedding")
-    return e.select(
+    return embeddings.select(
         "vec_id",
         F.size(emb).alias("n_dims"),
         emb.getItem(0).alias("first_val"),
@@ -902,11 +866,10 @@ def q34(spark, sf_dir):
     FROM events
     """,
 )
-def q35(spark, sf_dir):
+def q35(events):
     """JSON family: extraction (get_json_object / from_json) and
     construction (to_json — R9's message builder)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return ev.select(
+    return events.select(
         "event_id",
         F.get_json_object(F.col("props"), "$.k").cast("int").alias("k"),
         F.to_json(F.struct("event_id", "event_type")).alias("ej"),
@@ -927,11 +890,10 @@ WHERE EXISTS (SELECT 1 FROM orders o
 
 
 @register("q36_subqueries", oracle=_Q36_SQL)
-def q36(spark, sf_dir):
+def q36(spark):
     """CTE + correlated EXISTS + scalar subquery — Catalyst decorrelates
     to joins (RewriteCorrelatedScalarSubquery). Same ANSI text on both
     engines; MAX (not AVG) keeps the scalar threshold FP-exact."""
-    load_tables(spark, sf_dir)
     return spark.sql(_Q36_SQL)
 
 
@@ -954,23 +916,22 @@ def q36(spark, sf_dir):
     LIMIT 10
     """,
 )
-def q75(spark, sf_dir):
+def q75(customer, orders, lineitem):
     """TPC-H Q3 shape (shipping priority): 3-way join, filtered fact
     scan, grouped revenue, global top-10. Catalyst pushes both date
     filters to the scans; the segment filter prunes customer before the
     join; AQE picks broadcast for the filtered customer side."""
-    t = load_tables(spark, sf_dir)
     # decimal-exact revenue: double->decimal cast of the PRODUCT rounds
     # half-boundaries differently across engines; cast the factors instead
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
         1 - F.col("l_discount")
     ).cast("decimal(4,2)")
     return (
-        t["customer"]
+        customer
         .where(F.col("c_mktsegment") == "BUILDING")
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"))
+        .join(orders, F.col("c_custkey") == F.col("o_custkey"))
         .where(F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp"))
-        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
         .where(F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp"))
         .groupBy("l_orderkey", "o_orderdate")
         .agg(F.sum(rev).cast("double").alias("revenue"))
@@ -997,26 +958,25 @@ def q75(spark, sf_dir):
     GROUP BY n_name
     """,
 )
-def q76(spark, sf_dir):
+def q76(customer, orders, lineitem, supplier, nation, region):
     """TPC-H Q5 shape (local supplier volume): 6-table join with two dim
     broadcasts and a same-nation join condition."""
-    t = load_tables(spark, sf_dir)
     # decimal-exact revenue: double->decimal cast of the PRODUCT rounds
     # half-boundaries differently across engines; cast the factors instead
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
         1 - F.col("l_discount")
     ).cast("decimal(4,2)")
     return (
-        t["customer"]
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"))
-        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
+        customer
+        .join(orders, F.col("c_custkey") == F.col("o_custkey"))
+        .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
-            t["supplier"],
+            supplier,
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .where(F.col("r_name") == "ASIA")
         .groupBy("n_name")
         .agg(F.sum(rev).cast("double").alias("revenue"))
@@ -1035,12 +995,11 @@ def q76(spark, sf_dir):
     FROM events GROUP BY user_id
     """,
 )
-def q77(spark, sf_dir):
+def q77(events):
     """Pivot: event_type → columns (explicit value list keeps the schema
     stable and skips the extra distinct-values job)."""
-    ev = load_tables(spark, sf_dir)["events"]
     return (
-        ev.groupBy("user_id")
+        events.groupBy("user_id")
         .pivot("event_type", ["click", "view", "purchase", "signup", "error"])
         .count()
         .na.fill(0)
@@ -1055,10 +1014,9 @@ def q77(spark, sf_dir):
     SELECT p_partkey, 'p_retailprice' AS metric, p_retailprice AS v FROM part
     """,
 )
-def q78(spark, sf_dir):
+def q78(part):
     """Unpivot/melt: wide numeric columns → (metric, value) long form."""
-    p = load_tables(spark, sf_dir)["part"]
-    return p.select(
+    return part.select(
         "p_partkey", F.col("p_size").cast("double").alias("p_size"), "p_retailprice"
     ).unpivot("p_partkey", ["p_size", "p_retailprice"], "metric", "v")
 
@@ -1074,12 +1032,11 @@ def q78(spark, sf_dir):
     FROM events WHERE event_id % 20 = 0
     """,
 )
-def q79(spark, sf_dir):
+def q79(events):
     """Map family (Q35 rows): map_from_entries / map_keys / map_values /
     map_contains_key / element access. Map output itself is serialized to
     a deterministic string (map iteration order is not hashable across
     engines); the oracle derives the same values without a map type."""
-    ev = load_tables(spark, sf_dir)["events"]
     # explicit round: Spark double->long CASTS truncate, DuckDB rounds
     cents = F.round(F.col("value") * 100, 0).cast("long")
     m = F.map_from_entries(
@@ -1088,7 +1045,7 @@ def q79(spark, sf_dir):
             F.struct(F.lit("cents").alias("key"), cents.cast("string").alias("value")),
         )
     )
-    return ev.where(F.col("event_id") % 20 == 0).select(
+    return events.where(F.col("event_id") % 20 == 0).select(
         "event_id",
         F.concat_ws(
             ":", F.element_at(m, "type"), F.element_at(m, "cents")
@@ -1111,12 +1068,11 @@ def q79(spark, sf_dir):
     FROM lineitem GROUP BY l_returnflag
     """,
 )
-def q80(spark, sf_dir):
+def q80(lineitem):
     """Statistical aggregates: stddev/variance/corr/covar + exact
     interpolated median. Rounded to absorb engine-side accumulation-order
     ulps (corr is in [-1,1] so 6 places is safe; the rest to cents)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return li.groupBy("l_returnflag").agg(
+    return lineitem.groupBy("l_returnflag").agg(
         F.round(F.stddev_samp("l_extendedprice"), 2).alias("sd_price"),
         F.round(F.var_samp("l_quantity"), 2).alias("var_qty"),
         F.round(F.corr("l_extendedprice", "l_quantity"), 6).alias("corr_pq"),
@@ -1151,12 +1107,11 @@ FROM numbered GROUP BY user_id, session_id
 
 
 @register("q81_sessionize_batch", oracle=_Q81_SQL)
-def q81(spark, sf_dir):
+def q81(spark):
     """Batch sessionization (the session_window analogue as pure window
     algebra): a session break is a >5min gap; session ids are the running
     sum of break markers. Same ANSI text on both engines — integer-exact,
     so hash-checked unlike the streaming session smoke (q63)."""
-    load_tables(spark, sf_dir)
     return spark.sql(_Q81_SQL)
 
 
@@ -1173,10 +1128,9 @@ GROUP BY s.n
 
 
 @register("q82_recursive_cte", oracle=_Q82_SQL)
-def q82(spark, sf_dir):
+def q82(spark):
     """Recursive CTE (Spark 4 WITH RECURSIVE): generated spine left-joined
     to facts — identical ANSI text on both engines."""
-    load_tables(spark, sf_dir)
     return spark.sql(_Q82_SQL)
 
 
@@ -1189,14 +1143,13 @@ def q82(spark, sf_dir):
     FROM events WHERE event_id % 10 = 0
     """,
 )
-def q84(spark, sf_dir):
+def q84(events):
     """Semi-structured VARIANT path (Spark 4): parse_json once into a
     binary variant, then typed variant_get extraction — the open-content
     analogue of the reference's schemaless documents, without string
     re-parsing per field. Oracle = plain JSON extraction."""
-    ev = load_tables(spark, sf_dir)["events"]
     k = F.expr("variant_get(parse_json(props), '$.k', 'int')")
-    return ev.where(F.col("event_id") % 10 == 0).select(
+    return events.where(F.col("event_id") % 10 == 0).select(
         "event_id", k.alias("k"), (k % 7).alias("k_mod")
     )
 
@@ -1226,7 +1179,7 @@ _GAPFILL_ORACLE = """
 
 
 @register("q111_gap_fill", oracle=_GAPFILL_ORACLE)
-def q111(spark, sf_dir):
+def q111(events):
     """Time-series regularization: hourly resample of the events stream
     onto a dense per-user spine (every user x every hour in the global
     range), gaps carried forward (last observation carried forward,
@@ -1245,20 +1198,19 @@ def q111(spark, sf_dir):
     for a table this small.) hr_sum accumulates in DECIMAL(18,2) —
     money-exact and order-free on both engines; the output hour is
     epoch seconds (BIGINT) to stay timezone-proof."""
-    e = load_tables(spark, sf_dir)["events"]
     hourly = (
-        e.groupBy("user_id", F.date_trunc("hour", F.col("ts")).alias("h"))
+        events.groupBy("user_id", F.date_trunc("hour", F.col("ts")).alias("h"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("hr_sum"),
         )
     )
-    bounds = e.agg(
+    bounds = events.agg(
         F.date_trunc("hour", F.min("ts")).alias("hmin"),
         F.date_trunc("hour", F.max("ts")).alias("hmax"),
     )
     spine = (
-        e.select("user_id")
+        events.select("user_id")
         .distinct()
         .join(F.broadcast(bounds))
         .select(
@@ -1305,7 +1257,7 @@ _SALTED_JOIN_ORACLE = """
 
 
 @register("q112_salted_join", oracle=_SALTED_JOIN_ORACLE)
-def q112(spark, sf_dir):
+def q112(lineitem, orders):
     """Skew-join salting, the join-side twin of q74's salted agg: a
     deterministically skewed fact key (every 3rd lineitem rerouted to
     order 0 — one key carrying ~1/3 of the table, the shape AQE calls a
@@ -1317,9 +1269,7 @@ def q112(spark, sf_dir):
     standard trade). The oracle is the UNSALTED join: salting must not
     change a single row. Money sums factor-cast to exact decimals
     (tpch.py recipe)."""
-    t = load_tables(spark, sf_dir)
-    li, orders = t["lineitem"], t["orders"]
-    fact = li.select(
+    fact = lineitem.select(
         F.when(F.col("l_orderkey") % 3 == 0, F.lit(0))
         .otherwise(F.col("l_orderkey"))
         .alias("k"),
@@ -1356,7 +1306,7 @@ _SCD2_ORACLE = """
 
 
 @register("q113_scd2_dimension", oracle=_SCD2_ORACLE)
-def q113(spark, sf_dir):
+def q113(events):
     """SCD Type-2 dimension build: each changelog row becomes a validity
     interval [valid_from, valid_to) via lead(ts) over the per-key
     history; the open interval (null valid_to) is the current version.
@@ -1369,10 +1319,9 @@ def q113(spark, sf_dir):
 
     Scale: ONE shuffle on user_id (uniform), window sorts within
     partitions; epochs are BIGINT so the hash check is integer-exact."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = F.lead("ts").over(w)
-    return ev.select(
+    return events.select(
         "user_id",
         "event_id",
         F.unix_timestamp("ts").alias("valid_from"),
@@ -1397,16 +1346,15 @@ _SNAPSHOT_ORACLE = """
 
 
 @register("q114_cdc_snapshot", oracle=_SNAPSHOT_ORACLE)
-def q114(spark, sf_dir):
+def q114(events):
     """Changelog compaction to a snapshot: the latest state per key, the
     batch twin of the streaming materialization (q66) and the classic
     CDC "table from topic" read. Implemented as ONE aggregation with a
     struct-max (ts, event_id lexicographic argmax — no window, no sort,
     partial aggregation halves the shuffle); the oracle is the
     row_number form, proving method-independence of the result."""
-    ev = load_tables(spark, sf_dir)["events"]
     m = F.max(F.struct("ts", "event_id", "event_type", "value")).alias("m")
-    g = ev.groupBy("user_id").agg(m)
+    g = events.groupBy("user_id").agg(m)
     return g.select(
         "user_id",
         F.unix_timestamp("m.ts").alias("last_ts_epoch"),
@@ -1429,7 +1377,7 @@ _INCR_SPLIT = "2024-01-15"
 
 
 @register("q117_incremental_agg", oracle=_INCR_AGG_ORACLE)
-def q117(spark, sf_dir):
+def q117(events):
     """Incremental aggregate maintenance: the engine-side identity that
     makes materialized-view refresh cheap — agg(old) MERGE agg(delta) ==
     agg(old UNION delta). The events table is split at a date boundary
@@ -1444,7 +1392,6 @@ def q117(spark, sf_dir):
     scanning three years: count/sum/min/max (and sketches like HLL) are
     all mergeable; the partial table is keyed and partitioned exactly
     like the output."""
-    ev = load_tables(spark, sf_dir)["events"]
     split = F.lit(_INCR_SPLIT).cast("timestamp")
 
     def partial(df):
@@ -1454,8 +1401,8 @@ def q117(spark, sf_dir):
         )
 
     merged = (
-        partial(ev.where(F.col("ts") < split))
-        .unionAll(partial(ev.where(F.col("ts") >= split)))
+        partial(events.where(F.col("ts") < split))
+        .unionAll(partial(events.where(F.col("ts") >= split)))
         .groupBy("user_id")
         .agg(F.sum("n").alias("n_events"), F.sum("s").alias("sv"))
     )
@@ -1478,7 +1425,7 @@ _BUCKETED_ORACLE = """
 
 
 @register("q118_bucketed_join", oracle=_BUCKETED_ORACLE)
-def q118(spark, sf_dir):
+def q118(spark, orders, customer):
     """Bucketed co-located join surfaced through the driver gate: both
     sides are written bucketed+sorted on the join key (the one-time
     write-time shuffle), and the sort-merge join then plans with NO
@@ -1489,12 +1436,11 @@ def q118(spark, sf_dir):
     shuffle once at ingest, never at query time."""
     from ..operators.bucketing import write_bucketed
 
-    t = load_tables(spark, sf_dir)
     write_bucketed(
-        t["orders"].select("o_custkey", "o_totalprice"), "q118_orders_b", "o_custkey"
+        orders.select("o_custkey", "o_totalprice"), "q118_orders_b", "o_custkey"
     )
     write_bucketed(
-        t["customer"].select("c_custkey", "c_mktsegment"), "q118_customer_b", "c_custkey"
+        customer.select("c_custkey", "c_mktsegment"), "q118_customer_b", "c_custkey"
     )
     joined = spark.table("q118_orders_b").join(
         spark.table("q118_customer_b"),
@@ -1526,7 +1472,7 @@ _ASOF_TOL_ORACLE = """
 
 
 @register("q119_asof_tolerance", oracle=_ASOF_TOL_ORACLE)
-def q119(spark, sf_dir):
+def q119(events):
     """As-of join with a max-staleness tolerance — the feature-store /
     market-data variant of q12: a purchase only sees a click if it is at
     most 1 hour old, otherwise the match is null. Same single-shuffle
@@ -1536,11 +1482,10 @@ def q119(spark, sf_dir):
     click is. Staleness is a floored-epoch difference (integer-exact)."""
     from ..operators.asof import asof_join
 
-    ev = load_tables(spark, sf_dir)["events"]
-    purchases = ev.where(F.col("event_type") == "purchase").select(
+    purchases = events.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
+    clicks = events.where(F.col("event_type") == "click").select("user_id", "ts")
     j = asof_join(
         purchases, clicks, key="user_id", left_ts="ts", right_ts="ts", carry=["ts"]
     )
@@ -1569,7 +1514,7 @@ _ROLLING_ACTIVE_ORACLE = """
 
 
 @register("q120_rolling_active_users", oracle=_ROLLING_ACTIVE_ORACLE)
-def q120(spark, sf_dir):
+def q120(events):
     """Rolling 7-day active users per day — a sliding-window DISTINCT
     count, which Spark's window API cannot express (no count(distinct)
     over a RANGE frame). Re-expressed linearly: collapse events to
@@ -1580,8 +1525,7 @@ def q120(spark, sf_dir):
     oracle's spine). Work is |presences| x 7, never |events| x window —
     at 100 TB the presence table is the pre-aggregated fraction of the
     input and the explode factor is the constant window length."""
-    ev = load_tables(spark, sf_dir)["events"]
-    presence = ev.select(
+    presence = events.select(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
     ).distinct()
     days = presence.select("day").distinct()
@@ -1617,15 +1561,14 @@ _HISTOGRAM_ORACLE = """
 
 
 @register("q121_histogram", oracle=_HISTOGRAM_ORACLE)
-def q121(spark, sf_dir):
+def q121(events):
     """Fixed-width histogram per group: bin = floor(value/width). One
     partial-aggregated groupBy over (type, bin) — |bins| output rows, so
     at 100 TB the shuffle carries the histogram, not the data. The bin
     edge is a double division both engines perform on the identical
     parquet double, so boundary values bin identically."""
-    ev = load_tables(spark, sf_dir)["events"]
     b = F.floor(F.col("value") / 10)
-    return ev.groupBy(
+    return events.groupBy(
         "event_type",
         b.cast("int").alias("bin"),
         (b * 10).cast("double").alias("bin_lo"),
@@ -1658,7 +1601,7 @@ _FUNNEL_ORACLE = """
 
 
 @register("q128_funnel", oracle=_FUNNEL_ORACLE)
-def q128(spark, sf_dir):
+def q128(events):
     """Ordered conversion funnel (signup → later click → later purchase):
     users advance a stage only with a STRICTLY LATER event, the product-
     analytics staple that a naive per-type count gets wrong (a click
@@ -1667,10 +1610,9 @@ def q128(spark, sf_dir):
     same uniform key, the stage tables shrink monotonically, and at
     100 TB each stage is one partial-agg pass over an already-filtered
     event slice, never a window over full history."""
-    ev = load_tables(spark, sf_dir)["events"]
 
     def stage(prev, etype, tcol):
-        e = ev.where(F.col("event_type") == etype)
+        e = events.where(F.col("event_type") == etype)
         if prev is None:
             return e.groupBy("user_id").agg(F.min("ts").alias(tcol))
         pcol = prev.columns[-1]
@@ -1727,7 +1669,7 @@ _INTERVAL_ORACLE = """
 
 
 @register("q132_interval_join", oracle=_INTERVAL_ORACLE)
-def q132(spark, sf_dir):
+def q132(events):
     """Interval/range join re-expressed as a bucket EQUI-join — the only
     shape that survives two LARGE sides at 100 TB (a raw range predicate
     plans as broadcast-nested-loop: quadratic). 2-hour maintenance
@@ -1738,8 +1680,7 @@ def q132(spark, sf_dir):
     boundaries are whole hours, so floored-epoch comparisons agree
     across engines at every edge. The oracle is the plain range
     predicate — bucketization must be invisible in the result."""
-    ev = load_tables(spark, sf_dir)["events"]
-    t0 = ev.agg(
+    t0 = events.agg(
         (F.floor(F.unix_timestamp(F.min("ts")) / 3600) * 3600).alias("t0")
     )
     w = (
@@ -1758,7 +1699,7 @@ def q132(spark, sf_dir):
             ),
         )
     )
-    e = ev.select(
+    e = events.select(
         "user_id",
         F.unix_timestamp("ts").alias("es"),
     ).withColumn("bucket", F.floor(F.col("es") / 3600))
@@ -1785,7 +1726,7 @@ _PART_PRUNE_ORACLE = """
 
 
 @register("q133_partition_prune", oracle=_PART_PRUNE_ORACLE)
-def q133(spark, sf_dir):
+def q133(spark, events):
     """Write-path day-partitioning + partition-PRUNED read, surfaced
     through the driver gate (q118's pattern, for partitioning instead of
     bucketing): events land as day=YYYY-MM-DD directories, and the
@@ -1798,13 +1739,12 @@ def q133(spark, sf_dir):
     invisible in the result."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     path = scratch_dir("q133_part")
-    ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).write.mode(
+    events.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).write.mode(
         "overwrite"
     ).partitionBy("day").parquet(path)
-    part = spark.read.parquet(path).where(F.col("day") == "2024-01-03")
-    return part.groupBy(
+    pruned = spark.read.parquet(path).where(F.col("day") == "2024-01-03")
+    return pruned.groupBy(
         F.unix_timestamp(F.to_timestamp("day")).alias("day_epoch"), "event_type"
     ).agg(
         F.count("*").alias("n"),
@@ -1825,7 +1765,7 @@ _JSON_SRC_ORACLE = """
 
 
 @register("q134_json_source", oracle=_JSON_SRC_ORACLE)
-def q134(spark, sf_dir):
+def q134(spark, events):
     """Source-format coverage: the events table serialized to JSON lines
     and read back through spark.read.json with an EXPLICIT schema (never
     inference at scale — one pass saved and types pinned), then
@@ -1836,10 +1776,9 @@ def q134(spark, sf_dir):
     straight into columnar aggregation."""
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     path = scratch_dir("q134_json")
     # micros-as-long keeps the timestamp exact through text
-    ev.select(
+    events.select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         "user_id",
@@ -1877,7 +1816,7 @@ _AQE_SKEW_ORACLE = """
 
 
 @register("q136_aqe_skew_join", oracle=_AQE_SKEW_ORACLE)
-def q136(spark, sf_dir):
+def q136(spark, events, customer):
     """AQE skew-join splitting exercised END TO END (SURVEY §4.2 names it
     for the 100 TB posture; q74/q112 cover manual salting — this is the
     runtime-automatic twin): 80% of events hash to ONE join key, the
@@ -1891,8 +1830,7 @@ def q136(spark, sf_dir):
     invisible in the result."""
     from ..operators import skew
 
-    t = load_tables(spark, sf_dir)
-    df = skew.skewed_segment_rollup(t["events"], t["customer"])
+    df = skew.skewed_segment_rollup(events, customer)
     with scoped_confs(spark, skew.AQE_SKEW_CONFS):
         return pin(df)
 
@@ -1938,7 +1876,7 @@ _SESSION_FUNNEL_ORACLE = """
 
 
 @register("q137_session_funnel", oracle=_SESSION_FUNNEL_ORACLE)
-def q137(spark, sf_dir):
+def q137(events):
     """Sessionized ORDERED funnel: 30-minute-inactivity sessions (q81's
     lag+cumsum sessionizer) and, within each session, the strict
     view -> click -> purchase progression (each stage's timestamp must be
@@ -1947,10 +1885,9 @@ def q137(spark, sf_dir):
     (user_id, session_no); hashpartitioning(user_id) from the sessionizer
     window CLUSTERS those keys already, so the whole stage chain runs in
     one exchange. Output is 1 row of stage counts — exact integers."""
-    ev = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    sess = ev.select(
+    sess = events.select(
         "user_id",
         "ts",
         "event_type",
@@ -2009,7 +1946,7 @@ _BLOOM_JOIN_ORACLE = """
 
 
 @register("q138_runtime_bloom_join", oracle=_BLOOM_JOIN_ORACLE)
-def q138(spark, sf_dir):
+def q138(spark, lineitem, orders):
     """Runtime Bloom-filter join pruning (Spark's InjectRuntimeFilter):
     the selective dimension predicate (1/5 of orders) is turned into a
     bloom_filter_agg at runtime and pushed into the FACT side's scan
@@ -2021,8 +1958,7 @@ def q138(spark, sf_dir):
     needed). Executed under scoped confs (q136's pattern); the
     might_contain marker is plan-asserted in tests. Oracle = the plain
     join: the filter is a pure reduction, invisible in the result."""
-    t = load_tables(spark, sf_dir)
-    df = bloom_pruned_join(t["lineitem"], t["orders"])
+    df = bloom_pruned_join(lineitem, orders)
     with scoped_confs(spark, BLOOM_JOIN_CONFS):
         return pin(df)
 
@@ -2069,7 +2005,7 @@ _ZONEMAP_ORACLE = """
 
 
 @register("q139_zonemap_prune", oracle=_ZONEMAP_ORACLE)
-def q139(spark, sf_dir):
+def q139(spark, events):
     """Manifest/zone-map file pruning (operators/zonemap.py): the events
     table is written CLUSTERED on event_id into 16 files, a per-file
     min/max manifest is built (what an Iceberg/Delta planner reads), and
@@ -2083,9 +2019,8 @@ def q139(spark, sf_dir):
     from ..operators.zonemap import build_manifest, pruned_scan, write_clustered
     from ..scratch import scratch_dir
 
-    ev = load_tables(spark, sf_dir)["events"]
     path = scratch_dir("q139_zone")
-    write_clustered(ev, path, "event_id", 16)
+    write_clustered(events, path, "event_id", 16)
     manifest = build_manifest(spark, path, ["event_id"])
     # a range that is a strict subset of every sf's id space (ids start
     # at 0 at all scales), so pruning is non-trivial at each test size

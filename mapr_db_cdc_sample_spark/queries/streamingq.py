@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from ..cdc.fixtures import synth_cdc_from_events
 from ..cdc.schema import CDC_JSON_SCHEMA, WIRE_SCHEMA
-from ..io import load_tables
 from ..scratch import scratch_dir
 from ..session import scoped_confs
 from ..sources.replay import read_replay, run_to_memory, write_replay
@@ -49,25 +48,25 @@ def _with_input_count(out, n: int):
     return out.withColumn("n_input_rows", F.lit(n).cast("long"))
 
 
-def _bounded_events(spark, sf_dir):
-    ev = load_tables(spark, sf_dir)["events"].orderBy("event_id").limit(_MAX_STREAM_EVENTS)
+def _bounded_events(events):
+    ev = events.orderBy("event_id").limit(_MAX_STREAM_EVENTS)
     return ev, ev.count()
 
 
-def _events_stream(spark, sf_dir, chunks: int = 3):
-    ev, n = _bounded_events(spark, sf_dir)
+def _events_stream(spark, events, chunks: int = 3):
+    ev, n = _bounded_events(events)
     path = write_replay(ev, n_chunks=chunks, order_by="ts")
     return read_replay(spark, path, ev.schema, files_per_trigger=1), n
 
 
 @register("q60_stream_cdc_route")
-def q60(spark, sf_dir):
+def q60(spark, events):
     """R1-R15 as one streaming query: synth changelog replay → foreachBatch
     route → dual parquet sinks (fts/geo wire messages), read back unioned.
     Exactly-once via checkpoint (vs the reference's auto-commit)."""
     from ..streaming.cdc_stream import start_json_pipeline
 
-    ev, _ = _bounded_events(spark, sf_dir)
+    ev, _ = _bounded_events(events)
     cdc = synth_cdc_from_events(ev)
     n = cdc.count()
     base = scratch_dir()
@@ -81,35 +80,35 @@ def q60(spark, sf_dir):
 
 
 @register("q61_tumbling_window")
-def q61(spark, sf_dir):
+def q61(spark, events):
     from ..streaming.windows import tumbling_counts
 
-    stream, n = _events_stream(spark, sf_dir)
+    stream, n = _events_stream(spark, events)
     return _with_input_count(_drain(tumbling_counts(stream), "q61"), n)
 
 
 @register("q62_sliding_window")
-def q62(spark, sf_dir):
+def q62(spark, events):
     from ..streaming.windows import sliding_counts
 
-    stream, n = _events_stream(spark, sf_dir)
+    stream, n = _events_stream(spark, events)
     return _with_input_count(_drain(sliding_counts(stream), "q62"), n)
 
 
 @register("q63_session_window")
-def q63(spark, sf_dir):
+def q63(spark, events):
     from ..streaming.windows import session_counts
 
-    stream, n = _events_stream(spark, sf_dir)
+    stream, n = _events_stream(spark, events)
     return _with_input_count(_drain(session_counts(stream), "q63"), n)
 
 
 @register("q64_stream_dedup")
-def q64(spark, sf_dir):
+def q64(spark, events):
     """Watermarked streaming dedup over a stream with every event doubled."""
     from ..streaming.windows import stream_dedup
 
-    ev, n = _bounded_events(spark, sf_dir)
+    ev, n = _bounded_events(events)
     dup = ev.unionAll(ev)
     path = write_replay(dup, n_chunks=2, order_by="ts")
     stream = read_replay(spark, path, ev.schema, files_per_trigger=2)
@@ -117,21 +116,20 @@ def q64(spark, sf_dir):
 
 
 @register("q65_stream_static_join")
-def q65(spark, sf_dir):
+def q65(spark, customer, events):
     from ..streaming.windows import stream_static_enrich
 
-    cust = load_tables(spark, sf_dir)["customer"]
-    stream, n = _events_stream(spark, sf_dir)
-    return _with_input_count(_drain(stream_static_enrich(stream, cust), "q65"), n)
+    stream, n = _events_stream(spark, events)
+    return _with_input_count(_drain(stream_static_enrich(stream, customer), "q65"), n)
 
 
 @register("q66_materialize_state")
-def q66(spark, sf_dir):
+def q66(spark, events):
     """Stateful CDC materialization: running current-state view of the
     synth-changelog'd document table (applyInPandasWithState)."""
     from ..streaming.stateful import materialize
 
-    ev, _ = _bounded_events(spark, sf_dir)
+    ev, _ = _bounded_events(events)
     cdc = synth_cdc_from_events(ev)
     n = cdc.count()
     path = write_replay(cdc, n_chunks=2, order_by="ts")
@@ -147,12 +145,12 @@ def q66(spark, sf_dir):
 
 
 @register("q68_stream_stream_join")
-def q68(spark, sf_dir):
+def q68(spark, events):
     """Stream-stream watermarked band join: clicks x purchases from two
     replay streams of the same events table."""
     from ..streaming.windows import stream_stream_click_purchase
 
-    ev, _ = _bounded_events(spark, sf_dir)
+    ev, _ = _bounded_events(events)
     clicks = ev.where(F.col("event_type") == "click")
     purchases = ev.where(F.col("event_type") == "purchase")
     n = clicks.count() + purchases.count()
@@ -169,12 +167,12 @@ def q68(spark, sf_dir):
 
 
 @register("q69_complete_mode")
-def q69(spark, sf_dir):
+def q69(spark, events):
     """Complete output mode: full aggregate table re-emitted per trigger;
     the memory table holds the final complete result."""
     from ..streaming.windows import tumbling_counts
 
-    stream, n = _events_stream(spark, sf_dir)
+    stream, n = _events_stream(spark, events)
     return _with_input_count(
         _drain(tumbling_counts(stream, watermark="1 minute"), "q69", output_mode="complete"),
         n,
@@ -182,7 +180,7 @@ def q69(spark, sf_dir):
 
 
 @register("q70_stream_cdc_binary")
-def q70(spark, sf_dir):
+def q70(spark):
     """Binary-lane CDC streaming: the wide-column golden corpus replayed
     through route_binary (RECORD_UPDATE-as-insert, UTF-8 cell decode,
     FTS-only routing) into the same pipeline as q60, with one FTS sink,
@@ -202,7 +200,7 @@ def q70(spark, sf_dir):
 
 
 @register("q102_stream_quality_gate")
-def q102(spark, sf_dir):
+def q102(spark, documents):
     """Streaming corpus ingestion with a quality gate: the documents
     table replayed as a file stream, filtered by the SAME stateless
     quality expressions as the batch composite (llm.quality_gated — a
@@ -214,7 +212,7 @@ def q102(spark, sf_dir):
     from .llm import quality_gated
 
     d = (
-        load_tables(spark, sf_dir)["documents"]
+        documents
         .orderBy("doc_id")
         .limit(_MAX_STREAM_EVENTS)
     )
@@ -233,7 +231,7 @@ def q102(spark, sf_dir):
 
 
 @register("q151_stream_stream_outer")
-def q151(spark, sf_dir):
+def q151(spark, events):
     """Stream-stream LEFT OUTER band join (the missing cell of the
     streaming-join matrix: q65 stream-static, q68 stream-stream inner).
     Unmatched clicks emit once both watermarks pass their join window —
@@ -245,7 +243,7 @@ def q151(spark, sf_dir):
     tests/test_streaming.py."""
     from ..streaming.windows import stream_stream_click_purchase_outer
 
-    ev, _ = _bounded_events(spark, sf_dir)
+    ev, _ = _bounded_events(events)
     clicks = ev.where(F.col("event_type") == "click")
     purchases = ev.where(F.col("event_type") == "purchase")
     n = clicks.count() + purchases.count()
@@ -261,7 +259,7 @@ def q151(spark, sf_dir):
 
 
 @register("q173_stream_trending")
-def q173(spark, sf_dir):
+def q173(spark, events):
     """Streaming trending top-k: tumbling 6h windows of per-type counts in
     COMPLETE output mode, ranked per window after the drain. Complete
     mode is the only mode where a downstream rank over the in-progress
@@ -274,7 +272,7 @@ def q173(spark, sf_dir):
 
     from ..streaming.windows import tumbling_type_counts
 
-    stream, n = _events_stream(spark, sf_dir)
+    stream, n = _events_stream(spark, events)
     counts = _drain(tumbling_type_counts(stream), "q173", "complete")
     rank_w = W.partitionBy("win_start").orderBy(F.desc("n"), "event_type")
     top = (
@@ -286,7 +284,7 @@ def q173(spark, sf_dir):
 
 
 @register("q243_stream_ohlc")
-def q243(spark, sf_dir):
+def q243(spark, events):
     """Streaming daily OHLC bars: q230's open/high/low/close as a
     watermarked tumbling-window aggregation in COMPLETE mode. Open and
     close are min/max over a (ts, event_id, cents) struct — associative
@@ -296,14 +294,14 @@ def q243(spark, sf_dir):
     on the same slice is asserted in tests/test_streaming.py."""
     from ..streaming.windows import tumbling_ohlc
 
-    stream, n = _events_stream(spark, sf_dir)
+    stream, n = _events_stream(spark, events)
     bars = _drain(tumbling_ohlc(stream), "q243", "complete").orderBy("day")
     return _with_input_count(bars, n)
 
 
 
 @register("q284_stream_running_totals")
-def q284(spark, sf_dir):
+def q284(spark, events):
     """Per-user running totals through the arbitrary-state streaming
     rung (streaming/stateful.py:running_totals, applyInPandasWithState):
     every micro-batch emits each touched user's post-batch totals, so the
@@ -313,7 +311,7 @@ def q284(spark, sf_dir):
 
     from ..streaming.stateful import running_totals
 
-    stream, n = _events_stream(spark, sf_dir, chunks=3)
+    stream, n = _events_stream(spark, events, chunks=3)
     out = _drain(running_totals(stream), "q284", output_mode="update")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import load_tables
 from . import register
 
 
@@ -49,19 +48,18 @@ def _dec_rev():
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def q93(spark, sf_dir):
+def q93(lineitem):
     """TPC-H Q1 (pricing summary report): the canonical wide-aggregate
     scan. One pass over lineitem, 8 aggregates over 6 grouping cells —
     all map-side partial (HashAggregate x2), the shuffle moves only ~6
     rows per partition. The shipdate filter reaches the parquet scan.
     Averages = exact decimal sum / exact count, divided in double."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     qty = F.col("l_quantity").cast("decimal(12,2)")
     base = F.col("l_extendedprice").cast("decimal(18,2)")
     disc_price = _dec_rev()
     charge = _dec_rev() * (1 + F.col("l_tax")).cast("decimal(4,2)")
     return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        lineitem.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum(qty).cast("double").alias("sum_qty"),
@@ -90,17 +88,16 @@ def q93(spark, sf_dir):
       AND l_quantity < 24
     """,
 )
-def q94(spark, sf_dir):
+def q94(lineitem):
     """TPC-H Q6 (forecast revenue change): pure filtered scalar agg — the
     pushdown benchmark. All three predicates reach the parquet scan
     (min/max row-group skipping at scale); zero joins, one tiny shuffle
     of per-partition partial sums."""
-    li = load_tables(spark, sf_dir)["lineitem"]
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * F.col("l_discount").cast(
         "decimal(4,2)"
     )
     return (
-        li.where(
+        lineitem.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_discount").between(0.04, 0.06))
@@ -122,22 +119,21 @@ def q94(spark, sf_dir):
       AND l_shipdate <  TIMESTAMP '1996-10-01'
     """,
 )
-def q95(spark, sf_dir):
+def q95(lineitem, part):
     """TPC-H Q14 (promo revenue): fact-dim join + conditional aggregate
     ratio. part broadcasts (dim); the month filter prunes lineitem at the
     scan so the join input is ~1/80 of the fact. Both sums are exact
     decimals; the ratio divides the two exact doubles, rounded(6)."""
-    t = load_tables(spark, sf_dir)
     promo = F.when(F.col("p_type") == "PROMO", _dec_rev()).otherwise(
         F.lit(0).cast("decimal(18,2)")
     )
     return (
-        t["lineitem"]
+        lineitem
         .where(
             (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
         )
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
+        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             F.round(
                 100.0
@@ -168,22 +164,21 @@ def q95(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q96(spark, sf_dir):
+def q96(lineitem, orders, customer):
     """TPC-H Q18 (large-volume orders): agg-then-join. The HAVING
     aggregate runs FIRST so only the ~1% qualifying orderkeys join back
     to orders/customer — at 100 TB the post-agg side is small enough
     that AQE converts both joins to broadcasts. Top-20 by totalprice
     with unique orderkey tiebreak plans as TakeOrderedAndProject."""
-    t = load_tables(spark, sf_dir)
     big = (
-        t["lineitem"]
+        lineitem
         .groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("sq"))
         .where(F.col("sq") > 250)
     )
     return (
-        big.join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
+        big.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(customer, F.col("c_custkey") == F.col("o_custkey"))
         .select(
             "c_name",
             "c_custkey",
@@ -212,21 +207,20 @@ def q96(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q97(spark, sf_dir):
+def q97(customer, orders, lineitem, nation):
     """TPC-H Q10 (returned-item losses): 3-way fact join + dim broadcast,
     grouped revenue, global top-20. The returnflag filter reaches the
     lineitem scan (dictionary filter at scale); nation broadcasts;
     customer/orders/lineitem shuffle once each on the join keys; the
     revenue ranking has a unique custkey tiebreak."""
-    t = load_tables(spark, sf_dir)
     return (
-        t["customer"]
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"))
+        customer
+        .join(orders, F.col("c_custkey") == F.col("o_custkey"))
         .join(
-            t["lineitem"].where(F.col("l_returnflag") == "R"),
+            lineitem.where(F.col("l_returnflag") == "R"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(F.sum(_dec_rev()).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
@@ -250,26 +244,25 @@ def q97(spark, sf_dir):
     GROUP BY c_nationkey
     """,
 )
-def q98(spark, sf_dir):
+def q98(customer, orders):
     """TPC-H Q22 shape (idle high-balance customers): scalar-subquery
     threshold + anti join. The "above average balance" predicate is the
     multiplicative form bal*n > total — both sides exact decimals, so no
     engine ever divides (decimal division scales differ across engines).
     The 1-row stats frame is a broadcast crossJoin (no shuffle); the
     NOT EXISTS is a left_anti against orders' custkeys."""
-    t = load_tables(spark, sf_dir)
     bal = F.col("c_acctbal").cast("decimal(18,2)")
     stats = (
-        t["customer"]
+        customer
         .where(F.col("c_acctbal") > 0.0)
         .agg(F.count("*").alias("n"), F.sum(bal).alias("total"))
     )
     return (
-        t["customer"]
+        customer
         .join(F.broadcast(stats))
         .where(bal * F.col("n") > F.col("total"))
         .join(
-            t["orders"],
+            orders,
             F.col("c_custkey") == F.col("o_custkey"),
             "left_anti",
         )
@@ -299,7 +292,7 @@ _Q129_ORACLE = """
 
 
 @register("q129_supplier_shipped_last", oracle=_Q129_ORACLE)
-def q129(spark, sf_dir):
+def q129(lineitem, supplier):
     """TPC-H Q21's join structure (the hardest shape in the suite: a
     correlated EXISTS and NOT EXISTS against the same fact table)
     adapted to this schema: suppliers who shipped LAST among
@@ -310,9 +303,7 @@ def q129(spark, sf_dir):
     correlated-subquery form, proving plan-shape independence. Both
     probes join on l_orderkey (uniform); count is over distinct orders;
     top-10 has the s_name tiebreak."""
-    t = load_tables(spark, sf_dir)
-    li, sup = t["lineitem"], t["supplier"]
-    slim = li.select("l_orderkey", "l_suppkey", "l_shipdate")
+    slim = lineitem.select("l_orderkey", "l_suppkey", "l_shipdate")
     l2 = slim.select(
         F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2")
     )
@@ -334,7 +325,7 @@ def q129(spark, sf_dir):
         "leftanti",
     )
     return (
-        shipped_last.join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
+        shipped_last.join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.countDistinct("l_orderkey").alias("numwait"))
         .orderBy(F.col("numwait").desc(), "s_name")
@@ -358,24 +349,22 @@ _Q130_ORACLE = """
 
 
 @register("q130_profit_attribution", oracle=_Q130_ORACLE)
-def q130(spark, sf_dir):
+def q130(lineitem, part, supplier, nation, orders):
     """TPC-H Q9's shape (the widest join tree: fact + 4 dimensions) —
     profit per supplier-nation per order-year for one part family. The
     p_name filter prunes part BEFORE the join (pushdown through a join
     key), part/supplier/nation broadcast, and only the orders join
     shuffles fact-side. Money factors decimal-cast per the determinism
     rules; year is integer-exact."""
-    t = load_tables(spark, sf_dir)
-    li = t["lineitem"]
-    p = t["part"].where(F.col("p_name").like("%gear%")).select("p_partkey")
-    s = t["supplier"].select("s_suppkey", "s_nationkey")
-    n = t["nation"].select("n_nationkey", F.col("n_name").alias("nation"))
-    o = t["orders"].select("o_orderkey", F.year("o_orderdate").cast("int").alias("o_year"))
+    p = part.where(F.col("p_name").like("%gear%")).select("p_partkey")
+    s = supplier.select("s_suppkey", "s_nationkey")
+    n = nation.select("n_nationkey", F.col("n_name").alias("nation"))
+    o = orders.select("o_orderkey", F.year("o_orderdate").cast("int").alias("o_year"))
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
         1 - F.col("l_discount")
     ).cast("decimal(4,2)")
     return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        lineitem.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))

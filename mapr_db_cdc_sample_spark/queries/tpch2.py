@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import load_tables
 from . import register
 
 
@@ -55,21 +54,19 @@ def _ts(s: str):
     GROUP BY o_orderpriority
     """,
 )
-def q140(spark, sf_dir):
+def q140(orders, lineitem):
     """TPC-H Q4 shape (order priority checking): quarter of orders with
     EXISTS over the fact table — plans as a LEFT SEMI join, so lineitem
     contributes at most one match per order and nothing is double
     counted. The date filter reaches the orders scan; the semi join
     shuffles only orderkeys."""
-    t = load_tables(spark, sf_dir)
-    o, li = t["orders"], t["lineitem"]
-    problem = li.where(F.col("l_returnflag") == "R").select("l_orderkey")
+    problem = lineitem.where(F.col("l_returnflag") == "R").select("l_orderkey")
     return (
-        o.where(
+        orders.where(
             (F.col("o_orderdate") >= _ts("1996-01-01"))
             & (F.col("o_orderdate") < _ts("1996-04-01"))
         )
-        .join(problem, o["o_orderkey"] == problem["l_orderkey"], "left_semi")
+        .join(problem, orders["o_orderkey"] == problem["l_orderkey"], "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("n_orders"))
     )
@@ -96,28 +93,24 @@ def q140(spark, sf_dir):
     GROUP BY 1, 2, 3
     """,
 )
-def q141(spark, sf_dir):
+def q141(lineitem, orders, customer, supplier, nation):
     """TPC-H Q7 (volume shipping): the two-nation trade-flow query. Both
     nation dims broadcast; the nation-pair disjunction applies AFTER the
     broadcast joins (it needs both sides), but supplier/customer/nation
     are all broadcast so the only shuffles are the fact-fact
     lineitem-orders join and the final 3-key rollup."""
-    t = load_tables(spark, sf_dir)
-    li, o, c, s, n = (
-        t["lineitem"], t["orders"], t["customer"], t["supplier"], t["nation"],
-    )
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
+    n1 = nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
+    n2 = nation.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     return (
-        li.where(
+        lineitem.where(
             F.col("l_shipdate").between(_ts("1995-01-01"), _ts("1996-12-31"))
         )
-        .join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
+        .join(orders, lineitem["l_orderkey"] == orders["o_orderkey"])
+        .join(F.broadcast(customer), orders["o_custkey"] == customer["c_custkey"])
+        .join(F.broadcast(supplier), lineitem["l_suppkey"] == supplier["s_suppkey"])
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
         .where(pair)
@@ -155,27 +148,28 @@ def q141(spark, sf_dir):
     GROUP BY o_year
     """,
 )
-def q142(spark, sf_dir):
+def q142(lineitem, orders, customer, supplier, part, nation, region):
     """TPC-H Q8 (national market share): NATION_3's share of PROMO-part
     revenue sold into ASIA per year. Both sums are exact decimals cast
     to double only for the final division (identical operands on both
     engines), ROUND(...,6). Five broadcast dims, one fact-fact shuffle."""
-    t = load_tables(spark, sf_dir)
-    li, o, c, s, p, n, r = (
-        t["lineitem"], t["orders"], t["customer"], t["supplier"], t["part"],
-        t["nation"], t["region"],
-    )
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk"))
+    n1 = nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
+    n2 = nation.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk"))
     vol = _rev_dec().alias("volume")
     flows = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(p.where(F.col("p_type") == "PROMO")), li["l_partkey"] == p["p_partkey"])
+        lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"])
+        .join(F.broadcast(customer), orders["o_custkey"] == customer["c_custkey"])
+        .join(F.broadcast(supplier), lineitem["l_suppkey"] == supplier["s_suppkey"])
+        .join(
+            F.broadcast(part.where(F.col("p_type") == "PROMO")),
+            lineitem["l_partkey"] == part["p_partkey"],
+        )
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .join(F.broadcast(r.where(F.col("r_name") == "ASIA")), F.col("c_rk") == F.col("r_regionkey"))
+        .join(
+            F.broadcast(region.where(F.col("r_name") == "ASIA")),
+            F.col("c_rk") == F.col("r_regionkey"),
+        )
         .where(F.col("o_orderdate").between(_ts("1995-01-01"), _ts("1996-12-31")))
         .select(F.year("o_orderdate").alias("o_year"), vol, "supp_nation")
     )
@@ -207,17 +201,15 @@ def q142(spark, sf_dir):
     ORDER BY val DESC, l_partkey
     """,
 )
-def q143(spark, sf_dir):
+def q143(lineitem, supplier, nation):
     """TPC-H Q11 (important stock): per-part value for one nation's
     suppliers, kept when above a fraction of the grand total. The gate
     is MULTIPLICATIVE on exact decimals (val*400 > total) — neither
     engine ever divides, so the boundary cannot split on FP. The grand
     total is a 1-row broadcast; ordering has a unique partkey tiebreak."""
-    t = load_tables(spark, sf_dir)
-    li, s, n = t["lineitem"], t["supplier"], t["nation"]
-    nat = n.where(F.col("n_name") == "NATION_5")
+    nat = nation.where(F.col("n_name") == "NATION_5")
     ps = (
-        li.join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
+        lineitem.join(F.broadcast(supplier), lineitem["l_suppkey"] == supplier["s_suppkey"])
         .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("l_partkey")
         .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("val"))
@@ -248,19 +240,17 @@ def q143(spark, sf_dir):
     ORDER BY custdist DESC, c_count DESC
     """,
 )
-def q144(spark, sf_dir):
+def q144(customer, orders):
     """TPC-H Q13 (customer distribution): the double-aggregate histogram
     — orders per customer (LEFT join keeps zero-order customers, the
     whole point of Q13), then customers per order-count. The join
     predicate filter (non-urgent) lives IN the join condition, not a
     WHERE, so unmatched customers count as 0 rather than vanishing.
     Ordering (custdist, c_count) is unique by construction."""
-    t = load_tables(spark, sf_dir)
-    c, o = t["customer"], t["orders"]
     per_cust = (
-        c.join(
-            o.where(F.col("o_orderpriority") != "1-URGENT"),
-            c["c_custkey"] == o["o_custkey"],
+        customer.join(
+            orders.where(F.col("o_orderpriority") != "1-URGENT"),
+            customer["c_custkey"] == orders["o_custkey"],
             "left",
         )
         .groupBy("c_custkey")
@@ -292,16 +282,14 @@ def q144(spark, sf_dir):
     ORDER BY s_suppkey
     """,
 )
-def q145(spark, sf_dir):
+def q145(lineitem, supplier):
     """TPC-H Q15 (top supplier): quarterly revenue per supplier, keep the
     max. The max and the equality comparison stay in EXACT decimals (the
     double cast happens only in the output column), so "equals the max"
     is the same set on both engines even with revenue ties. The max is a
     1-row broadcast; supplier dim broadcasts."""
-    t = load_tables(spark, sf_dir)
-    li, s = t["lineitem"], t["supplier"]
     rev = (
-        li.where(
+        lineitem.where(
             (F.col("l_shipdate") >= _ts("1996-01-01"))
             & (F.col("l_shipdate") < _ts("1996-04-01"))
         )
@@ -312,7 +300,7 @@ def q145(spark, sf_dir):
     return (
         rev.join(F.broadcast(mx))
         .where(F.col("total_rev") == F.col("mx"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", F.col("total_rev").cast("double").alias("total_rev"))
         .orderBy("s_suppkey")
     )
@@ -336,18 +324,16 @@ def q145(spark, sf_dir):
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
 )
-def q146(spark, sf_dir):
+def q146(lineitem, part, supplier):
     """TPC-H Q16 (parts/supplier relationship): distinct supplier count
     per part attribute cell, excluding flagged suppliers — NOT IN plans
     as a broadcast ANTI join here (the exclusion list is known non-null:
     s_suppkey is a key, so NOT IN == anti join semantics hold). The
     partsupp stand-in is the distinct (part, supplier) projection of
     lineitem. Ordering is unique (the full group key is in the sort)."""
-    t = load_tables(spark, sf_dir)
-    li, p, s = t["lineitem"], t["part"], t["supplier"]
-    ps = li.select("l_partkey", "l_suppkey").distinct()
-    flagged = s.where(F.col("s_acctbal") < 0).select("s_suppkey")
-    keep_part = p.where(
+    ps = lineitem.select("l_partkey", "l_suppkey").distinct()
+    flagged = supplier.where(F.col("s_acctbal") < 0).select("s_suppkey")
+    keep_part = part.where(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35)
@@ -379,17 +365,15 @@ def q146(spark, sf_dir):
     WHERE CAST(l_quantity AS DECIMAL(12,2)) * 5 * n < sum_qty
     """,
 )
-def q147(spark, sf_dir):
+def q147(lineitem, part):
     """TPC-H Q17 (small-quantity-order revenue): lineitems below 20% of
     their part's average quantity. The gate is the multiplicative exact
     form qty*5*n < sum_qty (decimals and an exact count — the division
     by 5n never happens), so the below-average set is identical on both
     engines; only the final yearly average divides, in double, once."""
-    t = load_tables(spark, sf_dir)
-    li, p = t["lineitem"], t["part"]
-    brand = p.where(F.col("p_brand") == "Brand#1").select("p_partkey")
+    brand = part.where(F.col("p_brand") == "Brand#1").select("p_partkey")
     stats = (
-        li.join(F.broadcast(brand), li["l_partkey"] == brand["p_partkey"])
+        lineitem.join(F.broadcast(brand), lineitem["l_partkey"] == brand["p_partkey"])
         .groupBy(F.col("l_partkey").alias("sp"))
         .agg(
             F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("sum_qty"),
@@ -397,7 +381,7 @@ def q147(spark, sf_dir):
         )
     )
     return (
-        li.join(F.broadcast(stats), li["l_partkey"] == F.col("sp"))
+        lineitem.join(F.broadcast(stats), lineitem["l_partkey"] == F.col("sp"))
         .where(F.col("l_quantity").cast("decimal(12,2)") * 5 * F.col("n") < F.col("sum_qty"))
         .agg(
             (
@@ -424,14 +408,12 @@ def q147(spark, sf_dir):
            AND l_quantity BETWEEN 20 AND 35)
     """,
 )
-def q148(spark, sf_dir):
+def q148(lineitem, part):
     """TPC-H Q19 (discounted revenue, disjunctive predicates): the OR-of-
     conjuncts join filter. Catalyst extracts the common l_quantity and
     p_brand/p_size bounds for partial pushdown and keeps the residual
     disjunction on the joined row; the part side broadcasts. One exact
     decimal sum."""
-    t = load_tables(spark, sf_dir)
-    li, p = t["lineitem"], t["part"]
     cond = (
         (F.col("p_brand") == "Brand#1")
         & F.col("p_size").between(1, 10)
@@ -446,7 +428,7 @@ def q148(spark, sf_dir):
         & F.col("l_quantity").between(20, 35)
     )
     return (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        lineitem.join(F.broadcast(part), lineitem["l_partkey"] == part["p_partkey"])
         .where(cond)
         .agg(F.sum(_rev_dec()).cast("double").alias("revenue"))
     )
@@ -475,7 +457,7 @@ def q148(spark, sf_dir):
     ORDER BY s_suppkey
     """,
 )
-def q149(spark, sf_dir):
+def q149(lineitem, part, supplier):
     """TPC-H Q20 shape (potential part promotion -> dominant supplier):
     suppliers shipping more than half of a red part's 1996 volume. The
     availqty predicate becomes a share-of-total predicate (no partsupp
@@ -484,15 +466,13 @@ def q149(spark, sf_dir):
     per-part totals reuse the (part,supplier) aggregate's partitioning:
     grouping by a PREFIX of the first group key keeps the second
     aggregate exchange-free."""
-    t = load_tables(spark, sf_dir)
-    li, p, s = t["lineitem"], t["part"], t["supplier"]
-    red = p.where(F.col("p_name").like("red%")).select("p_partkey")
+    red = part.where(F.col("p_name").like("red%")).select("p_partkey")
     shipped = (
-        li.where(
+        lineitem.where(
             (F.col("l_shipdate") >= _ts("1996-01-01"))
             & (F.col("l_shipdate") < _ts("1997-01-01"))
         )
-        .join(F.broadcast(red), li["l_partkey"] == red["p_partkey"])
+        .join(F.broadcast(red), lineitem["l_partkey"] == red["p_partkey"])
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("qty"))
     )
@@ -502,7 +482,7 @@ def q149(spark, sf_dir):
     return (
         shipped.join(totals, shipped["l_partkey"] == totals["tp"])
         .where(F.col("qty") * 2 > F.col("part_qty"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name")
         .distinct()
         .orderBy("s_suppkey")
@@ -532,7 +512,7 @@ def q149(spark, sf_dir):
     ORDER BY l_partkey, s_suppkey
     """,
 )
-def q150(spark, sf_dir):
+def q150(lineitem, supplier, nation, region, part):
     """TPC-H Q2 shape (minimum-cost supplier): for each qualifying part,
     the EUROPE supplier with the minimum account balance (the
     ps_supplycost correlated-MIN becomes a MIN over the same doubles on
@@ -540,18 +520,14 @@ def q150(spark, sf_dir):
     set is FP-safe, and balance ties surface identically as extra rows).
     All dims broadcast; the per-part MIN reuses the candidate join's
     output."""
-    t = load_tables(spark, sf_dir)
-    li, s, n, r, p = (
-        t["lineitem"], t["supplier"], t["nation"], t["region"], t["part"],
-    )
-    ps = li.select("l_partkey", "l_suppkey").distinct()
+    ps = lineitem.select("l_partkey", "l_suppkey").distinct()
     europe = (
-        s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r.where(F.col("r_name") == "EUROPE")),
+        supplier.join(F.broadcast(nation), supplier["s_nationkey"] == nation["n_nationkey"])
+        .join(F.broadcast(region.where(F.col("r_name") == "EUROPE")),
               F.col("n_regionkey") == F.col("r_regionkey"))
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
-    parts = p.where((F.col("p_type") == "STANDARD") & (F.col("p_size") == 10)).select(
+    parts = part.where((F.col("p_type") == "STANDARD") & (F.col("p_size") == 10)).select(
         "p_partkey"
     )
     cand = (

@@ -17,7 +17,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf
 
-from ..io import load_tables
 from . import register
 
 
@@ -29,7 +28,7 @@ from . import register
     FROM orders WHERE o_orderkey % 100 = 0
     """,
 )
-def q57(spark, sf_dir):
+def q57(orders):
     """Row-at-a-time Python UDF (md5-exact, so hash-checkable). Kept on a
     1% slice — this eval mode serializes row by row and is the documented
     slow path vs pandas_udf."""
@@ -39,8 +38,7 @@ def q57(spark, sf_dir):
         digest = hashlib.md5(f"{status}:{key}".encode()).hexdigest()
         return int(digest[:7], 16)
 
-    o = load_tables(spark, sf_dir)["orders"]
-    return o.where(F.col("o_orderkey") % 100 == 0).select(
+    return orders.where(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", route_hash("o_orderstatus", "o_orderkey").alias("route_hash")
     )
 
@@ -54,7 +52,7 @@ def q57(spark, sf_dir):
     FROM events GROUP BY user_id
     """,
 )
-def q58(spark, sf_dir):
+def q58(events):
     """Grouped-agg pandas UDAF. The aggregate is integer-exact (cents),
     so the Arrow path hash-matches SQL on both engines."""
 
@@ -68,8 +66,7 @@ def q58(spark, sf_dir):
         # aggregates in one agg() — the count is a second UDAF.
         return int(len(v))
 
-    ev = load_tables(spark, sf_dir)["events"]
-    return ev.groupBy("user_id").agg(
+    return events.groupBy("user_id").agg(
         sum_cents("value").alias("sum_cents"), n_rows("value").alias("n")
     )
 
@@ -83,7 +80,7 @@ def q58(spark, sf_dir):
     FROM events
     """,
 )
-def q59(spark, sf_dir):
+def q59(events):
     """Grouped-map applyInPandas (UDTF-style): per-user normalization
     against the group min (exact double subtraction) + sequence numbers.
     Oracle = the window-function twin."""
@@ -99,12 +96,11 @@ def q59(spark, sf_dir):
             }
         )
 
-    ev = load_tables(spark, sf_dir)["events"]
     # project BEFORE the grouped map (guide §4.1): applyInPandas ships
     # every input column through Arrow, and the unused props JSON string
     # is by far the widest column in events
     return (
-        ev.select("event_id", "user_id", "ts", "value")
+        events.select("event_id", "user_id", "ts", "value")
         .groupBy("user_id")
         .applyInPandas(
             per_user, "event_id bigint, user_id bigint, v_rel double, seq bigint"
@@ -113,11 +109,10 @@ def q59(spark, sf_dir):
 
 
 @register("q67_approx_aggs", tags=("approx",))
-def q67(spark, sf_dir):
+def q67(lineitem):
     """approx_count_distinct (HLL++) + approx_percentile — bounded-error
     sketches (rows-only; the error bound vs exact is asserted in tests)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return li.groupBy("l_returnflag").agg(
+    return lineitem.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("apx_parts"),
         F.percentile_approx("l_extendedprice", 0.5, 10000).alias("apx_median_price"),
         F.count("*").alias("n"),
@@ -133,14 +128,13 @@ def q67(spark, sf_dir):
     FROM events GROUP BY 1
     """,
 )
-def q74(spark, sf_dir):
+def q74(events):
     """Skew-safe aggregation: 80% of rows land on one hot key; the salted
     two-stage plan (operators/skew.py) spreads it across 16 sub-keys and
     still hash-matches the plain GROUP BY oracle."""
     from ..operators.skew import salted_count_sum
 
-    ev = load_tables(spark, sf_dir)["events"]
-    skewed = ev.withColumn(
+    skewed = events.withColumn(
         "hot_key",
         F.when(F.col("event_id") % 10 < 8, F.lit(0)).otherwise(F.col("user_id")),
     )
@@ -148,7 +142,7 @@ def q74(spark, sf_dir):
 
 
 @register("q123_hll_sketch_union", tags=("approx",))
-def q123(spark, sf_dir):
+def q123(events):
     """Mergeable HLL sketches (DataSketches hll_sketch_agg): per-type
     user sketches built in one pass, then UNIONED into a global estimate
     — the sketch twin of q117's partial-agg identity, and the reason
@@ -156,12 +150,11 @@ def q123(spark, sf_dir):
     associative, and a 100 TB refresh unions yesterday's stored sketches
     with today's delta instead of rescanning. Rows-only (sketches have
     no SQL oracle); the error bound vs exact is asserted in tests."""
-    ev = load_tables(spark, sf_dir)["events"]
     # persisted: both output branches (per-type rows AND the union-merge)
     # consume this aggregation; uncached, the events scan + sketch build
     # would execute twice. The cached relation is k rows of sketch state.
     per_type = (
-        ev.groupBy("event_type")
+        events.groupBy("event_type")
         .agg(
             F.hll_sketch_agg("user_id").alias("sk"),
             F.countDistinct("user_id").alias("exact_users"),
@@ -185,7 +178,7 @@ def q123(spark, sf_dir):
     "q126_python_udtf",
     oracle=None,  # set below: reuses q115's chunking oracle
 )
-def q126(spark, sf_dir):
+def q126(spark):
     """Python user-defined TABLE function (Spark 4 @udtf) invoked via
     LATERAL — the arbitrary-fanout row producer the UDF surface was
     missing. Semantics are deliberately q115's chunking contract
@@ -210,7 +203,6 @@ def q126(spark, sf_dir):
                 idx += 1
                 start += 48
 
-    load_tables(spark, sf_dir)
     spark.udtf.register("chunk_spans", ChunkSpans)
     return spark.sql(
         "SELECT d.doc_id, c.chunk_idx, c.n_tokens, c.chunk_md5 "
@@ -238,7 +230,7 @@ FROM documents ORDER BY doc_id
 
 
 @register("q285_udtf_analyze", oracle=_UDTF_ANALYZE_ORACLE)
-def q285(spark, sf_dir):
+def q285(spark):
     """POLYMORPHIC Python UDTF (Spark 4 `analyze()`): the output schema
     is computed at plan time from the literal letter-list argument —
     one column per requested letter — the dynamic-schema rung above
@@ -263,7 +255,6 @@ def q285(spark, sf_dir):
             t = (text or "").lower()
             yield tuple(t.count(ch) for ch in ls)
 
-    load_tables(spark, sf_dir)
     spark.udtf.register("letter_counts", LetterCounts)
     return spark.sql(
         "SELECT d.doc_id, c.* FROM documents d, "

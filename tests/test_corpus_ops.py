@@ -313,10 +313,8 @@ def test_perplexity_ranks_garbled_text_worse(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     import mapr_db_cdc_sample_spark.queries.corpus as C
-    from unittest import mock
 
-    with mock.patch.object(C, "load_tables", lambda s, p: {"documents": df}):
-        out = {r.doc_id: r.avg_nll for r in C.q110(spark, "unused").collect()}
+    out = {r.doc_id: r.avg_nll for r in C.q110(documents=df).collect()}
     assert out[99] > max(v for k, v in out.items() if k != 99)
 
 
@@ -338,10 +336,8 @@ def test_gap_fill_locf_semantics(spark):
     )
 
     import mapr_db_cdc_sample_spark.queries.relational as R
-    from unittest import mock
 
-    with mock.patch.object(R, "load_tables", lambda s, p: {"events": df}):
-        out = R.q111(spark, "unused").collect()
+    out = R.q111(events=df).collect()
     by_user = defaultdict(dict)
     for r in out:
         by_user[r.user_id][r.hour_epoch] = r

@@ -1277,12 +1277,13 @@ def test_q324_candidates_lossless_and_band_bounded(spark, duck, sf_dir):
     the union of field-agreement bands, strictly below the full block
     pair count, so candidate volume is output-proportional rather than
     |part|^2/|blocks| (analytics3.py _q324_candidates docstring)."""
+    from mapr_db_cdc_sample_spark.io import table
     from mapr_db_cdc_sample_spark.queries.analytics3 import (
         _q324_candidates,
         _q324_parts,
     )
 
-    p = _q324_parts(spark, sf_dir)
+    p = _q324_parts(table(spark, sf_dir, "part"))
     cand = {(r["a"], r["b"]) for r in _q324_candidates(p).collect()}
 
     positives = duck.execute(

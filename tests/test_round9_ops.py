@@ -107,9 +107,10 @@ def test_siegel_tukey_rank_sum_invariant(spark, sf_dir):
 
 def test_theta_forecast_matches_python(spark, sf_dir):
     # independent pure-Python recomputation from the daily series
+    from mapr_db_cdc_sample_spark.io import table
     from mapr_db_cdc_sample_spark.queries.analytics3 import _daily_cents
 
-    daily = _daily_cents(spark, sf_dir).orderBy("day").collect()
+    daily = _daily_cents(table(spark, sf_dir, "orders")).orderBy("day").collect()
     mx = max(r.day for r in daily)
     import datetime
 
@@ -170,11 +171,12 @@ def test_cluster_indices_positive(spark, sf_dir):
 def test_truss_support_consistent_with_triangles(spark, sf_dir):
     # sum(support * n_edges) over the histogram counts each triangle
     # exactly three times
+    from mapr_db_cdc_sample_spark.io import table
     from mapr_db_cdc_sample_spark.operators.triangles import triangle_count
     from mapr_db_cdc_sample_spark.queries.analytics8 import _part_graph
 
     rows = _run(spark, sf_dir, "q564_truss_support")
-    e, _ = _part_graph(spark, sf_dir)
+    e, _ = _part_graph(table(spark, sf_dir, "lineitem"))
     (tri,) = triangle_count(e).collect()
     assert sum(r.support * r.n_edges for r in rows) == 3 * tri["n_triangles"]
     assert sum(r.n_edges for r in rows) == tri["n_edges"]

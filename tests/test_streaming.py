@@ -522,7 +522,7 @@ def test_stream_stream_outer_join_matches_batch(spark, sf_dir):
     }
     got_unmatched = {r.click_id for r in out.where(F.col("purchase_id").isNull()).collect()}
 
-    ev, _ = _bounded_events(spark, sf_dir)
+    ev, _ = _bounded_events(load_tables(spark, sf_dir)["events"])
     clicks = ev.where(F.col("event_type") == "click")
     purchases = ev.where(F.col("event_type") == "purchase")
     c = clicks.select(
@@ -566,7 +566,7 @@ def test_stream_trending_matches_batch(spark, sf_dir):
         (r.win_start, r.event_type, r.n, r.rnk)
         for r in load_all()["q173_stream_trending"].fn(spark, sf_dir).collect()
     }
-    ev, _ = _bounded_events(spark, sf_dir)
+    ev, _ = _bounded_events(load_tables(spark, sf_dir)["events"])
     rank_w = W.partitionBy("win_start").orderBy(F.desc("n"), "event_type")
     want = {
         (r.win_start, r.event_type, r.n, r.rnk)
@@ -594,7 +594,7 @@ def test_stream_ohlc_matches_batch(spark, sf_dir):
         (r.day, r.open_cents, r.high_cents, r.low_cents, r.close_cents, r.n_events)
         for r in load_all()["q243_stream_ohlc"].fn(spark, sf_dir).collect()
     }
-    ev, _ = _bounded_events(spark, sf_dir)
+    ev, _ = _bounded_events(load_tables(spark, sf_dir)["events"])
     want = {
         (r.day, r.open_cents, r.high_cents, r.low_cents, r.close_cents, r.n_events)
         for r in tumbling_ohlc(ev).collect()
